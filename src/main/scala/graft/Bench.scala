@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   private def f3(d: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
@@ -158,23 +157,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Fail fast on a non-numeric thread count (ADVICE r15): the value is
-    // emitted as a bare JSON number, so 'local[*]'-style strings would
-    // produce an invalid artifact that silently breaks make_bands.py /
-    // scaling_table.py downstream.
-    val cpusStr = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val cpus = try cpusStr.toInt catch {
-      case _: NumberFormatException => sys.error(
-        s"SPARK_GRAFT_CPUS must be an integer thread count, got '$cpusStr'")
-    }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local(cpus)
     // df.count() would let Catalyst prune every unused projection,
     // window, and sort — projection-heavy keys would measure scan+count
     // only. toRdd runs the FULL final physical plan (all expressions,

@@ -220,14 +220,7 @@ object DataGen {
 
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: DataGen <outDir> <sf>")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     generate(spark, args(0), args(1).toDouble)
     spark.stop()
   }

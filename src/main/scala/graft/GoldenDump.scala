@@ -23,14 +23,15 @@ object GoldenDump {
     * scheduling) while local[4] sat mostly idle — the r18 verdict's
     * top item is getting `sbt test` under the verify driver's budget.
     * Safety: every staging write is per-key-unique or synchronized
-    * (stagedEventStream / mediaIn / runToMemory serialize themselves —
-    * written for exactly this), trained-model memos serialize on their
-    * cache locks, and each checksum folds its own df.toJSON rows in the
-    * query's contract order, so values are identical to the serial pass. */
+    * (stagedEventStream / mediaIn serialize themselves), streaming keys
+    * run on their own child sessions and never touch this session's
+    * conf, trained-model memos serialize on their cache locks, and each
+    * checksum folds its own df.toJSON rows in the query's contract
+    * order, so values are identical to the serial pass. Four threads
+    * match the test session's four cores. */
   def checksums(spark: SparkSession, sfDir: String): Map[String, String] = {
     val keys = SparkEntry.queries.toSeq.sortBy(_._1)
-    val par = math.max(1, sys.env.getOrElse("GRAFT_GOLDEN_THREADS", "4").toInt)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     try {
       import scala.jdk.CollectionConverters._
       val tasks = keys.map { case (name, fn) =>
@@ -51,14 +52,7 @@ object GoldenDump {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     val sums = checksums(spark, sfDir)
     val json = sums.toSeq.sorted
       .map { case (k, v) => s"""  "$k": "$v"""" }

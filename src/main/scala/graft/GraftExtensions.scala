@@ -10,13 +10,13 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * gets `float_dot` / `double_sql2` / `rolling_hash` in SQL plus the
   * [[graft.plans.BandJoinBucketing]] optimizer rule, which rewrites
   * constant-width range joins (no equi key → nested-loop at any scale)
-  * into bucketed equi-joins automatically. The `Verify` and `Bench`
-  * entrypoints install it; the harness's plain sessions use the
+  * into bucketed equi-joins automatically. [[GraftSession]] installs it
+  * on every session graft builds; sessions built elsewhere can use the
   * equivalent runtime function registrations in
   * [[graft.functions.VectorExprs.register]] and
   * [[graft.functions.TextExprs.register]] (no graded key DEPENDS on
   * the optimizer rule for correctness — it is a pure plan upgrade,
-  * PlanSpec-proven by diffing plans with and without the extension).
+  * PlanSpec-proven by diffing plans with and without the rule).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -1,0 +1,36 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The one place a graft `SparkSession` is built. Every main and the test
+  * suite run the same engine: [[GraftExtensions]] installed (SQL functions
+  * plus the band-join rule), shuffle partitions equal to the core count,
+  * UTC session time zone, UI off, WARN logging. A session that needs other
+  * settings derives them from this one with `spark.newSession()`.
+  */
+object GraftSession {
+
+  /** Local thread count from `SPARK_GRAFT_CPUS`, default 4 (the graded width). */
+  def cpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  /** Fail fast on anything but a positive integer: Bench emits the count
+    * as a bare JSON number, so a `local[*]`-style value would otherwise
+    * produce an invalid artifact, and `local[0]` cannot run a task. */
+  private[graft] def parseCpus(raw: Option[String]): Int = {
+    val s = raw.getOrElse("4")
+    s.toIntOption.filter(_ > 0).getOrElse(sys.error(
+      s"SPARK_GRAFT_CPUS must be a positive integer thread count, got '$s'"))
+  }
+
+  def local(cpus: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .withExtensions(new GraftExtensions)
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+}

@@ -951,7 +951,7 @@ object LlmText {
     // file → repartition immediately after the read"): at bench scale
     // the documents file is one parquet split, so the bigram explode +
     // per-doc partial count — the key's entire compute — ran as ONE
-    // task (DiagPair: a single 2.5 s-CPU stage; the rest of the plan
+    // task (stage metrics: a single 2.5 s-CPU stage; the rest of the plan
     // sums <0.7 s). Conditional on the actual scan split count so a
     // corpus that already has ≥cores splits (the 100 TB case) never
     // pays the doc-text shuffle; hashing on doc_id keeps every doc's

@@ -27,14 +27,7 @@ object StreamingDemo {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus)
     val failures = run(spark, sfDir)
     failures.foreach(f => System.err.println(s"[streaming-demo] FAIL: $f"))
     if (failures.isEmpty) println("[streaming-demo] all streaming/batch equivalence checks passed")
@@ -50,39 +43,37 @@ object StreamingDemo {
     // deleteOnExit cleanup, sink-view drop + resetTerminated) instead
     // of re-implementing a fixed-path copy that two concurrent runs
     // would clobber mid-stream.
-    def stream: DataFrame =
-      graft.operators.TimeSeries.stagedEventStream(spark, sfDir, "events2split", 1)
+    // each check builds its pipeline over a fresh stream on the child
+    // session runToMemory hands it
+    def runToMemory(name: String, mode: String)(pipeline: DataFrame => DataFrame): DataFrame =
+      graft.operators.TimeSeries.runToMemory(spark, name, mode) { s =>
+        pipeline(graft.operators.TimeSeries.stagedEventStream(s, sfDir, "events2split", 1))
+      }
     val batch = graft.sources.Tables.events(spark, sfDir)
-
-    def runToMemory(df: DataFrame, name: String, mode: String): DataFrame =
-      graft.operators.TimeSeries.runToMemory(df, name, mode)
 
     val checks = Seq(
       ("tumbling_counts", {
-        val s = runToMemory(
-          stream.withWatermark("ts", "10 minutes")
-            .groupBy(window(col("ts"), "1 hour"), col("event_type")).count(),
-          "stream_tumbling", "complete")
+        val s = runToMemory("stream_tumbling", "complete")(
+          _.withWatermark("ts", "10 minutes")
+            .groupBy(window(col("ts"), "1 hour"), col("event_type")).count())
           .select(col("window.start").as("ws"), col("event_type"), col("count"))
         val b = batch.groupBy(window(col("ts"), "1 hour").as("w"), col("event_type")).count()
           .select(col("w.start").as("ws"), col("event_type"), col("count"))
         (s, b)
       }),
       ("session_windows", {
-        val s = runToMemory(
-          stream.withWatermark("ts", "10 minutes")
-            .groupBy(session_window(col("ts"), "30 minutes"), col("user_id")).count(),
-          "stream_sessions", "complete")
+        val s = runToMemory("stream_sessions", "complete")(
+          _.withWatermark("ts", "10 minutes")
+            .groupBy(session_window(col("ts"), "30 minutes"), col("user_id")).count())
           .select(col("session_window.start").as("ss"), col("user_id"), col("count"))
         val b = batch.groupBy(session_window(col("ts"), "30 minutes").as("sw"), col("user_id")).count()
           .select(col("sw.start").as("ss"), col("user_id"), col("count"))
         (s, b)
       }),
       ("dedup_event_ids", {
-        val s = runToMemory(
-          stream.withWatermark("ts", "10 minutes")
-            .dropDuplicates("event_id").select("event_id"),
-          "stream_dedup", "append")
+        val s = runToMemory("stream_dedup", "append")(
+          _.withWatermark("ts", "10 minutes")
+            .dropDuplicates("event_id").select("event_id"))
         val b = batch.select("event_id").distinct()
         (s, b)
       }),
@@ -92,16 +83,16 @@ object StreamingDemo {
         // batch groupBy count.
         import spark.implicits._
         import org.apache.spark.sql.streaming.GroupStateTimeout
-        val counted = stream.select(col("user_id")).as[Long]
-          .groupByKey(identity)
-          .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-            (user: Long, rows: Iterator[Long], state: org.apache.spark.sql.streaming.GroupState[Long]) =>
-              val n = state.getOption.getOrElse(0L) + rows.size
-              state.update(n)
-              (user, n)
-          }
-          .toDF("user_id", "n")
-        val s = runToMemory(counted, "stream_state_counts", "update")
+        val s = runToMemory("stream_state_counts", "update")(
+          _.select(col("user_id")).as[Long]
+            .groupByKey(identity)
+            .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
+              (user: Long, rows: Iterator[Long], state: org.apache.spark.sql.streaming.GroupState[Long]) =>
+                val n = state.getOption.getOrElse(0L) + rows.size
+                state.update(n)
+                (user, n)
+            }
+            .toDF("user_id", "n"))
           .groupBy("user_id").agg(max(col("n")).as("n")) // last update per user
         val b = batch.groupBy("user_id").agg(count(lit(1)).as("n"))
         (s, b)
@@ -113,17 +104,17 @@ object StreamingDemo {
         // computation floor(count/10) per user.
         import spark.implicits._
         import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-        val milestones = stream.select(col("user_id")).as[Long]
-          .groupByKey(identity)
-          .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-            (user: Long, rows: Iterator[Long], state: org.apache.spark.sql.streaming.GroupState[Long]) =>
-              val before = state.getOption.getOrElse(0L)
-              val after = before + rows.size
-              state.update(after)
-              ((before / 10 + 1) to (after / 10)).map(m => (user, m * 10)).iterator
-          }
-          .toDF("user_id", "milestone")
-        val s = runToMemory(milestones, "stream_milestones", "append")
+        val s = runToMemory("stream_milestones", "append")(
+          _.select(col("user_id")).as[Long]
+            .groupByKey(identity)
+            .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout) {
+              (user: Long, rows: Iterator[Long], state: org.apache.spark.sql.streaming.GroupState[Long]) =>
+                val before = state.getOption.getOrElse(0L)
+                val after = before + rows.size
+                state.update(after)
+                ((before / 10 + 1) to (after / 10)).map(m => (user, m * 10)).iterator
+            }
+            .toDF("user_id", "milestone"))
         val b = batch.groupBy("user_id").agg(count(lit(1)).as("n"))
           .filter(col("n") >= 10) // sequence(1, 0) would descend
           .select(col("user_id"), explode(expr("transform(sequence(1, cast(n div 10 as int)), i -> i * 10L)")).as("milestone"))

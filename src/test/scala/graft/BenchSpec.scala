@@ -166,4 +166,14 @@ class BenchSpec extends AnyFunSuite {
     assert(!bands.contains("_gate") && !bands.contains("_sources"),
       "string meta keys must never parse as numeric bands")
   }
+
+  test("GraftSession CPU parse rejects non-integer, zero and negative counts") {
+    assert(GraftSession.parseCpus(None) == 4)
+    assert(GraftSession.parseCpus(Some("32")) == 32)
+    for (bad <- Seq("local[*]", "4.5", "", "0", "-2")) {
+      val e = intercept[RuntimeException](GraftSession.parseCpus(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS") && e.getMessage.contains(s"'$bad'"),
+        s"unhelpful message for '$bad': ${e.getMessage}")
+    }
+  }
 }

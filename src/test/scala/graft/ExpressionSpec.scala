@@ -124,31 +124,16 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("GraftExtensions installs double_sql2 through the real builder path") {
-    import org.apache.spark.sql.SparkSession
-    val prev = SparkSession.getDefaultSession
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
-    try {
-      val s2 = SparkSession.builder().master("local[2]")
-        .withExtensions(new GraftExtensions).getOrCreate()
-      val r = s2.sql(
-        """SELECT double_sql2(array(CAST(1.0 AS DOUBLE), CAST(2.0 AS DOUBLE)),
-          |                   array(CAST(3.0 AS DOUBLE), CAST(4.0 AS DOUBLE))) AS d""".stripMargin)
-        .collect()(0)
-      assert(r.getDouble(0) == 8.0)
-      intercept[Exception] { s2.sql("SELECT double_sql2(array(CAST(1.0 AS DOUBLE)))").collect() }
-    } finally {
-      // s2 must never LINGER as the default/active session (ADVICE r16):
-      // clear unconditionally, then restore the suite session — but do
-      // not stop() s2, which would kill the shared SparkContext under
-      // the other suites.
-      SparkSession.clearDefaultSession()
-      SparkSession.clearActiveSession()
-      prev.foreach { p =>
-        SparkSession.setDefaultSession(p)
-        SparkSession.setActiveSession(p)
-      }
-    }
+    // GraftSession built the suite session with the extensions; a child
+    // session has none of the suite's runtime registrations, so what it
+    // resolves comes from the injected extensions alone
+    val s2 = spark.newSession()
+    val r = s2.sql(
+      """SELECT double_sql2(array(CAST(1.0 AS DOUBLE), CAST(2.0 AS DOUBLE)),
+        |                   array(CAST(3.0 AS DOUBLE), CAST(4.0 AS DOUBLE))) AS d""".stripMargin)
+      .collect()(0)
+    assert(r.getDouble(0) == 8.0)
+    intercept[Exception] { s2.sql("SELECT double_sql2(array(CAST(1.0 AS DOUBLE)))").collect() }
   }
 
   test("rolling_hash equals the higher-order fold formulation on real docs") {
@@ -217,38 +202,16 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("GraftExtensions installs float_dot and rolling_hash through the real builder path") {
-    import org.apache.spark.sql.SparkSession
-    // getOrCreate only applies extensions when it CREATES a session, so
-    // clear the default/active session (the shared SparkContext is
-    // reused) and restore afterwards — do NOT stop the new session, that
-    // would kill the context under the other suites.
-    val prev = SparkSession.getDefaultSession
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
-    try {
-      val s2 = SparkSession.builder().master("local[2]")
-        .withExtensions(new GraftExtensions).getOrCreate()
-      val r = s2.sql(
-        """SELECT rolling_hash('abc') AS h,
-          |  float_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)),
-          |            array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d""".stripMargin)
-        .collect()(0)
-      assert(r.getLong(0) == graft.functions.RollingHash.hash("abc"))
-      assert(r.getDouble(1) == 11.0)
-      // arity is enforced, not silently truncated
-      intercept[Exception] { s2.sql("SELECT rolling_hash('a', 31)").collect() }
-      intercept[Exception] { s2.sql("SELECT rolling_hash()").collect() }
-    } finally {
-      // s2 must never LINGER as the default/active session (ADVICE r16):
-      // clear unconditionally, then restore the suite session — but do
-      // not stop() s2, which would kill the shared SparkContext under
-      // the other suites.
-      SparkSession.clearDefaultSession()
-      SparkSession.clearActiveSession()
-      prev.foreach { p =>
-        SparkSession.setDefaultSession(p)
-        SparkSession.setActiveSession(p)
-      }
-    }
+    val s2 = spark.newSession() // extensions only, as above
+    val r = s2.sql(
+      """SELECT rolling_hash('abc') AS h,
+        |  float_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)),
+        |            array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d""".stripMargin)
+      .collect()(0)
+    assert(r.getLong(0) == graft.functions.RollingHash.hash("abc"))
+    assert(r.getDouble(1) == 11.0)
+    // arity is enforced, not silently truncated
+    intercept[Exception] { s2.sql("SELECT rolling_hash('a', 31)").collect() }
+    intercept[Exception] { s2.sql("SELECT rolling_hash()").collect() }
   }
 }

@@ -413,27 +413,13 @@ class PlanSpec extends SparkSpec {
         .groupBy("p_id").agg(count(lit(1)).as("n_clicks"))
         .orderBy("p_id")
     }
-    val plain = bandJoin(spark)
+    val plain = bandJoin(withoutBandRule())
     val plainPlan = plain.queryExecution.executedPlan.toString
     assert(plainPlan.contains("BroadcastNestedLoopJoin") ||
       plainPlan.contains("CartesianProduct"),
       "fixture query no longer nested-loops without the rule:\n" + plainPlan.take(600))
-    // a second session on the SAME SparkContext with the extension
-    // installed; default/active restored immediately after creation so
-    // concurrently running suites never observe the swap
-    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    val ext =
-      try SparkSession.builder().master("local[4]")
-        .withExtensions(new GraftExtensions)
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      finally {
-        SparkSession.setDefaultSession(spark)
-        SparkSession.setActiveSession(spark)
-      }
-    val rewritten = bandJoin(ext)
+    // the suite session carries GraftExtensions (GraftSession)
+    val rewritten = bandJoin(spark)
     val extPlan = rewritten.queryExecution.executedPlan.toString
     assert(!extPlan.contains("BroadcastNestedLoopJoin") &&
       !extPlan.contains("CartesianProduct"),
@@ -448,22 +434,14 @@ class PlanSpec extends SparkSpec {
       "band rewrite changed the join result")
   }
 
-  // a second session on the SAME SparkContext with the extension
-  // installed; default/active restored immediately after creation so
-  // concurrently running suites never observe the swap
-  private def extSession(): org.apache.spark.sql.SparkSession = {
-    import org.apache.spark.sql.SparkSession
-    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    try SparkSession.builder().master("local[4]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    finally {
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
-    }
+  /** A child of the suite session with the band rule excluded: the
+    * nested-loop ground truth the rewrite is diffed against. `conf`
+    * applies to this session only. */
+  private def withoutBandRule(conf: (String, String)*): org.apache.spark.sql.SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.optimizer.excludedRules", graft.plans.BandJoinBucketing.ruleName)
+    conf.foreach { case (k, v) => s.conf.set(k, v) }
+    s
   }
 
   test("Q17-shape correlated AVG threshold decorrelates fully") {
@@ -718,10 +696,10 @@ class PlanSpec extends SparkSpec {
         .groupBy("p_id").agg(count(lit(1)).as("n_clicks"))
         .orderBy("p_id")
     }
-    val plain = q(spark)
+    val plain = q(withoutBandRule())
     assert(plain.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin") ||
       plain.queryExecution.executedPlan.toString.contains("CartesianProduct"))
-    val rewritten = q(extSession())
+    val rewritten = q(spark)
     val extPlan = rewritten.queryExecution.executedPlan.toString
     assert(!extPlan.contains("BroadcastNestedLoopJoin") && !extPlan.contains("CartesianProduct"),
       "band rule declined the epoch-nanos band:\n" + extPlan.take(1200))
@@ -744,20 +722,6 @@ class PlanSpec extends SparkSpec {
     // nested-loop plan under identical session conf is the ground truth.
     import org.apache.spark.sql.SparkSession
     val M = Long.MaxValue
-    def session(ext: Boolean): SparkSession = {
-      SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-      try {
-        val b = SparkSession.builder().master("local[4]")
-          .config("spark.sql.shuffle.partitions", "4")
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.sql.ansi.enabled", "false")
-          .config("spark.ui.enabled", "false")
-        (if (ext) b.withExtensions(new GraftExtensions) else b).getOrCreate()
-      } finally {
-        SparkSession.setDefaultSession(spark)
-        SparkSession.setActiveSession(spark)
-      }
-    }
     def q(s: SparkSession) = {
       import s.implicits._
       // (M-250, M-400) and (M-9850, M-10000) match in true math;
@@ -771,14 +735,15 @@ class PlanSpec extends SparkSpec {
           col("a") >= col("b") + 100L && col("a") <= col("b") + 250L)
         .select("a", "b")
     }
-    val plainS = session(ext = false)
-    val plain = q(plainS)
+    val plain = q(withoutBandRule("spark.sql.ansi.enabled" -> "false"))
     assert(plain.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin") ||
       plain.queryExecution.executedPlan.toString.contains("CartesianProduct"))
     val groundTruth = plain.collect().map(_.toSeq).sortBy(_.toString)
     assert(groundTruth.length == 3,
       s"fixture expected 3 matches (incl. one wrapped-only), got ${groundTruth.length}")
-    val rewritten = q(session(ext = true))
+    val withRule = spark.newSession()
+    withRule.conf.set("spark.sql.ansi.enabled", "false")
+    val rewritten = q(withRule)
     val extPlan = rewritten.queryExecution.executedPlan.toString
     assert(!extPlan.contains("BroadcastNestedLoopJoin") && !extPlan.contains("CartesianProduct"),
       "band rule declined the Long-edge band:\n" + extPlan.take(1200))
@@ -806,11 +771,11 @@ class PlanSpec extends SparkSpec {
           |  ON c_ts BETWEEN p_ts - INTERVAL 10 MINUTES AND p_ts
           |GROUP BY p_id ORDER BY p_id""".stripMargin)
     }
-    val plain = q(spark)
+    val plain = q(withoutBandRule())
     assert(plain.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin") ||
       plain.queryExecution.executedPlan.toString.contains("CartesianProduct"),
       "interval fixture no longer nested-loops without the rule")
-    val rewritten = q(extSession())
+    val rewritten = q(spark)
     val extPlan = rewritten.queryExecution.executedPlan.toString
     assert(!extPlan.contains("BroadcastNestedLoopJoin") && !extPlan.contains("CartesianProduct"),
       "band rule did not fire on the timestamp-interval band:\n" + extPlan.take(1200))

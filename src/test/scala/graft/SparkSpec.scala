@@ -2,19 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
-/** Shared local SparkSession for all suites (one JVM, forked by sbt). */
+/** Shared local SparkSession for all suites (one JVM, forked by sbt):
+  * the same `GraftSession` configuration the graded runs use. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(4)
   val sf = "/root/testdata/sf0.001"
 }
 
@@ -36,6 +29,24 @@ class EntrySpec extends SparkSpec {
   // data AND pins its result checksum — a strictly stronger gate — so the
   // loop re-ran all 288 queries for ~10 min of pure redundancy, and the
   // 49-min suite exceeded the verify driver's wall-clock budget in r18)
+  test("suite session is the GraftSession configuration") {
+    assert(spark.sql("SELECT float_dot(array(CAST(1.0 AS FLOAT)), array(CAST(2.0 AS FLOAT)))")
+      .collect()(0).getDouble(0) == 2.0)
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+  }
+  test("only GraftSession builds a SparkSession") {
+    // one factory keeps every main and spec on one configuration; a
+    // second builder call is how per-tool config drift comes back
+    val builder = "SparkSession" + ".builder"
+    val offenders = Seq("src/main/scala", "src/test/scala").flatMap { root =>
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally files.close()
+    }.filter(p => p.getFileName.toString != "GraftSession.scala" &&
+      java.nio.file.Files.readString(p).contains(builder))
+    assert(offenders.isEmpty, s"$builder outside GraftSession.scala: ${offenders.mkString(", ")}")
+  }
   test("oracleSql keys are a subset of queries keys") {
     val extra = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(extra.isEmpty, s"oracle keys without query impl: $extra")

@@ -6,6 +6,9 @@
 #
 # Usage:
 #   tools/run_bench.sh SF_DIR OUT.json [HEAP=8g] [MAIN=graft.Bench] [args...]
+# SF_DIR reaches Bench as SPARK_GRAFT_SF_DIR; a main that takes the data
+# dir as an argument gets it in [args...], e.g. graft.Inspect:
+#   tools/run_bench.sh SF_DIR OUT.txt 8g graft.Inspect SF_DIR --runs 2 key...
 # Env passthrough: SPARK_GRAFT_* (CPUS defaults to 32 here — the bench
 # protocol width), plus SNAPSHOT=dir to reuse an existing snapshot.
 set -euo pipefail
