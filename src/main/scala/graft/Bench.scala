@@ -227,22 +227,15 @@ object Bench {
       // pin localCheckpoint blocks that otherwise accumulate and tax the
       // (alphabetically) later keys with GC/memory pressure — the r2
       // driver bench showed 3–10× inflation clustered on the sorted tail.
-      // Cleanup runs OUTSIDE the timed section.
+      // Cleanup runs OUTSIDE the timed section and unpersists every
+      // pinned RDD: built artifacts (trained ANN indexes, the kNN graph,
+      // staged inputs) live in graft.util.Built as driver data or
+      // parquet, never as blocks.
       // blocking: removal must COMPLETE before the next key's t0, or the
       // async cleanup would execute inside the next timed section
       def cleanup(): Unit = {
         spark.catalog.clearCache()
-        // Memo-backed checkpoints (trained ANN indexes, the kNN graph)
-        // are the designed CROSS-KEY amortization — unpersisting them
-        // here truncates their lineage, aborts the next consumer key
-        // mid-job, and forces a self-heal rebuild inside that key's
-        // timed section (caught live on the r14 sf0.1g run: rankedCache
-        // died, a key failed, and the rebuild re-put tripped the
-        // populate-once restore guard). Everything else pinned is
-        // per-key lineage-cut garbage and still goes.
-        val keep = graft.util.ProcessMemo.liveMemoRddIds()
-        val pinned = spark.sparkContext.getPersistentRDDs
-          .filterNot { case (id, _) => keep(id) }.values
+        val pinned = spark.sparkContext.getPersistentRDDs.values
         pinned.foreach(_.unpersist(blocking = true))
         // Damp cross-key GC debt (r5 driver run: llm_dedup_near 3.5→5.6 s
         // with unchanged code): a block-pinning key leaves a tenured heap
@@ -251,17 +244,17 @@ object Bench {
         // an unconditional gc per key would tax the wall ~98×.
         if (pinned.nonEmpty) System.gc()
       }
-      // MEMO HONESTY (r12 advice): several keys memoize trained models /
-      // staged fixtures process-wide (LlmVector's codebooks, stream and
-      // media staging). A naive rerun of a key that POPULATED a memo in
-      // run 1 would skip that work in run 2, so min(run1, run2) graded a
-      // warm-memo pass instead of damping a spike. Restoring the memo
-      // maps to their pre-run-1 key sets makes run 2 repeat run 1's
-      // exact work: cold keys re-train, keys that rode an earlier key's
-      // memo stay warm, and run 2 re-adds what run 1 added so later
-      // keys amortize exactly as without the rerun. Snapshot + restore
-      // both run OUTSIDE the timed sections.
-      val memoBefore = graft.util.ProcessMemo.snapshot()
+      // RERUN HONESTY (r12 advice): several keys build process-level
+      // artifacts in graft.util.Built (LlmVector's indexes, stream and
+      // media staging). A naive rerun of a key that BUILT one in run 1
+      // would skip that work in run 2, so min(run1, run2) graded a warm
+      // pass instead of damping a spike. Retaining only the keys that
+      // existed before run 1 makes run 2 repeat run 1's exact work:
+      // cold keys rebuild, keys that rode an earlier key's artifact stay
+      // warm, and run 2 re-adds what run 1 added so later keys amortize
+      // exactly as without the rerun. Both steps run OUTSIDE the timed
+      // sections.
+      val builtBefore = graft.util.Built.keys
       // STALL LEGIBILITY (r15 verdict task 4): the key's wall-clock
       // start offset from bench start goes into the JSON — a host
       // stall window then shows up as one contiguous time band across
@@ -271,7 +264,7 @@ object Bench {
       cleanup()
       val (t, spike) =
         if (shouldRerun(ok1, t1, rerunMax, bands.get(name))) {
-          graft.util.ProcessMemo.restore(memoBefore)
+          graft.util.Built.retainOnly(builtBefore)
           val (t2, ok2) = timedRun()
           cleanup()
           if (!ok2) (t1, None) // key already proven ok; keep run 1
@@ -279,7 +272,7 @@ object Bench {
             val runs =
               if (shouldEscalate(math.min(t1, t2), bands.get(name))) {
                 // stall may have spanned both passes: one escalation
-                graft.util.ProcessMemo.restore(memoBefore)
+                graft.util.Built.retainOnly(builtBefore)
                 val (t3, ok3) = timedRun()
                 cleanup()
                 if (ok3) Seq(t1, t2, t3) else Seq(t1, t2)

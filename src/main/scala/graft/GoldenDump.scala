@@ -22,13 +22,13 @@ object GoldenDump {
     * r18 test wall on per-key fixed costs (micro-batch lifecycles, job
     * scheduling) while local[4] sat mostly idle — the r18 verdict's
     * top item is getting `sbt test` under the verify driver's budget.
-    * Safety: every staging write is per-key-unique or synchronized
-    * (stagedEventStream / mediaIn serialize themselves), streaming keys
-    * run on their own child sessions and never touch this session's
-    * conf, trained-model memos serialize on their cache locks, and each
-    * checksum folds its own df.toJSON rows in the query's contract
-    * order, so values are identical to the serial pass. Four threads
-    * match the test session's four cores. */
+    * Safety: every staging write is per-key-unique or a
+    * `graft.util.Built` artifact (trained indexes, stream and media
+    * staging: concurrent first callers wait on one build), streaming
+    * keys run on their own child sessions and never touch this
+    * session's conf, and each checksum folds its own df.toJSON rows in
+    * the query's contract order, so values are identical to the serial
+    * pass. Four threads match the test session's four cores. */
   def checksums(spark: SparkSession, sfDir: String): Map[String, String] = {
     val keys = SparkEntry.queries.toSeq.sortBy(_._1)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)

@@ -956,10 +956,14 @@ object LlmText {
     // corpus that already has ≥cores splits (the 100 TB case) never
     // pays the doc-text shuffle; hashing on doc_id keeps every doc's
     // bigrams in one partition, so the per-doc sums merge identically.
+    // The split count comes from the planned file scan, so building the
+    // frame (e.g. for a plan-only audit) never converts it to an RDD.
     val par = spark.sparkContext.defaultParallelism
     val src = documents(spark, sfDir)
-    val srcPar =
-      if (src.rdd.getNumPartitions < par) src.repartition(par, col("doc_id")) else src
+    val splits = src.queryExecution.sparkPlan.collectFirst {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s.inputRDD.getNumPartitions
+    }.getOrElse(sys.error("documents is not a file scan"))
+    val srcPar = if (splits < par) src.repartition(par, col("doc_id")) else src
     val bi = srcPar
       .filter(length(col("text")) >= 2)
       .select(col("doc_id"), col("lang"),

@@ -339,15 +339,6 @@ object LlmVector {
     * unschedulable task binary. */
   private[graft] val LiteralModelMaxK = 2048
 
-  /** Corpus row count, memoized per sfDir (a scalar; registered so the
-    * bench rerun discipline sees it — rebuilding it is a parquet footer
-    * read, but the honesty protocol is uniform). The count is part of
-    * the trained model's identity: k = ivfK(count). */
-  private val countCache = scala.collection.concurrent.TrieMap.empty[String, java.lang.Long]
-  graft.util.ProcessMemo.register("llm_vector.countCache", countCache)
-  private def corpusCount(spark: SparkSession, sfDir: String): Long =
-    countCache.getOrElseUpdate(sfDir, embeddings(spark, sfDir).count()).longValue()
-
   /** The corpus as (vec_id, varr: ARRAY<DOUBLE>) — the map-side
     * assignment input (one scan, no explode). */
   private def embArr(spark: SparkSession, sfDir: String): DataFrame =
@@ -355,8 +346,8 @@ object LlmVector {
       expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("varr"))
 
   /** Driver-held centroid model: (c_id, 64 components) sorted by c_id —
-    * built from the same (c_id, pos, c) long-format rows centCache
-    * persists. */
+    * built from the (c_id, pos, c) long-format rows a Lloyd pass
+    * collects. */
   private def toModel(rows: Array[org.apache.spark.sql.Row]): Seq[(Int, Seq[Double])] =
     rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map { case (cid, rs) =>
       cid -> rs.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq
@@ -429,101 +420,119 @@ object LlmVector {
     else rankAllJoin(spark, rows, model)
       .filter(col("rn") === 1).select("vec_id", "c_id")
 
-  /** The trained quantizer: (exploded long format, final centroids) —
-    * shared by the nprobe=1 and nprobe=2 search keys so "train once,
-    * probe differently" is literal code reuse.
-    *
-    * The MODEL (k×64 r6-rounded doubles) is memoized per (process,
-    * sfDir) as plain driver data — the realistic serving pattern: a
-    * quantizer is trained once and then reused by every search, not
-    * retrained per query. Values are unaffected (the cached rows ARE
-    * the training output; rebuild order is irrelevant because every
-    * consumer joins the centroids as an unordered broadcast set), and
-    * the cache survives block-manager cleanup because it holds no RDD
-    * state. The corpus-side long format is NOT cached — each search
-    * honestly re-reads the corpus. */
-  // PRECONDITION: the data under an sfDir is immutable for the life of
-  // this process (true for the benchmark corpus — TESTDATA.md fixtures
-  // are generated once). If a dir's contents were regenerated in-process
-  // the cached model would be stale vs a fresh oracle; a mutable-corpus
-  // deployment would key this by a cheap data fingerprint (file
-  // sizes/mtimes) instead. getOrElseUpdate may also train twice under a
-  // concurrent first call — benign (same deterministic model wins).
-  private val centCache = scala.collection.concurrent.TrieMap
-    .empty[String, (Array[org.apache.spark.sql.Row], org.apache.spark.sql.types.StructType)]
-  graft.util.ProcessMemo.register("llm_vector.centCache", centCache)
-
-  private def kmeansState(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
-    graft.functions.VectorExprs.register(spark)
-    // The exploded long format, UN-materialized (r19): training no
-    // longer touches it on the literal-model path (see the fused update
-    // below), and each remaining consumer (resExploded's residual join,
-    // resPqIndex's vec_id<30 query slice) references it exactly once —
-    // a map-only parquet scan with pushdown, cheaper than the eager
-    // n×64-row localCheckpoint every warm call used to pay here.
-    val ex = embeddings(spark, sfDir)
+  /** The corpus in long format (vec_id, pos, v: double) — un-
+    * materialized (r19): every consumer (the k > LiteralModelMaxK
+    * training fallback, the residual join, the residual query slice)
+    * references it once, a map-only parquet scan with pushdown. */
+  private def exploded(spark: SparkSession, sfDir: String): DataFrame =
+    embeddings(spark, sfDir)
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
       .withColumn("v", col("v").cast("double"))
-    val n = corpusCount(spark, sfDir)
-    val k = ivfK(n)
-    // synchronized (not bare getOrElseUpdate): concurrent first callers
-    // — the parallel golden pass — block on one training instead of each
-    // running a duplicate (values were identical either way; the work
-    // was not). Lock order is rankedCache → centCache only; pqCache is
-    // never taken while this lock is held.
-    val (rows, schema) = centCache.synchronized { centCache.getOrElseUpdate(sfDir, {
-      // Each Lloyd pass (r19, guide §2.3/§2.4): assignment is the
-      // map-only literal-model argmin ([[rankStructs]] — no join, no
-      // shuffle, no n×64×k intermediate), and the centroid update is
-      // FUSED into the same map pass — the assigned rows partial-agg
-      // component-wise (count + 64 sums over the vector arrays), so the
-      // one exchange per pass carries k×65 partials per task instead of
-      // the former corpus×64-row join+shuffle (the r18 verdict's
-      // "finish the array-form rewrite the PQ side got"). avg = sum/cnt
-      // is r6-rounded in-plan exactly like the former r6(avg(v));
-      // FP-merge order differs from the old join-shaped plan, which r6
-      // absorbs — oracle-verified at sf0.001/0.01/0.1 like the r18
-      // pqDistsArr change. TRAINING reads only the vec_id < trainCap(n)
-      // sample (r16 — FAISS max_points_per_centroid). Init needs no own
-      // filter: k ≤ cap always (cap ≥ min(n, mppc·k) and mppc ≥ 1).
-      val cap = trainCap(n)
-      val trainRows = embArr(spark, sfDir).filter(col("vec_id") < cap)
-      val init = ex.filter(col("vec_id") < k)
-        .select(col("vec_id").cast("int").as("c_id"), col("pos"), r6(col("v")).as("c"))
-      var state = (init.collect(), init.schema)
-      // the k > LiteralModelMaxK fallback keeps the pre-r19 join-shaped
-      // update (assignArgmin already falls back to the broadcast join
-      // there); it re-reads ex each pass, so cut its lineage once
-      lazy val exCkpt = ex.localCheckpoint()
-      for (_ <- 1 to IvfIters) {
-        val model = toModel(state._1)
-        val cent =
-          if (model.size <= LiteralModelMaxK)
-            trainRows
-              .select(element_at(rankStructs(model), 1).getField("c_id").as("c_id"),
-                col("varr"))
-              .groupBy("c_id")
-              .agg(count(lit(1)).as("cnt"),
-                array((1 to 64).map(i => sum(element_at(col("varr"), i))): _*).as("s"))
-              .select(col("c_id"),
-                posexplode(expr("transform(s, x -> round(x / cnt, 6))")).as(Seq("pos", "c")))
-          else {
-            val assign = assignArgmin(spark, trainRows, model)
-            exCkpt.join(assign, Seq("vec_id"))
-              .groupBy("c_id", "pos")
-              .agg(r6(avg(col("v"))).as("c"))
-          }
-        state = (cent.collect(), cent.schema)
-      }
-      state
-    }) }
-    (ex, spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema))
+
+  /** The BUILT IVF index — the realistic serving pattern: a quantizer is
+    * trained once and then serves every search, not retrained per query.
+    *  - `n`: the corpus size the index was built over; k = ivfK(n).
+    *  - `centroids`: the k×64 r6-rounded model as driver data.
+    *  - `rankingDir`: ONE parquet materialization of every (vector,
+    *    centroid) distance ranking, (vec_id, c_id, dist2, rn). The
+    *    storage assignment (rn = 1, all vectors) and the query probes
+    *    (rn <= nprobe, query set) are filters over the SAME rows — a
+    *    query's own cell is its first probe BY CONSTRUCTION, exactly the
+    *    oracle's shape (cells0 and probes both read the single d_cells0
+    *    CTE) — and the recall key's two searches share one ranking job.
+    * Built once per (process, sfDir) through [[graft.util.Built]]; the
+    * ranking is an ordinary table on disk, so no block-manager cleanup
+    * can evict it. PRECONDITION: the data under an sfDir is immutable
+    * for the life of the process (true for the benchmark corpus —
+    * TESTDATA.md fixtures are generated once); a mutable-corpus
+    * deployment would key the index by a data fingerprint instead. */
+  private[graft] final case class IvfIndex(n: Long, k: Int,
+      centroids: Seq[(Int, Seq[Double])], rankingDir: String) {
+    private def ranking(spark: SparkSession): DataFrame = spark.read.parquet(rankingDir)
+    /** (vec_id, cell): the inverted list each vector is stored in. */
+    def cells(spark: SparkSession): DataFrame =
+      ranking(spark).filter(col("rn") === 1).select(col("vec_id"), col("c_id").as("cell"))
+    /** (q_id, cell): each query vector's nprobe nearest cells. */
+    def probes(spark: SparkSession, nprobe: Int): DataFrame =
+      ranking(spark).filter(col("vec_id") < 30 && col("rn") <= nprobe)
+        .select(col("vec_id").as("q_id"), col("c_id").as("cell"))
+    /** (cell, pos, c): the centroids in long format. */
+    def centroidCells(spark: SparkSession): DataFrame = {
+      import spark.implicits._
+      centroids.flatMap { case (cid, cs) => cs.zipWithIndex.map { case (c, pos) => (cid, pos, c) } }
+        .toDF("cell", "pos", "c")
+    }
   }
 
-  /** The trained model as driver data — trains on first use. */
-  private def kmeansModel(spark: SparkSession, sfDir: String): Seq[(Int, Seq[Double])] = {
-    kmeansState(spark, sfDir)
-    toModel(centCache(sfDir)._1)
+  private[graft] object IvfIndex {
+    /** The sfDir's index; the first caller in the process builds it. */
+    def apply(spark: SparkSession, sfDir: String): IvfIndex =
+      graft.util.Built(s"llm_vector.ivf:$sfDir")(build(spark, sfDir))
+
+    def build(spark: SparkSession, sfDir: String): IvfIndex = {
+      graft.functions.VectorExprs.register(spark)
+      val n = embeddings(spark, sfDir).count()
+      val model = trainKmeans(spark, sfDir, n)
+      // map-only (r15): the per-row sorted distance array IS the
+      // ranking — posexplode materializes (vec_id, c_id, dist2, rn)
+      // without the former n×64×k join/agg/window chain. rankAll (r16)
+      // flips to the broadcast-join shape past LiteralModelMaxK — same
+      // rows either way, spec-pinned.
+      val dir = graft.util.Built.dir(s"llm_vector.ivf_ranking:$sfDir") { d =>
+        rankAll(spark, embArr(spark, sfDir), model).write.parquet(d)
+      }
+      IvfIndex(n, ivfK(n), model, dir)
+    }
+  }
+
+  /** The deterministic k-means quantizer over an n-vector corpus. */
+  private def trainKmeans(spark: SparkSession, sfDir: String,
+      n: Long): Seq[(Int, Seq[Double])] = {
+    val ex = exploded(spark, sfDir)
+    val k = ivfK(n)
+    // Each Lloyd pass (r19, guide §2.3/§2.4): assignment is the
+    // map-only literal-model argmin ([[rankStructs]] — no join, no
+    // shuffle, no n×64×k intermediate), and the centroid update is
+    // FUSED into the same map pass — the assigned rows partial-agg
+    // component-wise (count + 64 sums over the vector arrays), so the
+    // one exchange per pass carries k×65 partials per task instead of
+    // the former corpus×64-row join+shuffle (the r18 verdict's
+    // "finish the array-form rewrite the PQ side got"). avg = sum/cnt
+    // is r6-rounded in-plan exactly like the former r6(avg(v));
+    // FP-merge order differs from the old join-shaped plan, which r6
+    // absorbs — oracle-verified at sf0.001/0.01/0.1 like the r18
+    // pqDistsArr change. TRAINING reads only the vec_id < trainCap(n)
+    // sample (r16 — FAISS max_points_per_centroid). Init needs no own
+    // filter: k ≤ cap always (cap ≥ min(n, mppc·k) and mppc ≥ 1).
+    val cap = trainCap(n)
+    val trainRows = embArr(spark, sfDir).filter(col("vec_id") < cap)
+    var model = toModel(ex.filter(col("vec_id") < k)
+      .select(col("vec_id").cast("int").as("c_id"), col("pos"), r6(col("v")).as("c"))
+      .collect())
+    // the k > LiteralModelMaxK fallback keeps the pre-r19 join-shaped
+    // update (assignArgmin already falls back to the broadcast join
+    // there); it re-reads ex each pass, so cut its lineage once
+    lazy val exCkpt = ex.localCheckpoint()
+    for (_ <- 1 to IvfIters) {
+      val cent =
+        if (model.size <= LiteralModelMaxK)
+          trainRows
+            .select(element_at(rankStructs(model), 1).getField("c_id").as("c_id"),
+              col("varr"))
+            .groupBy("c_id")
+            .agg(count(lit(1)).as("cnt"),
+              array((1 to 64).map(i => sum(element_at(col("varr"), i))): _*).as("s"))
+            .select(col("c_id"),
+              posexplode(expr("transform(s, x -> round(x / cnt, 6))")).as(Seq("pos", "c")))
+        else {
+          val assign = assignArgmin(spark, trainRows, model)
+          exCkpt.join(assign, Seq("vec_id"))
+            .groupBy("c_id", "pos")
+            .agg(r6(avg(col("v"))).as("c"))
+        }
+      model = toModel(cent.collect())
+    }
+    model
   }
 
   /** ONE IVF search with nprobe as the user knob (the graded keys are
@@ -532,83 +541,22 @@ object LlmVector {
     * keeping rn <= nprobe — become its (cell) join keys, and the top-k
     * window ranks across all probed cells together. nprobe=1 is exactly
     * "search your own cell" (the argmin IS the storage assignment). */
-  /** ONE materialization of every (vector, centroid) distance ranking:
-    * the storage assignment (rn = 1, all vectors) and the query probes
-    * (rn <= nprobe, query set) are windows over the SAME rows — a
-    * query's own cell is its first probe BY CONSTRUCTION, not merely
-    * because two independently-summed r6 roundings agree. This is
-    * exactly the oracle's shape (cells0 and probes both read the
-    * single d_cells0 CTE).
-    *
-    * Memoized per (session, sfDir) alongside the centroid model: the
-    * ranking IS the built IVF index (which inverted list each vector
-    * lives in, plus each vector's probe order), and an index is built
-    * once then served to every search — without this, the recall key's
-    * two searches (nprobe = 1 and 2) each re-ran the identical n×k
-    * ranking job. Keyed by session (not just sfDir like centCache)
-    * because the checkpointed RDD is owned by a SparkContext; same
-    * immutable-sfDir precondition as centCache. */
-  private val rankedCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  graft.util.ProcessMemo.register("llm_vector.rankedCache", rankedCache)
-
-  /** The cached ranking is backed by localCheckpoint BLOCKS, which any
-    * session-level hygiene pass (`spark.catalog.clearCache()` + blanket
-    * `unpersist` — exactly what Bench runs between keys) can evict; a
-    * localCheckpoint cannot recompute once its blocks are gone
-    * (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). So the cache SELF-HEALS like
-    * any serving index whose storage was evicted: a cheap one-partition
-    * probe validates the blocks on each access, and a dead entry is
-    * rebuilt instead of served. Within one key's execution the entry
-    * stays hot (consumers like the recall key still share a single
-    * materialization); across keys reuse survives exactly as long as
-    * nobody evicted the blocks. */
-  // count() (not take(1)) so EVERY partition's blocks are probed: a
-  // partially evicted checkpoint (one lost executor at cluster scale)
-  // must read as dead, not pass on partition 0 and die mid-key
-  private def isAlive(df: DataFrame): Boolean =
-    try { df.count(); true } catch { case scala.util.control.NonFatal(_) => false }
-
-  private def ivfRanking(spark: SparkSession, sfDir: String): DataFrame =
-    rankedCache.synchronized {
-      val key = (spark, sfDir)
-      rankedCache.get(key).filter { df =>
-        val alive = isAlive(df)
-        if (!alive) rankedCache.remove(key) // dead entries must not pin RDDs
-        alive
-      }.getOrElse {
-        // map-only (r15): the per-row sorted distance array IS the
-        // ranking — posexplode materializes (vec_id, c_id, dist2, rn)
-        // without the former n×64×k join/agg/window chain. rankAll
-        // (r16) flips to the broadcast-join shape past
-        // LiteralModelMaxK — same rows either way, spec-pinned.
-        val model = kmeansModel(spark, sfDir)
-        val ranked = rankAll(spark, embArr(spark, sfDir), model)
-          .localCheckpoint() // n×k tiny rows; one materialization serves every search
-        rankedCache.put((spark, sfDir), ranked)
-        ranked
-      }
-    }
-
-  private def ivfSearch(spark: SparkSession, sfDir: String, nprobe: Int): DataFrame = {
+  private def ivfSearch(spark: SparkSession, sfDir: String, ivf: IvfIndex,
+      nprobe: Int): DataFrame = {
     // IvfKFloor is the k lower bound, so nprobe ≤ floor is always valid
     // without knowing the corpus size
     require(nprobe >= 1 && nprobe <= IvfKFloor,
       s"nprobe must be in [1, $IvfKFloor], got $nprobe")
-    val ranked = ivfRanking(spark, sfDir)
-    val cells = ranked.filter(col("rn") === 1)
-      .select(col("vec_id"), col("c_id").as("cell"))
+    graft.functions.VectorExprs.register(spark)
     val e = embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"),
         sqrt(expr("float_dot(embedding, embedding)")).as("nrm"))
-      .join(cells, Seq("vec_id"))
-    val probes = ranked.filter(col("vec_id") < 30 && col("rn") <= nprobe)
-      .select(col("vec_id"), col("c_id").as("cell"))
+      .join(ivf.cells(spark), Seq("vec_id"))
     val q = embeddings(spark, sfDir)
       .filter(col("vec_id") < 30)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         sqrt(expr("float_dot(embedding, embedding)")).as("q_nrm"))
-      .join(probes.withColumnRenamed("vec_id", "q_id"), Seq("q_id"))
+      .join(ivf.probes(spark, nprobe), Seq("q_id"))
     val wTop = Window.partitionBy("q_id").orderBy(col("cos_sim").desc, col("neighbor_id").asc)
     broadcast(q).join(e, Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
@@ -620,7 +568,7 @@ object LlmVector {
   }
 
   def llmAnnIvfKmeans(spark: SparkSession, sfDir: String): DataFrame =
-    ivfSearch(spark, sfDir, nprobe = 1)
+    ivfSearch(spark, sfDir, IvfIndex(spark, sfDir), nprobe = 1)
 
   /** The 5 Lloyd iterations unrolled as a CTE chain — same init, same
     * rounding, same tie-breaks as the Spark side. */
@@ -646,7 +594,7 @@ object LlmVector {
     // 2^IvfIters copies of the unnested vector table (the beam oracle's
     // sf1 OOM; see beamCtes)
     // TRAINING iterations read exs — the vec_id < mppc·k sample, the
-    // EXACT predicate Spark's kmeansState applies (r16) — while the
+    // EXACT predicate Spark's trainKmeans applies (r16) — while the
     // final assignment (cells0) and the probe distances read the full
     // ex, so both engines train on the sample and serve the corpus.
     val iterCtes = (1 to IvfIters).map { i =>
@@ -736,7 +684,7 @@ object LlmVector {
     * window then ranks across all probed cells together. Implemented as
     * the nprobe=2 point of [[ivfSearch]]. */
   def llmAnnIvfProbe2(spark: SparkSession, sfDir: String): DataFrame =
-    ivfSearch(spark, sfDir, nprobe = 2)
+    ivfSearch(spark, sfDir, IvfIndex(spark, sfDir), nprobe = 2)
 
   /** Same unrolled CTE chain; the probe CTE re-reads the FINAL
     * assignment distances (d_cells0) keeping rn <= 2 for the queries. */
@@ -774,31 +722,40 @@ object LlmVector {
   private val PqK = 16
   private val PqIters = 3
 
-  private val pqCache = scala.collection.concurrent.TrieMap
-    .empty[String, (Array[org.apache.spark.sql.Row], org.apache.spark.sql.types.StructType)]
-  graft.util.ProcessMemo.register("llm_vector.pqCache", pqCache)
+  /** A trained PQ codebook: its (sub, c_id, pos, c) rows as driver
+    * data — m·k·(64/m) doubles, exactly what "broadcast the model"
+    * means. Built once per (process, sfDir, kind) through
+    * [[graft.util.Built]]: the RAW-vector codebook (`llm_ann_pq`, kind
+    * `raw`) and the RESIDUAL codebook (`llm_ann_ivfpq_res`, kind `res`,
+    * the FAISS IVFPQ recipe) are one procedure, [[PqCodebook.build]],
+    * trained on two inputs. */
+  private[graft] final case class PqCodebook(rows: Array[org.apache.spark.sql.Row],
+      schema: org.apache.spark.sql.types.StructType) {
+    def frame(spark: SparkSession): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
 
-  /** The per-subspace deterministic Lloyd training, generic over its
-    * input frame (vec_id, pos, sub, v) so the RAW-vector codebook
-    * (`llm_ann_pq`) and the RESIDUAL codebook (`llm_ann_ivfpq_res`,
-    * the FAISS IVFPQ recipe) are literally one procedure trained on
-    * two inputs. The trained model is memoized per (process, input
-    * identity) like [[kmeansState]]. The model ROWS round-trip through
-    * the driver between passes (the [[kmeansState]] discipline — the
-    * codebook is m·k·(64/m) doubles, exactly what "broadcast the
-    * model" means), so each iteration's distance pass broadcasts a
-    * LocalRelation with NO scheduled broadcast-subquery job. */
-  private def pqLloydRows(spark: SparkSession, cacheKey: String,
-      exSub: DataFrame): (Array[org.apache.spark.sql.Row], org.apache.spark.sql.types.StructType) =
-    // synchronized for the same reason as centCache: one training,
-    // concurrent first callers wait for it instead of duplicating it
-    pqCache.synchronized { pqCache.getOrElseUpdate(cacheKey, {
+  private[graft] object PqCodebook {
+    /** The raw-vector codebook, trained on the sfDir's corpus. */
+    def raw(spark: SparkSession, sfDir: String): PqCodebook =
+      graft.util.Built(s"llm_vector.pq#raw:$sfDir")(build(pqExploded(spark, sfDir)))
+
+    /** The residual codebook, trained on `exR` = [[resExploded]]. */
+    def residual(sfDir: String, exR: DataFrame): PqCodebook =
+      graft.util.Built(s"llm_vector.pq#res:$sfDir")(build(exR))
+
+    /** The per-subspace deterministic Lloyd training over an input frame
+      * (vec_id, pos, sub, v). The model ROWS round-trip through the
+      * driver between passes (the [[trainKmeans]] discipline), so each
+      * iteration's distance pass broadcasts a LocalRelation with NO
+      * scheduled broadcast-subquery job. */
+    def build(exSub: DataFrame): PqCodebook = {
       val exArr = exArrOf(exSub).localCheckpoint() // reused by all iterations
       val subDim = 64 / PqM
       val init = exSub.filter(col("vec_id") < PqK)
         .select(col("sub"), col("vec_id").cast("int").as("c_id"), col("pos"),
           r6(col("v")).as("c"))
-      var state = (init.collect(), init.schema)
+      var cb = PqCodebook(init.collect(), init.schema)
       for (_ <- 1 to PqIters) {
         // r19 (guide §2.3/§2.4, finishing the r18 array-form rewrite):
         // assignment is the map-only [[pqAssignExpr]] literal pass —
@@ -813,7 +770,7 @@ object LlmVector {
         // is absorbed by r6 and oracle-verified at 3 SFs (the r18
         // pqDistsArr standard).
         val cent = exArr
-          .select(col("sub"), pqAssignExpr(pqModelOf(state._1)).as("c_id"), col("varr"))
+          .select(col("sub"), pqAssignExpr(pqModelOf(cb.rows)).as("c_id"), col("varr"))
           .groupBy("sub", "c_id")
           .agg(count(lit(1)).as("cnt"),
             array((1 to subDim).map(i => sum(element_at(col("varr"), i))): _*).as("s"))
@@ -821,31 +778,19 @@ object LlmVector {
             posexplode(expr("transform(s, x -> round(x / cnt, 6))")).as(Seq("i", "c")))
           .select(col("sub"), col("c_id"),
             (col("sub") * subDim + col("i")).cast("int").as("pos"), col("c"))
-        state = (cent.collect(), cent.schema)
+        cb = PqCodebook(cent.collect(), cent.schema)
       }
-      state
-    }) }
-
-  private def pqLloyd(spark: SparkSession, cacheKey: String, exSub: DataFrame): DataFrame = {
-    val (rows, schema) = pqLloydRows(spark, cacheKey, exSub)
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      cb
+    }
   }
 
-  /** Exploded per-subspace corpus + the trained (sub, c_id, pos, c)
-    * codebook, memoized per (process, sfDir) like [[kmeansState]]. */
-  private def pqState(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
-    // un-materialized (r19, like [[kmeansState]]'s ex): every consumer
-    // folds or filters it exactly once per call (pqLloydRows checkpoints
-    // its own array fold; pqIndex's exArrOf and the init's vec_id < PqK
-    // slice are single map-side passes with parquet pushdown), so the
-    // eager n×64-row localCheckpoint every warm call paid here bought
-    // nothing
-    val ex = embeddings(spark, sfDir)
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .withColumn("v", col("v").cast("double"))
-      .withColumn("sub", expr(s"pos div ${64 / PqM}"))
-    (ex, pqLloyd(spark, sfDir + "#raw", ex))
-  }
+  /** The exploded corpus with its PQ subspace (vec_id, pos, v, sub) —
+    * un-materialized (r19): every consumer folds or filters it exactly
+    * once per call (training checkpoints its own array fold; pqIndex's
+    * exArrOf and the init's vec_id < PqK slice are single map-side
+    * passes with parquet pushdown). */
+  private def pqExploded(spark: SparkSession, sfDir: String): DataFrame =
+    exploded(spark, sfDir).withColumn("sub", expr(s"pos div ${64 / PqM}"))
 
   /** (vec_id, sub) → pos-ordered value array: a map-side-complete fold
     * of the exploded long format (all 64 exploded rows of a vector come
@@ -971,15 +916,16 @@ object LlmVector {
       .agg(min(struct(col("dist2"), col("c_id"))).as("m"))
       .select(col("vec_id"), col("sub"), col("m.c_id").as("c_id"))
 
-  /** The PQ serving INDEX, built once from the trained codebook: the
-    * storage CODES (argmin codeword per (vec, sub) — the oracle's
-    * pcodes CTE) and the query DISTANCE TABLES (rows with vec_id < 30
-    * — the oracle's qdt CTE). Shared by the full-corpus ADC scan
-    * (`llm_ann_pq`) and the cell-pruned IVFADC path (`llm_ann_ivfpq`). */
-  private def pqIndex(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
-    val (ex, _) = pqState(spark, sfDir)
-    val centRows = pqLloydRows(spark, sfDir + "#raw", ex)._1
-    val dists = pqDistsArr(exArrOf(ex), centArrLocal(spark, centRows)).localCheckpoint()
+  /** The PQ serving tables, encoded per call with the trained
+    * codebook: the storage CODES (argmin codeword per (vec, sub) — the
+    * oracle's pcodes CTE) and the query DISTANCE TABLES (rows with
+    * vec_id < 30 — the oracle's qdt CTE). Shared by the full-corpus ADC
+    * scan (`llm_ann_pq`) and the cell-pruned IVFADC path
+    * (`llm_ann_ivfpq`). */
+  private def pqIndex(spark: SparkSession, sfDir: String,
+      cb: PqCodebook): (DataFrame, DataFrame) = {
+    val dists = pqDistsArr(exArrOf(pqExploded(spark, sfDir)), centArrLocal(spark, cb.rows))
+      .localCheckpoint()
     val codes = pqArgmin(dists)
     val qdt = dists.filter(col("vec_id") < 30)
       .select(col("vec_id").as("q_id"), col("sub"), col("c_id"), col("dist2"))
@@ -990,7 +936,7 @@ object LlmVector {
     * rerank shortlist, and the recall grades all read (the oracle's
     * adc CTE). */
   private[graft] def pqAdc(spark: SparkSession, sfDir: String): DataFrame = {
-    val (codes, qdt) = pqIndex(spark, sfDir)
+    val (codes, qdt) = pqIndex(spark, sfDir, PqCodebook.raw(spark, sfDir))
     codes.join(broadcast(qdt), Seq("sub", "c_id"))
       .filter(col("vec_id") =!= col("q_id"))
       .groupBy(col("q_id"), col("vec_id").as("neighbor_id"))
@@ -1189,8 +1135,8 @@ object LlmVector {
     * query — at 10⁹ vectors the difference between scanning the whole
     * codes table per query batch and touching nprobe/k of it; against
     * `llm_ann_ivf_probe2`, the candidate scoring never touches a full
-    * float vector. Both models are the MEMOIZED ones their solo keys
-    * trained ([[ivfRanking]], [[pqState]]) — composition, not
+    * float vector. Both models are the BUILT ones their solo keys
+    * trained ([[IvfIndex]], [[PqCodebook.raw]]) — composition, not
     * retraining, exactly like a FAISS IVFPQ index built once. The
     * plan shape is PlanSpec-pinned: candidates come from a (cell)
     * EQUI-join of the broadcast probe list against the cell-tagged
@@ -1198,14 +1144,10 @@ object LlmVector {
     * loop or full-corpus scan appears between them.
     * `llm_ann_ivfpq_recall` grades what the composed pruning costs. */
   private[graft] def ivfPqAdc(spark: SparkSession, sfDir: String): DataFrame = {
-    val ranked = ivfRanking(spark, sfDir)
-    val cells = ranked.filter(col("rn") === 1)
-      .select(col("vec_id"), col("c_id").as("cell"))
-    val probes = ranked.filter(col("vec_id") < 30 && col("rn") <= 2)
-      .select(col("vec_id").as("q_id"), col("c_id").as("cell"))
-    val (codes, qdt) = pqIndex(spark, sfDir)
+    val ivf = IvfIndex(spark, sfDir)
+    val (codes, qdt) = pqIndex(spark, sfDir, PqCodebook.raw(spark, sfDir))
     // candidate set: the probed cells' inverted lists, NOT the corpus
-    val cand = broadcast(probes).join(cells, Seq("cell"))
+    val cand = broadcast(ivf.probes(spark, 2)).join(ivf.cells(spark), Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
       .select("q_id", "vec_id")
     cand.join(codes, Seq("vec_id"))
@@ -1317,9 +1259,9 @@ object LlmVector {
     * in-flight query, never a corpus-sized structure). Candidates are
     * scored ONLY against the table of the cell they are stored in —
     * exactly the inverted-list+ADC serving loop. Both parent models
-    * are the memoized ones their solo keys trained ([[ivfRanking]],
-    * [[kmeansState]]); the residual codebook is the SAME deterministic
-    * Lloyd procedure ([[pqLloyd]]) pointed at the residual frame.
+    * are the built ones their solo keys trained ([[IvfIndex]]); the
+    * residual codebook is the SAME deterministic Lloyd procedure
+    * ([[PqCodebook.build]]) pointed at the residual frame.
     *
     * Measured payoff, honestly stated: the residual codebook's total
     * reconstruction SSE — the quantity residual encoding improves —
@@ -1334,39 +1276,28 @@ object LlmVector {
     * variance is a small fraction of raw variance) the SSE gap — and
     * with it the recall gap — widens in residual's favor; that is the
     * published FAISS result this key's machinery reproduces. */
-  private def resExploded(spark: SparkSession, sfDir: String): DataFrame = {
-    val ranked = ivfRanking(spark, sfDir)
-    val cells = ranked.filter(col("rn") === 1)
-      .select(col("vec_id"), col("c_id").as("cell"))
-    val (ex, ivfCent) = kmeansState(spark, sfDir)
-    val centK = ivfCent.select(col("c_id").as("cell"), col("pos"), col("c"))
-    ex.join(cells, Seq("vec_id"))
-      .join(broadcast(centK), Seq("cell", "pos"))
+  private def resExploded(spark: SparkSession, sfDir: String, ivf: IvfIndex): DataFrame =
+    exploded(spark, sfDir).join(ivf.cells(spark), Seq("vec_id"))
+      .join(broadcast(ivf.centroidCells(spark)), Seq("cell", "pos"))
       .select(col("vec_id"), col("pos"), expr(s"pos div ${64 / PqM}").as("sub"),
         (col("v") - col("c")).as("v"))
       .localCheckpoint()
-  }
 
   /** Residual codes + per-(query, probed cell) distance tables — the
     * residual mirror of [[pqIndex]]. */
-  private def resPqIndex(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
-    val exR = resExploded(spark, sfDir)
-    val centRpq = pqLloyd(spark, sfDir + "#res", exR)
-    val centRpqRows = pqLloydRows(spark, sfDir + "#res", exR)._1
-    val dists = pqDistsArr(exArrOf(exR), centArrLocal(spark, centRpqRows)).localCheckpoint()
+  private def resPqIndex(spark: SparkSession, sfDir: String,
+      ivf: IvfIndex): (DataFrame, DataFrame) = {
+    val exR = resExploded(spark, sfDir, ivf)
+    val cb = PqCodebook.residual(sfDir, exR)
+    val dists = pqDistsArr(exArrOf(exR), centArrLocal(spark, cb.rows)).localCheckpoint()
     val codes = pqArgmin(dists)
-    val ranked = ivfRanking(spark, sfDir)
-    val probes = ranked.filter(col("vec_id") < 30 && col("rn") <= 2)
-      .select(col("vec_id").as("q_id"), col("c_id").as("cell"))
-    val (ex, ivfCent) = kmeansState(spark, sfDir)
-    val centK = ivfCent.select(col("c_id").as("cell"), col("pos"), col("c"))
-    val qRes = ex.filter(col("vec_id") < 30)
+    val qRes = exploded(spark, sfDir).filter(col("vec_id") < 30)
       .withColumnRenamed("vec_id", "q_id")
-      .join(broadcast(probes), Seq("q_id"))
-      .join(broadcast(centK), Seq("cell", "pos"))
+      .join(broadcast(ivf.probes(spark, 2)), Seq("q_id"))
+      .join(broadcast(ivf.centroidCells(spark)), Seq("cell", "pos"))
       .select(col("q_id"), col("cell"), col("pos"),
         expr(s"pos div ${64 / PqM}").as("sub"), (col("v") - col("c")).as("qv"))
-    val qdt = qRes.join(broadcast(centRpq), Seq("sub", "pos"))
+    val qdt = qRes.join(broadcast(cb.frame(spark)), Seq("sub", "pos"))
       .groupBy("q_id", "cell", "sub", "c_id")
       .agg(r6(sum((col("qv") - col("c")) * (col("qv") - col("c")))).as("dist2"))
     (codes, qdt)
@@ -1378,28 +1309,23 @@ object LlmVector {
     * noise-dominated and flip sign between SFs; the SSE gap does
     * not). PlanSpec pins residual < raw. */
   private[graft] def pqCodeSse(spark: SparkSession, sfDir: String): (Double, Double) = {
-    def sse(exSub: DataFrame, rows: Array[org.apache.spark.sql.Row]): Double =
-      pqDistsArr(exArrOf(exSub), centArrLocal(spark, rows))
+    def sse(exSub: DataFrame, cb: PqCodebook): Double =
+      pqDistsArr(exArrOf(exSub), centArrLocal(spark, cb.rows))
         .groupBy("vec_id", "sub")
         .agg(min(struct(col("dist2"), col("c_id"))).as("m"))
         .agg(sum(col("m.dist2"))).collect()(0).getDouble(0)
-    val (ex, _) = pqState(spark, sfDir)
-    val exR = resExploded(spark, sfDir)
-    (sse(ex, pqLloydRows(spark, sfDir + "#raw", ex)._1),
-      sse(exR, pqLloydRows(spark, sfDir + "#res", exR)._1))
+    val exR = resExploded(spark, sfDir, IvfIndex(spark, sfDir))
+    (sse(pqExploded(spark, sfDir), PqCodebook.raw(spark, sfDir)),
+      sse(exR, PqCodebook.residual(sfDir, exR)))
   }
 
   private[graft] def resIvfPqAdc(spark: SparkSession, sfDir: String): DataFrame = {
-    val ranked = ivfRanking(spark, sfDir)
-    val cells = ranked.filter(col("rn") === 1)
-      .select(col("vec_id"), col("c_id").as("cell"))
-    val probes = ranked.filter(col("vec_id") < 30 && col("rn") <= 2)
-      .select(col("vec_id").as("q_id"), col("c_id").as("cell"))
-    val (codes, qdt) = resPqIndex(spark, sfDir)
+    val ivf = IvfIndex(spark, sfDir)
+    val (codes, qdt) = resPqIndex(spark, sfDir, ivf)
     // candidate set: the probed cells' inverted lists, carrying the
     // cell so each candidate is ADC-scored against the table of the
     // ONE cell it is stored in
-    val cand = broadcast(probes).join(cells, Seq("cell"))
+    val cand = broadcast(ivf.probes(spark, 2)).join(ivf.cells(spark), Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
       .select("q_id", "cell", "vec_id")
     cand.join(codes, Seq("vec_id"))
@@ -1652,12 +1578,10 @@ object LlmVector {
     */
   def llmSemdedup(spark: SparkSession, sfDir: String): DataFrame = {
     graft.functions.VectorExprs.register(spark)
-    val cells = ivfRanking(spark, sfDir).filter(col("rn") === 1)
-      .select(col("vec_id"), col("c_id").as("cell"))
     val e = embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"),
         sqrt(expr("float_dot(embedding, embedding)")).as("nrm"))
-      .join(cells, Seq("vec_id"))
+      .join(IvfIndex(spark, sfDir).cells(spark), Seq("vec_id"))
     // threshold INSIDE the join condition (the llm_dedup_embed lesson):
     // Catalyst evaluates it during the cell equi-join probe, so
     // non-duplicate pairs never materialize
@@ -1694,46 +1618,29 @@ object LlmVector {
     * vectors in OTHER cells are approximated away — that is the
     * documented IVF trade the recall keys measure. */
   def llmKnnGraph(spark: SparkSession, sfDir: String): DataFrame =
-    knnGraphTop3(spark, sfDir).orderBy("src", "rn")
+    knnGraph(spark, sfDir).orderBy("src", "rn")
 
-  /** The built k-NN graph (each vector's top-3 in-cell neighbors),
-    * memoized per (session, sfDir) with the same self-healing protocol
-    * as [[ivfRanking]]: the graph IS a navigable index — built once,
-    * then served to every consumer (`llm_knn_graph`'s edge report and
-    * the beam searches) — and registered with ProcessMemo so bench
-    * reruns re-pay the build honestly. */
-  private val knnGraphCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  graft.util.ProcessMemo.register("llm_vector.knnGraphCache", knnGraphCache)
+  /** The built k-NN graph (each vector's top-3 in-cell neighbors): the
+    * graph IS a navigable index, so it is written once per (process,
+    * sfDir) as parquet through [[graft.util.Built]] and read back like
+    * any table by every consumer (`llm_knn_graph`'s edge report and the
+    * beam searches). */
+  private def knnGraph(spark: SparkSession, sfDir: String): DataFrame =
+    spark.read.parquet(graft.util.Built.dir(s"llm_vector.knn_graph:$sfDir") { d =>
+      knnGraphBuild(spark, sfDir).write.parquet(d)
+    })
 
-  private def knnGraphTop3(spark: SparkSession, sfDir: String): DataFrame =
-    knnGraphCache.synchronized {
-      val key = (spark, sfDir)
-      knnGraphCache.get(key).filter { df =>
-        val alive = isAlive(df)
-        if (!alive) knnGraphCache.remove(key)
-        alive
-      }.getOrElse {
-        // n×3 edges; one materialization serves every search
-        val g = knnGraphBuild(spark, sfDir).localCheckpoint()
-        knnGraphCache.put(key, g)
-        g
-      }
-    }
-
-  /** The un-checkpointed k-NN graph build frame — the exact plan the
-    * memoized checkpoint materializes. Factored out so PlanSpec can pin
-    * its shape (cell equi-join, never a nested loop): the graded key's
-    * own plan shows only `Scan ExistingRDD` once the checkpoint exists,
-    * which would make the scale-critical build plan unauditable. */
+  /** The k-NN graph build frame — the exact plan [[knnGraph]] writes.
+    * Factored out so PlanSpec can pin its shape (cell equi-join, never a
+    * nested loop): the graded key's own plan only reads the built
+    * graph's parquet, which would make the scale-critical build plan
+    * unauditable. */
   private[graft] def knnGraphBuild(spark: SparkSession, sfDir: String): DataFrame = {
     graft.functions.VectorExprs.register(spark)
-    val cells = ivfRanking(spark, sfDir).filter(col("rn") === 1)
-      .select(col("vec_id"), col("c_id").as("cell"))
     val e = embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"),
         sqrt(expr("float_dot(embedding, embedding)")).as("nrm"))
-      .join(cells, Seq("vec_id"))
+      .join(IvfIndex(spark, sfDir).cells(spark), Seq("vec_id"))
     val cos = r6(expr("float_dot(a.embedding, b.embedding)") / (col("a.nrm") * col("b.nrm")))
     val w = Window.partitionBy("src").orderBy(col("cos_sim").desc, col("dst").asc)
     e.as("a").join(e.as("b"),
@@ -1751,7 +1658,7 @@ object LlmVector {
     * few deterministic seed nodes and greedily walks toward its true
     * neighbors, scoring only the nodes it VISITS.
     *
-    *  - graph: [[knnGraphTop3]]'s edges (each vector's top-3 in-cell
+    *  - graph: [[knnGraph]]'s edges (each vector's top-3 in-cell
     *    neighbors — the index `llm_knn_graph` already grades);
     *  - seeds: per query, the `BeamSeeds` smallest-id members of each of
     *    its 2 nearest IVF cells (the coarse quantizer doubles as the
@@ -1786,14 +1693,11 @@ object LlmVector {
 
   private[graft] def beamSeen(spark: SparkSession, sfDir: String): DataFrame = {
     graft.functions.VectorExprs.register(spark)
-    val edges = knnGraphTop3(spark, sfDir).select(col("src"), col("dst"))
-    val ranked = ivfRanking(spark, sfDir)
-    val members = ranked.filter(col("rn") === 1)
-      .select(col("vec_id").as("node"), col("c_id").as("cell"))
-    val qprobe = ranked.filter(col("vec_id") < 30 && col("rn") <= 2)
-      .select(col("vec_id").as("q_id"), col("c_id").as("cell"))
+    val edges = knnGraph(spark, sfDir).select(col("src"), col("dst"))
+    val ivf = IvfIndex(spark, sfDir)
+    val members = ivf.cells(spark).withColumnRenamed("vec_id", "node")
     val wEntry = Window.partitionBy("q_id", "cell").orderBy(col("node").asc)
-    val entry = qprobe.join(members, Seq("cell"))
+    val entry = ivf.probes(spark, 2).join(members, Seq("cell"))
       .filter(col("node") =!= col("q_id"))
       .withColumn("ern", row_number().over(wEntry)).filter(col("ern") <= BeamSeeds)
       .select("q_id", "node")
@@ -2036,7 +1940,7 @@ object LlmVector {
     * claim, not just OperatorSpec's boolean. Everything is one
     * declarative plan (exact top-k is a broadcast join + window; hits
     * are an equi-join on (q_id, neighbor_id)); the only driver-resident
-    * state is the memoized k×64 quantizer both searches already share.
+    * state is the built k×64 quantizer both searches already share.
     *
     * Determinism: recall is a rational, so it is emitted as exact
     * integer parts-per-million — `(1000000 * hits) div possible` —
@@ -2066,9 +1970,10 @@ object LlmVector {
 
   def llmAnnRecall(spark: SparkSession, sfDir: String): DataFrame = {
     val exact = exactTop3(spark, sfDir)
-    val approx = llmAnnIvfKmeans(spark, sfDir).select("q_id", "neighbor_id")
+    val ivf = IvfIndex(spark, sfDir)
+    val approx = ivfSearch(spark, sfDir, ivf, nprobe = 1).select("q_id", "neighbor_id")
       .withColumn("method", lit("ivf_nprobe1"))
-      .unionByName(llmAnnIvfProbe2(spark, sfDir).select("q_id", "neighbor_id")
+      .unionByName(ivfSearch(spark, sfDir, ivf, nprobe = 2).select("q_id", "neighbor_id")
         .withColumn("method", lit("ivf_nprobe2")))
     val hits = approx.join(exact, Seq("q_id", "neighbor_id"))
       .groupBy("method").agg(count(lit(1)).as("hits"))
@@ -2124,7 +2029,8 @@ object LlmVector {
     * cross-engine double rounding). */
   def llmAnnRecallHi(spark: SparkSession, sfDir: String): DataFrame = {
     val exact = exactTop3(spark, sfDir) // same truth as llm_ann_recall
-    val approx = ivfSearch(spark, sfDir, nprobe = 3).select("q_id", "neighbor_id")
+    val approx = ivfSearch(spark, sfDir, IvfIndex(spark, sfDir), nprobe = 3)
+      .select("q_id", "neighbor_id")
       .withColumn("method", lit("ivf_nprobe3"))
     val hits = approx.join(exact, Seq("q_id", "neighbor_id"))
       .groupBy("method").agg(count(lit(1)).as("hits"))

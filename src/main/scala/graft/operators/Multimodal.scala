@@ -97,32 +97,17 @@ object Multimodal {
       sequence(0, cast(greatest(1, (length(text) + 31) div 32) as int) - 1),
       i -> md5(substring(text, i * 32 + 1, 32))), ''))""")
 
-  private val runTag: String = java.util.UUID.randomUUID().toString.take(8)
-  private val staged = scala.collection.concurrent.TrieMap.empty[String, Unit]
-  graft.util.ProcessMemo.register("multimodal.staged", staged)
-
   /** The media table: `doc_id` + a REAL parquet BINARY payload column,
-    * staged once per (process, sfDir) and read back from disk — every
-    * mm_ key scans the binary file exactly as a production loader
-    * would, instead of re-deriving bytes in-plan. The write is
-    * serialized (two keys racing the first stage must not overwrite
-    * one directory concurrently — the `stagedEventStream` discipline). */
+    * staged once per (process, sfDir) through [[graft.util.Built.dir]]
+    * and read back from disk — every mm_ key scans the binary file
+    * exactly as a production loader would, instead of re-deriving bytes
+    * in-plan. Two keys racing the first stage wait on one write. */
   private[graft] def mediaIn(spark: SparkSession, sfDir: String): Dataset[MediaIn] = {
     import spark.implicits._
-    val root = s"/tmp/graft_media/$runTag"
-    // "media_" prefix: the sanitized sfDir starts with "_", and Spark's
-    // file listing treats _-prefixed basenames as metadata to ignore
-    val stageDir = s"$root/media_${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    graft.util.Scratch.deleteOnExit(root)
-    staged.synchronized {
-      staged.getOrElseUpdate(stageDir, {
-        documents(spark, sfDir)
-          .select(col("doc_id"), payloadExpr.as("payload"))
-          .write.mode("overwrite").parquet(stageDir)
-        ()
-      })
+    val dir = graft.util.Built.dir(s"multimodal.media:$sfDir") { d =>
+      documents(spark, sfDir).select(col("doc_id"), payloadExpr.as("payload")).write.parquet(d)
     }
-    spark.read.parquet(stageDir).as[MediaIn]
+    spark.read.parquet(dir).as[MediaIn]
   }
 
   /** Oracle-side mirror of the staged payload: `hx` is the full digest

@@ -16,7 +16,7 @@ import graft.sources.Tables._
   */
 object Sources {
 
-  /** Per-process tag on EVERY scratch dir (mirror of TimeSeries.runTag):
+  /** Per-process tag on EVERY scratch dir (as in graft.util.Built):
     * two concurrent JVMs on the same sfDir — the exact bench+verify
     * scenario — must not race on any write-then-read dir (one JVM's
     * overwrite mid-flight while the other reads back). The tagged root

@@ -17,23 +17,15 @@ import graft.sources.Tables._
   */
 object TimeSeries {
 
-  /** Per-process staging tag: two concurrent runs against the same sfDir
-    * (e.g. bench + verify in separate JVMs) must not overwrite each
-    * other's file-stream staging dirs mid-stream. Per-JVM (not per-call)
-    * so repeated in-process calls reuse one dir. */
-  private val runTag: String = java.util.UUID.randomUUID().toString.take(8)
-
-  /** Per-call suffix of `ts_stream_upsert`'s merge table dir. */
-  private val upsertSeq = new java.util.concurrent.atomic.AtomicLong
-
-  /** Staged dirs already written this process: a second stream over the
-    * same (sfDir, name, nCopies) — e.g. the two sides of the
-    * stream-stream self-join — reuses the files instead of re-writing
-    * them (the source parquet is immutable, so the bytes are identical
-    * either way; only the redundant staging write is saved). */
-  private val stagedDirs = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int), org.apache.spark.sql.types.StructType]
-  graft.util.ProcessMemo.register("time_series.stagedDirs", stagedDirs)
+  /** A staged stream input: `write` fills a per-process scratch dir
+    * once per (sfDir, name) and every later call reuses the files (the
+    * source parquet is immutable, so the bytes are identical either
+    * way; only the redundant staging write is saved — e.g. the two
+    * sides of the stream-stream self-join). The write is a
+    * side-effecting job, so concurrent first callers wait on one write
+    * instead of racing on one directory ([[graft.util.Built.dir]]). */
+  private def staged(sfDir: String, name: String)(write: String => Unit): String =
+    graft.util.Built.dir(s"time_series.stage.$name:$sfDir")(write)
 
   /** Stage the events file as `nCopies` full copies (each one micro-batch
     * under `maxFilesPerTrigger=1`) under a per-process scratch dir and
@@ -43,34 +35,17 @@ object TimeSeries {
   private[graft] def stagedEventStream(spark: SparkSession, sfDir: String,
       name: String, nCopies: Int): DataFrame = {
     enableNanosAsLong(spark)
-    val path = s"$sfDir/events.parquet"
-    // nCopies is part of the PATH, not just the memo key: same-name
-    // calls with different copy counts must never serve each other's
-    // staged files (a 1-copy dir reused by a 2-copy consumer would
-    // silently halve its micro-batches)
-    val stageDir =
-      s"/tmp/graft_stream_in/$runTag/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}/$name-x$nCopies"
-    // staging copies are per-process scratch: clean the whole tagged root
-    // on JVM exit so runs don't accumulate copies of events.parquet in /tmp
-    graft.util.Scratch.deleteOnExit(s"/tmp/graft_stream_in/$runTag")
-    // staging is a SIDE-EFFECTING write: TrieMap.getOrElseUpdate may run
-    // its thunk in two contending threads (benign for the value caches,
-    // NOT for two overwrite jobs racing on one directory — parallel
-    // suites can start two streaming keys at once), so the whole
-    // check-and-stage is serialized
-    val schema = stagedDirs.synchronized {
-      stagedDirs.getOrElseUpdate((sfDir, name, nCopies), {
-        val src = spark.read.parquet(path)
-        if (nCopies == 1) src.repartition(2).write.mode("overwrite").parquet(stageDir)
-        else {
-          src.coalesce(1).write.mode("overwrite").parquet(stageDir)
-          (2 to nCopies).foreach(_ => src.coalesce(1).write.mode("append").parquet(stageDir))
-        }
-        src.schema
-      })
+    val src = spark.read.parquet(s"$sfDir/events.parquet")
+    // nCopies is part of the stage NAME: same-name calls with different
+    // copy counts must never serve each other's staged files (a 1-copy
+    // dir reused by a 2-copy consumer would silently halve its
+    // micro-batches)
+    val stageDir = staged(sfDir, s"$name-x$nCopies") { d =>
+      if (nCopies == 1) src.repartition(2).write.parquet(d)
+      else (1 to nCopies).foreach(_ => src.coalesce(1).write.mode("append").parquet(d))
     }
     graft.sources.Tables.normalizeEventsTs(
-      spark.readStream.schema(schema)
+      spark.readStream.schema(src.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(stageDir))
   }
@@ -96,48 +71,42 @@ object TimeSeries {
   private[graft] def stagedOrderedEventStream(spark: SparkSession, sfDir: String,
       name: String): DataFrame = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val stageDir =
-      s"/tmp/graft_stream_in/$runTag/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}/$name-ordered"
-    graft.util.Scratch.deleteOnExit(s"/tmp/graft_stream_in/$runTag")
-    val schema = stagedDirs.synchronized {
-      stagedDirs.getOrElseUpdate((sfDir, name, 3), {
-        val src = events(spark, sfDir)
-        val Array(b) = src
-          .agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts")))).collect()
-        val (lo, hi) = (b.getLong(0), b.getLong(1))
-        val mid = lo + (hi - lo) / 2
-        val sentinel = spark.range(1).select(src.schema.fields.map { f =>
-          f.name match {
-            case "ts" =>
-              timestamp_micros(lit(hi + 365L * 86400L * 1000000L)).as("ts")
-            case "user_id" => lit(-1L).cast(f.dataType).as("user_id")
-            case other => lit(null).cast(f.dataType).as(other)
-          }
-        }: _*)
-        val splits = Seq(
-          src.filter(unix_micros(col("ts")) <= mid),
-          src.filter(unix_micros(col("ts")) > mid),
-          sentinel)
-        Files.createDirectories(Paths.get(stageDir))
-        splits.zipWithIndex.foreach { case (df, i) =>
-          val tmp = s"$stageDir.part$i"
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(_.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no parquet part written under $tmp"))
-          val dest = Paths.get(stageDir, f"split_$i%03d.parquet")
-          Files.move(part.toPath, dest, StandardCopyOption.REPLACE_EXISTING)
-          // explicit, strictly increasing mtimes: the file-stream source
-          // lists oldest-first, and same-ms writes would make the feed
-          // order (hence late-row filtering) nondeterministic
-          Files.setLastModifiedTime(dest,
-            java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-          graft.util.Scratch.deleteTree(tmp)
+    val src = events(spark, sfDir)
+    val stageDir = staged(sfDir, s"$name-ordered") { d =>
+      val Array(b) = src
+        .agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts")))).collect()
+      val (lo, hi) = (b.getLong(0), b.getLong(1))
+      val mid = lo + (hi - lo) / 2
+      val sentinel = spark.range(1).select(src.schema.fields.map { f =>
+        f.name match {
+          case "ts" =>
+            timestamp_micros(lit(hi + 365L * 86400L * 1000000L)).as("ts")
+          case "user_id" => lit(-1L).cast(f.dataType).as("user_id")
+          case other => lit(null).cast(f.dataType).as(other)
         }
-        src.schema
-      })
+      }: _*)
+      val splits = Seq(
+        src.filter(unix_micros(col("ts")) <= mid),
+        src.filter(unix_micros(col("ts")) > mid),
+        sentinel)
+      Files.createDirectories(Paths.get(d))
+      splits.zipWithIndex.foreach { case (df, i) =>
+        val tmp = s"$d.part$i"
+        df.coalesce(1).write.mode("overwrite").parquet(tmp)
+        val part = new java.io.File(tmp).listFiles()
+          .find(_.getName.endsWith(".parquet"))
+          .getOrElse(sys.error(s"no parquet part written under $tmp"))
+        val dest = Paths.get(d, f"split_$i%03d.parquet")
+        Files.move(part.toPath, dest, StandardCopyOption.REPLACE_EXISTING)
+        // explicit, strictly increasing mtimes: the file-stream source
+        // lists oldest-first, and same-ms writes would make the feed
+        // order (hence late-row filtering) nondeterministic
+        Files.setLastModifiedTime(dest,
+          java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
+        graft.util.Scratch.deleteTree(tmp)
+      }
     }
-    spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(stageDir)
+    spark.readStream.schema(src.schema).option("maxFilesPerTrigger", "1").parquet(stageDir)
   }
 
   /** Build a streaming frame on a child session of `spark`, run it to
@@ -540,34 +509,28 @@ object TimeSeries {
     val (t0, t1) = (r.getLong(0), r.getLong(1))
     val delaySec = (t1 - t0) + 3600L
     val sentinelSec = t1 + delaySec + 2 * 3600L // > t1 + delay + 1h window
-    val stageDir =
-      s"/tmp/graft_stream_in/$runTag/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}/events-outer"
-    graft.util.Scratch.deleteOnExit(s"/tmp/graft_stream_in/$runTag")
-    val schema = stagedDirs.synchronized {
-      stagedDirs.getOrElseUpdate((sfDir, "events-outer", 1), {
-        import spark.implicits._
-        ev.coalesce(1).write.mode("overwrite").parquet(stageDir)
-        val before = graft.util.Scratch.parquetFiles(stageDir)
-        Seq((-1L, -1L, "click", sentinelSec), (-2L, -2L, "purchase", sentinelSec))
-          .toDF("event_id", "user_id", "event_type", "sec")
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            col("sec").cast("timestamp").as("ts"))
-          .coalesce(1).write.mode("append").parquet(stageDir)
-        // the sentinel file must be the LAST micro-batch: force its
-        // mtime strictly past every data file's (FileStreamSource
-        // schedules by modification time)
-        val latest = before.map(java.nio.file.Files.getLastModifiedTime(_).toMillis).max
-        graft.util.Scratch.parquetFiles(stageDir).filterNot(before.contains)
-          .foreach(p => java.nio.file.Files.setLastModifiedTime(p,
-            java.nio.file.attribute.FileTime.fromMillis(latest + 60000)))
-        ev.schema
-      })
+    val stageDir = staged(sfDir, "events-outer") { d =>
+      import spark.implicits._
+      ev.coalesce(1).write.parquet(d)
+      val before = graft.util.Scratch.parquetFiles(d)
+      Seq((-1L, -1L, "click", sentinelSec), (-2L, -2L, "purchase", sentinelSec))
+        .toDF("event_id", "user_id", "event_type", "sec")
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          col("sec").cast("timestamp").as("ts"))
+        .coalesce(1).write.mode("append").parquet(d)
+      // the sentinel file must be the LAST micro-batch: force its
+      // mtime strictly past every data file's (FileStreamSource
+      // schedules by modification time)
+      val latest = before.map(java.nio.file.Files.getLastModifiedTime(_).toMillis).max
+      graft.util.Scratch.parquetFiles(d).filterNot(before.contains)
+        .foreach(p => java.nio.file.Files.setLastModifiedTime(p,
+          java.nio.file.attribute.FileTime.fromMillis(latest + 60000)))
     }
     // 16 state partitions — same sizing rule as ts_stream_stream_join
     // (this side also pays the final watermark-flush eviction scan,
     // which parallelizes with the instance count)
     runToMemory(spark, "graft_ts_so_join", "append", shufflePartitions = 16) { s =>
-      def side = s.readStream.schema(schema)
+      def side = s.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1").parquet(stageDir)
       val clicks = side.filter(col("event_type") === "click")
         .select(col("user_id"), col("event_id").as("click_id"), col("ts").as("click_ts"))
@@ -628,50 +591,43 @@ object TimeSeries {
     // watermark settles at sentinel − delay = t1 + 2h: past every real
     // window end (≤ t1 + 1h), short of the sentinel's own window end
     val sentinelSec = t1 + delaySec + 2 * 3600L
-    val stageName = s"events-append-s$splits"
-    val stageDir =
-      s"/tmp/graft_stream_in/$runTag/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}/$stageName"
-    graft.util.Scratch.deleteOnExit(s"/tmp/graft_stream_in/$runTag")
-    val schema = stagedDirs.synchronized {
-      stagedDirs.getOrElseUpdate((sfDir, stageName, splits), {
-        import spark.implicits._
-        // write each split sequentially, then force strictly increasing
-        // mtimes (batch i at base + i minutes) so the micro-batch order
-        // is deterministic regardless of write timing granularity
-        var before = Set.empty[java.nio.file.Path]
-        // Option, not a 0L sentinel (r12 advice): an epoch-0 mtime is a
-        // legitimate value, and an empty first split must not throw on
-        // fresh.max — it simply has nothing to stamp.
-        var baseMs: Option[Long] = None
-        def stampBatch(step: Int): Unit = {
-          val now = graft.util.Scratch.parquetFiles(stageDir).toSet
-          val fresh = now -- before
-          if (fresh.nonEmpty) {
-            val base = baseMs.getOrElse {
-              val b = fresh.map(java.nio.file.Files.getLastModifiedTime(_).toMillis).max
-              baseMs = Some(b); b
-            }
-            fresh.foreach(p => java.nio.file.Files.setLastModifiedTime(p,
-              java.nio.file.attribute.FileTime.fromMillis(base + step * 60000L)))
+    val stageDir = staged(sfDir, s"events-append-s$splits") { d =>
+      import spark.implicits._
+      // write each split sequentially, then force strictly increasing
+      // mtimes (batch i at base + i minutes) so the micro-batch order
+      // is deterministic regardless of write timing granularity
+      var before = Set.empty[java.nio.file.Path]
+      // Option, not a 0L sentinel (r12 advice): an epoch-0 mtime is a
+      // legitimate value, and an empty first split must not throw on
+      // fresh.max — it simply has nothing to stamp.
+      var baseMs: Option[Long] = None
+      def stampBatch(step: Int): Unit = {
+        val now = graft.util.Scratch.parquetFiles(d).toSet
+        val fresh = now -- before
+        if (fresh.nonEmpty) {
+          val base = baseMs.getOrElse {
+            val b = fresh.map(java.nio.file.Files.getLastModifiedTime(_).toMillis).max
+            baseMs = Some(b); b
           }
-          before = now
+          fresh.foreach(p => java.nio.file.Files.setLastModifiedTime(p,
+            java.nio.file.attribute.FileTime.fromMillis(base + step * 60000L)))
         }
-        (0 until splits).foreach { i =>
-          ev.filter(pmod(col("event_id"), lit(splits)) === i).coalesce(1)
-            .write.mode(if (i == 0) "overwrite" else "append").parquet(stageDir)
-          stampBatch(i)
-        }
-        // the sentinel must be the LAST micro-batch
-        Seq((-1L, -1L, "view", sentinelSec, 0.0))
-          .toDF("event_id", "user_id", "event_type", "sec", "value")
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            col("sec").cast("timestamp").as("ts"), col("value"))
-          .coalesce(1).write.mode("append").parquet(stageDir)
-        stampBatch(splits)
-        ev.schema
-      })
+        before = now
+      }
+      (0 until splits).foreach { i =>
+        ev.filter(pmod(col("event_id"), lit(splits)) === i).coalesce(1)
+          .write.mode("append").parquet(d)
+        stampBatch(i)
+      }
+      // the sentinel must be the LAST micro-batch
+      Seq((-1L, -1L, "view", sentinelSec, 0.0))
+        .toDF("event_id", "user_id", "event_type", "sec", "value")
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          col("sec").cast("timestamp").as("ts"), col("value"))
+        .coalesce(1).write.mode("append").parquet(d)
+      stampBatch(splits)
     }
-    ((s: SparkSession) => s.readStream.schema(schema)
+    ((s: SparkSession) => s.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", "1").parquet(stageDir), t1, delaySec)
   }
 
@@ -1094,9 +1050,9 @@ object TimeSeries {
     * and merges into a per-call table dir, so concurrent calls share
     * nothing. */
   def tsStreamUpsert(spark: SparkSession, sfDir: String): DataFrame = {
-    val dest = s"/tmp/graft_stream_in/$runTag/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}" +
-      s"/upsert_state-${upsertSeq.incrementAndGet()}"
-    graft.util.Scratch.deleteOnExit(s"/tmp/graft_stream_in/$runTag")
+    val tableDir = java.nio.file.Files.createTempDirectory("graft_upsert").toString
+    graft.util.Scratch.deleteOnExit(tableDir)
+    val dest = s"$tableDir/state"
     val stream = streamSession(spark, 4)
     val q = stagedEventStream(stream, sfDir, "upsert", 2)
       .select("event_id", "user_id", "ts", "event_type", "value")

@@ -2761,7 +2761,7 @@ class LifecycleSpec extends SparkSpec {
     // the top-BeamWidth beam over top-3 adjacency lists. The bound is a
     // pure function of the search constants, NEVER of the corpus size.
     import graft.operators.LlmVector
-    val degree = 3 // knnGraphTop3 keeps rn <= 3 per src
+    val degree = 3 // knnGraphBuild keeps rn <= 3 per src
     val bound = 2 * LlmVector.BeamSeeds +
       LlmVector.BeamRounds * LlmVector.BeamWidth * degree
     val visited = LlmVector.beamSeen(spark, sf)

@@ -350,9 +350,9 @@ class PlanSpec extends SparkSpec {
   }
 
   test("kNN graph candidates come from the cell equi-join, not a nested loop") {
-    // The graded key serves the memoized localCheckpoint (its own plan is
-    // `Scan ExistingRDD` by design), so the pin targets the BUILD frame —
-    // the exact plan that checkpoint materializes on first build.
+    // The graded key reads the built graph's parquet (its own plan is a
+    // plain file scan by design), so the pin targets the BUILD frame —
+    // the exact plan written to that parquet on first build.
     val p = graft.operators.LlmVector.knnGraphBuild(spark, sf)
       .queryExecution.executedPlan.toString
     assert(!p.contains("BroadcastNestedLoopJoin"),

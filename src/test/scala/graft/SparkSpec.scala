@@ -47,6 +47,19 @@ class EntrySpec extends SparkSpec {
       java.nio.file.Files.readString(p).contains(builder))
     assert(offenders.isEmpty, s"$builder outside GraftSession.scala: ${offenders.mkString(", ")}")
   }
+  test("operators keep no process-level memo maps") {
+    // built state (indexes, staged inputs) lives only in graft.util.Built,
+    // where Bench's rerun hook sees it; a side cache in an operator is
+    // state no rerun or cleanup can account for
+    val banned = Seq("Trie" + "Map", "Process" + "Memo")
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft/operators"))
+    val offenders = try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      .flatMap { p =>
+        val text = java.nio.file.Files.readString(p)
+        banned.filter(text.contains).map(b => s"$p: $b")
+      } finally files.close()
+    assert(offenders.isEmpty, s"memo maps in operators: ${offenders.mkString(", ")}")
+  }
   test("oracleSql keys are a subset of queries keys") {
     val extra = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(extra.isEmpty, s"oracle keys without query impl: $extra")
