@@ -1,158 +1,103 @@
 package graft
+
+import org.apache.spark.sql.SparkSession
+
+import graft.util.Built
+
+/** The graded bench. After one untimed warmup every key runs the same
+  * fixed protocol: two timed passes with an untimed cleanup after each,
+  * graded by the faster pass. No threshold, band or env var decides how
+  * often a key runs. Output is one JSON object printed twice: the full
+  * line with the per-key maps, then the digest without them as the final
+  * stdout line, so a short tail capture still holds it whole. */
 object Bench {
   private def f3(d: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
 
-  /** Per-key local reference bands (medians of checked-in BENCH_LOCAL_*
-    * runs; regenerate with tools/make_bands.py after each round's
-    * closing pair). Used ONLY to decide reruns — never to alter a
-    * recorded time. The bands are sf0.1 medians, so a bench at any
-    * OTHER scale factor must run with `SPARK_GRAFT_BANDS=off` (scale
-    * runs would otherwise trip the 3×band rule on every key and pay
-    * honest 10×-data costs twice); the flat ≤rerunMax min-of-two rule
-    * still applies there, keeping fast-key damping SF-consistent. */
-  /** Bands apply only at the scale they were recorded at (ADVICE r14):
-    * the default derives from the SF dir itself — any dir not named
-    * sf0.1 auto-disables them (a forgotten env var on a scale run would
-    * re-pay every key's honest 10×-data cost twice) — with
-    * SPARK_GRAFT_BANDS=on|off as the explicit override. */
-  private[graft] def bandsEnabled(sfDir: String): Boolean =
-    sys.env.get("SPARK_GRAFT_BANDS") match {
-      case Some("off") => false
-      case Some(_)     => true
-      case None => new java.io.File(sfDir).getName == "sf0.1"
-    }
-
-  private[graft] def loadBands(sfDir: String): Map[String, Double] = {
-    if (!bandsEnabled(sfDir)) return Map.empty
-    val in = Option(getClass.getResourceAsStream("/bench_bands.json"))
-    in.map { s =>
-      val txt = try scala.io.Source.fromInputStream(s).mkString finally s.close()
-      val re = """"([A-Za-z0-9_]+)"\s*:\s*([0-9.eE+-]+)""".r
-      re.findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble).toMap
-    }.getOrElse(Map.empty)
+  /** One key's outcome: its timed passes (one when pass 1 failed),
+    * whether every pass succeeded, and its start offset from bench start
+    * (a host stall shows as one band across alphabetical neighbours). */
+  private[graft] final case class KeyResult(name: String, passes: Seq[Double],
+      ok: Boolean, startOff: Double) {
+    def firstPass: Double = passes.head
+    // a fast failure never becomes the graded minimum
+    def graded: Double = if (ok) passes.min else firstPass
   }
 
-  /** BAND-AWARE RERUN RULE (r13 verdict task 6). The ≤3 s rule damps
-    * small spikes but by design never re-pays a multi-second key — and
-    * the r13 driver round spiked five keys ABOVE that budget (ts_peaks
-    * 4.2 s vs a 0.26–0.29 s band, sql_q21 5.7 s vs 1.0–1.2, …), each
-    * costing a verdict adjudication on unchanged code. So a key now
-    * also re-runs when its first pass grossly exceeds its own recorded
-    * band — > max(rerunMax, 3×band) — catching exactly the
-    * environmental multi-second spike while an honestly expensive key
-    * (ivfpq's ~5 s training sits inside 3× its ~4.6 s band) is still
-    * never re-paid. A key with no band (new this round) keeps only the
-    * ≤rerunMax rule; a genuinely slowed key re-runs ONCE and records
-    * its honest new time (min of two slow passes), with the pair in
-    * `spikes` either way. */
-  private[graft] def shouldRerun(ok1: Boolean, t1: Double, rerunMax: Double,
-      band: Option[Double]): Boolean =
-    ok1 && (t1 <= rerunMax || band.exists(b => t1 > math.max(rerunMax, 3.0 * b)))
+  /** The per-key protocol. Pass 2 runs only after a successful pass 1,
+    * and first restores `Built` to the keys that existed before pass 1:
+    * pass 2 then repeats pass 1's builds (a cold key rebuilds its index,
+    * a key riding an earlier key's artifact stays warm), and later keys
+    * amortize exactly as with a single pass. */
+  private[graft] def runKey(name: String, startOff: Double, cleanup: () => Unit)(
+      pass: () => (Double, Boolean)): KeyResult = {
+    val before = Built.keys
+    val (t1, ok1) = pass()
+    cleanup()
+    if (!ok1) KeyResult(name, Seq(t1), ok = false, startOff)
+    else {
+      Built.retainOnly(before)
+      val (t2, ok2) = pass()
+      cleanup()
+      KeyResult(name, Seq(t1, t2), ok2, startOff)
+    }
+  }
 
-  /** ESCALATION RERUN (r15 verdict task 4): a sustained host stall can
-    * cover BOTH passes of the band-aware rerun — the r15 driver round
-    * recorded min(run1, run2) = 38.2 s on a 0.5 s-band key, and nothing
-    * in the artifact could distinguish "stall spanned both passes" from
-    * "key got slower" without a judge re-run. When the min of the first
-    * two passes STILL exceeds 10× the key's band, one extra rerun is
-    * allowed; a genuinely slowed key (e.g. honest 3–9× growth after a
-    * code change) stays at two passes and re-records its honest time. */
-  private[graft] def shouldEscalate(lo: Double, band: Option[Double]): Boolean =
-    band.exists(b => lo > 10.0 * b)
-
-  /** One key's bench outcome: graded time (post-damping), first-pass
-    * time, the 2×-divergent run pair if any, and the key's wall-clock
-    * start offset from bench start (the stall-adjudication signal). */
-  private[graft] final case class KeyResult(name: String, graded: Double,
-      ok: Boolean, firstPass: Double, spike: Option[Seq[Double]],
-      startOff: Double)
+  /** Untimed, between every pass: measure each key against a clean block
+    * manager. The dedup keys pin localCheckpoint blocks that otherwise tax
+    * the (alphabetically) later keys with GC and memory pressure (the r2
+    * driver bench showed 3–10× inflation on the sorted tail). Built
+    * artifacts live in `graft.util.Built` as driver data or parquet, never
+    * as blocks, so every pinned RDD may go. Removal is blocking so it
+    * completes before the next timed section starts. */
+  private[graft] def cleanup(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    val pinned = spark.sparkContext.getPersistentRDDs.values
+    pinned.foreach(_.unpersist(blocking = true))
+    // A block-pinning key leaves a tenured heap the next key would pay
+    // to collect inside its timed section (r5: llm_dedup_near 3.5→5.6 s
+    // on unchanged code). Collect it here, but only when blocks were
+    // pinned: an unconditional gc per key would tax the wall ~98×.
+    if (pinned.nonEmpty) System.gc()
+  }
 
   private def jsonStrArr(xs: Seq[String]): String =
     xs.map("\"" + _ + "\"").mkString("[", ",", "]")
 
-  /** The full per-key artifact line. total + errors lead the line so a
-    * truncated TAIL still carries them; `queries` trails so a truncated
-    * HEAD still carries the per-key numbers. keys_run vs keys_total
-    * makes a filtered run self-identifying; skipped_demo_quadratics
-    * makes a gated scale run self-identifying (a reader must never
-    * mistake it for full-surface coverage). cpus + max_heap_mb record
-    * the execution protocol INSIDE the artifact: the r15 scale
-    * re-measurement burned a full bench cycle re-discovering that the
-    * r14 runs were 32-thread/large-heap — an un-annotated 8 g run at 32
-    * threads GC-thrashes sf1 into 4–40× phantom "regressions" that
-    * vanish at 64 g. max_heap_mb is Runtime.maxMemory (the JVM's actual
-    * ceiling), not the env var, so a forgotten SPARK_DRIVER_MEM is
-    * still recorded truthfully. */
-  private[graft] def mainLine(results: Seq[KeyResult], keysTotal: Int,
-      skipped: Seq[String], cpus: Int, heapMb: Long, sfDir: String,
-      reruns: Int): String = {
-    val failed = results.collect { case r if !r.ok => r.name }
-    val total = results.map(_.graded).sum
-    val firstPass = results.map(_.firstPass).sum
-    val qs = results.map(r => "\"" + r.name + "\":" + f3(r.graded))
-      .mkString("{", ",", "}")
-    val spikes = results.collect { case KeyResult(k, _, _, _, Some(runs), _) =>
-      "\"" + k + "\":" + runs.map(f3).mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val starts = results.map(r => "\"" + r.name + "\":" + f3(r.startOff))
-      .mkString("{", ",", "}")
-    s"""{"metric":"total","value":${f3(total)},"unit":"sec","errors":${failed.size},"failed":${jsonStrArr(failed)},"keys_run":${results.size},"keys_total":$keysTotal,"skipped_demo_quadratics":${jsonStrArr(skipped)},"cpus":$cpus,"max_heap_mb":$heapMb,"first_pass_sec":${f3(firstPass)},"reruns":$reruns,"spikes":$spikes,"starts":$starts,"sf":"$sfDir","queries":$qs}"""
-  }
+  private def jsonMap(kvs: Seq[(String, String)]): String =
+    kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
 
-  /** TRUNCATION-PROOF SUMMARY (r16 verdict task 3): the driver's r16
-    * capture kept only the LAST ~4 KB of the main line — the tail of
-    * `queries` — losing the leading total/first_pass/reruns/spikes/
-    * starts that were designed for HEAD truncation, so the round's
-    * spikes again needed a judge re-run to adjudicate. This second,
-    * compact (<2 KB) line is printed AFTER the main JSON: whichever
-    * direction a capture truncates, one of the two lines survives
-    * whole with the verdict-relevant digest — totals, error count, the
-    * 10 largest start-offset gaps (a host stall shows as one huge gap
-    * between alphabetical neighbors), and the 10 largest spike pairs. */
-  private[graft] def summaryLine(results: Seq[KeyResult], keysTotal: Int,
-      skipped: Seq[String], cpus: Int, heapMb: Long, sfDir: String,
-      reruns: Int): String = {
+  /** The full line and the digest: the same object, the digest without
+    * the per-key maps and with `failed` capped at 10 names. keys_run vs
+    * keys_total makes a filtered run self-identifying, and
+    * skipped_demo_quadratics a gated scale run. cpus and max_heap_mb
+    * (the JVM's actual ceiling, not the env var) record the execution
+    * protocol inside the artifact. */
+  private[graft] def lines(results: Seq[KeyResult], keysTotal: Int,
+      skipped: Seq[String], cpus: Int, heapMb: Long, sfDir: String): (String, String) = {
     val failed = results.collect { case r if !r.ok => r.name }
-    val total = results.map(_.graded).sum
-    val firstPass = results.map(_.firstPass).sum
-    // the gap between consecutive keys' start offsets is the earlier
-    // key's full wall (all passes + cleanup): a stall window localizes
-    // to the keys it covered, from the artifact alone
-    val byStart = results.sortBy(_.startOff)
-    val gaps = byStart.zip(byStart.drop(1))
-      .map { case (a, b) => (a.name, b.startOff - a.startOff) }
-    val topGaps = gaps.sortBy(-_._2).take(10)
-      .map { case (k, g) => "\"" + k + "\":" + f3(g) }.mkString("{", ",", "}")
-    val topSpikes = results
-      .collect { case KeyResult(k, _, _, _, Some(runs), _) => (k, runs) }
-      .sortBy { case (_, runs) => -(runs.max - runs.min) }.take(10)
-      .map { case (k, runs) => "\"" + k + "\":" + runs.map(f3).mkString("[", ",", "]") }
-      .mkString("{", ",", "}")
-    s"""{"metric":"summary","value":${f3(total)},"unit":"sec","errors":${failed.size},"failed_top":${jsonStrArr(failed.take(10))},"keys_run":${results.size},"keys_total":$keysTotal,"skipped_demo_quadratics":${jsonStrArr(skipped)},"cpus":$cpus,"max_heap_mb":$heapMb,"first_pass_sec":${f3(firstPass)},"reruns":$reruns,"top_start_gaps":$topGaps,"spikes_top":$topSpikes,"sf":"$sfDir"}"""
-  }
-
-  /** TRUNCATION-PROOF PER-QUERY LINES (r18 verdict task 1b): three rounds
-    * running (r16–r18) the driver's capture kept only a ~4 KB tail of the
-    * main line, so its per-query parse produced `parsed: null` and
-    * `PERF.per_query: {}` — every regression call fell back to
-    * builder-side artifacts. The full `queries` map (~9 KB at 288 keys)
-    * cannot survive ANY 4 KB window as one line, so it is re-printed
-    * AFTER the summary as several independent `queries_partN` lines, each
-    * a complete ≤2 KB JSON document: keys alphabetical (the run order),
-    * fixed 48 keys per chunk (deterministic — the same surface always
-    * chunks identically), and each line carrying part/parts plus the
-    * run's total so any surviving subset is self-describing and
-    * cross-checkable against the digest lines. */
-  private[graft] val QueriesPerPart = 48
-  private[graft] def queryPartLines(results: Seq[KeyResult], sfDir: String): Seq[String] = {
-    val total = results.map(_.graded).sum
-    val chunks = results.grouped(QueriesPerPart).toSeq
-    chunks.zipWithIndex.map { case (chunk, i) =>
-      val data = chunk.map(r => "\"" + r.name + "\":" + f3(r.graded))
-        .mkString("{", ",", "}")
-      s"""{"metric":"queries_part${i + 1}","part":${i + 1},"parts":${chunks.size},"value":${f3(total)},"unit":"sec","sf":"$sfDir","data":$data}"""
+    def perKey(v: KeyResult => String) = jsonMap(results.map(r => r.name -> v(r)))
+    val fields = Seq(
+      "metric" -> "\"total\"",
+      "value" -> f3(results.map(_.graded).sum),
+      "unit" -> "\"sec\"",
+      "errors" -> failed.size.toString,
+      "failed" -> jsonStrArr(failed),
+      "keys_run" -> results.size.toString,
+      "keys_total" -> keysTotal.toString,
+      "skipped_demo_quadratics" -> jsonStrArr(skipped),
+      "cpus" -> cpus.toString,
+      "max_heap_mb" -> heapMb.toString,
+      "first_pass_sec" -> f3(results.map(_.firstPass).sum),
+      "sf" -> ("\"" + sfDir + "\""),
+      "starts" -> perKey(r => f3(r.startOff)),
+      "passes" -> perKey(_.passes.map(f3).mkString("[", ",", "]")),
+      "queries" -> perKey(r => f3(r.graded)))
+    val digest = fields.collect {
+      case ("failed", _) => "failed" -> jsonStrArr(failed.take(10))
+      case f if !Set("starts", "passes", "queries")(f._1) => f
     }
+    (jsonMap(fields), jsonMap(digest))
   }
 
   def main(args: Array[String]): Unit = {
@@ -169,127 +114,38 @@ object Bench {
     // Untimed warmup: JVM/codegen/session init otherwise lands on
     // whichever query happens to run first (~5s attribution noise).
     try exec(SparkEntry.entry(spark)) catch { case _: Throwable => () }
-    // A key that crashes must NOT masquerade as a fast one: record the
-    // failure per key and surface an errors total in the JSON.
     // Optional comma-separated key filter for local iteration
     // (SPARK_GRAFT_KEYS=llm_dedup_minhash,llm_curation); driver sets none.
     val keyFilter = sys.env.get("SPARK_GRAFT_KEYS")
       .map(_.split(",").map(_.trim).toSet)
-    // SPIKE IMMUNITY (r12): the driver benches 263 plans in ONE JVM, and
-    // two consecutive driver rounds read a trivially-simple key
-    // (str_funcs: 10.0 s, then 6.35 s) at 5–8× its stable 1.2–1.9 s
-    // local band on UNCHANGED code — environment debt (GC/JIT/page
-    // cache) landing inside one key's timed section. The local pin
-    // protocol can't exonerate the driver machine, so the harness
-    // itself must be robust: any key whose first run finishes within
-    // the rerun budget executes a SECOND time (after the same untimed
-    // cleanup) and records min(run1, run2) — a one-off environmental
-    // spike in either run is damped, while a genuinely slow key (first
-    // run over budget) is not re-paid. Both passes are reported:
-    // first_pass_sec keeps totals comparable to pre-r12 rounds, and
-    // any 2×-divergent pair lands in "spikes" so a driver-side spike
-    // stays VISIBLE even though it no longer pollutes the grade.
-    val rerunMax = sys.env.get("SPARK_GRAFT_RERUN_MAX").map(_.toDouble).getOrElse(3.0)
-    val bands = loadBands(sfDir)
-    // DECLARED-QUADRATIC DEMO GATE (r14 verdict task 5): two keys are
-    // honest brute-force baselines with graded scale-safe siblings
-    // (llm_dedup_embed → llm_semdedup, llm_dedup_near →
-    // llm_dedup_near_prefix/minhash); at sf1 they were 28% of the
-    // total and at sf3+ they would BE the bench. Above driver scale
-    // (any SF dir not named sf0.001/sf0.01/sf0.1) they are skipped by
-    // default and the skip is recorded LOUDLY in the JSON; at driver
-    // scale they always run (the grade is unaffected). Explicit
-    // override both ways: SPARK_GRAFT_DEMO_QUADRATICS=run|skip.
-    val demoQuadratics = Set("llm_dedup_embed", "llm_dedup_near")
+    // Two keys are honest brute-force baselines with graded scale-safe
+    // siblings (llm_dedup_embed → llm_semdedup, llm_dedup_near →
+    // llm_dedup_near_prefix/minhash); at sf1 they were 28% of the total.
+    // Above driver scale (any SF dir not named sf0.001/sf0.01/sf0.1) they
+    // are skipped, and the skip is recorded in the JSON.
     val driverScale = Set("sf0.001", "sf0.01", "sf0.1")
       .contains(new java.io.File(sfDir).getName)
-    val skipDemos = sys.env.get("SPARK_GRAFT_DEMO_QUADRATICS") match {
-      case Some("skip") => true
-      case Some(_)      => false
-      case None         => !driverScale
-    }
-    val skipped = if (skipDemos) demoQuadratics.toSeq.sorted else Nil
-    val keysTotal = SparkEntry.queries.size
+    val skipped = if (driverScale) Nil else Seq("llm_dedup_embed", "llm_dedup_near")
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => keyFilter.forall(_.contains(n)) }
-      .filterNot { case (n, _) => skipDemos && demoQuadratics(n) }
+      .filter { case (n, _) => keyFilter.forall(_.contains(n)) && !skipped.contains(n) }
       .map { case (name, fn) =>
-      def timedRun(): (Double, Boolean) = {
-        val t0 = System.nanoTime()
-        val ok = try { exec(fn(spark, sfDir)); true } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
-            false
-        }
-        ((System.nanoTime() - t0) / 1e9, ok)
-      }
-      // Measure every key against a clean block manager: the dedup keys
-      // pin localCheckpoint blocks that otherwise accumulate and tax the
-      // (alphabetically) later keys with GC/memory pressure — the r2
-      // driver bench showed 3–10× inflation clustered on the sorted tail.
-      // Cleanup runs OUTSIDE the timed section and unpersists every
-      // pinned RDD: built artifacts (trained ANN indexes, the kNN graph,
-      // staged inputs) live in graft.util.Built as driver data or
-      // parquet, never as blocks.
-      // blocking: removal must COMPLETE before the next key's t0, or the
-      // async cleanup would execute inside the next timed section
-      def cleanup(): Unit = {
-        spark.catalog.clearCache()
-        val pinned = spark.sparkContext.getPersistentRDDs.values
-        pinned.foreach(_.unpersist(blocking = true))
-        // Damp cross-key GC debt (r5 driver run: llm_dedup_near 3.5→5.6 s
-        // with unchanged code): a block-pinning key leaves a tenured heap
-        // the NEXT key pays to collect inside its timed section. Collect
-        // it here, untimed, but only when blocks were actually pinned —
-        // an unconditional gc per key would tax the wall ~98×.
-        if (pinned.nonEmpty) System.gc()
-      }
-      // RERUN HONESTY (r12 advice): several keys build process-level
-      // artifacts in graft.util.Built (LlmVector's indexes, stream and
-      // media staging). A naive rerun of a key that BUILT one in run 1
-      // would skip that work in run 2, so min(run1, run2) graded a warm
-      // pass instead of damping a spike. Retaining only the keys that
-      // existed before run 1 makes run 2 repeat run 1's exact work:
-      // cold keys rebuild, keys that rode an earlier key's artifact stay
-      // warm, and run 2 re-adds what run 1 added so later keys amortize
-      // exactly as without the rerun. Both steps run OUTSIDE the timed
-      // sections.
-      val builtBefore = graft.util.Built.keys
-      // STALL LEGIBILITY (r15 verdict task 4): the key's wall-clock
-      // start offset from bench start goes into the JSON — a host
-      // stall window then shows up as one contiguous time band across
-      // alphabetical neighbors, adjudicable from the artifact alone.
-      val startOff = (System.nanoTime() - benchStart) / 1e9
-      val (t1, ok1) = timedRun()
-      cleanup()
-      val (t, spike) =
-        if (shouldRerun(ok1, t1, rerunMax, bands.get(name))) {
-          graft.util.Built.retainOnly(builtBefore)
-          val (t2, ok2) = timedRun()
-          cleanup()
-          if (!ok2) (t1, None) // key already proven ok; keep run 1
-          else {
-            val runs =
-              if (shouldEscalate(math.min(t1, t2), bands.get(name))) {
-                // stall may have spanned both passes: one escalation
-                graft.util.Built.retainOnly(builtBefore)
-                val (t3, ok3) = timedRun()
-                cleanup()
-                if (ok3) Seq(t1, t2, t3) else Seq(t1, t2)
-              } else Seq(t1, t2)
-            val lo = runs.min
-            val hi = runs.max
-            (lo, if (hi >= 2 * lo && hi - lo >= 0.5) Some(runs) else None)
+        val startOff = (System.nanoTime() - benchStart) / 1e9
+        runKey(name, startOff, () => cleanup(spark)) { () =>
+          val t0 = System.nanoTime()
+          // a key that crashes must not masquerade as a fast one
+          val ok = try { exec(fn(spark, sfDir)); true } catch {
+            case e: Throwable =>
+              System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
+              false
           }
-        } else (t1, None)
-      KeyResult(name, t, ok1, t1, spike, startOff)
-    }
-    val reruns = results.count(r =>
-      shouldRerun(r.ok, r.firstPass, rerunMax, bands.get(r.name)))
+          ((System.nanoTime() - t0) / 1e9, ok)
+        }
+      }
     val heapMb = Runtime.getRuntime.maxMemory() / (1024 * 1024)
-    println(mainLine(results, keysTotal, skipped, cpus, heapMb, sfDir, reruns))
-    println(summaryLine(results, keysTotal, skipped, cpus, heapMb, sfDir, reruns))
-    queryPartLines(results, sfDir).foreach(println)
+    val (full, digest) =
+      lines(results, SparkEntry.queries.size, skipped, cpus, heapMb, sfDir)
+    println(full)
+    println(digest)
     spark.stop()
     if (results.exists(!_.ok)) sys.exit(1)
   }

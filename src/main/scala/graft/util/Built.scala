@@ -18,9 +18,10 @@ import scala.jdk.CollectionConverters._
   * directory under one per-process scratch root (deleted on exit) and
   * the entry's value is that path, read back like any table.
   *
-  * `keys` and `retainOnly` are Bench's rerun hook: keeping only the keys
-  * that existed before a key's first run makes its rerun repeat every
-  * build the first run did, while artifacts an earlier key built stay. */
+  * `keys` and `retainOnly` are Bench's pass-2 hook: keeping only the keys
+  * that existed before a key's first pass makes its second pass repeat
+  * every build the first pass did, while artifacts an earlier key built
+  * stay. */
 object Built {
   private final class Entry(private var build: () => Any) {
     lazy val value: Any = { val v = build(); build = null; v }

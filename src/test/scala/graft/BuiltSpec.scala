@@ -6,9 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.util.Built
 
 /** The process-level build store's contract: one build per key (also
-  * under concurrent first calls), failed builds not cached, and the
-  * bench rerun's honesty hook — retaining the pre-run-1 keys makes run 2
-  * repeat run 1's builds while artifacts an earlier key built stay. */
+  * under concurrent first calls), failed builds not cached, and Bench's
+  * pass-2 honesty hook — retaining the pre-pass-1 keys makes pass 2
+  * repeat pass 1's builds while artifacts an earlier key built stay. */
 class BuiltSpec extends AnyFunSuite {
 
   test("retainOnly drops post-snapshot entries, keeps pre-existing ones") {
@@ -73,7 +73,7 @@ class BuiltSpec extends AnyFunSuite {
 
 /** Bench's two assumptions about built ANN state, on the real keys:
   * nothing built lives in the block manager (so the per-key cleanup may
-  * unpersist everything), and `retainOnly` makes a rerun repeat its
+  * unpersist everything), and `retainOnly` makes pass 2 repeat its
   * builds while a key riding an earlier key's index stays warm. */
 class BuiltAnnSpec extends SparkSpec {
   private lazy val golden: Map[String, String] =
@@ -83,17 +83,12 @@ class BuiltAnnSpec extends SparkSpec {
         parts(0).replaceAll("[\"{},]", "").trim -> parts(1).replaceAll("[\",]", "").trim
       }.toMap
 
-  private def benchCleanup(): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-  }
-
   test("ANN indexes survive Bench's cleanup: searches match goldens, nothing rebuilt") {
     // the IVF index, the kNN graph and (for llm_ann_ivfpq) the raw PQ
     // codebook are all built before the cleanup
     Seq("llm_ann_ivf_kmeans", "llm_knn_graph", "llm_ann_pq").foreach(k => run(k).collect())
     val built = Built.keys
-    benchCleanup()
+    Bench.cleanup(spark)
     Seq("llm_ann_ivfpq", "llm_ann_beam").foreach { k =>
       assert(GoldenDump.checksum(run(k)) == golden(k), s"$k does not match its golden checksum")
     }

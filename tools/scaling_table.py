@@ -16,10 +16,10 @@ import json, sys
 
 
 def load(path):
-    # First parseable non-summary JSON line: Bench emits a second compact
-    # 'summary' line after the main artifact (r16 verdict task 3), and a
-    # raw two-line capture must still parse here. Truncated/noise lines
-    # are skipped, not fatal (ADVICE r17).
+    # First parseable JSON line carrying 'queries': Bench prints the full
+    # line, then a digest without the per-key maps, and a raw two-line
+    # capture must still parse here. Truncated/noise lines are skipped,
+    # not fatal (ADVICE r17).
     with open(path) as f:
         for line in f:
             line = line.strip()
@@ -29,7 +29,7 @@ def load(path):
                 d = json.loads(line)
             except json.JSONDecodeError:
                 continue
-            if isinstance(d, dict) and d.get("metric") != "summary":
+            if isinstance(d, dict) and "queries" in d:
                 return d["queries"], d
     sys.exit(f"{path}: no bench JSON line found")
 
