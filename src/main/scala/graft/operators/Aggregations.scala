@@ -500,8 +500,7 @@ object Aggregations {
     * table is days × groups (metadata-sized next to the facts), and a
     * new day's merge touches one partial row per group. */
   def aggPartialMerge(spark: SparkSession, sfDir: String): DataFrame = {
-    val dest = s"/tmp/graft_export/$aggProcTag/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}/orders_daily_partials"
-    graft.util.Scratch.deleteOnExit(s"/tmp/graft_export/$aggProcTag")
+    val dest = graft.util.Scratch.forSf(sfDir, "orders_daily_partials")
     orders(spark, sfDir)
       .groupBy(col("o_orderdate").cast("date").as("day"))
       .agg(count(lit(1)).as("cnt"), sum(dec(col("o_totalprice"))).as("s"),
@@ -556,9 +555,6 @@ object Aggregations {
       |  COUNT(*) AS n,
       |  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS sum_price
       |FROM lineitem GROUP BY 1, 2, 3 ORDER BY 1, 2""".stripMargin
-
-  /** Per-process tag for scratch parquet (mirror of Scans.procTag). */
-  private val aggProcTag: String = java.util.UUID.randomUUID().toString.take(8)
 
   /** EXACT SKEWNESS / EXCESS KURTOSIS per returnflag — the 3rd/4th
     * standardized moments every profiler ships (`skewness()`,

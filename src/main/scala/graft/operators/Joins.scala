@@ -368,8 +368,7 @@ object Joins {
     // are session/process-global, a fixed name would race concurrent
     // runs (same rule as Sources.exportBucketed)
     val uniq = java.util.UUID.randomUUID().toString.take(8)
-    val root = s"/tmp/graft_export/bucketed_join_$uniq"
-    graft.util.Scratch.deleteOnExit(root)
+    val root = s"${graft.util.Scratch.root}/bucketed_join_$uniq"
     val (liT, orT) = (s"graft_li_bkt_$uniq", s"graft_or_bkt_$uniq")
     // repartition to the bucket hash first: each task then writes
     // exactly ONE bucket file (instead of inputPartitions × 8 slivers),

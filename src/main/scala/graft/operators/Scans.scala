@@ -79,17 +79,13 @@ object Scans {
       |UNION ALL SELECT s_suppkey, 'nationkey', CAST(s_nationkey AS VARCHAR) FROM supplier
       |ORDER BY rowkey, qualifier""".stripMargin
 
-  /** Per-process tag (mirror of Sources.procTag): concurrent JVMs on
-    * the same sfDir must not overwrite this dir mid-read-back. */
-  private val procTag: String = java.util.UUID.randomUUID().toString.take(8)
-
   /** Snapshot-export emulation (SURVEY.md §2.A R2+R6): partitioned write
     * to a scratch dir, read back, return the per-partition manifest. The
     * read-back count doubles as copy verification. */
   def exportManifest(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = s"/tmp/graft_export/$procTag"
-    graft.util.Scratch.deleteOnExit(root)
-    val dest = s"$root/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}/lineitem"
+    // under the process scratch root: concurrent JVMs on the same sfDir
+    // must not overwrite this dir mid-read-back
+    val dest = graft.util.Scratch.forSf(sfDir, "lineitem")
     lineitem(spark, sfDir)
       .write.mode("overwrite").partitionBy("l_returnflag").parquet(dest)
     spark.read.parquet(dest)
@@ -116,8 +112,7 @@ object Scans {
     * the directory NAME, not file bytes, which is also why it must be
     * re-cast: written-as-string is the hive convention. */
   def scanPartitionPruning(spark: SparkSession, sfDir: String): DataFrame = {
-    val dest = s"/tmp/graft_export/$procTag/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}/events_part"
-    graft.util.Scratch.deleteOnExit(s"/tmp/graft_export/$procTag")
+    val dest = graft.util.Scratch.forSf(sfDir, "events_part")
     events(spark, sfDir)
       .select("event_id", "user_id", "value", "event_type")
       .write.mode("overwrite").partitionBy("event_type").parquet(dest)
@@ -148,8 +143,7 @@ object Scans {
     * untouched partitions' files are the same paths after the second
     * write. */
   def exportPartitionOverwrite(spark: SparkSession, sfDir: String): DataFrame = {
-    val dest = s"/tmp/graft_export/$procTag/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}/orders_dynpart"
-    graft.util.Scratch.deleteOnExit(s"/tmp/graft_export/$procTag")
+    val dest = graft.util.Scratch.forSf(sfDir, "orders_dynpart")
     val base = orders(spark, sfDir)
       .select(col("o_orderkey"),
         dec(col("o_totalprice")).cast("double").as("total"),
@@ -184,8 +178,7 @@ object Scans {
     * models the worst case (all rows land on one writer task); the cap
     * re-splits what the partitioning concentrated. */
   def exportSizedFiles(spark: SparkSession, sfDir: String): DataFrame = {
-    val dest = s"/tmp/graft_export/$procTag/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}/orders_sized"
-    graft.util.Scratch.deleteOnExit(s"/tmp/graft_export/$procTag")
+    val dest = graft.util.Scratch.forSf(sfDir, "orders_sized")
     orders(spark, sfDir)
       .select(col("o_orderkey"), dec(col("o_totalprice")).cast("double").as("total"),
         col("o_orderpriority"))
@@ -226,9 +219,7 @@ object Scans {
     * codegen arithmetic. The returned rows are the box query's result,
     * proving the clustered copy is lossless where it matters. */
   def exportZorder(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = s"/tmp/graft_export/$procTag"
-    graft.util.Scratch.deleteOnExit(root)
-    val dest = s"$root/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}/events_zorder"
+    val dest = graft.util.Scratch.forSf(sfDir, "events_zorder")
     val x = pmod(col("user_id"), lit(256)).cast("int")
     val y = pmod(floor(col("value")).cast("long"), lit(256)).cast("int")
     events(spark, sfDir)
@@ -265,8 +256,7 @@ object Scans {
     * really in the plan (the result alone can't prove files were
     * skipped). */
   def scanDynamicPruning(spark: SparkSession, sfDir: String): DataFrame = {
-    val dest = s"/tmp/graft_export/$procTag/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}/events_dpp"
-    graft.util.Scratch.deleteOnExit(s"/tmp/graft_export/$procTag")
+    val dest = graft.util.Scratch.forSf(sfDir, "events_dpp")
     val ev = events(spark, sfDir)
     ev.select("event_id", "user_id", "value", "event_type")
       .write.mode("overwrite").partitionBy("event_type").parquet(dest)

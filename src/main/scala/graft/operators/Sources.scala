@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables._
+import graft.util.Scratch
 
 /** Source/sink format breadth beyond parquet (SURVEY.md §2.A R2/R3:
   * the reference's whole job is moving data between storage systems —
@@ -16,31 +17,18 @@ import graft.sources.Tables._
   */
 object Sources {
 
-  /** Per-process tag on EVERY scratch dir (as in graft.util.Built):
-    * two concurrent JVMs on the same sfDir — the exact bench+verify
-    * scenario — must not race on any write-then-read dir (one JVM's
-    * overwrite mid-flight while the other reads back). The tagged root
-    * is deleted on JVM exit so /tmp does not accumulate across runs. */
-  private val procTag: String = java.util.UUID.randomUUID().toString.take(8)
-
-  private def scratch(sfDir: String, name: String): String = {
-    val root = s"/tmp/graft_export/$procTag/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    graft.util.Scratch.deleteOnExit(s"/tmp/graft_export/$procTag")
-    s"$root/$name"
-  }
-
   private def snapshotRoot(sfDir: String, name: String): String = {
-    val root = scratch(sfDir, name)
+    val root = Scratch.forSf(sfDir, name)
     // full-tree wipe (not list()-based): also removes UNCOMMITTED
     // manifest-less dirs a crashed prior IN-PROCESS run may have left
-    graft.util.Scratch.deleteTree(root)
+    Scratch.deleteTree(root)
     root
   }
 
   /** A scratch store path with stale .kv files from a prior in-process
     * run cleared — the ONE place the re-run hygiene rule lives. */
   private def freshStorePath(sfDir: String, name: String): String = {
-    val dest = scratch(sfDir, name)
+    val dest = Scratch.forSf(sfDir, name)
     graft.sources.KvFormat.dataFiles(dest).foreach(java.nio.file.Files.delete)
     dest
   }
@@ -57,7 +45,7 @@ object Sources {
   /** Parquet → CSV (header) → read back with explicit schema; returns
     * the read-back rows so the oracle checks full fidelity. */
   def sourceCsvRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    val dest = scratch(sfDir, "nation_csv")
+    val dest = Scratch.forSf(sfDir, "nation_csv")
     nation(spark, sfDir).write.mode("overwrite").option("header", "true").csv(dest)
     spark.read
       .schema("n_nationkey INT, n_name STRING, n_regionkey INT")
@@ -71,7 +59,7 @@ object Sources {
   /** Parquet → JSON lines → read back with explicit schema. Money is
     * decimal-cast before serialization so the JSON text is exact. */
   def sourceJsonRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    val dest = scratch(sfDir, "supplier_json")
+    val dest = Scratch.forSf(sfDir, "supplier_json")
     supplier(spark, sfDir)
       .select(col("s_suppkey"), col("s_name"), col("s_nationkey"),
         dec(col("s_acctbal")).as("s_acctbal"))
@@ -97,7 +85,7 @@ object Sources {
     * the ORC file; DOUBLE only in the final output per the
     * comparator's type policy. */
   def sourceOrcRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    val dest = scratch(sfDir, "part_orc")
+    val dest = Scratch.forSf(sfDir, "part_orc")
     part(spark, sfDir)
       .select(col("p_partkey"), col("p_name"), col("p_brand"), col("p_size"),
         dec(col("p_retailprice")).as("p_retailprice"))
@@ -125,8 +113,8 @@ object Sources {
     * distributed over footers only — still no data rewrite, which is
     * the entire point vs a 100 TB backfill. */
   def sourceSchemaEvolution(spark: SparkSession, sfDir: String): DataFrame = {
-    val dest = scratch(sfDir, "orders_schema_evo")
-    graft.util.Scratch.deleteTree(dest)
+    val dest = Scratch.forSf(sfDir, "orders_schema_evo")
+    Scratch.deleteTree(dest)
     val o = orders(spark, sfDir)
     o.filter(col("o_orderkey") % 2 === 0)
       .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -156,7 +144,7 @@ object Sources {
     * robust anyway). Text is the least structured source Spark serves —
     * line-splittable, so reads parallelize per split like CSV/JSON. */
   def sourceTextRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    val dest = scratch(sfDir, "documents_text")
+    val dest = Scratch.forSf(sfDir, "documents_text")
     documents(spark, sfDir)
       .select(concat(col("doc_id").cast("string"), lit("\t"), col("text")).as("value"))
       .write.mode("overwrite").text(dest)
@@ -405,7 +393,7 @@ object Sources {
     // path; a plain ingest gets a unique tmpfs dir (r17 verdict task 4)
     // instead of the implicit /tmp temp checkpoint's per-batch disk fsyncs
     writer.option("checkpointLocation",
-      checkpoint.getOrElse(graft.util.Scratch.fastCheckpointDir("ingest")))
+      checkpoint.getOrElse(Scratch.fastCheckpointDir("ingest")))
     val q = writer
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch.write.format("graft-kv").option("path", store).mode("append").save()
@@ -985,8 +973,8 @@ object Sources {
     * copies of a production store cost nothing until they diverge. */
   def kvClone(spark: SparkSession, sfDir: String): DataFrame = {
     val root = snapshotRoot(sfDir, "kv_clone_snap")
-    val cloneStore = scratch(sfDir, "kv_clone_store")
-    graft.util.Scratch.deleteTree(cloneStore)
+    val cloneStore = Scratch.forSf(sfDir, "kv_clone_store")
+    Scratch.deleteTree(cloneStore)
     val cells = Scans.scanKvModel(spark, sfDir)
     graft.sources.KvSnapshots.create(cells, root, "base")
     graft.sources.KvSnapshots.clone(root, "base", cloneStore)
@@ -1071,8 +1059,8 @@ object Sources {
       .repartitionByRange(2, col("rowkey"), col("qualifier"))
       .sortWithinPartitions("rowkey", "qualifier")
       .write.format("graft-kv").option("path", childB).mode("append").save()
-    val merged = scratch(sfDir, "supplier_kv_rmerge_merged")
-    graft.util.Scratch.deleteTree(merged)
+    val merged = Scratch.forSf(sfDir, "supplier_kv_rmerge_merged")
+    Scratch.deleteTree(merged)
     graft.sources.KvCompaction.mergeRegions(childA, childB, merged)
     spark.read.format("graft-kv").load(merged)
       .orderBy("rowkey", "qualifier")
@@ -1188,7 +1176,7 @@ object Sources {
       .format("parquet")
       .bucketBy(8, "l_orderkey")
       .sortBy("l_orderkey")
-      .option("path", scratch(sfDir, s"lineitem_bucketed_$uniq"))
+      .option("path", Scratch.forSf(sfDir, s"lineitem_bucketed_$uniq"))
       .saveAsTable(table)
     try {
       val agg = spark.table(table)
@@ -1222,7 +1210,7 @@ object Sources {
     * the final state straight from events, so the log write, split
     * read-back, replay, and store roundtrip must all be lossless. */
   def kvWalReplay(spark: SparkSession, sfDir: String): DataFrame = {
-    val walDir = scratch(sfDir, "kv_wal_log")
+    val walDir = Scratch.forSf(sfDir, "kv_wal_log")
     events(spark, sfDir).select(
         col("user_id").as("rowkey"),
         col("event_type").as("qualifier"),
@@ -1348,7 +1336,7 @@ object Sources {
     * zstd parquet roundtrip holds too (the result alone can't prove
     * compression happened). */
   def sourceCompressedRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    val dest = scratch(sfDir, "orders_csv_gz")
+    val dest = Scratch.forSf(sfDir, "orders_csv_gz")
     orders(spark, sfDir)
       .select(col("o_orderkey"), col("o_custkey"),
         expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS STRING)").as("total_str"))
@@ -1381,7 +1369,7 @@ object Sources {
     * line-splittable CSV scan; quarantine costs one extra string
     * column on bad rows only. */
   def sourceCsvMalformed(spark: SparkSession, sfDir: String): DataFrame = {
-    val dest = scratch(sfDir, "orders_csv_malformed")
+    val dest = Scratch.forSf(sfDir, "orders_csv_malformed")
     orders(spark, sfDir)
       .select(when(col("o_orderkey") % 97 === 0,
           concat(lit("X"), col("o_orderkey").cast("string"), lit(",bad")))

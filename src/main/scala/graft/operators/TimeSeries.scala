@@ -1050,8 +1050,8 @@ object TimeSeries {
     * and merges into a per-call table dir, so concurrent calls share
     * nothing. */
   def tsStreamUpsert(spark: SparkSession, sfDir: String): DataFrame = {
-    val tableDir = java.nio.file.Files.createTempDirectory("graft_upsert").toString
-    graft.util.Scratch.deleteOnExit(tableDir)
+    val tableDir = java.nio.file.Files.createTempDirectory(java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(graft.util.Scratch.root)), "graft_upsert").toString
     val dest = s"$tableDir/state"
     val stream = streamSession(spark, 4)
     val q = stagedEventStream(stream, sfDir, "upsert", 2)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -17,23 +17,20 @@ import org.apache.spark.sql.functions._
   * Shape: one distributed pass —
   *   read store → `repartitionByRange(target, rowkey, qualifier)` →
   *   `sortWithinPartitions` → graft-kv write (two-phase task commit,
-  *   write-time stats) — into a scratch dir, then an atomic-ish
-  *   directory swap. Range partitioning makes the output files
+  *   write-time stats) — into a scratch dir, then a directory swap
+  *   ([[KvFiles.install]]). Range partitioning makes the output files
   *   NON-OVERLAPPING in rowkey order, so post-compaction the stats
   *   index prunes range scans to the single covering file (the HBase
   *   region/HFile layout, recovered). Sorting costs one shuffle — the
   *   price of re-establishing scan order, same as HBase's merge-sort
   *   compaction.
   *
-  * Crash safety: the rewrite lands in `<store>.compact-tmp` under the
-  * connector's own two-phase commit; the live dir is only touched in
-  * the final swap (live → .compact-old, tmp → live, delete .compact-old).
-  * A crash before the first move leaves the store untouched; if the
-  * second move fails the old dir is moved back to the live path, so
-  * readers never observe an empty store (a hard crash between the two
-  * moves still leaves the data recoverable in `.compact-old`). At
-  * cluster scale the swap becomes a manifest pointer flip
-  * (HBase's file-tracker move) — the rewrite job is identical.
+  * Crash safety: the rewrite lands in the sibling `.tmp-<store>.new`
+  * under the connector's own two-phase commit; the live dir is only
+  * touched by [[KvFiles.install]]'s final swap through the sibling
+  * `.tmp-<store>.old`, which never leaves the live path empty. At
+  * cluster scale the swap becomes a manifest pointer flip (HBase's
+  * file-tracker move) — the rewrite job is identical.
   *
   * NOT concurrency-safe vs writers: like HBase, compaction assumes it
   * owns the store for the swap instant (readers mid-scan hold open file
@@ -51,15 +48,6 @@ object KvCompaction {
     * markers themselves — exactly HBase's "deletes survive minor
     * compactions, die at major compaction" contract. */
   val Tombstone = "__TOMBSTONE__"
-
-  /** TEST-ONLY crash injection for the swap: invoked after the live dir
-    * has been moved aside but before the rewritten tmp dir takes its
-    * place — the exact window where a naive swap would leave NO live
-    * store. Runs inside the same try as the second move, so a thrown
-    * exception exercises the rollback path (old dir restored, tmp
-    * reclaimed, original error propagated). Production value is a
-    * no-op; specs swap it in and MUST restore it in a finally. */
-  private[graft] var betweenSwapMoves: () => Unit = () => ()
 
   /** Result of one compaction: file counts before/after, the cell total
     * carried through, and the cells intentionally garbage-collected by
@@ -103,10 +91,11 @@ object KvCompaction {
     require(targetFiles >= 1, s"targetFiles must be >= 1, got $targetFiles")
     retainVersions.foreach(k =>
       require(k >= 1, s"retainVersions must be >= 1, got $k"))
-    // normalize: a trailing slash OR "/." segment would make
-    // "$store.compact-tmp" a CHILD of the live store and the final
+    // normalize: a trailing slash OR "/." segment would make the
+    // install's temp sibling a CHILD of the live store and the final
     // swap a move-into-self
-    val store = Paths.get(storeRaw).normalize.toString
+    val live = Paths.get(storeRaw).normalize
+    val store = live.toString
     val before = KvFormat.dataFiles(store)
     require(before.nonEmpty, s"graft-kv compact: no data files under $store")
     // lossless-rewrite guard: cell count from the stats index when it
@@ -117,11 +106,6 @@ object KvCompaction {
     val cellsBefore =
       if (names.forall(meta.contains)) names.map(meta(_).cells).sum
       else spark.read.format("graft-kv").load(store).count()
-
-    val tmp = s"$store.compact-tmp"
-    val old = s"$store.compact-old"
-    graft.util.Scratch.deleteTree(tmp)
-    graft.util.Scratch.deleteTree(old)
 
     val raw = spark.read.format("graft-kv").load(store)
     val unmasked =
@@ -174,37 +158,18 @@ object KvCompaction {
       if (retainVersions.isEmpty && !purgeTombstones && keepIf.isEmpty) cellsBefore
       else survivorsM.count()
 
-    survivorsM
-      .repartitionByRange(targetFiles, col("rowkey"), col("qualifier"))
-      .sortWithinPartitions("rowkey", "qualifier")
-      .write.format("graft-kv").option("path", tmp).mode("append").save()
-
-    val cellsAfter = KvMeta.read(tmp).values.map(_.cells).sum
-    if (cellsAfter != expected) {
-      // a failed rewrite must not strand a store-sized scratch tree
-      graft.util.Scratch.deleteTree(tmp)
-      throw new IllegalArgumentException(
-        s"compaction lost cells: $expected expected, $cellsAfter after")
+    // a fired guard fails the fill, so install reclaims the store-sized
+    // scratch tree and never touches the live dir
+    val cellsAfter = KvFiles.install(live) { tmp =>
+      survivorsM
+        .repartitionByRange(targetFiles, col("rowkey"), col("qualifier"))
+        .sortWithinPartitions("rowkey", "qualifier")
+        .write.format("graft-kv").option("path", tmp.toString).mode("append").save()
+      val n = KvMeta.read(tmp.toString).values.map(_.cells).sum
+      if (n != expected) throw new IllegalArgumentException(
+        s"compaction lost cells: $expected expected, $n after")
+      n
     }
-
-    Files.move(Paths.get(store), Paths.get(old), StandardCopyOption.ATOMIC_MOVE)
-    try {
-      betweenSwapMoves() // no-op in production; crash injection in specs
-      Files.move(Paths.get(tmp), Paths.get(store), StandardCopyOption.ATOMIC_MOVE)
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        // the live path must never be left empty: put the old data back
-        // so readers see the pre-compaction store instead of nothing.
-        // If even the rollback fails, the ORIGINAL failure stays the
-        // primary error (rollback suppressed onto it) and the tmp tree
-        // is still reclaimed — never swallow the cause, never strand a
-        // store-sized scratch dir
-        try Files.move(Paths.get(old), Paths.get(store), StandardCopyOption.ATOMIC_MOVE)
-        catch { case scala.util.control.NonFatal(rb) => e.addSuppressed(rb) }
-        finally graft.util.Scratch.deleteTree(tmp)
-        throw e
-    }
-    graft.util.Scratch.deleteTree(old)
     CompactStats(before.size, KvFormat.dataFiles(store).size, cellsAfter,
       dropped = cellsBefore - expected)
   }
@@ -315,7 +280,6 @@ object KvCompaction {
     val staging = Paths.get(stagingRaw).normalize.toString
     val store = Paths.get(storeRaw).normalize.toString
     require(staging != store, s"bulk load: staging dir IS the store: $store")
-    Files.createDirectories(Paths.get(store))
     val files = KvFormat.dataFiles(staging)
     require(files.nonEmpty, s"bulk load: no staged data files under $staging")
     val meta = KvMeta.read(staging)
@@ -328,13 +292,9 @@ object KvCompaction {
         s"bulk load: staged files overlap in rowkey: ${a.file}[${a.minKey},${a.maxKey}] vs ${b.file}[${b.minKey},${b.maxKey}]")
       case _ => ()
     }
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val adopted = byRange.zipWithIndex.map { case (m, i) =>
-      val newName = s"bulk-$tag-$i-${m.file}"
-      Files.move(Paths.get(staging, m.file), Paths.get(store, newName),
-        StandardCopyOption.ATOMIC_MOVE)
-      m.copy(file = newName)
-    }
+    val adopted = byRange.zip(
+      KvFiles.adopt(byRange.map(m => Paths.get(staging, m.file)), Paths.get(store), "bulk"))
+      .map { case (m, n) => m.copy(file = n) }
     KvMeta.append(store, adopted)
     BulkLoadStats(adopted.size, adopted.map(_.cells).sum)
   }
@@ -392,16 +352,10 @@ object KvCompaction {
       s"region merge: regions are not adjacent (A max rowkey $maxA >= B min rowkey $minB)")
     require(KvFormat.dataFiles(merged).isEmpty,
       s"region merge: dest already holds data files: $merged")
-    Files.createDirectories(Paths.get(merged))
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    def adopt(dir: String, stats: Seq[KvFileMeta], side: String): Seq[KvFileMeta] =
-      stats.map { m =>
-        val newName = s"merge-$tag-$side-${m.file}"
-        Files.move(Paths.get(dir, m.file), Paths.get(merged, newName),
-          StandardCopyOption.ATOMIC_MOVE)
-        m.copy(file = newName)
-      }
-    val adopted = adopt(a, statsA, "a") ++ adopt(b, statsB, "b")
+    val parents = statsA.map(a -> _) ++ statsB.map(b -> _)
+    val adopted = parents.zip(KvFiles.adopt(
+      parents.map { case (d, m) => Paths.get(d, m.file) }, Paths.get(merged), "merge"))
+      .map { case ((_, m), n) => m.copy(file = n) }
     KvMeta.append(merged, adopted)
     // retire the emptied parents (data already safely adopted)
     graft.util.Scratch.deleteTree(a)

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import java.util.stream.Collectors
 
 import scala.jdk.CollectionConverters._
@@ -31,9 +31,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * RENAMES it into place on commit (the same two-phase protocol a real
   * object-store committer uses), so a failed task leaves no partial file.
   *
-  * Local java.nio IO keeps the demo hermetic; at cluster scale the only
-  * change is swapping Files.* for the Hadoop FileSystem API — the
-  * planning, pruning, pushdown, and commit protocol are identical.
+  * Every storage mutation goes through [[KvFiles]], the one non-cluster
+  * piece: at cluster scale only that object moves to the Hadoop
+  * FileSystem API — the planning, pruning, pushdown, and commit
+  * protocol are identical.
   */
 object KvFormat {
   val schema: StructType = StructType(Seq(
@@ -181,31 +182,15 @@ object KvMeta {
 
   /** Merge new entries into the index: single job committer per dir
     * (Spark's job-commit is driver-side and serialized), entries for
-    * deleted files are pruned, and the write is temp-file + atomic move
-    * so readers never see a torn index. */
+    * deleted files are pruned, and the write is an atomic publish so
+    * readers never see a torn index. */
   def append(dir: String, entries: Seq[KvFileMeta]): Unit = {
     val merged = (read(dir) ++ entries.map(m => m.file -> m).toMap)
       .filter { case (f, _) => Files.exists(Paths.get(dir, f)) }
     val text = merged.values.toSeq.sortBy(_.file)
       .map(m => s"${m.file}\t${m.bytes}\t${m.md5}\t${m.cells}\t${m.minKey}\t${m.maxKey}\t${encodeQuals(m.qualCells)}\t${m.bloomHex.getOrElse("")}")
       .mkString("", "\n", "\n")
-    val tmp = Paths.get(dir, s"$FILE.tmp")
-    Files.writeString(tmp, text, StandardCharsets.UTF_8)
-    Files.move(tmp, Paths.get(dir, FILE), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** Streaming MD5 of a file (1 MiB chunks — constant memory regardless
-    * of file size; runs on executors for verification jobs). */
-  def md5HexOf(file: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val in = Files.newInputStream(Paths.get(file))
-    try {
-      val buf = new Array[Byte](1 << 20)
-      var n = in.read(buf)
-      while (n >= 0) { if (n > 0) md.update(buf, 0, n); n = in.read(buf) }
-    } finally in.close()
-    md.digest().map("%02x".format(_)).mkString
+    KvFiles.publish(Paths.get(dir, FILE), text)
   }
 }
 
@@ -670,10 +655,10 @@ class KvWriterFactory(path: String) extends DataWriterFactory {
 case class KvCommitMessage(meta: Option[KvFileMeta]) extends WriterCommitMessage
 
 /** Streams cells to a temp file, RENAMING into place on commit (two-phase
-  * task commit). While writing it maintains the stats that become the
-  * commit message: byte count + MD5 via a digesting stream (single pass,
-  * constant memory) and the rowkey min/max for scan pruning. Rowkey
-  * CLUSTERING is the plan's job (`sortWithinPartitions`/
+  * task commit through a [[KvFiles.Writer]]). While writing it maintains
+  * the stats that become the commit message: byte count + MD5 from the
+  * digesting writer (single pass, constant memory) and the rowkey
+  * min/max for scan pruning. Rowkey CLUSTERING is the plan's job (`sortWithinPartitions`/
   * `repartitionByRange` before the write) — min/max stays sound either
   * way, a writer-side sort would just re-buffer what Spark's sort
   * operator already spills correctly. */
@@ -684,17 +669,10 @@ class KvDataWriter(path: String, partitionId: Int, taskId: Long)
   // at 0 and would collide on the rename. The per-process tag makes
   // cross-application appends safe (HBase solves this with UUID-named
   // store files for the same reason).
-  private val tmp = Paths.get(path, s".tmp-$partitionId-$taskId-${KvDataWriter.procTag}")
-  private val dest = Paths.get(path, s"part-$partitionId-$taskId-${KvDataWriter.procTag}.kv")
-  private val digest = java.security.MessageDigest.getInstance("MD5")
-  private var bytes = 0L
-  private val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-    new java.security.DigestOutputStream(Files.newOutputStream(tmp), digest) {
-      override def write(b: Array[Byte], off: Int, len: Int): Unit = {
-        super.write(b, off, len); bytes += len
-      }
-      override def write(b: Int): Unit = { super.write(b); bytes += 1 }
-    }, StandardCharsets.UTF_8))
+  private val name = s"part-$partitionId-$taskId-${graft.util.Scratch.tag}.kv"
+  private val file = new KvFiles.Writer(Paths.get(path, name))
+  private val out = new java.io.BufferedWriter(
+    new java.io.OutputStreamWriter(file.out, StandardCharsets.UTF_8))
   private var cells = 0L
   private var minKey = Long.MaxValue
   private var maxKey = Long.MinValue
@@ -726,20 +704,14 @@ class KvDataWriter(path: String, partitionId: Int, taskId: Long)
   }
   override def commit(): WriterCommitMessage = {
     out.close()
-    if (cells == 0) { Files.deleteIfExists(tmp); KvCommitMessage(None) }
+    if (cells == 0) { file.abort(); KvCommitMessage(None) }
     else {
-      Files.move(tmp, dest, StandardCopyOption.ATOMIC_MOVE)
-      val md5 = digest.digest().map("%02x".format(_)).mkString
+      val (bytes, md5) = file.commit()
       KvCommitMessage(Some(KvFileMeta(
-        dest.getFileName.toString, bytes, md5, cells, minKey, maxKey, qualCounts.toMap,
+        name, bytes, md5, cells, minKey, maxKey, qualCounts.toMap,
         Some(KvBloom.toHex(bloom)))))
     }
   }
-  override def abort(): Unit = { out.close(); Files.deleteIfExists(tmp) }
+  override def abort(): Unit = { out.close(); file.abort() }
   override def close(): Unit = ()
-}
-
-object KvDataWriter {
-  /** Per-process disambiguator for data-file names (see constructor). */
-  private val procTag: String = java.util.UUID.randomUUID().toString.take(8)
 }

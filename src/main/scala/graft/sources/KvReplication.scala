@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   *
   * Failure model (the part that makes replication trustworthy):
   *  - ship() publishes each batch's data FIRST and only then commits
-  *    the offset via temp-file + atomic move — a kill in the window
+  *    the offset ([[KvFiles.publish]]) — a kill in the window
   *    between the two leaves a published-but-uncommitted batch that
   *    the next ship() simply overwrites (batch contents are a pure,
   *    deterministic function of the WAL and the recorded split
@@ -30,9 +30,10 @@ import org.apache.spark.sql.functions._
   *    per-(queue, store) applied-offset ledger makes the steady-state
   *    re-apply a no-op, and a behind-the-queue replica is rebuilt from
   *    the committed batches (per-coordinate winners by seq) into a
-  *    temp dir swapped in atomically — applying the same queue twice,
-  *    or re-applying after new batches commit, always converges to
-  *    exactly full-log replay with zero duplicate cells.
+  *    sibling dir swapped in by [[KvFiles.install]], which puts the
+  *    previous replica back if the swap fails — applying the same
+  *    queue twice, or re-applying after new batches commit, always
+  *    converges to exactly full-log replay with zero duplicate cells.
   *
   * 100 TB posture: a batch ships as one bounded filter+write of the
   * log tail (a production tailer reads only new WAL segments — the
@@ -41,16 +42,6 @@ import org.apache.spark.sql.functions._
   * verify report aggregates per qualifier on each side independently
   * and joins k rows, never co-locating the two stores' cells. */
 object KvReplication {
-
-  /** Spec fault injection (the `exportCopyFault` pattern): invoked
-    * after batch `i`'s data is published but BEFORE its offset
-    * commits — the nastiest kill window. No-op in production. */
-  private[graft] var shipFault: Int => Unit = _ => ()
-
-  /** Spec fault injection for apply's nastiest window: invoked after the
-    * rebuilt store is swapped in but BEFORE the applied ledger commits.
-    * No-op in production. */
-  private[graft] var applyFault: () => Unit = () => ()
 
   final case class ShipStats(shipped: Int, skipped: Int, batches: Int)
 
@@ -70,14 +61,8 @@ object KvReplication {
     }
   }
 
-  private def commitLedger(replRoot: String, lg: Ledger): Unit = {
-    val p = offsetFile(replRoot)
-    Files.createDirectories(p.getParent)
-    val tmp = p.resolveSibling("OFFSET.tmp")
-    Files.writeString(tmp, s"v1 ${lg.last} ${lg.batches} ${lg.minSeq} ${lg.width}\n")
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def commitLedger(replRoot: String, lg: Ledger): Unit =
+    KvFiles.publish(offsetFile(replRoot), s"v1 ${lg.last} ${lg.batches} ${lg.minSeq} ${lg.width}\n")
 
   /** Ship the WAL (columns rowkey, qualifier, seq, op, value) into
     * `replRoot`'s queue as `batches` seq-range batches, resuming after
@@ -135,7 +120,6 @@ object KvReplication {
     for (i <- from until batches) {
       tagged.filter(col("batch") === i).drop("batch")
         .write.mode("overwrite").parquet(queueDir(replRoot, i).toString)
-      shipFault(i) // no-op in production; spec kills land HERE
       commitLedger(replRoot, Ledger(i, batches, lo, width))
     }
     ShipStats(shipped = batches - from, skipped = from, batches = batches)
@@ -147,10 +131,8 @@ object KvReplication {
     * path rides inside the file for debuggability. */
   private def appliedFile(replRoot: String, storePath: String): Path = {
     val norm = Paths.get(storePath).toAbsolutePath.normalize.toString
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(norm.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    Paths.get(replRoot, "applied", key)
+    Paths.get(replRoot, "applied",
+      KvFiles.md5Hex(norm.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
   }
 
   private def readApplied(replRoot: String, storePath: String): Option[Int] = {
@@ -162,15 +144,9 @@ object KvReplication {
     }
   }
 
-  private def commitApplied(replRoot: String, storePath: String, last: Int): Unit = {
-    val p = appliedFile(replRoot, storePath)
-    Files.createDirectories(p.getParent)
-    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-    val norm = Paths.get(storePath).toAbsolutePath.normalize.toString
-    Files.writeString(tmp, s"v1 $last $norm\n")
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def commitApplied(replRoot: String, storePath: String, last: Int): Unit =
+    KvFiles.publish(appliedFile(replRoot, storePath),
+      s"v1 $last ${Paths.get(storePath).toAbsolutePath.normalize}\n")
 
   /** Apply every COMMITTED batch (index ≤ offset) onto the replica
     * store at `storePath`, IDEMPOTENTLY (ADVICE r12): graft-kv stores
@@ -186,7 +162,8 @@ object KvReplication {
     *    committed queue (one cell-keyed last-write-wins shuffle —
     *    deletes suppress, so a newly shipped delete genuinely removes
     *    a previously applied cell) into a sibling temp dir that is
-    *    atomically swapped in, then the ledger commits. The queue —
+    *    swapped in (a failed swap restores the previous replica), then
+    *    the ledger commits. The queue —
     *    not the replica — is the source of truth, so a kill in any
     *    window (after swap, before ledger) just rebuilds again: the
     *    rebuild is a pure function of the committed queue;
@@ -236,19 +213,9 @@ object KvReplication {
       .withColumn("rn", row_number().over(coordW))
       .filter(col("rn") === 1 && col("op") === "put")
       .select("rowkey", "qualifier", "value")
-    val store = Paths.get(storePath).toAbsolutePath.normalize
-    // deterministic sibling names so a killed apply's strays are
-    // reclaimed by the retry instead of accumulating
-    val tmp = store.resolveSibling(s".${store.getFileName}.rebuild.tmp")
-    val old = store.resolveSibling(s".${store.getFileName}.rebuild.old")
-    graft.util.Scratch.deleteTree(tmp.toString)
-    graft.util.Scratch.deleteTree(old.toString)
-    state.write.format("graft-kv").option("path", tmp.toString).mode("append").save()
-    Option(store.getParent).foreach(Files.createDirectories(_))
-    if (Files.exists(store)) Files.move(store, old, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(tmp, store, StandardCopyOption.ATOMIC_MOVE)
-    graft.util.Scratch.deleteTree(old.toString)
-    applyFault() // no-op in production; spec kills land HERE
+    KvFiles.install(Paths.get(storePath).toAbsolutePath.normalize) { tmp =>
+      state.write.format("graft-kv").option("path", tmp.toString).mode("append").save()
+    }
     commitApplied(replRoot, storePath, lg.last)
     storeCount()
   }

@@ -49,7 +49,7 @@ object KvScrub {
           val p = Paths.get(store, f)
           if (!Files.exists(p)) Finding(f, "missing", want, "absent")
           else {
-            val got = KvMeta.md5HexOf(p.toString)
+            val got = KvFiles.md5Hex(p)
             Finding(f, if (got == want) "ok" else "checksum", want, got)
           }
         }

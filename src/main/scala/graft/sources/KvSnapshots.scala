@@ -1,8 +1,8 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -14,11 +14,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * snapshots are manifests of references to immutable HFiles).
   *
   * Layout: `<root>/<name>/data/` (.kv files) + `<root>/<name>/MANIFEST.json`.
-  * The manifest is written AFTER the data, via temp-file + atomic move,
-  * and is the commit mark — a crashed create leaves a data dir without a
-  * manifest, which restore and list refuse to see, so half-written
-  * snapshots are never visible (same job-level two-phase idea as the
-  * connector's task-level rename-on-commit).
+  * The manifest is published AFTER the data ([[KvFiles.publish]]) and
+  * is the commit mark — a crashed create leaves a data dir without a
+  * manifest, which restore and list refuse to see and a re-run replaces,
+  * so half-written snapshots are never visible (same job-level
+  * two-phase idea as the connector's task-level rename-on-commit).
   *
   * Scale posture (the round-3 verdict's one weak spot, now fixed): the
   * manifest's per-file (bytes, md5, cells) come from the WRITE TASKS'
@@ -33,15 +33,6 @@ object KvSnapshots {
 
   final case class SnapEntry(file: String, bytes: Long, md5: String, cells: Long,
       sharedFrom: Option[String], perms: Option[String] = None)
-
-  /** TEST-ONLY fault injection for export's distributed copy: invoked
-    * inside a copy task, with the file name, just before the file's
-    * bytes move — after OTHER tasks may already have published their
-    * files. A thrown exception fails the export job mid-copy, which is
-    * exactly the partial state the manifest-as-commit-mark must keep
-    * invisible. Production value is a no-op; specs swap it in and MUST
-    * restore it in a finally. */
-  private[graft] var exportCopyFault: String => Unit = _ => ()
 
   /** Posix permission string ("rw-r--r--") of a file, None where the
     * filesystem doesn't speak posix — the reference's -chmod/-chuser
@@ -62,7 +53,7 @@ object KvSnapshots {
     perms.foreach { s =>
       try Files.setPosixFilePermissions(p,
         java.nio.file.attribute.PosixFilePermissions.fromString(s))
-      catch { case scala.util.control.NonFatal(_) => () }
+      catch { case NonFatal(_) => () }
     }
 
   /** Outcome of an `export`: how many files were actually copied vs
@@ -121,8 +112,7 @@ object KvSnapshots {
       baseByContent.get((e.md5, e.bytes)) match {
         case Some(baseFile) =>
           val mine = dataDir(root, name).resolve(e.file)
-          Files.delete(mine)
-          Files.createLink(mine, dataDir(root, base).resolve(baseFile))
+          KvFiles.share(mine, dataDir(root, base).resolve(baseFile))
           // a hard link shares the BASE file's inode (and thus perms);
           // re-read so the manifest records the actual file's attrs,
           // not the deleted fresh copy's
@@ -134,7 +124,9 @@ object KvSnapshots {
   }
 
   private def writeData(df: DataFrame, root: String, name: String): Unit = {
-    require(!Files.exists(snapDir(root, name)), s"snapshot $name already exists")
+    require(!Files.exists(manifest(root, name)), s"snapshot $name already exists")
+    // a manifest-less dir is a crashed create's leftover: start over
+    graft.util.Scratch.deleteTree(snapDir(root, name).toString)
     df.write.format("graft-kv")
       .option("path", dataDir(root, name).toString).mode("append").save()
   }
@@ -172,9 +164,7 @@ object KvSnapshots {
          |}
          |""".stripMargin
     // atomic publish: a torn manifest must never look committed
-    val tmp = snapDir(root, name).resolve(".MANIFEST.json.tmp")
-    Files.writeString(tmp, json, StandardCharsets.UTF_8)
-    Files.move(tmp, manifest(root, name), StandardCopyOption.ATOMIC_MOVE)
+    KvFiles.publish(manifest(root, name), json)
   }
 
   private val EntryRe =
@@ -242,7 +232,7 @@ object KvSnapshots {
       val checks = entries.map(e => (data.resolve(e.file).toString, e.md5))
       val mismatched = spark.createDataset(checks)
         .repartition(math.min(checks.size, 32))
-        .map { case (path, want) => if (KvMeta.md5HexOf(path) == want) "" else path }
+        .map { case (path, want) => if (KvFiles.md5Hex(Paths.get(path)) == want) "" else path }
         .filter(_.nonEmpty)
         .collect() // only the names of corrupt files come back to the driver
       require(mismatched.isEmpty,
@@ -346,7 +336,7 @@ object KvSnapshots {
     * dest dir left by a crashed export is NOT wiped. Each copy task
     * first digest-reads any existing dest file and skips the copy when
     * its (md5, bytes) already verify — published dest files are always
-    * complete (temp-file + atomic move), so the only states are
+    * complete ([[KvFiles.Writer]]), so the only states are
     * verified-skip, corrupt-recopy, or missing-copy. A restart therefore
     * re-reads what survived but re-COPIES only what's missing — at
     * 100 TB the difference between an hour and a week. Returns
@@ -376,7 +366,7 @@ object KvSnapshots {
     val stray = Files.list(destData)
     try stray.iterator().asScala
       .filter(p => { val n = p.getFileName.toString
-        (n.endsWith(".tmp") || (n.endsWith(KvFormat.SUFFIX) && !expected(n))) })
+        (KvFiles.isTemp(n) || (n.endsWith(KvFormat.SUFFIX) && !expected(n))) })
       .foreach(Files.delete)
     finally stray.close()
     // CURRENT source-file posix perms, read once on the driver
@@ -421,12 +411,11 @@ object KvSnapshots {
           val destP = Paths.get(dest)
           val file = Paths.get(src).getFileName.toString
           val survives = !force && pre && Files.exists(destP) &&
-            Files.size(destP) == wantBytes && KvMeta.md5HexOf(dest) == wantMd5
+            Files.size(destP) == wantBytes && KvFiles.md5Hex(destP) == wantMd5
           if (survives) { applyPerms(destP, perms); ("skipped", file) }
           else {
-            exportCopyFault(file) // no-op in production; spec fault injection
-            val gotMd5 = copyDigesting(src, dest, bandwidthMbps)
-            if (gotMd5 == wantMd5 && Files.size(destP) == wantBytes) {
+            val (gotBytes, gotMd5) = copyDigesting(Paths.get(src), destP, bandwidthMbps)
+            if (gotMd5 == wantMd5 && gotBytes == wantBytes) {
               applyPerms(destP, perms) // attrs ride with the bytes
               ("copied", file)
             } else ("corrupt", file)
@@ -447,7 +436,7 @@ object KvSnapshots {
     // mis-prune scans and answer pushed aggregates from old counts.
     val srcIdx = srcData.resolve(KvMeta.FILE)
     if (Files.exists(srcIdx))
-      Files.copy(srcIdx, destData.resolve(KvMeta.FILE), StandardCopyOption.REPLACE_EXISTING)
+      KvFiles.publish(destData.resolve(KvMeta.FILE), Files.readString(srcIdx))
     else Files.deleteIfExists(destData.resolve(KvMeta.FILE))
     // the exported snapshot is logically the SAME snapshot: its age
     // stamp (if any) travels with it rather than resetting at the dest
@@ -497,9 +486,6 @@ object KvSnapshots {
     }.toMap
   }
 
-  /** Executor-side: copy src → dest via temp file + atomic move,
-    * returning the md5 of the written bytes. Idempotent under task
-    * retries (unique temp name; REPLACE_EXISTING on the publish move). */
   /** PER-TASK bandwidth pacing (the reference's `-bandwidth` knob —
     * HBase's ExportSnapshot wraps its copy in a ThrottledInputStream so
     * a snapshot export cannot saturate the links production traffic
@@ -516,16 +502,14 @@ object KvSnapshots {
     }
   }
 
-  private def copyDigesting(src: String, dest: String, bandwidthMbps: Int = 0): String = {
-    val destP = Paths.get(dest)
-    val tmp = destP.resolveSibling(
-      s".${destP.getFileName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val in = Files.newInputStream(Paths.get(src))
+  /** Executor-side: copy src → dest through a [[KvFiles.Writer]],
+    * returning the (bytes, md5) of what it wrote. */
+  private def copyDigesting(src: Path, dest: Path, bandwidthMbps: Int): (Long, String) = {
+    val in = Files.newInputStream(src)
     try {
-      val out = new java.security.DigestOutputStream(Files.newOutputStream(tmp), md)
+      val w = new KvFiles.Writer(dest)
       try {
-        if (bandwidthMbps <= 0) in.transferTo(out)
+        if (bandwidthMbps <= 0) in.transferTo(w.out)
         else {
           // chunked copy with rate pacing: 1 MiB granularity keeps the
           // sleep cadence coarse enough to cost nothing at full rate
@@ -534,18 +518,16 @@ object KvSnapshots {
           var done = 0L
           var n = in.read(buf)
           while (n >= 0) {
-            out.write(buf, 0, n)
+            w.out.write(buf, 0, n)
             done += n
             val pause = throttleDelayMs(done, (System.nanoTime() - t0) / 1000000L, bandwidthMbps)
             if (pause > 0) Thread.sleep(pause)
             n = in.read(buf)
           }
         }
-      } finally out.close()
-      Files.move(tmp, destP, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
+        w.commit()
+      } catch { case NonFatal(e) => w.abort(); throw e }
     } finally in.close()
-    md.digest().map("%02x".format(_)).mkString
   }
 
   /** CLONE a committed snapshot into a new writable live store —
@@ -562,25 +544,14 @@ object KvSnapshots {
     val entries = parseManifest(root, name)
     require(KvFormat.dataFiles(destStore).isEmpty,
       s"clone destination $destStore already holds data files")
-    val (src, dest) = (dataDir(root, name), Paths.get(destStore).normalize)
-    // two-phase publish (same shape as copyDigesting): links land in a
-    // sibling temp dir first, then ONE atomic rename makes the clone
-    // visible — a half-linked failure leaves the destination absent and
-    // the retry clean, never a partial store that trips the guard above
-    val tmp = dest.resolveSibling(
-      s".${dest.getFileName}.clone.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    try {
+    val src = dataDir(root, name)
+    // a half-linked failure leaves the destination as it was and the
+    // retry clean, never a partial store that trips the guard above
+    KvFiles.install(Paths.get(destStore).normalize) { tmp =>
       Files.createDirectories(tmp)
-      entries.foreach(e => Files.createLink(tmp.resolve(e.file), src.resolve(e.file)))
+      entries.foreach(e => KvFiles.share(tmp.resolve(e.file), src.resolve(e.file)))
       val srcIdx = src.resolve(KvMeta.FILE)
-      if (Files.exists(srcIdx)) Files.copy(srcIdx, tmp.resolve(KvMeta.FILE))
-      Option(dest.getParent).foreach(Files.createDirectories(_))
-      Files.deleteIfExists(dest) // an empty pre-created dir is fine to replace
-      Files.move(tmp, dest, StandardCopyOption.ATOMIC_MOVE)
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        graft.util.Scratch.deleteTree(tmp.toString)
-        throw e
+      if (Files.exists(srcIdx)) KvFiles.publish(tmp.resolve(KvMeta.FILE), Files.readString(srcIdx))
     }
   }
 

@@ -39,8 +39,8 @@ object StreamingDemo {
   def run(spark: SparkSession, sfDir: String): Seq[String] = {
     // Staging, ns→µs conversion, and sink draining all come from the
     // hardened TimeSeries/Tables helpers — one implementation, so the
-    // demo inherits their run isolation (per-process tagged /tmp dirs,
-    // deleteOnExit cleanup, sink-view drop + resetTerminated) instead
+    // demo inherits their run isolation (per-process scratch dirs
+    // deleted on exit, sink-view drop + resetTerminated) instead
     // of re-implementing a fixed-path copy that two concurrent runs
     // would clobber mid-stream.
     // each check builds its pipeline over a fresh stream on the child

@@ -15,7 +15,7 @@ import scala.jdk.CollectionConverters._
   * or overwrite, so an entry's value never changes once built.
   *
   * `dir(key)(write)` is the on-disk form: `write` fills a fresh
-  * directory under one per-process scratch root (deleted on exit) and
+  * directory under the process scratch root (`Scratch.root`) and
   * the entry's value is that path, read back like any table.
   *
   * `keys` and `retainOnly` are Bench's pass-2 hook: keeping only the keys
@@ -34,17 +34,10 @@ object Built {
     catch { case t: Throwable => entries.remove(key, e); throw t }
   }
 
-  private lazy val root: String = {
-    val r = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_built/" +
-      java.util.UUID.randomUUID().toString.take(8)
-    Scratch.deleteOnExit(r)
-    r
-  }
-
   def dir(key: String)(write: String => Unit): String = apply(key) {
     // a letter-led, key-derived name: a rebuild after retainOnly replaces
     // the old copy, and Spark never reads a _-led basename as data
-    val d = s"$root/b${key.replaceAll("[^A-Za-z0-9.=-]", "_")}-${(key.hashCode & 0x7fffffff).toHexString}"
+    val d = s"${Scratch.root}/built/b${key.replaceAll("[^A-Za-z0-9.=-]", "_")}-${(key.hashCode & 0x7fffffff).toHexString}"
     Scratch.deleteTree(d)
     write(d)
     d

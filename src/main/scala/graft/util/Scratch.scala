@@ -5,12 +5,13 @@ import java.util.Comparator
 
 import scala.jdk.CollectionConverters._
 
-/** Process-scoped /tmp scratch hygiene shared by the operators that
-  * stage data on local disk (snapshot roots, file-stream staging dirs):
-  * recursive delete that also removes partially-written dirs a crashed
-  * run left behind, plus a register-once JVM exit hook so concurrent
-  * bench+verify JVMs clean up after themselves instead of accumulating
-  * staging data across runs. */
+/** Process-scoped scratch hygiene shared by the operators that stage
+  * data on local disk (snapshot roots, file-stream staging dirs): one
+  * process tag, one scratch root under `java.io.tmpdir` named by it and
+  * deleted when the JVM exits, and a recursive delete that also removes
+  * partially-written dirs a crashed run left behind. Concurrent
+  * bench+verify JVMs therefore never share a scratch path and clean up
+  * after themselves instead of accumulating staging data across runs. */
 object Scratch {
 
   def deleteTree(dir: String): Unit = {
@@ -23,14 +24,27 @@ object Scratch {
     }
   }
 
-  private val hooked = scala.collection.concurrent.TrieMap.empty[String, Unit]
+  /** This process's tag: it names the scratch roots and graft-kv data
+    * files, so two concurrent JVMs never write the same path. */
+  val tag: String = java.util.UUID.randomUUID().toString.take(8)
 
-  /** Delete `dir` when this JVM exits; at most one hook per dir no
-    * matter how often a graded key re-runs in-process. */
-  def deleteOnExit(dir: String): Unit =
-    hooked.getOrElseUpdate(dir, { sys.addShutdownHook(deleteTree(dir)); () })
+  private def deletedOnExit(dir: String): String = { sys.addShutdownHook(deleteTree(dir)); dir }
 
-  private val ckptTag: String = java.util.UUID.randomUUID().toString.take(8)
+  /** This process's scratch root, deleted when the JVM exits. */
+  lazy val root: String =
+    deletedOnExit(s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_scratch/$tag")
+
+  /** `<root>/<sfDir as one name>/<name>`: a scratch path per data dir. */
+  def forSf(sfDir: String, name: String): String =
+    s"$root/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}/$name"
+
+  private lazy val ckptRoot: String = {
+    val shm = new java.io.File("/dev/shm")
+    val base =
+      if (shm.isDirectory && shm.canWrite) "/dev/shm"
+      else System.getProperty("java.io.tmpdir", "/tmp")
+    deletedOnExit(s"$base/graft_ckpt/$tag")
+  }
   private val ckptSeq = new java.util.concurrent.atomic.AtomicLong()
 
   /** A unique streaming-checkpoint dir on tmpfs (r17 verdict task 4).
@@ -51,15 +65,8 @@ object Scratch {
     * JVMs must not delete each other's dirs) and per START (the seq — a
     * bench's min-of-two rerun reusing one checkpoint would resume from
     * committed offsets and replay nothing). */
-  def fastCheckpointDir(name: String): String = {
-    val shm = new java.io.File("/dev/shm")
-    val root =
-      if (shm.isDirectory && shm.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir", "/tmp")
-    val base = s"$root/graft_ckpt/$ckptTag"
-    deleteOnExit(base)
-    s"$base/$name-${ckptSeq.incrementAndGet()}"
-  }
+  def fastCheckpointDir(name: String): String =
+    s"$ckptRoot/$name-${ckptSeq.incrementAndGet()}"
 
   /** The parquet part files of a written dir (no metadata/_SUCCESS). */
   def parquetFiles(dir: String): Seq[Path] = {

@@ -559,15 +559,11 @@ class OperatorSpec extends SparkSpec {
     // the split point and every child-B file's min rowkey above it, so
     // the two children serve disjoint key ranges like HBase daughters
     run("kv_split").count() // materializes the child stores
-    // locate this process's children: every (parent-dir) pair found for
-    // this sf must be disjoint — the derivation is deterministic, so a
-    // concurrently-present stale pair obeys the same invariant
-    val pairs = new java.io.File("/tmp/graft_export").listFiles().toSeq
-      .filter(_.isDirectory)
-      .map(p => new java.io.File(p, sf.replaceAll("[^A-Za-z0-9.]", "_")))
+    // locate this process's children under its scratch root for this sf
+    val pairs = Seq(new java.io.File(graft.util.Scratch.forSf(sf, "")))
       .filter(d => new java.io.File(d, "supplier_kv_split_a").isDirectory &&
         new java.io.File(d, "supplier_kv_split_b").isDirectory)
-    assert(pairs.nonEmpty, "child stores not found under /tmp/graft_export")
+    assert(pairs.nonEmpty, s"child stores not found under ${graft.util.Scratch.root}")
     pairs.foreach { d =>
       val metaA = graft.sources.KvMeta.read(s"$d/supplier_kv_split_a").values
       val metaB = graft.sources.KvMeta.read(s"$d/supplier_kv_split_b").values
@@ -1642,7 +1638,7 @@ class LifecycleSpec extends SparkSpec {
     run("source_compressed_roundtrip").count()
     val o = graft.sources.Tables.orders(spark, sf)
     // locate the written .gz dir (same per-process scratch layout)
-    val roots = new java.io.File("/tmp/graft_export").listFiles()
+    val roots = Array(new java.io.File(graft.util.Scratch.root))
     val gzDirs = roots.flatMap(r => Option(r.listFiles()).getOrElse(Array.empty))
       .flatMap(d => Option(d.listFiles()).getOrElse(Array.empty))
       .filter(_.getName == "orders_csv_gz")

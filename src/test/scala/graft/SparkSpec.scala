@@ -60,6 +60,19 @@ class EntrySpec extends SparkSpec {
       } finally files.close()
     assert(offenders.isEmpty, s"memo maps in operators: ${offenders.mkString(", ")}")
   }
+  test("only KvFiles renames, links or digests graft-kv storage") {
+    // one module owns the temp-then-rename protocol: its crash hook sees
+    // every step, and a filesystem port changes one file
+    val banned = Seq("ATOMIC_MOVE", "createLink", "DigestOutputStream", "MessageDigest", "Files.move")
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft/sources"))
+    val offenders = try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      .filter(_.getFileName.toString != "KvFiles.scala")
+      .flatMap { p =>
+        val text = java.nio.file.Files.readString(p)
+        banned.filter(text.contains).map(b => s"$p: $b")
+      } finally files.close()
+    assert(offenders.isEmpty, s"storage mutations outside KvFiles: ${offenders.mkString(", ")}")
+  }
   test("oracleSql keys are a subset of queries keys") {
     val extra = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(extra.isEmpty, s"oracle keys without query impl: $extra")

@@ -16,6 +16,13 @@ class KvCompactionSpec extends SparkSpec {
   private def freshStore(): String =
     Files.createTempDirectory("kv_compaction_spec").resolve("cells").toString
 
+  /** Temp names left in `dir` (see KvFiles.isTemp). */
+  private def temps(dir: java.nio.file.Path): Seq[String] = {
+    val s = Files.list(dir)
+    try s.iterator().asScala.map(_.getFileName.toString).filter(KvFiles.isTemp).toList
+    finally s.close()
+  }
+
   private def cells =
     graft.operators.Scans.scanKvModel(spark, sf)
 
@@ -265,10 +272,7 @@ class KvCompactionSpec extends SparkSpec {
       .orderBy("rowkey", "qualifier").collect()
     assert(rowsAfter.sameElements(rowsBefore), "readable cells changed across a failed job")
     // and no task temp files strand either
-    val stray = Files.list(java.nio.file.Paths.get(store))
-    try assert(!stray.iterator().asScala.exists(_.getFileName.toString.startsWith(".tmp-")),
-      "failed tasks stranded temp files")
-    finally stray.close()
+    assert(temps(java.nio.file.Paths.get(store)).isEmpty, "failed tasks stranded temp files")
   }
 
   test("a crash between the two swap moves rolls the old store back") {
@@ -279,21 +283,20 @@ class KvCompactionSpec extends SparkSpec {
     // kill in the EXACT window where the live path holds nothing: the
     // old dir is moved aside, the rewritten tmp not yet in place
     val boom = new RuntimeException("injected crash between swap moves")
-    KvCompaction.betweenSwapMoves = () => throw boom
+    KvFiles.beforeStep = s => if (s == s"install-in $store") throw boom
     val e = try intercept[RuntimeException] {
       KvCompaction.compact(spark, store, targetFiles = 1)
-    } finally KvCompaction.betweenSwapMoves = () => ()
+    } finally KvFiles.beforeStep = _ => ()
     assert(e eq boom, s"the injected failure must stay the primary error, got $e")
     // readers must see the PRE-compaction store, not an empty dir...
     val after = spark.read.format("graft-kv").load(store)
       .orderBy("rowkey", "qualifier").collect()
     assert(after.sameElements(beforeCells),
       "rollback must restore the pre-compaction store at the live path")
-    // ...and neither scratch tree may be stranded (tmp is store-sized)
-    assert(!Files.exists(java.nio.file.Paths.get(s"$store.compact-tmp")),
-      "crashed swap stranded the store-sized tmp tree")
-    assert(!Files.exists(java.nio.file.Paths.get(s"$store.compact-old")),
-      "rollback must move .compact-old back, not copy it")
+    // ...and neither sibling tree may be stranded: the new one is
+    // store-sized, and the old one must be moved back, not copied
+    val siblings = temps(java.nio.file.Paths.get(store).getParent)
+    assert(siblings.isEmpty, s"crashed swap stranded $siblings")
   }
 
   test("a fired lossless-rewrite guard reclaims the tmp tree") {
@@ -312,7 +315,7 @@ class KvCompactionSpec extends SparkSpec {
       KvCompaction.compact(spark, store, 2)
     }
     assert(e.getMessage.contains("compaction lost cells"))
-    assert(!Files.exists(java.nio.file.Paths.get(s"$store.compact-tmp")),
+    assert(temps(java.nio.file.Paths.get(store).getParent).isEmpty,
       "failed compaction stranded the store-sized tmp tree")
     assert(KvFormat.dataFiles(store).nonEmpty, "live store must be untouched")
   }

@@ -62,7 +62,7 @@ class KvConnectorSpec extends AnyFunSuite {
     val m = (w.commit(): @unchecked) match { case KvCommitMessage(Some(x)) => x }
     val f = Paths.get(dir, m.file)
     assert(Files.size(f) == m.bytes)
-    assert(KvMeta.md5HexOf(f.toString) == m.md5)
+    assert(KvFiles.md5Hex(f) == m.md5)
     assert(m.cells == 3 && m.minKey == 2L && m.maxKey == 9L)
     // job commit persists the stats as the index — no data re-read needed
     new KvBatchWrite(dir).commit(Array(KvCommitMessage(Some(m))))

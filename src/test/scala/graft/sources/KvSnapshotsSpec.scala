@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
+import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
@@ -60,7 +61,7 @@ class KvSnapshotsSpec extends SparkSpec {
       assert((e.bytes, e.md5, e.cells) == (m.bytes, m.md5, m.cells))
       // and the stats are truthful about the file on disk
       assert(Files.size(Paths.get(dataDir, e.file)) == e.bytes)
-      assert(KvMeta.md5HexOf(Paths.get(dataDir, e.file).toString) == e.md5)
+      assert(KvFiles.md5Hex(Paths.get(dataDir, e.file)) == e.md5)
     }
   }
 
@@ -90,7 +91,7 @@ class KvSnapshotsSpec extends SparkSpec {
     val v1ByContent = KvSnapshots.parseManifest(root, "v1").map(e => e.md5 -> e.file).toMap
     shared.foreach { f =>
       val mine = Paths.get(root, "v2", "data", f)
-      val md5 = KvMeta.md5HexOf(mine.toString)
+      val md5 = KvFiles.md5Hex(mine)
       val base = Paths.get(root, "v1", "data", v1ByContent(md5))
       assert(Files.isSameFile(mine, base), s"$f must be a hard link to v1's file")
     }
@@ -196,11 +197,12 @@ class KvSnapshotsSpec extends SparkSpec {
     // already PUBLISHED theirs, which is exactly the partial state the
     // manifest-as-commit-mark must keep invisible
     val victim = entries.map(_.file).sorted.last
-    KvSnapshots.exportCopyFault =
-      f => if (f == victim) throw new RuntimeException(s"injected copy fault on $f")
+    val victimPath = Paths.get(dest, "s1", "data", victim)
+    KvFiles.beforeStep =
+      s => if (s == s"write $victimPath") throw new RuntimeException(s"injected copy fault on $victim")
     try intercept[org.apache.spark.SparkException] {
       KvSnapshots.export(spark, src, dest, "s1")
-    } finally KvSnapshots.exportCopyFault = _ => ()
+    } finally KvFiles.beforeStep = _ => ()
     // partial output exists on disk, but the dest is uncommitted:
     // invisible to list, unrestorable — never half a snapshot
     assert(KvSnapshots.list(dest).isEmpty,
@@ -658,15 +660,26 @@ class KvSnapshotsSpec extends SparkSpec {
       .select("rowkey", "qualifier", "value")
   }
 
+  /** A step hook that kills `ship` after batch `batch`'s data is
+    * published but before its offset commits: batch i's commit is the
+    * (i+1)-th publish of the OFFSET ledger. */
+  private def killAtOffsetCommit(replRoot: String, batch: Int): String => Unit = {
+    var commits = 0
+    s => if (s == s"publish ${Paths.get(replRoot, "OFFSET")}") {
+      commits += 1
+      if (commits == batch + 1)
+        throw new RuntimeException(s"injected kill after batch $batch publish")
+    }
+  }
+
   test("WAL shipping killed between batch publish and offset commit resumes losslessly") {
     val dest = freshRoot()
     // kill in the NASTIEST window: batch 1's data is already published
     // to the queue, but its offset never committed
-    KvReplication.shipFault =
-      i => if (i == 1) throw new RuntimeException(s"injected kill after batch $i publish")
+    KvFiles.beforeStep = killAtOffsetCommit(dest, batch = 1)
     try intercept[RuntimeException] {
       KvReplication.ship(spark, replWal, dest, batches = 4)
-    } finally KvReplication.shipFault = _ => ()
+    } finally KvFiles.beforeStep = _ => ()
     // resume: batch 0 committed (skipped); batch 1 was published but
     // uncommitted, so it MUST be re-shipped — nothing lost, nothing
     // double-counted
@@ -709,11 +722,10 @@ class KvSnapshotsSpec extends SparkSpec {
     // commit only batches 0 and 1: the kill lands after batch 2's
     // publish but before its offset commit (width = 250 → committed
     // prefix covers seq < 500)
-    KvReplication.shipFault =
-      i => if (i == 2) throw new RuntimeException("injected kill before batch 2 commit")
+    KvFiles.beforeStep = killAtOffsetCommit(dest, batch = 2)
     try intercept[RuntimeException] {
       KvReplication.ship(spark, replWal, dest, batches = 4)
-    } finally KvReplication.shipFault = _ => ()
+    } finally KvFiles.beforeStep = _ => ()
     val store = freshRoot() + "/store"
     val n1 = KvReplication.applyShipped(spark, dest, store)
     // the r12-advice scenario: re-applying to the SAME store in the
@@ -758,11 +770,14 @@ class KvSnapshotsSpec extends SparkSpec {
     // Without the provisional (-1) ledger committed at adoption time,
     // the retry would see data-files-but-no-ledger and PERMANENTLY
     // refuse a legitimate replica.
-    KvReplication.applyFault =
-      () => throw new RuntimeException("injected kill after swap, before ledger commit")
+    var swapped = false
+    KvFiles.beforeStep = s =>
+      if (s.startsWith("install-in ")) swapped = true
+      else if (swapped && s.startsWith(s"publish ${Paths.get(dest, "applied")}"))
+        throw new RuntimeException("injected kill after swap, before ledger commit")
     try intercept[RuntimeException] {
       KvReplication.applyShipped(spark, dest, store)
-    } finally KvReplication.applyFault = () => ()
+    } finally KvFiles.beforeStep = _ => ()
     assert(Files.exists(Paths.get(store)), "the swap happened before the kill")
     // retry: the provisional ledger marks the store as adopted-but-behind,
     // so the retry rebuilds instead of refusing, and converges exactly
@@ -772,6 +787,37 @@ class KvSnapshotsSpec extends SparkSpec {
     assert(r.exceptAll(replExpected).count() == 0 && replExpected.exceptAll(r).count() == 0)
     // and the steady-state no-op still holds after recovery
     assert(KvReplication.applyShipped(spark, dest, store) == n)
+  }
+
+  test("apply killed between the two moves of its install keeps the previous replica live") {
+    val dest = freshRoot()
+    KvFiles.beforeStep = killAtOffsetCommit(dest, batch = 2) // commit batches 0 and 1
+    try intercept[RuntimeException] {
+      KvReplication.ship(spark, replWal, dest, batches = 4)
+    } finally KvFiles.beforeStep = _ => ()
+    val store = Paths.get(freshRoot(), "store").toString
+    val n1 = KvReplication.applyShipped(spark, dest, store)
+    def cells() = spark.read.format("graft-kv").load(store)
+      .orderBy("rowkey", "qualifier").collect().toSeq
+    val previous = cells()
+    assert(previous.size == n1 && n1 > 0)
+    KvReplication.ship(spark, replWal, dest, batches = 4)
+    // the catch-up rebuild is written; the old replica has been moved
+    // aside and the kill lands before the new one moves in
+    KvFiles.beforeStep = s => if (s == s"install-in $store")
+      throw new RuntimeException("injected kill between the install moves")
+    try intercept[RuntimeException] {
+      KvReplication.applyShipped(spark, dest, store)
+    } finally KvFiles.beforeStep = _ => ()
+    assert(cells() == previous, "the previous replica must be back at the live path")
+    val siblings = Files.list(Paths.get(store).getParent)
+    try assert(!siblings.iterator().asScala.exists(p => KvFiles.isTemp(p.getFileName.toString)),
+      "a rolled-back install stranded a temp sibling")
+    finally siblings.close()
+    // the retry converges to exactly full-log replay
+    assert(KvReplication.applyShipped(spark, dest, store) == replExpected.count())
+    val r = spark.read.format("graft-kv").load(store)
+    assert(r.exceptAll(replExpected).count() == 0 && replExpected.exceptAll(r).count() == 0)
   }
 
   test("the replicate CLI verb ships and applies end-to-end, with the exit-code matrix") {
