@@ -77,11 +77,10 @@ object DataGen {
       import java.nio.file.{Files, Paths, StandardCopyOption}
       val tmp = s"$outDir/.tmp_$name"
       df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet"))
+      val part = graft.util.Scratch.parquetFiles(tmp).headOption
         .getOrElse(sys.error(s"no parquet part under $tmp"))
       Files.createDirectories(Paths.get(outDir))
-      Files.move(part.toPath, Paths.get(outDir, s"$name.parquet"),
+      Files.move(part, Paths.get(outDir, s"$name.parquet"),
         StandardCopyOption.REPLACE_EXISTING)
       graft.util.Scratch.deleteTree(tmp)
       println(s"[datagen] wrote $name")

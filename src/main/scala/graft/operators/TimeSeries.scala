@@ -93,11 +93,10 @@ object TimeSeries {
       splits.zipWithIndex.foreach { case (df, i) =>
         val tmp = s"$d.part$i"
         df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(_.getName.endsWith(".parquet"))
+        val part = graft.util.Scratch.parquetFiles(tmp).headOption
           .getOrElse(sys.error(s"no parquet part written under $tmp"))
         val dest = Paths.get(d, f"split_$i%03d.parquet")
-        Files.move(part.toPath, dest, StandardCopyOption.REPLACE_EXISTING)
+        Files.move(part, dest, StandardCopyOption.REPLACE_EXISTING)
         // explicit, strictly increasing mtimes: the file-stream source
         // lists oldest-first, and same-ms writes would make the feed
         // order (hence late-row filtering) nondeterministic

@@ -28,9 +28,11 @@ import org.apache.spark.sql.functions._
   * Crash safety: the rewrite lands in the sibling `.tmp-<store>.new`
   * under the connector's own two-phase commit; the live dir is only
   * touched by [[KvFiles.install]]'s final swap through the sibling
-  * `.tmp-<store>.old`, which never leaves the live path empty. At
-  * cluster scale the swap becomes a manifest pointer flip (HBase's
-  * file-tracker move) — the rewrite job is identical.
+  * `.tmp-<store>.old`, which never leaves the live path empty; a
+  * process crash between its two moves is undone by the next compact
+  * ([[KvFiles.recover]]). At cluster scale the swap becomes a manifest
+  * pointer flip (HBase's file-tracker move) — the rewrite job is
+  * identical.
   *
   * NOT concurrency-safe vs writers: like HBase, compaction assumes it
   * owns the store for the swap instant (readers mid-scan hold open file
@@ -96,6 +98,7 @@ object KvCompaction {
     // swap a move-into-self
     val live = Paths.get(storeRaw).normalize
     val store = live.toString
+    KvFiles.recover(live) // a crash between install's moves left live aside
     val before = KvFormat.dataFiles(store)
     require(before.nonEmpty, s"graft-kv compact: no data files under $store")
     // lossless-rewrite guard: cell count from the stats index when it

@@ -2,7 +2,6 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
-import java.util.stream.Collectors
 
 import scala.jdk.CollectionConverters._
 
@@ -45,17 +44,8 @@ object KvFormat {
   val SEP = "\t"
   val SUFFIX = ".kv"
 
-  def dataFiles(dir: String): Seq[Path] = {
-    val p = Paths.get(dir)
-    if (!Files.isDirectory(p)) Seq.empty
-    else {
-      val s = Files.list(p)
-      try s.collect(Collectors.toList[Path]).asScala.toSeq
-        .filter(f => f.getFileName.toString.endsWith(SUFFIX))
-        .sortBy(_.toString)
-      finally s.close()
-    }
-  }
+  def dataFiles(dir: String): Seq[Path] =
+    graft.util.Scratch.children(dir).filter(_.getFileName.toString.endsWith(SUFFIX))
 }
 
 /** Per-file rowkey BLOOM FILTER — the HBase HFile-bloom analog. 256

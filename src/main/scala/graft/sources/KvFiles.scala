@@ -32,9 +32,11 @@ object KvFiles {
 
   def isTemp(name: String): Boolean = name.startsWith(TempPrefix)
 
-  /** `.tmp-<name>.<suffix>` beside `p`; the default suffix is fresh per
-    * call, so retried or concurrent writers never share a temp file. */
-  private def temp(p: Path, suffix: String = freshTag()): Path =
+  /** `.tmp-<name>.<suffix>` beside `p`. A fixed suffix is for a target
+    * with one writer: its next write reuses (and so reclaims) the name a
+    * crash left; a fresh one is for targets that retried or concurrent
+    * tasks may write at once. */
+  private def temp(p: Path, suffix: String): Path =
     p.resolveSibling(s"$TempPrefix${p.getFileName}.$suffix")
 
   private def freshTag(): String = java.util.UUID.randomUUID().toString.take(8)
@@ -43,13 +45,15 @@ object KvFiles {
     Files.move(from, to, StandardCopyOption.ATOMIC_MOVE)
 
   /** Replace `p` with `text`: readers see the old file or the new one,
-    * never a torn one. */
+    * never a torn one. Every published file (manifest, stats index,
+    * ledgers) has a single writer, so the temp name is fixed. */
   def publish(p: Path, text: String): Unit = {
     beforeStep(s"publish $p")
     Option(p.getParent).foreach(Files.createDirectories(_))
-    val tmp = temp(p)
+    val tmp = temp(p, "pub")
     try {
       Files.writeString(tmp, text, StandardCharsets.UTF_8)
+      beforeStep(s"commit $p")
       move(tmp, p)
     } catch { case NonFatal(e) => Files.deleteIfExists(tmp); throw e }
   }
@@ -60,7 +64,7 @@ object KvFiles {
     * [[abort]] drops it. */
   final class Writer(dest: Path) {
     beforeStep(s"write $dest")
-    private val tmp = temp(dest)
+    private val tmp = temp(dest, freshTag())
     private val md = MessageDigest.getInstance("MD5")
     private var bytes = 0L
     val out: OutputStream = new DigestOutputStream(Files.newOutputStream(tmp), md) {
@@ -97,20 +101,25 @@ object KvFiles {
 
   private def hex(bytes: Array[Byte]): String = java.util.HexFormat.of().formatHex(bytes)
 
+  /** Undo what a process crash inside [[install]] left at `live`: move
+    * the old dir back if the crash came between the two moves, and drop
+    * a stale new or old sibling. A caller that reads `live` before it
+    * installs (compaction) calls this first. */
+  def recover(live: Path): Unit = {
+    val old = temp(live, "old")
+    if (Files.exists(old) && !Files.exists(live)) { beforeStep(s"restore $live"); move(old, live) }
+    Seq(old, temp(live, "new")).foreach(p => Scratch.deleteTree(p.toString))
+  }
+
   /** Replace the directory `live` with one `fill` builds in a temp
     * sibling: move `live` aside, move the new dir in, delete the old
     * one. A failed `fill` leaves `live` untouched; a failed second move
     * puts the old dir back, so `live` is never left missing. Both
-    * sibling names are fixed per `live`: a later install reclaims what a
-    * crashed one left, and first moves the old dir back if the crash
-    * came between the two moves. Returns what `fill` returned. */
+    * sibling names are fixed per `live`, so a later install first
+    * [[recover]]s what a crashed one left. Returns what `fill` returned. */
   def install[A](live: Path)(fill: Path => A): A = {
     val (next, old) = (temp(live, "new"), temp(live, "old"))
-    if (Files.exists(old)) {
-      if (Files.exists(live)) Scratch.deleteTree(old.toString)
-      else { beforeStep(s"restore $live"); move(old, live) }
-    }
-    Scratch.deleteTree(next.toString)
+    recover(live)
     Option(live.getParent).foreach(Files.createDirectories(_))
     val result =
       try {

@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -79,7 +78,10 @@ object KvSnapshots {
     snapDir(root, name).resolve("MANIFEST.json")
 
   /** Create the named snapshot from a (rowkey, qualifier, value) frame.
-    * Snapshots are immutable: creating an existing name is an error.
+    * Snapshots are immutable: creating an existing name is an error. A
+    * re-run starts over only in what a crashed create left (its dir
+    * carries the `.tmp-create` mark until the manifest commits); any
+    * other existing dir at the name is refused.
     *
     * `createdAt` is the optional age stamp (epoch seconds) behind the
     * reference CLI's snapshot-TTL story (SURVEY.md §2.A R8): it is
@@ -123,10 +125,20 @@ object KvSnapshots {
     commitManifest(root, name, entries, createdAt)
   }
 
+  private def createMark(root: String, name: String): Path =
+    snapDir(root, name).resolve(".tmp-create")
+
   private def writeData(df: DataFrame, root: String, name: String): Unit = {
     require(!Files.exists(manifest(root, name)), s"snapshot $name already exists")
-    // a manifest-less dir is a crashed create's leftover: start over
-    graft.util.Scratch.deleteTree(snapDir(root, name).toString)
+    val dir = snapDir(root, name)
+    if (Files.exists(dir)) {
+      // only a crashed create's leftover (its mark, or only temp names)
+      // is started over: not a foreign dir, nor an export's partial copy
+      require(names(dir).forall(KvFiles.isTemp) || Files.exists(createMark(root, name)),
+        s"snapshot $name: $dir exists and is not a crashed create's leftover")
+      graft.util.Scratch.deleteTree(dir.toString)
+    }
+    KvFiles.publish(createMark(root, name), "")
     df.write.format("graft-kv")
       .option("path", dataDir(root, name).toString).mode("append").save()
   }
@@ -165,6 +177,7 @@ object KvSnapshots {
          |""".stripMargin
     // atomic publish: a torn manifest must never look committed
     KvFiles.publish(manifest(root, name), json)
+    Files.deleteIfExists(createMark(root, name))
   }
 
   private val EntryRe =
@@ -363,12 +376,8 @@ object KvSnapshots {
     // files, and data files not in the manifest (would trip restore's
     // unmanifested-file check). Name-level driver work, no data read.
     val expected = entries.map(_.file).toSet
-    val stray = Files.list(destData)
-    try stray.iterator().asScala
-      .filter(p => { val n = p.getFileName.toString
-        (KvFiles.isTemp(n) || (n.endsWith(KvFormat.SUFFIX) && !expected(n))) })
-      .foreach(Files.delete)
-    finally stray.close()
+    names(destData).filter(n => KvFiles.isTemp(n) || (n.endsWith(KvFormat.SUFFIX) && !expected(n)))
+      .foreach(n => Files.delete(destData.resolve(n)))
     // CURRENT source-file posix perms, read once on the driver
     // (O(files) metadata): the export preserves what the files carry
     // NOW — an operator's post-create chmod travels with the copy,
@@ -538,16 +547,18 @@ object KvSnapshots {
     * Safe because store files are IMMUTABLE — appends to the clone
     * create new files and never touch linked bytes, so the snapshot
     * stays verifiable afterwards (OperatorSpec pins this). The clone
-    * dir must not already hold data files: silently merging into an
-    * existing store would blur two stores' stats indexes. */
+    * dir must be absent or an empty dir: silently merging into an
+    * existing store would blur two stores' stats indexes, and replacing
+    * a non-empty dir would delete what it holds. */
   def clone(root: String, name: String, destStore: String): Unit = {
     val entries = parseManifest(root, name)
-    require(KvFormat.dataFiles(destStore).isEmpty,
-      s"clone destination $destStore already holds data files")
+    val dest = Paths.get(destStore).normalize
+    require(!Files.exists(dest) || Files.isDirectory(dest) && names(dest).isEmpty,
+      s"clone destination $destStore exists and is not an empty directory")
     val src = dataDir(root, name)
     // a half-linked failure leaves the destination as it was and the
     // retry clean, never a partial store that trips the guard above
-    KvFiles.install(Paths.get(destStore).normalize) { tmp =>
+    KvFiles.install(dest) { tmp =>
       Files.createDirectories(tmp)
       entries.foreach(e => KvFiles.share(tmp.resolve(e.file), src.resolve(e.file)))
       val srcIdx = src.resolve(KvMeta.FILE)
@@ -555,10 +566,6 @@ object KvSnapshots {
     }
   }
 
-  /** Delete the named snapshot (manifest first, so a crashed delete
-    * leaves an invisible — not half-readable — snapshot). Hard-linked
-    * shared files only drop THIS snapshot's link; the base's data is
-    * untouched. */
   /** Demote a COMMITTED snapshot to uncommitted by removing only its
     * manifest — the overwrite-export path. The data bytes stay on disk,
     * so a follow-up [[export]] treats the dir as a crashed-copy
@@ -572,11 +579,13 @@ object KvSnapshots {
     Files.delete(manifest(root, name))
   }
 
+  /** Delete the named snapshot (manifest first, so a crashed delete
+    * leaves an invisible — not half-readable — snapshot). Hard-linked
+    * shared files only drop THIS snapshot's link; the base's data is
+    * untouched. */
   def delete(root: String, name: String): Unit = {
     val d = snapDir(root, name)
     require(Files.exists(d), s"snapshot $name does not exist")
-    // manifest first (the commit mark dies before the data), then the
-    // shared hardened tree delete
     Files.deleteIfExists(manifest(root, name))
     graft.util.Scratch.deleteTree(d.toString)
   }
@@ -584,13 +593,9 @@ object KvSnapshots {
   /** Committed snapshots under the root (manifest present), sorted. */
   def list(root: String): Seq[String] = {
     val r = Paths.get(root)
-    if (!Files.isDirectory(r)) Seq.empty
-    else {
-      val s = Files.list(r)
-      try s.iterator().asScala.toSeq
-        .filter(d => Files.exists(d.resolve("MANIFEST.json")))
-        .map(_.getFileName.toString).sorted
-      finally s.close()
-    }
+    names(r).filter(n => Files.exists(r.resolve(n).resolve("MANIFEST.json")))
   }
+
+  private def names(dir: Path): Seq[String] =
+    graft.util.Scratch.children(dir.toString).map(_.getFileName.toString)
 }

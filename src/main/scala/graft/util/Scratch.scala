@@ -68,14 +68,17 @@ object Scratch {
   def fastCheckpointDir(name: String): String =
     s"$ckptRoot/$name-${ckptSeq.incrementAndGet()}"
 
-  /** The parquet part files of a written dir (no metadata/_SUCCESS). */
-  def parquetFiles(dir: String): Seq[Path] = {
+  /** The entries of `dir` sorted by path; empty if it is no directory. */
+  def children(dir: String): Seq[Path] = {
     val p = Paths.get(dir)
-    if (!Files.exists(p)) Seq.empty
+    if (!Files.isDirectory(p)) Seq.empty
     else {
       val s = Files.list(p)
-      try s.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-      finally s.close()
+      try s.iterator().asScala.toSeq.sortBy(_.toString) finally s.close()
     }
   }
+
+  /** The parquet part files of a written dir (no metadata/_SUCCESS). */
+  def parquetFiles(dir: String): Seq[Path] =
+    children(dir).filter(_.getFileName.toString.endsWith(".parquet"))
 }

@@ -68,6 +68,7 @@ class KvCrashSpec extends SparkSpec {
       n.get
     }
     assert(counts.forall(_ > 0), s"an operation took no storage step: $counts")
+    info(s"storage steps per operation: ${ops.map(_._1).zip(counts).mkString(", ")}")
 
     for (j <- ops.indices; k <- 0 until counts(j)) {
       val (op, run) = ops(j)
@@ -91,8 +92,8 @@ class KvCrashSpec extends SparkSpec {
       // every listed snapshot verifies
       Seq(r.src, r.dst).zip(committedBefore).foreach { case (root, before) =>
         val published = passed.asScala.collect {
-          case s if s.startsWith(s"publish $root/") && s.endsWith("/MANIFEST.json") =>
-            Paths.get(s.stripPrefix("publish ")).getParent.getFileName.toString
+          case s if s.startsWith(s"commit $root/") && s.endsWith("/MANIFEST.json") =>
+            Paths.get(s.stripPrefix("commit ")).getParent.getFileName.toString
         }
         assert(KvSnapshots.list(root).toSet == before.toSet ++ published, what)
         KvSnapshots.list(root).foreach(KvSnapshots.verify(spark, root, _))
@@ -108,5 +109,30 @@ class KvCrashSpec extends SparkSpec {
       assert(temps.isEmpty, s"$what: the re-run left $temps")
     }
     graft.util.Scratch.deleteTree(base.toString)
+  }
+
+  test("a process crash between install's two moves is undone by the next compact or clone") {
+    val r = Roots(Files.createTempDirectory("kv_crash_aside"))
+    KvSnapshots.create(version("v1"), r.src, "base")
+    KvSnapshots.clone(r.src, "base", r.store)
+    val expected = cells(r.store)
+    // the state a kill between the moves leaves: live moved to its
+    // install sibling, nothing at the live path
+    def crashAside(live: String): Unit = {
+      val p = Paths.get(live)
+      Files.move(p, p.resolveSibling(s".tmp-${p.getFileName}.old"))
+    }
+    crashAside(r.store)
+    KvCompaction.compact(spark, r.store, targetFiles = 1)
+    assert(cells(r.store) == expected, "compaction must restore the store, then compact it")
+    // a clone whose pre-created empty destination was moved aside
+    val dest = r.dir.resolve("clone")
+    Files.createDirectories(dest)
+    crashAside(dest.toString)
+    KvSnapshots.clone(r.src, "base", dest.toString)
+    assert(cells(dest.toString) == expected)
+    val temps = walk(r.dir).filter(p => KvFiles.isTemp(p.getFileName.toString))
+    assert(temps.isEmpty, s"recovery left $temps")
+    graft.util.Scratch.deleteTree(r.dir.toString)
   }
 }

@@ -631,6 +631,27 @@ class KvSnapshotsSpec extends SparkSpec {
       "--dest", freshRoot(), "--bandwidth", "-3")) == 2)
   }
 
+  test("clone and create refuse a destination they would have to wipe") {
+    val root = freshRoot()
+    KvSnapshots.create(cells, root, "base")
+    // clone into a non-empty dir without data files: refused, file kept
+    val dir = Files.createTempDirectory("kv_clone_spec")
+    val keep = Files.writeString(dir.resolve("notes.txt"), "keep me")
+    intercept[IllegalArgumentException] { KvSnapshots.clone(root, "base", dir.toString) }
+    assert(Files.readString(keep) == "keep me")
+    // create over a manifest-less dir a create did not leave: refused
+    val foreign = Files.writeString(
+      Files.createDirectories(Paths.get(root, "other")).resolve("notes.txt"), "keep me")
+    intercept[IllegalArgumentException] { KvSnapshots.create(cells, root, "other") }
+    assert(Files.readString(foreign) == "keep me")
+    // nor an export's resumable partial copy (data but no create mark)
+    val partial = Paths.get(root, "partial", "data", "part-0.kv")
+    Files.createDirectories(partial.getParent)
+    Files.writeString(partial, "1\tq\tv\n")
+    intercept[IllegalArgumentException] { KvSnapshots.create(cells, root, "partial") }
+    assert(Files.exists(partial))
+  }
+
   test("delete removes the snapshot; deleting a missing name fails loudly") {
     val root = freshRoot()
     KvSnapshots.create(cells, root, "s1")
