@@ -17,6 +17,9 @@ import graft.util.Scratch
   */
 object Sources {
 
+  /** A fresh scratch dir, a snapshot root or a kv store, with whatever a
+    * prior in-process run left there (a store's files and index
+    * included) deleted: the one place the re-run hygiene rule lives. */
   private def snapshotRoot(sfDir: String, name: String): String = {
     val root = Scratch.forSf(sfDir, name)
     // full-tree wipe (not list()-based): also removes UNCOMMITTED
@@ -25,18 +28,10 @@ object Sources {
     root
   }
 
-  /** A scratch store path with stale .kv files from a prior in-process
-    * run cleared — the ONE place the re-run hygiene rule lives. */
-  private def freshStorePath(sfDir: String, name: String): String = {
-    val dest = Scratch.forSf(sfDir, name)
-    graft.sources.KvFormat.dataFiles(dest).foreach(java.nio.file.Files.delete)
-    dest
-  }
-
   /** Shared prelude of the graft-kv keys: a fresh per-process store of
     * the model cells, written through the connector and read back. */
   private def freshKvStore(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val dest = freshStorePath(sfDir, name)
+    val dest = snapshotRoot(sfDir, name)
     Scans.scanKvModel(spark, sfDir)
       .write.format("graft-kv").option("path", dest).mode("append").save()
     spark.read.format("graft-kv").load(dest)
@@ -159,9 +154,9 @@ object Sources {
     "SELECT doc_id, text FROM documents ORDER BY doc_id"
 
   /** DataSourceV2 connector roundtrip (SURVEY.md §2.A R2): supplier
-    * cells written through the custom `graft-kv` v2 writer (two-phase
-    * task commit), read back via the v2 scan with a pushed
-    * qualifier/rowkey predicate and a pruned (rowkey, value) schema —
+    * cells written through the custom `graft-kv` v2 writer (files
+    * visible only once job commit indexes them), read back via the v2
+    * scan with a pushed qualifier/rowkey predicate and a pruned (rowkey, value) schema —
     * PlanSpec asserts both actually reach the scan. Oracle reads the
     * same cells straight from the parquet source. */
   def sourceKvConnector(spark: SparkSession, sfDir: String): DataFrame = {
@@ -206,7 +201,7 @@ object Sources {
     * the VALUES (bloom pruning must never lose a present key);
     * KvConnectorSpec proves the skipping itself via reader counters. */
   def kvBloomLookup(spark: SparkSession, sfDir: String): DataFrame = {
-    val store = freshStorePath(sfDir, "supplier_kv_bloom")
+    val store = snapshotRoot(sfDir, "supplier_kv_bloom")
     val cells = Scans.scanKvModel(spark, sfDir)
     (0 until 3).foreach { i =>
       cells.filter(col("rowkey") % 3 === i).coalesce(1)
@@ -372,7 +367,7 @@ object Sources {
     * cells arrive as a file stream in ≥2 micro-batches, each batch
     * lands in the graft-kv store via foreachBatch (every batch is its
     * own committed set of .kv files + stats-index entries — the
-    * connector's two-phase task commit makes each micro-batch atomic),
+    * connector's one index commit per job makes each micro-batch atomic),
     * a named snapshot is cut from the live store, and the verifying
     * restore is returned. The oracle checks the full loop is lossless:
     * restored == the cells that were streamed in. At scale this is
@@ -422,7 +417,7 @@ object Sources {
     cells.filter(col("rowkey") % 2 === 0).coalesce(1).write.mode("append").parquet(stage)
     cells.filter(col("rowkey") % 2 === 1).coalesce(1).write.mode("append").parquet(stage)
     runIngestStream(spark, stage, store)
-    require(graft.sources.KvFormat.dataFiles(store).size >= 2,
+    require(graft.sources.KvMeta.read(store).size >= 2,
       "ingestion did not commit at least one file set per micro-batch")
     snapshotRestore(spark, store, snapRoot, "ingested")
   }
@@ -453,13 +448,13 @@ object Sources {
     cells.filter(col("rowkey") % 2 === 0).coalesce(1).write.mode("append").parquet(stage)
     // first incarnation ingests the first staged file, then "crashes"
     runIngestStream(spark, stage, store, Some(ckpt))
-    val filesAfterCrash = graft.sources.KvFormat.dataFiles(store).size
+    val filesAfterCrash = graft.sources.KvMeta.read(store).size
     require(filesAfterCrash >= 1, "first run committed no file set")
     // the second half arrives while the job is DOWN
     cells.filter(col("rowkey") % 2 === 1).coalesce(1).write.mode("append").parquet(stage)
     // restart from the checkpoint: must ingest ONLY the new file
     runIngestStream(spark, stage, store, Some(ckpt))
-    require(graft.sources.KvFormat.dataFiles(store).size > filesAfterCrash,
+    require(graft.sources.KvMeta.read(store).size > filesAfterCrash,
       "restarted run committed nothing — the new file was not ingested")
     snapshotRestore(spark, store, snapRoot, "resumed")
   }
@@ -483,7 +478,7 @@ object Sources {
     * model cells arrive as SIX separate append jobs (≥6 file sets with
     * overlapping rowkey ranges — the worst pruning case), compaction
     * rewrites them into ≤2 rowkey-range-partitioned sorted files via
-    * one distributed pass + directory swap, and the key returns the
+    * one distributed pass + one index commit, and the key returns the
     * post-compaction store. The oracle checks the rewrite is lossless;
     * the file-count and range-disjointness invariants are asserted
     * in-line (and pinned with the reader counters in KvConnectorSpec).
@@ -497,7 +492,7 @@ object Sources {
       cells.filter(col("rowkey") % 6 === i).coalesce(1)
         .write.format("graft-kv").option("path", store).mode("append").save()
     }
-    val before = graft.sources.KvFormat.dataFiles(store).size
+    val before = graft.sources.KvMeta.read(store).size
     require(before >= 6, s"store should hold >= 6 files pre-compaction, has $before")
     val stats = graft.sources.KvCompaction.compact(spark, store, targetFiles = 2)
     require(stats.filesAfter <= 2 && stats.filesAfter < stats.filesBefore,
@@ -523,7 +518,7 @@ object Sources {
     * ([[graft.sources.KvScrub]]: one md5 task per file against the
     * commit-time index digests) must report EXACTLY that file as a
     * checksum finding. Repair is surgical, never a full restore: the
-    * damaged file is dropped (its index entry pruned), and the lost
+    * damaged file is dropped by one index commit, and the lost
     * cells — identified by a cell-identity anti-join of the snapshot
     * against the surviving store, so overlapping file ranges can
     * never double-ingest — are appended back as a new committed file
@@ -543,8 +538,8 @@ object Sources {
     graft.sources.KvSnapshots.create(cells, root, "backup")
     require(graft.sources.KvScrub.scrub(spark, store).isEmpty,
       "clean store must scrub clean")
-    val victim = graft.sources.KvFormat.dataFiles(store).head
-    val ch = java.nio.channels.FileChannel.open(victim,
+    val victim = graft.sources.KvMeta.files(store).head.file
+    val ch = java.nio.channels.FileChannel.open(java.nio.file.Paths.get(store, victim),
       java.nio.file.StandardOpenOption.READ, java.nio.file.StandardOpenOption.WRITE)
     try {
       val pos = ch.size() / 2
@@ -555,10 +550,9 @@ object Sources {
     } finally ch.close()
     val findings = graft.sources.KvScrub.scrub(spark, store)
     require(findings.map(f => (f.file, f.kind)) ==
-        Seq((victim.getFileName.toString, "checksum")),
+        Seq((victim, "checksum")),
       s"scrub must flag exactly the corrupted file, got $findings")
-    java.nio.file.Files.delete(victim)
-    graft.sources.KvMeta.append(store, Nil) // prunes the deleted file's entry
+    graft.sources.KvMeta.commit(store, Nil, drop = Set(victim))
     val surviving = spark.read.format("graft-kv").load(store)
     val lost = graft.sources.KvSnapshots.restore(spark, root, "backup")
       .join(surviving, Seq("rowkey", "qualifier"), "left_anti")
@@ -704,7 +698,7 @@ object Sources {
 
   def kvVersionedRead(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val store = freshStorePath(sfDir, "lineitem_kv_versions")
+    val store = snapshotRoot(sfDir, "lineitem_kv_versions")
     versionedLineitemCells(spark, sfDir)
       .write.format("graft-kv").option("path", store).mode("append").save()
     val w = Window.partitionBy("rowkey").orderBy(col("version").desc)
@@ -890,15 +884,15 @@ object Sources {
     * heavy half is a normal distributed write (`repartitionByRange` on
     * rowkey = region alignment, sorted within each file, write-time
     * stats) into a STAGING dir; the load itself is
-    * [[graft.sources.KvCompaction.bulkLoad]] — a rename per staged file
-    * plus one index merge, O(files) metadata regardless of data volume,
+    * [[graft.sources.KvCompaction.bulkLoad]] — a link per staged file
+    * plus one index commit, O(files) metadata regardless of data volume,
     * never a write-path rewrite. The live store already holds the
     * `acctbal` column written through the normal path; the bulk half
     * delivers `name` + `nationkey`, so the graded read also proves
     * loaded and written files serve ONE coherent table. Region
     * alignment (pairwise rowkey-disjoint staged files) is enforced by
     * the loader, and OperatorSpec pins the mechanism: the load adds
-    * exactly the staged files to the store dir and the adopted stats
+    * exactly the staged files to the store dir and their stats
     * entries keep min/max pruning working. */
   def kvBulkLoad(spark: SparkSession, sfDir: String): DataFrame = {
     val store = snapshotRoot(sfDir, "supplier_kv_bulk")
@@ -912,7 +906,7 @@ object Sources {
       .write.format("graft-kv").option("path", staging).mode("append").save()
     val stats = graft.sources.KvCompaction.bulkLoad(staging, store)
     require(stats.filesLoaded >= 2,
-      s"bulk load adopted too few files to prove region alignment: $stats")
+      s"bulk load loaded too few files to prove region alignment: $stats")
     spark.read.format("graft-kv").load(store).orderBy("rowkey", "qualifier")
   }
 
@@ -938,7 +932,7 @@ object Sources {
     * maintained as just another store (same writer, same snapshots). */
   def kvSecondaryIndex(spark: SparkSession, sfDir: String): DataFrame = {
     val base = freshKvStore(spark, sfDir, "supplier_kv_sidx_base")
-    val idxStore = freshStorePath(sfDir, "supplier_kv_sidx_idx")
+    val idxStore = snapshotRoot(sfDir, "supplier_kv_sidx_idx")
     supplier(spark, sfDir)
       .select(col("s_nationkey").cast("long").as("rowkey"),
         lpad(col("s_suppkey").cast("string"), 10, "0").as("qualifier"),
@@ -1017,8 +1011,8 @@ object Sources {
     // index (SupportsPushDownAggregates), no data read
     val Array(row) = parent.agg(min(col("rowkey")), max(col("rowkey"))).collect()
     val splitAt = (row.getLong(0) + row.getLong(1)) / 2
-    val (childA, childB) = (freshStorePath(sfDir, "supplier_kv_split_a"),
-      freshStorePath(sfDir, "supplier_kv_split_b"))
+    val (childA, childB) = (snapshotRoot(sfDir, "supplier_kv_split_a"),
+      snapshotRoot(sfDir, "supplier_kv_split_b"))
     parent.filter(col("rowkey") <= splitAt)
       .repartitionByRange(2, col("rowkey"), col("qualifier"))
       .sortWithinPartitions("rowkey", "qualifier")
@@ -1039,18 +1033,19 @@ object Sources {
     * [[kvSplit]]): two adjacent child regions physically merge back into
     * one store via [[graft.sources.KvCompaction.mergeRegions]] — a pure
     * METADATA operation (adjacency proven from the stats index, files
-    * adopted by rename, parents retired after the merged index commits;
+    * linked in and made visible by one index commit, parents retired
+    * after it;
     * zero data bytes read or rewritten no matter the region size, which
     * is why HBase merges are cheap even on TB regions). The graded read
-    * is the MERGED store, so adoption must be lossless: the oracle is
+    * is the MERGED store, so the merge must be lossless: the oracle is
     * the split∘merge identity, same as `kv_split` — but here the merge
     * is a physical store operation, not a two-dir unioned read. */
   def kvRegionMerge(spark: SparkSession, sfDir: String): DataFrame = {
     val parent = freshKvStore(spark, sfDir, "supplier_kv_rmerge_parent")
     val Array(row) = parent.agg(min(col("rowkey")), max(col("rowkey"))).collect()
     val splitAt = (row.getLong(0) + row.getLong(1)) / 2
-    val (childA, childB) = (freshStorePath(sfDir, "supplier_kv_rmerge_a"),
-      freshStorePath(sfDir, "supplier_kv_rmerge_b"))
+    val (childA, childB) = (snapshotRoot(sfDir, "supplier_kv_rmerge_a"),
+      snapshotRoot(sfDir, "supplier_kv_rmerge_b"))
     parent.filter(col("rowkey") <= splitAt)
       .repartitionByRange(2, col("rowkey"), col("qualifier"))
       .sortWithinPartitions("rowkey", "qualifier")
@@ -1225,7 +1220,7 @@ object Sources {
           .partitionBy("rowkey", "qualifier").orderBy(col("seq").desc)))
       .filter(col("rn") === 1 && col("op") === "put")
       .select("rowkey", "qualifier", "value")
-    val store = freshStorePath(sfDir, "kv_wal_store")
+    val store = snapshotRoot(sfDir, "kv_wal_store")
     replayed.write.format("graft-kv").option("path", store).mode("append").save()
     spark.read.format("graft-kv").load(store).orderBy("rowkey", "qualifier")
   }
@@ -1273,7 +1268,7 @@ object Sources {
       .withColumn("rn", row_number().over(coordW))
       .filter(col("rn") === 1 && col("op") === "put")
       .select("rowkey", "qualifier", "value")
-    val baseStore = freshStorePath(sfDir, "kv_pitr_base")
+    val baseStore = snapshotRoot(sfDir, "kv_pitr_base")
     atS.write.format("graft-kv").option("path", baseStore).mode("append").save()
     val root = snapshotRoot(sfDir, "kv_pitr_snap")
     graft.sources.KvSnapshots.create(
@@ -1286,7 +1281,7 @@ object Sources {
       .withColumn("rn", row_number().over(coordW))
       .filter(col("rn") === 1 && col("op") === "put")
       .select("rowkey", "qualifier", "value")
-    val finalStore = freshStorePath(sfDir, "kv_pitr_store")
+    val finalStore = snapshotRoot(sfDir, "kv_pitr_store")
     winners.write.format("graft-kv").option("path", finalStore).mode("append").save()
     spark.read.format("graft-kv").load(finalStore).orderBy("rowkey", "qualifier")
   }
@@ -1318,7 +1313,7 @@ object Sources {
       expr("CAST(CAST(value AS DECIMAL(18,2)) AS STRING)").as("value"))
     val replRoot = snapshotRoot(sfDir, "kv_repl_root")
     graft.sources.KvReplication.ship(spark, wal, replRoot, batches = 4)
-    val store = freshStorePath(sfDir, "kv_repl_store")
+    val store = snapshotRoot(sfDir, "kv_repl_store")
     graft.sources.KvReplication.applyShipped(spark, replRoot, store)
     spark.read.format("graft-kv").load(store).orderBy("rowkey", "qualifier")
   }

@@ -8,9 +8,10 @@ import graft.sources.Tables._
 /** Time-series operators over the events table (SURVEY.md §2.B
   * "Time-series / streaming semantics").
   *
-  * These are the batch-equivalent forms; `graft.streaming.StreamingDemo`
-  * runs the tumbling/session/dedup shapes as a real Structured Streaming
-  * job with watermarks, proving the batch/streaming equivalence. At
+  * These are the batch-equivalent forms; the `ts_*_stream` keys run
+  * the tumbling/session/dedup shapes as real Structured Streaming jobs
+  * with watermarks against the same oracles, proving the
+  * batch/streaming equivalence. At
   * 100 TB each of these is one shuffle (by window bucket or user_id);
   * sliding windows multiply rows by windows-per-slide (4× here) before
   * the shuffle, exactly like Spark's streaming window operator.

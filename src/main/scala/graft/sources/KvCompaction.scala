@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -16,27 +16,27 @@ import org.apache.spark.sql.functions._
   *
   * Shape: one distributed pass —
   *   read store → `repartitionByRange(target, rowkey, qualifier)` →
-  *   `sortWithinPartitions` → graft-kv write (two-phase task commit,
-  *   write-time stats) — into a scratch dir, then a directory swap
-  *   ([[KvFiles.install]]). Range partitioning makes the output files
+  *   `sortWithinPartitions` → graft-kv write (write-time stats) —
+  *   into a staging dir, then one index commit ([[replaceStaged]]).
+  *   Range partitioning makes the output files
   *   NON-OVERLAPPING in rowkey order, so post-compaction the stats
   *   index prunes range scans to the single covering file (the HBase
   *   region/HFile layout, recovered). Sorting costs one shuffle — the
   *   price of re-establishing scan order, same as HBase's merge-sort
   *   compaction.
   *
-  * Crash safety: the rewrite lands in the sibling `.tmp-<store>.new`
-  * under the connector's own two-phase commit; the live dir is only
-  * touched by [[KvFiles.install]]'s final swap through the sibling
-  * `.tmp-<store>.old`, which never leaves the live path empty; a
-  * process crash between its two moves is undone by the next compact
-  * ([[KvFiles.recover]]). At cluster scale the swap becomes a manifest
-  * pointer flip (HBase's file-tracker move) — the rewrite job is
-  * identical.
+  * Crash safety: the rewrite lands in the sibling `.tmp-<store>.new`;
+  * its files are linked into the live dir, where they stay invisible,
+  * and one publish of the store's `.file_meta.tsv` swaps the new file
+  * set in and the old one out — HBase's file-tracker move, and the only
+  * atomic step an object store offers. A kill at any point leaves
+  * readers on the old file set or the new one; its unindexed leftovers
+  * are swept by the next major compaction.
   *
   * NOT concurrency-safe vs writers: like HBase, compaction assumes it
-  * owns the store for the swap instant (readers mid-scan hold open file
-  * handles and finish on the old bytes under POSIX rename semantics).
+  * owns the store for the commit instant (readers mid-scan hold open
+  * file handles and finish on the old bytes under POSIX unlink
+  * semantics).
   */
 object KvCompaction {
 
@@ -94,21 +94,14 @@ object KvCompaction {
     retainVersions.foreach(k =>
       require(k >= 1, s"retainVersions must be >= 1, got $k"))
     // normalize: a trailing slash OR "/." segment would make the
-    // install's temp sibling a CHILD of the live store and the final
-    // swap a move-into-self
+    // staging sibling a CHILD of the live store
     val live = Paths.get(storeRaw).normalize
     val store = live.toString
-    KvFiles.recover(live) // a crash between install's moves left live aside
-    val before = KvFormat.dataFiles(store)
+    val before = KvMeta.files(store)
     require(before.nonEmpty, s"graft-kv compact: no data files under $store")
-    // lossless-rewrite guard: cell count from the stats index when it
-    // covers every file (O(files) metadata), else one counting scan
-    // (e.g. hand-written fixture files without committed stats)
-    val meta = KvMeta.read(store)
-    val names = before.map(_.getFileName.toString)
-    val cellsBefore =
-      if (names.forall(meta.contains)) names.map(meta(_).cells).sum
-      else spark.read.format("graft-kv").load(store).count()
+    // lossless-rewrite guard: cell count from the stats index (O(files)
+    // metadata)
+    val cellsBefore = before.map(_.cells).sum
 
     val raw = spark.read.format("graft-kv").load(store)
     val unmasked =
@@ -161,20 +154,47 @@ object KvCompaction {
       if (retainVersions.isEmpty && !purgeTombstones && keepIf.isEmpty) cellsBefore
       else survivorsM.count()
 
-    // a fired guard fails the fill, so install reclaims the store-sized
-    // scratch tree and never touches the live dir
-    val cellsAfter = KvFiles.install(live) { tmp =>
+    // a fired guard leaves the live dir untouched; the store-sized
+    // staging tree is deleted either way
+    val after = replaceStaged(live, drop = None) { staging =>
       survivorsM
         .repartitionByRange(targetFiles, col("rowkey"), col("qualifier"))
         .sortWithinPartitions("rowkey", "qualifier")
-        .write.format("graft-kv").option("path", tmp.toString).mode("append").save()
-      val n = KvMeta.read(tmp.toString).values.map(_.cells).sum
+        .write.format("graft-kv").option("path", staging).mode("append").save()
+    } { staged =>
+      val n = staged.map(_.cells).sum
       if (n != expected) throw new IllegalArgumentException(
         s"compaction lost cells: $expected expected, $n after")
-      n
     }
-    CompactStats(before.size, KvFormat.dataFiles(store).size, cellsAfter,
+    CompactStats(before.size, after.size, after.map(_.cells).sum,
       dropped = cellsBefore - expected)
+  }
+
+  /** The one staged-replace path (major and minor compaction,
+    * replication apply), five steps: `fill` writes the new files through
+    * the connector into the fixed sibling `.tmp-<store>.new`; `check`
+    * sees that staging dir's index before anything reaches the store;
+    * the staged files are linked into `live`, where they stay invisible;
+    * one [[KvMeta.commit]] adds them and drops `drop`; the staging dir is
+    * deleted, also after an in-process failure (a killed process leaves
+    * it to the next run's start). `drop = None` drops every other `.kv`
+    * in the dir — the sweep of unindexed leftovers, for callers that own
+    * the whole store. Returns the added entries. */
+  private[sources] def replaceStaged(live: Path, drop: Option[Set[String]])(
+      fill: String => Unit)(check: Seq[KvFileMeta] => Unit): Seq[KvFileMeta] = {
+    val staging = KvFiles.staging(live)
+    graft.util.Scratch.deleteTree(staging.toString)
+    try {
+      fill(staging.toString)
+      val added = KvMeta.files(staging.toString)
+      check(added)
+      Files.createDirectories(live)
+      added.foreach(m => KvFiles.share(live.resolve(m.file), staging.resolve(m.file)))
+      val names = added.map(_.file).toSet
+      KvMeta.commit(live.toString, added, drop.getOrElse(
+        KvFormat.dataFiles(live.toString).map(_.getFileName.toString).toSet -- names))
+      added
+    } finally graft.util.Scratch.deleteTree(staging.toString)
   }
 
   /** MINOR COMPACTION — HBase's other compaction kind: merge only the
@@ -189,180 +209,149 @@ object KvCompaction {
     * flush tail (a day of micro-batch commits), and a minor pass pays
     * IO proportional to the SMALL files only, not a full-store rewrite.
     *
-    * Shape: victims = smallest files by the stats index's byte counts
-    * (file size fallback for index-less fixtures); ONLY those files are
-    * read (plain TSV lines — the writer guarantees tab/newline-free
-    * fields), merged through one range-partitioned sort, and written
-    * back into the live dir under the connector's own two-phase task
-    * commit; then the victims are deleted and their index entries
-    * pruned. A lossless guard (merged cells == victim cells) runs
-    * BEFORE any victim is deleted — on mismatch the merged file is
-    * removed and the store is exactly as before. Crash window: after
-    * the merged file commits but before the last victim unlink, a
-    * reader sees duplicate cells (HBase closes this with an atomic
-    * file-tracker swap; the single-dir layout documents it instead).
-    * Not concurrency-safe vs writers, same as [[compact]]. */
+    * Shape: victims = smallest files by the stats index's byte counts;
+    * ONLY those files are read (plain TSV lines — the writer guarantees
+    * tab/newline-free fields), merged through one range-partitioned
+    * sort, and written to staging; one index commit then swaps the
+    * merged file in and the victims out ([[replaceStaged]]), so a reader
+    * never sees a victim's cells twice. A lossless guard (merged cells
+    * == victim cells) runs on the staged file, before the store is
+    * touched. Not concurrency-safe vs writers, same as [[compact]]. */
   def minorCompact(spark: SparkSession, storeRaw: String,
       mergeSmallest: Int): CompactStats = {
-    val store = Paths.get(storeRaw).normalize.toString
-    val before = KvFormat.dataFiles(store)
+    val live = Paths.get(storeRaw).normalize
+    val store = live.toString
+    val before = KvMeta.files(store)
     require(mergeSmallest >= 2, s"mergeSmallest must be >= 2, got $mergeSmallest")
     require(before.size >= mergeSmallest,
       s"graft-kv minor compact: ${before.size} files < $mergeSmallest under $store")
-    val meta = KvMeta.read(store)
-    val victims = before
-      .map(p => p -> meta.get(p.getFileName.toString).map(_.bytes)
-        .getOrElse(Files.size(p)))
-      .sortBy { case (p, sz) => (sz, p.toString) }
-      .take(mergeSmallest).map(_._1)
-    val victimNames = victims.map(_.getFileName.toString).toSet
-    val cellsBefore =
-      if (victimNames.forall(meta.contains)) victimNames.toSeq.map(meta(_).cells).sum
-      else {
-        import spark.implicits._
-        spark.read.textFile(victims.map(_.toString): _*).count()
-      }
+    val victims = before.sortBy(m => (m.bytes, m.file)).take(mergeSmallest)
+    val cellsBefore = victims.map(_.cells).sum
 
     import spark.implicits._
-    spark.read.textFile(victims.map(_.toString): _*)
-      .map { l =>
-        val a = l.split(KvFormat.SEP, 3)
-        require(a.length == 3, s"graft-kv minor compact: malformed cell line '$l'")
-        (a(0).toLong, a(1), a(2))
-      }
-      .toDF("rowkey", "qualifier", "value")
-      .repartitionByRange(1, col("rowkey"), col("qualifier"))
-      .sortWithinPartitions("rowkey", "qualifier")
-      .write.format("graft-kv").option("path", store).mode("append").save()
-
-    val merged = KvFormat.dataFiles(store)
-      .filterNot(f => before.contains(f))
-    val postMeta = KvMeta.read(store)
-    val mergedCells = merged.flatMap(f => postMeta.get(f.getFileName.toString))
-      .map(_.cells).sum
-    if (mergedCells != cellsBefore) {
-      merged.foreach(Files.deleteIfExists(_))
-      KvMeta.append(store, Seq.empty) // prune the dead entries
-      throw new IllegalArgumentException(
-        s"minor compaction lost cells: $cellsBefore expected, $mergedCells merged")
+    val merged = replaceStaged(live, drop = Some(victims.map(_.file).toSet)) { staging =>
+      spark.read.textFile(victims.map(m => live.resolve(m.file).toString): _*)
+        .map { l =>
+          val a = l.split(KvFormat.SEP, 3)
+          require(a.length == 3, s"graft-kv minor compact: malformed cell line '$l'")
+          (a(0).toLong, a(1), a(2))
+        }
+        .toDF("rowkey", "qualifier", "value")
+        .repartitionByRange(1, col("rowkey"), col("qualifier"))
+        .sortWithinPartitions("rowkey", "qualifier")
+        .write.format("graft-kv").option("path", staging).mode("append").save()
+    } { staged =>
+      val n = staged.map(_.cells).sum
+      if (n != cellsBefore) throw new IllegalArgumentException(
+        s"minor compaction lost cells: $cellsBefore expected, $n merged")
     }
-    victims.foreach(Files.delete(_))
-    KvMeta.append(store, Seq.empty) // prune the victims' index entries
-    // postMeta still counts the victims (deleted just above) alongside
-    // the merged file, so the live total is its sum minus the victims
-    CompactStats(before.size, KvFormat.dataFiles(store).size,
-      postMeta.values.map(_.cells).sum - cellsBefore)
+    CompactStats(before.size, before.size - victims.size + merged.size,
+      before.map(_.cells).sum)
   }
 
-  /** Result of one bulk load: staged files adopted and cells carried. */
+  /** Result of one bulk load: staged files brought in and cells carried. */
   final case class BulkLoadStats(filesLoaded: Int, cells: Long)
 
-  /** BULK LOAD (HBase completebulkload): adopt pre-sorted, REGION-ALIGNED
-    * staged files into a live store by FILE MOVE — the ingest path that
+  /** BULK LOAD (HBase completebulkload): bring pre-sorted, REGION-ALIGNED
+    * staged files into a live store by LINK — the ingest path that
     * bypasses the write path entirely. The staging job (a Spark write
     * elsewhere: `repartitionByRange(n, rowkey)` + `sortWithinPartitions`
     * through the graft-kv writer) already produced exactly what a store
     * file must be — sorted, stats-indexed, rowkey-disjoint — so loading
     * is O(files) metadata work regardless of data volume: at 100 TB the
-    * cluster writes the files once and the "load" is a rename per file
-    * plus one index merge, the whole reason HBase bulk ingest exists.
+    * cluster writes the files once and the "load" is a link per file
+    * plus one index commit, the whole reason HBase bulk ingest exists.
     *
-    * Preconditions enforced (load refuses, store untouched):
-    * every staged file has a committed stats entry (the load trusts the
-    * index for cell counts — an index-less file would load blind), and
-    * staged files are PAIRWISE DISJOINT in rowkey (region alignment; the
-    * range partitioner guarantees it, a hand-built staging dir may not).
+    * Precondition enforced (load refuses, store untouched): staged files
+    * are PAIRWISE DISJOINT in rowkey (region alignment; the range
+    * partitioner guarantees it, a hand-built staging dir may not).
     *
-    * Crash window: some files adopted, index not yet merged — reads are
-    * directory-listing-based so every adopted cell is already visible
-    * and correct; the affected files merely lack stats (pruning and
-    * stats pushdown degrade, correctness does not) until a re-run or
-    * the next compaction rebuilds their entries. Adopted names carry a
-    * fresh tag so a staged name can never collide with a live file. */
+    * Crash safety ([[bringIn]]): the staged files leave staging only
+    * after the store's index commit names them, so a kill never loses a
+    * cell, and a re-run after a kill between the two commits finds its
+    * files already committed and loads nothing twice. */
   def bulkLoad(stagingRaw: String, storeRaw: String): BulkLoadStats = {
     val staging = Paths.get(stagingRaw).normalize.toString
     val store = Paths.get(storeRaw).normalize.toString
     require(staging != store, s"bulk load: staging dir IS the store: $store")
-    val files = KvFormat.dataFiles(staging)
-    require(files.nonEmpty, s"bulk load: no staged data files under $staging")
-    val meta = KvMeta.read(staging)
-    val names = files.map(_.getFileName.toString)
-    require(names.forall(meta.contains),
-      s"bulk load: staged file without a committed stats entry under $staging")
-    val byRange = names.map(meta(_)).sortBy(m => (m.minKey, m.maxKey))
+    val staged = KvMeta.files(staging)
+    require(staged.nonEmpty, s"bulk load: no staged data files under $staging")
+    val byRange = staged.sortBy(m => (m.minKey, m.maxKey))
     byRange.sliding(2).foreach {
       case Seq(a, b) => require(a.maxKey < b.minKey,
         s"bulk load: staged files overlap in rowkey: ${a.file}[${a.minKey},${a.maxKey}] vs ${b.file}[${b.minKey},${b.maxKey}]")
       case _ => ()
     }
-    val adopted = byRange.zip(
-      KvFiles.adopt(byRange.map(m => Paths.get(staging, m.file)), Paths.get(store), "bulk"))
-      .map { case (m, n) => m.copy(file = n) }
-    KvMeta.append(store, adopted)
-    BulkLoadStats(adopted.size, adopted.map(_.cells).sum)
+    val loaded = bringIn(byRange.map(staging -> _), store, "bulk")
+    KvMeta.commit(staging, Nil, staged.map(_.file).toSet)
+    BulkLoadStats(loaded.size, loaded.map(_.cells).sum)
   }
 
-  /** Result of one region merge: files adopted from each parent and the
-    * cell total carried through (all counts from the stats index — the
-    * merge itself reads zero data bytes). */
+  /** Name of a brought-in file: a function of its source entry, so a
+    * re-run recognizes a file an earlier run already committed. */
+  private def inName(prefix: String, m: KvFileMeta): String = s"$prefix-${m.md5}-${m.file}"
+
+  /** Link each (source dir, entry) into `store` under [[inName]] — still
+    * invisible there — and add them all in one [[KvMeta.commit]]. A name
+    * the store already indexes is not linked again. The caller deletes
+    * the sources only after this returns. Returns the committed entries. */
+  private def bringIn(sources: Seq[(String, KvFileMeta)], store: String,
+      prefix: String): Seq[KvFileMeta] = {
+    val committed = KvMeta.read(store)
+    Files.createDirectories(Paths.get(store))
+    val in = sources.map { case (dir, m) =>
+      val n = inName(prefix, m)
+      if (!committed.contains(n)) KvFiles.share(Paths.get(store, n), Paths.get(dir, m.file))
+      m.copy(file = n)
+    }
+    KvMeta.commit(store, in)
+    in
+  }
+
+  /** Result of one region merge: files brought in from each parent and
+    * the cell total carried through (all counts from the stats index —
+    * the merge itself reads zero data bytes). */
   final case class MergeStats(filesA: Int, filesB: Int, cells: Long)
 
   /** REGION MERGE — the inverse of a region split, done the way HBase's
     * `merge_region` does it: a pure METADATA operation. Two ADJACENT
     * regions (every rowkey in A strictly below every rowkey in B,
-    * proven from the stats index alone) merge by ADOPTING both parents'
-    * data files into one store dir via rename — O(files) driver
-    * metadata, zero data bytes read or rewritten, regardless of region
-    * size. Files WITHIN a parent may overlap each other in rowkey
-    * (normal multi-flush state; the next major compaction re-sorts) —
-    * only the region-level ranges must be disjoint, exactly HBase's
-    * adjacency precondition.
+    * proven from the stats index alone) merge by LINKING both parents'
+    * data files into one store dir — O(files) driver metadata, zero
+    * data bytes read or rewritten, regardless of region size. Files
+    * WITHIN a parent may overlap each other in rowkey (normal
+    * multi-flush state; the next major compaction re-sorts) — only the
+    * region-level ranges must be disjoint, exactly HBase's adjacency
+    * precondition.
     *
     * Refusal (both parents and the dest untouched): a parent with no
-    * data files, a data file without a committed stats entry (adjacency
-    * would be unprovable without reading data), overlapping region
-    * ranges, or a dest that already holds data files.
+    * data files, overlapping region ranges, or a dest whose index names
+    * files other than this merge's.
     *
-    * Crash window: some files adopted, parents not yet retired — reads
-    * of the merged dir are directory-listing-based so adopted cells are
-    * visible and correct; a re-run refuses (dest non-empty) and the
-    * un-moved remainder stays readable in its parent, so no cell is
-    * ever unreachable. Parents are retired (deleted) only after the
-    * merged index commits — HBase's catalog-janitor step. */
+    * Crash safety ([[bringIn]]): parents are retired (deleted) only
+    * after the merged index commits — HBase's catalog-janitor step — so
+    * a kill before it leaves every cell in its parent and only unindexed
+    * links in the dest, and a re-run after it finds the dest already
+    * committed and just retires the parents. */
   def mergeRegions(aRaw: String, bRaw: String, mergedRaw: String): MergeStats = {
     val a = Paths.get(aRaw).normalize.toString
     val b = Paths.get(bRaw).normalize.toString
     val merged = Paths.get(mergedRaw).normalize.toString
     require(a != b && a != merged && b != merged,
       s"region merge: parents and dest must be three distinct dirs")
-    val (filesA, filesB) = (KvFormat.dataFiles(a), KvFormat.dataFiles(b))
-    require(filesA.nonEmpty && filesB.nonEmpty,
-      s"region merge: a parent region has no data files ($a: ${filesA.size}, $b: ${filesB.size})")
-    val (metaA, metaB) = (KvMeta.read(a), KvMeta.read(b))
-    // stats for LIVE files only — a stale index entry for a deleted
-    // file must not widen a region's proven range
-    def liveStats(files: Seq[java.nio.file.Path],
-        meta: Map[String, KvFileMeta], dir: String): Seq[KvFileMeta] =
-      files.map { f =>
-        val n = f.getFileName.toString
-        require(meta.contains(n),
-          s"region merge: $dir/$n has no committed stats entry — adjacency unprovable")
-        meta(n)
-      }
-    val (statsA, statsB) = (liveStats(filesA, metaA, a), liveStats(filesB, metaB, b))
+    val (statsA, statsB) = (KvMeta.files(a), KvMeta.files(b))
+    require(statsA.nonEmpty && statsB.nonEmpty,
+      s"region merge: a parent region has no data files ($a: ${statsA.size}, $b: ${statsB.size})")
     val (maxA, minB) = (statsA.map(_.maxKey).max, statsB.map(_.minKey).min)
     require(maxA < minB,
       s"region merge: regions are not adjacent (A max rowkey $maxA >= B min rowkey $minB)")
-    require(KvFormat.dataFiles(merged).isEmpty,
-      s"region merge: dest already holds data files: $merged")
     val parents = statsA.map(a -> _) ++ statsB.map(b -> _)
-    val adopted = parents.zip(KvFiles.adopt(
-      parents.map { case (d, m) => Paths.get(d, m.file) }, Paths.get(merged), "merge"))
-      .map { case ((_, m), n) => m.copy(file = n) }
-    KvMeta.append(merged, adopted)
-    // retire the emptied parents (data already safely adopted)
+    require((KvMeta.read(merged).keySet -- parents.map(p => inName("merge", p._2))).isEmpty,
+      s"region merge: dest already holds data files: $merged")
+    val in = bringIn(parents, merged, "merge")
+    // retire the parents (their cells are committed in the dest)
     graft.util.Scratch.deleteTree(a)
     graft.util.Scratch.deleteTree(b)
-    MergeStats(statsA.size, statsB.size, adopted.map(_.cells).sum)
+    MergeStats(statsA.size, statsB.size, in.map(_.cells).sum)
   }
 }

@@ -26,9 +26,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * pushdown via SupportsPushDownFilters — pushed predicates are applied
   * inside the partition reader so non-matching cells never reach Spark.
   *
-  * Write path: per-task DataWriter streams cells to a temp file and
-  * RENAMES it into place on commit (the same two-phase protocol a real
-  * object-store committer uses), so a failed task leaves no partial file.
+  * Write path: each task streams its cells straight to a fresh file
+  * name, and job commit publishes the `.file_meta.tsv` index that names
+  * the job's files in one atomic replace. The index is the store's file
+  * set: a reader never opens a file it does not name, so a failed task,
+  * an aborted job, or a task that commits after the job abort leaves at
+  * most an unindexed file that no reader sees (the one-PUT commit an
+  * object store allows).
   *
   * Every storage mutation goes through [[KvFiles]], the one non-cluster
   * piece: at cluster scale only that object moves to the Hadoop
@@ -44,6 +48,9 @@ object KvFormat {
   val SEP = "\t"
   val SUFFIX = ".kv"
 
+  /** Every `.kv` file in `dir`, indexed or not. Readers take the file
+    * set from [[KvMeta]]; only scrub's orphan class and the staged
+    * replace's sweep of unindexed leftovers list the directory. */
   def dataFiles(dir: String): Seq[Path] =
     graft.util.Scratch.children(dir).filter(_.getFileName.toString.endsWith(SUFFIX))
 }
@@ -146,8 +153,8 @@ object KvMeta {
       decQ(kv.substring(0, i)) -> kv.substring(i + 1).toLong
     }.toMap
 
-  /** The committed per-file index for a kv dir; files without an entry
-    * (e.g. hand-written fixtures) simply have no stats. */
+  /** The committed file set of a kv dir, by file name. A file the index
+    * does not name is never read; a dir without an index is empty. */
   def read(dir: String): Map[String, KvFileMeta] = {
     val p = Paths.get(dir, FILE)
     if (!Files.exists(p)) Map.empty
@@ -166,21 +173,26 @@ object KvMeta {
             s"graft-kv: corrupt stats index at $dir/$FILE:${ln + 1} — ${e.getMessage}", e)
         }
       }
-      // last entry per filename wins (append-mode jobs merge on commit)
       .map(m => m.file -> m).toMap
   }
 
-  /** Merge new entries into the index: single job committer per dir
-    * (Spark's job-commit is driver-side and serialized), entries for
-    * deleted files are pruned, and the write is an atomic publish so
-    * readers never see a torn index. */
-  def append(dir: String, entries: Seq[KvFileMeta]): Unit = {
-    val merged = (read(dir) ++ entries.map(m => m.file -> m).toMap)
-      .filter { case (f, _) => Files.exists(Paths.get(dir, f)) }
-    val text = merged.values.toSeq.sortBy(_.file)
+  /** The committed files in file-name order, the order scans plan in. */
+  def files(dir: String): Seq[KvFileMeta] = read(dir).values.toSeq.sortBy(_.file)
+
+  /** The one way a file becomes visible or invisible in a kv dir:
+    * publish `(index − drop) ++ add` in one atomic replace (one committer
+    * per dir: Spark's job commit is driver-side and serialized), then
+    * delete the dropped files. A kill before the publish changes nothing
+    * a reader sees; after it, a dropped file not yet deleted is an
+    * unindexed leftover. An indexed file that is lost stays indexed, so
+    * reading it fails loudly instead of the cells silently vanishing. */
+  def commit(dir: String, add: Seq[KvFileMeta], drop: Set[String] = Set.empty): Unit = {
+    val next = read(dir) -- drop ++ add.map(m => m.file -> m)
+    val text = next.values.toSeq.sortBy(_.file)
       .map(m => s"${m.file}\t${m.bytes}\t${m.md5}\t${m.cells}\t${m.minKey}\t${m.maxKey}\t${encodeQuals(m.qualCells)}\t${m.bloomHex.getOrElse("")}")
       .mkString("", "\n", "\n")
     KvFiles.publish(Paths.get(dir, FILE), text)
+    (drop -- next.keySet).foreach(f => Files.deleteIfExists(Paths.get(dir, f)))
   }
 }
 
@@ -300,23 +312,17 @@ class KvScanBuilder(path: String)
     * GROUP BY qualifier + COUNT(*) (the HBase column-qualifier
     * cardinality question), with no filters, are answered from the
     * write-time stats index — O(files × qualifiers) driver metadata,
-    * ZERO data bytes read (the parquet-footer-count move). Sound only
-    * when every data file has a committed stats entry (hand-written
-    * fixtures don't) — and for the grouped form only when every entry
-    * carries the per-qualifier breakdown (old-format index lines don't)
-    * — otherwise refuse and let Spark aggregate the real scan.
-    * Complete pushdown: the index is exact. */
+    * ZERO data bytes read (the parquet-footer-count move). The index is
+    * the file set, so the global form is always sound; the grouped form
+    * only when every entry carries the per-qualifier breakdown
+    * (old-format index lines don't) — otherwise refuse and let Spark
+    * aggregate the real scan. Complete pushdown: the index is exact. */
   private var aggPlan: Option[KvAggPlan] = None
 
   // one metadata read per builder: Spark calls supportCompletePushDown
-  // AND pushAggregation during planning — don't re-list per call
-  private lazy val planCoverage: (Boolean, Boolean) = {
-    val meta = KvMeta.read(path)
-    val files = KvFormat.dataFiles(path).map(_.getFileName.toString)
-    val allFiles = files.forall(meta.contains)
-    val allQuals = allFiles && files.forall(f => meta(f).qualifiersCovered)
-    (allFiles, allQuals)
-  }
+  // AND pushAggregation during planning — don't re-read per call
+  private lazy val qualsCovered: Boolean =
+    KvMeta.read(path).values.forall(_.qualifiersCovered)
 
   private def namedRef(e: org.apache.spark.sql.connector.expressions.Expression,
       col: String): Boolean = e match {
@@ -328,7 +334,6 @@ class KvScanBuilder(path: String)
     if (pushed.nonEmpty || limit.nonEmpty) return None
     agg.groupByExpressions.toSeq match {
       case Seq() =>
-        if (!planCoverage._1) return None
         val stats = agg.aggregateExpressions.toSeq.map {
           case _: CountStar => Some("count")
           case m: Min if namedRef(m.column, "rowkey") => Some("min")
@@ -340,7 +345,7 @@ class KvScanBuilder(path: String)
         else None
       case Seq(g) if namedRef(g, "qualifier") =>
         // per-qualifier COUNT(*) from the index's breakdown column
-        if (!planCoverage._2) return None
+        if (!qualsCovered) return None
         val counts = agg.aggregateExpressions.toSeq.forall {
           case _: CountStar => true
           case _ => false
@@ -387,19 +392,10 @@ class KvStatsScan(path: String, plan: KvAggPlan) extends Scan with Batch {
   }
   override def planInputPartitions(): Array[InputPartition] =
     Array(KvStatsPartition(computeRows()))
-  // Driver-side O(files × qualifiers) metadata fold; the rows travel
-  // inside the partition. The file listing is re-taken here, so
-  // plan-time coverage is re-checked: a data file that appeared between
-  // planning and execution WITHOUT a stats entry must fail loudly, not
-  // be silently undercounted (entries for files deleted outside the
-  // connector are still skipped — they no longer hold cells).
+  // Driver-side O(files × qualifiers) metadata fold over the committed
+  // file set; the rows travel inside the partition.
   private def computeRows(): Array[Array[Any]] = {
-    val meta = KvMeta.read(path)
-    val metas = KvFormat.dataFiles(path).map(_.getFileName.toString).map { f =>
-      meta.getOrElse(f, sys.error(
-        s"graft-kv $path: data file $f has no stats-index entry — " +
-          "cannot answer a pushed aggregate from the index"))
-    }
+    val metas = KvMeta.files(path)
     if (plan.byQualifier) {
       metas.foreach(m => require(m.qualifiersCovered,
         s"graft-kv $path: ${m.file} lacks the per-qualifier breakdown — " +
@@ -515,21 +511,19 @@ class KvScan(path: String, required: StructType, pushed: Array[Filter],
     * keys (the HBase HFile-bloom move: a point probe into a store of
     * overlapping-range files opens the files that can actually hold
     * the key, not every range-overlapping one). At 100 TB both prunes
-    * are O(files) driver metadata. Files without index entries (or
-    * without a bloom — old-format lines) are always read (sound). */
+    * are O(files) driver metadata. Files without a bloom (old-format
+    * lines) are never bloom-skipped (sound). Partitions follow the
+    * index's file-name order. */
   override def planInputPartitions(): Array[InputPartition] = {
     val range = KvKeyRange.ofAll(pushed)
     val points = KvKeyRange.pointKeysOfAll(pushed)
-    val meta = KvMeta.read(path)
-    KvFormat.dataFiles(path)
-      .filter { f =>
-        meta.get(f.getFileName.toString).forall { m =>
-          m.maxKey >= range._1 && m.minKey <= range._2 &&
-            points.forall(ks => m.bloomHex.forall(hex =>
-              ks.exists(KvBloom.mightContain(hex, _))))
-        }
+    KvMeta.files(path)
+      .filter { m =>
+        m.maxKey >= range._1 && m.minKey <= range._2 &&
+          points.forall(ks => m.bloomHex.forall(hex =>
+            ks.exists(KvBloom.mightContain(hex, _))))
       }
-      .map(f => KvInputPartition(f.toString)).toArray
+      .map(m => KvInputPartition(Paths.get(path, m.file).toString)).toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
     new KvReaderFactory(required, pushed, limit)
@@ -621,18 +615,22 @@ class KvBatchWrite(path: String) extends BatchWrite {
     Files.createDirectories(Paths.get(path))
     new KvWriterFactory(path)
   }
-  /** Job commit assembles the per-file stats index from the tasks'
-    * commit messages — the driver never re-reads data bytes; its work is
-    * O(committed files). */
+  /** Job commit adds the tasks' files to the index from their commit
+    * messages — the driver never re-reads data bytes; its work is
+    * O(committed files). This is the moment the job's files become
+    * visible. */
   override def commit(messages: Array[WriterCommitMessage]): Unit =
-    KvMeta.append(path, messages.collect { case KvCommitMessage(Some(m)) => m }.toSeq)
-  // job-level abort must undo task-level commits, or the renamed files of
-  // successful tasks would remain visible as partial output
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    KvMeta.commit(path, messages.collect { case KvCommitMessage(Some(m)) => m }.toSeq)
+  // job abort deletes the files of the commit messages it received; they
+  // were never indexed, and a task that commits after this only leaves
+  // an unindexed file (a scrub orphan the next compaction sweeps)
+  override def abort(messages: Array[WriterCommitMessage]): Unit = {
+    KvFiles.beforeStep(s"abort $path")
     messages.foreach {
       case KvCommitMessage(Some(m)) => Files.deleteIfExists(Paths.get(path, m.file))
       case _ => ()
     }
+  }
 }
 
 class KvWriterFactory(path: String) extends DataWriterFactory {
@@ -644,8 +642,8 @@ class KvWriterFactory(path: String) extends DataWriterFactory {
   * partitions must not litter the store with 0-byte files). */
 case class KvCommitMessage(meta: Option[KvFileMeta]) extends WriterCommitMessage
 
-/** Streams cells to a temp file, RENAMING into place on commit (two-phase
-  * task commit through a [[KvFiles.Writer]]). While writing it maintains
+/** Streams cells to its own file through a [[KvFiles.Writer]]; the file
+  * stays invisible until job commit indexes it. While writing it maintains
   * the stats that become the commit message: byte count + MD5 from the
   * digesting writer (single pass, constant memory) and the rowkey
   * min/max for scan pruning. Rowkey CLUSTERING is the plan's job (`sortWithinPartitions`/
@@ -656,7 +654,7 @@ class KvDataWriter(path: String, partitionId: Int, taskId: Long)
     extends DataWriter[InternalRow] {
   // (partitionId, taskId) is unique only WITHIN one Spark application —
   // a second application appending to the same store restarts task ids
-  // at 0 and would collide on the rename. The per-process tag makes
+  // at 0 and would collide on the file name. The per-process tag makes
   // cross-application appends safe (HBase solves this with UUID-named
   // store files for the same reason).
   private val name = s"part-$partitionId-$taskId-${graft.util.Scratch.tag}.kv"

@@ -2,23 +2,20 @@ package graft.sources
 
 import java.io.OutputStream
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, Path, StandardCopyOption, StandardOpenOption}
 import java.security.{DigestOutputStream, MessageDigest}
 
 import scala.util.control.NonFatal
 
-import graft.util.Scratch
-
-/** The one module that knows how graft-kv mutates storage. Atomic
-  * commit, resumable copy and checksum verify all rest on one protocol:
-  * write under a temp sibling name, then rename into place — for a small
-  * file ([[publish]]), a streamed and digested one ([[Writer]]) or a
-  * whole directory ([[install]]); [[adopt]] and [[share]] bring existing
-  * files into a store. Every temp name starts with `.tmp-` ([[isTemp]]):
-  * scans skip it (data files end in `.kv`, Spark skips dot-names) and
-  * sweeps find it. Plain reads stay direct `Files` calls at the call
-  * sites, so running the store on another filesystem changes this
-  * object only.
+/** The one module that knows how graft-kv mutates storage. A store's
+  * file set is its committed `.file_meta.tsv` index ([[KvMeta]]), so
+  * every mutation is "write files nobody can see, then one [[publish]]
+  * of the small file that names them": data files are streamed and
+  * digested in place ([[Writer]]) or brought in as links ([[share]]),
+  * and only [[publish]] renames. Every temp name starts with `.tmp-`
+  * ([[isTemp]]): scans never see it and sweeps find it. Plain reads stay
+  * direct `Files` calls at the call sites, so running the store on
+  * another filesystem changes this object only.
   */
 object KvFiles {
 
@@ -32,20 +29,17 @@ object KvFiles {
 
   def isTemp(name: String): Boolean = name.startsWith(TempPrefix)
 
-  /** `.tmp-<name>.<suffix>` beside `p`. A fixed suffix is for a target
-    * with one writer: its next write reuses (and so reclaims) the name a
-    * crash left; a fresh one is for targets that retried or concurrent
-    * tasks may write at once. */
+  /** `.tmp-<name>.<suffix>` beside `p`: a fixed name per target, so the
+    * next write reuses (and so reclaims) the name a crash left. */
   private def temp(p: Path, suffix: String): Path =
     p.resolveSibling(s"$TempPrefix${p.getFileName}.$suffix")
 
-  private def freshTag(): String = java.util.UUID.randomUUID().toString.take(8)
-
-  private def move(from: Path, to: Path): Unit =
-    Files.move(from, to, StandardCopyOption.ATOMIC_MOVE)
+  /** The fixed sibling dir a staged replace of the store `live` writes
+    * into before its files are brought into `live`. */
+  def staging(live: Path): Path = temp(live, "new")
 
   /** Replace `p` with `text`: readers see the old file or the new one,
-    * never a torn one. Every published file (manifest, stats index,
+    * never a torn one. Every published file (stats index, manifest,
     * ledgers) has a single writer, so the temp name is fixed. */
   def publish(p: Path, text: String): Unit = {
     beforeStep(s"publish $p")
@@ -54,20 +48,23 @@ object KvFiles {
     try {
       Files.writeString(tmp, text, StandardCharsets.UTF_8)
       beforeStep(s"commit $p")
-      move(tmp, p)
+      Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE)
     } catch { case NonFatal(e) => Files.deleteIfExists(tmp); throw e }
   }
 
-  /** A file streamed into a temp sibling of `dest` and digested on the
-    * way (single pass, constant memory). Write to [[out]]; [[commit]]
-    * publishes the file at `dest` and returns its (bytes, md5 hex);
-    * [[abort]] drops it. */
+  /** A file streamed to `dest` and digested on the way (single pass,
+    * constant memory), with no temp name: `dest` is invisible until an
+    * index or manifest names it. A file already at `dest` is unlinked
+    * first, so bytes another store shares through a [[share]] link are
+    * never written through. Write to [[out]]; [[commit]] closes it and
+    * returns its (bytes, md5 hex); [[abort]] deletes it. */
   final class Writer(dest: Path) {
     beforeStep(s"write $dest")
-    private val tmp = temp(dest, freshTag())
+    Files.deleteIfExists(dest)
     private val md = MessageDigest.getInstance("MD5")
     private var bytes = 0L
-    val out: OutputStream = new DigestOutputStream(Files.newOutputStream(tmp), md) {
+    val out: OutputStream = new DigestOutputStream(
+        Files.newOutputStream(dest, StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE), md) {
       override def write(b: Array[Byte], off: Int, len: Int): Unit = {
         super.write(b, off, len); bytes += len
       }
@@ -75,13 +72,12 @@ object KvFiles {
     }
 
     def commit(): (Long, String) = {
-      out.close()
       beforeStep(s"commit $dest")
-      move(tmp, dest)
+      out.close()
       (bytes, hex(md.digest()))
     }
 
-    def abort(): Unit = { out.close(); Files.deleteIfExists(tmp) }
+    def abort(): Unit = { out.close(); Files.deleteIfExists(dest) }
   }
 
   /** Streaming MD5 of a file (1 MiB chunks: constant memory regardless
@@ -101,60 +97,10 @@ object KvFiles {
 
   private def hex(bytes: Array[Byte]): String = java.util.HexFormat.of().formatHex(bytes)
 
-  /** Undo what a process crash inside [[install]] left at `live`: move
-    * the old dir back if the crash came between the two moves, and drop
-    * a stale new or old sibling. A caller that reads `live` before it
-    * installs (compaction) calls this first. */
-  def recover(live: Path): Unit = {
-    val old = temp(live, "old")
-    if (Files.exists(old) && !Files.exists(live)) { beforeStep(s"restore $live"); move(old, live) }
-    Seq(old, temp(live, "new")).foreach(p => Scratch.deleteTree(p.toString))
-  }
-
-  /** Replace the directory `live` with one `fill` builds in a temp
-    * sibling: move `live` aside, move the new dir in, delete the old
-    * one. A failed `fill` leaves `live` untouched; a failed second move
-    * puts the old dir back, so `live` is never left missing. Both
-    * sibling names are fixed per `live`, so a later install first
-    * [[recover]]s what a crashed one left. Returns what `fill` returned. */
-  def install[A](live: Path)(fill: Path => A): A = {
-    val (next, old) = (temp(live, "new"), temp(live, "old"))
-    recover(live)
-    Option(live.getParent).foreach(Files.createDirectories(_))
-    val result =
-      try {
-        val r = fill(next)
-        if (Files.exists(live)) { beforeStep(s"install-aside $live"); move(live, old) }
-        try { beforeStep(s"install-in $live"); move(next, live) }
-        catch {
-          case NonFatal(e) =>
-            // a failed rollback is suppressed onto the original error
-            if (Files.exists(old))
-              try move(old, live) catch { case NonFatal(rb) => e.addSuppressed(rb) }
-            throw e
-        }
-        r
-      } finally Scratch.deleteTree(next.toString) // gone already after a good move
-    Scratch.deleteTree(old.toString)
-    result
-  }
-
-  /** Move each of `files` into `dir` (created if absent) as
-    * `<prefix>-<fresh tag>-<i>-<name>`, so an adopted name never
-    * collides with a live one. Returns the new names in order. */
-  def adopt(files: Seq[Path], dir: Path, prefix: String): Seq[String] = {
-    Files.createDirectories(dir)
-    val tag = freshTag()
-    files.zipWithIndex.map { case (f, i) =>
-      val name = s"$prefix-$tag-$i-${f.getFileName}"
-      beforeStep(s"adopt ${dir.resolve(name)}")
-      move(f, dir.resolve(name))
-      name
-    }
-  }
-
   /** Make `link` a hard link to the existing file `target`, replacing
-    * any file at `link`: shared storage, zero bytes copied. */
+    * any file at `link`: shared storage, zero bytes copied. The one way
+    * an existing file enters a store; its source is deleted only after
+    * the index that names the link commits. */
   def share(link: Path, target: Path): Unit = {
     beforeStep(s"share $link")
     Files.deleteIfExists(link)

@@ -30,10 +30,11 @@ import org.apache.spark.sql.functions._
   *    per-(queue, store) applied-offset ledger makes the steady-state
   *    re-apply a no-op, and a behind-the-queue replica is rebuilt from
   *    the committed batches (per-coordinate winners by seq) into a
-  *    sibling dir swapped in by [[KvFiles.install]], which puts the
-  *    previous replica back if the swap fails — applying the same
-  *    queue twice, or re-applying after new batches commit, always
-  *    converges to exactly full-log replay with zero duplicate cells.
+  *    staging dir and swapped in by one index commit
+  *    ([[KvCompaction.replaceStaged]]) — a kill before that commit
+  *    leaves the previous replica live — so applying the same queue
+  *    twice, or re-applying after new batches commit, always converges
+  *    to exactly full-log replay with zero duplicate cells.
   *
   * 100 TB posture: a batch ships as one bounded filter+write of the
   * log tail (a production tailer reads only new WAL segments — the
@@ -161,19 +162,18 @@ object KvReplication {
     *  - ledger behind → the replica state is REBUILT from the full
     *    committed queue (one cell-keyed last-write-wins shuffle —
     *    deletes suppress, so a newly shipped delete genuinely removes
-    *    a previously applied cell) into a sibling temp dir that is
-    *    swapped in (a failed swap restores the previous replica), then
-    *    the ledger commits. The queue —
+    *    a previously applied cell) into a staging dir that one index
+    *    commit swaps in, then the ledger commits. The queue —
     *    not the replica — is the source of truth, so a kill in any
-    *    window (after swap, before ledger) just rebuilds again: the
-    *    rebuild is a pure function of the committed queue;
-    *  - no ledger AND the store already holds data files → refuse
+    *    window (after the index commit, before ledger) just rebuilds
+    *    again: the rebuild is a pure function of the committed queue;
+    *  - no ledger AND the store's index names data files → refuse
     *    loudly: this store is not owned by this replication queue and
     *    a rebuild would clobber it;
     *  - no ledger AND the store is empty (first apply) → ADOPT it by
     *    committing a provisional ledger (batch -1) before rebuilding,
     *    so the kill-in-any-window guarantee holds on the very first
-    *    apply too: a kill after the swap but before the final ledger
+    *    apply too: a kill after the index commit but before the final ledger
     *    commit leaves a "behind" ledger, not a foreign-looking store.
     *
     * Replay-from-queue is the snapshot-restore posture this utility
@@ -193,12 +193,12 @@ object KvReplication {
           s"under $replRoot — the queue was truncated or the ledger is foreign")
       case Some(_) => () // behind: rebuild below
       case None =>
-        require(KvFormat.dataFiles(storePath).isEmpty,
+        require(KvMeta.read(storePath).isEmpty,
           s"refusing to rebuild $storePath: it already holds data files but has no " +
             s"applied ledger under $replRoot — not a replica of this queue")
         // FIRST-APPLY KILL SAFETY (ADVICE r13): commit a provisional
         // ledger (batch -1 = "adopted, nothing applied") BEFORE any
-        // rebuild work. Without it, a kill between the tmp->store swap
+        // rebuild work. Without it, a kill between the index commit
         // below and commitApplied leaves the store holding data with no
         // ledger, and the retry's foreign-store refusal above would
         // permanently reject a legitimate replica. With the provisional
@@ -213,9 +213,9 @@ object KvReplication {
       .withColumn("rn", row_number().over(coordW))
       .filter(col("rn") === 1 && col("op") === "put")
       .select("rowkey", "qualifier", "value")
-    KvFiles.install(Paths.get(storePath).toAbsolutePath.normalize) { tmp =>
-      state.write.format("graft-kv").option("path", tmp.toString).mode("append").save()
-    }
+    KvCompaction.replaceStaged(Paths.get(storePath).toAbsolutePath.normalize, drop = None) {
+      staging => state.write.format("graft-kv").option("path", staging).mode("append").save()
+    }(_ => ())
     commitApplied(replRoot, storePath, lg.last)
     storeCount()
   }

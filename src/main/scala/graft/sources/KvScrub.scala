@@ -18,14 +18,17 @@ import org.apache.spark.sql.SparkSession
   *  - `checksum`: file bytes no longer match the commit-time digest
   *    (bit rot, torn write, hand edit);
   *  - `missing`: the index promises a file that is gone;
-  *  - `orphan`: a data file with no index entry (unknown provenance —
-  *    HBase's "region not in meta"). Orphans are NOT trusted data:
-  *    the reader would scan them, so the scrub must surface them.
+  *  - `orphan`: a data file with no index entry (HBase's "region not
+  *    in meta") — a task that committed after its job aborted, or the
+  *    leftover of a killed compaction or load. An orphan is never
+  *    read (the index is the file set) and the next major compaction
+  *    or replication apply deletes it; the scrub surfaces it as waste.
   *
   * At 100 TB the scrub is one map-only job over the file list (no
   * shuffle, bytes read once per file); the index itself is
   * metadata-sized. Repair policy is the caller's: the graded
-  * `kv_scrub` key deletes the damaged file and re-ingests exactly the
+  * `kv_scrub` key drops the damaged file through one index commit
+  * ([[KvMeta.commit]]) and re-ingests exactly the
   * lost cells from the latest snapshot via a cell-identity anti-join
   * (never a full restore).
   */

@@ -16,8 +16,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * The manifest is published AFTER the data ([[KvFiles.publish]]) and
   * is the commit mark — a crashed create leaves a data dir without a
   * manifest, which restore and list refuse to see and a re-run replaces,
-  * so half-written snapshots are never visible (same job-level
-  * two-phase idea as the connector's task-level rename-on-commit).
+  * so half-written snapshots are never visible (the same rule as the
+  * data dir's own `.file_meta.tsv`: a file is part of a store only once
+  * a published index names it, and verify requires the two to agree).
   *
   * Scale posture (the round-3 verdict's one weak spot, now fixed): the
   * manifest's per-file (bytes, md5, cells) come from the WRITE TASKS'
@@ -144,17 +145,12 @@ object KvSnapshots {
   }
 
   /** Manifest entries straight from the connector's committed stats
-    * index — every data file must be covered (it always is: the index is
-    * written by the very job commit that produced the files). */
+    * index, the data dir's file set (written by the very job commit that
+    * produced the files). */
   private def entriesFromWriteIndex(root: String, name: String): Seq[SnapEntry] = {
-    val data = dataDir(root, name).toString
-    val meta = KvMeta.read(data)
-    KvFormat.dataFiles(data).map { f =>
-      val n = f.getFileName.toString
-      val m = meta.getOrElse(n,
-        sys.error(s"snapshot $name: no write-commit stats for $n"))
-      SnapEntry(n, m.bytes, m.md5, m.cells, None, permsOf(f))
-    }
+    val data = dataDir(root, name)
+    KvMeta.files(data.toString).map(m =>
+      SnapEntry(m.file, m.bytes, m.md5, m.cells, None, permsOf(data.resolve(m.file))))
   }
 
   private def commitManifest(root: String, name: String, entries: Seq[SnapEntry],
@@ -227,13 +223,20 @@ object KvSnapshots {
   /** Verify the committed snapshot against its manifest — the
     * reference's post-copy verification (SURVEY.md §2.A R6) as a
     * first-class entry point, not just a restore side effect. Fails
-    * loudly on a missing manifest (uncommitted or deleted snapshot),
-    * any size/checksum mismatch (corruption), or unmanifested data
-    * files. Existence + size are driver-side metadata calls; the
-    * O(data) md5 re-read runs as a Spark job, one task per file. */
+    * loudly on a missing manifest (uncommitted or deleted snapshot), a
+    * data-dir index that does not name exactly the manifest's files with
+    * the same bytes and md5 (what a restore would read is not what was
+    * snapshotted), or any size/checksum mismatch (corruption).
+    * Existence + size are driver-side metadata calls; the O(data) md5
+    * re-read runs as a Spark job, one task per file. */
   def verify(spark: SparkSession, root: String, name: String): Unit = {
     val entries = parseManifest(root, name)
     val data = dataDir(root, name)
+    val indexed = KvMeta.read(data.toString).values.map(m => (m.file, m.bytes, m.md5)).toSet
+    val manifested = entries.map(e => (e.file, e.bytes, e.md5)).toSet
+    val disagree = ((indexed -- manifested) ++ (manifested -- indexed)).map(_._1)
+    require(disagree.isEmpty, s"snapshot $name: the data index disagrees with the manifest " +
+      s"on ${disagree.toSeq.sorted.mkString(", ")}")
     entries.foreach { e =>
       val p = data.resolve(e.file)
       require(Files.exists(p), s"snapshot $name: data file ${e.file} missing")
@@ -251,9 +254,6 @@ object KvSnapshots {
       require(mismatched.isEmpty,
         s"snapshot $name: ${mismatched.mkString(", ")} fails its manifest checksum")
     }
-    val extra = KvFormat.dataFiles(data.toString)
-      .map(_.getFileName.toString).toSet -- entries.map(_.file).toSet
-    require(extra.isEmpty, s"snapshot $name: unmanifested data files $extra")
   }
 
   /** Verify the snapshot (see [[verify]]), then open it through the
@@ -348,9 +348,9 @@ object KvSnapshots {
     * already at the destination with matching checksum): a manifest-less
     * dest dir left by a crashed export is NOT wiped. Each copy task
     * first digest-reads any existing dest file and skips the copy when
-    * its (md5, bytes) already verify — published dest files are always
-    * complete ([[KvFiles.Writer]]), so the only states are
-    * verified-skip, corrupt-recopy, or missing-copy. A restart therefore
+    * its (md5, bytes) already verify — a torn dest file from a killed
+    * copy fails that digest, so the only states are verified-skip,
+    * corrupt-recopy, or missing-copy. A restart therefore
     * re-reads what survived but re-COPIES only what's missing — at
     * 100 TB the difference between an hour and a week. Returns
     * (copied, skipped) counts so callers and tests can observe resume
@@ -360,8 +360,9 @@ object KvSnapshots {
     * the reference `-overwrite`'s "recopy regardless" escape hatch for
     * operators who distrust the destination (e.g. suspected bit rot the
     * size+md5 probe can't see, or a storage system whose reads and
-    * writes disagree). The copy still lands via temp-file + atomic
-    * publish, so a forced re-copy never exposes a torn file either. */
+    * writes disagree). A forced re-copy writes in place like any copy:
+    * the destination is uncommitted until its manifest lands, and the
+    * copy replaces (never writes through) a file already there. */
   def export(spark: SparkSession, srcRoot: String, destRoot: String, name: String,
       mappers: Int = 32, bandwidthMbps: Int = 0, force: Boolean = false): ExportStats = {
     require(mappers > 0, s"mappers must be positive, got $mappers")
@@ -372,9 +373,9 @@ object KvSnapshots {
     val srcData = dataDir(srcRoot, name)
     val destData = dataDir(destRoot, name)
     Files.createDirectories(destData)
-    // Stray files a committed dest must not contain: crashed-task temp
-    // files, and data files not in the manifest (would trip restore's
-    // unmanifested-file check). Name-level driver work, no data read.
+    // Stray files a crashed run left: temp names, and data files not in
+    // the manifest (never read — the index names only manifest files —
+    // but dead weight). Name-level driver work, no data read.
     val expected = entries.map(_.file).toSet
     names(destData).filter(n => KvFiles.isTemp(n) || (n.endsWith(KvFormat.SUFFIX) && !expected(n)))
       .foreach(n => Files.delete(destData.resolve(n)))
@@ -437,16 +438,11 @@ object KvSnapshots {
       ExportStats(copied = outcomes.count(_._1 == "copied"),
         skipped = outcomes.count(_._1 == "skipped"))
     }
-    // metadata sidecar (tiny, driver-side): preserves min/max rowkey
-    // bounds + blooms so the destination store prunes files like the
-    // source did. When the SOURCE has no index, any index already at
-    // the destination (an overwrite-export over a previous snapshot)
-    // must die with it: stale entries under reused file names would
-    // mis-prune scans and answer pushed aggregates from old counts.
-    val srcIdx = srcData.resolve(KvMeta.FILE)
-    if (Files.exists(srcIdx))
-      KvFiles.publish(destData.resolve(KvMeta.FILE), Files.readString(srcIdx))
-    else Files.deleteIfExists(destData.resolve(KvMeta.FILE))
+    // the index (tiny, driver-side) is the dest data dir's file set, and
+    // carries min/max rowkey bounds + blooms so the destination store
+    // prunes files like the source did
+    KvFiles.publish(destData.resolve(KvMeta.FILE),
+      Files.readString(srcData.resolve(KvMeta.FILE)))
     // the exported snapshot is logically the SAME snapshot: its age
     // stamp (if any) travels with it rather than resetting at the dest
     commitManifest(destRoot, name,
@@ -546,24 +542,22 @@ object KvSnapshots {
     * prunes, and answers pushed aggregates exactly like the source.
     * Safe because store files are IMMUTABLE — appends to the clone
     * create new files and never touch linked bytes, so the snapshot
-    * stays verifiable afterwards (OperatorSpec pins this). The clone
-    * dir must be absent or an empty dir: silently merging into an
-    * existing store would blur two stores' stats indexes, and replacing
-    * a non-empty dir would delete what it holds. */
+    * stays verifiable afterwards (OperatorSpec pins this). The index
+    * is published last, so a clone killed midway reads no cells and a
+    * re-run replaces its links. The clone dir must not hold an index
+    * (merging into a store would blur two stores' stats indexes) nor
+    * any name that is neither a `.kv` file nor a temp name (clone never
+    * deletes what it does not own). */
   def clone(root: String, name: String, destStore: String): Unit = {
     val entries = parseManifest(root, name)
     val dest = Paths.get(destStore).normalize
-    require(!Files.exists(dest) || Files.isDirectory(dest) && names(dest).isEmpty,
-      s"clone destination $destStore exists and is not an empty directory")
+    require(!Files.exists(dest) || Files.isDirectory(dest) &&
+        names(dest).forall(n => n.endsWith(KvFormat.SUFFIX) || KvFiles.isTemp(n)),
+      s"clone destination $destStore holds a store or files clone does not own")
     val src = dataDir(root, name)
-    // a half-linked failure leaves the destination as it was and the
-    // retry clean, never a partial store that trips the guard above
-    KvFiles.install(dest) { tmp =>
-      Files.createDirectories(tmp)
-      entries.foreach(e => KvFiles.share(tmp.resolve(e.file), src.resolve(e.file)))
-      val srcIdx = src.resolve(KvMeta.FILE)
-      if (Files.exists(srcIdx)) KvFiles.publish(tmp.resolve(KvMeta.FILE), Files.readString(srcIdx))
-    }
+    Files.createDirectories(dest)
+    entries.foreach(e => KvFiles.share(dest.resolve(e.file), src.resolve(e.file)))
+    KvFiles.publish(dest.resolve(KvMeta.FILE), Files.readString(src.resolve(KvMeta.FILE)))
   }
 
   /** Demote a COMMITTED snapshot to uncommitted by removing only its

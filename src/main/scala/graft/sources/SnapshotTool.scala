@@ -181,14 +181,14 @@ object SnapshotTool {
           ok(s"compacted ${need("store")}: ${stats.filesBefore} files -> " +
             s"${stats.filesAfter} (${stats.cells} cells, ${stats.dropped} GC'd)")
         case "merge-regions" =>
-          // HBase merge_region: adopt two ADJACENT region stores into
-          // one by metadata rename — zero data bytes; parents retired
+          // HBase merge_region: link two ADJACENT region stores into
+          // one by one index commit — zero data bytes; parents retired
           val stats = KvCompaction.mergeRegions(need("a"), need("b"), need("dest"))
           ok(s"merged ${need("a")} + ${need("b")} into ${need("dest")} " +
             s"(${stats.filesA}+${stats.filesB} files, ${stats.cells} cells, 0 bytes rewritten)")
         case "bulk-load" =>
-          // HBase completebulkload: adopt region-aligned staged files
-          // into a live store — staging drained by move, not copy
+          // HBase completebulkload: link region-aligned staged files
+          // into a live store — staging drained after the index commit
           val stats = KvCompaction.bulkLoad(need("staging"), need("store"))
           ok(s"bulk-loaded ${stats.filesLoaded} file(s), ${stats.cells} cells " +
             s"into ${need("store")}")

@@ -832,8 +832,7 @@ class OperatorSpec extends SparkSpec {
   }
 }
 
-/** Streaming/batch equivalence as a test (also runnable standalone via
-  * `runMain graft.streaming.StreamingDemo`). */
+/** Streaming/batch equivalence as a test. */
 class StreamingSpec extends SparkSpec {
   test("event-time-timeout sessions equal the batch gaps-and-islands sessions exactly") {
     // the r14 key's whole design claim: ordered feed + sentinel makes the
@@ -1335,11 +1334,6 @@ class StreamingSpec extends SparkSpec {
         (unix_micros(col("purchase_ts")) - unix_micros(col("click_ts"))).as("gap_us"))
     assert(streamed.count() > 0)
     assert(streamed.exceptAll(batch).count() == 0 && batch.exceptAll(streamed).count() == 0)
-  }
-
-  test("streaming pipelines agree with batch operators on sf0.001") {
-    val failures = graft.streaming.StreamingDemo.run(spark, sf)
-    assert(failures.isEmpty, failures.mkString("; "))
   }
 
   test("windowed aggregation resumes from a durable checkpoint across restarts") {

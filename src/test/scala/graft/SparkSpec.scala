@@ -61,8 +61,8 @@ class EntrySpec extends SparkSpec {
     assert(offenders.isEmpty, s"memo maps in operators: ${offenders.mkString(", ")}")
   }
   test("only KvFiles renames, links or digests graft-kv storage") {
-    // one module owns the temp-then-rename protocol: its crash hook sees
-    // every step, and a filesystem port changes one file
+    // one module owns the storage protocol: its crash hook sees every
+    // step, and a filesystem port changes one file
     val banned = Seq("ATOMIC_MOVE", "createLink", "DigestOutputStream", "MessageDigest", "Files.move")
     val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft/sources"))
     val offenders = try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
@@ -72,6 +72,41 @@ class EntrySpec extends SparkSpec {
         banned.filter(text.contains).map(b => s"$p: $b")
       } finally files.close()
     assert(offenders.isEmpty, s"storage mutations outside KvFiles: ${offenders.mkString(", ")}")
+  }
+  test("a graft-kv store's file set is its committed index: no swap, adopt or listing reader") {
+    // every mutation is "write invisible files, then one index commit":
+    // no directory swap or rename-adopt exists, only KvFiles.publish
+    // renames, and only scrub's orphan class and the staged replace's
+    // sweep list a store directory
+    def sources(dir: String): List[(String, String)] = {
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+        .map(p => p.getFileName.toString -> java.nio.file.Files.readString(p))
+      finally files.close()
+    }
+    val swap = "KvFiles\\.(install|recover|adopt)\\b".r
+    val swapUsers = sources("src").filter(f => swap.findFirstIn(f._2).isDefined).map(_._1)
+    assert(swapUsers.isEmpty, s"directory swap or adopt used in ${swapUsers.mkString(", ")}")
+    val main = sources("src/main")
+    val listers = main.flatMap { case (n, text) =>
+      text.linesIterator.filter(l => l.contains("dataFiles(") && !l.contains("def dataFiles"))
+        .map(_ => n)
+    }
+    assert(listers.sorted == List("KvCompaction.scala", "KvScrub.scala"),
+      s"store directory listed outside scrub and the sweep: ${listers.mkString(", ")}")
+    val sweep = main.collectFirst { case ("KvCompaction.scala", t) => t }.get
+    val replace = sweep.indexOf("def replaceStaged(")
+    assert(replace >= 0 && sweep.indexOf("dataFiles(") > replace &&
+      sweep.indexOf("dataFiles(") < sweep.indexOf("\n  }\n", replace),
+      "the listing in KvCompaction is not the staged replace's sweep")
+    val moves = main.filter(_._2.contains("ATOMIC_MOVE"))
+    val kvFiles = main.collectFirst { case ("KvFiles.scala", t) => t }.get
+    val publish = kvFiles.indexOf("def publish(")
+    assert(moves.map(_._1) == List("KvFiles.scala") &&
+      kvFiles.indexOf("ATOMIC_MOVE") == kvFiles.lastIndexOf("ATOMIC_MOVE") &&
+      publish >= 0 && kvFiles.indexOf("ATOMIC_MOVE") > publish &&
+      kvFiles.indexOf("ATOMIC_MOVE") < kvFiles.indexOf("\n  }\n", publish),
+      "an atomic rename outside KvFiles.publish")
   }
   test("oracleSql keys are a subset of queries keys") {
     val extra = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet

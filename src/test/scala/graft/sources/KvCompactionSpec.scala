@@ -1,6 +1,8 @@
 package graft.sources
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicReference
 import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
@@ -51,7 +53,7 @@ class KvCompactionSpec extends SparkSpec {
     // per-file rowkey blooms which would skip the non-holding stripes
     // for a point probe — strip them from the index so the before-probe
     // really measures "every overlapping file is read"
-    KvMeta.append(store, KvMeta.read(store).values.map(_.copy(bloomHex = None)).toSeq)
+    KvMeta.commit(store, KvMeta.read(store).values.map(_.copy(bloomHex = None)).toSeq)
     // pre-compaction: a MID-RANGE point lookup must open every file
     // (the stripes all cover the middle; edge keys would be pruned by
     // min/max even on the fragmented store)
@@ -231,17 +233,18 @@ class KvCompactionSpec extends SparkSpec {
   test("a failed rewrite leaves the live store untouched (swap happens last)") {
     val store = freshStore()
     fragmented(store, 3)
-    val before = KvFormat.dataFiles(store).map(_.getFileName.toString)
-    // poison the rewrite: a malformed cell makes the tmp-dir rewrite
-    // job fail while reading — long before any swap touches the store
-    Files.writeString(java.nio.file.Paths.get(store, "poison.kv"), "1\tq\tv\n")
-    val poisoned = java.nio.file.Paths.get(store, "zz-bad.kv")
-    Files.writeString(poisoned, "bad\tq\tv\n") // bad rowkey -> read fails
+    val metaBefore = KvMeta.read(store)
+    val filesBefore = KvFormat.dataFiles(store).map(_.getFileName.toString)
+    // poison the rewrite: a malformed cell in a corrupted INDEXED file
+    // makes the staging rewrite fail while reading — before anything
+    // reaches the store
+    Files.writeString(Paths.get(store, filesBefore.last), "bad\tq\tv\n", // bad rowkey
+      StandardOpenOption.APPEND)
     intercept[Exception] { KvCompaction.compact(spark, store, 2) }
-    Files.delete(poisoned)
-    val after = KvFormat.dataFiles(store).map(_.getFileName.toString)
-    assert(after.contains("poison.kv") && before.forall(after.contains),
-      "failed compaction mutated the live store")
+    assert(KvMeta.read(store) == metaBefore, "failed compaction changed the live index")
+    assert(KvFormat.dataFiles(store).map(_.getFileName.toString) == filesBefore,
+      "failed compaction changed the live files")
+    assert(temps(Paths.get(store).getParent).isEmpty, "failed compaction stranded its staging tree")
   }
 
   test("a write job with a crashing task leaves the store exactly as before") {
@@ -252,7 +255,6 @@ class KvCompactionSpec extends SparkSpec {
     // and readable cells must be byte-identical to the pre-job state
     val store = freshStore()
     cells.coalesce(1).write.format("graft-kv").option("path", store).mode("append").save()
-    val filesBefore = KvFormat.dataFiles(store).map(_.getFileName.toString).sorted
     val metaBefore = KvMeta.read(store)
     val rowsBefore = spark.read.format("graft-kv").load(store)
       .orderBy("rowkey", "qualifier").collect()
@@ -264,8 +266,6 @@ class KvCompactionSpec extends SparkSpec {
     intercept[Exception] { // SparkRuntimeException (raise_error) or SparkException
       poisoned.write.format("graft-kv").option("path", store).mode("append").save()
     }
-    assert(KvFormat.dataFiles(store).map(_.getFileName.toString).sorted == filesBefore,
-      "job abort must remove every file its tasks committed")
     assert(KvMeta.read(store) == metaBefore,
       "a failed job must not touch the committed stats index")
     val rowsAfter = spark.read.format("graft-kv").load(store)
@@ -275,28 +275,29 @@ class KvCompactionSpec extends SparkSpec {
     assert(temps(java.nio.file.Paths.get(store)).isEmpty, "failed tasks stranded temp files")
   }
 
-  test("a crash between the two swap moves rolls the old store back") {
+  test("a compaction killed before its index commit leaves the old store live") {
     val store = freshStore()
     fragmented(store, 3)
     val beforeCells = spark.read.format("graft-kv").load(store)
       .orderBy("rowkey", "qualifier").collect()
-    // kill in the EXACT window where the live path holds nothing: the
-    // old dir is moved aside, the rewritten tmp not yet in place
-    val boom = new RuntimeException("injected crash between swap moves")
-    KvFiles.beforeStep = s => if (s == s"install-in $store") throw boom
+    // kill in the last window before the swap: the rewritten files are
+    // already linked into the live dir, the index not yet published
+    val boom = new RuntimeException("injected crash before the index commit")
+    KvFiles.beforeStep = s => if (s == s"publish $store/${KvMeta.FILE}") throw boom
     val e = try intercept[RuntimeException] {
       KvCompaction.compact(spark, store, targetFiles = 1)
     } finally KvFiles.beforeStep = _ => ()
     assert(e eq boom, s"the injected failure must stay the primary error, got $e")
-    // readers must see the PRE-compaction store, not an empty dir...
+    // readers see the PRE-compaction store: the linked files are unindexed
     val after = spark.read.format("graft-kv").load(store)
       .orderBy("rowkey", "qualifier").collect()
-    assert(after.sameElements(beforeCells),
-      "rollback must restore the pre-compaction store at the live path")
-    // ...and neither sibling tree may be stranded: the new one is
-    // store-sized, and the old one must be moved back, not copied
-    val siblings = temps(java.nio.file.Paths.get(store).getParent)
-    assert(siblings.isEmpty, s"crashed swap stranded $siblings")
+    assert(after.sameElements(beforeCells), "a killed compaction changed what readers see")
+    // the store-sized staging tree is not stranded
+    val siblings = temps(Paths.get(store).getParent)
+    assert(siblings.isEmpty, s"killed compaction stranded $siblings")
+    // the next compaction sweeps the unindexed links it left
+    KvCompaction.compact(spark, store, targetFiles = 1)
+    assert(KvFormat.dataFiles(store).map(_.getFileName.toString) == KvMeta.files(store).map(_.file))
   }
 
   test("a fired lossless-rewrite guard reclaims the tmp tree") {
@@ -439,7 +440,7 @@ class KvCompactionSpec extends SparkSpec {
     assert(KvFormat.dataFiles(lo).nonEmpty && KvFormat.dataFiles(hi).nonEmpty)
   }
 
-  test("region merge crash window: partially adopted cells stay readable, re-run refuses") {
+  test("region merge killed before its index commit loses no cell; the re-run merges once") {
     val a = freshStore()
     val b = freshStore()
     val merged = freshStore()
@@ -449,23 +450,78 @@ class KvCompactionSpec extends SparkSpec {
       .write.format("graft-kv").option("path", a).mode("append").save()
     cells.filter(col("rowkey") > mid).coalesce(1)
       .write.format("graft-kv").option("path", b).mode("append").save()
-    // simulate the crash window: one of A's files adopted by hand (the
-    // exact move the merge performs), index not yet merged, parents live
-    Files.createDirectories(java.nio.file.Paths.get(merged))
-    val f = KvFormat.dataFiles(a).head
-    Files.move(f, java.nio.file.Paths.get(merged, s"merge-crash-0-${f.getFileName}"))
-    // every cell remains reachable: adopted ones in merged, the rest in parents
-    val visible = spark.read.format("graft-kv").load(merged)
-      .unionByName(spark.read.format("graft-kv").load(b))
-    assert(visible.exceptAll(cells).count() == 0 && cells.exceptAll(visible).count() == 0,
-      "a cell became unreachable inside the crash window")
-    // a recovery re-run must refuse the non-empty dest, not double-adopt
-    val e = intercept[IllegalArgumentException] {
+    // the crash window: both parents' files linked into the dest, the
+    // dest index not yet published
+    KvFiles.beforeStep = s => if (s == s"publish $merged/${KvMeta.FILE}")
+      throw new RuntimeException("injected kill before the merged index commit")
+    try intercept[RuntimeException] {
       KvCompaction.mergeRegions(a, b, merged)
+    } finally KvFiles.beforeStep = _ => ()
+    // the dest reads no cells, and every cell is still in its parent
+    assert(spark.read.format("graft-kv").load(merged).count() == 0)
+    val parents = spark.read.format("graft-kv").load(a)
+      .unionByName(spark.read.format("graft-kv").load(b))
+    assert(parents.exceptAll(cells).count() == 0 && cells.exceptAll(parents).count() == 0,
+      "a cell became unreachable inside the crash window")
+    // the re-run completes the merge, every cell exactly once
+    KvCompaction.mergeRegions(a, b, merged)
+    val after = spark.read.format("graft-kv").load(merged)
+    assert(after.exceptAll(cells).count() == 0 && cells.exceptAll(after).count() == 0)
+    assert(!Files.exists(Paths.get(a)) && !Files.exists(Paths.get(b)))
+  }
+
+  test("a task that commits after the job abort leaves an orphan no reader sees; " +
+      "compaction sweeps it") {
+    val store = freshStore()
+    cells.coalesce(1).write.format("graft-kv").option("path", store).mode("append").save()
+    val metaBefore = KvMeta.read(store)
+    val rowsBefore = spark.read.format("graft-kv").load(store)
+      .orderBy("rowkey", "qualifier").collect()
+    val findingsBefore = KvScrub.scrub(spark, store)
+    // partition 1 is held inside its task commit until the job abort
+    // fires; partition 0 fails its commit once partition 1 is held. The
+    // wait ignores the interrupt a task kill may send, so partition 1's
+    // commit lands after the abort — the race Spark's v2 write allows
+    val Seq(held, aborted, landed) = Seq.fill(3)(new CountDownLatch(1))
+    def await(l: CountDownLatch): Unit = {
+      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(30)
+      var done = false
+      while (!done && System.nanoTime() < deadline)
+        try done = l.await(100, TimeUnit.MILLISECONDS)
+        catch { case _: InterruptedException => () }
     }
-    assert(e.getMessage.contains("dest already holds") ||
-      e.getMessage.contains("no data files"),
-      s"unexpected refusal: ${e.getMessage}")
+    val late = new AtomicReference[String]
+    KvFiles.beforeStep = s =>
+      if (s == s"abort $store") aborted.countDown()
+      else if (s.startsWith(s"commit $store/part-1-")) {
+        late.set(s.stripPrefix("commit "))
+        held.countDown()
+        await(aborted)
+        landed.countDown()
+      } else if (s.startsWith(s"commit $store/part-0-")) {
+        await(held)
+        throw new RuntimeException("injected write-task failure")
+      }
+    try {
+      intercept[Exception] {
+        cells.repartition(2).write.format("graft-kv").option("path", store).mode("append").save()
+      }
+      await(landed)
+    } finally KvFiles.beforeStep = _ => ()
+    assert(aborted.getCount == 0, "the job abort never ran")
+    assert(late.get != null && Files.exists(Paths.get(late.get)), "the late commit never landed")
+    assert(KvMeta.read(store) == metaBefore, "a failed job changed the index")
+    val rowsAfter = spark.read.format("graft-kv").load(store)
+      .orderBy("rowkey", "qualifier").collect()
+    assert(rowsAfter.sameElements(rowsBefore),
+      "a task committed after the abort became store content")
+    val findings = KvScrub.scrub(spark, store)
+    assert(findings.filter(_.kind != "orphan") == findingsBefore.filter(_.kind != "orphan"))
+    assert(findings.filter(_.kind == "orphan").map(_.file) ==
+      Seq(Paths.get(late.get).getFileName.toString))
+    KvCompaction.compact(spark, store, targetFiles = 1)
+    assert(!Files.exists(Paths.get(late.get)), "compaction did not sweep the orphan")
+    assert(KvScrub.scrub(spark, store).isEmpty)
   }
 
   test("merge-regions and bulk-load are driveable from the CLI") {

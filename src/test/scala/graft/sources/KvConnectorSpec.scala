@@ -128,7 +128,7 @@ class KvConnectorSpec extends AnyFunSuite {
     assert(planned(GreaterThanOrEqual("rowkey", 3L), LessThanOrEqual("rowkey", 9L)) == 3)
     // old-format index lines (no bloom column) never skip: key 7 sits
     // inside all three [min,max] ranges, so without blooms all plan
-    KvMeta.append(dir, meta.values.map(_.copy(bloomHex = None)).toSeq)
+    KvMeta.commit(dir, meta.values.map(_.copy(bloomHex = None)).toSeq)
     assert(planned(EqualTo("rowkey", 7L)) == 3)
   }
 
@@ -181,11 +181,15 @@ class KvConnectorSpec extends AnyFunSuite {
     val filtered = df.filter(col("rowkey") > 100).agg(count(lit(1))).collect().head.getLong(0)
     assert(filtered == 104L) // 101..104 from file 1 + all 100 of file 2
     assert(KvReadStats.forDir(dir).cellsEmitted.get() > 0L, "filtered count must read data")
-    // an un-indexed file (hand-written fixture) makes stats incomplete → real scan
+    // an unindexed file (hand-placed, or a task that committed after its
+    // job aborted) is not part of the store: a scan never opens it, and
+    // the count is still answered from the index with zero cells read
     Files.writeString(Paths.get(dir, "extra.kv"), "999\tq\tv\n")
     KvReadStats.reset(dir)
-    assert(df.agg(count(lit(1))).collect().head.getLong(0) == 201L)
-    assert(KvReadStats.forDir(dir).cellsEmitted.get() > 0L, "incomplete stats index must fall back to scanning")
+    assert(df.agg(count(lit(1))).collect().head.getLong(0) == 200L)
+    assert(KvReadStats.forDir(dir).cellsEmitted.get() == 0L,
+      "an unindexed file made the count read data")
+    assert(df.filter(col("rowkey") === 999L).count() == 0L, "an unindexed file was read")
   }
 
   test("group-by-qualifier count pushes down to the stats index — zero data bytes read") {
@@ -228,16 +232,16 @@ class KvConnectorSpec extends AnyFunSuite {
     assert(KvReadStats.forDir(dir).cellsEmitted.get() == 0L)
   }
 
-  test("a file that appears after planning without a stats entry fails loudly") {
+  test("a file that appears after planning without an index entry is not counted") {
     val dir = Files.createTempDirectory("kvspec_toctou").toString
     val m = mkFile(dir, 1L to 10L)
     new KvBatchWrite(dir).commit(Array(KvCommitMessage(Some(m))))
     val scan = new KvStatsScan(dir, KvAggPlan(byQualifier = false, Seq("count")))
-    // TOCTOU: the store grows between plan-time coverage check and
-    // execution — silent undercount would be wrong; it must throw
+    // the dir grows between planning and execution, but nothing indexed
+    // the new file: it is not store content, so the count stays exact
     Files.writeString(Paths.get(dir, "late.kv"), "99\tq\tv\n")
-    val e = intercept[RuntimeException] { scan.planInputPartitions() }
-    assert(e.getMessage.contains("no stats-index entry"))
+    val Array(p: KvStatsPartition) = scan.planInputPartitions()
+    assert(p.rows.map(_.toSeq) sameElements Array(Seq(10L)))
   }
 
   test("qualifier breakdown encoding roundtrips separator and unicode names") {

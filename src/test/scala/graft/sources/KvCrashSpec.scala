@@ -8,36 +8,72 @@ import scala.jdk.CollectionConverters._
 import graft.SparkSpec
 import org.apache.spark.sql.{DataFrame, Row}
 
-/** A kill at every storage step of the snapshot workflow. One recorded
-  * run of create → createIncremental → export → clone → compact counts
-  * the `KvFiles.beforeStep` steps of each operation; then, for every
-  * step k, the workflow state before k's operation is copied to fresh
-  * roots, the operation is killed exactly at step k, and the spec checks
-  * what a reader sees and that a re-run of the killed operation
+/** A kill at every storage step of the snapshot and store workflow. One
+  * recorded run of create → createIncremental → export → clone →
+  * minorCompact → compact → stage → bulkLoad → mergeRegions →
+  * applyShipped counts the `KvFiles.beforeStep` steps of each operation
+  * and the cells each of its stores reads before and after it; then, for
+  * every step k, the workflow state before k's operation is copied to
+  * fresh roots, the operation is killed exactly at step k, and the spec
+  * checks what a reader sees and that a re-run of the killed operation
   * succeeds and leaves no temp name behind. */
 class KvCrashSpec extends SparkSpec {
+
+  private def frame(rows: Seq[(Long, String, String)], slices: Int): DataFrame = {
+    import spark.implicits._
+    spark.sparkContext.parallelize(rows, slices).toDF("rowkey", "qualifier", "value")
+  }
 
   /** Two files per snapshot: parallelize's positional slices fix which
     * cells land in which file, so the `a` file is byte-identical in both
     * versions (shared by the incremental) and the `b` file changes. */
-  private def version(v: String): DataFrame = {
-    import spark.implicits._
-    val rows = (1L to 4L).map(r => (r, "a", s"a$r")) ++ (1L to 4L).map(r => (r, "b", s"$v$r"))
-    spark.sparkContext.parallelize(rows, 2).toDF("rowkey", "qualifier", "value")
-  }
+  private def version(v: String): DataFrame =
+    frame((1L to 4L).map(r => (r, "a", s"a$r")) ++ (1L to 4L).map(r => (r, "b", s"$v$r")), 2)
 
   private case class Roots(dir: Path) {
-    val src: String = dir.resolve("src").toString
-    val dst: String = dir.resolve("dst").toString
-    val store: String = dir.resolve("store").toString
+    private def at(n: String): String = dir.resolve(n).toString
+    val src: String = at("src")
+    val dst: String = at("dst")
+    val store: String = at("store")
+    val staging: String = at("staging")
+    val region: String = at("region")
+    val merged: String = at("merged")
+    val repl: String = at("repl")
+    val replica: String = at("replica")
   }
 
-  private val ops: Seq[(String, Roots => Unit)] = Seq(
-    "create" -> (r => KvSnapshots.create(version("v1"), r.src, "base")),
-    "createIncremental" -> (r => KvSnapshots.createIncremental(version("v2"), r.src, "inc", "base")),
-    "export" -> (r => { KvSnapshots.export(spark, r.src, r.dst, "inc"); () }),
-    "clone" -> (r => KvSnapshots.clone(r.src, "inc", r.store)),
-    "compact" -> (r => { KvCompaction.compact(spark, r.store, targetFiles = 1); () }))
+  /** An operation, and the stores whose readers it may change. */
+  private case class Op(name: String, stores: Roots => Seq[String], run: Roots => Unit)
+
+  private val ops: Seq[Op] = Seq(
+    Op("create", _ => Nil, r => KvSnapshots.create(version("v1"), r.src, "base")),
+    Op("createIncremental", _ => Nil,
+      r => KvSnapshots.createIncremental(version("v2"), r.src, "inc", "base")),
+    Op("export", _ => Nil, r => { KvSnapshots.export(spark, r.src, r.dst, "inc"); () }),
+    Op("clone", r => Seq(r.store), r => KvSnapshots.clone(r.src, "inc", r.store)),
+    Op("minorCompact", r => Seq(r.store),
+      r => { KvCompaction.minorCompact(spark, r.store, mergeSmallest = 2); () }),
+    Op("compact", r => Seq(r.store),
+      r => { KvCompaction.compact(spark, r.store, targetFiles = 1); () }),
+    // inputs of the operations below: a region-aligned staged file,
+    // the region above the store's keys, and a one-batch WAL queue
+    Op("stage", r => Seq(r.staging, r.region), { r =>
+      frame((5L to 8L).map(k => (k, "a", s"s$k")), 1)
+        .write.format("graft-kv").option("path", r.staging).mode("append").save()
+      frame((9L to 12L).map(k => (k, "a", s"g$k")), 1)
+        .write.format("graft-kv").option("path", r.region).mode("append").save()
+      val wal = frame((1L to 4L).map(k => (k, "a", s"w$k")), 1).selectExpr(
+        "rowkey", "qualifier", "rowkey * 2 AS seq",
+        "IF(rowkey = 3, 'delete', 'put') AS op", "value")
+      KvReplication.ship(spark, wal, r.repl, batches = 1)
+      ()
+    }),
+    Op("bulkLoad", r => Seq(r.store, r.staging),
+      r => { KvCompaction.bulkLoad(r.staging, r.store); () }),
+    Op("mergeRegions", r => Seq(r.store, r.region, r.merged),
+      r => { KvCompaction.mergeRegions(r.store, r.region, r.merged); () }),
+    Op("applyShipped", r => Seq(r.replica),
+      r => { KvReplication.applyShipped(spark, r.repl, r.replica); () }))
 
   private def withHook[A](hook: String => Unit)(body: => A): A = {
     KvFiles.beforeStep = hook
@@ -58,20 +94,22 @@ class KvCrashSpec extends SparkSpec {
 
   test("a kill at any storage step leaves committed-or-invisible snapshots and a clean re-run") {
     val base = Files.createTempDirectory("kv_crash_sweep")
-    val incCells = version("v2").orderBy("rowkey", "qualifier", "value").collect().toSeq
-    // record: the state before each operation, and its step count
+    // record: the state before each operation, its step count, and the
+    // cells its stores read before and after it
     val rec = Roots(Files.createDirectories(base.resolve("rec")))
-    val counts = ops.indices.map { j =>
+    val recorded = ops.indices.map { j =>
       copyTree(rec.dir, base.resolve(s"before$j"))
+      val before = ops(j).stores(rec).map(cells)
       val n = new AtomicInteger
-      withHook(s => if (s.contains(rec.dir.toString)) n.incrementAndGet())(ops(j)._2(rec))
-      n.get
+      withHook(s => if (s.contains(rec.dir.toString)) n.incrementAndGet())(ops(j).run(rec))
+      (n.get, before.zip(ops(j).stores(rec).map(cells)))
     }
+    val counts = recorded.map(_._1)
     assert(counts.forall(_ > 0), s"an operation took no storage step: $counts")
-    info(s"storage steps per operation: ${ops.map(_._1).zip(counts).mkString(", ")}")
+    info(s"storage steps per operation: ${ops.map(_.name).zip(counts).mkString(", ")}")
 
     for (j <- ops.indices; k <- 0 until counts(j)) {
-      val (op, run) = ops(j)
+      val Op(op, stores, run) = ops(j)
       val what = s"$op killed at step $k of ${counts(j)}"
       val r = Roots(base.resolve(s"k$j-$k"))
       copyTree(base.resolve(s"before$j"), r.dir)
@@ -98,41 +136,17 @@ class KvCrashSpec extends SparkSpec {
         assert(KvSnapshots.list(root).toSet == before.toSet ++ published, what)
         KvSnapshots.list(root).foreach(KvSnapshots.verify(spark, root, _))
       }
-      // the live store reads exactly its pre- or post-operation cells
-      // (compaction is lossless, so both are the incremental's cells)
-      if (op == "clone")
-        assert(!Files.exists(Paths.get(r.store)) || cells(r.store) == incCells, what)
-      if (op == "compact") assert(cells(r.store) == incCells, what)
+      // every store the operation touches reads exactly its pre- or its
+      // post-operation cells: none lost, none duplicated
+      stores(r).zip(recorded(j)._2).foreach { case (store, (pre, post)) =>
+        val now = cells(store)
+        assert(now == pre || now == post, s"$what: $store reads $now")
+      }
 
       run(r)
       val temps = walk(r.dir).filter(p => KvFiles.isTemp(p.getFileName.toString))
       assert(temps.isEmpty, s"$what: the re-run left $temps")
     }
     graft.util.Scratch.deleteTree(base.toString)
-  }
-
-  test("a process crash between install's two moves is undone by the next compact or clone") {
-    val r = Roots(Files.createTempDirectory("kv_crash_aside"))
-    KvSnapshots.create(version("v1"), r.src, "base")
-    KvSnapshots.clone(r.src, "base", r.store)
-    val expected = cells(r.store)
-    // the state a kill between the moves leaves: live moved to its
-    // install sibling, nothing at the live path
-    def crashAside(live: String): Unit = {
-      val p = Paths.get(live)
-      Files.move(p, p.resolveSibling(s".tmp-${p.getFileName}.old"))
-    }
-    crashAside(r.store)
-    KvCompaction.compact(spark, r.store, targetFiles = 1)
-    assert(cells(r.store) == expected, "compaction must restore the store, then compact it")
-    // a clone whose pre-created empty destination was moved aside
-    val dest = r.dir.resolve("clone")
-    Files.createDirectories(dest)
-    crashAside(dest.toString)
-    KvSnapshots.clone(r.src, "base", dest.toString)
-    assert(cells(dest.toString) == expected)
-    val temps = walk(r.dir).filter(p => KvFiles.isTemp(p.getFileName.toString))
-    assert(temps.isEmpty, s"recovery left $temps")
-    graft.util.Scratch.deleteTree(r.dir.toString)
   }
 }

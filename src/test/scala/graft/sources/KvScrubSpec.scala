@@ -41,6 +41,8 @@ class KvScrubSpec extends SparkSpec {
     val f = KvScrub.scrub(spark, store)
     assert(f.map(x => (x.file, x.kind)) == Seq(("zzz-handplaced.kv", "orphan")),
       s"unexpected findings: $f")
+    assert(spark.read.format("graft-kv").load(store).filter("qualifier = 'q'").count() == 0,
+      "an orphan was read")
   }
 
   test("all three classes surface together, sorted by file name") {

@@ -49,6 +49,22 @@ class KvSnapshotsSpec extends SparkSpec {
     assert(e.getMessage.contains("bytes") || e.getMessage.contains("checksum"))
   }
 
+  test("verify fails a data dir whose index disagrees with the manifest, not an unindexed file") {
+    val root = freshRoot()
+    KvSnapshots.create(cells, root, "s1")
+    val data = Paths.get(root, "s1", "data").toString
+    val m = KvMeta.files(data).head
+    // the index a restore would read names other bytes than the manifest
+    KvMeta.commit(data, Seq(m.copy(md5 = "0" * 32)))
+    val e = intercept[IllegalArgumentException] { KvSnapshots.verify(spark, root, "s1") }
+    assert(e.getMessage.contains("disagrees") && e.getMessage.contains(m.file))
+    KvMeta.commit(data, Seq(m))
+    KvSnapshots.verify(spark, root, "s1")
+    // an unindexed file is not snapshot content: no reader opens it
+    Files.writeString(Paths.get(data, "zz-stray.kv"), "1\tq\tv\n")
+    KvSnapshots.verify(spark, root, "s1")
+  }
+
   test("create's manifest comes from the write-time commit messages, not a driver re-read") {
     val root = freshRoot()
     KvSnapshots.create(cells, root, "s1")
@@ -787,13 +803,13 @@ class KvSnapshotsSpec extends SparkSpec {
     KvReplication.ship(spark, replWal, dest, batches = 4)
     val store = freshRoot() + "/store"
     // kill in the first-apply window the r13 advice flagged: the rebuilt
-    // store is already swapped in, but the applied ledger never commits.
+    // store's index is already committed, but the applied ledger is not.
     // Without the provisional (-1) ledger committed at adoption time,
     // the retry would see data-files-but-no-ledger and PERMANENTLY
     // refuse a legitimate replica.
     var swapped = false
     KvFiles.beforeStep = s =>
-      if (s.startsWith("install-in ")) swapped = true
+      if (s == s"commit $store/${KvMeta.FILE}") swapped = true
       else if (swapped && s.startsWith(s"publish ${Paths.get(dest, "applied")}"))
         throw new RuntimeException("injected kill after swap, before ledger commit")
     try intercept[RuntimeException] {
@@ -810,7 +826,7 @@ class KvSnapshotsSpec extends SparkSpec {
     assert(KvReplication.applyShipped(spark, dest, store) == n)
   }
 
-  test("apply killed between the two moves of its install keeps the previous replica live") {
+  test("apply killed before its index commit keeps the previous replica live") {
     val dest = freshRoot()
     KvFiles.beforeStep = killAtOffsetCommit(dest, batch = 2) // commit batches 0 and 1
     try intercept[RuntimeException] {
@@ -823,17 +839,17 @@ class KvSnapshotsSpec extends SparkSpec {
     val previous = cells()
     assert(previous.size == n1 && n1 > 0)
     KvReplication.ship(spark, replWal, dest, batches = 4)
-    // the catch-up rebuild is written; the old replica has been moved
-    // aside and the kill lands before the new one moves in
-    KvFiles.beforeStep = s => if (s == s"install-in $store")
-      throw new RuntimeException("injected kill between the install moves")
+    // the catch-up rebuild is written and linked into the store; the
+    // kill lands before the index that would swap it in is published
+    KvFiles.beforeStep = s => if (s == s"publish $store/${KvMeta.FILE}")
+      throw new RuntimeException("injected kill before the index commit")
     try intercept[RuntimeException] {
       KvReplication.applyShipped(spark, dest, store)
     } finally KvFiles.beforeStep = _ => ()
-    assert(cells() == previous, "the previous replica must be back at the live path")
+    assert(cells() == previous, "the previous replica must stay live")
     val siblings = Files.list(Paths.get(store).getParent)
     try assert(!siblings.iterator().asScala.exists(p => KvFiles.isTemp(p.getFileName.toString)),
-      "a rolled-back install stranded a temp sibling")
+      "a killed apply stranded its staging dir")
     finally siblings.close()
     // the retry converges to exactly full-log replay
     assert(KvReplication.applyShipped(spark, dest, store) == replExpected.count())

@@ -9,8 +9,9 @@
 # SF_DIR reaches Bench as SPARK_GRAFT_SF_DIR; a main that takes the data
 # dir as an argument gets it in [args...], e.g. graft.Inspect:
 #   tools/run_bench.sh SF_DIR OUT.txt 8g graft.Inspect SF_DIR --runs 2 key...
-# Env passthrough: SPARK_GRAFT_* (CPUS defaults to 32 here — the bench
-# protocol width), plus SNAPSHOT=dir to reuse an existing snapshot.
+# Env passthrough: SPARK_GRAFT_* (unset SPARK_GRAFT_CPUS leaves the width
+# to graft.GraftSession.cpus), plus SNAPSHOT=dir to reuse an existing
+# snapshot.
 set -euo pipefail
 SF_DIR=$1; OUT=$2; HEAP=${3:-8g}; MAIN=${4:-graft.Bench}; shift $(( $# > 4 ? 4 : $# ))
 REPO=$(cd "$(dirname "$0")/.." && pwd)
@@ -27,7 +28,7 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
+SPARK_GRAFT_SF_DIR="$SF_DIR" \
 java -Xmx"$HEAP" $ADD_OPENS \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$SNAP:/opt/spark/jars/*" "$MAIN" "$@" > "$OUT" 2> "${OUT%.json}.log"
