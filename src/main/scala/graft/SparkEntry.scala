@@ -1,13 +1,15 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.operators.Key
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
-  * Every implemented operator from SURVEY.md §2.B registers here: a
-  * `queries` entry (Spark impl) and, when SQL-expressible, a matching
-  * `oracleSql` entry (DuckDB). Column names are aliased identically on
-  * both sides — the driver sorts columns by name before hashing.
+  * Every graded key is one [[operators.Key]] in its operator module's
+  * `keys` list: its name, its Spark plan and its DuckDB oracle SQL.
+  * `queries` and `oracleSql` are derived from those lists. Column names
+  * are aliased identically on both sides — the driver sorts columns by
+  * name before hashing.
   */
 object SparkEntry {
 
@@ -15,38 +17,29 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     operators.Aggregations.aggPricingSummary(spark, "/root/testdata/sf0.001")
 
+  /** Every graded key, declared once in its operator module's `keys`; a
+    * name declared in two modules fails here. */
+  private lazy val keys: Seq[Key] = Key.distinct(Seq(
+    operators.Scans.keys,
+    operators.Filters.keys,
+    operators.Joins.keys,
+    operators.Graph.keys,
+    operators.Aggregations.keys,
+    operators.SetOps.keys,
+    operators.Windows.keys,
+    operators.Scalars.keys,
+    operators.TimeSeries.keys,
+    operators.LlmDedup.keys,
+    operators.LlmVector.keys,
+    operators.LlmText.keys,
+    operators.Multimodal.keys,
+    operators.Sources.keys).flatten)
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    operators.Scans.queries ++
-      operators.Filters.queries ++
-      operators.Joins.queries ++
-      operators.Graph.queries ++
-      operators.Aggregations.queries ++
-      operators.SetOps.queries ++
-      operators.Windows.queries ++
-      operators.Scalars.queries ++
-      operators.TimeSeries.queries ++
-      operators.LlmDedup.queries ++
-      operators.LlmVector.queries ++
-      operators.LlmText.queries ++
-      operators.Multimodal.queries ++
-      operators.Sources.queries
+    keys.map(k => k.name -> k.run).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    operators.Scans.oracle ++
-      operators.Filters.oracle ++
-      operators.Joins.oracle ++
-      operators.Graph.oracle ++
-      operators.Aggregations.oracle ++
-      operators.SetOps.oracle ++
-      operators.Windows.oracle ++
-      operators.Scalars.oracle ++
-      operators.TimeSeries.oracle ++
-      operators.LlmDedup.oracle ++
-      operators.LlmVector.oracle ++
-      operators.LlmText.oracle ++
-      operators.Multimodal.oracle ++
-      operators.Sources.oracle
+    * the same parquet tables. */
+  def oracleSql: Map[String, String] = keys.map(k => k.name -> k.oracle).toMap
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -77,9 +76,4 @@ object TextExprs {
     require(exprs.length == 1, s"rolling_hash expects 1 argument, got ${exprs.length}")
     RollingHash(exprs.head)
   }
-
-  /** Registers `rolling_hash`; idempotent (same pattern as VectorExprs). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_hash", build, "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -157,17 +156,5 @@ object VectorExprs {
   private[graft] def buildSqL2(exprs: Seq[Expression]): DoubleSqL2 = {
     require(exprs.length == 2, s"double_sql2 expects 2 arguments, got ${exprs.length}")
     DoubleSqL2(exprs(0), exprs(1))
-  }
-
-  /** Registers `float_dot` / `double_sql2` in the session's function
-    * registry so they are usable from `expr(...)`/SQL. Idempotent.
-    * (The library-install path would be a
-    * SparkSessionExtensions.injectFunction; runtime registration keeps
-    * the harness's plain sessions working.) */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "float_dot", build, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "double_sql2", buildSqL2, "built-in")
   }
 }

@@ -223,42 +223,21 @@ object Aggregations {
       |FROM kmv JOIN np USING (event_type) JOIN ex USING (event_type)
       |ORDER BY event_type""".stripMargin
 
-  /** ROLLUP(region, nation) revenue. Spark sorts nulls first by default;
-    * the oracle says NULLS FIRST explicitly. */
-  def aggRollup(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = lineitem(spark, sfDir)
-      .join(orders(spark, sfDir), col("l_orderkey") === col("o_orderkey"))
-      .join(customer(spark, sfDir), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(nation(spark, sfDir)), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(region(spark, sfDir)), col("n_regionkey") === col("r_regionkey"))
-      .select(col("r_name"), col("n_name"), discPrice.as("dp"))
-    // rollup().orderBy() on join lineage trips Spark's ambiguous-self-join
-    // check (the grouping attrs shadow the join output); localCheckpoint-free
-    // fix: route through a temp view + SQL, which resolves by name.
-    // The view name is PER-CALL unique (temp views are session-global:
-    // a fixed name would let a concurrent run's createOrReplaceTempView
-    // swap the data out from under this query), and dropped once the
-    // result is computed — sql() resolves the view eagerly at analysis
-    // time, so the returned frame survives the drop.
-    val view = s"graft_rollup_base_${java.util.UUID.randomUUID().toString.take(8)}"
-    base.createOrReplaceTempView(view)
-    try base.sparkSession.sql(
-      s"""SELECT r_name, n_name, CAST(CAST(SUM(dp) AS DECIMAL(18,2)) AS DOUBLE) AS revenue
-        |FROM $view
-        |GROUP BY ROLLUP(r_name, n_name)
-        |ORDER BY r_name ASC NULLS FIRST, n_name ASC NULLS FIRST""".stripMargin)
-    finally base.sparkSession.catalog.dropTempView(view)
-  }
-
-  val aggRollupOracle: String =
+  /** ROLLUP(region, nation) revenue, as SQL over the tables' paths: the
+    * DataFrame form (rollup().orderBy() on join lineage) trips Spark's
+    * ambiguous-self-join check, while SQL resolves the grouping columns
+    * by name. Spark sorts nulls first by default; the text says NULLS
+    * FIRST explicitly for DuckDB. */
+  val aggRollup: Key = Key.sql("agg_rollup") { t =>
     s"""SELECT r_name, n_name, CAST(ROUND(SUM($revenueSqlFrag), 2) AS DOUBLE) AS revenue
-       |FROM lineitem
-       |JOIN orders ON l_orderkey = o_orderkey
-       |JOIN customer ON o_custkey = c_custkey
-       |JOIN nation ON c_nationkey = n_nationkey
-       |JOIN region ON n_regionkey = r_regionkey
+       |FROM ${t("lineitem")}
+       |JOIN ${t("orders")} ON l_orderkey = o_orderkey
+       |JOIN ${t("customer")} ON o_custkey = c_custkey
+       |JOIN ${t("nation")} ON c_nationkey = n_nationkey
+       |JOIN ${t("region")} ON n_regionkey = r_regionkey
        |GROUP BY ROLLUP(r_name, n_name)
        |ORDER BY r_name NULLS FIRST, n_name NULLS FIRST""".stripMargin
+  }
 
   /** CUBE(returnflag, linestatus) counts + exact sums. */
   def aggCube(spark: SparkSession, sfDir: String): DataFrame =
@@ -1432,75 +1411,42 @@ object Aggregations {
       |FROM med JOIN mad USING (nk) JOIN nation ON nk = n_nationkey
       |ORDER BY n_name""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_theil" -> (aggTheil _),
-    "agg_mad" -> (aggMad _),
-    "agg_welch_ttest" -> (aggWelchTtest _),
-    "agg_cramers_v" -> (aggCramersV _),
-    "agg_ks_test" -> (aggKsTest _),
-    "agg_mann_whitney" -> (aggMannWhitney _),
-    "agg_bitmap_distinct" -> (aggBitmapDistinct _),
-    "agg_hhi" -> (aggHhi _),
-    "agg_pareto" -> (aggPareto _),
-    "agg_benford" -> (aggBenford _),
-    "agg_gini" -> (aggGini _),
-    "agg_chi_square" -> (aggChiSquare _),
-    "agg_sketch_intersect" -> (aggSketchIntersect _),
-    "agg_bool_aggs" -> (aggBoolAggs _),
-    "agg_weighted_median" -> (aggWeightedMedian _),
-    "agg_skew_kurtosis" -> (aggSkewKurtosis _),
-    "agg_hist_fixed" -> (aggHistFixed _),
-    "agg_mode" -> (aggMode _),
-    "agg_partial_merge" -> (aggPartialMerge _),
-    "agg_corr_exact" -> (aggCorrExact _),
-    "agg_regr_slope" -> (aggRegrSlope _),
-    "agg_percentiles" -> (aggPercentiles _),
-    "agg_pricing_summary" -> (aggPricingSummary _),
-    "agg_global" -> (aggGlobal _),
-    "agg_having" -> (aggHaving _),
-    "agg_count_distinct" -> (aggCountDistinct _),
-    "agg_approx_hll" -> (aggApproxHll _),
-    "agg_sketch_merge" -> (aggSketchMerge _),
-    "agg_rollup" -> (aggRollup _),
-    "agg_cube" -> (aggCube _),
-    "agg_grouping_sets" -> (aggGroupingSets _),
-    "agg_collect_sorted" -> (aggCollectSorted _),
-    "udaf_weighted_avg" -> (udafWeightedAvg _))
+  val keys: Seq[Key] = Seq(
+    Key("agg_theil", aggTheil, aggTheilOracle),
+    Key("agg_mad", aggMad, aggMadOracle),
+    Key("agg_welch_ttest", aggWelchTtest, aggWelchTtestOracle),
+    Key("agg_cramers_v", aggCramersV, aggCramersVOracle),
+    Key("agg_ks_test", aggKsTest, aggKsTestOracle),
+    Key("agg_mann_whitney", aggMannWhitney, aggMannWhitneyOracle),
+    Key("agg_bitmap_distinct", aggBitmapDistinct, aggBitmapDistinctOracle),
+    Key("agg_hhi", aggHhi, aggHhiOracle),
+    Key("agg_pareto", aggPareto, aggParetoOracle),
+    Key("agg_benford", aggBenford, aggBenfordOracle),
+    Key("agg_gini", aggGini, aggGiniOracle),
+    Key("agg_chi_square", aggChiSquare, aggChiSquareOracle),
+    Key("agg_sketch_intersect", aggSketchIntersect, aggSketchIntersectOracle),
+    Key("agg_bool_aggs", aggBoolAggs, aggBoolAggsOracle),
+    Key("agg_weighted_median", aggWeightedMedian, aggWeightedMedianOracle),
+    Key("agg_skew_kurtosis", aggSkewKurtosis, aggSkewKurtosisOracle),
+    Key("agg_hist_fixed", aggHistFixed, aggHistFixedOracle),
+    Key("agg_mode", aggMode, aggModeOracle),
+    Key("agg_partial_merge", aggPartialMerge, aggPartialMergeOracle),
+    Key("agg_corr_exact", aggCorrExact, aggCorrExactOracle),
+    Key("agg_regr_slope", aggRegrSlope, aggRegrSlopeOracle),
+    Key("agg_percentiles", aggPercentiles, aggPercentilesOracle),
+    Key("agg_pricing_summary", aggPricingSummary, aggPricingSummaryOracle),
+    Key("agg_global", aggGlobal, aggGlobalOracle),
+    Key("agg_having", aggHaving, aggHavingOracle),
+    Key("agg_count_distinct", aggCountDistinct, aggCountDistinctOracle),
+    Key("agg_approx_hll", aggApproxHll, aggApproxHllOracle),
+    Key("agg_sketch_merge", aggSketchMerge, aggSketchMergeOracle),
+    aggRollup,
+    Key("agg_cube", aggCube, aggCubeOracle),
+    Key("agg_grouping_sets", aggGroupingSets, aggGroupingSetsOracle),
+    Key("agg_collect_sorted", aggCollectSorted, aggCollectSortedOracle),
+    Key("udaf_weighted_avg", udafWeightedAvg, udafWeightedAvgOracle))
 
-  val oracle: Map[String, String] = Map(
-    "agg_theil" -> aggTheilOracle,
-    "agg_mad" -> aggMadOracle,
-    "agg_welch_ttest" -> aggWelchTtestOracle,
-    "agg_cramers_v" -> aggCramersVOracle,
-    "agg_ks_test" -> aggKsTestOracle,
-    "agg_mann_whitney" -> aggMannWhitneyOracle,
-    "agg_bitmap_distinct" -> aggBitmapDistinctOracle,
-    "agg_hhi" -> aggHhiOracle,
-    "agg_pareto" -> aggParetoOracle,
-    "agg_benford" -> aggBenfordOracle,
-    "agg_gini" -> aggGiniOracle,
-    "agg_chi_square" -> aggChiSquareOracle,
-    "agg_sketch_intersect" -> aggSketchIntersectOracle,
-    "agg_bool_aggs" -> aggBoolAggsOracle,
-    "agg_weighted_median" -> aggWeightedMedianOracle,
-    "agg_skew_kurtosis" -> aggSkewKurtosisOracle,
-    "agg_hist_fixed" -> aggHistFixedOracle,
-    "agg_mode" -> aggModeOracle,
-    "agg_partial_merge" -> aggPartialMergeOracle,
-    "agg_corr_exact" -> aggCorrExactOracle,
-    "agg_regr_slope" -> aggRegrSlopeOracle,
-    "agg_percentiles" -> aggPercentilesOracle,
-    "agg_pricing_summary" -> aggPricingSummaryOracle,
-    "agg_global" -> aggGlobalOracle,
-    "agg_having" -> aggHavingOracle,
-    "agg_count_distinct" -> aggCountDistinctOracle,
-    "agg_approx_hll" -> aggApproxHllOracle,
-    "agg_sketch_merge" -> aggSketchMergeOracle,
-    "agg_rollup" -> aggRollupOracle,
-    "agg_cube" -> aggCubeOracle,
-    "agg_grouping_sets" -> aggGroupingSetsOracle,
-    "agg_collect_sorted" -> aggCollectSortedOracle,
-    "udaf_weighted_avg" -> udafWeightedAvgOracle)
+  val queries: Map[String, Key.Run] = Key.queries(keys)
 }
 
 /** Qty-weighted average price: buffer keeps exact partial sums

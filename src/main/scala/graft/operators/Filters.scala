@@ -110,29 +110,16 @@ object Filters {
     * three-valued-logic hazard here, which is WHY warehouses prefer
     * it). Semantics graded: orders with at least one >$2000 line and
     * no returned line. */
-  def filterExists(spark: SparkSession, sfDir: String): DataFrame = {
-    orders(spark, sfDir).createOrReplaceTempView("g_ex_orders")
-    lineitem(spark, sfDir).createOrReplaceTempView("g_ex_lineitem")
-    spark.sql(
-      """SELECT o_orderkey, o_orderstatus,
-        |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-        |FROM g_ex_orders o
-        |WHERE EXISTS (SELECT 1 FROM g_ex_lineitem l
-        |              WHERE l.l_orderkey = o.o_orderkey AND l.l_extendedprice > 2000)
-        |  AND NOT EXISTS (SELECT 1 FROM g_ex_lineitem l
-        |                  WHERE l.l_orderkey = o.o_orderkey AND l.l_returnflag = 'R')
-        |ORDER BY o_orderkey""".stripMargin)
+  val filterExists: Key = Key.sql("filter_exists") { t =>
+    s"""SELECT o_orderkey, o_orderstatus,
+       |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+       |FROM ${t("orders")} o
+       |WHERE EXISTS (SELECT 1 FROM ${t("lineitem")} l
+       |              WHERE l.l_orderkey = o.o_orderkey AND l.l_extendedprice > 2000)
+       |  AND NOT EXISTS (SELECT 1 FROM ${t("lineitem")} l
+       |                  WHERE l.l_orderkey = o.o_orderkey AND l.l_returnflag = 'R')
+       |ORDER BY o_orderkey""".stripMargin
   }
-
-  val filterExistsOracle: String =
-    """SELECT o_orderkey, o_orderstatus,
-      |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-      |FROM orders o
-      |WHERE EXISTS (SELECT 1 FROM lineitem l
-      |              WHERE l.l_orderkey = o.o_orderkey AND l.l_extendedprice > 2000)
-      |  AND NOT EXISTS (SELECT 1 FROM lineitem l
-      |                  WHERE l.l_orderkey = o.o_orderkey AND l.l_returnflag = 'R')
-      |ORDER BY o_orderkey""".stripMargin
 
   /** TPC-H Q2 SHAPE (r10) — the classic DECORRELATION STRESS the
     * scalar (`filter_correlated`) and predicate (`filter_exists`)
@@ -234,21 +221,14 @@ object Filters {
       |       FROM lineitem l2 WHERE l2.l_partkey = l.l_partkey)
       |GROUP BY p.p_brand ORDER BY p.p_brand""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "filter_q17_avg_qty" -> (filterQ17AvgQty _),
-    "filter_q2_min_cost" -> (filterQ2MinCost _),
-    "filter_exists" -> (filterExists _),
-    "filter_correlated" -> (filterCorrelated _),
-    "filter_in_like_between" -> (filterInLikeBetween _),
-    "filter_null_semantics" -> (filterNullSemantics _),
-    "project_case_when" -> (projectCaseWhen _))
+  val keys: Seq[Key] = Seq(
+    Key("filter_q17_avg_qty", filterQ17AvgQty, filterQ17AvgQtyOracle),
+    Key("filter_q2_min_cost", filterQ2MinCost, filterQ2MinCostOracle),
+    filterExists,
+    Key("filter_correlated", filterCorrelated, filterCorrelatedOracle),
+    Key("filter_in_like_between", filterInLikeBetween, filterInLikeBetweenOracle),
+    Key("filter_null_semantics", filterNullSemantics, filterNullSemanticsOracle),
+    Key("project_case_when", projectCaseWhen, projectCaseWhenOracle))
 
-  val oracle: Map[String, String] = Map(
-    "filter_q17_avg_qty" -> filterQ17AvgQtyOracle,
-    "filter_q2_min_cost" -> filterQ2MinCostOracle,
-    "filter_exists" -> filterExistsOracle,
-    "filter_correlated" -> filterCorrelatedOracle,
-    "filter_in_like_between" -> filterInLikeBetweenOracle,
-    "filter_null_semantics" -> filterNullSemanticsOracle,
-    "project_case_when" -> projectCaseWhenOracle)
+  val queries: Map[String, Key.Run] = Key.queries(keys)
 }

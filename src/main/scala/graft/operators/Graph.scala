@@ -1118,37 +1118,22 @@ object Graph {
        |ORDER BY node""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_communities" -> (graphCommunities _),
-    "graph_scc" -> (graphScc _),
-    "graph_condensation" -> (graphCondensation _),
-    "graph_closeness" -> (graphCloseness _),
-    "graph_reciprocity" -> (graphReciprocity _),
-    "graph_kcore" -> (graphKcore _),
-    "graph_jaccard" -> (graphJaccard _),
-    "graph_pagerank" -> (graphPagerank _),
-    "graph_hits" -> (graphHits _),
-    "graph_triangles" -> (graphTriangles _),
-    "graph_local_clustering" -> (graphLocalClustering _),
-    "graph_assortativity" -> (graphAssortativity _),
-    "graph_components" -> (graphComponents _),
-    "graph_bfs" -> (graphBfs _),
-    "graph_sssp" -> (graphSssp _))
+  val keys: Seq[Key] = Seq(
+    Key("graph_communities", graphCommunities, graphCommunitiesOracle),
+    Key("graph_scc", graphScc, graphSccOracle),
+    Key("graph_condensation", graphCondensation, graphCondensationOracle),
+    Key("graph_closeness", graphCloseness, graphClosenessOracle),
+    Key("graph_reciprocity", graphReciprocity, graphReciprocityOracle),
+    Key("graph_kcore", graphKcore, graphKcoreOracle),
+    Key("graph_jaccard", graphJaccard, graphJaccardOracle),
+    Key("graph_pagerank", graphPagerank, graphPagerankOracle),
+    Key("graph_hits", graphHits, graphHitsOracle),
+    Key("graph_triangles", graphTriangles, graphTrianglesOracle),
+    Key("graph_local_clustering", graphLocalClustering, graphLocalClusteringOracle),
+    Key("graph_assortativity", graphAssortativity, graphAssortativityOracle),
+    Key("graph_components", graphComponents, graphComponentsOracle),
+    Key("graph_bfs", graphBfs, graphBfsOracle),
+    Key("graph_sssp", graphSssp, graphSsspOracle))
 
-  val oracle: Map[String, String] = Map(
-    "graph_communities" -> graphCommunitiesOracle,
-    "graph_scc" -> graphSccOracle,
-    "graph_condensation" -> graphCondensationOracle,
-    "graph_closeness" -> graphClosenessOracle,
-    "graph_reciprocity" -> graphReciprocityOracle,
-    "graph_kcore" -> graphKcoreOracle,
-    "graph_jaccard" -> graphJaccardOracle,
-    "graph_pagerank" -> graphPagerankOracle,
-    "graph_hits" -> graphHitsOracle,
-    "graph_triangles" -> graphTrianglesOracle,
-    "graph_local_clustering" -> graphLocalClusteringOracle,
-    "graph_assortativity" -> graphAssortativityOracle,
-    "graph_components" -> graphComponentsOracle,
-    "graph_bfs" -> graphBfsOracle,
-    "graph_sssp" -> graphSsspOracle)
+  val queries: Map[String, Key.Run] = Key.queries(keys)
 }

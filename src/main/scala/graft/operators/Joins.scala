@@ -489,30 +489,16 @@ object Joins {
     * aggregation problem, not a join hint problem). Routed through
     * `spark.sql` because `NOT IN` is the front-end surface where the
     * semantics live. */
-  def joinNotIn(spark: SparkSession, sfDir: String): DataFrame = {
-    orders(spark, sfDir)
-      .withColumn("k", when(col("o_orderkey") % 50 === 0, lit(null))
-        .otherwise(col("o_custkey")))
-      .createOrReplaceTempView("g_nin_orders")
-    customer(spark, sfDir).createOrReplaceTempView("g_nin_customer")
-    spark.sql(
-      """SELECT o_orderstatus, COUNT(*) AS n_orders,
-        |  SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS cents
-        |FROM g_nin_orders
-        |WHERE k NOT IN (SELECT c_custkey FROM g_nin_customer
-        |                WHERE c_mktsegment = 'BUILDING')
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)
+  val joinNotIn: Key = Key.sql("join_not_in") { t =>
+    s"""WITH o AS (SELECT o_orderstatus, o_totalprice,
+       |    CASE WHEN o_orderkey % 50 = 0 THEN NULL ELSE o_custkey END AS k
+       |  FROM ${t("orders")})
+       |SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n_orders,
+       |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS cents
+       |FROM o
+       |WHERE k NOT IN (SELECT c_custkey FROM ${t("customer")} WHERE c_mktsegment = 'BUILDING')
+       |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin
   }
-
-  val joinNotInOracle: String =
-    """WITH o AS (SELECT o_orderstatus, o_totalprice,
-      |    CASE WHEN o_orderkey % 50 = 0 THEN NULL ELSE o_custkey END AS k
-      |  FROM orders)
-      |SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n_orders,
-      |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS cents
-      |FROM o
-      |WHERE k NOT IN (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')
-      |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin
 
   def joinNullSafe(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = events(spark, sfDir)
@@ -540,45 +526,26 @@ object Joins {
       |ON l.k IS NOT DISTINCT FROM r.k
       |ORDER BY l.k NULLS FIRST""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "join_asof_tolerance" -> (joinAsofTolerance _),
-    "join_null_safe" -> (joinNullSafe _),
-    "join_asof_nearest" -> (joinAsofNearest _),
-    "join_bucketed" -> (joinBucketed _),
-    "join_skew_salted" -> (joinSkewSalted _),
-    "join_broadcast" -> (joinBroadcast _),
-    "join_shuffle_large" -> (joinShuffleLarge _),
-    "join_star_5way" -> (joinStar5way _),
-    "join_left_outer" -> (joinLeftOuter _),
-    "join_full_outer" -> (joinFullOuter _),
-    "join_semi" -> (joinSemi _),
-    "join_anti" -> (joinAnti _),
-    "join_cross" -> (joinCross _),
-    "join_theta_range" -> (joinThetaRange _),
-    "join_asof" -> (joinAsof _),
-    "join_asof_forward" -> (joinAsofForward _),
-    "join_not_in" -> (joinNotIn _),
-    "join_interval" -> (joinInterval _),
-    "join_range_bucket" -> (joinRangeBucket _))
+  val keys: Seq[Key] = Seq(
+    Key("join_asof_tolerance", joinAsofTolerance, joinAsofToleranceOracle),
+    Key("join_null_safe", joinNullSafe, joinNullSafeOracle),
+    Key("join_asof_nearest", joinAsofNearest, joinAsofNearestOracle),
+    Key("join_bucketed", joinBucketed, joinBucketedOracle),
+    Key("join_skew_salted", joinSkewSalted, joinSkewSaltedOracle),
+    Key("join_broadcast", joinBroadcast, joinBroadcastOracle),
+    Key("join_shuffle_large", joinShuffleLarge, joinShuffleLargeOracle),
+    Key("join_star_5way", joinStar5way, joinStar5wayOracle),
+    Key("join_left_outer", joinLeftOuter, joinLeftOuterOracle),
+    Key("join_full_outer", joinFullOuter, joinFullOuterOracle),
+    Key("join_semi", joinSemi, joinSemiOracle),
+    Key("join_anti", joinAnti, joinAntiOracle),
+    Key("join_cross", joinCross, joinCrossOracle),
+    Key("join_theta_range", joinThetaRange, joinThetaRangeOracle),
+    Key("join_asof", joinAsof, joinAsofOracle),
+    Key("join_asof_forward", joinAsofForward, joinAsofForwardOracle),
+    joinNotIn,
+    Key("join_interval", joinInterval, joinIntervalOracle),
+    Key("join_range_bucket", joinRangeBucket, joinRangeBucketOracle))
 
-  val oracle: Map[String, String] = Map(
-    "join_asof_tolerance" -> joinAsofToleranceOracle,
-    "join_null_safe" -> joinNullSafeOracle,
-    "join_asof_nearest" -> joinAsofNearestOracle,
-    "join_bucketed" -> joinBucketedOracle,
-    "join_skew_salted" -> joinSkewSaltedOracle,
-    "join_broadcast" -> joinBroadcastOracle,
-    "join_shuffle_large" -> joinShuffleLargeOracle,
-    "join_star_5way" -> joinStar5wayOracle,
-    "join_left_outer" -> joinLeftOuterOracle,
-    "join_full_outer" -> joinFullOuterOracle,
-    "join_semi" -> joinSemiOracle,
-    "join_anti" -> joinAntiOracle,
-    "join_cross" -> joinCrossOracle,
-    "join_theta_range" -> joinThetaRangeOracle,
-    "join_asof" -> joinAsofOracle,
-    "join_asof_forward" -> joinAsofForwardOracle,
-    "join_not_in" -> joinNotInOracle,
-    "join_interval" -> joinIntervalOracle,
-    "join_range_bucket" -> joinRangeBucketOracle)
+  val queries: Map[String, Key.Run] = Key.queries(keys)
 }

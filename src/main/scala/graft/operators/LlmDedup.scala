@@ -342,8 +342,6 @@ object LlmDedup {
           col(s"x.$band") === col(s"y.$band") && col("x.doc_id") < col("y.doc_id"))
         .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
     val cand = bandPairs("b0").union(bandPairs("b1")).distinct()
-    if (sys.env.contains("GRAFT_LOG_CANDIDATES"))
-      System.err.println(s"[minhash] reps=${reps.count()} candidates=${cand.count()}")
     MinhashStage(groups, sh, cand)
   }
 
@@ -704,7 +702,6 @@ object LlmDedup {
   /** Embedding-cosine near-duplicate pairs (brute force, cos ≥ 0.4) —
     * the exact baseline that `llm_ann_lsh` approximates at scale. */
   def llmDedupEmbed(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     // Norms once per vector (not per pair); dot product via the codegen'd
     // native float_dot expression — same fold order as zip_with/aggregate,
     // so values are bit-identical, ~20× faster on the O(n²) pair scan.
@@ -734,27 +731,17 @@ object LlmDedup {
        |WHERE ROUND(${LlmVector.cosineSql("a.embedding", "b.embedding")}, 6) >= 0.4
        |ORDER BY vec_a, vec_b""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_dedup_exact" -> (llmDedupExact _),
-    "llm_dedup_bloom" -> (llmDedupBloom _),
-    "llm_dedup_near" -> (llmDedupNear _),
-    "llm_dedup_near_prefix" -> (llmDedupNearPrefix _),
-    "llm_dedup_minhash" -> (llmDedupMinhash _),
-    "llm_minhash_jaccard" -> (llmMinhashJaccard _),
-    "llm_dedup_clusters" -> (llmDedupClusters _),
-    "llm_dedup_canonical" -> (llmDedupCanonical _),
-    "llm_dedup_simhash" -> (llmDedupSimhash _),
-    "llm_dedup_embed" -> (llmDedupEmbed _))
+  val keys: Seq[Key] = Seq(
+    Key("llm_dedup_exact", llmDedupExact, llmDedupExactOracle),
+    Key("llm_dedup_bloom", llmDedupBloom, llmDedupBloomOracle),
+    Key("llm_dedup_near", llmDedupNear, llmDedupNearOracle),
+    Key("llm_dedup_near_prefix", llmDedupNearPrefix, llmDedupNearPrefixOracle),
+    Key("llm_dedup_minhash", llmDedupMinhash, llmDedupMinhashOracle),
+    Key("llm_minhash_jaccard", llmMinhashJaccard, llmMinhashJaccardOracle),
+    Key("llm_dedup_clusters", llmDedupClusters, llmDedupClustersOracle),
+    Key("llm_dedup_canonical", llmDedupCanonical, llmDedupCanonicalOracle),
+    Key("llm_dedup_simhash", llmDedupSimhash, llmDedupSimhashOracle),
+    Key("llm_dedup_embed", llmDedupEmbed, llmDedupEmbedOracle))
 
-  val oracle: Map[String, String] = Map(
-    "llm_dedup_exact" -> llmDedupExactOracle,
-    "llm_dedup_bloom" -> llmDedupBloomOracle,
-    "llm_dedup_near" -> llmDedupNearOracle,
-    "llm_dedup_near_prefix" -> llmDedupNearPrefixOracle,
-    "llm_dedup_minhash" -> llmDedupMinhashOracle,
-    "llm_minhash_jaccard" -> llmMinhashJaccardOracle,
-    "llm_dedup_clusters" -> llmDedupClustersOracle,
-    "llm_dedup_canonical" -> llmDedupCanonicalOracle,
-    "llm_dedup_simhash" -> llmDedupSimhashOracle,
-    "llm_dedup_embed" -> llmDedupEmbedOracle)
+  val queries: Map[String, Key.Run] = Key.queries(keys)
 }

@@ -488,7 +488,6 @@ object LlmText {
     * materialized a per-char array + two interpreted lambdas per char,
     * making this the third-slowest bench key). */
   def llmFingerprint(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.TextExprs.register(spark)
     documents(spark, sfDir)
       .select(col("doc_id"), expr("rolling_hash(text)").as("fingerprint"))
       .orderBy("doc_id")
@@ -1488,73 +1487,40 @@ object LlmText {
       |  ROUND((CAST(n_terms AS DOUBLE) * sxy - sx * sy) / (CAST(n_terms AS DOUBLE) * sxx - sx * sx), 6) AS zipf_slope
       |FROM m ORDER BY lang""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_text_zipf" -> (llmTextZipf _),
-    "llm_feature_hash" -> (llmFeatureHash _),
-    "llm_keywords" -> (llmKeywords _),
-    "llm_cms_heavy_hitters" -> (llmCmsHeavyHitters _),
-    "llm_quality_ensemble" -> (llmQualityEnsemble _),
-    "llm_dsir" -> (llmDsir _),
-    "llm_collocations" -> (llmCollocations _),
-    "llm_dataset_rebalance" -> (llmDatasetRebalance _),
-    "llm_ngram_novelty" -> (llmNgramNovelty _),
-    "llm_shard_assign" -> (llmShardAssign _),
-    "llm_entropy_filter" -> (llmEntropyFilter _),
-    "llm_inverted_index" -> (llmInvertedIndex _),
-    "llm_bm25_topk" -> (llmBm25Topk _),
-    "llm_decontaminate" -> (llmDecontaminate _),
-    "llm_pii_scrub" -> (llmPiiScrub _),
-    "llm_pack_chunks" -> (llmPackChunks _),
-    "llm_sample_stratified" -> (llmSampleStratified _),
-    "llm_dedup_spans" -> (llmDedupSpans _),
-    "llm_dataset_mix" -> (llmDatasetMix _),
-    "llm_lm_score" -> (llmLmScore _),
-    "llm_curation" -> (llmCuration _),
-    "llm_text_stats" -> (llmTextStats _),
-    "llm_tfidf_top" -> (llmTfidfTop _),
-    "llm_ngrams" -> (llmNgrams _),
-    "llm_lang_id" -> (llmLangId _),
-    "llm_langid_eval" -> (llmLangidEval _),
-    "llm_quality_score" -> (llmQualityScore _),
-    "llm_repetition_filter" -> (llmRepetitionFilter _),
-    "llm_vocab_prune" -> (llmVocabPrune _),
-    "llm_winnowing" -> (llmWinnowing _),
-    "llm_token_count" -> (llmTokenCount _),
-    "llm_bpe_merges" -> (llmBpeMerges _),
-    "llm_fingerprint" -> (llmFingerprint _))
+  val keys: Seq[Key] = Seq(
+    Key("llm_text_zipf", llmTextZipf, llmTextZipfOracle),
+    Key("llm_feature_hash", llmFeatureHash, llmFeatureHashOracle),
+    Key("llm_keywords", llmKeywords, llmKeywordsOracle),
+    Key("llm_cms_heavy_hitters", llmCmsHeavyHitters, llmCmsHeavyHittersOracle),
+    Key("llm_quality_ensemble", llmQualityEnsemble, llmQualityEnsembleOracle),
+    Key("llm_dsir", llmDsir, llmDsirOracle),
+    Key("llm_collocations", llmCollocations, llmCollocationsOracle),
+    Key("llm_dataset_rebalance", llmDatasetRebalance, llmDatasetRebalanceOracle),
+    Key("llm_ngram_novelty", llmNgramNovelty, llmNgramNoveltyOracle),
+    Key("llm_shard_assign", llmShardAssign, llmShardAssignOracle),
+    Key("llm_entropy_filter", llmEntropyFilter, llmEntropyFilterOracle),
+    Key("llm_inverted_index", llmInvertedIndex, llmInvertedIndexOracle),
+    Key("llm_bm25_topk", llmBm25Topk, llmBm25TopkOracle),
+    Key("llm_decontaminate", llmDecontaminate, llmDecontaminateOracle),
+    Key("llm_pii_scrub", llmPiiScrub, llmPiiScrubOracle),
+    Key("llm_pack_chunks", llmPackChunks, llmPackChunksOracle),
+    Key("llm_sample_stratified", llmSampleStratified, llmSampleStratifiedOracle),
+    Key("llm_dedup_spans", llmDedupSpans, llmDedupSpansOracle),
+    Key("llm_dataset_mix", llmDatasetMix, llmDatasetMixOracle),
+    Key("llm_lm_score", llmLmScore, llmLmScoreOracle),
+    Key("llm_curation", llmCuration, llmCurationOracle),
+    Key("llm_text_stats", llmTextStats, llmTextStatsOracle),
+    Key("llm_tfidf_top", llmTfidfTop, llmTfidfTopOracle),
+    Key("llm_ngrams", llmNgrams, llmNgramsOracle),
+    Key("llm_lang_id", llmLangId, llmLangIdOracle),
+    Key("llm_langid_eval", llmLangidEval, llmLangidEvalOracle),
+    Key("llm_quality_score", llmQualityScore, llmQualityScoreOracle),
+    Key("llm_repetition_filter", llmRepetitionFilter, llmRepetitionFilterOracle),
+    Key("llm_vocab_prune", llmVocabPrune, llmVocabPruneOracle),
+    Key("llm_winnowing", llmWinnowing, llmWinnowingOracle),
+    Key("llm_token_count", llmTokenCount, llmTokenCountOracle),
+    Key("llm_bpe_merges", llmBpeMerges, llmBpeMergesOracle),
+    Key("llm_fingerprint", llmFingerprint, llmFingerprintOracle))
 
-  val oracle: Map[String, String] = Map(
-    "llm_text_zipf" -> llmTextZipfOracle,
-    "llm_feature_hash" -> llmFeatureHashOracle,
-    "llm_keywords" -> llmKeywordsOracle,
-    "llm_cms_heavy_hitters" -> llmCmsHeavyHittersOracle,
-    "llm_quality_ensemble" -> llmQualityEnsembleOracle,
-    "llm_dsir" -> llmDsirOracle,
-    "llm_collocations" -> llmCollocationsOracle,
-    "llm_dataset_rebalance" -> llmDatasetRebalanceOracle,
-    "llm_ngram_novelty" -> llmNgramNoveltyOracle,
-    "llm_shard_assign" -> llmShardAssignOracle,
-    "llm_entropy_filter" -> llmEntropyFilterOracle,
-    "llm_inverted_index" -> llmInvertedIndexOracle,
-    "llm_bm25_topk" -> llmBm25TopkOracle,
-    "llm_decontaminate" -> llmDecontaminateOracle,
-    "llm_pii_scrub" -> llmPiiScrubOracle,
-    "llm_pack_chunks" -> llmPackChunksOracle,
-    "llm_sample_stratified" -> llmSampleStratifiedOracle,
-    "llm_dedup_spans" -> llmDedupSpansOracle,
-    "llm_dataset_mix" -> llmDatasetMixOracle,
-    "llm_lm_score" -> llmLmScoreOracle,
-    "llm_curation" -> llmCurationOracle,
-    "llm_text_stats" -> llmTextStatsOracle,
-    "llm_tfidf_top" -> llmTfidfTopOracle,
-    "llm_ngrams" -> llmNgramsOracle,
-    "llm_lang_id" -> llmLangIdOracle,
-    "llm_langid_eval" -> llmLangidEvalOracle,
-    "llm_quality_score" -> llmQualityScoreOracle,
-    "llm_repetition_filter" -> llmRepetitionFilterOracle,
-    "llm_vocab_prune" -> llmVocabPruneOracle,
-    "llm_winnowing" -> llmWinnowingOracle,
-    "llm_token_count" -> llmTokenCountOracle,
-    "llm_bpe_merges" -> llmBpeMergesOracle,
-    "llm_fingerprint" -> llmFingerprintOracle)
+  val queries: Map[String, Key.Run] = Key.queries(keys)
 }

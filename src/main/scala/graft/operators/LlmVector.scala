@@ -38,7 +38,6 @@ object LlmVector {
     * the brute-force ANN baseline. Ranking is on the ROUNDED cosine with
     * a vec_id tie-break so both engines cut the top-k identically. */
   def llmSimCosineTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     val e = embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"),
         sqrt(expr("float_dot(embedding, embedding)")).as("nrm"))
@@ -69,7 +68,6 @@ object LlmVector {
     * restricted to the query's bucket → plain equi-join, top-3 within
     * bucket. */
   def llmAnnLsh(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     val bucketExpr = concat((1 to 8).map(i =>
       when(element_at(col("embedding"), i) >= 0, "1").otherwise("0")): _*)
     val e = embeddings(spark, sfDir)
@@ -204,7 +202,6 @@ object LlmVector {
       |GROUP BY label ORDER BY label""".stripMargin
 
   def llmAnnIvf(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     val ex = embeddings(spark, sfDir)
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
       .withColumn("v", col("v").cast("double"))
@@ -388,7 +385,6 @@ object LlmVector {
     * change a result. */
   private[graft] def rankAllJoin(spark: SparkSession, rows: DataFrame,
       model: Seq[(Int, Seq[Double])]): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     val cents = spark.createDataFrame(model).toDF("c_id", "carr")
     // NULLS FIRST (ADVICE r17, reverting the inverted r16 "fix"):
     // array_sort's nulls-last rule applies to null ELEMENTS, but the
@@ -470,7 +466,6 @@ object LlmVector {
       graft.util.Built(s"llm_vector.ivf:$sfDir")(build(spark, sfDir))
 
     def build(spark: SparkSession, sfDir: String): IvfIndex = {
-      graft.functions.VectorExprs.register(spark)
       val n = embeddings(spark, sfDir).count()
       val model = trainKmeans(spark, sfDir, n)
       // map-only (r15): the per-row sorted distance array IS the
@@ -547,7 +542,6 @@ object LlmVector {
     // without knowing the corpus size
     require(nprobe >= 1 && nprobe <= IvfKFloor,
       s"nprobe must be in [1, $IvfKFloor], got $nprobe")
-    graft.functions.VectorExprs.register(spark)
     val e = embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"),
         sqrt(expr("float_dot(embedding, embedding)")).as("nrm"))
@@ -1041,7 +1035,6 @@ object LlmVector {
     * shortlist — reporting hits/possible/ppm per method. */
   private def adcRecallReport(spark: SparkSession, sfDir: String, adcIn: DataFrame,
       rawMethod: String, rerankMethod: String): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     def l2Top(pairsIn: DataFrame, k: Int): DataFrame = {
       val wTop = Window.partitionBy("q_id")
         .orderBy(col("d2").asc, col("neighbor_id").asc)
@@ -1079,12 +1072,22 @@ object LlmVector {
     val short20 = adc.withColumn("rn", row_number().over(wAdc))
       .filter(col("rn") <= 20).select("q_id", "neighbor_id")
     val rerank3 = l2Top(allL2.join(short20, Seq("q_id", "neighbor_id"), "left_semi"), 3)
-    val approx = raw3.withColumn("method", lit(rawMethod))
-      .unionByName(rerank3.withColumn("method", lit(rerankMethod)))
-    val hits = approx.join(exact, Seq("q_id", "neighbor_id"))
+    recallReport(exact, rawMethod -> raw3, rerankMethod -> rerank3)
+  }
+
+  /** The report every recall key ends in: per method, its hits against
+    * the exact (q_id, neighbor_id) set, the possible count and recall in
+    * exact integer ppm (`div` — no cross-engine double rounding). The
+    * method list is static, so a zero-hit method still appears as a 0
+    * row instead of vanishing from the report. */
+  private def recallReport(exact: DataFrame, approx: (String, DataFrame)*): DataFrame = {
+    val hits = approx
+      .map { case (m, df) => df.select("q_id", "neighbor_id").withColumn("method", lit(m)) }
+      .reduce(_ unionByName _)
+      .join(exact, Seq("q_id", "neighbor_id"))
       .groupBy("method").agg(count(lit(1)).as("hits"))
-    import spark.implicits._
-    Seq(rawMethod, rerankMethod).toDF("method")
+    import exact.sparkSession.implicits._
+    approx.map(_._1).toDF("method")
       .join(hits, Seq("method"), "left")
       .na.fill(0L, Seq("hits"))
       .crossJoin(exact.agg(count(lit(1)).as("possible")))
@@ -1577,7 +1580,6 @@ object LlmVector {
     * when transitive closure is needed.
     */
   def llmSemdedup(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     val e = embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"),
         sqrt(expr("float_dot(embedding, embedding)")).as("nrm"))
@@ -1636,7 +1638,6 @@ object LlmVector {
     * graph's parquet, which would make the scale-critical build plan
     * unauditable. */
   private[graft] def knnGraphBuild(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     val e = embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"),
         sqrt(expr("float_dot(embedding, embedding)")).as("nrm"))
@@ -1692,7 +1693,6 @@ object LlmVector {
   private[graft] val BeamSeeds = 3
 
   private[graft] def beamSeen(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     val edges = knnGraph(spark, sfDir).select(col("src"), col("dst"))
     val ivf = IvfIndex(spark, sfDir)
     val members = ivf.cells(spark).withColumnRenamed("vec_id", "node")
@@ -1748,19 +1748,9 @@ object LlmVector {
   def llmAnnBeamRecall(spark: SparkSession, sfDir: String): DataFrame = {
     val exact = exactTop3(spark, sfDir) // same truth as llm_ann_recall
     val wBeam = Window.partitionBy("q_id").orderBy(col("cos_sim").desc, col("node").asc)
-    val approx = beamSeen(spark, sfDir)
+    recallReport(exact, "graph_beam" -> beamSeen(spark, sfDir)
       .withColumn("rn", row_number().over(wBeam)).filter(col("rn") <= 3)
-      .select(col("q_id"), col("node").as("neighbor_id"))
-      .withColumn("method", lit("graph_beam"))
-    val hits = approx.join(exact, Seq("q_id", "neighbor_id"))
-      .groupBy("method").agg(count(lit(1)).as("hits"))
-    import spark.implicits._
-    Seq("graph_beam").toDF("method")
-      .join(hits, Seq("method"), "left")
-      .na.fill(0L, Seq("hits"))
-      .crossJoin(exact.agg(count(lit(1)).as("possible")))
-      .withColumn("recall_ppm", expr("(1000000 * hits) div possible"))
-      .orderBy("method")
+      .select(col("q_id"), col("node").as("neighbor_id")))
   }
 
   /** The beam chain as unrolled CTEs: seeds from the shared prologue's
@@ -1872,7 +1862,6 @@ object LlmVector {
     * the rerank reuses the proven exact-cosine algebra.
     */
   def llmAnnRerank(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     val qz = embeddings(spark, sfDir)
       .withColumn("scale", expr(
         "aggregate(embedding, cast(0 as double), (m, x) -> greatest(m, abs(cast(x as double)))) / 127"))
@@ -1952,7 +1941,6 @@ object LlmVector {
     * with `llm_ann_recall_hi` so the graded points measure against the
     * same truth by construction. */
   private def exactTop3(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     val e = embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"),
         sqrt(expr("float_dot(embedding, embedding)")).as("nrm"))
@@ -1971,21 +1959,8 @@ object LlmVector {
   def llmAnnRecall(spark: SparkSession, sfDir: String): DataFrame = {
     val exact = exactTop3(spark, sfDir)
     val ivf = IvfIndex(spark, sfDir)
-    val approx = ivfSearch(spark, sfDir, ivf, nprobe = 1).select("q_id", "neighbor_id")
-      .withColumn("method", lit("ivf_nprobe1"))
-      .unionByName(ivfSearch(spark, sfDir, ivf, nprobe = 2).select("q_id", "neighbor_id")
-        .withColumn("method", lit("ivf_nprobe2")))
-    val hits = approx.join(exact, Seq("q_id", "neighbor_id"))
-      .groupBy("method").agg(count(lit(1)).as("hits"))
-    // static method list: a hypothetical zero-hit method must still
-    // appear as a 0 row, not vanish from the report
-    import spark.implicits._
-    Seq("ivf_nprobe1", "ivf_nprobe2").toDF("method")
-      .join(hits, Seq("method"), "left")
-      .na.fill(0L, Seq("hits"))
-      .crossJoin(exact.agg(count(lit(1)).as("possible")))
-      .withColumn("recall_ppm", expr("(1000000 * hits) div possible"))
-      .orderBy("method")
+    recallReport(exact, "ivf_nprobe1" -> ivfSearch(spark, sfDir, ivf, nprobe = 1),
+      "ivf_nprobe2" -> ivfSearch(spark, sfDir, ivf, nprobe = 2))
   }
 
   /** The shared kmeans CTE chain + exact/nprobe1/nprobe2 top-3 lists,
@@ -2029,18 +2004,7 @@ object LlmVector {
     * cross-engine double rounding). */
   def llmAnnRecallHi(spark: SparkSession, sfDir: String): DataFrame = {
     val exact = exactTop3(spark, sfDir) // same truth as llm_ann_recall
-    val approx = ivfSearch(spark, sfDir, IvfIndex(spark, sfDir), nprobe = 3)
-      .select("q_id", "neighbor_id")
-      .withColumn("method", lit("ivf_nprobe3"))
-    val hits = approx.join(exact, Seq("q_id", "neighbor_id"))
-      .groupBy("method").agg(count(lit(1)).as("hits"))
-    import spark.implicits._
-    Seq("ivf_nprobe3").toDF("method")
-      .join(hits, Seq("method"), "left")
-      .na.fill(0L, Seq("hits"))
-      .crossJoin(exact.agg(count(lit(1)).as("possible")))
-      .withColumn("recall_ppm", expr("(1000000 * hits) div possible"))
-      .orderBy("method")
+    recallReport(exact, "ivf_nprobe3" -> ivfSearch(spark, sfDir, IvfIndex(spark, sfDir), nprobe = 3))
   }
 
   /** Shared prologue's nprobe=3 fan-out (qp3) + exact top-3, reduced to
@@ -2075,7 +2039,6 @@ object LlmVector {
     * q_id-keyed equi-join on pool-sized frames — the expensive part
     * stays the ANN retrieval that feeds it, as in production. */
   def llmMmrDiversify(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     val e = embeddings(spark, sfDir).select(col("vec_id"), col("embedding"),
       sqrt(expr("float_dot(embedding, embedding)")).as("nrm"))
     val q = e.filter(col("vec_id") < 10)
@@ -2165,53 +2128,30 @@ object LlmVector {
        |  UNION ALL SELECT q_id, 3, p_id, score FROM p3)
        |ORDER BY q_id, pick_rank""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_mmr_diversify" -> (llmMmrDiversify _),
-    "llm_ann_pq" -> (llmAnnPq _),
-    "llm_ann_pq_recall" -> (llmAnnPqRecall _),
-    "llm_ann_ivfpq" -> (llmAnnIvfPq _),
-    "llm_ann_ivfpq_recall" -> (llmAnnIvfPqRecall _),
-    "llm_ann_ivfpq_res" -> (llmAnnIvfPqRes _),
-    "llm_ann_ivfpq_res_recall" -> (llmAnnIvfPqResRecall _),
-    "llm_ann_sq8_recall" -> (llmAnnSq8Recall _),
-    "llm_knn_graph" -> (llmKnnGraph _),
-    "llm_ann_beam" -> (llmAnnBeam _),
-    "llm_ann_beam_recall" -> (llmAnnBeamRecall _),
-    "llm_ann_recall_hi" -> (llmAnnRecallHi _),
-    "llm_embed_quantize" -> (llmEmbedQuantize _),
-    "llm_semdedup" -> (llmSemdedup _),
-    "llm_ann_rerank" -> (llmAnnRerank _),
-    "llm_ann_recall" -> (llmAnnRecall _),
-    "llm_sim_cosine_topk" -> (llmSimCosineTopk _),
-    "llm_ann_lsh" -> (llmAnnLsh _),
-    "llm_centroid_drift" -> (llmCentroidDrift _),
-    "llm_ann_ivf" -> (llmAnnIvf _),
-    "llm_ann_ivf_kmeans" -> (llmAnnIvfKmeans _),
-    "llm_ann_ivf_probe2" -> (llmAnnIvfProbe2 _),
-    "llm_knn_centroid" -> (llmKnnCentroid _))
+  val keys: Seq[Key] = Seq(
+    Key("llm_mmr_diversify", llmMmrDiversify, llmMmrDiversifyOracle),
+    Key("llm_ann_pq", llmAnnPq, llmAnnPqOracle),
+    Key("llm_ann_pq_recall", llmAnnPqRecall, llmAnnPqRecallOracle),
+    Key("llm_ann_ivfpq", llmAnnIvfPq, llmAnnIvfPqOracle),
+    Key("llm_ann_ivfpq_recall", llmAnnIvfPqRecall, llmAnnIvfPqRecallOracle),
+    Key("llm_ann_ivfpq_res", llmAnnIvfPqRes, llmAnnIvfPqResOracle),
+    Key("llm_ann_ivfpq_res_recall", llmAnnIvfPqResRecall, llmAnnIvfPqResRecallOracle),
+    Key("llm_ann_sq8_recall", llmAnnSq8Recall, llmAnnSq8RecallOracle),
+    Key("llm_knn_graph", llmKnnGraph, llmKnnGraphOracle),
+    Key("llm_ann_beam", llmAnnBeam, llmAnnBeamOracle),
+    Key("llm_ann_beam_recall", llmAnnBeamRecall, llmAnnBeamRecallOracle),
+    Key("llm_ann_recall_hi", llmAnnRecallHi, llmAnnRecallHiOracle),
+    Key("llm_embed_quantize", llmEmbedQuantize, llmEmbedQuantizeOracle),
+    Key("llm_semdedup", llmSemdedup, llmSemdedupOracle),
+    Key("llm_ann_rerank", llmAnnRerank, llmAnnRerankOracle),
+    Key("llm_ann_recall", llmAnnRecall, llmAnnRecallOracle),
+    Key("llm_sim_cosine_topk", llmSimCosineTopk, llmSimCosineTopkOracle),
+    Key("llm_ann_lsh", llmAnnLsh, llmAnnLshOracle),
+    Key("llm_centroid_drift", llmCentroidDrift, llmCentroidDriftOracle),
+    Key("llm_ann_ivf", llmAnnIvf, llmAnnIvfOracle),
+    Key("llm_ann_ivf_kmeans", llmAnnIvfKmeans, llmAnnIvfKmeansOracle),
+    Key("llm_ann_ivf_probe2", llmAnnIvfProbe2, llmAnnIvfProbe2Oracle),
+    Key("llm_knn_centroid", llmKnnCentroid, llmKnnCentroidOracle))
 
-  val oracle: Map[String, String] = Map(
-    "llm_mmr_diversify" -> llmMmrDiversifyOracle,
-    "llm_ann_pq" -> llmAnnPqOracle,
-    "llm_ann_pq_recall" -> llmAnnPqRecallOracle,
-    "llm_ann_ivfpq" -> llmAnnIvfPqOracle,
-    "llm_ann_ivfpq_recall" -> llmAnnIvfPqRecallOracle,
-    "llm_ann_ivfpq_res" -> llmAnnIvfPqResOracle,
-    "llm_ann_ivfpq_res_recall" -> llmAnnIvfPqResRecallOracle,
-    "llm_ann_sq8_recall" -> llmAnnSq8RecallOracle,
-    "llm_knn_graph" -> llmKnnGraphOracle,
-    "llm_ann_beam" -> llmAnnBeamOracle,
-    "llm_ann_beam_recall" -> llmAnnBeamRecallOracle,
-    "llm_ann_recall_hi" -> llmAnnRecallHiOracle,
-    "llm_embed_quantize" -> llmEmbedQuantizeOracle,
-    "llm_semdedup" -> llmSemdedupOracle,
-    "llm_ann_rerank" -> llmAnnRerankOracle,
-    "llm_ann_recall" -> llmAnnRecallOracle,
-    "llm_sim_cosine_topk" -> llmSimCosineTopkOracle,
-    "llm_ann_lsh" -> llmAnnLshOracle,
-    "llm_centroid_drift" -> llmCentroidDriftOracle,
-    "llm_ann_ivf" -> llmAnnIvfOracle,
-    "llm_ann_ivf_kmeans" -> llmAnnIvfKmeansOracle,
-    "llm_ann_ivf_probe2" -> llmAnnIvfProbe2Oracle,
-    "llm_knn_centroid" -> llmKnnCentroidOracle)
+  val queries: Map[String, Key.Run] = Key.queries(keys)
 }

@@ -428,25 +428,16 @@ object Multimodal {
        |  CAST(COUNT(*) OVER (PARTITION BY bucket) AS BIGINT) AS bucket_n
        |FROM p ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_payload_stats" -> (mmPayloadStats _),
-    "mm_aspect_bucket" -> (mmAspectBucket _),
-    "mm_pack_batches" -> (mmPackBatches _),
-    "mm_letterbox_plan" -> (mmLetterboxPlan _),
-    "mm_decode_meta" -> (mmDecodeMeta _),
-    "mm_resize" -> (mmResize _),
-    "mm_features" -> (mmFeatures _),
-    "mm_frame_sample" -> (mmFrameSample _),
-    "mm_dedup_frames" -> (mmDedupFrames _))
+  val keys: Seq[Key] = Seq(
+    Key("mm_payload_stats", mmPayloadStats, mmPayloadStatsOracle),
+    Key("mm_aspect_bucket", mmAspectBucket, mmAspectBucketOracle),
+    Key("mm_pack_batches", mmPackBatches, mmPackBatchesOracle),
+    Key("mm_letterbox_plan", mmLetterboxPlan, mmLetterboxPlanOracle),
+    Key("mm_decode_meta", mmDecodeMeta, mmDecodeMetaOracle),
+    Key("mm_resize", mmResize, mmResizeOracle),
+    Key("mm_features", mmFeatures, mmFeaturesOracle),
+    Key("mm_frame_sample", mmFrameSample, mmFrameSampleOracle),
+    Key("mm_dedup_frames", mmDedupFrames, mmDedupFramesOracle))
 
-  val oracle: Map[String, String] = Map(
-    "mm_payload_stats" -> mmPayloadStatsOracle,
-    "mm_aspect_bucket" -> mmAspectBucketOracle,
-    "mm_pack_batches" -> mmPackBatchesOracle,
-    "mm_letterbox_plan" -> mmLetterboxPlanOracle,
-    "mm_decode_meta" -> mmDecodeMetaOracle,
-    "mm_resize" -> mmResizeOracle,
-    "mm_features" -> mmFeaturesOracle,
-    "mm_frame_sample" -> mmFrameSampleOracle,
-    "mm_dedup_frames" -> mmDedupFramesOracle)
+  val queries: Map[String, Key.Run] = Key.queries(keys)
 }

@@ -289,31 +289,19 @@ object Scalars {
       |SELECT name, cand AS best_match, CAST(dist AS BIGINT) AS dist
       |FROM r WHERE rk = 1 ORDER BY name""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "str_fuzzy_match" -> (strFuzzyMatch _),
-    "scalar_bitwise_funcs" -> (bitwiseFuncs _),
-    "map_funcs" -> (mapFuncs _),
-    "struct_funcs" -> (structFuncs _),
-    "str_funcs" -> (strFuncs _),
-    "str_regexp" -> (strRegexp _),
-    "date_funcs" -> (dateFuncs _),
-    "math_funcs" -> (mathFuncs _),
-    "cond_funcs" -> (condFuncs _),
-    "array_funcs" -> (arrayFuncs _),
-    "json_funcs" -> (jsonFuncs _),
-    "str_split_explode" -> (strSplitExplode _))
+  val keys: Seq[Key] = Seq(
+    Key("str_fuzzy_match", strFuzzyMatch, strFuzzyMatchOracle),
+    Key("scalar_bitwise_funcs", bitwiseFuncs, bitwiseFuncsOracle),
+    Key("map_funcs", mapFuncs, mapFuncsOracle),
+    Key("struct_funcs", structFuncs, structFuncsOracle),
+    Key("str_funcs", strFuncs, strFuncsOracle),
+    Key("str_regexp", strRegexp, strRegexpOracle),
+    Key("date_funcs", dateFuncs, dateFuncsOracle),
+    Key("math_funcs", mathFuncs, mathFuncsOracle),
+    Key("cond_funcs", condFuncs, condFuncsOracle),
+    Key("array_funcs", arrayFuncs, arrayFuncsOracle),
+    Key("json_funcs", jsonFuncs, jsonFuncsOracle),
+    Key("str_split_explode", strSplitExplode, strSplitExplodeOracle))
 
-  val oracle: Map[String, String] = Map(
-    "scalar_bitwise_funcs" -> bitwiseFuncsOracle,
-    "map_funcs" -> mapFuncsOracle,
-    "struct_funcs" -> structFuncsOracle,
-    "str_funcs" -> strFuncsOracle,
-    "str_fuzzy_match" -> strFuzzyMatchOracle,
-    "str_regexp" -> strRegexpOracle,
-    "date_funcs" -> dateFuncsOracle,
-    "math_funcs" -> mathFuncsOracle,
-    "cond_funcs" -> condFuncsOracle,
-    "array_funcs" -> arrayFuncsOracle,
-    "json_funcs" -> jsonFuncsOracle,
-    "str_split_explode" -> strSplitExplodeOracle)
+  val queries: Map[String, Key.Run] = Key.queries(keys)
 }

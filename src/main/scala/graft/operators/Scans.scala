@@ -344,43 +344,23 @@ object Scans {
 
   /** SQL FRONT-END — the same engine through `spark.sql` instead of the
     * DataFrame API: the star-revenue rollup written as the multi-CTE
-    * ANSI SQL an analyst would type, over per-key-prefixed temp views
-    * (prefixed so a long-lived session's other keys can never collide).
+    * ANSI SQL an analyst would type, reading each table by path.
     * The point is API parity, graded: a reference user who talks SQL
     * gets the SAME Catalyst plan machinery — the dims broadcast, the
     * money math is the proven exact-cents DECIMAL cast, and the result
-    * hash-matches DuckDB running the identical query text shape. */
-  def sqlStarRevenue(spark: SparkSession, sfDir: String): DataFrame = {
-    lineitem(spark, sfDir).createOrReplaceTempView("g_sql_lineitem")
-    orders(spark, sfDir).createOrReplaceTempView("g_sql_orders")
-    customer(spark, sfDir).createOrReplaceTempView("g_sql_customer")
-    nation(spark, sfDir).createOrReplaceTempView("g_sql_nation")
-    region(spark, sfDir).createOrReplaceTempView("g_sql_region")
-    spark.sql(
-      """WITH li AS (SELECT l_orderkey,
-        |    CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-        |  FROM g_sql_lineitem)
-        |SELECT r_name, n_name,
-        |  COUNT(DISTINCT o_orderkey) AS n_orders,
-        |  SUM(cents) AS revenue_cents
-        |FROM li JOIN g_sql_orders ON l_orderkey = o_orderkey
-        |JOIN g_sql_customer ON o_custkey = c_custkey
-        |JOIN g_sql_nation ON c_nationkey = n_nationkey
-        |JOIN g_sql_region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin)
+    * hash-matches DuckDB running the identical query text. */
+  val sqlStarRevenue: Key = Key.sql("sql_star_revenue") { t =>
+    s"""WITH li AS (SELECT l_orderkey,
+       |    CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents FROM ${t("lineitem")})
+       |SELECT r_name, n_name,
+       |  CAST(COUNT(DISTINCT o_orderkey) AS BIGINT) AS n_orders,
+       |  CAST(SUM(cents) AS BIGINT) AS revenue_cents
+       |FROM li JOIN ${t("orders")} ON l_orderkey = o_orderkey
+       |JOIN ${t("customer")} ON o_custkey = c_custkey
+       |JOIN ${t("nation")} ON c_nationkey = n_nationkey
+       |JOIN ${t("region")} ON n_regionkey = r_regionkey
+       |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin
   }
-
-  val sqlStarRevenueOracle: String =
-    """WITH li AS (SELECT l_orderkey,
-      |    CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents FROM lineitem)
-      |SELECT r_name, n_name,
-      |  CAST(COUNT(DISTINCT o_orderkey) AS BIGINT) AS n_orders,
-      |  CAST(SUM(cents) AS BIGINT) AS revenue_cents
-      |FROM li JOIN orders ON l_orderkey = o_orderkey
-      |JOIN customer ON o_custkey = c_custkey
-      |JOIN nation ON c_nationkey = n_nationkey
-      |JOIN region ON n_regionkey = r_regionkey
-      |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin
 
   /** TPC-H Q3 SHAPE (shipping priority, r10) — the canonical
     * "unshipped high-value orders" report through `spark.sql`: a
@@ -395,29 +375,20 @@ object Scans {
     * TakeOrderedAndProject, never a global sort. Shape at 100 TB:
     * customer broadcasts, orders⋈lineitem shuffles once on the order
     * key, the top-k is per-partition heads merged on the driver. */
-  def sqlQ3ShippingPriority(spark: SparkSession, sfDir: String): DataFrame = {
-    customer(spark, sfDir).createOrReplaceTempView("g_q3_customer")
-    orders(spark, sfDir).createOrReplaceTempView("g_q3_orders")
-    lineitem(spark, sfDir).createOrReplaceTempView("g_q3_lineitem")
-    spark.sql(sqlQ3Text("g_q3_customer", "g_q3_orders", "g_q3_lineitem"))
-  }
-
-  private def sqlQ3Text(cust: String, ord: String, li: String): String =
+  val sqlQ3ShippingPriority: Key = Key.sql("sql_q3_shipping_priority") { t =>
     s"""SELECT l_orderkey,
        |  CAST(ROUND(SUM($revenueSqlFrag), 2) AS DOUBLE) AS revenue,
        |  CAST(o_orderdate AS DATE) AS odate, o_orderpriority
-       |FROM $cust
-       |JOIN $ord ON c_custkey = o_custkey
-       |JOIN $li ON l_orderkey = o_orderkey
+       |FROM ${t("customer")}
+       |JOIN ${t("orders")} ON c_custkey = o_custkey
+       |JOIN ${t("lineitem")} ON l_orderkey = o_orderkey
        |WHERE c_mktsegment = 'BUILDING'
        |  AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
        |  AND l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
        |GROUP BY l_orderkey, o_orderdate, o_orderpriority
        |ORDER BY revenue DESC, l_orderkey
        |LIMIT 10""".stripMargin
-
-  val sqlQ3ShippingPriorityOracle: String =
-    sqlQ3Text("customer", "orders", "lineitem")
+  }
 
   /** TPC-H Q5 SHAPE (local supplier volume, r10) — the six-table join
     * whose signature is the CYCLE in the join graph: lineitem joins
@@ -431,33 +402,19 @@ object Scans {
     * nation-sized output. Shape at 100 TB: region/nation/customer/
     * supplier all broadcast, the single fact⋈fact shuffle is
     * orders⋈lineitem on the order key. */
-  def sqlQ5LocalVolume(spark: SparkSession, sfDir: String): DataFrame = {
-    customer(spark, sfDir).createOrReplaceTempView("g_q5_customer")
-    orders(spark, sfDir).createOrReplaceTempView("g_q5_orders")
-    lineitem(spark, sfDir).createOrReplaceTempView("g_q5_lineitem")
-    supplier(spark, sfDir).createOrReplaceTempView("g_q5_supplier")
-    nation(spark, sfDir).createOrReplaceTempView("g_q5_nation")
-    region(spark, sfDir).createOrReplaceTempView("g_q5_region")
-    spark.sql(sqlQ5Text("g_q5_customer", "g_q5_orders", "g_q5_lineitem",
-      "g_q5_supplier", "g_q5_nation", "g_q5_region"))
-  }
-
-  private def sqlQ5Text(cust: String, ord: String, li: String,
-      supp: String, nat: String, reg: String): String =
+  val sqlQ5LocalVolume: Key = Key.sql("sql_q5_local_volume") { t =>
     s"""SELECT n_name,
        |  CAST(ROUND(SUM($revenueSqlFrag), 2) AS DOUBLE) AS revenue,
        |  CAST(COUNT(*) AS BIGINT) AS n_lines
-       |FROM $cust
-       |JOIN $ord ON c_custkey = o_custkey
-       |JOIN $li ON l_orderkey = o_orderkey
-       |JOIN $supp ON l_suppkey = s_suppkey AND s_nationkey = c_nationkey
-       |JOIN $nat ON c_nationkey = n_nationkey
-       |JOIN $reg ON n_regionkey = r_regionkey
+       |FROM ${t("customer")}
+       |JOIN ${t("orders")} ON c_custkey = o_custkey
+       |JOIN ${t("lineitem")} ON l_orderkey = o_orderkey
+       |JOIN ${t("supplier")} ON l_suppkey = s_suppkey AND s_nationkey = c_nationkey
+       |JOIN ${t("nation")} ON c_nationkey = n_nationkey
+       |JOIN ${t("region")} ON n_regionkey = r_regionkey
        |WHERE r_name = 'ASIA'
        |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin
-
-  val sqlQ5LocalVolumeOracle: String =
-    sqlQ5Text("customer", "orders", "lineitem", "supplier", "nation", "region")
+  }
 
   /** LATERAL TOP-N PER GROUP (r10) — the last big SQL-front-end shape
     * the sql_ keys didn't cover: a correlated LATERAL derived table
@@ -471,23 +428,16 @@ object Scans {
     * reached FROM SQL. Exact integer cents; total-ordered inner sort
     * (cents DESC, orderkey) so both engines cut the identical two
     * rows per customer. */
-  def sqlLateralTopn(spark: SparkSession, sfDir: String): DataFrame = {
-    customer(spark, sfDir).createOrReplaceTempView("g_lat_customer")
-    orders(spark, sfDir).createOrReplaceTempView("g_lat_orders")
-    spark.sql(sqlLateralText("g_lat_customer", "g_lat_orders"))
-  }
-
-  private def sqlLateralText(cust: String, ord: String): String =
+  val sqlLateralTopn: Key = Key.sql("sql_lateral_topn") { t =>
     s"""SELECT c_custkey, o_orderkey, cents
-       |FROM (SELECT c_custkey FROM $cust WHERE c_custkey <= 20) c,
+       |FROM (SELECT c_custkey FROM ${t("customer")} WHERE c_custkey <= 20) c,
        |LATERAL (SELECT o_orderkey,
        |           CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-       |         FROM $ord o
+       |         FROM ${t("orders")} o
        |         WHERE o.o_custkey = c.c_custkey
        |         ORDER BY cents DESC, o_orderkey LIMIT 2) t
        |ORDER BY c_custkey, cents DESC, o_orderkey""".stripMargin
-
-  val sqlLateralTopnOracle: String = sqlLateralText("customer", "orders")
+  }
 
   /** TPC-H Q22 SHAPE (global-average anti-join report, r11) — the one
     * subquery combination the sql_/filter_ keys still lacked:
@@ -506,29 +456,22 @@ object Scans {
     * evaluates each global aggregate exactly once (PlanSpec). At
     * 100 TB: two metadata-sized scalar broadcasts + one keyed anti
     * join against orders — never a rescan per customer. */
-  def sqlQ22GlobalCust(spark: SparkSession, sfDir: String): DataFrame = {
-    customer(spark, sfDir).createOrReplaceTempView("g_q22_customer")
-    orders(spark, sfDir).createOrReplaceTempView("g_q22_orders")
-    spark.sql(sqlQ22Text("g_q22_customer", "g_q22_orders"))
-  }
-
-  private def sqlQ22Text(cust: String, ord: String): String =
+  val sqlQ22GlobalCust: Key = Key.sql("sql_q22_global_cust") { t =>
     s"""SELECT c_mktsegment AS segment,
        |  CAST(COUNT(*) AS BIGINT) AS n_cust,
        |  CAST(SUM(cents) AS BIGINT) AS total_cents
        |FROM (SELECT c_custkey, c_mktsegment,
        |        CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-       |      FROM $cust) c
+       |      FROM ${t("customer")}) c
        |WHERE cents > 0
-       |  AND cents * (SELECT CAST(COUNT(*) AS BIGINT) FROM $cust WHERE c_acctbal > 0)
+       |  AND cents * (SELECT CAST(COUNT(*) AS BIGINT) FROM ${t("customer")} WHERE c_acctbal > 0)
        |      > (SELECT CAST(SUM(CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT)
-       |         FROM $cust WHERE c_acctbal > 0)
-       |  AND NOT EXISTS (SELECT 1 FROM $ord o
+       |         FROM ${t("customer")} WHERE c_acctbal > 0)
+       |  AND NOT EXISTS (SELECT 1 FROM ${t("orders")} o
        |                  WHERE o.o_custkey = c.c_custkey
        |                    AND o.o_orderpriority = '1-URGENT')
        |GROUP BY c_mktsegment ORDER BY segment""".stripMargin
-
-  val sqlQ22GlobalCustOracle: String = sqlQ22Text("customer", "orders")
+  }
 
   /** TPC-H Q21 SHAPE (suppliers who kept orders waiting, r11) — the
     * hardest stock decorrelation: TWO predicate subqueries on the SAME
@@ -547,31 +490,22 @@ object Scans {
     * deterministic (numwait DESC, name tiebreak). At 100 TB: three
     * order-key shuffles of lineitem + a broadcast supplier dim — the
     * semi/anti sides carry only (orderkey, suppkey). */
-  def sqlQ21WaitingSupplier(spark: SparkSession, sfDir: String): DataFrame = {
-    supplier(spark, sfDir).createOrReplaceTempView("g_q21_supplier")
-    orders(spark, sfDir).createOrReplaceTempView("g_q21_orders")
-    lineitem(spark, sfDir).createOrReplaceTempView("g_q21_lineitem")
-    spark.sql(sqlQ21Text("g_q21_supplier", "g_q21_orders", "g_q21_lineitem"))
-  }
-
-  private def sqlQ21Text(supp: String, ord: String, li: String): String =
+  val sqlQ21WaitingSupplier: Key = Key.sql("sql_q21_waiting_supplier") { t =>
     s"""SELECT s_name, CAST(COUNT(*) AS BIGINT) AS numwait
-       |FROM $supp JOIN $li l1 ON s_suppkey = l1.l_suppkey
-       |JOIN $ord o ON o.o_orderkey = l1.l_orderkey
+       |FROM ${t("supplier")} JOIN ${t("lineitem")} l1 ON s_suppkey = l1.l_suppkey
+       |JOIN ${t("orders")} o ON o.o_orderkey = l1.l_orderkey
        |WHERE o.o_orderstatus = 'F'
        |  AND l1.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
-       |  AND EXISTS (SELECT 1 FROM $li l2
+       |  AND EXISTS (SELECT 1 FROM ${t("lineitem")} l2
        |              WHERE l2.l_orderkey = l1.l_orderkey
        |                AND l2.l_suppkey <> l1.l_suppkey)
-       |  AND NOT EXISTS (SELECT 1 FROM $li l3
-       |                  JOIN $ord o3 ON o3.o_orderkey = l3.l_orderkey
+       |  AND NOT EXISTS (SELECT 1 FROM ${t("lineitem")} l3
+       |                  JOIN ${t("orders")} o3 ON o3.o_orderkey = l3.l_orderkey
        |                  WHERE l3.l_orderkey = l1.l_orderkey
        |                    AND l3.l_suppkey <> l1.l_suppkey
        |                    AND l3.l_shipdate > o3.o_orderdate + INTERVAL 60 DAY)
        |GROUP BY s_name ORDER BY numwait DESC, s_name""".stripMargin
-
-  val sqlQ21WaitingSupplierOracle: String =
-    sqlQ21Text("supplier", "orders", "lineitem")
+  }
 
   /** TPC-H Q18 SHAPE (large-volume orders, r11) — the IN-over-
     * aggregated-HAVING subquery the other sql_ keys don't grade:
@@ -584,26 +518,17 @@ object Scans {
     * quantities make SUM exact in double and the BIGINT cast lossless;
     * ORDER BY (total_qty DESC, orderkey) is a total order. Identical
     * SQL text on both engines. */
-  def sqlQ18LargeOrders(spark: SparkSession, sfDir: String): DataFrame = {
-    customer(spark, sfDir).createOrReplaceTempView("g_q18_customer")
-    orders(spark, sfDir).createOrReplaceTempView("g_q18_orders")
-    lineitem(spark, sfDir).createOrReplaceTempView("g_q18_lineitem")
-    spark.sql(sqlQ18Text("g_q18_customer", "g_q18_orders", "g_q18_lineitem"))
-  }
-
-  private def sqlQ18Text(cust: String, ord: String, li: String): String =
+  val sqlQ18LargeOrders: Key = Key.sql("sql_q18_large_orders") { t =>
     s"""SELECT c_name, c_custkey, o_orderkey,
        |  CAST(o_orderdate AS DATE) AS odate,
        |  CAST(SUM(l_quantity) AS BIGINT) AS total_qty
-       |FROM $cust JOIN $ord ON c_custkey = o_custkey
-       |JOIN $li ON o_orderkey = l_orderkey
-       |WHERE o_orderkey IN (SELECT l_orderkey FROM $li
+       |FROM ${t("customer")} JOIN ${t("orders")} ON c_custkey = o_custkey
+       |JOIN ${t("lineitem")} ON o_orderkey = l_orderkey
+       |WHERE o_orderkey IN (SELECT l_orderkey FROM ${t("lineitem")}
        |                     GROUP BY l_orderkey HAVING SUM(l_quantity) > 180)
        |GROUP BY c_name, c_custkey, o_orderkey, o_orderdate
        |ORDER BY total_qty DESC, o_orderkey""".stripMargin
-
-  val sqlQ18LargeOrdersOracle: String =
-    sqlQ18Text("customer", "orders", "lineitem")
+  }
 
   /** TPC-H Q15 SHAPE — TOP SUPPLIER (r12): HAVING-equals-global-MAX
     * over an aggregated view, the one classic subquery shape the
@@ -620,28 +545,21 @@ object Scans {
     * per the §5.4 conventions. At 100 TB: one lineitem scan with the
     * quarter filter pushed to parquet, one supplier-keyed partial
     * aggregate, a broadcast dim join, and a 1-row broadcast gate. */
-  def sqlQ15TopSupplier(spark: SparkSession, sfDir: String): DataFrame = {
-    supplier(spark, sfDir).createOrReplaceTempView("g_q15_supplier")
-    lineitem(spark, sfDir).createOrReplaceTempView("g_q15_lineitem")
-    spark.sql(sqlQ15Text("g_q15_supplier", "g_q15_lineitem"))
-  }
-
-  private def sqlQ15Text(supp: String, li: String): String =
+  val sqlQ15TopSupplier: Key = Key.sql("sql_q15_top_supplier") { t =>
     s"""WITH revenue AS (
        |  SELECT l_suppkey AS supplier_no,
        |    CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
        |             * (100 - CAST(CAST(l_discount AS DECIMAL(4,2)) * 100 AS BIGINT)))
        |      AS BIGINT) AS total_rev
-       |  FROM $li
+       |  FROM ${t("lineitem")}
        |  WHERE l_shipdate >= CAST('1996-01-01' AS TIMESTAMP)
        |    AND l_shipdate < CAST('1996-04-01' AS TIMESTAMP)
        |  GROUP BY l_suppkey)
        |SELECT s_suppkey, s_name, total_rev
-       |FROM $supp JOIN revenue ON s_suppkey = supplier_no
+       |FROM ${t("supplier")} JOIN revenue ON s_suppkey = supplier_no
        |WHERE total_rev = (SELECT MAX(total_rev) FROM revenue)
        |ORDER BY s_suppkey""".stripMargin
-
-  val sqlQ15TopSupplierOracle: String = sqlQ15Text("supplier", "lineitem")
+  }
 
   /** TPC-H Q7 SHAPE — NATION-PAIR VOLUME SHIPPING (r12, unasked-for
     * breadth): the symmetric-OR join predicate
@@ -653,38 +571,25 @@ object Scans {
     * of degenerating into a cartesian on the 625-row nation×nation
     * space or shuffling the fact chain twice. Revenue rides the same
     * exact integer cents as Q15. */
-  def sqlQ7VolumeShipping(spark: SparkSession, sfDir: String): DataFrame = {
-    supplier(spark, sfDir).createOrReplaceTempView("g_q7_supplier")
-    lineitem(spark, sfDir).createOrReplaceTempView("g_q7_lineitem")
-    orders(spark, sfDir).createOrReplaceTempView("g_q7_orders")
-    customer(spark, sfDir).createOrReplaceTempView("g_q7_customer")
-    nation(spark, sfDir).createOrReplaceTempView("g_q7_nation")
-    spark.sql(sqlQ7Text("g_q7_supplier", "g_q7_lineitem", "g_q7_orders",
-      "g_q7_customer", "g_q7_nation"))
-  }
-
-  private def sqlQ7Text(supp: String, li: String, ord: String,
-      cust: String, nat: String): String =
+  val sqlQ7VolumeShipping: Key = Key.sql("sql_q7_volume_shipping") { t =>
     s"""SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
        |  year(l_shipdate) AS l_year,
        |  CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
        |           * (100 - CAST(CAST(l_discount AS DECIMAL(4,2)) * 100 AS BIGINT)))
        |    AS BIGINT) AS revenue
-       |FROM $supp
-       |JOIN $li ON s_suppkey = l_suppkey
-       |JOIN $ord ON o_orderkey = l_orderkey
-       |JOIN $cust ON c_custkey = o_custkey
-       |JOIN $nat n1 ON s_nationkey = n1.n_nationkey
-       |JOIN $nat n2 ON c_nationkey = n2.n_nationkey
+       |FROM ${t("supplier")}
+       |JOIN ${t("lineitem")} ON s_suppkey = l_suppkey
+       |JOIN ${t("orders")} ON o_orderkey = l_orderkey
+       |JOIN ${t("customer")} ON c_custkey = o_custkey
+       |JOIN ${t("nation")} n1 ON s_nationkey = n1.n_nationkey
+       |JOIN ${t("nation")} n2 ON c_nationkey = n2.n_nationkey
        |WHERE ((n1.n_name = 'NATION_3' AND n2.n_name = 'NATION_7')
        |    OR (n1.n_name = 'NATION_7' AND n2.n_name = 'NATION_3'))
        |  AND l_shipdate >= CAST('1996-01-01' AS TIMESTAMP)
        |  AND l_shipdate < CAST('1998-01-01' AS TIMESTAMP)
        |GROUP BY n1.n_name, n2.n_name, year(l_shipdate)
        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin
-
-  val sqlQ7VolumeShippingOracle: String =
-    sqlQ7Text("supplier", "lineitem", "orders", "customer", "nation")
+  }
 
   /** TPC-H Q13 SHAPE — CUSTOMER ORDER-COUNT DISTRIBUTION (r12): the
     * double-aggregate over a LEFT OUTER join — count per customer
@@ -697,23 +602,16 @@ object Scans {
     * outer join's ON clause: as a WHERE it would turn the outer join
     * inner. At 100 TB: one customer-keyed shuffle for the outer
     * count, then a k-row histogram aggregate. */
-  def sqlQ13CustDist(spark: SparkSession, sfDir: String): DataFrame = {
-    customer(spark, sfDir).createOrReplaceTempView("g_q13_customer")
-    orders(spark, sfDir).createOrReplaceTempView("g_q13_orders")
-    spark.sql(sqlQ13Text("g_q13_customer", "g_q13_orders"))
-  }
-
-  private def sqlQ13Text(cust: String, ord: String): String =
+  val sqlQ13CustDist: Key = Key.sql("sql_q13_custdist") { t =>
     s"""WITH c_orders AS (
        |  SELECT c_custkey, COUNT(o_orderkey) AS c_count
-       |  FROM $cust LEFT OUTER JOIN $ord
+       |  FROM ${t("customer")} LEFT OUTER JOIN ${t("orders")}
        |    ON c_custkey = o_custkey AND o_orderpriority <> '4-NOT SPECIFIED'
        |  GROUP BY c_custkey)
        |SELECT c_count, COUNT(*) AS custdist
        |FROM c_orders GROUP BY c_count
        |ORDER BY custdist DESC, c_count DESC""".stripMargin
-
-  val sqlQ13CustDistOracle: String = sqlQ13Text("customer", "orders")
+  }
 
   /** TPC-H Q14 SHAPE — PROMO REVENUE SHARE (r12): the conditional-
     * aggregate ratio (CASE inside SUM over the same scan — never two
@@ -722,41 +620,32 @@ object Scans {
     * HUGEINT intermediates (1e6 × a month's revenue sum overflows
     * BIGINT at scale — the `agg_ks_test` headroom rule), so both
     * engines produce identical integers with zero float drift. */
-  def sqlQ14PromoShare(spark: SparkSession, sfDir: String): DataFrame = {
-    lineitem(spark, sfDir).createOrReplaceTempView("g_q14_lineitem")
-    part(spark, sfDir).createOrReplaceTempView("g_q14_part")
-    spark.sql(
-      """SELECT year(l_shipdate) * 100 + month(l_shipdate) AS ym,
-        |  CAST((CAST(1000000 AS DECIMAL(38,0)) *
-        |        SUM(CASE WHEN p_type = 'PROMO'
-        |            THEN CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-        |                 * (100 - CAST(CAST(l_discount AS DECIMAL(4,2)) * 100 AS BIGINT))
-        |            ELSE 0 END))
-        |    div SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-        |            * (100 - CAST(CAST(l_discount AS DECIMAL(4,2)) * 100 AS BIGINT)))
-        |    AS BIGINT) AS promo_ppm
-        |FROM g_q14_lineitem JOIN g_q14_part ON l_partkey = p_partkey
-        |WHERE l_shipdate >= CAST('1996-01-01' AS TIMESTAMP)
-        |  AND l_shipdate < CAST('1997-01-01' AS TIMESTAMP)
-        |GROUP BY year(l_shipdate) * 100 + month(l_shipdate)
-        |ORDER BY ym""".stripMargin)
+  val sqlQ14PromoShare: Key = ppmKey("sql_q14_promo_share") { (t, ppm, div) =>
+    s"""SELECT year(l_shipdate) * 100 + month(l_shipdate) AS ym,
+       |  CAST(($ppm *
+       |        SUM(CASE WHEN p_type = 'PROMO'
+       |            THEN CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+       |                 * (100 - CAST(CAST(l_discount AS DECIMAL(4,2)) * 100 AS BIGINT))
+       |            ELSE 0 END))
+       |    $div SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+       |           * (100 - CAST(CAST(l_discount AS DECIMAL(4,2)) * 100 AS BIGINT)))
+       |    AS BIGINT) AS promo_ppm
+       |FROM ${t("lineitem")} JOIN ${t("part")} ON l_partkey = p_partkey
+       |WHERE l_shipdate >= CAST('1996-01-01' AS TIMESTAMP)
+       |  AND l_shipdate < CAST('1997-01-01' AS TIMESTAMP)
+       |GROUP BY year(l_shipdate) * 100 + month(l_shipdate)
+       |ORDER BY ym""".stripMargin
   }
 
-  val sqlQ14PromoShareOracle: String =
-    """SELECT year(l_shipdate) * 100 + month(l_shipdate) AS ym,
-      |  CAST((1000000::HUGEINT *
-      |        SUM(CASE WHEN p_type = 'PROMO'
-      |            THEN CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-      |                 * (100 - CAST(CAST(l_discount AS DECIMAL(4,2)) * 100 AS BIGINT))
-      |            ELSE 0 END))
-      |    // SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-      |           * (100 - CAST(CAST(l_discount AS DECIMAL(4,2)) * 100 AS BIGINT)))
-      |    AS BIGINT) AS promo_ppm
-      |FROM lineitem JOIN part ON l_partkey = p_partkey
-      |WHERE l_shipdate >= CAST('1996-01-01' AS TIMESTAMP)
-      |  AND l_shipdate < CAST('1997-01-01' AS TIMESTAMP)
-      |GROUP BY year(l_shipdate) * 100 + month(l_shipdate)
-      |ORDER BY ym""".stripMargin
+  /** The ppm ratio of q8 and q14 is an exact integer division on a
+    * 38-digit numerator, and its two tokens are spelled per engine:
+    * Spark's `CAST(1000000 AS DECIMAL(38,0))` and `div`, DuckDB's
+    * `1000000::HUGEINT` and `//`. */
+  private def ppmKey(name: String)(text: (String => String, String, String) => String): Key =
+    Key(name,
+      (spark, sfDir) => spark.sql(
+        text(sqlTable(Some(sfDir)), "CAST(1000000 AS DECIMAL(38,0))", "div")),
+      text(sqlTable(None), "1000000::HUGEINT", "//"))
 
   /** TPC-H Q19 SHAPE — DISJUNCTIVE PREDICATE REVENUE (r12): three
     * OR'd conjunct groups, each mixing build-side (brand, size) and
@@ -766,18 +655,12 @@ object Scans {
     * the disjunction as a residual filter (PlanSpec pins no nested
     * loop; part broadcasts as the dim). Grouped by brand so the
     * oracle checks three revenue cells, not one scalar. */
-  def sqlQ19DisjunctiveRev(spark: SparkSession, sfDir: String): DataFrame = {
-    lineitem(spark, sfDir).createOrReplaceTempView("g_q19_lineitem")
-    part(spark, sfDir).createOrReplaceTempView("g_q19_part")
-    spark.sql(sqlQ19Text("g_q19_lineitem", "g_q19_part"))
-  }
-
-  private def sqlQ19Text(li: String, pt: String): String =
+  val sqlQ19DisjunctiveRev: Key = Key.sql("sql_q19_disjunctive_rev") { t =>
     s"""SELECT p_brand,
        |  CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
        |           * (100 - CAST(CAST(l_discount AS DECIMAL(4,2)) * 100 AS BIGINT)))
        |    AS BIGINT) AS revenue_cents_x100
-       |FROM $li JOIN $pt ON p_partkey = l_partkey
+       |FROM ${t("lineitem")} JOIN ${t("part")} ON p_partkey = l_partkey
        |WHERE (p_brand = 'Brand#11' AND p_size BETWEEN 1 AND 15
        |       AND l_quantity BETWEEN 1 AND 15)
        |   OR (p_brand = 'Brand#22' AND p_size BETWEEN 1 AND 25
@@ -786,48 +669,30 @@ object Scans {
        |       AND l_quantity BETWEEN 20 AND 35)
        |GROUP BY p_brand
        |ORDER BY p_brand""".stripMargin
-
-  val sqlQ19DisjunctiveRevOracle: String = sqlQ19Text("lineitem", "part")
+  }
 
   /** SQL FRONT-END, ANALYTIC SHAPE — `sql_star_revenue` proves the
     * star join through `spark.sql`; this key proves the ANALYTIC half
     * of the SQL surface: a CTE feeding two different window frames in
     * one SELECT (cross-segment RANK per month + per-segment running
-    * total), the shape every BI tool emits. Same text shape runs on
-    * both engines; the month key is `year·100+month` integers — a
+    * total), the shape every BI tool emits. One text runs on both
+    * engines; the month key is `year·100+month` integers — a
     * `date_format` string would hit engine-specific rendering, the
     * trap the §5.4 conventions exist for. Catalyst plans both windows
     * off ONE collapsed (seg, month) aggregate: the second window's
     * re-sort is segment-keyed, never a global shuffle. */
-  def sqlWindowCte(spark: SparkSession, sfDir: String): DataFrame = {
-    // own per-key view prefix — sharing sql_star_revenue's g_sql_*
-    // names would race under parallel suites (review finding)
-    orders(spark, sfDir).createOrReplaceTempView("g_wcte_orders")
-    customer(spark, sfDir).createOrReplaceTempView("g_wcte_customer")
-    spark.sql(
-      """WITH m AS (SELECT c_mktsegment AS seg,
-        |    year(o_orderdate) * 100 + month(o_orderdate) AS ym,
-        |    SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS rev_cents
-        |  FROM g_wcte_orders JOIN g_wcte_customer ON o_custkey = c_custkey
-        |  GROUP BY 1, 2)
-        |SELECT seg, ym, rev_cents,
-        |  RANK() OVER (PARTITION BY ym ORDER BY rev_cents DESC, seg) AS rk,
-        |  SUM(rev_cents) OVER (PARTITION BY seg ORDER BY ym
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_cents
-        |FROM m ORDER BY seg, ym""".stripMargin)
+  val sqlWindowCte: Key = Key.sql("sql_window_cte") { t =>
+    s"""WITH m AS (SELECT c_mktsegment AS seg,
+       |    year(o_orderdate) * 100 + month(o_orderdate) AS ym,
+       |    CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS rev_cents
+       |  FROM ${t("orders")} JOIN ${t("customer")} ON o_custkey = c_custkey
+       |  GROUP BY 1, 2)
+       |SELECT seg, ym, rev_cents,
+       |  RANK() OVER (PARTITION BY ym ORDER BY rev_cents DESC, seg) AS rk,
+       |  CAST(SUM(rev_cents) OVER (PARTITION BY seg ORDER BY ym
+       |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_cents
+       |FROM m ORDER BY seg, ym""".stripMargin
   }
-
-  val sqlWindowCteOracle: String =
-    """WITH m AS (SELECT c_mktsegment AS seg,
-      |    year(o_orderdate) * 100 + month(o_orderdate) AS ym,
-      |    CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS rev_cents
-      |  FROM orders JOIN customer ON o_custkey = c_custkey
-      |  GROUP BY 1, 2)
-      |SELECT seg, ym, rev_cents,
-      |  RANK() OVER (PARTITION BY ym ORDER BY rev_cents DESC, seg) AS rk,
-      |  CAST(SUM(rev_cents) OVER (PARTITION BY seg ORDER BY ym
-      |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_cents
-      |FROM m ORDER BY seg, ym""".stripMargin
 
   /** TPC-H Q6 SHAPE — FORECASTING REVENUE CHANGE (r13): the pure
     * scan → filter → single-row aggregate, deliberately join-free —
@@ -839,22 +704,17 @@ object Scans {
     * compares as DECIMAL(4,2), never raw doubles — an exact 0.05 ≤ d ≤
     * 0.07 on binary floats would be engine-dependent at the
     * boundaries. Revenue is the exact integer cent·percent product. */
-  def sqlQ6ForecastRevenue(spark: SparkSession, sfDir: String): DataFrame = {
-    lineitem(spark, sfDir).createOrReplaceTempView("g_q6_lineitem")
-    spark.sql(sqlQ6Text("g_q6_lineitem"))
-  }
-  private def sqlQ6Text(li: String): String =
+  val sqlQ6ForecastRevenue: Key = Key.sql("sql_q6_forecast_revenue") { t =>
     s"""SELECT CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
        |         * CAST(CAST(l_discount AS DECIMAL(4,2)) * 100 AS BIGINT)) AS BIGINT)
        |    AS revenue_cent_pct,
        |  COUNT(*) AS n_lines
-       |FROM $li
+       |FROM ${t("lineitem")}
        |WHERE l_shipdate >= CAST('1996-01-01' AS TIMESTAMP)
        |  AND l_shipdate < CAST('1997-01-01' AS TIMESTAMP)
        |  AND CAST(l_discount AS DECIMAL(4,2)) BETWEEN 0.05 AND 0.07
        |  AND l_quantity < 24""".stripMargin
-
-  val sqlQ6ForecastRevenueOracle: String = sqlQ6Text("lineitem")
+  }
 
   /** TPC-H Q8 SHAPE — NATIONAL MARKET SHARE (r13): the conditional-
     * aggregate-over-a-star shape — NATION_1's share of ECONOMY-part
@@ -864,47 +724,30 @@ object Scans {
     * broadcast, and the share is a per-group conditional sum over one
     * fact⋈fact pass — no second scan for the denominator. Exact
     * integer volumes; the ppm division rides DECIMAL(38,0)/HUGEINT
-    * (the q14 rule), and Spark `div` vs DuckDB `//` forces the split
-    * final text. */
-  def sqlQ8MarketShare(spark: SparkSession, sfDir: String): DataFrame = {
-    lineitem(spark, sfDir).createOrReplaceTempView("g_q8_lineitem")
-    orders(spark, sfDir).createOrReplaceTempView("g_q8_orders")
-    customer(spark, sfDir).createOrReplaceTempView("g_q8_customer")
-    supplier(spark, sfDir).createOrReplaceTempView("g_q8_supplier")
-    nation(spark, sfDir).createOrReplaceTempView("g_q8_nation")
-    region(spark, sfDir).createOrReplaceTempView("g_q8_region")
-    part(spark, sfDir).createOrReplaceTempView("g_q8_part")
-    spark.sql(sqlQ8Text("g_q8_lineitem", "g_q8_orders", "g_q8_customer",
-      "g_q8_supplier", "g_q8_nation", "g_q8_region", "g_q8_part",
-      "CAST(1000000 AS DECIMAL(38,0))", "div"))
-  }
-  private def sqlQ8Text(li: String, ord: String, cust: String, supp: String,
-      nat: String, reg: String, part: String, ppmLit: String, divOp: String): String =
+    * (the q14 rule), spelled per engine by [[ppmKey]]. */
+  val sqlQ8MarketShare: Key = ppmKey("sql_q8_market_share") { (t, ppm, div) =>
     s"""SELECT o_year,
-       |  CAST(($ppmLit *
+       |  CAST(($ppm *
        |        SUM(CASE WHEN supp_nation = 'NATION_1' THEN vol ELSE 0 END))
-       |    $divOp SUM(vol) AS BIGINT) AS mkt_share_ppm,
+       |    $div SUM(vol) AS BIGINT) AS mkt_share_ppm,
        |  CAST(SUM(vol) AS BIGINT) AS total_vol
        |FROM (
        |  SELECT year(o_orderdate) AS o_year,
        |    CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
        |      * (100 - CAST(CAST(l_discount AS DECIMAL(4,2)) * 100 AS BIGINT)) AS vol,
        |    n2.n_name AS supp_nation
-       |  FROM $li
-       |  JOIN $ord ON l_orderkey = o_orderkey
-       |  JOIN $cust ON o_custkey = c_custkey
-       |  JOIN $supp ON l_suppkey = s_suppkey
-       |  JOIN $nat n1 ON c_nationkey = n1.n_nationkey
-       |  JOIN $reg ON n1.n_regionkey = r_regionkey
-       |  JOIN $nat n2 ON s_nationkey = n2.n_nationkey
-       |  JOIN $part ON l_partkey = p_partkey
+       |  FROM ${t("lineitem")}
+       |  JOIN ${t("orders")} ON l_orderkey = o_orderkey
+       |  JOIN ${t("customer")} ON o_custkey = c_custkey
+       |  JOIN ${t("supplier")} ON l_suppkey = s_suppkey
+       |  JOIN ${t("nation")} n1 ON c_nationkey = n1.n_nationkey
+       |  JOIN ${t("region")} ON n1.n_regionkey = r_regionkey
+       |  JOIN ${t("nation")} n2 ON s_nationkey = n2.n_nationkey
+       |  JOIN ${t("part")} ON l_partkey = p_partkey
        |  WHERE r_name = 'AMERICA' AND p_type = 'ECONOMY') all_nations
        |GROUP BY o_year
        |ORDER BY o_year""".stripMargin
-
-  val sqlQ8MarketShareOracle: String =
-    sqlQ8Text("lineitem", "orders", "customer", "supplier", "nation",
-      "region", "part", "1000000::HUGEINT", "//")
+  }
 
   /** TPC-H Q10 SHAPE — RETURNED ITEM REPORTING (r13): the top-k
     * revenue-loss ranking — customers whose Q1-1996 orders shipped
@@ -915,34 +758,24 @@ object Scans {
     * shuffle, the driver-hash trap every `*_topk` key dodges the same
     * way). At 100 TB the date gate prunes orders BEFORE the fact⋈fact
     * join and the returnflag filter pushes to the lineitem scan. */
-  def sqlQ10ReturnedItems(spark: SparkSession, sfDir: String): DataFrame = {
-    lineitem(spark, sfDir).createOrReplaceTempView("g_q10_lineitem")
-    orders(spark, sfDir).createOrReplaceTempView("g_q10_orders")
-    customer(spark, sfDir).createOrReplaceTempView("g_q10_customer")
-    nation(spark, sfDir).createOrReplaceTempView("g_q10_nation")
-    spark.sql(sqlQ10Text("g_q10_lineitem", "g_q10_orders", "g_q10_customer",
-      "g_q10_nation"))
-  }
-  private def sqlQ10Text(li: String, ord: String, cust: String, nat: String): String =
+  val sqlQ10ReturnedItems: Key = Key.sql("sql_q10_returned_items") { t =>
     s"""SELECT c_custkey, c_name,
        |  CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
        |           * (100 - CAST(CAST(l_discount AS DECIMAL(4,2)) * 100 AS BIGINT)))
        |    AS BIGINT) AS revenue,
        |  CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS acctbal_cents,
        |  n_name
-       |FROM $cust
-       |JOIN $ord ON c_custkey = o_custkey
-       |JOIN $li ON l_orderkey = o_orderkey
-       |JOIN $nat ON c_nationkey = n_nationkey
+       |FROM ${t("customer")}
+       |JOIN ${t("orders")} ON c_custkey = o_custkey
+       |JOIN ${t("lineitem")} ON l_orderkey = o_orderkey
+       |JOIN ${t("nation")} ON c_nationkey = n_nationkey
        |WHERE o_orderdate >= CAST('1996-01-01' AS TIMESTAMP)
        |  AND o_orderdate < CAST('1996-04-01' AS TIMESTAMP)
        |  AND l_returnflag = 'R'
        |GROUP BY c_custkey, c_name, c_acctbal, n_name
        |ORDER BY revenue DESC, c_custkey
        |LIMIT 20""".stripMargin
-
-  val sqlQ10ReturnedItemsOracle: String =
-    sqlQ10Text("lineitem", "orders", "customer", "nation")
+  }
 
   /** TPC-H Q4 SHAPE — ORDER PRIORITY CHECKING (r14): the correlated
     * EXISTS shape — count a quarter's orders per priority where at
@@ -956,22 +789,16 @@ object Scans {
     * never the full fact⋈fact product. Completes the TPC-H survey:
     * with q4/q9/q12 every Q expressible on this schema is graded
     * (q11/q16/q20 need the absent partsupp table). */
-  def sqlQ4OrderPriority(spark: SparkSession, sfDir: String): DataFrame = {
-    orders(spark, sfDir).createOrReplaceTempView("g_q4_orders")
-    lineitem(spark, sfDir).createOrReplaceTempView("g_q4_lineitem")
-    spark.sql(sqlQ4Text("g_q4_orders", "g_q4_lineitem"))
-  }
-  private def sqlQ4Text(ord: String, li: String): String =
+  val sqlQ4OrderPriority: Key = Key.sql("sql_q4_order_priority") { t =>
     s"""SELECT o_orderpriority, COUNT(*) AS order_count
-       |FROM $ord
+       |FROM ${t("orders")}
        |WHERE o_orderdate >= CAST('1996-07-01' AS TIMESTAMP)
        |  AND o_orderdate < CAST('1996-10-01' AS TIMESTAMP)
-       |  AND EXISTS (SELECT 1 FROM $li
+       |  AND EXISTS (SELECT 1 FROM ${t("lineitem")}
        |              WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
        |GROUP BY o_orderpriority
        |ORDER BY o_orderpriority""".stripMargin
-
-  val sqlQ4OrderPriorityOracle: String = sqlQ4Text("orders", "lineitem")
+  }
 
   /** TPC-H Q9 SHAPE — PRODUCT-TYPE PROFIT (r14): the widest remaining
     * join tree — lineitem ⋈ part (name-LIKE gate) ⋈ supplier ⋈ nation
@@ -984,33 +811,21 @@ object Scans {
     * part/supplier/nation dims broadcast, and the only big shuffle is
     * lineitem⋈orders on orderkey — the unavoidable fact⋈fact edge,
     * grouped map-side by (nation, year) afterwards. */
-  def sqlQ9ProductProfit(spark: SparkSession, sfDir: String): DataFrame = {
-    lineitem(spark, sfDir).createOrReplaceTempView("g_q9_lineitem")
-    part(spark, sfDir).createOrReplaceTempView("g_q9_part")
-    supplier(spark, sfDir).createOrReplaceTempView("g_q9_supplier")
-    nation(spark, sfDir).createOrReplaceTempView("g_q9_nation")
-    orders(spark, sfDir).createOrReplaceTempView("g_q9_orders")
-    spark.sql(sqlQ9Text("g_q9_lineitem", "g_q9_part", "g_q9_supplier",
-      "g_q9_nation", "g_q9_orders"))
-  }
-  private def sqlQ9Text(li: String, prt: String, supp: String,
-      nat: String, ord: String): String =
+  val sqlQ9ProductProfit: Key = Key.sql("sql_q9_product_profit") { t =>
     s"""SELECT n_name AS nation, year(o_orderdate) AS o_year,
        |  CAST(ROUND(SUM(CAST($revenueSqlFrag AS DECIMAL(24,8)) -
        |    CAST(p_retailprice AS DECIMAL(12,2)) * CAST(l_quantity AS DECIMAL(12,2))
        |      * CAST(0.1 AS DECIMAL(8,6))), 2) AS DOUBLE) AS profit,
        |  COUNT(*) AS n_lines
-       |FROM $li
-       |JOIN $prt ON l_partkey = p_partkey
-       |JOIN $supp ON l_suppkey = s_suppkey
-       |JOIN $nat ON s_nationkey = n_nationkey
-       |JOIN $ord ON o_orderkey = l_orderkey
+       |FROM ${t("lineitem")}
+       |JOIN ${t("part")} ON l_partkey = p_partkey
+       |JOIN ${t("supplier")} ON l_suppkey = s_suppkey
+       |JOIN ${t("nation")} ON s_nationkey = n_nationkey
+       |JOIN ${t("orders")} ON o_orderkey = l_orderkey
        |WHERE p_name LIKE '%bolt%'
        |GROUP BY n_name, year(o_orderdate)
        |ORDER BY nation, o_year""".stripMargin
-
-  val sqlQ9ProductProfitOracle: String =
-    sqlQ9Text("lineitem", "part", "supplier", "nation", "orders")
+  }
 
   /** TPC-H Q12 SHAPE — PRIORITY CLASS BY SHIP CLASS (r14): the two-
     * bucket conditional count after a date-windowed fact⋈fact join —
@@ -1021,86 +836,50 @@ object Scans {
     * 2 counters, not rows; the ship-date window prunes lineitem at
     * the scan. Exact integer counts, CAST BIGINT on both engines
     * (DuckDB SUM(int) is otherwise HUGEINT — the §5.4 hash trap). */
-  def sqlQ12PriorityClass(spark: SparkSession, sfDir: String): DataFrame = {
-    orders(spark, sfDir).createOrReplaceTempView("g_q12_orders")
-    lineitem(spark, sfDir).createOrReplaceTempView("g_q12_lineitem")
-    spark.sql(sqlQ12Text("g_q12_orders", "g_q12_lineitem"))
-  }
-  private def sqlQ12Text(ord: String, li: String): String =
+  val sqlQ12PriorityClass: Key = Key.sql("sql_q12_priority_class") { t =>
     s"""SELECT l_returnflag,
        |  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
        |           THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
        |  CAST(SUM(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
        |           THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-       |FROM $ord JOIN $li ON o_orderkey = l_orderkey
+       |FROM ${t("orders")} JOIN ${t("lineitem")} ON o_orderkey = l_orderkey
        |WHERE l_shipdate >= CAST('1996-01-01' AS TIMESTAMP)
        |  AND l_shipdate < CAST('1997-01-01' AS TIMESTAMP)
        |GROUP BY l_returnflag
        |ORDER BY l_returnflag""".stripMargin
+  }
 
-  val sqlQ12PriorityClassOracle: String = sqlQ12Text("orders", "lineitem")
+  val keys: Seq[Key] = Seq(
+    sqlQ4OrderPriority,
+    sqlQ9ProductProfit,
+    sqlQ12PriorityClass,
+    sqlQ6ForecastRevenue,
+    sqlQ8MarketShare,
+    sqlQ10ReturnedItems,
+    sqlWindowCte,
+    sqlStarRevenue,
+    sqlQ3ShippingPriority,
+    sqlQ5LocalVolume,
+    sqlQ22GlobalCust,
+    sqlQ21WaitingSupplier,
+    sqlQ18LargeOrders,
+    sqlQ15TopSupplier,
+    sqlQ7VolumeShipping,
+    sqlQ13CustDist,
+    sqlQ14PromoShare,
+    sqlQ19DisjunctiveRev,
+    sqlLateralTopn,
+    Key("scan_profile", scanProfile, scanProfileOracle),
+    Key("scan_dynamic_pruning", scanDynamicPruning, scanDynamicPruningOracle),
+    Key("scan_partition_pruning", scanPartitionPruning, scanPartitionPruningOracle),
+    Key("export_partition_overwrite", exportPartitionOverwrite, exportPartitionOverwriteOracle),
+    Key("export_sized_files", exportSizedFiles, exportSizedFilesOracle),
+    Key("export_zorder", exportZorder, exportZorderOracle),
+    Key("scan_project", scanProject, scanProjectOracle),
+    Key("scan_filter_pushdown", scanFilterPushdown, scanFilterPushdownOracle),
+    Key("scan_events_ns", scanEventsNs, scanEventsNsOracle),
+    Key("scan_kv_model", scanKvModel, scanKvModelOracle),
+    Key("export_manifest", exportManifest, exportManifestOracle))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sql_q4_order_priority" -> (sqlQ4OrderPriority _),
-    "sql_q9_product_profit" -> (sqlQ9ProductProfit _),
-    "sql_q12_priority_class" -> (sqlQ12PriorityClass _),
-    "sql_q6_forecast_revenue" -> (sqlQ6ForecastRevenue _),
-    "sql_q8_market_share" -> (sqlQ8MarketShare _),
-    "sql_q10_returned_items" -> (sqlQ10ReturnedItems _),
-    "sql_window_cte" -> (sqlWindowCte _),
-    "sql_star_revenue" -> (sqlStarRevenue _),
-    "sql_q3_shipping_priority" -> (sqlQ3ShippingPriority _),
-    "sql_q5_local_volume" -> (sqlQ5LocalVolume _),
-    "sql_q22_global_cust" -> (sqlQ22GlobalCust _),
-    "sql_q21_waiting_supplier" -> (sqlQ21WaitingSupplier _),
-    "sql_q18_large_orders" -> (sqlQ18LargeOrders _),
-    "sql_q15_top_supplier" -> (sqlQ15TopSupplier _),
-    "sql_q7_volume_shipping" -> (sqlQ7VolumeShipping _),
-    "sql_q13_custdist" -> (sqlQ13CustDist _),
-    "sql_q14_promo_share" -> (sqlQ14PromoShare _),
-    "sql_q19_disjunctive_rev" -> (sqlQ19DisjunctiveRev _),
-    "sql_lateral_topn" -> (sqlLateralTopn _),
-    "scan_profile" -> (scanProfile _),
-    "scan_dynamic_pruning" -> (scanDynamicPruning _),
-    "scan_partition_pruning" -> (scanPartitionPruning _),
-    "export_partition_overwrite" -> (exportPartitionOverwrite _),
-    "export_sized_files" -> (exportSizedFiles _),
-    "export_zorder" -> (exportZorder _),
-    "scan_project" -> (scanProject _),
-    "scan_filter_pushdown" -> (scanFilterPushdown _),
-    "scan_events_ns" -> (scanEventsNs _),
-    "scan_kv_model" -> (scanKvModel _),
-    "export_manifest" -> (exportManifest _))
-
-  val oracle: Map[String, String] = Map(
-    "sql_q4_order_priority" -> sqlQ4OrderPriorityOracle,
-    "sql_q9_product_profit" -> sqlQ9ProductProfitOracle,
-    "sql_q12_priority_class" -> sqlQ12PriorityClassOracle,
-    "sql_q6_forecast_revenue" -> sqlQ6ForecastRevenueOracle,
-    "sql_q8_market_share" -> sqlQ8MarketShareOracle,
-    "sql_q10_returned_items" -> sqlQ10ReturnedItemsOracle,
-    "sql_window_cte" -> sqlWindowCteOracle,
-    "sql_star_revenue" -> sqlStarRevenueOracle,
-    "sql_q3_shipping_priority" -> sqlQ3ShippingPriorityOracle,
-    "sql_q5_local_volume" -> sqlQ5LocalVolumeOracle,
-    "sql_q22_global_cust" -> sqlQ22GlobalCustOracle,
-    "sql_q21_waiting_supplier" -> sqlQ21WaitingSupplierOracle,
-    "sql_q18_large_orders" -> sqlQ18LargeOrdersOracle,
-    "sql_q15_top_supplier" -> sqlQ15TopSupplierOracle,
-    "sql_q7_volume_shipping" -> sqlQ7VolumeShippingOracle,
-    "sql_q13_custdist" -> sqlQ13CustDistOracle,
-    "sql_q14_promo_share" -> sqlQ14PromoShareOracle,
-    "sql_q19_disjunctive_rev" -> sqlQ19DisjunctiveRevOracle,
-    "sql_lateral_topn" -> sqlLateralTopnOracle,
-    "scan_profile" -> scanProfileOracle,
-    "scan_dynamic_pruning" -> scanDynamicPruningOracle,
-    "scan_partition_pruning" -> scanPartitionPruningOracle,
-    "export_partition_overwrite" -> exportPartitionOverwriteOracle,
-    "export_sized_files" -> exportSizedFilesOracle,
-    "export_zorder" -> exportZorderOracle,
-    "scan_project" -> scanProjectOracle,
-    "scan_filter_pushdown" -> scanFilterPushdownOracle,
-    "scan_events_ns" -> scanEventsNsOracle,
-    "scan_kv_model" -> scanKvModelOracle,
-    "export_manifest" -> exportManifestOracle)
+  val queries: Map[String, Key.Run] = Key.queries(keys)
 }

@@ -111,21 +111,14 @@ object SetOps {
       |EXCEPT ALL SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
       |ORDER BY o_custkey""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "set_intersect_all" -> (setIntersectAll _),
-    "set_except_all" -> (setExceptAll _),
-    "sort_multikey_limit" -> (sortMultikeyLimit _),
-    "set_union_all" -> (setUnionAll _),
-    "set_union_distinct" -> (setUnionDistinct _),
-    "set_intersect" -> (setIntersect _),
-    "set_except" -> (setExcept _))
+  val keys: Seq[Key] = Seq(
+    Key("set_intersect_all", setIntersectAll, setIntersectAllOracle),
+    Key("set_except_all", setExceptAll, setExceptAllOracle),
+    Key("sort_multikey_limit", sortMultikeyLimit, sortMultikeyLimitOracle),
+    Key("set_union_all", setUnionAll, setUnionAllOracle),
+    Key("set_union_distinct", setUnionDistinct, setUnionDistinctOracle),
+    Key("set_intersect", setIntersect, setIntersectOracle),
+    Key("set_except", setExcept, setExceptOracle))
 
-  val oracle: Map[String, String] = Map(
-    "set_intersect_all" -> setIntersectAllOracle,
-    "set_except_all" -> setExceptAllOracle,
-    "sort_multikey_limit" -> sortMultikeyLimitOracle,
-    "set_union_all" -> setUnionAllOracle,
-    "set_union_distinct" -> setUnionDistinctOracle,
-    "set_intersect" -> setIntersectOracle,
-    "set_except" -> setExceptOracle)
+  val queries: Map[String, Key.Run] = Key.queries(keys)
 }

@@ -1424,83 +1424,45 @@ object Sources {
       |  AND c.o_orderstatus = st.o_orderstatus
       |ORDER BY 1, 2""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "source_csv_malformed" -> (sourceCsvMalformed _),
-    "source_compressed_roundtrip" -> (sourceCompressedRoundtrip _),
-    "pivot_unpivot" -> (pivotUnpivot _),
-    "kv_pitr_restore" -> (kvPitrRestore _),
-    "kv_wal_replay" -> (kvWalReplay _),
-    "kv_replication" -> (kvReplication _),
-    "kv_region_merge" -> (kvRegionMerge _),
-    "kv_region_rebalance" -> (kvRegionRebalance _),
-    "source_schema_evolution" -> (sourceSchemaEvolution _),
-    "source_text_roundtrip" -> (sourceTextRoundtrip _),
-    "source_csv_roundtrip" -> (sourceCsvRoundtrip _),
-    "source_json_roundtrip" -> (sourceJsonRoundtrip _),
-    "source_orc_roundtrip" -> (sourceOrcRoundtrip _),
-    "source_kv_connector" -> (sourceKvConnector _),
-    "kv_stats_pushdown" -> (kvStatsPushdown _),
-    "kv_stats_by_qualifier" -> (kvStatsByQualifier _),
-    "kv_bloom_lookup" -> (kvBloomLookup _),
-    "kv_scrub" -> (kvScrub _),
-    "kv_snapshot_lifecycle" -> (kvSnapshotLifecycle _),
-    "kv_snapshot_incremental" -> (kvSnapshotIncremental _),
-    "kv_snapshot_export" -> (kvSnapshotExport _),
-    "kv_snapshot_verify" -> (kvSnapshotVerify _),
-    "kv_snapshot_diff" -> (kvSnapshotDiff _),
-    "kv_changefeed_apply" -> (kvChangefeedApply _),
-    "kv_versioned_read" -> (kvVersionedRead _),
-    "kv_compact_versions" -> (kvCompactVersions _),
-    "kv_tombstone_delete" -> (kvTombstoneDelete _),
-    "kv_minor_compact" -> (kvMinorCompact _),
-    "kv_ttl_expiry" -> (kvTtlExpiry _),
-    "kv_bulk_load" -> (kvBulkLoad _),
-    "kv_secondary_index" -> (kvSecondaryIndex _),
-    "kv_split" -> (kvSplit _),
-    "kv_clone" -> (kvClone _),
-    "kv_compact" -> (kvCompact _),
-    "kv_stream_ingest" -> (kvStreamIngest _),
-    "kv_stream_resume" -> (kvStreamResume _),
-    "pivot_status_by_priority" -> (pivotStatusByPriority _),
-    "export_bucketed" -> (exportBucketed _))
+  val keys: Seq[Key] = Seq(
+    Key("source_csv_malformed", sourceCsvMalformed, sourceCsvMalformedOracle),
+    Key("source_compressed_roundtrip", sourceCompressedRoundtrip, sourceCompressedRoundtripOracle),
+    Key("pivot_unpivot", pivotUnpivot, pivotUnpivotOracle),
+    Key("kv_pitr_restore", kvPitrRestore, kvPitrRestoreOracle),
+    Key("kv_wal_replay", kvWalReplay, kvWalReplayOracle),
+    Key("kv_replication", kvReplication, kvReplicationOracle),
+    Key("kv_region_merge", kvRegionMerge, kvRegionMergeOracle),
+    Key("kv_region_rebalance", kvRegionRebalance, kvRegionRebalanceOracle),
+    Key("source_schema_evolution", sourceSchemaEvolution, sourceSchemaEvolutionOracle),
+    Key("source_text_roundtrip", sourceTextRoundtrip, sourceTextRoundtripOracle),
+    Key("source_csv_roundtrip", sourceCsvRoundtrip, sourceCsvRoundtripOracle),
+    Key("source_json_roundtrip", sourceJsonRoundtrip, sourceJsonRoundtripOracle),
+    Key("source_orc_roundtrip", sourceOrcRoundtrip, sourceOrcRoundtripOracle),
+    Key("source_kv_connector", sourceKvConnector, sourceKvConnectorOracle),
+    Key("kv_stats_pushdown", kvStatsPushdown, kvStatsPushdownOracle),
+    Key("kv_stats_by_qualifier", kvStatsByQualifier, kvStatsByQualifierOracle),
+    Key("kv_bloom_lookup", kvBloomLookup, kvBloomLookupOracle),
+    Key("kv_scrub", kvScrub, kvScrubOracle),
+    Key("kv_snapshot_lifecycle", kvSnapshotLifecycle, kvSnapshotLifecycleOracle),
+    Key("kv_snapshot_incremental", kvSnapshotIncremental, kvSnapshotIncrementalOracle),
+    Key("kv_snapshot_export", kvSnapshotExport, kvSnapshotExportOracle),
+    Key("kv_snapshot_verify", kvSnapshotVerify, kvSnapshotVerifyOracle),
+    Key("kv_snapshot_diff", kvSnapshotDiff, kvSnapshotDiffOracle),
+    Key("kv_changefeed_apply", kvChangefeedApply, kvChangefeedApplyOracle),
+    Key("kv_versioned_read", kvVersionedRead, kvVersionedReadOracle),
+    Key("kv_compact_versions", kvCompactVersions, kvCompactVersionsOracle),
+    Key("kv_tombstone_delete", kvTombstoneDelete, kvTombstoneDeleteOracle),
+    Key("kv_minor_compact", kvMinorCompact, kvMinorCompactOracle),
+    Key("kv_ttl_expiry", kvTtlExpiry, kvTtlExpiryOracle),
+    Key("kv_bulk_load", kvBulkLoad, kvBulkLoadOracle),
+    Key("kv_secondary_index", kvSecondaryIndex, kvSecondaryIndexOracle),
+    Key("kv_split", kvSplit, kvSplitOracle),
+    Key("kv_clone", kvClone, kvCloneOracle),
+    Key("kv_compact", kvCompact, kvCompactOracle),
+    Key("kv_stream_ingest", kvStreamIngest, kvStreamIngestOracle),
+    Key("kv_stream_resume", kvStreamResume, kvStreamResumeOracle),
+    Key("pivot_status_by_priority", pivotStatusByPriority, pivotStatusByPriorityOracle),
+    Key("export_bucketed", exportBucketed, exportBucketedOracle))
 
-  val oracle: Map[String, String] = Map(
-    "source_csv_malformed" -> sourceCsvMalformedOracle,
-    "source_compressed_roundtrip" -> sourceCompressedRoundtripOracle,
-    "pivot_unpivot" -> pivotUnpivotOracle,
-    "kv_pitr_restore" -> kvPitrRestoreOracle,
-    "kv_wal_replay" -> kvWalReplayOracle,
-    "kv_replication" -> kvReplicationOracle,
-    "kv_region_merge" -> kvRegionMergeOracle,
-    "kv_region_rebalance" -> kvRegionRebalanceOracle,
-    "source_schema_evolution" -> sourceSchemaEvolutionOracle,
-    "source_text_roundtrip" -> sourceTextRoundtripOracle,
-    "source_csv_roundtrip" -> sourceCsvRoundtripOracle,
-    "source_json_roundtrip" -> sourceJsonRoundtripOracle,
-    "source_orc_roundtrip" -> sourceOrcRoundtripOracle,
-    "source_kv_connector" -> sourceKvConnectorOracle,
-    "kv_stats_pushdown" -> kvStatsPushdownOracle,
-    "kv_stats_by_qualifier" -> kvStatsByQualifierOracle,
-    "kv_bloom_lookup" -> kvBloomLookupOracle,
-    "kv_scrub" -> kvScrubOracle,
-    "kv_snapshot_lifecycle" -> kvSnapshotLifecycleOracle,
-    "kv_snapshot_incremental" -> kvSnapshotIncrementalOracle,
-    "kv_snapshot_export" -> kvSnapshotExportOracle,
-    "kv_snapshot_verify" -> kvSnapshotVerifyOracle,
-    "kv_snapshot_diff" -> kvSnapshotDiffOracle,
-    "kv_changefeed_apply" -> kvChangefeedApplyOracle,
-    "kv_versioned_read" -> kvVersionedReadOracle,
-    "kv_compact_versions" -> kvCompactVersionsOracle,
-    "kv_tombstone_delete" -> kvTombstoneDeleteOracle,
-    "kv_minor_compact" -> kvMinorCompactOracle,
-    "kv_ttl_expiry" -> kvTtlExpiryOracle,
-    "kv_bulk_load" -> kvBulkLoadOracle,
-    "kv_secondary_index" -> kvSecondaryIndexOracle,
-    "kv_split" -> kvSplitOracle,
-    "kv_clone" -> kvCloneOracle,
-    "kv_compact" -> kvCompactOracle,
-    "kv_stream_ingest" -> kvStreamIngestOracle,
-    "kv_stream_resume" -> kvStreamResumeOracle,
-    "pivot_status_by_priority" -> pivotStatusByPriorityOracle,
-    "export_bucketed" -> exportBucketedOracle)
+  val queries: Map[String, Key.Run] = Key.queries(keys)
 }

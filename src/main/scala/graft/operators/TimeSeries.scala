@@ -1784,84 +1784,47 @@ object TimeSeries {
       |WHERE event_type = 'purchase'
       |GROUP BY 1, 2 ORDER BY cohort_wk, week_age""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ts_ewma" -> (tsEwma _),
-    "ts_cohort_value" -> (tsCohortValue _),
-    "ts_interarrival" -> (tsInterarrival _),
-    "ts_peaks" -> (tsPeaks _),
-    "ts_forecast_eval" -> (tsForecastEval _),
-    "ts_robust_zscore" -> (tsRobustZscore _),
-    "ts_dau_wau" -> (tsDauWau _),
-    "ts_alert_debounce" -> (tsAlertDebounce _),
-    "ts_downsample_m4" -> (tsDownsampleM4 _),
-    "ts_seasonal_profile" -> (tsSeasonalProfile _),
-    "ts_fill_forward" -> (tsFillForward _),
-    "ts_tumbling_distinct" -> (tsTumblingDistinct _),
-    "ts_lag_corr" -> (tsLagCorr _),
-    "ts_gap_fill" -> (tsGapFill _),
-    "ts_ohlc" -> (tsOhlc _),
-    "ts_anomaly" -> (tsAnomaly _),
-    "ts_changepoint" -> (tsChangepoint _),
-    "ts_stream_upsert" -> (tsStreamUpsert _),
-    "ts_tumbling" -> (tsTumbling _),
-    "ts_tumbling_stream" -> (tsTumblingStream _),
-    "ts_sliding" -> (tsSliding _),
-    "ts_sliding_stream" -> (tsSlidingStream _),
-    "ts_sliding_stream_append" -> (tsSlidingStreamAppend _),
-    "ts_sliding_stream_update" -> (tsSlidingStreamUpdate _),
-    "ts_session" -> (tsSession _),
-    "ts_session_stream" -> (tsSessionStream _),
-    "ts_dedup_watermark" -> (tsDedupWatermark _),
-    "ts_dedup_stream" -> (tsDedupStream _),
-    "ts_stateful_stream" -> (tsStatefulStream _),
-    "ts_timeout_sessions" -> (tsTimeoutSessions _),
-    "ts_stream_join" -> (tsStreamJoin _),
-    "ts_stream_stream_join" -> (tsStreamStreamJoin _),
-    "ts_stream_outer_join" -> (tsStreamOuterJoin _),
-    "ts_stream_append_window" -> (tsStreamAppendWindow _),
-    "ts_funnel" -> (tsFunnel _),
-    "ts_retention" -> (tsRetention _),
-    "ts_transitions" -> (tsTransitions _),
-    "ts_late_data" -> (tsLateData _))
-
-  val oracle: Map[String, String] = Map(
-    "ts_ewma" -> tsEwmaOracle,
-    "ts_cohort_value" -> tsCohortValueOracle,
-    "ts_interarrival" -> tsInterarrivalOracle,
-    "ts_peaks" -> tsPeaksOracle,
-    "ts_forecast_eval" -> tsForecastEvalOracle,
-    "ts_robust_zscore" -> tsRobustZscoreOracle,
-    "ts_dau_wau" -> tsDauWauOracle,
-    "ts_alert_debounce" -> tsAlertDebounceOracle,
-    "ts_downsample_m4" -> tsDownsampleM4Oracle,
-    "ts_seasonal_profile" -> tsSeasonalProfileOracle,
-    "ts_fill_forward" -> tsFillForwardOracle,
-    "ts_tumbling_distinct" -> tsTumblingDistinctOracle,
-    "ts_lag_corr" -> tsLagCorrOracle,
-    "ts_gap_fill" -> tsGapFillOracle,
-    "ts_anomaly" -> tsAnomalyOracle,
-    "ts_changepoint" -> tsChangepointOracle,
-    "ts_stream_upsert" -> tsStreamUpsertOracle,
-    "ts_ohlc" -> tsOhlcOracle,
-    "ts_tumbling" -> tsTumblingOracle,
+  val keys: Seq[Key] = Seq(
+    Key("ts_ewma", tsEwma, tsEwmaOracle),
+    Key("ts_cohort_value", tsCohortValue, tsCohortValueOracle),
+    Key("ts_interarrival", tsInterarrival, tsInterarrivalOracle),
+    Key("ts_peaks", tsPeaks, tsPeaksOracle),
+    Key("ts_forecast_eval", tsForecastEval, tsForecastEvalOracle),
+    Key("ts_robust_zscore", tsRobustZscore, tsRobustZscoreOracle),
+    Key("ts_dau_wau", tsDauWau, tsDauWauOracle),
+    Key("ts_alert_debounce", tsAlertDebounce, tsAlertDebounceOracle),
+    Key("ts_downsample_m4", tsDownsampleM4, tsDownsampleM4Oracle),
+    Key("ts_seasonal_profile", tsSeasonalProfile, tsSeasonalProfileOracle),
+    Key("ts_fill_forward", tsFillForward, tsFillForwardOracle),
+    Key("ts_tumbling_distinct", tsTumblingDistinct, tsTumblingDistinctOracle),
+    Key("ts_lag_corr", tsLagCorr, tsLagCorrOracle),
+    Key("ts_gap_fill", tsGapFill, tsGapFillOracle),
+    Key("ts_ohlc", tsOhlc, tsOhlcOracle),
+    Key("ts_anomaly", tsAnomaly, tsAnomalyOracle),
+    Key("ts_changepoint", tsChangepoint, tsChangepointOracle),
+    Key("ts_stream_upsert", tsStreamUpsert, tsStreamUpsertOracle),
+    Key("ts_tumbling", tsTumbling, tsTumblingOracle),
     // the streaming executions must produce exactly the batch results
-    "ts_tumbling_stream" -> tsTumblingOracle,
-    "ts_sliding" -> tsSlidingOracle,
-    "ts_sliding_stream" -> tsSlidingOracle,
-    "ts_sliding_stream_append" -> tsSlidingStreamAppendOracle,
-    "ts_sliding_stream_update" -> tsSlidingStreamUpdateOracle,
-    "ts_session" -> tsSessionOracle,
-    "ts_session_stream" -> tsSessionOracle,
-    "ts_dedup_watermark" -> tsDedupWatermarkOracle,
-    "ts_dedup_stream" -> tsDedupWatermarkOracle,
-    "ts_stateful_stream" -> tsStatefulStreamOracle,
-    "ts_timeout_sessions" -> tsSessionOracle, // batch-equivalent by construction (see scaladoc)
-    "ts_stream_join" -> tsStreamJoinOracle,
-    "ts_stream_stream_join" -> tsStreamStreamJoinOracle,
-    "ts_stream_outer_join" -> tsStreamOuterJoinOracle,
-    "ts_stream_append_window" -> tsStreamAppendWindowOracle,
-    "ts_funnel" -> tsFunnelOracle,
-    "ts_retention" -> tsRetentionOracle,
-    "ts_transitions" -> tsTransitionsOracle,
-    "ts_late_data" -> tsLateDataOracle)
+    Key("ts_tumbling_stream", tsTumblingStream, tsTumblingOracle),
+    Key("ts_sliding", tsSliding, tsSlidingOracle),
+    Key("ts_sliding_stream", tsSlidingStream, tsSlidingOracle),
+    Key("ts_sliding_stream_append", tsSlidingStreamAppend, tsSlidingStreamAppendOracle),
+    Key("ts_sliding_stream_update", tsSlidingStreamUpdate, tsSlidingStreamUpdateOracle),
+    Key("ts_session", tsSession, tsSessionOracle),
+    Key("ts_session_stream", tsSessionStream, tsSessionOracle),
+    Key("ts_dedup_watermark", tsDedupWatermark, tsDedupWatermarkOracle),
+    Key("ts_dedup_stream", tsDedupStream, tsDedupWatermarkOracle),
+    Key("ts_stateful_stream", tsStatefulStream, tsStatefulStreamOracle),
+    // batch-equivalent by construction (see scaladoc)
+    Key("ts_timeout_sessions", tsTimeoutSessions, tsSessionOracle),
+    Key("ts_stream_join", tsStreamJoin, tsStreamJoinOracle),
+    Key("ts_stream_stream_join", tsStreamStreamJoin, tsStreamStreamJoinOracle),
+    Key("ts_stream_outer_join", tsStreamOuterJoin, tsStreamOuterJoinOracle),
+    Key("ts_stream_append_window", tsStreamAppendWindow, tsStreamAppendWindowOracle),
+    Key("ts_funnel", tsFunnel, tsFunnelOracle),
+    Key("ts_retention", tsRetention, tsRetentionOracle),
+    Key("ts_transitions", tsTransitions, tsTransitionsOracle),
+    Key("ts_late_data", tsLateData, tsLateDataOracle))
+
+  val queries: Map[String, Key.Run] = Key.queries(keys)
 }

@@ -420,35 +420,21 @@ object Windows {
       |  AND price_cents = best_same
       |ORDER BY p_brand, p_size, price_cents""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "win_skyline" -> (winSkyline _),
-    "win_rank_delta" -> (winRankDelta _),
-    "win_sliding_median" -> (winSlidingMedian _),
-    "win_streaks" -> (winStreaks _),
-    "win_ratio_to_report" -> (winRatioToReport _),
-    "win_interval_merge" -> (winIntervalMerge _),
-    "win_cume_nth" -> (winCumeNth _),
-    "win_topk_per_group" -> (winTopkPerGroup _),
-    "win_rank_dense_ntile" -> (winRankDenseNtile _),
-    "win_lag_lead" -> (winLagLead _),
-    "win_running_sum" -> (winRunningSum _),
-    "win_range_frame" -> (winRangeFrame _),
-    "win_moving_range" -> (winMovingRange _),
-    "win_first_last" -> (winFirstLast _))
+  val keys: Seq[Key] = Seq(
+    Key("win_skyline", winSkyline, winSkylineOracle),
+    Key("win_rank_delta", winRankDelta, winRankDeltaOracle),
+    Key("win_sliding_median", winSlidingMedian, winSlidingMedianOracle),
+    Key("win_streaks", winStreaks, winStreaksOracle),
+    Key("win_ratio_to_report", winRatioToReport, winRatioToReportOracle),
+    Key("win_interval_merge", winIntervalMerge, winIntervalMergeOracle),
+    Key("win_cume_nth", winCumeNth, winCumeNthOracle),
+    Key("win_topk_per_group", winTopkPerGroup, winTopkPerGroupOracle),
+    Key("win_rank_dense_ntile", winRankDenseNtile, winRankDenseNtileOracle),
+    Key("win_lag_lead", winLagLead, winLagLeadOracle),
+    Key("win_running_sum", winRunningSum, winRunningSumOracle),
+    Key("win_range_frame", winRangeFrame, winRangeFrameOracle),
+    Key("win_moving_range", winMovingRange, winMovingRangeOracle),
+    Key("win_first_last", winFirstLast, winFirstLastOracle))
 
-  val oracle: Map[String, String] = Map(
-    "win_skyline" -> winSkylineOracle,
-    "win_rank_delta" -> winRankDeltaOracle,
-    "win_sliding_median" -> winSlidingMedianOracle,
-    "win_streaks" -> winStreaksOracle,
-    "win_ratio_to_report" -> winRatioToReportOracle,
-    "win_interval_merge" -> winIntervalMergeOracle,
-    "win_cume_nth" -> winCumeNthOracle,
-    "win_topk_per_group" -> winTopkPerGroupOracle,
-    "win_rank_dense_ntile" -> winRankDenseNtileOracle,
-    "win_lag_lead" -> winLagLeadOracle,
-    "win_running_sum" -> winRunningSumOracle,
-    "win_range_frame" -> winRangeFrameOracle,
-    "win_moving_range" -> winMovingRangeOracle,
-    "win_first_last" -> winFirstLastOracle)
+  val queries: Map[String, Key.Run] = Key.queries(keys)
 }

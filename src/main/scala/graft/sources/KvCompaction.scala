@@ -332,7 +332,8 @@ object KvCompaction {
     * after the merged index commits — HBase's catalog-janitor step — so
     * a kill before it leaves every cell in its parent and only unindexed
     * links in the dest, and a re-run after it finds the dest already
-    * committed and just retires the parents. */
+    * committed and just retires the parents — also when a kill between
+    * the two retirements left one parent gone and the other live. */
   def mergeRegions(aRaw: String, bRaw: String, mergedRaw: String): MergeStats = {
     val a = Paths.get(aRaw).normalize.toString
     val b = Paths.get(bRaw).normalize.toString
@@ -340,18 +341,25 @@ object KvCompaction {
     require(a != b && a != merged && b != merged,
       s"region merge: parents and dest must be three distinct dirs")
     val (statsA, statsB) = (KvMeta.files(a), KvMeta.files(b))
-    require(statsA.nonEmpty && statsB.nonEmpty,
-      s"region merge: a parent region has no data files ($a: ${statsA.size}, $b: ${statsB.size})")
-    val (maxA, minB) = (statsA.map(_.maxKey).max, statsB.map(_.minKey).min)
-    require(maxA < minB,
-      s"region merge: regions are not adjacent (A max rowkey $maxA >= B min rowkey $minB)")
     val parents = statsA.map(a -> _) ++ statsB.map(b -> _)
-    require((KvMeta.read(merged).keySet -- parents.map(p => inName("merge", p._2))).isEmpty,
-      s"region merge: dest already holds data files: $merged")
-    val in = bringIn(parents, merged, "merge")
-    // retire the parents (their cells are committed in the dest)
-    graft.util.Scratch.deleteTree(a)
-    graft.util.Scratch.deleteTree(b)
+    val dest = KvMeta.read(merged)
+    // one parent already retired, the other's files all committed in
+    // the dest: an earlier run was killed between the retirements
+    val retiring = (statsA.isEmpty != statsB.isEmpty) &&
+      parents.forall(p => dest.contains(inName("merge", p._2)))
+    val in =
+      if (retiring) parents.map(p => dest(inName("merge", p._2)))
+      else {
+        require(statsA.nonEmpty && statsB.nonEmpty,
+          s"region merge: a parent region has no data files ($a: ${statsA.size}, $b: ${statsB.size})")
+        val (maxA, minB) = (statsA.map(_.maxKey).max, statsB.map(_.minKey).min)
+        require(maxA < minB,
+          s"region merge: regions are not adjacent (A max rowkey $maxA >= B min rowkey $minB)")
+        require((dest.keySet -- parents.map(p => inName("merge", p._2))).isEmpty,
+          s"region merge: dest already holds data files: $merged")
+        bringIn(parents, merged, "merge")
+      }
+    Seq(a, b).foreach(p => KvFiles.retire(Paths.get(p)))
     MergeStats(statsA.size, statsB.size, in.map(_.cells).sum)
   }
 }

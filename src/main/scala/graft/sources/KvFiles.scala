@@ -97,6 +97,15 @@ object KvFiles {
 
   private def hex(bytes: Array[Byte]): String = java.util.HexFormat.of().formatHex(bytes)
 
+  /** Delete the store dir `dir`, whose cells another store's committed
+    * index already holds. Its index goes first, so a crash part way
+    * leaves a dir that reads nothing, never an index naming lost files. */
+  def retire(dir: Path): Unit = {
+    beforeStep(s"retire $dir")
+    Files.deleteIfExists(dir.resolve(KvMeta.FILE))
+    graft.util.Scratch.deleteTree(dir.toString)
+  }
+
   /** Make `link` a hard link to the existing file `target`, replacing
     * any file at `link`: shared storage, zero bytes copied. The one way
     * an existing file enters a store; its source is deleted only after

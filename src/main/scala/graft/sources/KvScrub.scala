@@ -10,8 +10,8 @@ import org.apache.spark.sql.SparkSession
   * the LIVE store an operator actually serves from).
   *
   * A scrub re-digests every data file ON THE EXECUTORS (one task per
-  * file — the same distributed-verify shape as
-  * [[KvSnapshots.verify]]) and compares against the md5 the write
+  * file; [[KvSnapshots.verify]] runs this same pass over a snapshot's
+  * data dir) and compares against the md5 the write
   * task recorded in the committed `.file_meta.tsv` index at commit
   * time. Three failure classes are reported, never silently skipped:
   *

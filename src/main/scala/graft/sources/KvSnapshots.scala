@@ -226,9 +226,10 @@ object KvSnapshots {
     * loudly on a missing manifest (uncommitted or deleted snapshot), a
     * data-dir index that does not name exactly the manifest's files with
     * the same bytes and md5 (what a restore would read is not what was
-    * snapshotted), or any size/checksum mismatch (corruption).
-    * Existence + size are driver-side metadata calls; the O(data) md5
-    * re-read runs as a Spark job, one task per file. */
+    * snapshotted), or a missing or corrupt data file. Once the index
+    * equals the manifest, the data dir's [[KvScrub.scrub]] is the
+    * digest pass: one map-only job, one task per file. An unindexed
+    * file (scrub's `orphan`) is not snapshot content and passes. */
   def verify(spark: SparkSession, root: String, name: String): Unit = {
     val entries = parseManifest(root, name)
     val data = dataDir(root, name)
@@ -237,23 +238,11 @@ object KvSnapshots {
     val disagree = ((indexed -- manifested) ++ (manifested -- indexed)).map(_._1)
     require(disagree.isEmpty, s"snapshot $name: the data index disagrees with the manifest " +
       s"on ${disagree.toSeq.sorted.mkString(", ")}")
-    entries.foreach { e =>
-      val p = data.resolve(e.file)
-      require(Files.exists(p), s"snapshot $name: data file ${e.file} missing")
-      require(Files.size(p) == e.bytes,
-        s"snapshot $name: ${e.file} is ${Files.size(p)} bytes, manifest says ${e.bytes}")
-    }
-    if (entries.nonEmpty) {
-      import spark.implicits._
-      val checks = entries.map(e => (data.resolve(e.file).toString, e.md5))
-      val mismatched = spark.createDataset(checks)
-        .repartition(math.min(checks.size, 32))
-        .map { case (path, want) => if (KvFiles.md5Hex(Paths.get(path)) == want) "" else path }
-        .filter(_.nonEmpty)
-        .collect() // only the names of corrupt files come back to the driver
-      require(mismatched.isEmpty,
-        s"snapshot $name: ${mismatched.mkString(", ")} fails its manifest checksum")
-    }
+    val damaged = KvScrub.scrub(spark, data.toString).filter(_.kind != "orphan")
+    require(damaged.isEmpty, s"snapshot $name: " + damaged.map { f =>
+      if (f.kind == "missing") s"data file ${f.file} missing"
+      else s"${f.file} fails its manifest checksum"
+    }.mkString(", "))
   }
 
   /** Verify the snapshot (see [[verify]]), then open it through the

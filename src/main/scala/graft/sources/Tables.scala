@@ -29,6 +29,19 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 
+  /** Names table `name` in SQL text. With an sf directory it is Spark's
+    * direct file SQL, parquet.`<sfDir>/<name>.parquet`, so a SQL key
+    * reads by path and registers no view on the shared session; without
+    * one it is the bare name the DuckDB oracle reads. `events` is
+    * refused: its `ts` column must be read through [[events]]. */
+  def sqlTable(sfDir: Option[String])(name: String): String = {
+    require(name != "events", "events must be read through Tables.events (its ts is normalized)")
+    sfDir.fold(name) { d =>
+      require(!d.contains('`'), s"sf directory contains a backtick: $d")
+      s"parquet.`$d/$name.parquet`"
+    }
+  }
+
   /** `events.parquet` stores `ts` as Parquet INT64 TIMESTAMP(NANOS) which
     * Spark 4.x rejects outright ([PARQUET_TYPE_ILLEGAL]). Workaround
     * (SURVEY.md §1.3, verified): read nanos as plain LongType via the

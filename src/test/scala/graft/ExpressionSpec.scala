@@ -24,7 +24,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("codegen'd result equals interpreted eval and zip_with/aggregate on real data") {
-    graft.functions.VectorExprs.register(spark)
     val e = graft.sources.Tables.embeddings(spark, sf).limit(50)
     val both = e.select(
       expr("float_dot(embedding, embedding)").as("native"),
@@ -49,7 +48,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("mismatched dimensions yield null (matches zip_with null-padding)") {
-    graft.functions.VectorExprs.register(spark)
     val r = spark.sql(
       "SELECT float_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), array(CAST(3.0 AS FLOAT)))")
       .collect()(0)
@@ -76,7 +74,6 @@ class ExpressionSpec extends SparkSpec {
   test("double_sql2 codegen equals interpreted and the zip_with/aggregate fold on real data") {
     // The doc's exact claim: same left-to-right double accumulation as
     // aggregate(zip_with(a, b, (x,y) -> (x-y)*(x-y)), 0, +).
-    graft.functions.VectorExprs.register(spark)
     val e = graft.sources.Tables.embeddings(spark, sf).limit(50)
       .select(expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("va"),
         expr("transform(reverse(embedding), x -> CAST(x AS DOUBLE))").as("vb"))
@@ -100,7 +97,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("double_sql2 mismatched dimensions and null inputs yield null") {
-    graft.functions.VectorExprs.register(spark)
     val mism = spark.sql(
       "SELECT double_sql2(array(CAST(1.0 AS DOUBLE), CAST(2.0 AS DOUBLE)), array(CAST(3.0 AS DOUBLE)))")
       .collect()(0)
@@ -112,7 +108,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("double_sql2 type mismatch is rejected at analysis") {
-    graft.functions.VectorExprs.register(spark)
     intercept[Exception] {
       // array<float> must NOT silently coerce — the kernel is the
       // double-precision Lloyd path; float inputs indicate a wiring bug.
@@ -137,7 +132,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("rolling_hash equals the higher-order fold formulation on real docs") {
-    graft.functions.TextExprs.register(spark)
     val d = graft.sources.Tables.documents(spark, sf).limit(100)
     val both = d.select(
       expr("rolling_hash(text)").as("native"),
@@ -153,14 +147,12 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("null inputs yield null") {
-    graft.functions.VectorExprs.register(spark)
     val r = spark.sql("SELECT float_dot(CAST(NULL AS ARRAY<FLOAT>), array(CAST(1.0 AS FLOAT)))")
       .collect()(0)
     assert(r.isNullAt(0))
   }
 
   test("type mismatch is rejected at analysis") {
-    graft.functions.VectorExprs.register(spark)
     intercept[Exception] {
       spark.sql("SELECT float_dot(array(1, 2), array(3, 4))").collect()
     }
@@ -175,7 +167,6 @@ class ExpressionSpec extends SparkSpec {
     // vectors × 64 dims, codebook = first 16 vectors' components.
     import org.apache.spark.sql.functions._
     import graft.operators.LlmVector
-    graft.functions.VectorExprs.register(spark)
     import spark.implicits._
     val ex = (0 until 24).flatMap { v =>
       (0 until 64).map { p =>

@@ -450,7 +450,6 @@ class OperatorSpec extends SparkSpec {
     // result: same r6(double_sql2) distances, same (dist2, c_id)
     // tie-break, row-for-row.
     import graft.operators.LlmVector
-    graft.functions.VectorExprs.register(spark)
     // One null-varr row (vec_id −1) rides along: double_sql2 yields a
     // null dist2 against EVERY centroid for it, pinning that both paths
     // rank null distances identically (nulls sort FIRST in both the

@@ -21,6 +21,14 @@ abstract class SparkSpec extends AnyFunSuite {
 }
 
 class EntrySpec extends SparkSpec {
+  /** (file name, text) of every Scala source under `dir`. */
+  private def scalaSources(dir: String): List[(String, String)] = {
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      .map(p => p.getFileName.toString -> java.nio.file.Files.readString(p))
+    finally files.close()
+  }
+
   test("entry returns rows on sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
@@ -78,16 +86,10 @@ class EntrySpec extends SparkSpec {
     // no directory swap or rename-adopt exists, only KvFiles.publish
     // renames, and only scrub's orphan class and the staged replace's
     // sweep list a store directory
-    def sources(dir: String): List[(String, String)] = {
-      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-        .map(p => p.getFileName.toString -> java.nio.file.Files.readString(p))
-      finally files.close()
-    }
     val swap = "KvFiles\\.(install|recover|adopt)\\b".r
-    val swapUsers = sources("src").filter(f => swap.findFirstIn(f._2).isDefined).map(_._1)
+    val swapUsers = scalaSources("src").filter(f => swap.findFirstIn(f._2).isDefined).map(_._1)
     assert(swapUsers.isEmpty, s"directory swap or adopt used in ${swapUsers.mkString(", ")}")
-    val main = sources("src/main")
+    val main = scalaSources("src/main")
     val listers = main.flatMap { case (n, text) =>
       text.linesIterator.filter(l => l.contains("dataFiles(") && !l.contains("def dataFiles"))
         .map(_ => n)
@@ -108,9 +110,33 @@ class EntrySpec extends SparkSpec {
       kvFiles.indexOf("ATOMIC_MOVE") < kvFiles.indexOf("\n  }\n", publish),
       "an atomic rename outside KvFiles.publish")
   }
-  test("oracleSql keys are a subset of queries keys") {
-    val extra = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(extra.isEmpty, s"oracle keys without query impl: $extra")
+  test("no key writes the session catalog; SQL functions come only from GraftExtensions") {
+    // temp views and temp functions are session-global: a key that
+    // registers one changes what a concurrent key on the same session
+    // resolves. SQL keys name tables by path (Tables.sqlTable), and
+    // every session installs GraftExtensions.
+    val views = scalaSources("src/main").filter(_._2.contains("createOrReplaceTempView"))
+    assert(views.isEmpty, s"temp views registered in ${views.map(_._1).mkString(", ")}")
+    val register = "Exprs" + ".register("
+    val registers = scalaSources("src").filter(_._2.contains(register))
+    assert(registers.isEmpty, s"runtime function registration in ${registers.map(_._1).mkString(", ")}")
+  }
+  test("SQL keys run concurrently on two sf dirs each read their own tables") {
+    val dirs = Seq(sf, "/root/testdata/sf0.01")
+    val keys = Seq("sql_q3_shipping_priority", "filter_exists")
+    def sums(dir: String): Seq[String] =
+      keys.map(k => GoldenDump.checksum(SparkEntry.queries(k)(spark, dir)))
+    val serial = dirs.map(sums)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try (1 to 20).foreach { round =>
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val runs = dirs.map(d => pool.submit(new java.util.concurrent.Callable[Seq[String]] {
+        def call(): Seq[String] = { start.await(); sums(d) }
+      }))
+      start.countDown()
+      runs.map(_.get(300, java.util.concurrent.TimeUnit.SECONDS)).zip(serial).zip(dirs)
+        .foreach { case ((got, want), d) => assert(got == want, s"round $round: $d") }
+    } finally pool.shutdownNow()
   }
   test("every query is oracle-checked and the count matches SURVEY §2.B") {
     // the full-bar invariant since round 3: no rows-only keys — every

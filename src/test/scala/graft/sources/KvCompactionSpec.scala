@@ -470,6 +470,35 @@ class KvCompactionSpec extends SparkSpec {
     assert(!Files.exists(Paths.get(a)) && !Files.exists(Paths.get(b)))
   }
 
+  test("region merge killed between its parents' retirements: the re-run finishes retiring") {
+    val a = freshStore()
+    val b = freshStore()
+    val merged = freshStore()
+    val bounds = cells.agg(min(col("rowkey")), max(col("rowkey"))).collect().head
+    val mid = (bounds.getLong(0) + bounds.getLong(1)) / 2
+    cells.filter(col("rowkey") <= mid).coalesce(1)
+      .write.format("graft-kv").option("path", a).mode("append").save()
+    cells.filter(col("rowkey") > mid).coalesce(1)
+      .write.format("graft-kv").option("path", b).mode("append").save()
+    val cellsB = spark.read.format("graft-kv").load(b).collect().toSet
+    // the merged index is committed and parent a is retired; b is not
+    KvFiles.beforeStep = s => if (s == s"retire $b")
+      throw new RuntimeException("injected kill before the second retirement")
+    try intercept[RuntimeException] {
+      KvCompaction.mergeRegions(a, b, merged)
+    } finally KvFiles.beforeStep = _ => ()
+    def read(dir: String) = spark.read.format("graft-kv").load(dir)
+    assert(!Files.exists(Paths.get(a)))
+    assert(read(b).collect().toSet == cellsB, "the live parent lost cells")
+    assert(read(merged).exceptAll(cells).count() == 0 && cells.exceptAll(read(merged)).count() == 0,
+      "the committed merge does not hold every cell exactly once")
+    // the re-run retires the live parent instead of refusing the merge
+    val stats = KvCompaction.mergeRegions(a, b, merged)
+    assert(stats.filesA == 0 && stats.filesB == 1 && stats.cells == cellsB.size)
+    assert(!Files.exists(Paths.get(a)) && !Files.exists(Paths.get(b)))
+    assert(read(merged).exceptAll(cells).count() == 0 && cells.exceptAll(read(merged)).count() == 0)
+  }
+
   test("a task that commits after the job abort leaves an orphan no reader sees; " +
       "compaction sweeps it") {
     val store = freshStore()

@@ -16,7 +16,8 @@ import org.apache.spark.sql.{DataFrame, Row}
   * every step k, the workflow state before k's operation is copied to
   * fresh roots, the operation is killed exactly at step k, and the spec
   * checks what a reader sees and that a re-run of the killed operation
-  * succeeds and leaves no temp name behind. */
+  * succeeds, reads what the recorded run read and leaves no temp name
+  * behind. */
 class KvCrashSpec extends SparkSpec {
 
   private def frame(rows: Seq[(Long, String, String)], slices: Int): DataFrame = {
@@ -146,6 +147,14 @@ class KvCrashSpec extends SparkSpec {
       run(r)
       val temps = walk(r.dir).filter(p => KvFiles.isTemp(p.getFileName.toString))
       assert(temps.isEmpty, s"$what: the re-run left $temps")
+      // the re-run ends where the recorded run did (appending the
+      // inputs is not idempotent, so `stage` is left out)
+      if (op != "stage") stores(r).zip(recorded(j)._2).foreach { case (store, (_, post)) =>
+        assert(cells(store) == post, s"$what: after the re-run $store reads ${cells(store)}")
+      }
+      if (op == "mergeRegions")
+        assert(!Files.exists(Paths.get(r.store)) && !Files.exists(Paths.get(r.region)),
+          s"$what: the re-run left a parent region")
     }
     graft.util.Scratch.deleteTree(base.toString)
   }
