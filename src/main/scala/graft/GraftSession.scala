@@ -5,7 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** The one place a graft `SparkSession` is built. Every main and the test
   * suite run the same engine: [[GraftExtensions]] installed (SQL functions
   * plus the band-join rule), shuffle partitions equal to the core count,
-  * UTC session time zone, UI off, WARN logging. A session that needs other
+  * UTC session time zone, Parquet nanosecond timestamps read as longs
+  * (the `events` layout [[graft.sources.Tables.events]] normalizes), UI
+  * off, WARN logging. A session that needs other
   * settings derives them from this one with `spark.newSession()`.
   */
 object GraftSession {
@@ -28,6 +30,7 @@ object GraftSession {
       .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

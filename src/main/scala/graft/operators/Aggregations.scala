@@ -255,24 +255,15 @@ object Aggregations {
 
   /** Explicit GROUPING SETS with per-column GROUPING() flags (avoids
     * engine-specific grouping_id bit orders). */
-  def aggGroupingSets(spark: SparkSession, sfDir: String): DataFrame =
-    spark.sql(
-      s"""SELECT l_returnflag, l_linestatus,
-         |  CAST(grouping(l_returnflag) AS INT) AS g_flag, CAST(grouping(l_linestatus) AS INT) AS g_status,
-         |  COUNT(*) AS n_rows,
-         |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS sum_qty
-         |FROM parquet.`$sfDir/lineitem.parquet`
-         |GROUP BY GROUPING SETS ((l_returnflag), (l_returnflag, l_linestatus), ())
-         |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin)
-
-  val aggGroupingSetsOracle: String =
-    """SELECT l_returnflag, l_linestatus,
-      |  CAST(GROUPING(l_returnflag) AS INT) AS g_flag, CAST(GROUPING(l_linestatus) AS INT) AS g_status,
-      |  COUNT(*) AS n_rows,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-      |FROM lineitem
-      |GROUP BY GROUPING SETS ((l_returnflag), (l_returnflag, l_linestatus), ())
-      |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin
+  val aggGroupingSets: Key = Key.sql("agg_grouping_sets") { t =>
+    s"""SELECT l_returnflag, l_linestatus,
+       |  CAST(GROUPING(l_returnflag) AS INT) AS g_flag, CAST(GROUPING(l_linestatus) AS INT) AS g_status,
+       |  COUNT(*) AS n_rows,
+       |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
+       |FROM ${t("lineitem")}
+       |GROUP BY GROUPING SETS ((l_returnflag), (l_returnflag, l_linestatus), ())
+       |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin
+  }
 
   /** Deterministic list aggregation: per-nation sorted supplier names,
     * joined to a single string (collect_list is order-unstable on its
@@ -1442,7 +1433,7 @@ object Aggregations {
     Key("agg_sketch_merge", aggSketchMerge, aggSketchMergeOracle),
     aggRollup,
     Key("agg_cube", aggCube, aggCubeOracle),
-    Key("agg_grouping_sets", aggGroupingSets, aggGroupingSetsOracle),
+    aggGroupingSets,
     Key("agg_collect_sorted", aggCollectSorted, aggCollectSortedOracle),
     Key("udaf_weighted_avg", udafWeightedAvg, udafWeightedAvgOracle))
 

@@ -59,26 +59,15 @@ object Filters {
     * (2·cents·count > 3·Σcents — no decimal division, whose rounding
     * scale differs between engines, and no float average anywhere near
     * the comparison boundary). */
-  def filterCorrelated(spark: SparkSession, sfDir: String): DataFrame =
-    spark.sql(
-      s"""SELECT o_orderkey, o_custkey, o_totalprice
-         |FROM parquet.`$sfDir/orders.parquet` o
-         |WHERE CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) * 2 *
-         |    (SELECT COUNT(*) FROM parquet.`$sfDir/orders.parquet` o2
-         |     WHERE o2.o_custkey = o.o_custkey)
-         |  > 3 * (SELECT SUM(CAST(CAST(o2.o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
-         |         FROM parquet.`$sfDir/orders.parquet` o2
-         |         WHERE o2.o_custkey = o.o_custkey)
-         |ORDER BY o_orderkey""".stripMargin)
-
-  val filterCorrelatedOracle: String =
-    """SELECT o_orderkey, o_custkey, o_totalprice
-      |FROM orders o
-      |WHERE CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) * 2 *
-      |    (SELECT COUNT(*) FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
-      |  > 3 * (SELECT SUM(CAST(CAST(o2.o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
-      |         FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
-      |ORDER BY o_orderkey""".stripMargin
+  val filterCorrelated: Key = Key.sql("filter_correlated") { t =>
+    s"""SELECT o_orderkey, o_custkey, o_totalprice
+       |FROM ${t("orders")} o
+       |WHERE CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) * 2 *
+       |    (SELECT COUNT(*) FROM ${t("orders")} o2 WHERE o2.o_custkey = o.o_custkey)
+       |  > 3 * (SELECT SUM(CAST(CAST(o2.o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
+       |         FROM ${t("orders")} o2 WHERE o2.o_custkey = o.o_custkey)
+       |ORDER BY o_orderkey""".stripMargin
+  }
 
   /** Nested CASE WHEN pricing tiers over orders. */
   def projectCaseWhen(spark: SparkSession, sfDir: String): DataFrame =
@@ -138,42 +127,24 @@ object Filters {
     * chain broadcasts into the lineitem scan on BOTH sides, the min
     * aggregate is map-side combinable on l_partkey, and the final
     * equi-join shuffles by part key only. */
-  def filterQ2MinCost(spark: SparkSession, sfDir: String): DataFrame =
-    spark.sql(
-      s"""SELECT DISTINCT p.p_partkey, p.p_name, s.s_name, n.n_name,
-         |  CAST(CAST(l.l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS min_cost_cents
-         |FROM parquet.`$sfDir/part.parquet` p
-         |JOIN parquet.`$sfDir/lineitem.parquet` l ON p.p_partkey = l.l_partkey
-         |JOIN parquet.`$sfDir/supplier.parquet` s ON l.l_suppkey = s.s_suppkey
-         |JOIN parquet.`$sfDir/nation.parquet` n ON s.s_nationkey = n.n_nationkey
-         |JOIN parquet.`$sfDir/region.parquet` r ON n.n_regionkey = r.r_regionkey
-         |WHERE r.r_name = 'EUROPE' AND p.p_size <= 5 AND p.p_type = 'ECONOMY'
-         |  AND CAST(CAST(l.l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) =
-         |    (SELECT MIN(CAST(CAST(l2.l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT))
-         |     FROM parquet.`$sfDir/lineitem.parquet` l2
-         |     JOIN parquet.`$sfDir/supplier.parquet` s2 ON l2.l_suppkey = s2.s_suppkey
-         |     JOIN parquet.`$sfDir/nation.parquet` n2 ON s2.s_nationkey = n2.n_nationkey
-         |     JOIN parquet.`$sfDir/region.parquet` r2 ON n2.n_regionkey = r2.r_regionkey
-         |     WHERE r2.r_name = 'EUROPE' AND l2.l_partkey = p.p_partkey)
-         |ORDER BY min_cost_cents DESC, p_partkey, s_name""".stripMargin)
-
-  val filterQ2MinCostOracle: String =
-    """SELECT DISTINCT p.p_partkey, p.p_name, s.s_name, n.n_name,
-      |  CAST(CAST(l.l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS min_cost_cents
-      |FROM part p
-      |JOIN lineitem l ON p.p_partkey = l.l_partkey
-      |JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      |JOIN nation n ON s.s_nationkey = n.n_nationkey
-      |JOIN region r ON n.n_regionkey = r.r_regionkey
-      |WHERE r.r_name = 'EUROPE' AND p.p_size <= 5 AND p.p_type = 'ECONOMY'
-      |  AND CAST(CAST(l.l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) =
-      |    (SELECT MIN(CAST(CAST(l2.l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT))
-      |     FROM lineitem l2
-      |     JOIN supplier s2 ON l2.l_suppkey = s2.s_suppkey
-      |     JOIN nation n2 ON s2.s_nationkey = n2.n_nationkey
-      |     JOIN region r2 ON n2.n_regionkey = r2.r_regionkey
-      |     WHERE r2.r_name = 'EUROPE' AND l2.l_partkey = p.p_partkey)
-      |ORDER BY min_cost_cents DESC, p_partkey, s_name""".stripMargin
+  val filterQ2MinCost: Key = Key.sql("filter_q2_min_cost") { t =>
+    s"""SELECT DISTINCT p.p_partkey, p.p_name, s.s_name, n.n_name,
+       |  CAST(CAST(l.l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS min_cost_cents
+       |FROM ${t("part")} p
+       |JOIN ${t("lineitem")} l ON p.p_partkey = l.l_partkey
+       |JOIN ${t("supplier")} s ON l.l_suppkey = s.s_suppkey
+       |JOIN ${t("nation")} n ON s.s_nationkey = n.n_nationkey
+       |JOIN ${t("region")} r ON n.n_regionkey = r.r_regionkey
+       |WHERE r.r_name = 'EUROPE' AND p.p_size <= 5 AND p.p_type = 'ECONOMY'
+       |  AND CAST(CAST(l.l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) =
+       |    (SELECT MIN(CAST(CAST(l2.l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT))
+       |     FROM ${t("lineitem")} l2
+       |     JOIN ${t("supplier")} s2 ON l2.l_suppkey = s2.s_suppkey
+       |     JOIN ${t("nation")} n2 ON s2.s_nationkey = n2.n_nationkey
+       |     JOIN ${t("region")} r2 ON n2.n_regionkey = r2.r_regionkey
+       |     WHERE r2.r_name = 'EUROPE' AND l2.l_partkey = p.p_partkey)
+       |ORDER BY min_cost_cents DESC, p_partkey, s_name""".stripMargin
+  }
 
   /** TPC-H Q17 SHAPE (r11) — the remaining decorrelation stress class:
     * a correlated AGGREGATE THRESHOLD AGAINST THE OUTER ROW'S OWN GROUP
@@ -192,40 +163,25 @@ object Filters {
     * At 100 TB: one map-side-combinable aggregate keyed on l_partkey,
     * one keyed join back to lineitem, one broadcast of part — the
     * per-row rescan never exists in the executed plan. */
-  def filterQ17AvgQty(spark: SparkSession, sfDir: String): DataFrame =
-    spark.sql(
-      s"""SELECT p.p_brand, COUNT(*) AS n_lines,
-         |  CAST(SUM(CAST(CAST(l.l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT)
-         |    AS below_cents
-         |FROM parquet.`$sfDir/lineitem.parquet` l
-         |JOIN parquet.`$sfDir/part.parquet` p ON p.p_partkey = l.l_partkey
-         |WHERE p.p_type IN ('ECONOMY', 'PROMO')
-         |  AND 5 * CAST(l.l_quantity AS BIGINT) *
-         |      (SELECT COUNT(*) FROM parquet.`$sfDir/lineitem.parquet` l2
-         |       WHERE l2.l_partkey = l.l_partkey)
-         |    < (SELECT SUM(CAST(l2.l_quantity AS BIGINT))
-         |       FROM parquet.`$sfDir/lineitem.parquet` l2
-         |       WHERE l2.l_partkey = l.l_partkey)
-         |GROUP BY p.p_brand ORDER BY p.p_brand""".stripMargin)
-
-  val filterQ17AvgQtyOracle: String =
-    """SELECT p.p_brand, COUNT(*) AS n_lines,
-      |  CAST(SUM(CAST(CAST(l.l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT)
-      |    AS below_cents
-      |FROM lineitem l
-      |JOIN part p ON p.p_partkey = l.l_partkey
-      |WHERE p.p_type IN ('ECONOMY', 'PROMO')
-      |  AND 5 * CAST(l.l_quantity AS BIGINT) *
-      |      (SELECT COUNT(*) FROM lineitem l2 WHERE l2.l_partkey = l.l_partkey)
-      |    < (SELECT SUM(CAST(l2.l_quantity AS BIGINT))
-      |       FROM lineitem l2 WHERE l2.l_partkey = l.l_partkey)
-      |GROUP BY p.p_brand ORDER BY p.p_brand""".stripMargin
+  val filterQ17AvgQty: Key = Key.sql("filter_q17_avg_qty") { t =>
+    s"""SELECT p.p_brand, COUNT(*) AS n_lines,
+       |  CAST(SUM(CAST(CAST(l.l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT)
+       |    AS below_cents
+       |FROM ${t("lineitem")} l
+       |JOIN ${t("part")} p ON p.p_partkey = l.l_partkey
+       |WHERE p.p_type IN ('ECONOMY', 'PROMO')
+       |  AND 5 * CAST(l.l_quantity AS BIGINT) *
+       |      (SELECT COUNT(*) FROM ${t("lineitem")} l2 WHERE l2.l_partkey = l.l_partkey)
+       |    < (SELECT SUM(CAST(l2.l_quantity AS BIGINT))
+       |       FROM ${t("lineitem")} l2 WHERE l2.l_partkey = l.l_partkey)
+       |GROUP BY p.p_brand ORDER BY p.p_brand""".stripMargin
+  }
 
   val keys: Seq[Key] = Seq(
-    Key("filter_q17_avg_qty", filterQ17AvgQty, filterQ17AvgQtyOracle),
-    Key("filter_q2_min_cost", filterQ2MinCost, filterQ2MinCostOracle),
+    filterQ17AvgQty,
+    filterQ2MinCost,
     filterExists,
-    Key("filter_correlated", filterCorrelated, filterCorrelatedOracle),
+    filterCorrelated,
     Key("filter_in_like_between", filterInLikeBetween, filterInLikeBetweenOracle),
     Key("filter_null_semantics", filterNullSemantics, filterNullSemanticsOracle),
     Key("project_case_when", projectCaseWhen, projectCaseWhenOracle))

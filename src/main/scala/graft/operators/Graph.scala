@@ -129,17 +129,7 @@ object Graph {
   }
 
   def graphTriangles(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = tradeEdges(spark, sfDir).filter(col("src") =!= col("dst"))
-    val und = e
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"), col("w"))
-      .groupBy("u", "v").agg(sum(col("w")).as("w"))
-    // mean-weight threshold as exact integer cross-multiplication; the
-    // 1-row totals side broadcasts
-    val tot = und.agg(count(lit(1)).as("np"), sum(col("w")).as("tw"))
-    val ed = und.crossJoin(broadcast(tot))
-      .filter(col("w") * col("np") > col("tw"))
-      .select("u", "v").localCheckpoint(true)
+    val ed = thresholdedUndirected(spark, sfDir)
     val a = ed.select(col("u").as("x"), col("v").as("y"))
     val b = ed.select(col("u").as("y"), col("v").as("z"))
     val c = ed.select(col("u").as("x"), col("v").as("z"))
@@ -153,11 +143,7 @@ object Graph {
 
   val graphTrianglesOracle: String =
     s"""WITH $edgesSql,
-       |und AS (SELECT LEAST(src, dst) AS u, GREATEST(src, dst) AS v,
-       |  CAST(SUM(w) AS BIGINT) AS w FROM e WHERE src <> dst GROUP BY 1, 2),
-       |tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS np,
-       |  CAST(SUM(w) AS BIGINT) AS tw FROM und),
-       |ed AS (SELECT u, v FROM und, tot WHERE w * np > tw),
+       |${undirectedEdgesSql()},
        |tri AS (SELECT a.u AS x, a.v AS y, b.v AS z
        |        FROM ed a JOIN ed b ON a.v = b.u
        |        JOIN ed c ON c.u = a.u AND c.v = b.v)
@@ -209,9 +195,11 @@ object Graph {
       .orderBy("node")
   }
 
-  /** The shared above-mean-weight undirected edge set both r13 graph
-    * keys threshold from the trade graph. */
-  private[graft] def thresholdedUndirected(spark: SparkSession, sfDir: String): DataFrame = {
+  /** The undirected trade graph (u < v, pair weight w) thresholded at
+    * the mean pair weight: `w * n_pairs > total_w`, an exact integer
+    * comparison; the 1-row totals side broadcasts. Shared by the six
+    * undirected graph keys; [[undirectedEdgesSql]] is its oracle mirror. */
+  private def aboveMeanEdges(spark: SparkSession, sfDir: String): DataFrame = {
     val e = tradeEdges(spark, sfDir).filter(col("src") =!= col("dst"))
     val und = e
       .select(least(col("src"), col("dst")).as("u"),
@@ -220,16 +208,26 @@ object Graph {
     val tot = und.agg(count(lit(1)).as("np"), sum(col("w")).as("tw"))
     und.crossJoin(broadcast(tot))
       .filter(col("w") * col("np") > col("tw"))
-      .select("u", "v").localCheckpoint(true)
+      .select("u", "v", "w")
   }
 
-  val graphLocalClusteringOracle: String =
-    s"""WITH $edgesSql,
-       |und AS (SELECT LEAST(src, dst) AS u, GREATEST(src, dst) AS v,
+  /** [[aboveMeanEdges]]' (u, v) pairs, lineage-cut. */
+  private[graft] def thresholdedUndirected(spark: SparkSession, sfDir: String): DataFrame =
+    aboveMeanEdges(spark, sfDir).select("u", "v").localCheckpoint(true)
+
+  /** SQL mirror of [[aboveMeanEdges]] (the `und`/`tot` CTEs, then `name`
+    * selecting `cols` of the above-mean pairs) — splice after
+    * [[edgesSql]]; shared by the six undirected-graph oracles. */
+  private def undirectedEdgesSql(name: String = "ed", cols: String = "u, v"): String =
+    s"""und AS (SELECT LEAST(src, dst) AS u, GREATEST(src, dst) AS v,
        |  CAST(SUM(w) AS BIGINT) AS w FROM e WHERE src <> dst GROUP BY 1, 2),
        |tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS np,
        |  CAST(SUM(w) AS BIGINT) AS tw FROM und),
-       |ed AS (SELECT u, v FROM und, tot WHERE w * np > tw),
+       |$name AS (SELECT $cols FROM und, tot WHERE w * np > tw)""".stripMargin
+
+  val graphLocalClusteringOracle: String =
+    s"""WITH $edgesSql,
+       |${undirectedEdgesSql()},
        |deg AS (SELECT node, CAST(COUNT(*) AS BIGINT) AS degree FROM (
        |  SELECT u AS node FROM ed UNION ALL SELECT v FROM ed) GROUP BY node),
        |tri AS (SELECT a.u AS x, a.v AS y, b.v AS z
@@ -287,11 +285,7 @@ object Graph {
 
   val graphAssortativityOracle: String =
     s"""WITH $edgesSql,
-       |und AS (SELECT LEAST(src, dst) AS u, GREATEST(src, dst) AS v,
-       |  CAST(SUM(w) AS BIGINT) AS w FROM e WHERE src <> dst GROUP BY 1, 2),
-       |tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS np,
-       |  CAST(SUM(w) AS BIGINT) AS tw FROM und),
-       |ed AS (SELECT u, v FROM und, tot WHERE w * np > tw),
+       |${undirectedEdgesSql()},
        |deg AS (SELECT node, CAST(COUNT(*) AS BIGINT) AS degree FROM (
        |  SELECT u AS node FROM ed UNION ALL SELECT v FROM ed) GROUP BY node),
        |sym AS (SELECT u AS a, v AS b FROM ed UNION ALL SELECT v, u FROM ed),
@@ -410,14 +404,7 @@ object Graph {
     * CTE computing min-label reachability — a genuinely different
     * algorithm agreeing on the same fixpoint. */
   def graphComponents(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = tradeEdges(spark, sfDir).filter(col("src") =!= col("dst"))
-    val und = e
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"), col("w"))
-      .groupBy("u", "v").agg(sum(col("w")).as("w"))
-    val tot = und.agg(count(lit(1)).as("np"), sum(col("w")).as("tw"))
-    val ed = und.crossJoin(broadcast(tot))
-      .filter(col("w") * col("np") > col("tw"))
+    val ed = aboveMeanEdges(spark, sfDir)
       .select(col("u").as("doc_a"), col("v").as("doc_b"))
     val (labels, _) = LlmDedup.connectedComponents(ed)
     nation(spark, sfDir)
@@ -434,11 +421,7 @@ object Graph {
     * symmetrized edge set. UNION (distinct) bounds the recursion. */
   val graphComponentsOracle: String =
     s"""WITH RECURSIVE $edgesSql,
-       |und AS (SELECT LEAST(src, dst) AS u, GREATEST(src, dst) AS v,
-       |  CAST(SUM(w) AS BIGINT) AS w FROM e WHERE src <> dst GROUP BY 1, 2),
-       |tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS np,
-       |  CAST(SUM(w) AS BIGINT) AS tw FROM und),
-       |ed AS (SELECT u, v FROM und, tot WHERE w * np > tw),
+       |${undirectedEdgesSql()},
        |bidir AS (SELECT u AS a, v AS b FROM ed
        |          UNION ALL SELECT v, u FROM ed),
        |reach(node, lab) AS (
@@ -467,14 +450,7 @@ object Graph {
     * oracle walks the same graph with a depth-bounded recursive CTE and
     * takes MIN(depth) — a different algorithm, same fixpoint. */
   def graphBfs(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = tradeEdges(spark, sfDir).filter(col("src") =!= col("dst"))
-    val und = e
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"), col("w"))
-      .groupBy("u", "v").agg(sum(col("w")).as("w"))
-    val tot = und.agg(count(lit(1)).as("np"), sum(col("w")).as("tw"))
-    val ed = und.crossJoin(broadcast(tot))
-      .filter(col("w") * col("np") > col("tw"))
+    val ed = aboveMeanEdges(spark, sfDir)
       .select(col("u").cast("long").as("u"), col("v").cast("long").as("v"),
         col("w"))
       .localCheckpoint(true)
@@ -512,12 +488,7 @@ object Graph {
 
   val graphBfsOracle: String =
     s"""WITH RECURSIVE $edgesSql,
-       |und AS (SELECT LEAST(src, dst) AS u, GREATEST(src, dst) AS v,
-       |  CAST(SUM(w) AS BIGINT) AS w FROM e WHERE src <> dst GROUP BY 1, 2),
-       |tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS np,
-       |  CAST(SUM(w) AS BIGINT) AS tw FROM und),
-       |ed AS (SELECT CAST(u AS BIGINT) AS u, CAST(v AS BIGINT) AS v, w
-       |       FROM und, tot WHERE w * np > tw),
+       |${undirectedEdgesSql(cols = "CAST(u AS BIGINT) AS u, CAST(v AS BIGINT) AS v, w")},
        |bidir AS (SELECT u AS a, v AS b, w FROM ed
        |          UNION ALL SELECT v, u, w FROM ed),
        |srcn AS (SELECT a FROM (SELECT a, CAST(SUM(w) AS BIGINT) AS dw
@@ -657,15 +628,7 @@ object Graph {
     * touched once in the edge aggregation. */
   def graphKcore(spark: SparkSession, sfDir: String): DataFrame = {
     val k = 10
-    val e = tradeEdges(spark, sfDir).filter(col("src") =!= col("dst"))
-    val und = e
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"), col("w"))
-      .groupBy("u", "v").agg(sum(col("w")).as("w"))
-    val tot = und.agg(count(lit(1)).as("np"), sum(col("w")).as("tw"))
-    var ed = und.crossJoin(broadcast(tot))
-      .filter(col("w") * col("np") > col("tw"))
-      .select("u", "v").localCheckpoint(true)
+    var ed = thresholdedUndirected(spark, sfDir)
     (1 to 4).foreach { _ =>
       val good = ed.select(col("u").as("n")).union(ed.select(col("v").as("n")))
         .groupBy("n").agg(count(lit(1)).as("d"))
@@ -691,11 +654,7 @@ object Graph {
          |  WHERE u IN (SELECT n FROM g$i) AND v IN (SELECT n FROM g$i))""".stripMargin
     }.mkString(",\n")
     s"""WITH $edgesSql,
-       |und AS (SELECT LEAST(src, dst) AS u, GREATEST(src, dst) AS v,
-       |  CAST(SUM(w) AS BIGINT) AS w FROM e WHERE src <> dst GROUP BY 1, 2),
-       |tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS np,
-       |  CAST(SUM(w) AS BIGINT) AS tw FROM und),
-       |k0 AS (SELECT u, v FROM und, tot WHERE w * np > tw),
+       |${undirectedEdgesSql("k0")},
        |$rounds
        |SELECT CAST(n AS BIGINT) AS node, CAST(COUNT(*) AS BIGINT) AS deg_in_core
        |FROM (SELECT u AS n FROM k4 UNION ALL SELECT v FROM k4)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.sources.Tables._
 import graft.util.Scratch
 
@@ -361,42 +362,17 @@ object Sources {
   /** Exported-restored cells must equal the source cells. */
   val kvSnapshotExportOracle: String = Scans.scanKvModelOracle
 
-  /** Streaming ingestion into the cell store — the reference's
-    * operational WRITE path (SURVEY.md §2.A R1: rows arrive
-    * continuously, snapshots are cut from the live store): the model
-    * cells arrive as a file stream in ≥2 micro-batches, each batch
-    * lands in the graft-kv store via foreachBatch (every batch is its
-    * own committed set of .kv files + stats-index entries — the
-    * connector's one index commit per job makes each micro-batch atomic),
-    * a named snapshot is cut from the live store, and the verifying
-    * restore is returned. The oracle checks the full loop is lossless:
-    * restored == the cells that were streamed in. At scale this is
-    * readStream-from-Kafka-or-landing-zone → kv append → snapshot, with
-    * per-batch commit as the exactly-once unit. */
-  /** ONE incarnation of the micro-batched file-stream → graft-kv append
-    * loop, run to drain then stopped — the single definition behind the
-    * `kv_stream_ingest` and `kv_stream_resume` keys, so the ingest sink
-    * (batch write options, sink hygiene) can never diverge between the
-    * plain and the checkpoint-recovery grading of the same path. */
-  private def runIngestStream(spark: SparkSession, stage: String, store: String,
-      checkpoint: Option[String] = None): Unit = {
-    val schema = spark.read.parquet(stage).schema
-    val writer = spark.readStream
-      .schema(schema).option("maxFilesPerTrigger", "1").parquet(stage)
-      .writeStream
-    // explicit checkpoint always: the resume key passes its own durable
-    // path; a plain ingest gets a unique tmpfs dir (r17 verdict task 4)
-    // instead of the implicit /tmp temp checkpoint's per-batch disk fsyncs
-    writer.option("checkpointLocation",
-      checkpoint.getOrElse(Scratch.fastCheckpointDir("ingest")))
-    val q = writer
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+  /** The ingest sink of both streaming-ingest keys, so the plain and the
+    * checkpoint-recovery grading of the same path cannot diverge: each
+    * micro-batch is one graft-kv append (one index commit). The stream
+    * is a feed ([[TimeSeries.writeFeed]]) of the cells run through
+    * [[TimeSeries.runStream]]. */
+  private def ingest(spark: SparkSession, stage: String, schema: StructType, store: String,
+      name: String, checkpoint: Option[String] = None): Unit =
+    TimeSeries.runStream(spark, name, checkpoint = checkpoint,
+      eachBatch = Some { (batch: DataFrame, _: Long) =>
         batch.write.format("graft-kv").option("path", store).mode("append").save()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.streams.resetTerminated() // same sink hygiene as TimeSeries
-  }
+      })(TimeSeries.openFeed(_, stage, schema))
 
   /** Snapshot the live store and return the verifying restore — the
     * shared epilogue of both streaming-ingest keys. */
@@ -408,15 +384,27 @@ object Sources {
       .orderBy("rowkey", "qualifier")
   }
 
+  /** Streaming ingestion into the cell store — the reference's
+    * operational WRITE path (SURVEY.md §2.A R1: rows arrive
+    * continuously, snapshots are cut from the live store): the model
+    * cells arrive as a file stream in ≥2 micro-batches, each batch
+    * lands in the graft-kv store via foreachBatch (every batch is its
+    * own committed set of .kv files + stats-index entries — the
+    * connector's one index commit per job makes each micro-batch atomic),
+    * a named snapshot is cut from the live store, and the verifying
+    * restore is returned. The oracle checks the full loop is lossless:
+    * restored == the cells that were streamed in. At scale this is a
+    * Kafka or landing-zone stream → kv append → snapshot, with per-batch
+    * commit as the exactly-once unit. */
   def kvStreamIngest(spark: SparkSession, sfDir: String): DataFrame = {
     val stage = snapshotRoot(sfDir, "kv_ingest_stage")
     val store = snapshotRoot(sfDir, "kv_ingest_store") + "/cells"
     val snapRoot = snapshotRoot(sfDir, "kv_ingest_snap")
     val cells = Scans.scanKvModel(spark, sfDir)
-    // two staged files → two micro-batches under maxFilesPerTrigger=1
-    cells.filter(col("rowkey") % 2 === 0).coalesce(1).write.mode("append").parquet(stage)
-    cells.filter(col("rowkey") % 2 === 1).coalesce(1).write.mode("append").parquet(stage)
-    runIngestStream(spark, stage, store)
+    // two feed files → two micro-batches
+    TimeSeries.writeFeed(stage,
+      Seq(cells.filter(col("rowkey") % 2 === 0), cells.filter(col("rowkey") % 2 === 1)))
+    ingest(spark, stage, cells.schema, store, "graft_kv_stream_ingest")
     require(graft.sources.KvMeta.read(store).size >= 2,
       "ingestion did not commit at least one file set per micro-batch")
     snapshotRestore(spark, store, snapRoot, "ingested")
@@ -445,15 +433,15 @@ object Sources {
     val ckpt = snapshotRoot(sfDir, "kv_resume_ckpt")
     val snapRoot = snapshotRoot(sfDir, "kv_resume_snap")
     val cells = Scans.scanKvModel(spark, sfDir)
-    cells.filter(col("rowkey") % 2 === 0).coalesce(1).write.mode("append").parquet(stage)
+    TimeSeries.writeFeed(stage, Seq(cells.filter(col("rowkey") % 2 === 0)))
     // first incarnation ingests the first staged file, then "crashes"
-    runIngestStream(spark, stage, store, Some(ckpt))
+    ingest(spark, stage, cells.schema, store, "graft_kv_stream_resume", Some(ckpt))
     val filesAfterCrash = graft.sources.KvMeta.read(store).size
     require(filesAfterCrash >= 1, "first run committed no file set")
     // the second half arrives while the job is DOWN
-    cells.filter(col("rowkey") % 2 === 1).coalesce(1).write.mode("append").parquet(stage)
+    TimeSeries.writeFeed(stage, Seq(cells.filter(col("rowkey") % 2 === 1)))
     // restart from the checkpoint: must ingest ONLY the new file
-    runIngestStream(spark, stage, store, Some(ckpt))
+    ingest(spark, stage, cells.schema, store, "graft_kv_stream_resume", Some(ckpt))
     require(graft.sources.KvMeta.read(store).size > filesAfterCrash,
       "restarted run committed nothing — the new file was not ingested")
     snapshotRestore(spark, store, snapRoot, "resumed")

@@ -90,8 +90,7 @@ object SnapshotTool {
           // --force implies the overwrite uncommit flow: its whole point
           // is recopying a COMMITTED dest an operator distrusts, so it
           // must not die on "already exists at export destination"
-          if ((overwrite || force) &&
-              java.nio.file.Files.exists(java.nio.file.Paths.get(dst, need("name"), "MANIFEST.json"))) {
+          if ((overwrite || force) && KvSnapshots.list(dst).contains(need("name"))) {
             // uncommit is destructive to the dest's commit mark — prove
             // the SOURCE can actually replace it first (a typo'd --from
             // must not demote the only committed copy), and refuse a

@@ -42,33 +42,35 @@ object Tables {
     }
   }
 
-  /** `events.parquet` stores `ts` as Parquet INT64 TIMESTAMP(NANOS) which
-    * Spark 4.x rejects outright ([PARQUET_TYPE_ILLEGAL]). Workaround
-    * (SURVEY.md §1.3, verified): read nanos as plain LongType via the
-    * legacy conf, then truncate to microseconds with exact integer
-    * division (`div`, not `/` — double division loses precision at
-    * 1e18 nanos). DuckDB's reader truncates ns→µs identically, so the
-    * oracle sees byte-identical timestamps.
-    */
-  def events(spark: SparkSession, sfDir: String): DataFrame = {
-    enableNanosAsLong(spark)
+  /** `events.parquet` may store `ts` as Parquet INT64 TIMESTAMP(NANOS),
+    * which Spark 4.x rejects outright ([PARQUET_TYPE_ILLEGAL]).
+    * Workaround (SURVEY.md §1.3, verified): every graft session reads
+    * nanos as plain LongType (`spark.sql.legacy.parquet.nanosAsLong`,
+    * set once in [[graft.GraftSession.local]] and inherited by child
+    * sessions), and [[normalizeEventsTs]] truncates them to microseconds
+    * exactly. DuckDB's reader truncates ns→µs identically, so the oracle
+    * sees byte-identical timestamps. */
+  def events(spark: SparkSession, sfDir: String): DataFrame =
     normalizeEventsTs(spark.read.parquet(s"$sfDir/events.parquet"))
-  }
 
   /** Both observed `events.parquet` layouts normalize to one session
     * TimestampType (UTC) `ts` column:
-    *  - INT64 TIMESTAMP(NANOS) — read as LongType under the legacy conf,
-    *    then truncated to µs exactly (the original driver layout);
+    *  - INT64 TIMESTAMP(NANOS) — read as LongType under the session's
+    *    legacy conf, then truncated to µs exactly (the original testdata
+    *    layout);
     *  - TIMESTAMP(MICROS) `isAdjustedToUTC=false` — read natively as
     *    TIMESTAMP_NTZ (the round-8 testdata refresh), reinterpreted as
     *    UTC; the session timezone is pinned to UTC, so the cast is a
     *    type-tag change on identical micros, and DuckDB reads the same
     *    file as the same naive values.
-    * Shared by batch and stream readers so the two can never diverge. */
-  def normalizeEventsTs(df: DataFrame): DataFrame =
+    * Streams read events already normalized here, so the two can never
+    * diverge. */
+  private def normalizeEventsTs(df: DataFrame): DataFrame =
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
-        df.withColumn("ts", eventsTsFromNanos)
+        // exact ns→µs truncation (`div`, not `/`: double division loses
+        // precision at 1e18 nanos)
+        df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case org.apache.spark.sql.types.TimestampType => df
       case org.apache.spark.sql.types.TimestampNTZType =>
         // the NTZ->TimestampType cast is micros-preserving ONLY under a
@@ -86,17 +88,6 @@ object Tables {
         s"unrecognized events.parquet ts type $other — expected INT64 nanos " +
           "(LongType under the legacy conf), TIMESTAMP, or TIMESTAMP_NTZ")
     }
-
-  /** The two halves of the ns workaround, shared with the streaming
-    * reader (operators.TimeSeries.tsTumblingStream) so batch and stream
-    * can never diverge on the conversion. */
-  def enableNanosAsLong(spark: SparkSession): Unit =
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-
-  /** Exact ns→µs truncation of the raw long `ts` (`div`, not `/` —
-    * double division loses precision at 1e18 nanos). */
-  def eventsTsFromNanos: org.apache.spark.sql.Column =
-    timestamp_micros(expr("ts div 1000"))
 
   /** Money math: cast to DECIMAL(18,2) so aggregation is associative and
     * exact — Spark's partial aggregation order then cannot diverge from

@@ -121,6 +121,64 @@ class EntrySpec extends SparkSpec {
     val registers = scalaSources("src").filter(_._2.contains(register))
     assert(registers.isEmpty, s"runtime function registration in ${registers.map(_._1).mkString(", ")}")
   }
+  test("streams, session conf, snapshot layout and path SQL each have one home") {
+    // one feed opens every stream and one runner starts and releases
+    // every query, on a child session whose conf is the only one written
+    // at run time; only KvSnapshots knows the snapshot layout and only
+    // Tables.sqlTable spells a table path in SQL. A home is a file, or
+    // one member of it: the text between the blank lines around its def.
+    val homes = Seq(
+      ("readStream", "TimeSeries.scala", Some("def openFeed(")),
+      ("writeStream", "TimeSeries.scala", Some("def runStream(")),
+      ("resetTerminated", "TimeSeries.scala", Some("def runStream(")),
+      ("conf.set(", "TimeSeries.scala", Some("def streamSession(")),
+      ("MANIFEST.json", "KvSnapshots.scala", None),
+      ("parquet.`", "Tables.scala", Some("def sqlTable(")))
+    val main = scalaSources("src/main")
+    def at(text: String, pattern: String): Iterator[Int] =
+      Iterator.iterate(text.indexOf(pattern))(i => text.indexOf(pattern, i + 1)).takeWhile(_ >= 0)
+    val strays = for {
+      (pattern, home, member) <- homes
+      (file, text) <- main
+      i <- at(text, pattern)
+      inHome = file == home && member.forall { m =>
+        val d = text.indexOf(m)
+        d >= 0 && text.lastIndexOf("\n\n", d) < i && i < text.indexOf("\n\n", d)
+      }
+      if !inHome
+    } yield s"$pattern in $file"
+    assert(strays.isEmpty, s"outside their one home: ${strays.distinct.mkString(", ")}")
+    homes.foreach { case (pattern, home, _) =>
+      assert(main.exists { case (f, t) => f == home && t.contains(pattern) }, s"$pattern gone from $home")
+    }
+  }
+  test("events with INT64 TIMESTAMP(NANOS) ts read as microsecond timestamps on every session") {
+    // the original testdata layout of events.parquet: the session factory
+    // reads nanos as longs and Tables.events truncates them to µs
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      """message events {
+        |  required int64 event_id;
+        |  required int64 ts (TIMESTAMP(NANOS,true));
+        |  required int64 user_id;
+        |}""".stripMargin)
+    val dir = java.nio.file.Files.createTempDirectory("nanos_events")
+    val nanos = Seq(1700000000123456789L, 1700000001000000999L, 1700003600999999999L)
+    val writer = ExampleParquetWriter.builder(
+        new org.apache.hadoop.fs.Path(dir.resolve("events.parquet").toUri))
+      .withType(schema).build()
+    try nanos.zipWithIndex.foreach { case (ns, i) =>
+      writer.write(new SimpleGroupFactory(schema).newGroup()
+        .append("event_id", i.toLong).append("ts", ns).append("user_id", 7L))
+    } finally writer.close()
+    Seq(spark, spark.newSession()).foreach { s =>
+      val ev = graft.sources.Tables.events(s, dir.toString)
+      assert(ev.schema("ts").dataType == org.apache.spark.sql.types.TimestampType)
+      val micros = ev.orderBy("event_id").selectExpr("unix_micros(ts)").collect().map(_.getLong(0))
+      assert(micros.toSeq == nanos.map(_ / 1000), s"ts not truncated to µs: ${micros.mkString(", ")}")
+    }
+  }
   test("SQL keys run concurrently on two sf dirs each read their own tables") {
     val dirs = Seq(sf, "/root/testdata/sf0.01")
     val keys = Seq("sql_q3_shipping_priority", "filter_exists")
