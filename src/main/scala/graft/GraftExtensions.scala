@@ -11,8 +11,8 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * [[graft.plans.BandJoinBucketing]] optimizer rule, which rewrites
   * constant-width range joins (no equi key → nested-loop at any scale)
   * into bucketed equi-joins automatically. [[GraftSession]] installs it
-  * on every session graft builds, and child sessions from
-  * `newSession()` keep the injected functions (no graded key DEPENDS on
+  * on every session graft builds, and child sessions
+  * ([[GraftSession.child]]) keep the injected functions (no graded key DEPENDS on
   * the optimizer rule for correctness — it is a pure plan upgrade,
   * PlanSpec-proven by diffing plans with and without the rule).
   */

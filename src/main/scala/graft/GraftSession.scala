@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   * UTC session time zone, Parquet nanosecond timestamps read as longs
   * (the `events` layout [[graft.sources.Tables.events]] normalizes), UI
   * off, WARN logging. A session that needs other
-  * settings derives them from this one with `spark.newSession()`.
+  * settings derives them from this one through [[child]].
   */
 object GraftSession {
 
@@ -22,6 +22,18 @@ object GraftSession {
     val s = raw.getOrElse("4")
     s.toIntOption.filter(_ > 0).getOrElse(sys.error(
       s"SPARK_GRAFT_CPUS must be a positive integer thread count, got '$s'"))
+  }
+
+  /** A child of `spark`: the same SparkContext, extensions and cached
+    * data, with its own SQL conf, temp views and streaming queries. It
+    * starts from every modifiable setting `spark` has, so work on it
+    * plans as on `spark`, and then applies `overrides`. The one place
+    * graft derives a session or writes a session's conf at run time. */
+  def child(spark: SparkSession, overrides: (String, String)*): SparkSession = {
+    val s = spark.newSession()
+    (spark.conf.getAll.filter { case (k, _) => spark.conf.isModifiable(k) } ++ overrides)
+      .foreach { case (k, v) => s.conf.set(k, v) }
+    s
   }
 
   def local(cpus: Int): SparkSession = {

@@ -860,7 +860,9 @@ object Aggregations {
     * evaluated in either engine. The headline on this data is the
     * DEVIATION: TPC-H-style uniform prices are decisively non-Benford,
     * and dev_ppm quantifies it per digit. One partial+final aggregate
-    * to 9 digits; the 9-row expectation table broadcasts. */
+    * to 9 digits; the expectation table is the preserved side of the
+    * left join, so the observed side (at most 9 rows) is the one
+    * broadcast. */
   def aggBenford(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val obs = orders(spark, sfDir).filter(col("o_totalprice") > 0)
@@ -872,7 +874,7 @@ object Aggregations {
     val benford = Seq((1, 301030), (2, 176091), (3, 124939), (4, 96910),
       (5, 79181), (6, 66947), (7, 57992), (8, 51153), (9, 45757))
       .toDF("digit", "benford_ppm")
-    broadcast(benford).join(obs, Seq("digit"), "left")
+    benford.join(broadcast(obs), Seq("digit"), "left")
       .na.fill(0L, Seq("n"))
       .crossJoin(broadcast(tot))
       .select(col("digit"), col("n"),

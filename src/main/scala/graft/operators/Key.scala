@@ -1,6 +1,9 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.GraftSession
 import graft.sources.Tables
 
 /** One graded key: its name, its Spark plan over an sf directory, and
@@ -13,12 +16,31 @@ object Key {
   type Run = (SparkSession, String) => DataFrame
 
   /** A key whose plan and oracle are one SQL text. `text` names each
-    * table through its argument ([[Tables.sqlTable]]): Spark reads the
-    * parquet file by path, the oracle reads the table DuckDB registers
-    * under the bare name, and no session catalog entry is written. */
+    * table through its argument, which returns the bare name, so Spark
+    * runs the very text the oracle runs over the tables DuckDB
+    * registers ([[bound]]). */
   def sql(name: String)(text: (String => String) => String): Key =
-    Key(name, (spark, sfDir) => spark.sql(text(Tables.sqlTable(Some(sfDir)))),
-      text(Tables.sqlTable(None)))
+    Key(name, bound(text), text(table))
+
+  /** The plan of SQL `text`: on a fresh child session
+    * ([[GraftSession.child]]) each table the text names is bound as a
+    * temp view over [[Tables.table]], so its schema comes from the
+    * process memo, and a key writes no catalog entry any other key on
+    * the caller's session could resolve. */
+  private[operators] def bound(text: (String => String) => String): Run = (spark, sfDir) => {
+    val names = mutable.LinkedHashSet.empty[String]
+    val query = text { n => names += table(n); n }
+    val child = GraftSession.child(spark)
+    names.foreach(n => Tables.table(child, sfDir, n).createTempView(n))
+    child.sql(query)
+  }
+
+  /** A table as SQL text names it. `events` is refused: its `ts` column
+    * must be read through [[Tables.events]]. */
+  private[operators] def table(name: String): String = {
+    require(name != "events", "events must be read through Tables.events (its ts is normalized)")
+    name
+  }
 
   /** `keys`, failing on a name declared twice: a map built with `++`
     * would let the later declaration silently replace the earlier one. */

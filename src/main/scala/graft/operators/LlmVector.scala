@@ -444,7 +444,7 @@ object LlmVector {
     * deployment would key the index by a data fingerprint instead. */
   private[graft] final case class IvfIndex(n: Long, k: Int,
       centroids: Seq[(Int, Seq[Double])], rankingDir: String) {
-    private def ranking(spark: SparkSession): DataFrame = spark.read.parquet(rankingDir)
+    private def ranking(spark: SparkSession): DataFrame = graft.sources.Tables.read(spark, rankingDir)
     /** (vec_id, cell): the inverted list each vector is stored in. */
     def cells(spark: SparkSession): DataFrame =
       ranking(spark).filter(col("rn") === 1).select(col("vec_id"), col("c_id").as("cell"))
@@ -1628,7 +1628,7 @@ object LlmVector {
     * any table by every consumer (`llm_knn_graph`'s edge report and the
     * beam searches). */
   private def knnGraph(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(graft.util.Built.dir(s"llm_vector.knn_graph:$sfDir") { d =>
+    graft.sources.Tables.read(spark, graft.util.Built.dir(s"llm_vector.knn_graph:$sfDir") { d =>
       knnGraphBuild(spark, sfDir).write.parquet(d)
     })
 

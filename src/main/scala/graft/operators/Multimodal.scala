@@ -107,7 +107,7 @@ object Multimodal {
     val dir = graft.util.Built.dir(s"multimodal.media:$sfDir") { d =>
       documents(spark, sfDir).select(col("doc_id"), payloadExpr.as("payload")).write.parquet(d)
     }
-    spark.read.parquet(dir).as[MediaIn]
+    graft.sources.Tables.read(spark, dir).as[MediaIn]
   }
 
   /** Oracle-side mirror of the staged payload: `hx` is the full digest

@@ -642,10 +642,8 @@ object Scans {
     * Spark's `CAST(1000000 AS DECIMAL(38,0))` and `div`, DuckDB's
     * `1000000::HUGEINT` and `//`. */
   private def ppmKey(name: String)(text: (String => String, String, String) => String): Key =
-    Key(name,
-      (spark, sfDir) => spark.sql(
-        text(sqlTable(Some(sfDir)), "CAST(1000000 AS DECIMAL(38,0))", "div")),
-      text(sqlTable(None), "1000000::HUGEINT", "//"))
+    Key(name, Key.bound(text(_, "CAST(1000000 AS DECIMAL(38,0))", "div")),
+      text(Key.table, "1000000::HUGEINT", "//"))
 
   /** TPC-H Q19 SHAPE — DISJUNCTIVE PREDICATE REVENUE (r12): three
     * OR'd conjunct groups, each mixing build-side (brand, size) and

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import graft.GraftSession
 import graft.sources.Tables._
 import graft.util.Scratch
 
@@ -109,8 +110,9 @@ object TimeSeries {
   }
 
   /** The one streaming runner. `build` makes the streaming frame on a
-    * child session ([[streamSession]]), and the query runs until it has
-    * drained its input, then stops. Its checkpoint is `checkpoint` (a
+    * child session ([[GraftSession.child]]) whose shuffle partitions
+    * size the state stores, and the query runs until it has drained its
+    * input, then stops. Its checkpoint is `checkpoint` (a
     * restartable query's durable dir) or else a fresh tmpfs dir
     * ([[Scratch.fastCheckpointDir]]: the per-micro-batch offset, commit
     * and state fsyncs never touch a disk).
@@ -131,7 +133,7 @@ object TimeSeries {
       shufflePartitions: Int = 4, checkpoint: Option[String] = None,
       eachBatch: Option[(DataFrame, Long) => Unit] = None)(
       build: SparkSession => DataFrame): DataFrame = {
-    val stream = streamSession(spark, shufflePartitions)
+    val stream = GraftSession.child(spark, "spark.sql.shuffle.partitions" -> shufflePartitions.toString)
     val writer = build(stream).writeStream.queryName(name).outputMode(mode)
       .option("checkpointLocation", checkpoint.getOrElse(Scratch.fastCheckpointDir(name)))
     val q = eachBatch.fold(writer.format("memory"))(f => writer.foreachBatch(f)).start()
@@ -156,15 +158,6 @@ object TimeSeries {
         rows.length / 8192L + 1).toInt
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema).coalesce(slices)
     }
-  }
-
-  /** A child session (same SparkContext and extensions; its own SQL conf,
-    * temp views and streaming queries) whose shuffle partitions size a
-    * streaming query's state stores. */
-  private def streamSession(spark: SparkSession, shufflePartitions: Int): SparkSession = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
-    s
   }
 
   /** The events as two time-ordered halves ([[halves]]). */

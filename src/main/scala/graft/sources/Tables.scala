@@ -1,7 +1,10 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.util.Built
 
 /** Shared table loaders for the driver-generated testdata
   * (`/root/testdata/sf*`; see TESTDATA.md).
@@ -11,13 +14,41 @@ import org.apache.spark.sql.functions._
   *    performs column pruning + predicate pushdown into the Parquet
   *    vectorized reader; at cluster scale the same plan splits by
   *    `spark.sql.files.maxPartitionBytes` with no code change.
-  *  - NO caching here: each query re-reads only the columns it needs.
-  *    Caching tiny local files would hide pushdown bugs we must catch.
+  *  - Schemas are memoized, data never is ([[read]]): each query
+  *    re-reads only the columns it needs. Caching tiny local files would
+  *    hide pushdown bugs we must catch.
   */
 object Tables {
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    read(spark, s"$sfDir/$name.parquet")
+
+  /** The parquet file or directory at `path`, read with a memoized
+    * schema. Spark's inference runs a job on every read, even of one
+    * file; here it runs once per path, version and Parquet type mapping.
+    * The memo entry ([[graft.util.Built]]) is keyed by the path and the
+    * session's `spark.sql.parquet.*` and `spark.sql.legacy.parquet.*`
+    * settings, and records the version it was inferred from: the name,
+    * length and modification time of each file under the path. A read
+    * that finds another version infers again under a key that adds the
+    * version, so a rewritten table never gets an old schema. */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a file lists as itself, a directory as its entries
+    val version = fs.listStatus(p).map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
+      .sorted.mkString(",")
+    val mapping = spark.conf.getAll.toSeq.sorted.collect {
+      case (k, v) if k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") => s"$k=$v"
+    }
+    val key = s"parquet.schema:$path|${mapping.mkString(",")}"
+    def infer = (version, spark.read.parquet(path).schema)
+    val schema = Built(key)(infer) match {
+      case (`version`, s) => s
+      case _ => Built(s"$key|$version")(infer)._2
+    }
+    spark.read.schema(schema).parquet(path)
+  }
 
   def region(s: SparkSession, d: String): DataFrame   = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = table(s, d, "nation")
@@ -29,19 +60,6 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 
-  /** Names table `name` in SQL text. With an sf directory it is Spark's
-    * direct file SQL, parquet.`<sfDir>/<name>.parquet`, so a SQL key
-    * reads by path and registers no view on the shared session; without
-    * one it is the bare name the DuckDB oracle reads. `events` is
-    * refused: its `ts` column must be read through [[events]]. */
-  def sqlTable(sfDir: Option[String])(name: String): String = {
-    require(name != "events", "events must be read through Tables.events (its ts is normalized)")
-    sfDir.fold(name) { d =>
-      require(!d.contains('`'), s"sf directory contains a backtick: $d")
-      s"parquet.`$d/$name.parquet`"
-    }
-  }
-
   /** `events.parquet` may store `ts` as Parquet INT64 TIMESTAMP(NANOS),
     * which Spark 4.x rejects outright ([PARQUET_TYPE_ILLEGAL]).
     * Workaround (SURVEY.md §1.3, verified): every graft session reads
@@ -51,7 +69,7 @@ object Tables {
     * exactly. DuckDB's reader truncates ns→µs identically, so the oracle
     * sees byte-identical timestamps. */
   def events(spark: SparkSession, sfDir: String): DataFrame =
-    normalizeEventsTs(spark.read.parquet(s"$sfDir/events.parquet"))
+    normalizeEventsTs(read(spark, s"$sfDir/events.parquet"))
 
   /** Both observed `events.parquet` layouts normalize to one session
     * TimestampType (UTC) `ts` column:

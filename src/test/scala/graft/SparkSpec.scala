@@ -113,7 +113,8 @@ class EntrySpec extends SparkSpec {
   test("no key writes the session catalog; SQL functions come only from GraftExtensions") {
     // temp views and temp functions are session-global: a key that
     // registers one changes what a concurrent key on the same session
-    // resolves. SQL keys name tables by path (Tables.sqlTable), and
+    // resolves. SQL keys bind their tables on a child session of their
+    // own (Key.bound, the one createTempView: see the homes test), and
     // every session installs GraftExtensions.
     val views = scalaSources("src/main").filter(_._2.contains("createOrReplaceTempView"))
     assert(views.isEmpty, s"temp views registered in ${views.map(_._1).mkString(", ")}")
@@ -123,18 +124,24 @@ class EntrySpec extends SparkSpec {
   }
   test("streams, session conf, snapshot layout and path SQL each have one home") {
     // one feed opens every stream and one runner starts and releases
-    // every query, on a child session whose conf is the only one written
-    // at run time; only KvSnapshots knows the snapshot layout and only
-    // Tables.sqlTable spells a table path in SQL. A home is a file, or
-    // one member of it: the text between the blank lines around its def.
+    // every query; GraftSession.child derives every child session and
+    // writes the only conf written at run time; the SQL key binder
+    // registers the only temp views, on its own child session; only
+    // KvSnapshots knows the snapshot layout; and no SQL text reads a
+    // table by path, so every table read goes through the schema memo.
+    // A home is a file, or one member of it: the text between the blank
+    // lines around its def.
     val homes = Seq(
       ("readStream", "TimeSeries.scala", Some("def openFeed(")),
       ("writeStream", "TimeSeries.scala", Some("def runStream(")),
       ("resetTerminated", "TimeSeries.scala", Some("def runStream(")),
-      ("conf.set(", "TimeSeries.scala", Some("def streamSession(")),
-      ("MANIFEST.json", "KvSnapshots.scala", None),
-      ("parquet.`", "Tables.scala", Some("def sqlTable(")))
+      ("newSession(", "GraftSession.scala", Some("def child(")),
+      ("conf.set(", "GraftSession.scala", Some("def child(")),
+      ("createTempView", "Key.scala", Some("def bound(")),
+      ("MANIFEST.json", "KvSnapshots.scala", None))
     val main = scalaSources("src/main")
+    val pathSql = main.filter(_._2.contains("parquet.`")).map(_._1)
+    assert(pathSql.isEmpty, s"SQL text reads parquet by path in ${pathSql.mkString(", ")}")
     def at(text: String, pattern: String): Iterator[Int] =
       Iterator.iterate(text.indexOf(pattern))(i => text.indexOf(pattern, i + 1)).takeWhile(_ >= 0)
     val strays = for {
@@ -195,6 +202,14 @@ class EntrySpec extends SparkSpec {
       runs.map(_.get(300, java.util.concurrent.TimeUnit.SECONDS)).zip(serial).zip(dirs)
         .foreach { case ((got, want), d) => assert(got == want, s"round $round: $d") }
     } finally pool.shutdownNow()
+  }
+  test("SQL keys leave no temporary view on the caller's session") {
+    val declared = "(?:Key\\.sql|ppmKey)\\(\"(\\w+)\"\\)".r
+    val names = scalaSources("src/main").flatMap { case (_, t) => declared.findAllMatchIn(t).map(_.group(1)) }
+    assert(names.nonEmpty && names.forall(SparkEntry.queries.contains), s"SQL keys: $names")
+    names.foreach(n => run(n).queryExecution.toRdd.count())
+    val views = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name)
+    assert(views.isEmpty, s"temporary views left on the suite session: ${views.mkString(", ")}")
   }
   test("every query is oracle-checked and the count matches SURVEY §2.B") {
     // the full-bar invariant since round 3: no rows-only keys — every
