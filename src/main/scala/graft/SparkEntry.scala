@@ -15,7 +15,7 @@ object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    operators.Aggregations.aggPricingSummary(spark, "/root/testdata/sf0.001")
+    queries("agg_pricing_summary")(spark, "/root/testdata/sf0.001")
 
   /** Every graded key, declared once in its operator module's `keys`; a
     * name declared in two modules fails here. */

@@ -25,29 +25,7 @@ import graft.sources.Tables._
 object Aggregations {
 
   /** FLAGSHIP — TPC-H Q1 shape: pricing summary report over lineitem. */
-  def aggPricingSummary(spark: SparkSession, sfDir: String): DataFrame = {
-    val li = lineitem(spark, sfDir)
-      .filter(col("l_shipdate") <= lit("2001-09-01").cast("timestamp"))
-    li.groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(
-        sum(dec(col("l_quantity"))).as("raw_sum_qty"),
-        sum(dec(col("l_extendedprice"))).as("raw_sum_base"),
-        sum(discPrice).as("raw_sum_disc"),
-        sum(discPrice * (lit(1).cast("decimal(8,6)") + col("l_tax").cast("decimal(8,6)"))).as("raw_sum_charge"),
-        count(lit(1)).as("count_order"))
-      .select(
-        col("l_returnflag"), col("l_linestatus"),
-        col("raw_sum_qty").cast("decimal(18,2)").cast("double").as("sum_qty"),
-        col("raw_sum_base").cast("decimal(18,2)").cast("double").as("sum_base_price"),
-        col("raw_sum_disc").cast("decimal(18,2)").cast("double").as("sum_disc_price"),
-        col("raw_sum_charge").cast("decimal(18,2)").cast("double").as("sum_charge"),
-        r6(col("raw_sum_qty").cast("double") / col("count_order")).as("avg_qty"),
-        r6(col("raw_sum_base").cast("double") / col("count_order")).as("avg_price"),
-        col("count_order"))
-      .orderBy("l_returnflag", "l_linestatus")
-  }
-
-  val aggPricingSummaryOracle: String =
+  val aggPricingSummary: Key = Key.sql("agg_pricing_summary") { t =>
     s"""SELECT l_returnflag, l_linestatus,
        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
@@ -56,60 +34,37 @@ object Aggregations {
        |  ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*), 6) AS avg_qty,
        |  ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*), 6) AS avg_price,
        |  COUNT(*) AS count_order
-       |FROM lineitem
+       |FROM ${t("lineitem")}
        |WHERE l_shipdate <= TIMESTAMP '2001-09-01 00:00:00'
        |GROUP BY l_returnflag, l_linestatus
        |ORDER BY l_returnflag, l_linestatus""".stripMargin
+  }
 
   /** Ungrouped global aggregate. */
-  def aggGlobal(spark: SparkSession, sfDir: String): DataFrame =
-    lineitem(spark, sfDir)
-      .agg(
-        count(lit(1)).as("n_rows"),
-        countDistinct(col("l_orderkey")).as("n_orders"),
-        sum(dec(col("l_quantity"))).cast("decimal(18,2)").cast("double").as("sum_qty"),
-        min(dec(col("l_extendedprice"))).cast("double").as("min_price"),
-        max(dec(col("l_extendedprice"))).cast("double").as("max_price"))
-      .withColumn("avg_qty", r6(col("sum_qty").cast("double") / col("n_rows")))
-
-  val aggGlobalOracle: String =
-    """SELECT COUNT(*) AS n_rows, COUNT(DISTINCT l_orderkey) AS n_orders,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-      |  CAST(MIN(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS min_price,
-      |  CAST(MAX(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS max_price,
-      |  ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*), 6) AS avg_qty
-      |FROM lineitem""".stripMargin
+  val aggGlobal: Key = Key.sql("agg_global") { t =>
+    s"""SELECT COUNT(*) AS n_rows, COUNT(DISTINCT l_orderkey) AS n_orders,
+       |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+       |  CAST(MIN(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS min_price,
+       |  CAST(MAX(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS max_price,
+       |  ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*), 6) AS avg_qty
+       |FROM ${t("lineitem")}""".stripMargin
+  }
 
   /** GROUP BY + HAVING on the aggregate. */
-  def aggHaving(spark: SparkSession, sfDir: String): DataFrame =
-    orders(spark, sfDir)
-      .groupBy("o_custkey")
-      .agg(sum(dec(col("o_totalprice"))).cast("decimal(18,2)").as("total_spent_d"),
-        count(lit(1)).as("n_orders"))
-      .filter(col("total_spent_d") > 2500000)
-      .select(col("o_custkey"), col("total_spent_d").cast("double").as("total_spent"),
-        col("n_orders"))
-      .orderBy("o_custkey")
-
-  val aggHavingOracle: String =
-    """SELECT o_custkey,
-      |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spent,
-      |  COUNT(*) AS n_orders
-      |FROM orders GROUP BY o_custkey
-      |HAVING CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) > 2500000
-      |ORDER BY o_custkey""".stripMargin
+  val aggHaving: Key = Key.sql("agg_having") { t =>
+    s"""SELECT o_custkey,
+       |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spent,
+       |  COUNT(*) AS n_orders
+       |FROM ${t("orders")} GROUP BY o_custkey
+       |HAVING CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) > 2500000
+       |ORDER BY o_custkey""".stripMargin
+  }
 
   /** Exact COUNT(DISTINCT) per group (Expand + two-phase agg). */
-  def aggCountDistinct(spark: SparkSession, sfDir: String): DataFrame =
-    orders(spark, sfDir)
-      .groupBy("o_orderpriority")
-      .agg(countDistinct(col("o_custkey")).as("n_custs"),
-        count(lit(1)).as("n_orders"))
-      .orderBy("o_orderpriority")
-
-  val aggCountDistinctOracle: String =
-    """SELECT o_orderpriority, COUNT(DISTINCT o_custkey) AS n_custs, COUNT(*) AS n_orders
-      |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin
+  val aggCountDistinct: Key = Key.sql("agg_count_distinct") { t =>
+    s"""SELECT o_orderpriority, COUNT(DISTINCT o_custkey) AS n_custs, COUNT(*) AS n_orders
+       |FROM ${t("orders")} GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin
+  }
 
   /** Approximate distinct users per event type via a PORTABLE bottom-k
     * (KMV) sketch — round-3 change: `approx_count_distinct`'s HLL is
@@ -240,18 +195,12 @@ object Aggregations {
   }
 
   /** CUBE(returnflag, linestatus) counts + exact sums. */
-  def aggCube(spark: SparkSession, sfDir: String): DataFrame =
-    lineitem(spark, sfDir)
-      .cube("l_returnflag", "l_linestatus")
-      .agg(count(lit(1)).as("n_rows"),
-        sum(dec(col("l_quantity"))).cast("decimal(18,2)").cast("double").as("sum_qty"))
-      .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
-
-  val aggCubeOracle: String =
-    """SELECT l_returnflag, l_linestatus, COUNT(*) AS n_rows,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-      |FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
-      |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin
+  val aggCube: Key = Key.sql("agg_cube") { t =>
+    s"""SELECT l_returnflag, l_linestatus, COUNT(*) AS n_rows,
+       |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
+       |FROM ${t("lineitem")} GROUP BY CUBE(l_returnflag, l_linestatus)
+       |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin
+  }
 
   /** Explicit GROUPING SETS with per-column GROUPING() flags (avoids
     * engine-specific grouping_id bit orders). */
@@ -329,47 +278,24 @@ object Aggregations {
     * one identical closed-form double expression from those sums, and
     * ROUND 6 seals it. Same two-phase partial-agg shape at 100 TB —
     * decimal partials shuffle exactly like the doubles would. */
-  def aggCorrExact(spark: SparkSession, sfDir: String): DataFrame = {
-    val x = dec(col("l_quantity"))           // decimal(18,2) exact
-    val y = dec(col("l_extendedprice"))
-    lineitem(spark, sfDir)
-      .groupBy("l_returnflag")
-      .agg(count(lit(1)).cast("decimal(28,2)").as("n"),
-        sum(x).cast("decimal(28,2)").as("sx"),
-        sum(y).cast("decimal(28,2)").as("sy"),
-        sum((x * y).cast("decimal(28,4)")).cast("decimal(38,4)").as("sxy"),
-        sum((x * x).cast("decimal(28,4)")).cast("decimal(38,4)").as("sxx"),
-        sum((y * y).cast("decimal(28,4)")).cast("decimal(38,4)").as("syy"))
-      .select(col("l_returnflag"),
-        r6((col("n").cast("double") * col("sxy").cast("double") -
-            col("sx").cast("double") * col("sy").cast("double")) /
-          (sqrt(col("n").cast("double") * col("sxx").cast("double") -
-              col("sx").cast("double") * col("sx").cast("double")) *
-            sqrt(col("n").cast("double") * col("syy").cast("double") -
-              col("sy").cast("double") * col("sy").cast("double")))).as("corr_qty_price"),
-        r6((col("sxy").cast("double") -
-            col("sx").cast("double") * col("sy").cast("double") / col("n").cast("double")) /
-          (col("n").cast("double") - lit(1.0))).as("covar_samp"))
-      .orderBy("l_returnflag")
+  val aggCorrExact: Key = Key.sql("agg_corr_exact") { t =>
+    s"""WITH m AS (
+       |  SELECT l_returnflag,
+       |    CAST(COUNT(*) AS DECIMAL(28,2)) AS n,
+       |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DECIMAL(28,2)) AS sx,
+       |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DECIMAL(28,2)) AS sy,
+       |    CAST(SUM(CAST(CAST(l_quantity AS DECIMAL(18,2)) * CAST(l_extendedprice AS DECIMAL(18,2)) AS DECIMAL(28,4))) AS DECIMAL(38,4)) AS sxy,
+       |    CAST(SUM(CAST(CAST(l_quantity AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2)) AS DECIMAL(28,4))) AS DECIMAL(38,4)) AS sxx,
+       |    CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_extendedprice AS DECIMAL(18,2)) AS DECIMAL(28,4))) AS DECIMAL(38,4)) AS syy
+       |  FROM ${t("lineitem")} GROUP BY l_returnflag)
+       |SELECT l_returnflag,
+       |  ROUND((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) /
+       |    (SQRT(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) *
+       |     SQRT(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6) AS corr_qty_price,
+       |  ROUND((CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)) /
+       |    (CAST(n AS DOUBLE) - 1.0), 6) AS covar_samp
+       |FROM m ORDER BY l_returnflag""".stripMargin
   }
-
-  val aggCorrExactOracle: String =
-    """WITH m AS (
-      |  SELECT l_returnflag,
-      |    CAST(COUNT(*) AS DECIMAL(28,2)) AS n,
-      |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DECIMAL(28,2)) AS sx,
-      |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DECIMAL(28,2)) AS sy,
-      |    CAST(SUM(CAST(CAST(l_quantity AS DECIMAL(18,2)) * CAST(l_extendedprice AS DECIMAL(18,2)) AS DECIMAL(28,4))) AS DECIMAL(38,4)) AS sxy,
-      |    CAST(SUM(CAST(CAST(l_quantity AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2)) AS DECIMAL(28,4))) AS DECIMAL(38,4)) AS sxx,
-      |    CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_extendedprice AS DECIMAL(18,2)) AS DECIMAL(28,4))) AS DECIMAL(38,4)) AS syy
-      |  FROM lineitem GROUP BY l_returnflag)
-      |SELECT l_returnflag,
-      |  ROUND((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) /
-      |    (SQRT(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) *
-      |     SQRT(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6) AS corr_qty_price,
-      |  ROUND((CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)) /
-      |    (CAST(n AS DOUBLE) - 1.0), 6) AS covar_samp
-      |FROM m ORDER BY l_returnflag""".stripMargin
 
   /** EXACT LEAST-SQUARES REGRESSION per returnflag — the REGR_* family
     * (slope / intercept / R²) of extendedprice on quantity, built the
@@ -380,49 +306,23 @@ object Aggregations {
     * unrounded slope to drift) and ROUND 6 seals the comparison. The
     * built-in regr_slope would accumulate doubles partition-ordered and
     * drift vs DuckDB. Same two-phase partial-agg shape at 100 TB. */
-  def aggRegrSlope(spark: SparkSession, sfDir: String): DataFrame = {
-    val x = dec(col("l_quantity"))
-    val y = dec(col("l_extendedprice"))
-    lineitem(spark, sfDir)
-      .groupBy("l_returnflag")
-      .agg(count(lit(1)).cast("decimal(28,2)").as("nd"),
-        sum(x).cast("decimal(28,2)").as("sxd"),
-        sum(y).cast("decimal(28,2)").as("syd"),
-        sum((x * y).cast("decimal(28,4)")).cast("decimal(38,4)").as("sxyd"),
-        sum((x * x).cast("decimal(28,4)")).cast("decimal(38,4)").as("sxxd"),
-        sum((y * y).cast("decimal(28,4)")).cast("decimal(38,4)").as("syyd"))
-      .select(col("l_returnflag"),
-        col("nd").cast("double").as("n"), col("sxd").cast("double").as("sx"),
-        col("syd").cast("double").as("sy"), col("sxyd").cast("double").as("sxy"),
-        col("sxxd").cast("double").as("sxx"), col("syyd").cast("double").as("syy"))
-      .select(col("l_returnflag"),
-        r6((col("n") * col("sxy") - col("sx") * col("sy")) /
-          (col("n") * col("sxx") - col("sx") * col("sx"))).as("slope"),
-        r6((col("sy") * col("sxx") - col("sx") * col("sxy")) /
-          (col("n") * col("sxx") - col("sx") * col("sx"))).as("intercept"),
-        r6(((col("n") * col("sxy") - col("sx") * col("sy")) *
-            (col("n") * col("sxy") - col("sx") * col("sy"))) /
-          ((col("n") * col("sxx") - col("sx") * col("sx")) *
-            (col("n") * col("syy") - col("sy") * col("sy")))).as("r2"))
-      .orderBy("l_returnflag")
+  val aggRegrSlope: Key = Key.sql("agg_regr_slope") { t =>
+    s"""WITH m AS (
+       |  SELECT l_returnflag,
+       |    CAST(CAST(COUNT(*) AS DECIMAL(28,2)) AS DOUBLE) AS n,
+       |    CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DECIMAL(28,2)) AS DOUBLE) AS sx,
+       |    CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DECIMAL(28,2)) AS DOUBLE) AS sy,
+       |    CAST(CAST(SUM(CAST(CAST(l_quantity AS DECIMAL(18,2)) * CAST(l_extendedprice AS DECIMAL(18,2)) AS DECIMAL(28,4))) AS DECIMAL(38,4)) AS DOUBLE) AS sxy,
+       |    CAST(CAST(SUM(CAST(CAST(l_quantity AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2)) AS DECIMAL(28,4))) AS DECIMAL(38,4)) AS DOUBLE) AS sxx,
+       |    CAST(CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_extendedprice AS DECIMAL(18,2)) AS DECIMAL(28,4))) AS DECIMAL(38,4)) AS DOUBLE) AS syy
+       |  FROM ${t("lineitem")} GROUP BY l_returnflag)
+       |SELECT l_returnflag,
+       |  ROUND((n * sxy - sx * sy) / (n * sxx - sx * sx), 6) AS slope,
+       |  ROUND((sy * sxx - sx * sxy) / (n * sxx - sx * sx), 6) AS intercept,
+       |  ROUND(((n * sxy - sx * sy) * (n * sxy - sx * sy)) /
+       |    ((n * sxx - sx * sx) * (n * syy - sy * sy)), 6) AS r2
+       |FROM m ORDER BY l_returnflag""".stripMargin
   }
-
-  val aggRegrSlopeOracle: String =
-    """WITH m AS (
-      |  SELECT l_returnflag,
-      |    CAST(CAST(COUNT(*) AS DECIMAL(28,2)) AS DOUBLE) AS n,
-      |    CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DECIMAL(28,2)) AS DOUBLE) AS sx,
-      |    CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DECIMAL(28,2)) AS DOUBLE) AS sy,
-      |    CAST(CAST(SUM(CAST(CAST(l_quantity AS DECIMAL(18,2)) * CAST(l_extendedprice AS DECIMAL(18,2)) AS DECIMAL(28,4))) AS DECIMAL(38,4)) AS DOUBLE) AS sxy,
-      |    CAST(CAST(SUM(CAST(CAST(l_quantity AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2)) AS DECIMAL(28,4))) AS DECIMAL(38,4)) AS DOUBLE) AS sxx,
-      |    CAST(CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_extendedprice AS DECIMAL(18,2)) AS DECIMAL(28,4))) AS DECIMAL(38,4)) AS DOUBLE) AS syy
-      |  FROM lineitem GROUP BY l_returnflag)
-      |SELECT l_returnflag,
-      |  ROUND((n * sxy - sx * sy) / (n * sxx - sx * sx), 6) AS slope,
-      |  ROUND((sy * sxx - sx * sxy) / (n * sxx - sx * sx), 6) AS intercept,
-      |  ROUND(((n * sxy - sx * sy) * (n * sxy - sx * sy)) /
-      |    ((n * sxx - sx * sx) * (n * syy - sy * sy)), 6) AS r2
-      |FROM m ORDER BY l_returnflag""".stripMargin
 
   /** EXACT MODE with a deterministic tie-break — the aggregate SQL
     * left out (most-frequent value per group). Ties go to the SMALLEST
@@ -434,28 +334,16 @@ object Aggregations {
     * expensive pass is the first groupBy, which partial-aggregates
     * map-side; the window never sees raw rows. Quantities are exact
     * integers (DECIMAL→INT, no float equality anywhere). */
-  def aggMode(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val counts = lineitem(spark, sfDir)
-      .select(col("l_returnflag"), dec(col("l_quantity")).cast("int").as("qty"))
-      .groupBy("l_returnflag", "qty").agg(count(lit(1)).as("n"))
-    val w = Window.partitionBy("l_returnflag")
-      .orderBy(col("n").desc, col("qty").asc)
-    counts.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("l_returnflag"), col("qty").as("mode_qty"), col("n").as("n_mode"))
-      .orderBy("l_returnflag")
+  val aggMode: Key = Key.sql("agg_mode") { t =>
+    s"""WITH c AS (SELECT l_returnflag,
+       |    CAST(CAST(l_quantity AS DECIMAL(18,2)) AS INT) AS qty,
+       |    CAST(COUNT(*) AS BIGINT) AS n
+       |  FROM ${t("lineitem")} GROUP BY 1, 2),
+       |r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY l_returnflag
+       |        ORDER BY n DESC, qty ASC) AS rn FROM c)
+       |SELECT l_returnflag, qty AS mode_qty, n AS n_mode
+       |FROM r WHERE rn = 1 ORDER BY l_returnflag""".stripMargin
   }
-
-  val aggModeOracle: String =
-    """WITH c AS (SELECT l_returnflag,
-      |    CAST(CAST(l_quantity AS DECIMAL(18,2)) AS INT) AS qty,
-      |    CAST(COUNT(*) AS BIGINT) AS n
-      |  FROM lineitem GROUP BY 1, 2),
-      |r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY l_returnflag
-      |        ORDER BY n DESC, qty ASC) AS rn FROM c)
-      |SELECT l_returnflag, qty AS mode_qty, n AS n_mode
-      |FROM r WHERE rn = 1 ORDER BY l_returnflag""".stripMargin
 
   /** INCREMENTAL AGGREGATE MAINTENANCE — the materialized-rollup move
     * every 100 TB warehouse runs on: per-DAY partial aggregates are
@@ -539,63 +427,34 @@ object Aggregations {
     * and could flip ROUND-6 at a boundary) in identical expression
     * order on both engines. One partial+final HashAggregate over a
     * 2-column scan — the 100 TB plan for any moment statistic. */
-  def aggSkewKurtosis(spark: SparkSession, sfDir: String): DataFrame = {
-    val q = expr("CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT)")
-    lineitem(spark, sfDir)
-      .select(col("l_returnflag"), q.as("c"))
-      .groupBy("l_returnflag")
-      .agg(count(lit(1)).cast("decimal(38,0)").as("n"),
-        sum(col("c").cast("decimal(28,0)")).cast("decimal(38,0)").as("s1"),
-        sum((col("c") * col("c")).cast("decimal(28,0)")).cast("decimal(38,0)").as("s2"),
-        sum((col("c") * col("c") * col("c")).cast("decimal(28,0)")).cast("decimal(38,0)").as("s3"),
-        sum((col("c") * col("c") * col("c") * col("c")).cast("decimal(28,0)")).cast("decimal(38,0)").as("s4"))
-      .withColumn("nd", col("n").cast("double"))
-      .withColumn("m1", col("s1").cast("double") / col("nd"))
-      .withColumn("m2",
-        col("s2").cast("double") / col("nd") - col("m1") * col("m1"))
-      .withColumn("m3",
-        col("s3").cast("double") / col("nd")
-          - lit(3.0) * col("m1") * col("s2").cast("double") / col("nd")
-          + lit(2.0) * col("m1") * col("m1") * col("m1"))
-      .withColumn("m4",
-        col("s4").cast("double") / col("nd")
-          - lit(4.0) * col("m1") * col("s3").cast("double") / col("nd")
-          + lit(6.0) * col("m1") * col("m1") * col("s2").cast("double") / col("nd")
-          - lit(3.0) * col("m1") * col("m1") * col("m1") * col("m1"))
-      .select(col("l_returnflag"),
-        col("n").cast("long").as("n"),
-        r6(col("m3") / (col("m2") * sqrt(col("m2")))).as("skewness"),
-        r6(col("m4") / (col("m2") * col("m2")) - lit(3.0)).as("kurtosis_excess"))
-      .orderBy("l_returnflag")
+  val aggSkewKurtosis: Key = Key.sql("agg_skew_kurtosis") { t =>
+    s"""WITH s AS (
+       |  SELECT l_returnflag,
+       |    CAST(COUNT(*) AS DECIMAL(38,0)) AS n,
+       |    CAST(SUM(CAST(c AS DECIMAL(28,0))) AS DECIMAL(38,0)) AS s1,
+       |    CAST(SUM(CAST(c * c AS DECIMAL(28,0))) AS DECIMAL(38,0)) AS s2,
+       |    CAST(SUM(CAST(c * c * c AS DECIMAL(28,0))) AS DECIMAL(38,0)) AS s3,
+       |    CAST(SUM(CAST(c * c * c * c AS DECIMAL(28,0))) AS DECIMAL(38,0)) AS s4
+       |  FROM (SELECT l_returnflag,
+       |      CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
+       |    FROM ${t("lineitem")}) GROUP BY l_returnflag),
+       |a AS (SELECT l_returnflag, n,
+       |    CAST(n AS DOUBLE) AS nd,
+       |    CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE) AS m1,
+       |    CAST(s2 AS DOUBLE) AS s2d, CAST(s3 AS DOUBLE) AS s3d,
+       |    CAST(s4 AS DOUBLE) AS s4d
+       |  FROM s),
+       |b AS (SELECT l_returnflag, n, nd, m1, s2d, s3d, s4d,
+       |    s2d / nd - m1 * m1 AS m2,
+       |    s3d / nd - 3.0 * m1 * s2d / nd + 2.0 * m1 * m1 * m1 AS m3,
+       |    s4d / nd - 4.0 * m1 * s3d / nd + 6.0 * m1 * m1 * s2d / nd
+       |      - 3.0 * m1 * m1 * m1 * m1 AS m4
+       |  FROM a)
+       |SELECT l_returnflag, CAST(n AS BIGINT) AS n,
+       |  ROUND(m3 / (m2 * SQRT(m2)), 6) AS skewness,
+       |  ROUND(m4 / (m2 * m2) - 3.0, 6) AS kurtosis_excess
+       |FROM b ORDER BY l_returnflag""".stripMargin
   }
-
-  val aggSkewKurtosisOracle: String =
-    """WITH s AS (
-      |  SELECT l_returnflag,
-      |    CAST(COUNT(*) AS DECIMAL(38,0)) AS n,
-      |    CAST(SUM(CAST(c AS DECIMAL(28,0))) AS DECIMAL(38,0)) AS s1,
-      |    CAST(SUM(CAST(c * c AS DECIMAL(28,0))) AS DECIMAL(38,0)) AS s2,
-      |    CAST(SUM(CAST(c * c * c AS DECIMAL(28,0))) AS DECIMAL(38,0)) AS s3,
-      |    CAST(SUM(CAST(c * c * c * c AS DECIMAL(28,0))) AS DECIMAL(38,0)) AS s4
-      |  FROM (SELECT l_returnflag,
-      |      CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
-      |    FROM lineitem) GROUP BY l_returnflag),
-      |a AS (SELECT l_returnflag, n,
-      |    CAST(n AS DOUBLE) AS nd,
-      |    CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE) AS m1,
-      |    CAST(s2 AS DOUBLE) AS s2d, CAST(s3 AS DOUBLE) AS s3d,
-      |    CAST(s4 AS DOUBLE) AS s4d
-      |  FROM s),
-      |b AS (SELECT l_returnflag, n, nd, m1, s2d, s3d, s4d,
-      |    s2d / nd - m1 * m1 AS m2,
-      |    s3d / nd - 3.0 * m1 * s2d / nd + 2.0 * m1 * m1 * m1 AS m3,
-      |    s4d / nd - 4.0 * m1 * s3d / nd + 6.0 * m1 * m1 * s2d / nd
-      |      - 3.0 * m1 * m1 * m1 * m1 AS m4
-      |  FROM a)
-      |SELECT l_returnflag, CAST(n AS BIGINT) AS n,
-      |  ROUND(m3 / (m2 * SQRT(m2)), 6) AS skewness,
-      |  ROUND(m4 / (m2 * m2) - 3.0, 6) AS kurtosis_excess
-      |FROM b ORDER BY l_returnflag""".stripMargin
 
   /** WEIGHTED MEDIAN — the robust-statistics sibling of
     * `agg_percentiles`: the extendedprice at which half the total
@@ -610,40 +469,22 @@ object Aggregations {
     * running cumsum and the per-flag total as framed windows, then a
     * min-aggregate over the qualifying rows — no self-join, no second
     * pass over the data. */
-  def aggWeightedMedian(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ord = Window.partitionBy("l_returnflag")
-      .orderBy(col("price").asc, col("l_orderkey").asc, col("l_linenumber").asc)
-    val cum = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val all = Window.partitionBy("l_returnflag")
-    lineitem(spark, sfDir)
-      .select(col("l_returnflag"), col("l_orderkey"), col("l_linenumber"),
-        col("l_extendedprice").as("price"),
-        expr("CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT)").as("w"))
-      .withColumn("cw", sum(col("w")).over(cum))
-      .withColumn("tw", sum(col("w")).over(all))
-      .filter(col("cw") * 2 >= col("tw"))
-      .groupBy("l_returnflag")
-      .agg(min(col("price")).as("weighted_median"),
-        max(col("tw")).as("total_weight_cents"))
-      .orderBy("l_returnflag")
+  val aggWeightedMedian: Key = Key.sql("agg_weighted_median") { t =>
+    s"""WITH t AS (SELECT l_returnflag, l_orderkey, l_linenumber,
+       |    l_extendedprice AS price,
+       |    CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT) AS w
+       |  FROM ${t("lineitem")}),
+       |c AS (SELECT l_returnflag, price,
+       |    SUM(w) OVER (PARTITION BY l_returnflag
+       |      ORDER BY price, l_orderkey, l_linenumber
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cw,
+       |    SUM(w) OVER (PARTITION BY l_returnflag) AS tw
+       |  FROM t)
+       |SELECT l_returnflag, MIN(price) AS weighted_median,
+       |  CAST(MAX(tw) AS BIGINT) AS total_weight_cents
+       |FROM c WHERE cw * 2 >= tw
+       |GROUP BY 1 ORDER BY 1""".stripMargin
   }
-
-  val aggWeightedMedianOracle: String =
-    """WITH t AS (SELECT l_returnflag, l_orderkey, l_linenumber,
-      |    l_extendedprice AS price,
-      |    CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT) AS w
-      |  FROM lineitem),
-      |c AS (SELECT l_returnflag, price,
-      |    SUM(w) OVER (PARTITION BY l_returnflag
-      |      ORDER BY price, l_orderkey, l_linenumber
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cw,
-      |    SUM(w) OVER (PARTITION BY l_returnflag) AS tw
-      |  FROM t)
-      |SELECT l_returnflag, MIN(price) AS weighted_median,
-      |  CAST(MAX(tw) AS BIGINT) AS total_weight_cents
-      |FROM c WHERE cw * 2 >= tw
-      |GROUP BY 1 ORDER BY 1""".stripMargin
 
   /** BOOLEAN AGGREGATES — every/any/count_if, the predicates-as-
     * aggregates surface (SQL:2023 standardizes EVERY/ANY; both engines
@@ -651,27 +492,17 @@ object Aggregations {
     * external comparator's bool canonicalization across engines is
     * unverified; int is). Exact thresholds on integer cents so the
     * predicate itself cannot drift. */
-  def aggBoolAggs(spark: SparkSession, sfDir: String): DataFrame =
-    orders(spark, sfDir)
-      .withColumn("cents", expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"))
-      .groupBy("o_orderpriority")
-      .agg(
-        expr("CAST(bool_and(cents > 100000) AS INT)").as("all_over_1k"),
-        expr("CAST(bool_or(cents > 40000000) AS INT)").as("any_over_400k"),
-        expr("count_if(cents BETWEEN 10000000 AND 20000000)").as("n_mid_band"),
-        count(lit(1)).as("n"))
-      .orderBy("o_orderpriority")
-
-  val aggBoolAggsOracle: String =
-    """SELECT o_orderpriority,
-      |  CAST(bool_and(cents > 100000) AS INT) AS all_over_1k,
-      |  CAST(bool_or(cents > 40000000) AS INT) AS any_over_400k,
-      |  CAST(count_if(cents BETWEEN 10000000 AND 20000000) AS BIGINT) AS n_mid_band,
-      |  COUNT(*) AS n
-      |FROM (SELECT o_orderpriority,
-      |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-      |  FROM orders)
-      |GROUP BY 1 ORDER BY 1""".stripMargin
+  val aggBoolAggs: Key = Key.sql("agg_bool_aggs") { t =>
+    s"""SELECT o_orderpriority,
+       |  CAST(bool_and(cents > 100000) AS INT) AS all_over_1k,
+       |  CAST(bool_or(cents > 40000000) AS INT) AS any_over_400k,
+       |  CAST(count_if(cents BETWEEN 10000000 AND 20000000) AS BIGINT) AS n_mid_band,
+       |  COUNT(*) AS n
+       |FROM (SELECT o_orderpriority,
+       |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+       |  FROM ${t("orders")})
+       |GROUP BY 1 ORDER BY 1""".stripMargin
+  }
 
   /** SKETCH INTERSECTION — the theta-sketch set-algebra move that lets
     * 100 TB pipelines answer "how many users did BOTH X and Y" from
@@ -1418,23 +1249,23 @@ object Aggregations {
     Key("agg_gini", aggGini, aggGiniOracle),
     Key("agg_chi_square", aggChiSquare, aggChiSquareOracle),
     Key("agg_sketch_intersect", aggSketchIntersect, aggSketchIntersectOracle),
-    Key("agg_bool_aggs", aggBoolAggs, aggBoolAggsOracle),
-    Key("agg_weighted_median", aggWeightedMedian, aggWeightedMedianOracle),
-    Key("agg_skew_kurtosis", aggSkewKurtosis, aggSkewKurtosisOracle),
+    aggBoolAggs,
+    aggWeightedMedian,
+    aggSkewKurtosis,
     Key("agg_hist_fixed", aggHistFixed, aggHistFixedOracle),
-    Key("agg_mode", aggMode, aggModeOracle),
+    aggMode,
     Key("agg_partial_merge", aggPartialMerge, aggPartialMergeOracle),
-    Key("agg_corr_exact", aggCorrExact, aggCorrExactOracle),
-    Key("agg_regr_slope", aggRegrSlope, aggRegrSlopeOracle),
+    aggCorrExact,
+    aggRegrSlope,
     Key("agg_percentiles", aggPercentiles, aggPercentilesOracle),
-    Key("agg_pricing_summary", aggPricingSummary, aggPricingSummaryOracle),
-    Key("agg_global", aggGlobal, aggGlobalOracle),
-    Key("agg_having", aggHaving, aggHavingOracle),
-    Key("agg_count_distinct", aggCountDistinct, aggCountDistinctOracle),
+    aggPricingSummary,
+    aggGlobal,
+    aggHaving,
+    aggCountDistinct,
     Key("agg_approx_hll", aggApproxHll, aggApproxHllOracle),
     Key("agg_sketch_merge", aggSketchMerge, aggSketchMergeOracle),
     aggRollup,
-    Key("agg_cube", aggCube, aggCubeOracle),
+    aggCube,
     aggGroupingSets,
     Key("agg_collect_sorted", aggCollectSorted, aggCollectSortedOracle),
     Key("udaf_weighted_avg", udafWeightedAvg, udafWeightedAvgOracle))

@@ -1,9 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.sources.Tables._
-
 /** Filter / predicate / projection operators (SURVEY.md §2.B). All are
   * whole-stage-codegen'd single scans; predicates fold into the parquet
   * reader at any scale.
@@ -11,41 +7,23 @@ import graft.sources.Tables._
 object Filters {
 
   /** IN / LIKE / BETWEEN predicate combo over part. */
-  def filterInLikeBetween(spark: SparkSession, sfDir: String): DataFrame =
-    part(spark, sfDir)
-      .filter(col("p_brand").isin("Brand#11", "Brand#13", "Brand#22") &&
-        col("p_type").like("PROMO%") &&
-        col("p_size").between(1, 25))
-      .select("p_partkey", "p_name", "p_brand", "p_type", "p_size")
-      .orderBy("p_partkey")
-
-  val filterInLikeBetweenOracle: String =
-    """SELECT p_partkey, p_name, p_brand, p_type, p_size FROM part
-      |WHERE p_brand IN ('Brand#11','Brand#13','Brand#22')
-      |  AND p_type LIKE 'PROMO%' AND p_size BETWEEN 1 AND 25
-      |ORDER BY p_partkey""".stripMargin
+  val filterInLikeBetween: Key = Key.sql("filter_in_like_between") { t =>
+    s"""SELECT p_partkey, p_name, p_brand, p_type, p_size FROM ${t("part")}
+       |WHERE p_brand IN ('Brand#11','Brand#13','Brand#22')
+       |  AND p_type LIKE 'PROMO%' AND p_size BETWEEN 1 AND 25
+       |ORDER BY p_partkey""".stripMargin
+  }
 
   /** Three-valued logic: nulls injected via NULLIF, then COALESCE,
     * null-skipping COUNT, and IS [NOT] DISTINCT FROM (eqNullSafe). */
-  def filterNullSemantics(spark: SparkSession, sfDir: String): DataFrame =
-    orders(spark, sfDir)
-      .withColumn("st_null", nullif(col("o_orderstatus"), lit("P")))
-      .groupBy("o_orderpriority")
-      .agg(
-        count(lit(1)).as("n_all"),
-        count(col("st_null")).as("n_nonnull"),
-        sum(when(col("st_null").isNull, 1).otherwise(0)).as("n_null"),
-        sum(coalesce(nullif(col("o_orderstatus"), lit("O")), lit("?")).eqNullSafe("F").cast("int")).as("n_f"),
-        sum(col("st_null").eqNullSafe(lit(null).cast("string")).cast("int")).as("n_nullsafe_eq_null"))
-      .orderBy("o_orderpriority")
-
-  val filterNullSemanticsOracle: String =
-    """SELECT o_orderpriority, COUNT(*) AS n_all,
-      |  COUNT(NULLIF(o_orderstatus,'P')) AS n_nonnull,
-      |  CAST(SUM(CASE WHEN NULLIF(o_orderstatus,'P') IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
-      |  CAST(SUM(CAST(COALESCE(NULLIF(o_orderstatus,'O'),'?') IS NOT DISTINCT FROM 'F' AS INT)) AS BIGINT) AS n_f,
-      |  CAST(SUM(CAST(NULLIF(o_orderstatus,'P') IS NOT DISTINCT FROM NULL AS INT)) AS BIGINT) AS n_nullsafe_eq_null
-      |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin
+  val filterNullSemantics: Key = Key.sql("filter_null_semantics") { t =>
+    s"""SELECT o_orderpriority, COUNT(*) AS n_all,
+       |  COUNT(NULLIF(o_orderstatus,'P')) AS n_nonnull,
+       |  CAST(SUM(CASE WHEN NULLIF(o_orderstatus,'P') IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
+       |  CAST(SUM(CAST(COALESCE(NULLIF(o_orderstatus,'O'),'?') IS NOT DISTINCT FROM 'F' AS INT)) AS BIGINT) AS n_f,
+       |  CAST(SUM(CAST(NULLIF(o_orderstatus,'P') IS NOT DISTINCT FROM NULL AS INT)) AS BIGINT) AS n_nullsafe_eq_null
+       |FROM ${t("orders")} GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin
+  }
 
   /** CORRELATED SCALAR SUBQUERY — "orders 1.5× above their own
     * customer's average": the query shape users write, and the shape a
@@ -70,22 +48,13 @@ object Filters {
   }
 
   /** Nested CASE WHEN pricing tiers over orders. */
-  def projectCaseWhen(spark: SparkSession, sfDir: String): DataFrame =
-    orders(spark, sfDir)
-      .select(
-        col("o_orderkey"),
-        when(col("o_totalprice") > 400000,
-          when(col("o_orderstatus") === "F", lit("high-final")).otherwise(lit("high-open")))
-          .when(col("o_totalprice") > 200000, lit("mid"))
-          .otherwise(lit("low")).as("tier"))
-      .orderBy("o_orderkey")
-
-  val projectCaseWhenOracle: String =
-    """SELECT o_orderkey,
-      |  CASE WHEN o_totalprice > 400000 THEN
-      |         CASE WHEN o_orderstatus = 'F' THEN 'high-final' ELSE 'high-open' END
-      |       WHEN o_totalprice > 200000 THEN 'mid' ELSE 'low' END AS tier
-      |FROM orders ORDER BY o_orderkey""".stripMargin
+  val projectCaseWhen: Key = Key.sql("project_case_when") { t =>
+    s"""SELECT o_orderkey,
+       |  CASE WHEN o_totalprice > 400000 THEN
+       |         CASE WHEN o_orderstatus = 'F' THEN 'high-final' ELSE 'high-open' END
+       |       WHEN o_totalprice > 200000 THEN 'mid' ELSE 'low' END AS tier
+       |FROM ${t("orders")} ORDER BY o_orderkey""".stripMargin
+  }
 
   /** EXISTS / NOT EXISTS — the predicate-subquery pair
     * `filter_correlated` doesn't cover (that key decorrelates SCALAR
@@ -182,9 +151,9 @@ object Filters {
     filterQ2MinCost,
     filterExists,
     filterCorrelated,
-    Key("filter_in_like_between", filterInLikeBetween, filterInLikeBetweenOracle),
-    Key("filter_null_semantics", filterNullSemantics, filterNullSemanticsOracle),
-    Key("project_case_when", projectCaseWhen, projectCaseWhenOracle))
+    filterInLikeBetween,
+    filterNullSemantics,
+    projectCaseWhen)
 
   val queries: Map[String, Key.Run] = Key.queries(keys)
 }

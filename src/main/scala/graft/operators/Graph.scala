@@ -707,11 +707,10 @@ object Graph {
     * size rollup. Every round is an equi-join + distinct on a
     * node²-bounded pair set with the lineage cut per round
     * (`graph_components`' discipline); at a 100 TB fact volume the
-    * closure still runs on the aggregated nation-level edge list, and
-    * for billion-node graphs the same code degrades gracefully to the
-    * standard forward/backward-reachability coloring (closure pair
-    * sets stop being node²-safe there — documented, not graded). The
-    * oracle is the identical closure as a DuckDB recursive CTE. */
+    * closure still runs on the aggregated nation-level edge list
+    * (closure pair sets are node²-bounded, so billion-node graphs
+    * would need another algorithm). The oracle is the identical
+    * closure as a DuckDB recursive CTE. */
   /** Shared SCC machinery for `graph_scc` and `graph_condensation`:
     * thresholded directed edges, closure by iterative doubling, and
     * the per-node SCC label. */
@@ -740,77 +739,6 @@ object Graph {
     var (r, cover) = (1, 2L)
     while (cover < n - 1) { cover *= 2; r += 1 }
     r
-  }
-
-  /** FORWARD–BACKWARD COLORING SCC (r10) — the documented billion-node
-    * degradation path for the closure-based `graph_scc`, now executed
-    * for real and spec-graded on a 10⁴-node synthetic graph
-    * (SccColoringSpec): closure pair sets are node²-bounded and stop
-    * being safe on huge graphs, while this coloring form only ever
-    * materializes O(nodes + edges) per round. Per outer round
-    * (Orzan-style): (1) every unassigned node colors itself with its
-    * own id and the max color propagates FORWARD along edge direction
-    * to fixpoint — a node's color becomes the max id over its
-    * ancestors ∪ self; (2) every node whose id equals its color is a
-    * ROOT (each nonempty color class provably contains its color as a
-    * member), and the nodes BACKWARD-reachable from a root WITHIN its
-    * color class are exactly the root's SCC — any backward path
-    * between two SCC members stays inside the class, so all roots
-    * resolve in parallel; (3) assigned SCCs leave the graph, the
-    * remainder re-colors. Rounds are bounded by the condensation
-    * depth; every step is a node-keyed equi-join. Labels normalize to
-    * min member id (the `graph_scc` convention) so the two algorithms
-    * are directly comparable — the spec pins their agreement on the
-    * trade graph and full ground truth on the synthetic graph. */
-  private[graft] def sccByColoring(edgesIn: DataFrame): DataFrame = {
-    val edges0 = edgesIn
-      .select(col("s").cast("long").as("s"), col("d").cast("long").as("d"))
-      .filter(col("s") =!= col("d")).distinct().localCheckpoint(true)
-    var remaining = edges0
-    var nodes = remaining.select(col("s").as("node"))
-      .union(remaining.select(col("d").as("node"))).distinct().localCheckpoint(true)
-    var assigned: DataFrame = null
-    while (nodes.limit(1).count() > 0) {
-      // (1) forward max-color fixpoint
-      var colors = nodes.select(col("node"), col("node").as("color"))
-        .localCheckpoint(true)
-      var changed = true
-      while (changed) {
-        val prop = colors.join(remaining, colors("node") === remaining("s"))
-          .select(remaining("d").as("node"), colors("color").as("color"))
-        val upd = colors.union(prop).groupBy("node")
-          .agg(max(col("color")).as("color")).localCheckpoint(true)
-        changed = upd.join(colors.withColumnRenamed("color", "old"), Seq("node"))
-          .filter(col("color") =!= col("old")).limit(1).count() > 0
-        colors = upd
-      }
-      // (2) backward reachability from each root inside its color class
-      var scc = colors.filter(col("node") === col("color")).localCheckpoint(true)
-      var grew = true
-      while (grew) {
-        val before = scc.count()
-        val pred = scc.join(remaining, scc("node") === remaining("d"))
-          .select(remaining("s").as("node"), scc("color").as("color"))
-        val cand = pred
-          .join(colors.withColumnRenamed("color", "node_color"), Seq("node"))
-          .filter(col("color") === col("node_color"))
-          .select("node", "color")
-        scc = scc.union(cand).distinct().localCheckpoint(true)
-        grew = scc.count() > before
-      }
-      assigned =
-        if (assigned == null) scc
-        else assigned.unionAll(scc).localCheckpoint(true)
-      val drop = scc.select("node")
-      nodes = nodes.join(drop, Seq("node"), "left_anti").localCheckpoint(true)
-      remaining = remaining
-        .join(drop.withColumnRenamed("node", "s"), Seq("s"), "left_anti")
-        .join(drop.withColumnRenamed("node", "d"), Seq("d"), "left_anti")
-        .select("s", "d").localCheckpoint(true)
-    }
-    assigned.groupBy("color").agg(min(col("node")).as("scc_id"))
-      .join(assigned, Seq("color"))
-      .select(col("node"), col("scc_id"))
   }
 
   private[graft] def sccLabelsAndEdges(spark: SparkSession, sfDir: String)

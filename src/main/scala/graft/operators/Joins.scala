@@ -34,19 +34,12 @@ object Joins {
 
   /** Fact⋈fact shuffle join: orders ⋈ lineitem on orderkey, revenue per
     * order priority. */
-  def joinShuffleLarge(spark: SparkSession, sfDir: String): DataFrame =
-    orders(spark, sfDir)
-      .join(lineitem(spark, sfDir), col("o_orderkey") === col("l_orderkey"))
-      .groupBy("o_orderpriority")
-      .agg(sum(discPrice).cast("decimal(18,2)").cast("double").as("revenue"),
-        count(lit(1)).as("n_lines"))
-      .orderBy("o_orderpriority")
-
-  val joinShuffleLargeOracle: String =
+  val joinShuffleLarge: Key = Key.sql("join_shuffle_large") { t =>
     s"""SELECT o_orderpriority, CAST(ROUND(SUM($revenueSqlFrag), 2) AS DOUBLE) AS revenue,
        |  COUNT(*) AS n_lines
-       |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+       |FROM ${t("orders")} JOIN ${t("lineitem")} ON o_orderkey = l_orderkey
        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin
+  }
 
   /** 5-way star join: fact table joined through to region, revenue per
     * region. Dims broadcast; only customer⋈orders⋈lineitem shuffle. */
@@ -71,72 +64,39 @@ object Joins {
        |GROUP BY r_name ORDER BY r_name""".stripMargin
 
   /** LEFT OUTER: every customer, order count including zero. */
-  def joinLeftOuter(spark: SparkSession, sfDir: String): DataFrame =
-    customer(spark, sfDir)
-      .join(orders(spark, sfDir), col("c_custkey") === col("o_custkey"), "left")
-      .groupBy("c_custkey")
-      .agg(count(col("o_orderkey")).as("n_orders"))
-      .orderBy("c_custkey")
-
-  val joinLeftOuterOracle: String =
-    """SELECT c_custkey, COUNT(o_orderkey) AS n_orders FROM customer
-      |LEFT JOIN orders ON c_custkey = o_custkey
-      |GROUP BY c_custkey ORDER BY c_custkey""".stripMargin
-
-  /** FULL OUTER over two overlapping order slices. */
-  def joinFullOuter(spark: SparkSession, sfDir: String): DataFrame = {
-    val o = orders(spark, sfDir)
-    val a = o.filter(col("o_orderstatus") === "O")
-      .select(col("o_orderkey").as("ka"), col("o_totalprice").as("price_open"))
-    val b = o.filter(col("o_totalprice") > 400000)
-      .select(col("o_orderkey").as("kb"), col("o_totalprice").as("price_big"))
-    a.join(b, col("ka") === col("kb"), "full_outer")
-      .select(coalesce(col("ka"), col("kb")).as("okey"),
-        col("price_open"), col("price_big"))
-      .orderBy("okey")
+  val joinLeftOuter: Key = Key.sql("join_left_outer") { t =>
+    s"""SELECT c_custkey, COUNT(o_orderkey) AS n_orders FROM ${t("customer")}
+       |LEFT JOIN ${t("orders")} ON c_custkey = o_custkey
+       |GROUP BY c_custkey ORDER BY c_custkey""".stripMargin
   }
 
-  val joinFullOuterOracle: String =
-    """SELECT COALESCE(ka, kb) AS okey, price_open, price_big FROM
-      |  (SELECT o_orderkey AS ka, o_totalprice AS price_open FROM orders WHERE o_orderstatus = 'O') a
-      |FULL OUTER JOIN
-      |  (SELECT o_orderkey AS kb, o_totalprice AS price_big FROM orders WHERE o_totalprice > 400000) b
-      |ON ka = kb ORDER BY okey""".stripMargin
+  /** FULL OUTER over two overlapping order slices. */
+  val joinFullOuter: Key = Key.sql("join_full_outer") { t =>
+    s"""SELECT COALESCE(ka, kb) AS okey, price_open, price_big FROM
+       |  (SELECT o_orderkey AS ka, o_totalprice AS price_open FROM ${t("orders")} WHERE o_orderstatus = 'O') a
+       |FULL OUTER JOIN
+       |  (SELECT o_orderkey AS kb, o_totalprice AS price_big FROM ${t("orders")} WHERE o_totalprice > 400000) b
+       |ON ka = kb ORDER BY okey""".stripMargin
+  }
 
   /** LEFT SEMI (= EXISTS): customers with at least one finalized order. */
-  def joinSemi(spark: SparkSession, sfDir: String): DataFrame =
-    customer(spark, sfDir)
-      .join(orders(spark, sfDir).filter(col("o_orderstatus") === "F"),
-        col("c_custkey") === col("o_custkey"), "left_semi")
-      .select("c_custkey", "c_name")
-      .orderBy("c_custkey")
-
-  val joinSemiOracle: String =
-    """SELECT c_custkey, c_name FROM customer
-      |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_orderstatus = 'F')
-      |ORDER BY c_custkey""".stripMargin
+  val joinSemi: Key = Key.sql("join_semi") { t =>
+    s"""SELECT c_custkey, c_name FROM ${t("customer")}
+       |WHERE EXISTS (SELECT 1 FROM ${t("orders")} WHERE o_custkey = c_custkey AND o_orderstatus = 'F')
+       |ORDER BY c_custkey""".stripMargin
+  }
 
   /** LEFT ANTI (= NOT EXISTS): customers with no order above 400k. */
-  def joinAnti(spark: SparkSession, sfDir: String): DataFrame =
-    customer(spark, sfDir)
-      .join(orders(spark, sfDir).filter(col("o_totalprice") > 400000),
-        col("c_custkey") === col("o_custkey"), "left_anti")
-      .select("c_custkey", "c_name")
-      .orderBy("c_custkey")
-
-  val joinAntiOracle: String =
-    """SELECT c_custkey, c_name FROM customer
-      |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 400000)
-      |ORDER BY c_custkey""".stripMargin
+  val joinAnti: Key = Key.sql("join_anti") { t =>
+    s"""SELECT c_custkey, c_name FROM ${t("customer")}
+       |WHERE NOT EXISTS (SELECT 1 FROM ${t("orders")} WHERE o_custkey = c_custkey AND o_totalprice > 400000)
+       |ORDER BY c_custkey""".stripMargin
+  }
 
   /** Cartesian product of the two smallest dims. */
-  def joinCross(spark: SparkSession, sfDir: String): DataFrame =
-    region(spark, sfDir).select("r_name")
-      .crossJoin(nation(spark, sfDir).select("n_name"))
-      .orderBy("r_name", "n_name")
-
-  val joinCrossOracle: String =
-    "SELECT r_name, n_name FROM region CROSS JOIN nation ORDER BY r_name, n_name"
+  val joinCross: Key = Key.sql("join_cross") { t =>
+    s"SELECT r_name, n_name FROM ${t("region")} CROSS JOIN ${t("nation")} ORDER BY r_name, n_name"
+  }
 
   /** Non-equi theta join on a range predicate (dims only → bounded BNLJ;
     * supplier side broadcast).
@@ -533,13 +493,13 @@ object Joins {
     Key("join_bucketed", joinBucketed, joinBucketedOracle),
     Key("join_skew_salted", joinSkewSalted, joinSkewSaltedOracle),
     Key("join_broadcast", joinBroadcast, joinBroadcastOracle),
-    Key("join_shuffle_large", joinShuffleLarge, joinShuffleLargeOracle),
+    joinShuffleLarge,
     Key("join_star_5way", joinStar5way, joinStar5wayOracle),
-    Key("join_left_outer", joinLeftOuter, joinLeftOuterOracle),
-    Key("join_full_outer", joinFullOuter, joinFullOuterOracle),
-    Key("join_semi", joinSemi, joinSemiOracle),
-    Key("join_anti", joinAnti, joinAntiOracle),
-    Key("join_cross", joinCross, joinCrossOracle),
+    joinLeftOuter,
+    joinFullOuter,
+    joinSemi,
+    joinAnti,
+    joinCross,
     Key("join_theta_range", joinThetaRange, joinThetaRangeOracle),
     Key("join_asof", joinAsof, joinAsofOracle),
     Key("join_asof_forward", joinAsofForward, joinAsofForwardOracle),

@@ -84,49 +84,28 @@ object Scalars {
 
   /** round / abs / ceil / floor / power / sqrt / ln / mod. Exact decimal
     * product for the rounded money term; r6 for irrational outputs. */
-  def mathFuncs(spark: SparkSession, sfDir: String): DataFrame =
-    lineitem(spark, sfDir)
-      .select(col("l_orderkey"), col("l_linenumber"),
-        (col("l_extendedprice").cast("decimal(12,2)") * col("l_discount").cast("decimal(8,6)"))
-          .cast("decimal(18,4)").cast("double").as("disc_amount"),
-        abs(col("l_quantity") - 25).as("qty_dev"),
-        ceil(col("l_extendedprice") / 1000).as("price_k_ceil"),
-        floor(col("l_extendedprice") / 1000).as("price_k_floor"),
-        r6(pow(col("l_quantity"), 2)).as("qty_sq"),
-        r6(sqrt(col("l_extendedprice"))).as("price_sqrt"),
-        r6(log(col("l_extendedprice"))).as("price_ln"),
-        (col("l_orderkey") % 7).as("okey_mod7"))
-      .orderBy("l_orderkey", "l_linenumber")
-
-  val mathFuncsOracle: String =
-    """SELECT l_orderkey, l_linenumber,
-      |  CAST(CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_discount AS DECIMAL(8,6)) AS DECIMAL(18,4)) AS DOUBLE) AS disc_amount,
-      |  ABS(l_quantity - 25) AS qty_dev,
-      |  CAST(CEIL(l_extendedprice / 1000) AS BIGINT) AS price_k_ceil,
-      |  CAST(FLOOR(l_extendedprice / 1000) AS BIGINT) AS price_k_floor,
-      |  ROUND(POWER(l_quantity, 2), 6) AS qty_sq,
-      |  ROUND(SQRT(l_extendedprice), 6) AS price_sqrt,
-      |  ROUND(LN(l_extendedprice), 6) AS price_ln,
-      |  l_orderkey % 7 AS okey_mod7
-      |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin
+  val mathFuncs: Key = Key.sql("math_funcs") { t =>
+    s"""SELECT l_orderkey, l_linenumber,
+       |  CAST(CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_discount AS DECIMAL(8,6)) AS DECIMAL(18,4)) AS DOUBLE) AS disc_amount,
+       |  ABS(l_quantity - 25) AS qty_dev,
+       |  CAST(CEIL(l_extendedprice / 1000) AS BIGINT) AS price_k_ceil,
+       |  CAST(FLOOR(l_extendedprice / 1000) AS BIGINT) AS price_k_floor,
+       |  ROUND(POWER(l_quantity, 2), 6) AS qty_sq,
+       |  ROUND(SQRT(l_extendedprice), 6) AS price_sqrt,
+       |  ROUND(LN(l_extendedprice), 6) AS price_ln,
+       |  l_orderkey % 7 AS okey_mod7
+       |FROM ${t("lineitem")} ORDER BY l_orderkey, l_linenumber""".stripMargin
+  }
 
   /** least / greatest / coalesce / nullif / CASE combos. */
-  def condFuncs(spark: SparkSession, sfDir: String): DataFrame =
-    orders(spark, sfDir)
-      .select(col("o_orderkey"),
-        least(col("o_totalprice"), lit(250000.0)).as("capped"),
-        greatest(col("o_totalprice"), lit(250000.0)).as("floored"),
-        coalesce(nullif(col("o_orderstatus"), lit("O")), lit("open")).as("status_or_open"),
-        when(col("o_totalprice") > 200000, "big").otherwise("small").as("bucket"))
-      .orderBy("o_orderkey")
-
-  val condFuncsOracle: String =
-    """SELECT o_orderkey,
-      |  LEAST(o_totalprice, 250000.0) AS capped,
-      |  GREATEST(o_totalprice, 250000.0) AS floored,
-      |  COALESCE(NULLIF(o_orderstatus, 'O'), 'open') AS status_or_open,
-      |  CASE WHEN o_totalprice > 200000 THEN 'big' ELSE 'small' END AS bucket
-      |FROM orders ORDER BY o_orderkey""".stripMargin
+  val condFuncs: Key = Key.sql("cond_funcs") { t =>
+    s"""SELECT o_orderkey,
+       |  LEAST(o_totalprice, 250000.0) AS capped,
+       |  GREATEST(o_totalprice, 250000.0) AS floored,
+       |  COALESCE(NULLIF(o_orderstatus, 'O'), 'open') AS status_or_open,
+       |  CASE WHEN o_totalprice > 200000 THEN 'big' ELSE 'small' END AS bucket
+       |FROM ${t("orders")} ORDER BY o_orderkey""".stripMargin
+  }
 
   /** Array / higher-order functions over the embedding vectors — dot
     * products and norms in pure Catalyst (no UDF), explicit double
@@ -190,45 +169,22 @@ object Scalars {
   /** MapType surface: build a map, probe it (element_at/size), and
     * explode it back to rows (row output keeps the oracle engine-
     * agnostic — map render formats differ between engines). */
-  def mapFuncs(spark: SparkSession, sfDir: String): DataFrame =
-    orders(spark, sfDir)
-      .withColumn("m", map(
-        lit("status"), col("o_orderstatus"),
-        lit("priority"), col("o_orderpriority")))
-      .select(col("o_orderkey"),
-        explode(col("m")).as(Seq("k", "v")),
-        size(col("m")).as("n_keys"),
-        element_at(col("m"), "status").as("status_via_map"))
-      .select("o_orderkey", "k", "v", "n_keys", "status_via_map")
-      .orderBy("o_orderkey", "k")
-
-  val mapFuncsOracle: String =
-    """SELECT o_orderkey, k, v, 2 AS n_keys, o_orderstatus AS status_via_map FROM (
-      |  SELECT o_orderkey, o_orderstatus, 'status' AS k, o_orderstatus AS v FROM orders
-      |  UNION ALL
-      |  SELECT o_orderkey, o_orderstatus, 'priority', o_orderpriority FROM orders)
-      |ORDER BY o_orderkey, k""".stripMargin
+  val mapFuncs: Key = Key.sql("map_funcs") { t =>
+    s"""SELECT o_orderkey, k, v, 2 AS n_keys, o_orderstatus AS status_via_map FROM (
+       |  SELECT o_orderkey, o_orderstatus, 'status' AS k, o_orderstatus AS v FROM ${t("orders")}
+       |  UNION ALL
+       |  SELECT o_orderkey, o_orderstatus, 'priority', o_orderpriority FROM ${t("orders")})
+       |ORDER BY o_orderkey, k""".stripMargin
+  }
 
   /** Nested StructType surface: build nested structs, access dotted
     * fields, and serialize a flat struct to JSON text. */
-  def structFuncs(spark: SparkSession, sfDir: String): DataFrame =
-    lineitem(spark, sfDir)
-      .withColumn("rec", struct(
-        col("l_orderkey").as("okey"),
-        struct(col("l_quantity").as("qty"), col("l_extendedprice").as("price")).as("amounts")))
-      .select(
-        col("rec.okey").as("okey"),
-        col("l_linenumber").as("line"),
-        col("rec.amounts.qty").as("qty"),
-        col("rec.amounts.price").as("price"),
-        to_json(struct(col("l_orderkey").as("okey"), col("l_returnflag").as("flag"))).as("js"))
-      .orderBy("okey", "line")
-
-  val structFuncsOracle: String =
-    """SELECT l_orderkey AS okey, l_linenumber AS line, l_quantity AS qty,
-      |  l_extendedprice AS price,
-      |  '{"okey":' || l_orderkey || ',"flag":"' || l_returnflag || '"}' AS js
-      |FROM lineitem ORDER BY okey, line""".stripMargin
+  val structFuncs: Key = Key.sql("struct_funcs") { t =>
+    s"""SELECT l_orderkey AS okey, l_linenumber AS line, l_quantity AS qty,
+       |  l_extendedprice AS price,
+       |  '{"okey":' || l_orderkey || ',"flag":"' || l_returnflag || '"}' AS js
+       |FROM ${t("lineitem")} ORDER BY okey, line""".stripMargin
+  }
 
   /** BITWISE SURFACE — AND/OR/XOR, shifts, popcount: the ops flag
     * columns, bitmap encodings, and hash mixing lean on. All exact
@@ -292,13 +248,13 @@ object Scalars {
   val keys: Seq[Key] = Seq(
     Key("str_fuzzy_match", strFuzzyMatch, strFuzzyMatchOracle),
     Key("scalar_bitwise_funcs", bitwiseFuncs, bitwiseFuncsOracle),
-    Key("map_funcs", mapFuncs, mapFuncsOracle),
-    Key("struct_funcs", structFuncs, structFuncsOracle),
+    mapFuncs,
+    structFuncs,
     Key("str_funcs", strFuncs, strFuncsOracle),
     Key("str_regexp", strRegexp, strRegexpOracle),
     Key("date_funcs", dateFuncs, dateFuncsOracle),
-    Key("math_funcs", mathFuncs, mathFuncsOracle),
-    Key("cond_funcs", condFuncs, condFuncsOracle),
+    mathFuncs,
+    condFuncs,
     Key("array_funcs", arrayFuncs, arrayFuncsOracle),
     Key("json_funcs", jsonFuncs, jsonFuncsOracle),
     Key("str_split_explode", strSplitExplode, strSplitExplodeOracle))

@@ -16,39 +16,21 @@ import graft.sources.Tables._
 object Scans {
 
   /** Projection + rename + computed column; exercises column pruning. */
-  def scanProject(spark: SparkSession, sfDir: String): DataFrame =
-    lineitem(spark, sfDir)
-      .select(
-        col("l_orderkey").as("okey"),
-        col("l_linenumber").as("line"),
-        col("l_quantity").as("qty"),
-        (col("l_extendedprice").cast("decimal(12,2)") *
-          (lit(1).cast("decimal(8,6)") - col("l_discount").cast("decimal(8,6)")))
-          .cast("decimal(18,4)").cast("double").as("disc_price"))
-      .orderBy("okey", "line")
-
-  val scanProjectOracle: String =
-    """SELECT l_orderkey AS okey, l_linenumber AS line, l_quantity AS qty,
-      |  CAST(CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(8,6)) - CAST(l_discount AS DECIMAL(8,6))) AS DECIMAL(18,4)) AS DOUBLE) AS disc_price
-      |FROM lineitem ORDER BY okey, line""".stripMargin
+  val scanProject: Key = Key.sql("scan_project") { t =>
+    s"""SELECT l_orderkey AS okey, l_linenumber AS line, l_quantity AS qty,
+       |  CAST(CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(8,6)) - CAST(l_discount AS DECIMAL(8,6))) AS DECIMAL(18,4)) AS DOUBLE) AS disc_price
+       |FROM ${t("lineitem")} ORDER BY okey, line""".stripMargin
+  }
 
   /** TPC-H Q6-shaped filter; predicates reach the parquet reader
     * (`PushedFilters` in explain) → row-group skip at scale. */
-  def scanFilterPushdown(spark: SparkSession, sfDir: String): DataFrame =
-    lineitem(spark, sfDir)
-      .filter(col("l_shipdate") >= lit("1997-01-01").cast("timestamp") &&
-        col("l_shipdate") < lit("1998-01-01").cast("timestamp") &&
-        col("l_discount").between(0.02, 0.06) &&
-        col("l_quantity") < 24)
-      .select("l_orderkey", "l_linenumber", "l_quantity", "l_discount", "l_shipdate")
-      .orderBy("l_orderkey", "l_linenumber")
-
-  val scanFilterPushdownOracle: String =
-    """SELECT l_orderkey, l_linenumber, l_quantity, l_discount, l_shipdate
-      |FROM lineitem
-      |WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
-      |  AND l_discount BETWEEN 0.02 AND 0.06 AND l_quantity < 24
-      |ORDER BY l_orderkey, l_linenumber""".stripMargin
+  val scanFilterPushdown: Key = Key.sql("scan_filter_pushdown") { t =>
+    s"""SELECT l_orderkey, l_linenumber, l_quantity, l_discount, l_shipdate
+       |FROM ${t("lineitem")}
+       |WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
+       |  AND l_discount BETWEEN 0.02 AND 0.06 AND l_quantity < 24
+       |ORDER BY l_orderkey, l_linenumber""".stripMargin
+  }
 
   /** events read through the ns-loader (SURVEY.md §1.3): Spark 4 rejects
     * TIMESTAMP(NANOS) parquet, so we read nanos as long and truncate to
@@ -873,8 +855,8 @@ object Scans {
     Key("export_partition_overwrite", exportPartitionOverwrite, exportPartitionOverwriteOracle),
     Key("export_sized_files", exportSizedFiles, exportSizedFilesOracle),
     Key("export_zorder", exportZorder, exportZorderOracle),
-    Key("scan_project", scanProject, scanProjectOracle),
-    Key("scan_filter_pushdown", scanFilterPushdown, scanFilterPushdownOracle),
+    scanProject,
+    scanFilterPushdown,
     Key("scan_events_ns", scanEventsNs, scanEventsNsOracle),
     Key("scan_kv_model", scanKvModel, scanKvModelOracle),
     Key("export_manifest", exportManifest, exportManifestOracle))

@@ -15,46 +15,25 @@ import graft.sources.Tables._
 object Windows {
 
   /** Top-3 orders per customer by totalprice (rank-filter pattern). */
-  def winTopkPerGroup(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Window.partitionBy("o_custkey")
-      .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-    orders(spark, sfDir)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .select("o_custkey", "o_orderkey", "o_totalprice", "rn")
-      .orderBy("o_custkey", "rn")
+  val winTopkPerGroup: Key = Key.sql("win_topk_per_group") { t =>
+    s"""SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
+       |  SELECT o_custkey, o_orderkey, o_totalprice,
+       |    ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
+       |  FROM ${t("orders")})
+       |WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin
   }
-
-  val winTopkPerGroupOracle: String =
-    """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
-      |  SELECT o_custkey, o_orderkey, o_totalprice,
-      |    ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
-      |  FROM orders)
-      |WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin
 
   /** rank / dense_rank / percent_rank over a tie-capable ordering, plus
     * ntile(4) over a total ordering (ntile needs one to be stable). */
-  def winRankDenseNtile(spark: SparkSession, sfDir: String): DataFrame = {
-    val wTies = Window.partitionBy("p_brand").orderBy(col("p_retailprice").desc)
-    val wTotal = Window.partitionBy("p_brand")
-      .orderBy(col("p_retailprice").desc, col("p_partkey").asc)
-    part(spark, sfDir)
-      .select(col("p_partkey"), col("p_brand"), col("p_retailprice"),
-        rank().over(wTies).as("rnk"),
-        dense_rank().over(wTies).as("drnk"),
-        r6(percent_rank().over(wTies)).as("pct"),
-        ntile(4).over(wTotal).as("quartile"))
-      .orderBy("p_partkey")
+  val winRankDenseNtile: Key = Key.sql("win_rank_dense_ntile") { t =>
+    s"""SELECT p_partkey, p_brand, p_retailprice,
+       |  RANK() OVER w1 AS rnk, DENSE_RANK() OVER w1 AS drnk,
+       |  ROUND(PERCENT_RANK() OVER w1, 6) AS pct,
+       |  NTILE(4) OVER (PARTITION BY p_brand ORDER BY p_retailprice DESC, p_partkey ASC) AS quartile
+       |FROM ${t("part")}
+       |WINDOW w1 AS (PARTITION BY p_brand ORDER BY p_retailprice DESC)
+       |ORDER BY p_partkey""".stripMargin
   }
-
-  val winRankDenseNtileOracle: String =
-    """SELECT p_partkey, p_brand, p_retailprice,
-      |  RANK() OVER w1 AS rnk, DENSE_RANK() OVER w1 AS drnk,
-      |  ROUND(PERCENT_RANK() OVER w1, 6) AS pct,
-      |  NTILE(4) OVER (PARTITION BY p_brand ORDER BY p_retailprice DESC, p_partkey ASC) AS quartile
-      |FROM part
-      |WINDOW w1 AS (PARTITION BY p_brand ORDER BY p_retailprice DESC)
-      |ORDER BY p_partkey""".stripMargin
 
   /** Per-user inter-event gap (lag) and next event type (lead). */
   def winLagLead(spark: SparkSession, sfDir: String): DataFrame = {
@@ -74,7 +53,6 @@ object Windows {
       |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
       |ORDER BY event_id""".stripMargin
 
-  /** Running revenue per customer in order-date order. */
   /** VALUE-BASED RANGE FRAME — the one window-frame family the rest of
     * the window keys don't touch: every other frame here is ROWS
     * (positional); a RANGE frame is defined by the ORDER-BY VALUE, so
@@ -110,21 +88,14 @@ object Windows {
       |    RANGE BETWEEN 30 PRECEDING AND CURRENT ROW) AS BIGINT) AS trailing_30d_cents
       |FROM o ORDER BY o_orderkey""".stripMargin
 
-  def winRunningSum(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    orders(spark, sfDir)
-      .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
-        sum(dec(col("o_totalprice"))).over(w).cast("decimal(18,2)").cast("double").as("running_total"))
-      .orderBy("o_custkey", "o_orderkey")
+  /** Running revenue per customer in order-date order. */
+  val winRunningSum: Key = Key.sql("win_running_sum") { t =>
+    s"""SELECT o_custkey, o_orderkey, o_orderdate,
+       |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
+       |    PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+       |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_total
+       |FROM ${t("orders")} ORDER BY o_custkey, o_orderkey""".stripMargin
   }
-
-  val winRunningSumOracle: String =
-    """SELECT o_custkey, o_orderkey, o_orderdate,
-      |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
-      |    PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-      |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_total
-      |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin
 
   /** Per-user moving sum of event value over a trailing 1-hour RANGE
     * frame keyed on integer epoch seconds (tie rows are frame peers, so
@@ -148,49 +119,30 @@ object Windows {
 
   /** first/last order date per customer alongside every row (full-extent
     * frame). */
-  def winFirstLast(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    orders(spark, sfDir)
-      .select(col("o_orderkey"), col("o_custkey"),
-        first(col("o_orderdate")).over(w).as("first_date"),
-        last(col("o_orderdate")).over(w).as("last_date"))
-      .orderBy("o_orderkey")
+  val winFirstLast: Key = Key.sql("win_first_last") { t =>
+    s"""SELECT o_orderkey, o_custkey,
+       |  FIRST_VALUE(o_orderdate) OVER w AS first_date,
+       |  LAST_VALUE(o_orderdate) OVER w AS last_date
+       |FROM ${t("orders")}
+       |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+       |             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+       |ORDER BY o_orderkey""".stripMargin
   }
-
-  val winFirstLastOracle: String =
-    """SELECT o_orderkey, o_custkey,
-      |  FIRST_VALUE(o_orderdate) OVER w AS first_date,
-      |  LAST_VALUE(o_orderdate) OVER w AS last_date
-      |FROM orders
-      |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-      |             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-      |ORDER BY o_orderkey""".stripMargin
 
   /** cume_dist (an exact rational — rows≤current / partition rows — so
     * ROUND 6 is bit-stable) and nth_value(2) over a total order: the
     * remaining ranked-window surface rank/dense_rank/percent_rank/ntile
     * don't cover. */
-  def winCumeNth(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Window.partitionBy("p_brand")
-      .orderBy(col("p_retailprice").desc, col("p_partkey").asc)
-    val wFull = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    part(spark, sfDir)
-      .select(col("p_partkey"), col("p_brand"), col("p_retailprice"),
-        r6(cume_dist().over(w)).as("cd"),
-        nth_value(col("p_partkey"), 2).over(wFull).as("second_partkey"))
-      .orderBy("p_partkey")
+  val winCumeNth: Key = Key.sql("win_cume_nth") { t =>
+    s"""SELECT p_partkey, p_brand, p_retailprice,
+       |  ROUND(CUME_DIST() OVER w, 6) AS cd,
+       |  NTH_VALUE(p_partkey, 2) OVER (PARTITION BY p_brand
+       |    ORDER BY p_retailprice DESC, p_partkey ASC
+       |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS second_partkey
+       |FROM ${t("part")}
+       |WINDOW w AS (PARTITION BY p_brand ORDER BY p_retailprice DESC, p_partkey ASC)
+       |ORDER BY p_partkey""".stripMargin
   }
-
-  val winCumeNthOracle: String =
-    """SELECT p_partkey, p_brand, p_retailprice,
-      |  ROUND(CUME_DIST() OVER w, 6) AS cd,
-      |  NTH_VALUE(p_partkey, 2) OVER (PARTITION BY p_brand
-      |    ORDER BY p_retailprice DESC, p_partkey ASC
-      |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS second_partkey
-      |FROM part
-      |WINDOW w AS (PARTITION BY p_brand ORDER BY p_retailprice DESC, p_partkey ASC)
-      |ORDER BY p_partkey""".stripMargin
 
   /** INTERVAL COALESCING (gaps-and-islands) — the range-union operator
     * every temporal engine ships (merge overlapping validity intervals):
@@ -253,24 +205,15 @@ object Windows {
     * unordered full-partition window (associative sum — frame order
     * irrelevant), ratio is exact-int-to-double division under ROUND 6.
     * One customer-keyed shuffle, no self-join against the aggregate. */
-  def winRatioToReport(spark: SparkSession, sfDir: String): DataFrame = {
-    val all = Window.partitionBy("o_custkey")
-    orders(spark, sfDir)
-      .withColumn("cents", expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"))
-      .withColumn("total", sum(col("cents")).over(all))
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-        r6(col("cents").cast("double") / col("total").cast("double")).as("spend_share"))
-      .orderBy("o_orderkey")
+  val winRatioToReport: Key = Key.sql("win_ratio_to_report") { t =>
+    s"""SELECT o_orderkey, o_custkey, o_totalprice,
+       |  ROUND(CAST(cents AS DOUBLE) / CAST(SUM(cents)
+       |    OVER (PARTITION BY o_custkey) AS DOUBLE), 6) AS spend_share
+       |FROM (SELECT o_orderkey, o_custkey, o_totalprice,
+       |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+       |  FROM ${t("orders")})
+       |ORDER BY o_orderkey""".stripMargin
   }
-
-  val winRatioToReportOracle: String =
-    """SELECT o_orderkey, o_custkey, o_totalprice,
-      |  ROUND(CAST(cents AS DOUBLE) / CAST(SUM(cents)
-      |    OVER (PARTITION BY o_custkey) AS DOUBLE), 6) AS spend_share
-      |FROM (SELECT o_orderkey, o_custkey, o_totalprice,
-      |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-      |  FROM orders)
-      |ORDER BY o_orderkey""".stripMargin
 
   /** ACTIVITY STREAKS — longest run of CONSECUTIVE active days per
     * user (the engagement metric every product dashboard carries):
@@ -390,51 +333,36 @@ object Windows {
     * brand-keyed shuffle + per-partition sort — at 100 TB the frame
     * is the textbook single-pass skyline sweep per group. Prices
     * compare as exact cents. */
-  def winSkyline(spark: SparkSession, sfDir: String): DataFrame = {
-    val priced = part(spark, sfDir)
-      .select(col("p_brand"), col("p_size"),
-        expr("CAST(CAST(p_retailprice AS DECIMAL(18,2)) * 100 AS BIGINT)").as("price_cents"))
-    val smaller = Window.partitionBy("p_brand").orderBy(col("p_size").asc)
-      .rangeBetween(Window.unboundedPreceding, -1)
-    val sameSize = Window.partitionBy("p_brand", "p_size")
-    priced
-      .withColumn("best_smaller", max(col("price_cents")).over(smaller))
-      .withColumn("best_same", max(col("price_cents")).over(sameSize))
-      .filter((col("best_smaller").isNull || col("best_smaller") < col("price_cents")) &&
-        col("price_cents") === col("best_same"))
-      .select("p_brand", "p_size", "price_cents")
-      .orderBy("p_brand", "p_size", "price_cents")
+  val winSkyline: Key = Key.sql("win_skyline") { t =>
+    s"""WITH priced AS (SELECT p_brand, p_size,
+       |    CAST(CAST(p_retailprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS price_cents
+       |  FROM ${t("part")}),
+       |w AS (SELECT p_brand, p_size, price_cents,
+       |    MAX(price_cents) OVER (PARTITION BY p_brand ORDER BY p_size
+       |      RANGE BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS best_smaller,
+       |    MAX(price_cents) OVER (PARTITION BY p_brand, p_size) AS best_same
+       |  FROM priced)
+       |SELECT p_brand, p_size, price_cents FROM w
+       |WHERE (best_smaller IS NULL OR best_smaller < price_cents)
+       |  AND price_cents = best_same
+       |ORDER BY p_brand, p_size, price_cents""".stripMargin
   }
 
-  val winSkylineOracle: String =
-    """WITH priced AS (SELECT p_brand, p_size,
-      |    CAST(CAST(p_retailprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS price_cents
-      |  FROM part),
-      |w AS (SELECT p_brand, p_size, price_cents,
-      |    MAX(price_cents) OVER (PARTITION BY p_brand ORDER BY p_size
-      |      RANGE BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS best_smaller,
-      |    MAX(price_cents) OVER (PARTITION BY p_brand, p_size) AS best_same
-      |  FROM priced)
-      |SELECT p_brand, p_size, price_cents FROM w
-      |WHERE (best_smaller IS NULL OR best_smaller < price_cents)
-      |  AND price_cents = best_same
-      |ORDER BY p_brand, p_size, price_cents""".stripMargin
-
   val keys: Seq[Key] = Seq(
-    Key("win_skyline", winSkyline, winSkylineOracle),
+    winSkyline,
     Key("win_rank_delta", winRankDelta, winRankDeltaOracle),
     Key("win_sliding_median", winSlidingMedian, winSlidingMedianOracle),
     Key("win_streaks", winStreaks, winStreaksOracle),
-    Key("win_ratio_to_report", winRatioToReport, winRatioToReportOracle),
+    winRatioToReport,
     Key("win_interval_merge", winIntervalMerge, winIntervalMergeOracle),
-    Key("win_cume_nth", winCumeNth, winCumeNthOracle),
-    Key("win_topk_per_group", winTopkPerGroup, winTopkPerGroupOracle),
-    Key("win_rank_dense_ntile", winRankDenseNtile, winRankDenseNtileOracle),
+    winCumeNth,
+    winTopkPerGroup,
+    winRankDenseNtile,
     Key("win_lag_lead", winLagLead, winLagLeadOracle),
-    Key("win_running_sum", winRunningSum, winRunningSumOracle),
+    winRunningSum,
     Key("win_range_frame", winRangeFrame, winRangeFrameOracle),
     Key("win_moving_range", winMovingRange, winMovingRangeOracle),
-    Key("win_first_last", winFirstLast, winFirstLastOracle))
+    winFirstLast)
 
   val queries: Map[String, Key.Run] = Key.queries(keys)
 }

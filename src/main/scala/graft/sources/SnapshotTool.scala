@@ -6,22 +6,8 @@ import org.apache.spark.sql.SparkSession
   * user-facing surface (SURVEY.md §2.A R8: a Hadoop `Tool`-style main
   * with action flags; §3.1: parse flags → dispatch on action). A user
   * of the reference drives create/export/restore/delete/list from a
-  * command line; this gives the Spark engine the same entry point:
-  *
-  *   create  --root R --name N --source <parquet cells dir> [--created-at EPOCH_SEC]
-  *   export  --root R --name N --dest <second root> [--mappers N] [--bandwidth MBps] [--overwrite true] [--force true]
-  *   import  --root R --name N --from <second root> [--mappers N] [--bandwidth MBps] [--overwrite true] [--force true]
-  *   restore --root R --name N [--out <parquet dir>]
-  *   verify  --root R --name N
-  *   info    --root R --name N
-  *   delete  --root R --name N
-  *   cleanup --root R --before EPOCH_SEC
-  *   clone   --root R --name N --to <new kv store dir>
-  *   compact --store <kv store dir> [--target N] [--retain-versions K] [--purge-tombstones true]
-  *   merge-regions --a <region store> --b <region store> --dest <merged store>
-  *   bulk-load --staging <staged dir> --store <kv store dir>
-  *   scrub   --store <kv store dir>
-  *   list    --root R
+  * command line; this gives the Spark engine the same entry point. The
+  * actions and their flags are listed once, in [[usage]].
   *
   * `run` returns a process exit code and is the unit under test; `main`
   * only forwards. Every data-touching action (create's write, export's
@@ -48,6 +34,14 @@ object SnapshotTool {
       def longFlag(k: String): Option[Long] = flags.get(k).map { v =>
         v.toLongOption.getOrElse(throw CliError(s"bad --$k: $v"))
       }
+      def intFlag(k: String, min: Int): Option[Int] = flags.get(k).map { v =>
+        v.toIntOption.filter(_ >= min).getOrElse(throw CliError(s"bad --$k: $v"))
+      }
+      def boolFlag(k: String): Boolean = flags.get(k).map {
+        case "true" => true
+        case "false" => false
+        case v => throw CliError(s"bad --$k: $v (true|false)")
+      }.getOrElse(false)
       action match {
         case "create" =>
           KvSnapshots.create(spark.read.parquet(need("source")), need("root"), need("name"),
@@ -58,14 +52,10 @@ object SnapshotTool {
           // import (§2.A R3) IS export with the roots reversed — the
           // copy+verify machinery is direction-agnostic: the snapshot
           // comes FROM --from INTO --root (the local store root).
-          val mappers = flags.get("mappers").map { m =>
-            m.toIntOption.filter(_ > 0).getOrElse(throw CliError(s"bad --mappers: $m"))
-          }.getOrElse(32)
+          val mappers = intFlag("mappers", 1).getOrElse(32)
           // the reference's -bandwidth MB/s cap: each copy task paces
           // itself so the export can't saturate shared links (0 = off)
-          val bandwidth = flags.get("bandwidth").map { b =>
-            b.toIntOption.filter(_ >= 0).getOrElse(throw CliError(s"bad --bandwidth: $b"))
-          }.getOrElse(0)
+          val bandwidth = intFlag("bandwidth", 0).getOrElse(0)
           val (src, dst) =
             if (action == "export") (need("root"), need("dest"))
             else (need("from"), need("root"))
@@ -76,11 +66,6 @@ object SnapshotTool {
           // cleaned by export itself — and a re-export failure never
           // leaves the dest emptier than before, which a full
           // delete-then-export would (data-loss window).
-          def boolFlag(k: String): Boolean = flags.get(k).map {
-            case "true" => true
-            case "false" => false
-            case v => throw CliError(s"bad --$k: $v (true|false)")
-          }.getOrElse(false)
           val overwrite = boolFlag("overwrite")
           // the reference -overwrite's second half: recopy EVERY file
           // regardless of a matching destination digest (distrust-the-
@@ -115,9 +100,7 @@ object SnapshotTool {
           // the durable offset ledger (resumable — a re-run skips
           // committed batches), then apply the committed queue onto
           // --store with last-write-wins semantics
-          val batches = flags.get("batches").map { b =>
-            b.toIntOption.filter(_ > 0).getOrElse(throw CliError(s"bad --batches: $b"))
-          }.getOrElse(4)
+          val batches = intFlag("batches", 1).getOrElse(4)
           // ALL flags validate before the first side effect: a usage
           // error must never leave a half-shipped queue behind
           val (walDir, replDest, replStore) = (need("wal"), need("dest"), need("store"))
@@ -167,14 +150,9 @@ object SnapshotTool {
           // live store's accumulated small files into --target sorted,
           // rowkey-disjoint files. Operates on a STORE dir, not a
           // snapshot — snapshots stay immutable by definition.
-          val target = flags.get("target").map { t =>
-            t.toIntOption.filter(_ > 0).getOrElse(throw CliError(s"bad --target: $t"))
-          }.getOrElse(4)
-          val retain = flags.get("retain-versions").map { t =>
-            t.toIntOption.filter(_ > 0)
-              .getOrElse(throw CliError(s"bad --retain-versions: $t"))
-          }
-          val purge = flags.get("purge-tombstones").exists(_ == "true")
+          val target = intFlag("target", 1).getOrElse(4)
+          val retain = intFlag("retain-versions", 1)
+          val purge = boolFlag("purge-tombstones")
           val stats = KvCompaction.compact(spark, need("store"), target,
             retainVersions = retain, purgeTombstones = purge)
           ok(s"compacted ${need("store")}: ${stats.filesBefore} files -> " +

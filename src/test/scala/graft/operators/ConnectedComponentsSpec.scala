@@ -35,49 +35,3 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(rounds == 1)
   }
 }
-
-/** The forward–backward coloring SCC is the DOCUMENTED degradation path
-  * for `graph_scc`'s iterative-doubling closure (pair sets stop being
-  * node²-safe at billion-node scale). These tests EXECUTE that path:
-  * full ground truth on a 10,000-node graph the closure could not
-  * safely attack, and algorithm-vs-algorithm agreement on the real
-  * trade graph.
-  */
-class SccColoringSpec extends SparkSpec {
-
-  test("coloring SCC recovers ground truth on a 10,000-node synthetic graph") {
-    import spark.implicits._
-    // 2000 disjoint 5-cycles (the true SCCs) + acyclic inter-cluster
-    // tree edges pointing from HIGHER cluster ids to LOWER (children
-    // feed parents), so colors genuinely cross cluster boundaries and
-    // the outer peel loop must run multiple rounds. Ground truth:
-    // scc_id(v) = 5 * (v / 5), 2000 components of size 5.
-    val cycles = (0L until 10000L).map(v => (v, (v - v % 5) + (v + 1) % 5))
-    val tree = for {
-      k <- 0L until 2000L
-      j <- 1L to 4L
-      c = 4 * k + j if c < 2000L
-    } yield (5 * c, 5 * k)
-    val edges = (cycles ++ tree).toDF("s", "d")
-    val labels = Graph.sccByColoring(edges).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(labels.size == 10000, s"labeled ${labels.size} of 10000 nodes")
-    val wrong = labels.collect { case (v, id) if id != v - v % 5 => v }
-    assert(wrong.isEmpty, s"nodes labeled outside their 5-cycle: ${wrong.take(5)}")
-    assert(labels.values.toSet.size == 2000)
-  }
-
-  test("coloring SCC agrees with the iterative-doubling closure on the trade graph") {
-    val closure = run("graph_scc").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val coloring = Graph.sccByColoring(Graph.thresholdedEdges(spark, sf)).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // the closure key also labels edge-less nations (self pairs); the
-    // coloring path only sees nodes with an incident edge — compare on
-    // the overlap, which must agree exactly
-    assert(coloring.nonEmpty)
-    coloring.foreach { case (v, id) =>
-      assert(closure(v) == id, s"node $v: coloring=$id closure=${closure(v)}")
-    }
-  }
-}

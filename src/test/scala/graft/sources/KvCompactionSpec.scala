@@ -230,6 +230,19 @@ class KvCompactionSpec extends SparkSpec {
     assert(spark.read.format("graft-kv").load(store).count() == 1)
   }
 
+  test("the compact CLI rejects a non-boolean --purge-tombstones before touching the store") {
+    import spark.implicits._
+    val store = freshStore()
+    Seq((1L, "name", "alice"), (2L, "name", "bob")).toDF("rowkey", "qualifier", "value")
+      .write.format("graft-kv").option("path", store).mode("append").save()
+    Seq((1L, "name", KvCompaction.Tombstone)).toDF("rowkey", "qualifier", "value")
+      .write.format("graft-kv").option("path", store).mode("append").save()
+    val metaBefore = KvMeta.read(store)
+    assert(SnapshotTool.run(spark,
+      Seq("compact", "--store", store, "--purge-tombstones", "yes")) == 2)
+    assert(KvMeta.read(store) == metaBefore, "a usage error changed the store's index")
+  }
+
   test("a failed rewrite leaves the live store untouched (swap happens last)") {
     val store = freshStore()
     fragmented(store, 3)
