@@ -395,24 +395,14 @@ object Aggregations {
     * HashAggregate over a pruned 3-column scan: bin cardinality is
     * data-range/width (~60 bins), so at 100 TB the shuffle carries a
     * few hundred rows per mapper regardless of input size. */
-  def aggHistFixed(spark: SparkSession, sfDir: String): DataFrame =
-    lineitem(spark, sfDir)
-      .withColumn("bucket",
-        expr("CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) div 1000000"))
-      .groupBy("l_returnflag", "bucket")
-      .agg(count(lit(1)).as("n"),
-        sum(dec(col("l_extendedprice"))).cast("decimal(18,2)").cast("double").as("sum_price"))
-      .withColumn("bucket_lo", col("bucket") * 10000)
-      .select("l_returnflag", "bucket", "bucket_lo", "n", "sum_price")
-      .orderBy("l_returnflag", "bucket")
-
-  val aggHistFixedOracle: String =
-    """SELECT l_returnflag,
-      |  CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) // 1000000 AS bucket,
-      |  (CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) // 1000000) * 10000 AS bucket_lo,
-      |  COUNT(*) AS n,
-      |  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS sum_price
-      |FROM lineitem GROUP BY 1, 2, 3 ORDER BY 1, 2""".stripMargin
+  val aggHistFixed: Key = Key.sql("agg_hist_fixed") { t =>
+    s"""SELECT l_returnflag,
+       |  CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) ${t.idiv} 1000000 AS bucket,
+       |  (CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) ${t.idiv} 1000000) * 10000 AS bucket_lo,
+       |  COUNT(*) AS n,
+       |  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS sum_price
+       |FROM ${t("lineitem")} GROUP BY 1, 2, 3 ORDER BY 1, 2""".stripMargin
+  }
 
   /** EXACT SKEWNESS / EXCESS KURTOSIS per returnflag — the 3rd/4th
     * standardized moments every profiler ships (`skewness()`,
@@ -597,47 +587,20 @@ object Aggregations {
     * collapses to the contingency cells FIRST (one partial+final
     * aggregate); margins and the statistic are computed on the
     * cells×margins metadata, and both margin joins broadcast. */
-  def aggChiSquare(spark: SparkSession, sfDir: String): DataFrame = {
-    // N comes from the cells aggregate itself (one table pass total) —
-    // a driver-side count() would re-scan the fact table for a scalar
-    // the metadata-sized cells frame already holds
-    val cells = lineitem(spark, sfDir).groupBy("l_returnflag", "l_linestatus")
-      .agg(count(lit(1)).as("obs"))
-    val rowT = cells.groupBy("l_returnflag").agg(sum(col("obs")).as("row_tot"))
-    val colT = cells.groupBy("l_linestatus").agg(sum(col("obs")).as("col_tot"))
-    val tot = cells.agg(sum(col("obs")).as("n"))
-    cells
-      .join(broadcast(rowT), Seq("l_returnflag"))
-      .join(broadcast(colT), Seq("l_linestatus"))
-      .crossJoin(broadcast(tot))
-      // every product involving two data-sized counts goes through
-      // DECIMAL(38,0) BEFORE multiplying — obs·n and rt·ct alone pass
-      // Long.MAX near sf1 (review finding: BIGINT products here threw
-      // ARITHMETIC_OVERFLOW under ANSI at sf≥~0.5 while the HUGEINT
-      // oracle kept computing)
-      .withColumn("d", expr(
-        "CAST(obs AS DECIMAL(38,0)) * n - CAST(row_tot AS DECIMAL(38,0)) * col_tot"))
-      .select(col("l_returnflag"), col("l_linestatus"), col("obs"),
-        expr("CAST((CAST(row_tot AS DECIMAL(38,0)) * col_tot * 1000000) div n AS BIGINT)")
-          .as("exp_ppm"),
-        expr("CAST((1000000 * d * d) div (CAST(row_tot AS DECIMAL(38,0)) * col_tot * n) AS BIGINT)")
-          .as("contrib_ppm"))
-      .orderBy("l_returnflag", "l_linestatus")
+  val aggChiSquare: Key = Key.sql("agg_chi_square") { t =>
+    s"""WITH cells AS (SELECT l_returnflag, l_linestatus, COUNT(*) AS obs
+       |    FROM ${t("lineitem")} GROUP BY 1, 2),
+       |rt AS (SELECT l_returnflag, CAST(SUM(obs) AS BIGINT) AS row_tot FROM cells GROUP BY 1),
+       |ct AS (SELECT l_linestatus, CAST(SUM(obs) AS BIGINT) AS col_tot FROM cells GROUP BY 1),
+       |n AS (SELECT COUNT(*) AS n FROM ${t("lineitem")})
+       |SELECT c.l_returnflag, c.l_linestatus, c.obs,
+       |  CAST((CAST(row_tot AS ${t.int128}) * col_tot * 1000000) ${t.idiv} n.n AS BIGINT) AS exp_ppm,
+       |  CAST((1000000 * (CAST(c.obs AS ${t.int128})*n.n - CAST(row_tot AS ${t.int128})*col_tot)
+       |        * (CAST(c.obs AS ${t.int128})*n.n - CAST(row_tot AS ${t.int128})*col_tot))
+       |    ${t.idiv} (CAST(row_tot AS ${t.int128}) * col_tot * n.n) AS BIGINT) AS contrib_ppm
+       |FROM cells c JOIN rt USING (l_returnflag) JOIN ct USING (l_linestatus), n
+       |ORDER BY 1, 2""".stripMargin
   }
-
-  val aggChiSquareOracle: String =
-    """WITH cells AS (SELECT l_returnflag, l_linestatus, COUNT(*) AS obs
-      |    FROM lineitem GROUP BY 1, 2),
-      |rt AS (SELECT l_returnflag, CAST(SUM(obs) AS BIGINT) AS row_tot FROM cells GROUP BY 1),
-      |ct AS (SELECT l_linestatus, CAST(SUM(obs) AS BIGINT) AS col_tot FROM cells GROUP BY 1),
-      |n AS (SELECT COUNT(*) AS n FROM lineitem)
-      |SELECT c.l_returnflag, c.l_linestatus, c.obs,
-      |  CAST((CAST(row_tot AS HUGEINT) * col_tot * 1000000) // n.n AS BIGINT) AS exp_ppm,
-      |  CAST((1000000 * (CAST(c.obs AS HUGEINT)*n.n - CAST(row_tot AS HUGEINT)*col_tot)
-      |        * (CAST(c.obs AS HUGEINT)*n.n - CAST(row_tot AS HUGEINT)*col_tot))
-      |    // (CAST(row_tot AS HUGEINT) * col_tot * n.n) AS BIGINT) AS contrib_ppm
-      |FROM cells c JOIN rt USING (l_returnflag) JOIN ct USING (l_linestatus), n
-      |ORDER BY 1, 2""".stripMargin
 
   /** GINI COEFFICIENT — the inequality statistic behind "how
     * concentrated is spend / how skewed is a source mix" questions
@@ -652,35 +615,17 @@ object Aggregations {
     * 100 TB: one broadcast dim join, one segment-keyed sort window,
     * one partial+final aggregate — segment cardinality bounds the
     * output. */
-  def aggGini(spark: SparkSession, sfDir: String): DataFrame = {
-    val c = orders(spark, sfDir)
-      .join(broadcast(customer(spark, sfDir)), col("o_custkey") === col("c_custkey"))
-      .select(col("c_mktsegment").as("seg"),
-        expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)").as("cents"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("seg").orderBy("cents")
-    c.withColumn("rk", row_number().over(w))
-      .groupBy("seg")
-      // rk·cents is summed as DECIMAL(38,0): a BIGINT accumulator passes
-      // Long.MAX around n≈1.2M rows/segment (review finding — the
-      // HUGEINT-backed oracle SUM would keep computing while Spark threw)
-      .agg(count(lit(1)).as("n"), sum(col("cents")).as("s0"),
-        sum(expr("CAST(rk AS DECIMAL(38,0)) * cents")).as("s1"))
-      .select(col("seg"), col("n"),
-        expr("""CAST((1000000 * (2 * CAST(s1 AS DECIMAL(38,0)) - (n + 1) * CAST(s0 AS DECIMAL(38,0))))
-               | div (CAST(n AS DECIMAL(38,0)) * s0) AS BIGINT)""".stripMargin).as("gini_ppm"))
-      .orderBy("seg")
+  val aggGini: Key = Key.sql("agg_gini") { t =>
+    s"""WITH c AS (SELECT c_mktsegment AS seg,
+       |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+       |  FROM ${t("orders")} JOIN ${t("customer")} ON o_custkey = c_custkey),
+       |r AS (SELECT seg, cents, ROW_NUMBER() OVER (PARTITION BY seg ORDER BY cents) AS rk FROM c),
+       |g AS (SELECT seg, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(cents) AS BIGINT) AS s0,
+       |             CAST(SUM(rk * cents) AS ${t.int128}) AS s1 FROM r GROUP BY 1)
+       |SELECT seg, n, CAST((1000000 * (2 * s1 - (n + 1) * CAST(s0 AS ${t.int128})))
+       |  ${t.idiv} (CAST(n AS ${t.int128}) * s0) AS BIGINT) AS gini_ppm
+       |FROM g ORDER BY seg""".stripMargin
   }
-
-  val aggGiniOracle: String =
-    """WITH c AS (SELECT c_mktsegment AS seg,
-      |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-      |  FROM orders JOIN customer ON o_custkey = c_custkey),
-      |r AS (SELECT seg, cents, ROW_NUMBER() OVER (PARTITION BY seg ORDER BY cents) AS rk FROM c),
-      |g AS (SELECT seg, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(cents) AS BIGINT) AS s0,
-      |             CAST(SUM(rk * cents) AS HUGEINT) AS s1 FROM r GROUP BY 1)
-      |SELECT seg, n, CAST((1000000 * (2 * s1 - (n + 1) * CAST(s0 AS HUGEINT)))
-      |  // (CAST(n AS HUGEINT) * s0) AS BIGINT) AS gini_ppm
-      |FROM g ORDER BY seg""".stripMargin
 
   /** BENFORD FIRST-DIGIT AUDIT — the forensic-accounting screen for
     * fabricated or constrained numeric columns: the observed leading-
@@ -738,33 +683,16 @@ object Aggregations {
     * unbounded). 63 bits per word, not 64: DuckDB range-checks
     * `1::BIGINT << 63` while Spark wraps — the sign bit is the one
     * position the two engines disagree on, so it is never used. */
-  def aggBitmapDistinct(spark: SparkSession, sfDir: String): DataFrame =
-    events(spark, sfDir)
-      // CONTRACT (ADVICE r9): user_id must be non-negative — guaranteed
-      // by the fixture (ids are row indexes ≥ 0). A negative id would
-      // break BOTH exactness and parity silently: Spark's shiftleft
-      // masks the shift amount to 6 bits (Java <<) while DuckDB
-      // range-checks `<<`, and `div`/`//` floor differently below zero,
-      // so word/bit assignment would disagree across engines. For a
-      // signed id space, bias first (id − min_id) or bucket by
-      // `pmod(id, 63)` with `floor(id / 63.0)` words.
-      .select(expr("unix_micros(ts) div 86400000000").as("day"), col("user_id"))
-      .groupBy(col("day"), expr("user_id div 63").as("word"))
-      .agg(expr("bit_or(shiftleft(1L, cast(user_id % 63 as int)))").as("bits"))
-      .groupBy("day")
-      .agg(sum(expr("bit_count(bits)")).cast("long").as("n_users"),
-        count(lit(1)).as("n_words"))
-      .orderBy("day")
-
-  val aggBitmapDistinctOracle: String =
-    """WITH b AS (SELECT
-      |    DATE_DIFF('microsecond', TIMESTAMP '1970-01-01 00:00:00', ts) // 86400000000 AS day,
-      |    user_id // 63 AS word,
-      |    BIT_OR(1::BIGINT << CAST(user_id % 63 AS INT)) AS bits
-      |  FROM events GROUP BY 1, 2)
-      |SELECT day, CAST(SUM(BIT_COUNT(bits)) AS BIGINT) AS n_users,
-      |  CAST(COUNT(*) AS BIGINT) AS n_words
-      |FROM b GROUP BY day ORDER BY day""".stripMargin
+  val aggBitmapDistinct: Key = Key.sql("agg_bitmap_distinct") { t =>
+    s"""WITH b AS (SELECT
+       |    DATE_DIFF(${t.unit("microsecond")}, TIMESTAMP '1970-01-01 00:00:00', ts) ${t.idiv} 86400000000 AS day,
+       |    user_id ${t.idiv} 63 AS word,
+       |    BIT_OR(1::BIGINT << CAST(user_id % 63 AS INT)) AS bits
+       |  FROM ${t("events")} GROUP BY 1, 2)
+       |SELECT day, CAST(SUM(BIT_COUNT(bits)) AS BIGINT) AS n_users,
+       |  CAST(COUNT(*) AS BIGINT) AS n_words
+       |FROM b GROUP BY day ORDER BY day""".stripMargin
+  }
 
   /** HERFINDAHL–HIRSCHMAN CONCENTRATION — the antitrust-style market
     * screen: per customer nation, the HHI of supplier revenue shares
@@ -774,38 +702,17 @@ object Aggregations {
     * sf1 — the `agg_gini` review lesson applied at authoring time).
     * Shape: one fact⋈broadcast-dim pass to (nation, supplier) revenue
     * — map-side combinable — then a nation-sized final aggregate. */
-  def aggHhi(spark: SparkSession, sfDir: String): DataFrame = {
-    val rev = lineitem(spark, sfDir)
-      .join(broadcast(supplier(spark, sfDir)), col("l_suppkey") === col("s_suppkey"))
-      .groupBy(col("s_nationkey"), col("s_suppkey"))
-      .agg(sum(expr("CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)")).as("r"))
-    rev.groupBy("s_nationkey")
-      .agg(count(lit(1)).as("n_suppliers"), sum(col("r")).as("tot"),
-        sum(expr("CAST(r AS DECIMAL(38,0)) * r")).as("s2"))
-      .join(broadcast(nation(spark, sfDir)), col("s_nationkey") === col("n_nationkey"))
-      .select(col("n_name"), col("n_suppliers"),
-        // DECIMAL(38,0) headroom bound (ADVICE r9): s2 ≤ tot², so the
-        // 1e6·s2 intermediate stays inside 38 digits while per-nation
-        // revenue tot < 10^16 cents (10^14 USD — far past sf100k; TPC-H
-        // total revenue is ~2.3·10^11 cents PER sf). The DuckDB mirror
-        // is HUGEINT (127 bits ≈ 1.7·10^38) with the same effective
-        // bound, so the engines saturate together, not apart. Beyond
-        // it, divide s2 by tot BEFORE the 1e6 multiply.
-        expr("""CAST((1000000 * s2) div (CAST(tot AS DECIMAL(38,0)) * tot) AS BIGINT)""")
-          .as("hhi_ppm"))
-      .orderBy("n_name")
+  val aggHhi: Key = Key.sql("agg_hhi") { t =>
+    s"""WITH rev AS (SELECT s_nationkey, s_suppkey,
+       |    CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS r
+       |  FROM ${t("lineitem")} JOIN ${t("supplier")} ON l_suppkey = s_suppkey GROUP BY 1, 2),
+       |g AS (SELECT s_nationkey, CAST(COUNT(*) AS BIGINT) AS n_suppliers,
+       |    CAST(SUM(r) AS BIGINT) AS tot, CAST(SUM(CAST(r AS ${t.int128}) * r) AS ${t.int128}) AS s2
+       |  FROM rev GROUP BY 1)
+       |SELECT n_name, n_suppliers,
+       |  CAST((1000000 * s2) ${t.idiv} (CAST(tot AS ${t.int128}) * tot) AS BIGINT) AS hhi_ppm
+       |FROM g JOIN ${t("nation")} ON s_nationkey = n_nationkey ORDER BY n_name""".stripMargin
   }
-
-  val aggHhiOracle: String =
-    """WITH rev AS (SELECT s_nationkey, s_suppkey,
-      |    CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS r
-      |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey GROUP BY 1, 2),
-      |g AS (SELECT s_nationkey, CAST(COUNT(*) AS BIGINT) AS n_suppliers,
-      |    CAST(SUM(r) AS BIGINT) AS tot, CAST(SUM(CAST(r AS HUGEINT) * r) AS HUGEINT) AS s2
-      |  FROM rev GROUP BY 1)
-      |SELECT n_name, n_suppliers,
-      |  CAST((1000000 * s2) // (CAST(tot AS HUGEINT) * tot) AS BIGINT) AS hhi_ppm
-      |FROM g JOIN nation ON s_nationkey = n_nationkey ORDER BY n_name""".stripMargin
 
   /** PARETO CONCENTRATION (80/20 screen) — per market segment, the
     * revenue share held by the top-⌈20%⌉ customers. The rank is a
@@ -815,46 +722,22 @@ object Aggregations {
     * division. Shape at 100 TB: facts collapse to per-customer revenue
     * first (keyed shuffle), the window runs on the collapsed table
     * partitioned by segment, and the totals join is segment-sized. */
-  def aggPareto(spark: SparkSession, sfDir: String): DataFrame = {
-    val cust = orders(spark, sfDir)
-      .join(broadcast(customer(spark, sfDir)), col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_mktsegment").as("seg"), col("c_custkey"))
-      .agg(sum(expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")).as("r"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("seg").orderBy(col("r").desc, col("c_custkey"))
-    // ranked feeds BOTH the totals aggregate and the top-cut join —
-    // materialize once or the per-customer shuffle + window sort run
-    // twice (the kvCompactVersions recompute class)
-    val ranked = cust.withColumn("rk", row_number().over(w)).localCheckpoint(true)
-    val tot = ranked.groupBy("seg")
-      .agg(count(lit(1)).as("n_customers"), sum(col("r")).as("tot"))
-    val top = ranked.join(broadcast(tot.select(col("seg"), col("n_customers"))), Seq("seg"))
-      .filter(expr("rk <= (n_customers + 4) div 5"))
-      .groupBy("seg").agg(count(lit(1)).as("top_n"), sum(col("r")).as("top_r"))
-    tot.join(top, Seq("seg"))
-      // 1e6·top_r overflows BIGINT near sf3 — ride DECIMAL(38,0) like
-      // agg_hhi/agg_gini (review finding, applied before it bites)
-      .select(col("seg"), col("n_customers"), col("top_n"),
-        expr("CAST((1000000 * CAST(top_r AS DECIMAL(38,0))) div tot AS BIGINT)")
-          .as("top_share_ppm"))
-      .orderBy("seg")
+  val aggPareto: Key = Key.sql("agg_pareto") { t =>
+    s"""WITH cust AS (SELECT c_mktsegment AS seg, c_custkey,
+       |    CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS r
+       |  FROM ${t("orders")} JOIN ${t("customer")} ON o_custkey = c_custkey GROUP BY 1, 2),
+       |rnk AS (SELECT seg, r,
+       |    ROW_NUMBER() OVER (PARTITION BY seg ORDER BY r DESC, c_custkey) AS rk FROM cust),
+       |tot AS (SELECT seg, CAST(COUNT(*) AS BIGINT) AS n_customers,
+       |    CAST(SUM(r) AS BIGINT) AS tot FROM rnk GROUP BY 1),
+       |top AS (SELECT rnk.seg, CAST(COUNT(*) AS BIGINT) AS top_n,
+       |    CAST(SUM(r) AS BIGINT) AS top_r
+       |  FROM rnk JOIN tot ON rnk.seg = tot.seg
+       |  WHERE rk <= (n_customers + 4) ${t.idiv} 5 GROUP BY 1)
+       |SELECT tot.seg, n_customers, top_n,
+       |  CAST((1000000 * CAST(top_r AS ${t.int128})) ${t.idiv} tot AS BIGINT) AS top_share_ppm
+       |FROM tot JOIN top ON tot.seg = top.seg ORDER BY tot.seg""".stripMargin
   }
-
-  val aggParetoOracle: String =
-    """WITH cust AS (SELECT c_mktsegment AS seg, c_custkey,
-      |    CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS r
-      |  FROM orders JOIN customer ON o_custkey = c_custkey GROUP BY 1, 2),
-      |rnk AS (SELECT seg, r,
-      |    ROW_NUMBER() OVER (PARTITION BY seg ORDER BY r DESC, c_custkey) AS rk FROM cust),
-      |tot AS (SELECT seg, CAST(COUNT(*) AS BIGINT) AS n_customers,
-      |    CAST(SUM(r) AS BIGINT) AS tot FROM rnk GROUP BY 1),
-      |top AS (SELECT rnk.seg, CAST(COUNT(*) AS BIGINT) AS top_n,
-      |    CAST(SUM(r) AS BIGINT) AS top_r
-      |  FROM rnk JOIN tot ON rnk.seg = tot.seg
-      |  WHERE rk <= (n_customers + 4) // 5 GROUP BY 1)
-      |SELECT tot.seg, n_customers, top_n,
-      |  CAST((1000000 * CAST(top_r AS HUGEINT)) // tot AS BIGINT) AS top_share_ppm
-      |FROM tot JOIN top ON tot.seg = top.seg ORDER BY tot.seg""".stripMargin
 
   /** TWO-SAMPLE KOLMOGOROV–SMIRNOV SCREEN (r10) — the distribution-
     * shift detector the moment-based screens (`agg_chi_square` on
@@ -874,70 +757,33 @@ object Aggregations {
     * (map-side combinable), and nation-PARTITIONED windows — no
     * global window, no unpartitioned cumsum (the PlanSpec whole-
     * surface rule), and the merged grid shuffles once by nation. */
-  def aggKsTest(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val rows = orders(spark, sfDir)
-      .join(broadcast(customer(spark, sfDir)), col("o_custkey") === col("c_custkey"))
-      .filter(col("c_mktsegment").isin("BUILDING", "MACHINERY"))
-      .select(col("c_nationkey").as("nk"),
-        expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)").as("cents"),
-        when(col("c_mktsegment") === "BUILDING", 1L).otherwise(0L).as("is1"))
-    val grid = rows.groupBy("nk", "cents")
-      .agg(sum(col("is1")).as("c1"), sum(lit(1L) - col("is1")).as("c2"))
-    val w = Window.partitionBy("nk").orderBy("cents")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val totals = grid.groupBy("nk")
-      .agg(sum(col("c1")).as("n1"), sum(col("c2")).as("n2"))
-    // The cross-multiply itself rides DECIMAL(38,0), not raw BIGINT:
-    // DuckDB's window SUM already promotes i/j to HUGEINT, so past
-    // n1·n2 ≈ 2⁶³ the raw-BIGINT form would silently wrap here while
-    // the oracle stays exact — same headroom treatment as the final
-    // ppm division. The |sup| itself is ≤ n1·n2, so casting the max
-    // back to BIGINT is exact wherever the oracle's output cast is.
-    val sup = grid
-      .withColumn("i", sum(col("c1")).over(w))
-      .withColumn("j", sum(col("c2")).over(w))
-      .join(totals, Seq("nk"))
-      .groupBy("nk")
-      .agg(max(abs(expr("CAST(i AS DECIMAL(38,0)) * n2 - CAST(j AS DECIMAL(38,0)) * n1")))
-        .cast("bigint").as("d_num"),
-        first(col("n1")).as("n1"), first(col("n2")).as("n2"))
-    sup
-      .join(broadcast(nation(spark, sfDir)), col("nk") === col("n_nationkey"))
-      .select(col("n_name"), col("n1"), col("n2"), col("d_num"),
-        expr("""CASE WHEN n1 * n2 > 0
-                THEN CAST((CAST(1000000 AS DECIMAL(38,0)) * d_num)
-                     div (CAST(n1 AS DECIMAL(38,0)) * n2) AS BIGINT)
-                ELSE 0 END""").as("ks_ppm"))
-      .orderBy("n_name")
+  val aggKsTest: Key = Key.sql("agg_ks_test") { t =>
+    s"""WITH r AS (SELECT c_nationkey AS nk,
+       |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
+       |    CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END AS is1
+       |  FROM ${t("orders")} JOIN ${t("customer")} ON o_custkey = c_custkey
+       |  WHERE c_mktsegment IN ('BUILDING', 'MACHINERY')),
+       |g AS (SELECT nk, cents, CAST(SUM(is1) AS BIGINT) AS c1,
+       |    CAST(SUM(1 - is1) AS BIGINT) AS c2
+       |  FROM r GROUP BY nk, cents),
+       |cum AS (SELECT nk, cents,
+       |    SUM(c1) OVER (PARTITION BY nk ORDER BY cents
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS i,
+       |    SUM(c2) OVER (PARTITION BY nk ORDER BY cents
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS j
+       |  FROM g),
+       |tot AS (SELECT nk, CAST(SUM(c1) AS BIGINT) AS n1, CAST(SUM(c2) AS BIGINT) AS n2
+       |  FROM g GROUP BY nk),
+       |sup AS (SELECT cum.nk,
+       |    CAST(MAX(ABS(cum.i * tot.n2 - cum.j * tot.n1)) AS BIGINT) AS d_num,
+       |    CAST(MAX(tot.n1) AS BIGINT) AS n1, CAST(MAX(tot.n2) AS BIGINT) AS n2
+       |  FROM cum JOIN tot ON cum.nk = tot.nk GROUP BY cum.nk)
+       |SELECT n_name, n1, n2, d_num,
+       |  CASE WHEN n1 * n2 > 0
+       |       THEN CAST((1000000::${t.int128} * d_num) ${t.idiv} (n1::${t.int128} * n2) AS BIGINT)
+       |       ELSE 0 END AS ks_ppm
+       |FROM sup JOIN ${t("nation")} ON nk = n_nationkey ORDER BY n_name""".stripMargin
   }
-
-  val aggKsTestOracle: String =
-    """WITH r AS (SELECT c_nationkey AS nk,
-      |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
-      |    CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END AS is1
-      |  FROM orders JOIN customer ON o_custkey = c_custkey
-      |  WHERE c_mktsegment IN ('BUILDING', 'MACHINERY')),
-      |g AS (SELECT nk, cents, CAST(SUM(is1) AS BIGINT) AS c1,
-      |    CAST(SUM(1 - is1) AS BIGINT) AS c2
-      |  FROM r GROUP BY nk, cents),
-      |cum AS (SELECT nk, cents,
-      |    SUM(c1) OVER (PARTITION BY nk ORDER BY cents
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS i,
-      |    SUM(c2) OVER (PARTITION BY nk ORDER BY cents
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS j
-      |  FROM g),
-      |tot AS (SELECT nk, CAST(SUM(c1) AS BIGINT) AS n1, CAST(SUM(c2) AS BIGINT) AS n2
-      |  FROM g GROUP BY nk),
-      |sup AS (SELECT cum.nk,
-      |    CAST(MAX(ABS(cum.i * tot.n2 - cum.j * tot.n1)) AS BIGINT) AS d_num,
-      |    CAST(MAX(tot.n1) AS BIGINT) AS n1, CAST(MAX(tot.n2) AS BIGINT) AS n2
-      |  FROM cum JOIN tot ON cum.nk = tot.nk GROUP BY cum.nk)
-      |SELECT n_name, n1, n2, d_num,
-      |  CASE WHEN n1 * n2 > 0
-      |       THEN CAST((1000000::HUGEINT * d_num) // (n1::HUGEINT * n2) AS BIGINT)
-      |       ELSE 0 END AS ks_ppm
-      |FROM sup JOIN nation ON nk = n_nationkey ORDER BY n_name""".stripMargin
 
   /** MANN–WHITNEY U (r11) — the RANK-based two-sample screen that
     * complements `agg_ks_test`'s sup-of-ECDFs: U is sensitive to a
@@ -954,55 +800,26 @@ object Aggregations {
     * DuckDB's window/agg sums are already HUGEINT). Same scale shape
     * as KS: one broadcast-dim join, one map-side-combinable (nation,
     * value) collapse, nation-PARTITIONED cumulative windows. */
-  def aggMannWhitney(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val rows = orders(spark, sfDir)
-      .join(broadcast(customer(spark, sfDir)), col("o_custkey") === col("c_custkey"))
-      .filter(col("c_mktsegment").isin("BUILDING", "MACHINERY"))
-      .select(col("c_nationkey").as("nk"),
-        expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)").as("cents"),
-        when(col("c_mktsegment") === "BUILDING", 1L).otherwise(0L).as("is1"))
-    val grid = rows.groupBy("nk", "cents")
-      .agg(sum(col("is1")).as("c1"), sum(lit(1L) - col("is1")).as("c2"))
-    val w = Window.partitionBy("nk").orderBy("cents")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    grid
-      .withColumn("j", sum(col("c2")).over(w))
-      .groupBy("nk")
-      .agg(
-        sum(col("c1")).as("n1"), sum(col("c2")).as("n2"),
-        // the doubling rides DECIMAL too (r12 advice): DuckDB's window
-        // SUM already promoted j to HUGEINT, so BIGINT-side 2*j would
-        // wrap first on the Spark side at extreme per-nation counts
-        sum(expr("CAST(c1 AS DECIMAL(38,0)) * (2 * CAST(j AS DECIMAL(38,0)) - c2)"))
-          .as("u1x2_dec"))
-      .join(broadcast(nation(spark, sfDir)), col("nk") === col("n_nationkey"))
-      .select(col("n_name"), col("n1"), col("n2"),
-        col("u1x2_dec").cast("bigint").as("u1_x2"),
-        (expr("2 * CAST(n1 AS DECIMAL(38,0)) * n2") - col("u1x2_dec"))
-          .cast("bigint").as("u2_x2"))
-      .orderBy("n_name")
+  val aggMannWhitney: Key = Key.sql("agg_mann_whitney") { t =>
+    s"""WITH r AS (SELECT c_nationkey AS nk,
+       |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
+       |    CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END AS is1
+       |  FROM ${t("orders")} JOIN ${t("customer")} ON o_custkey = c_custkey
+       |  WHERE c_mktsegment IN ('BUILDING', 'MACHINERY')),
+       |g AS (SELECT nk, cents, CAST(SUM(is1) AS BIGINT) AS c1,
+       |    CAST(SUM(1 - is1) AS BIGINT) AS c2
+       |  FROM r GROUP BY nk, cents),
+       |cum AS (SELECT nk, cents, c1, c2,
+       |    SUM(c2) OVER (PARTITION BY nk ORDER BY cents
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS j
+       |  FROM g),
+       |u AS (SELECT nk, CAST(SUM(c1) AS BIGINT) AS n1, CAST(SUM(c2) AS BIGINT) AS n2,
+       |    SUM(c1::${t.int128} * (2 * j - c2)) AS u1x2
+       |  FROM cum GROUP BY nk)
+       |SELECT n_name, n1, n2, CAST(u1x2 AS BIGINT) AS u1_x2,
+       |  CAST(2 * n1::${t.int128} * n2 - u1x2 AS BIGINT) AS u2_x2
+       |FROM u JOIN ${t("nation")} ON nk = n_nationkey ORDER BY n_name""".stripMargin
   }
-
-  val aggMannWhitneyOracle: String =
-    """WITH r AS (SELECT c_nationkey AS nk,
-      |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
-      |    CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END AS is1
-      |  FROM orders JOIN customer ON o_custkey = c_custkey
-      |  WHERE c_mktsegment IN ('BUILDING', 'MACHINERY')),
-      |g AS (SELECT nk, cents, CAST(SUM(is1) AS BIGINT) AS c1,
-      |    CAST(SUM(1 - is1) AS BIGINT) AS c2
-      |  FROM r GROUP BY nk, cents),
-      |cum AS (SELECT nk, cents, c1, c2,
-      |    SUM(c2) OVER (PARTITION BY nk ORDER BY cents
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS j
-      |  FROM g),
-      |u AS (SELECT nk, CAST(SUM(c1) AS BIGINT) AS n1, CAST(SUM(c2) AS BIGINT) AS n2,
-      |    SUM(c1::HUGEINT * (2 * j - c2)) AS u1x2
-      |  FROM cum GROUP BY nk)
-      |SELECT n_name, n1, n2, CAST(u1x2 AS BIGINT) AS u1_x2,
-      |  CAST(2 * n1::HUGEINT * n2 - u1x2 AS BIGINT) AS u2_x2
-      |FROM u JOIN nation ON nk = n_nationkey ORDER BY n_name""".stripMargin
 
   /** WELCH'S T-TEST (r13) — the PARAMETRIC member of the two-sample
     * screen family (`agg_ks_test` reads shape, `agg_mann_whitney`
@@ -1017,57 +834,28 @@ object Aggregations {
     * literal expression tree over the SAME integers, so IEEE
     * determinism carries the hash (the `agg_corr_exact` recipe).
     * One broadcast-dim join + one map-side-combinable groupBy. */
-  def aggWelchTtest(spark: SparkSession, sfDir: String): DataFrame = {
-    val rows = customer(spark, sfDir)
-      .filter(col("c_mktsegment").isin("BUILDING", "MACHINERY"))
-      .select(col("c_nationkey").as("nk"),
-        expr("CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)").as("cents"),
-        when(col("c_mktsegment") === "BUILDING", 1L).otherwise(0L).as("is1"))
-    rows.groupBy("nk")
-      .agg(
-        sum(col("is1")).as("n1"),
-        sum(lit(1L) - col("is1")).as("n2"),
-        sum(expr("is1 * cents")).as("s1"),
-        sum(expr("(1 - is1) * cents")).as("s2"),
-        sum(expr("is1 * CAST(cents AS DECIMAL(38,0)) * cents")).as("q1d"),
-        sum(expr("(1 - is1) * CAST(cents AS DECIMAL(38,0)) * cents")).as("q2d"))
-      .filter(col("n1") >= 2 && col("n2") >= 2)
-      .withColumn("v1", expr(
-        "(CAST(q1d AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE)) / (CAST(n1 AS DOUBLE) - 1)"))
-      .withColumn("v2", expr(
-        "(CAST(q2d AS DOUBLE) - CAST(s2 AS DOUBLE) * CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE)) / (CAST(n2 AS DOUBLE) - 1)"))
-      .withColumn("se2", expr("v1 / CAST(n1 AS DOUBLE) + v2 / CAST(n2 AS DOUBLE)"))
-      .withColumn("t_welch", expr(
-        "ROUND((CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE) - CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE)) / SQRT(se2), 6)"))
-      .withColumn("df_welch", expr(
-        "ROUND(se2 * se2 / ((v1 / CAST(n1 AS DOUBLE)) * (v1 / CAST(n1 AS DOUBLE)) / (CAST(n1 AS DOUBLE) - 1) + (v2 / CAST(n2 AS DOUBLE)) * (v2 / CAST(n2 AS DOUBLE)) / (CAST(n2 AS DOUBLE) - 1)), 6)"))
-      .join(broadcast(nation(spark, sfDir)), col("nk") === col("n_nationkey"))
-      .select(col("n_name"), col("n1"), col("n2"),
-        col("s1"), col("s2"), col("t_welch"), col("df_welch"))
-      .orderBy("n_name")
+  val aggWelchTtest: Key = Key.sql("agg_welch_ttest") { t =>
+    s"""WITH r AS (SELECT c_nationkey AS nk,
+       |    CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
+       |    CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END AS is1
+       |  FROM ${t("customer")} WHERE c_mktsegment IN ('BUILDING', 'MACHINERY')),
+       |m AS (SELECT nk,
+       |    CAST(SUM(is1) AS BIGINT) AS n1, CAST(SUM(1 - is1) AS BIGINT) AS n2,
+       |    CAST(SUM(is1 * cents) AS BIGINT) AS s1,
+       |    CAST(SUM((1 - is1) * cents) AS BIGINT) AS s2,
+       |    SUM(is1 * cents::${t.int128} * cents) AS q1d,
+       |    SUM((1 - is1) * cents::${t.int128} * cents) AS q2d
+       |  FROM r GROUP BY nk),
+       |v AS (SELECT *,
+       |    (CAST(q1d AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE)) / (CAST(n1 AS DOUBLE) - 1) AS v1,
+       |    (CAST(q2d AS DOUBLE) - CAST(s2 AS DOUBLE) * CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE)) / (CAST(n2 AS DOUBLE) - 1) AS v2
+       |  FROM m WHERE n1 >= 2 AND n2 >= 2),
+       |s AS (SELECT *, v1 / CAST(n1 AS DOUBLE) + v2 / CAST(n2 AS DOUBLE) AS se2 FROM v)
+       |SELECT n_name, n1, n2, s1, s2,
+       |  ROUND((CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE) - CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE)) / SQRT(se2), 6) AS t_welch,
+       |  ROUND(se2 * se2 / ((v1 / CAST(n1 AS DOUBLE)) * (v1 / CAST(n1 AS DOUBLE)) / (CAST(n1 AS DOUBLE) - 1) + (v2 / CAST(n2 AS DOUBLE)) * (v2 / CAST(n2 AS DOUBLE)) / (CAST(n2 AS DOUBLE) - 1)), 6) AS df_welch
+       |FROM s JOIN ${t("nation")} ON nk = n_nationkey ORDER BY n_name""".stripMargin
   }
-
-  val aggWelchTtestOracle: String =
-    """WITH r AS (SELECT c_nationkey AS nk,
-      |    CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
-      |    CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END AS is1
-      |  FROM customer WHERE c_mktsegment IN ('BUILDING', 'MACHINERY')),
-      |m AS (SELECT nk,
-      |    CAST(SUM(is1) AS BIGINT) AS n1, CAST(SUM(1 - is1) AS BIGINT) AS n2,
-      |    CAST(SUM(is1 * cents) AS BIGINT) AS s1,
-      |    CAST(SUM((1 - is1) * cents) AS BIGINT) AS s2,
-      |    SUM(is1 * cents::HUGEINT * cents) AS q1d,
-      |    SUM((1 - is1) * cents::HUGEINT * cents) AS q2d
-      |  FROM r GROUP BY nk),
-      |v AS (SELECT *,
-      |    (CAST(q1d AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE)) / (CAST(n1 AS DOUBLE) - 1) AS v1,
-      |    (CAST(q2d AS DOUBLE) - CAST(s2 AS DOUBLE) * CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE)) / (CAST(n2 AS DOUBLE) - 1) AS v2
-      |  FROM m WHERE n1 >= 2 AND n2 >= 2),
-      |s AS (SELECT *, v1 / CAST(n1 AS DOUBLE) + v2 / CAST(n2 AS DOUBLE) AS se2 FROM v)
-      |SELECT n_name, n1, n2, s1, s2,
-      |  ROUND((CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE) - CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE)) / SQRT(se2), 6) AS t_welch,
-      |  ROUND(se2 * se2 / ((v1 / CAST(n1 AS DOUBLE)) * (v1 / CAST(n1 AS DOUBLE)) / (CAST(n1 AS DOUBLE) - 1) + (v2 / CAST(n2 AS DOUBLE)) * (v2 / CAST(n2 AS DOUBLE)) / (CAST(n2 AS DOUBLE) - 1)), 6) AS df_welch
-      |FROM s JOIN nation ON nk = n_nationkey ORDER BY n_name""".stripMargin
 
   /** CRAMÉR'S V (r13) — the EFFECT-SIZE companion to `agg_chi_square`:
     * chi² says "nation and market segment are (in)dependent", V says
@@ -1080,48 +868,24 @@ object Aggregations {
     * doubles and fold into one row — identical expression text on
     * both engines, r6-rounded. Scale shape: one map-side-combinable
     * groupBy over the fact, then k² metadata rows. */
-  def aggCramersV(spark: SparkSession, sfDir: String): DataFrame = {
-    val cells = customer(spark, sfDir)
-      .groupBy(col("c_nationkey").as("nk"), col("c_mktsegment").as("seg"))
-      .agg(count(lit(1)).as("obs"))
-    val rowT = cells.groupBy("nk").agg(sum(col("obs")).as("rt"))
-    val colT = cells.groupBy("seg").agg(sum(col("obs")).as("ct"))
-    val tot = cells.agg(sum(col("obs")).as("n"),
-      countDistinct(col("nk")).as("r_levels"),
-      countDistinct(col("seg")).as("c_levels"))
-    cells
-      .join(broadcast(rowT), Seq("nk"))
-      .join(broadcast(colT), Seq("seg"))
-      .crossJoin(broadcast(tot))
-      .withColumn("d", expr(
-        "CAST(CAST(obs AS DECIMAL(38,0)) * n - CAST(rt AS DECIMAL(38,0)) * ct AS DOUBLE)"))
-      .withColumn("contrib", expr(
-        "d * d / (CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE) * CAST(n AS DOUBLE) * CAST(n AS DOUBLE))"))
-      .groupBy("n", "r_levels", "c_levels")
-      .agg(sum(col("contrib")).as("chi2_raw"))
-      .select(col("n"), col("r_levels"), col("c_levels"),
-        expr("ROUND(chi2_raw, 6)").as("chi2"),
-        expr("ROUND(SQRT(chi2_raw / (CAST(n AS DOUBLE) * CAST(LEAST(r_levels - 1, c_levels - 1) AS DOUBLE))), 6)")
-          .as("cramers_v"))
+  val aggCramersV: Key = Key.sql("agg_cramers_v") { t =>
+    s"""WITH cells AS (SELECT c_nationkey AS nk, c_mktsegment AS seg,
+       |    CAST(COUNT(*) AS BIGINT) AS obs FROM ${t("customer")} GROUP BY 1, 2),
+       |rt AS (SELECT nk, CAST(SUM(obs) AS BIGINT) AS rt FROM cells GROUP BY nk),
+       |ct AS (SELECT seg, CAST(SUM(obs) AS BIGINT) AS ct FROM cells GROUP BY seg),
+       |tot AS (SELECT CAST(SUM(obs) AS BIGINT) AS n,
+       |    CAST(COUNT(DISTINCT nk) AS BIGINT) AS r_levels,
+       |    CAST(COUNT(DISTINCT seg) AS BIGINT) AS c_levels FROM cells),
+       |contrib AS (SELECT n, r_levels, c_levels,
+       |    CAST(obs::${t.int128} * n - rt::${t.int128} * ct AS DOUBLE) AS d,
+       |    CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE) * CAST(n AS DOUBLE) * CAST(n AS DOUBLE) AS den
+       |  FROM cells JOIN rt USING (nk) JOIN ct USING (seg) CROSS JOIN tot),
+       |chi AS (SELECT n, r_levels, c_levels, SUM(d * d / den) AS chi2_raw
+       |  FROM contrib GROUP BY 1, 2, 3)
+       |SELECT n, r_levels, c_levels, ROUND(chi2_raw, 6) AS chi2,
+       |  ROUND(SQRT(chi2_raw / (CAST(n AS DOUBLE) * CAST(LEAST(r_levels - 1, c_levels - 1) AS DOUBLE))), 6) AS cramers_v
+       |FROM chi""".stripMargin
   }
-
-  val aggCramersVOracle: String =
-    """WITH cells AS (SELECT c_nationkey AS nk, c_mktsegment AS seg,
-      |    CAST(COUNT(*) AS BIGINT) AS obs FROM customer GROUP BY 1, 2),
-      |rt AS (SELECT nk, CAST(SUM(obs) AS BIGINT) AS rt FROM cells GROUP BY nk),
-      |ct AS (SELECT seg, CAST(SUM(obs) AS BIGINT) AS ct FROM cells GROUP BY seg),
-      |tot AS (SELECT CAST(SUM(obs) AS BIGINT) AS n,
-      |    CAST(COUNT(DISTINCT nk) AS BIGINT) AS r_levels,
-      |    CAST(COUNT(DISTINCT seg) AS BIGINT) AS c_levels FROM cells),
-      |contrib AS (SELECT n, r_levels, c_levels,
-      |    CAST(obs::HUGEINT * n - rt::HUGEINT * ct AS DOUBLE) AS d,
-      |    CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE) * CAST(n AS DOUBLE) * CAST(n AS DOUBLE) AS den
-      |  FROM cells JOIN rt USING (nk) JOIN ct USING (seg) CROSS JOIN tot),
-      |chi AS (SELECT n, r_levels, c_levels, SUM(d * d / den) AS chi2_raw
-      |  FROM contrib GROUP BY 1, 2, 3)
-      |SELECT n, r_levels, c_levels, ROUND(chi2_raw, 6) AS chi2,
-      |  ROUND(SQRT(chi2_raw / (CAST(n AS DOUBLE) * CAST(LEAST(r_levels - 1, c_levels - 1) AS DOUBLE))), 6) AS cramers_v
-      |FROM chi""".stripMargin
 
   /** THEIL T INDEX (r13) — the DECOMPOSABLE inequality measure
     * `agg_gini` isn't: T = T_between + Σ_g w_g·T_g splits order-value
@@ -1238,21 +1002,21 @@ object Aggregations {
   val keys: Seq[Key] = Seq(
     Key("agg_theil", aggTheil, aggTheilOracle),
     Key("agg_mad", aggMad, aggMadOracle),
-    Key("agg_welch_ttest", aggWelchTtest, aggWelchTtestOracle),
-    Key("agg_cramers_v", aggCramersV, aggCramersVOracle),
-    Key("agg_ks_test", aggKsTest, aggKsTestOracle),
-    Key("agg_mann_whitney", aggMannWhitney, aggMannWhitneyOracle),
-    Key("agg_bitmap_distinct", aggBitmapDistinct, aggBitmapDistinctOracle),
-    Key("agg_hhi", aggHhi, aggHhiOracle),
-    Key("agg_pareto", aggPareto, aggParetoOracle),
+    aggWelchTtest,
+    aggCramersV,
+    aggKsTest,
+    aggMannWhitney,
+    aggBitmapDistinct,
+    aggHhi,
+    aggPareto,
     Key("agg_benford", aggBenford, aggBenfordOracle),
-    Key("agg_gini", aggGini, aggGiniOracle),
-    Key("agg_chi_square", aggChiSquare, aggChiSquareOracle),
+    aggGini,
+    aggChiSquare,
     Key("agg_sketch_intersect", aggSketchIntersect, aggSketchIntersectOracle),
     aggBoolAggs,
     aggWeightedMedian,
     aggSkewKurtosis,
-    Key("agg_hist_fixed", aggHistFixed, aggHistFixedOracle),
+    aggHistFixed,
     aggMode,
     Key("agg_partial_merge", aggPartialMerge, aggPartialMergeOracle),
     aggCorrExact,

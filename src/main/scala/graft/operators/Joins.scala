@@ -222,27 +222,13 @@ object Joins {
   /** Interval join: per purchase, count same-user clicks in the
     * preceding hour. Equi key (user_id) drives the shuffle; the range
     * predicate is applied post-match. */
-  def joinInterval(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = events(spark, sfDir)
-    val p = ev.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("p_id"), col("user_id").as("p_user"), col("ts").as("p_ts"))
-    val c = ev.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
-    p.join(c,
-        col("p_user") === col("c_user") &&
-          col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-          col("c_ts") < col("p_ts"), "left")
-      .groupBy(col("p_id").as("event_id"))
-      .agg(count(col("c_ts")).as("n_clicks_1h"))
-      .orderBy("event_id")
+  val joinInterval: Key = Key.sql("join_interval") { t =>
+    s"""SELECT p.event_id, COUNT(c.ts) AS n_clicks_1h
+       |FROM (SELECT event_id, user_id, ts FROM ${t("events")} WHERE event_type = 'purchase') p
+       |LEFT JOIN (SELECT user_id, ts FROM ${t("events")} WHERE event_type = 'click') c
+       |  ON p.user_id = c.user_id AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts < p.ts
+       |GROUP BY p.event_id ORDER BY p.event_id""".stripMargin
   }
-
-  val joinIntervalOracle: String =
-    """SELECT p.event_id, COUNT(c.ts) AS n_clicks_1h
-      |FROM (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase') p
-      |LEFT JOIN (SELECT user_id, ts FROM events WHERE event_type = 'click') c
-      |  ON p.user_id = c.user_id AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts < p.ts
-      |GROUP BY p.event_id ORDER BY p.event_id""".stripMargin
 
   /** KEYLESS RANGE JOIN via time BUCKETING — the classic BNLJ-killer.
     * `join_interval` has an equi key (user_id) to shuffle on; this key
@@ -253,38 +239,19 @@ object Joins {
     * binning in Spark-ecosystem engines): quantize time into
     * interval-sized buckets. A click lands in bucket ⌊ts/10min⌋; a
     * purchase's 10-minute window can only span buckets {b−1, b}, so
-    * the probe side EXPLODES to those two bucket keys and the join
+    * the probe side explodes to those two bucket keys and the join
     * becomes an equi-join on bucket + residual range filter — a plain
-    * shuffle join, 2× probe duplication, zero pair blowup. Each
-    * (purchase, click) pair meets on exactly one bucket (the click's
-    * own), so no dedup is needed. PlanSpec pins the plan: no BNLJ, no
-    * CartesianProduct. Bucket µs arithmetic uses integer `div` — no
-    * float in the join key. */
-  def joinRangeBucket(spark: SparkSession, sfDir: String): DataFrame = {
-    val bucketUs = 600L * 1000000L // 10 minutes, in epoch micros
-    val ev = events(spark, sfDir)
-    val p = ev.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("p_id"), unix_micros(col("ts")).as("p_us"))
-      .withColumn("bucket", explode(array(
-        expr(s"p_us div $bucketUs") - 1, expr(s"p_us div $bucketUs"))))
-    val c = ev.filter(col("event_type") === "click")
-      .select(unix_micros(col("ts")).as("c_us"))
-      .withColumn("bucket", expr(s"c_us div $bucketUs"))
-    p.join(c,
-        p("bucket") === c("bucket") &&
-          col("c_us") >= col("p_us") - bucketUs && col("c_us") < col("p_us"),
-        "left")
-      .groupBy(col("p_id").as("event_id"))
-      .agg(count(col("c_us")).as("n_clicks_10m"))
-      .orderBy("event_id")
+    * shuffle join, 2× probe duplication, zero pair blowup. The text is
+    * the plain band join; `graft.plans.BandJoinBucketing` (installed by
+    * `GraftExtensions`) does the bucketing in the optimizer. PlanSpec
+    * pins the plan: no BNLJ, no CartesianProduct. */
+  val joinRangeBucket: Key = Key.sql("join_range_bucket") { t =>
+    s"""SELECT p.event_id, COUNT(c.ts) AS n_clicks_10m
+       |FROM (SELECT event_id, ts FROM ${t("events")} WHERE event_type = 'purchase') p
+       |LEFT JOIN (SELECT ts FROM ${t("events")} WHERE event_type = 'click') c
+       |  ON c.ts >= p.ts - INTERVAL 10 MINUTE AND c.ts < p.ts
+       |GROUP BY p.event_id ORDER BY p.event_id""".stripMargin
   }
-
-  val joinRangeBucketOracle: String =
-    """SELECT p.event_id, COUNT(c.ts) AS n_clicks_10m
-      |FROM (SELECT event_id, ts FROM events WHERE event_type = 'purchase') p
-      |LEFT JOIN (SELECT ts FROM events WHERE event_type = 'click') c
-      |  ON c.ts >= p.ts - INTERVAL 10 MINUTE AND c.ts < p.ts
-      |GROUP BY p.event_id ORDER BY p.event_id""".stripMargin
 
   /** Skew-mitigation recipe as an operator: the probe side gets a
     * deterministic salt, the build side is replicated across all salts,
@@ -460,35 +427,21 @@ object Joins {
        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin
   }
 
-  def joinNullSafe(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = events(spark, sfDir)
-    val left = ev
-      .withColumn("k", when(col("event_id") % 10 === 0, lit(null))
-        .otherwise(col("event_type")))
-      .groupBy("k").agg(count(lit(1)).as("n_left"))
-    val right = ev
-      .withColumn("k", when(col("user_id") % 7 === 0, lit(null))
-        .otherwise(col("event_type")))
-      .groupBy("k").agg(count(lit(1)).as("n_right"))
-    left.join(right, left("k") <=> right("k"))
-      .select(left("k").as("k"), col("n_left"), col("n_right"))
-      .orderBy(asc_nulls_first("k"))
+  val joinNullSafe: Key = Key.sql("join_null_safe") { t =>
+    s"""WITH l AS (SELECT CASE WHEN event_id % 10 = 0 THEN NULL
+       |    ELSE event_type END AS k, COUNT(*) AS n_left
+       |  FROM ${t("events")} GROUP BY 1),
+       |r AS (SELECT CASE WHEN user_id % 7 = 0 THEN NULL
+       |    ELSE event_type END AS k, COUNT(*) AS n_right
+       |  FROM ${t("events")} GROUP BY 1)
+       |SELECT l.k, n_left, n_right FROM l JOIN r
+       |ON l.k IS NOT DISTINCT FROM r.k
+       |ORDER BY l.k NULLS FIRST""".stripMargin
   }
-
-  val joinNullSafeOracle: String =
-    """WITH l AS (SELECT CASE WHEN event_id % 10 = 0 THEN NULL
-      |    ELSE event_type END AS k, COUNT(*) AS n_left
-      |  FROM events GROUP BY 1),
-      |r AS (SELECT CASE WHEN user_id % 7 = 0 THEN NULL
-      |    ELSE event_type END AS k, COUNT(*) AS n_right
-      |  FROM events GROUP BY 1)
-      |SELECT l.k, n_left, n_right FROM l JOIN r
-      |ON l.k IS NOT DISTINCT FROM r.k
-      |ORDER BY l.k NULLS FIRST""".stripMargin
 
   val keys: Seq[Key] = Seq(
     Key("join_asof_tolerance", joinAsofTolerance, joinAsofToleranceOracle),
-    Key("join_null_safe", joinNullSafe, joinNullSafeOracle),
+    joinNullSafe,
     Key("join_asof_nearest", joinAsofNearest, joinAsofNearestOracle),
     Key("join_bucketed", joinBucketed, joinBucketedOracle),
     Key("join_skew_salted", joinSkewSalted, joinSkewSaltedOracle),
@@ -504,8 +457,8 @@ object Joins {
     Key("join_asof", joinAsof, joinAsofOracle),
     Key("join_asof_forward", joinAsofForward, joinAsofForwardOracle),
     joinNotIn,
-    Key("join_interval", joinInterval, joinIntervalOracle),
-    Key("join_range_bucket", joinRangeBucket, joinRangeBucketOracle))
+    joinInterval,
+    joinRangeBucket)
 
   val queries: Map[String, Key.Run] = Key.queries(keys)
 }

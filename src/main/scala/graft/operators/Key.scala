@@ -15,31 +15,48 @@ final case class Key(name: String, run: Key.Run, oracle: String)
 object Key {
   type Run = (SparkSession, String) => DataFrame
 
-  /** A key whose plan and oracle are one SQL text. `text` names each
-    * table through its argument, which returns the bare name, so Spark
-    * runs the very text the oracle runs over the tables DuckDB
-    * registers ([[bound]]). */
-  def sql(name: String)(text: (String => String) => String): Key =
-    Key(name, bound(text), text(table))
+  /** The SQL a key's text is rendered in. `t("orders")` names a table
+    * (the bare name in both engines); the other members spell the
+    * tokens where DuckDB and Spark differ, DuckDB's spelling first. */
+  final class Dialect private[Key] (table: String => String, spark: Boolean) {
+    def apply(name: String): String = table(name)
+    private def of(duckdb: String, sparkSql: String): String = if (spark) sparkSql else duckdb
+    def idiv: String = of("//", "div")
+    def int128: String = of("HUGEINT", "DECIMAL(38,0)")
+    def string: String = of("VARCHAR", "STRING")
+    def unnest: String = of("unnest", "explode")
+    def split: String = of("string_split", "split")
+    /** A `date_diff` unit: a string in DuckDB, a keyword in Spark. */
+    def unit(u: String): String = of(s"'$u'", u.toUpperCase)
+  }
+
+  /** The oracle's dialect. */
+  val duckdb: Dialect = new Dialect(identity, spark = false)
+
+  /** A key whose plan and oracle are one SQL text: the oracle is `text`
+    * in [[duckdb]], and Spark runs it in its own spelling over the
+    * tables DuckDB registers ([[bound]]). */
+  def sql(name: String)(text: Dialect => String): Key =
+    Key(name, bound(text), text(duckdb))
 
   /** The plan of SQL `text`: on a fresh child session
     * ([[GraftSession.child]]) each table the text names is bound as a
-    * temp view over [[Tables.table]], so its schema comes from the
-    * process memo, and a key writes no catalog entry any other key on
-    * the caller's session could resolve. */
-  private[operators] def bound(text: (String => String) => String): Run = (spark, sfDir) => {
+    * temp view over [[Tables.table]] (`events` over [[Tables.events]],
+    * which normalizes its `ts`), so its schema comes from the process
+    * memo, and a key writes no catalog entry any other key on the
+    * caller's session could resolve. The child opts out of artifact
+    * isolation: an isolated session runs its tasks under a class
+    * loader of its own, which misses every generated class the JVM
+    * already compiled, so each run would compile its whole plan again. */
+  private def bound(text: Dialect => String): Run = (spark, sfDir) => {
     val names = mutable.LinkedHashSet.empty[String]
-    val query = text { n => names += table(n); n }
-    val child = GraftSession.child(spark)
-    names.foreach(n => Tables.table(child, sfDir, n).createTempView(n))
+    val query = text(new Dialect({ n => names += n; n }, spark = true))
+    val child = GraftSession.child(spark, "spark.sql.artifact.isolation.enabled" -> "false")
+    names.foreach { n =>
+      val df = if (n == "events") Tables.events(child, sfDir) else Tables.table(child, sfDir, n)
+      df.createTempView(n)
+    }
     child.sql(query)
-  }
-
-  /** A table as SQL text names it. `events` is refused: its `ts` column
-    * must be read through [[Tables.events]]. */
-  private[operators] def table(name: String): String = {
-    require(name != "events", "events must be read through Tables.events (its ts is normalized)")
-    name
   }
 
   /** `keys`, failing on a name declared twice: a map built with `++`

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables._
 
@@ -130,15 +130,10 @@ object LlmDedup {
 
   /** Exact duplicate groups by content hash; keeps the smallest doc_id
     * as the canonical representative. */
-  def llmDedupExact(spark: SparkSession, sfDir: String): DataFrame =
-    documents(spark, sfDir)
-      .groupBy(md5(col("text")).as("text_hash"))
-      .agg(min(col("doc_id")).as("keep_doc_id"), count(lit(1)).as("n_copies"))
-      .orderBy("text_hash")
-
-  val llmDedupExactOracle: String =
-    """SELECT md5(text) AS text_hash, MIN(doc_id) AS keep_doc_id, COUNT(*) AS n_copies
-      |FROM documents GROUP BY md5(text) ORDER BY text_hash""".stripMargin
+  val llmDedupExact: Key = Key.sql("llm_dedup_exact") { t =>
+    s"""SELECT md5(text) AS text_hash, MIN(doc_id) AS keep_doc_id, COUNT(*) AS n_copies
+       |FROM ${t("documents")} GROUP BY md5(text) ORDER BY text_hash""".stripMargin
+  }
 
   /** BLOOM-PREFILTER DEDUP — the shape that replaces a huge anti-join
     * at 100 TB: instead of shuffling every probe-side key against the
@@ -159,7 +154,6 @@ object LlmDedup {
     * set (still broadcastable at gigabit sizes via torrent broadcast),
     * or shards by key range; the plan shape is unchanged. */
   def llmDedupBloom(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
     val M = 16128L // 256 words x 63 bits
     // the key column is addressed BY NAME inside the SQL string — a
     // Column parameter here would be silently ignored (review finding)
@@ -674,28 +668,14 @@ object LlmDedup {
     * token's md5, a weighted ±1 majority vote becomes one signature bit.
     * Docs reduce to one row each — pairs within a hamming radius can
     * then be joined on signature prefixes at scale. */
-  def llmDedupSimhash(spark: SparkSession, sfDir: String): DataFrame = {
-    val tok = documents(spark, sfDir)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
-      .withColumn("th", md5(col("token")))
-    val bitCols: Seq[Column] = (1 to 16).map { j =>
-      when(sum(when(substring(col("th"), j, 1) >= "8", 1).otherwise(-1)) >= 0, "1")
-        .otherwise("0")
-    }
-    tok.groupBy("doc_id")
-      .agg(concat(bitCols: _*).as("simhash16"),
-        count(lit(1)).as("n_tokens"))
-      .orderBy("doc_id")
-  }
-
-  val llmDedupSimhashOracle: String = {
+  val llmDedupSimhash: Key = Key.sql("llm_dedup_simhash") { t =>
     val bits = (1 to 16).map(j =>
       s"CASE WHEN SUM(CASE WHEN substr(md5(token), $j, 1) >= '8' THEN 1 ELSE -1 END) >= 0 THEN '1' ELSE '0' END")
       .mkString(" ||\n|    ")
     s"""SELECT doc_id,
        |    $bits AS simhash16,
        |  COUNT(*) AS n_tokens
-       |FROM (SELECT doc_id, UNNEST(string_split(text, ' ')) AS token FROM documents)
+       |FROM (SELECT doc_id, ${t.unnest.toUpperCase}(${t.split}(text, ' ')) AS token FROM ${t("documents")})
        |GROUP BY doc_id ORDER BY doc_id""".stripMargin
   }
 
@@ -732,7 +712,7 @@ object LlmDedup {
        |ORDER BY vec_a, vec_b""".stripMargin
 
   val keys: Seq[Key] = Seq(
-    Key("llm_dedup_exact", llmDedupExact, llmDedupExactOracle),
+    llmDedupExact,
     Key("llm_dedup_bloom", llmDedupBloom, llmDedupBloomOracle),
     Key("llm_dedup_near", llmDedupNear, llmDedupNearOracle),
     Key("llm_dedup_near_prefix", llmDedupNearPrefix, llmDedupNearPrefixOracle),
@@ -740,7 +720,7 @@ object LlmDedup {
     Key("llm_minhash_jaccard", llmMinhashJaccard, llmMinhashJaccardOracle),
     Key("llm_dedup_clusters", llmDedupClusters, llmDedupClustersOracle),
     Key("llm_dedup_canonical", llmDedupCanonical, llmDedupCanonicalOracle),
-    Key("llm_dedup_simhash", llmDedupSimhash, llmDedupSimhashOracle),
+    llmDedupSimhash,
     Key("llm_dedup_embed", llmDedupEmbed, llmDedupEmbedOracle))
 
   val queries: Map[String, Key.Run] = Key.queries(keys)

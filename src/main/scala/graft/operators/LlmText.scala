@@ -44,36 +44,19 @@ object LlmText {
 
   /** TF-IDF: per (lang, term), score = ln(1+tf_lang)·ln(N/df); top-5
     * terms per language. */
-  def llmTfidfTop(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val docs = documents(spark, sfDir)
-    val tok = docs.select(col("doc_id"), col("lang"),
-      explode(split(col("text"), " ")).as("term"))
-    val tf = tok.groupBy("lang", "term").agg(count(lit(1)).as("tf"))
-    val df = tok.groupBy("term").agg(countDistinct(col("doc_id")).as("df"))
-    val n = docs.agg(count(lit(1)).as("n_total"))
-    val w = Window.partitionBy("lang").orderBy(col("score").desc, col("term").asc)
-    tf.join(df, Seq("term")).crossJoin(broadcast(n))
-      .withColumn("score",
-        r6(log(lit(1) + col("tf")) * log(col("n_total").cast("double") / col("df"))))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5)
-      .select("lang", "term", "score", "rn")
-      .orderBy("lang", "rn")
+  val llmTfidfTop: Key = Key.sql("llm_tfidf_top") { t =>
+    s"""WITH tok AS (SELECT doc_id, lang, ${t.unnest.toUpperCase}(${t.split}(text, ' ')) AS term FROM ${t("documents")}),
+       |tf AS (SELECT lang, term, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
+       |df AS (SELECT term, COUNT(DISTINCT doc_id) AS df FROM tok GROUP BY 1),
+       |n AS (SELECT COUNT(*) AS n_total FROM ${t("documents")})
+       |SELECT lang, term, score, rn FROM (
+       |  SELECT lang, term,
+       |    ROUND(LN(1 + tf) * LN(CAST(n_total AS DOUBLE) / df), 6) AS score,
+       |    ROW_NUMBER() OVER (PARTITION BY lang
+       |      ORDER BY ROUND(LN(1 + tf) * LN(CAST(n_total AS DOUBLE) / df), 6) DESC, term ASC) AS rn
+       |  FROM tf JOIN df USING (term) CROSS JOIN n)
+       |WHERE rn <= 5 ORDER BY lang, rn""".stripMargin
   }
-
-  val llmTfidfTopOracle: String =
-    """WITH tok AS (SELECT doc_id, lang, UNNEST(string_split(text, ' ')) AS term FROM documents),
-      |tf AS (SELECT lang, term, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
-      |df AS (SELECT term, COUNT(DISTINCT doc_id) AS df FROM tok GROUP BY 1),
-      |n AS (SELECT COUNT(*) AS n_total FROM documents)
-      |SELECT lang, term, score, rn FROM (
-      |  SELECT lang, term,
-      |    ROUND(LN(1 + tf) * LN(CAST(n_total AS DOUBLE) / df), 6) AS score,
-      |    ROW_NUMBER() OVER (PARTITION BY lang
-      |      ORDER BY ROUND(LN(1 + tf) * LN(CAST(n_total AS DOUBLE) / df), 6) DESC, term ASC) AS rn
-      |  FROM tf JOIN df USING (term) CROSS JOIN n)
-      |WHERE rn <= 5 ORDER BY lang, rn""".stripMargin
 
   /** Top-50 bigram counts (with multiplicity) across the corpus. */
   /** All n-token windows (stride 1, space-joined) of token-array column
@@ -101,51 +84,33 @@ object LlmText {
       |      FROM (SELECT string_split(text, ' ') AS t FROM documents))
       |GROUP BY 1 ORDER BY cnt DESC, bigram ASC LIMIT 50""".stripMargin
 
-  /** Character-n-gram-heuristic language ID: the 'e'-frequency and mean
-    * token length thresholds are deterministic in both engines; accuracy
-    * is secondary to plumbing (synthetic corpus shares one vocabulary). */
-  /** The ONE lang-ID heuristic definition (Spark side; SQL mirror in
-    * [[predLangCteSql]]) shared by `llm_lang_id` and
-    * `llm_langid_eval` so a threshold tweak cannot drift between the
-    * prediction key and its evaluation key. */
-  private[operators] def withPredLang(df: DataFrame): DataFrame =
-    df.withColumn("len_c", length(col("text")))
-      .withColumn("n_e", col("len_c") - length(regexp_replace(col("text"), "e", "")))
-      // greatest(len, 1): empty text scores ratio 0 on BOTH engines —
-      // unguarded, Spark's integer `div 0` yields NULL while DuckDB's
-      // `// 0` throws, a latent parity break
-      .withColumn("e_ratio_e6", expr("(1000000 * cast(n_e as bigint)) div greatest(len_c, 1)"))
-      .withColumn("pred_lang",
-        when(col("e_ratio_e6") >= 100000, "en")
-          .when(col("e_ratio_e6") >= 80000, "de")
-          .when(col("e_ratio_e6") >= 60000, "fr")
-          .when(col("e_ratio_e6") >= 40000, "es")
-          .otherwise("zh"))
+  /** The ONE lang-ID heuristic, spliced as the `pred` CTE by
+    * `llm_lang_id` and `llm_langid_eval` so a threshold tweak cannot
+    * drift between the prediction key and its evaluation key: the
+    * 'e'-frequency thresholds are deterministic in both engines
+    * (accuracy is secondary to plumbing: the synthetic corpus shares
+    * one vocabulary). GREATEST(len, 1): empty text scores ratio 0 on
+    * both engines; unguarded, Spark's integer `div 0` yields NULL
+    * while DuckDB's `// 0` throws. */
+  private[operators] def predLangCteSql(t: Key.Dialect): String =
+    s"""pred AS (SELECT doc_id, lang, e_ratio_e6,
+       |    CASE WHEN e_ratio_e6 >= 100000 THEN 'en' WHEN e_ratio_e6 >= 80000 THEN 'de'
+       |         WHEN e_ratio_e6 >= 60000 THEN 'fr' WHEN e_ratio_e6 >= 40000 THEN 'es'
+       |         ELSE 'zh' END AS pred_lang
+       |  FROM (SELECT doc_id, lang,
+       |          (1000000 * CAST(length(text) - length(replace(text, 'e', '')) AS BIGINT))
+       |            ${t.idiv} GREATEST(length(text), 1) AS e_ratio_e6
+       |        FROM ${t("documents")}))""".stripMargin
 
-  /** SQL mirror of [[withPredLang]]; splice as the `pred` CTE. */
-  private[operators] val predLangCteSql: String =
-    """pred AS (SELECT doc_id, lang, e_ratio_e6,
-      |    CASE WHEN e_ratio_e6 >= 100000 THEN 'en' WHEN e_ratio_e6 >= 80000 THEN 'de'
-      |         WHEN e_ratio_e6 >= 60000 THEN 'fr' WHEN e_ratio_e6 >= 40000 THEN 'es'
-      |         ELSE 'zh' END AS pred_lang
-      |  FROM (SELECT doc_id, lang,
-      |          (1000000 * CAST(length(text) - length(replace(text, 'e', '')) AS BIGINT))
-      |            // GREATEST(length(text), 1) AS e_ratio_e6
-      |        FROM documents))""".stripMargin
-
-  def llmLangId(spark: SparkSession, sfDir: String): DataFrame =
-    withPredLang(documents(spark, sfDir))
-      .select(col("doc_id"), col("e_ratio_e6"), col("pred_lang"),
-        (col("pred_lang") === col("lang")).cast("int").as("correct"))
-      .orderBy("doc_id")
-
-  val llmLangIdOracle: String =
-    s"""WITH $predLangCteSql
+  /** Each document's language by the [[predLangCteSql]] heuristic. */
+  val llmLangId: Key = Key.sql("llm_lang_id") { t =>
+    s"""WITH ${predLangCteSql(t)}
        |SELECT doc_id, e_ratio_e6, pred_lang, CAST(pred_lang = lang AS INT) AS correct
        |FROM pred ORDER BY doc_id""".stripMargin
+  }
 
   /** CLASSIFIER EVALUATION — per-language precision / recall / F1 of
-    * the [[withPredLang]] heuristic against the labeled `lang` column,
+    * the [[predLangCteSql]] heuristic against the labeled `lang` column,
     * in exact ppm integers. The confusion matrix is one languages²-
     * bounded aggregate; the per-class margins are two tiny re-
     * aggregations of it joined back on the class — at 100 TB the only
@@ -155,26 +120,8 @@ object LlmText {
     * harmonic mean. Classes are the labels OBSERVED as actuals, so a
     * class the model never predicts still reports (recall 0), the
     * asymmetry an eval harness must not hide. */
-  def llmLangidEval(spark: SparkSession, sfDir: String): DataFrame = {
-    val conf = withPredLang(documents(spark, sfDir))
-      .groupBy(col("lang"), col("pred_lang")).agg(count(lit(1)).as("c"))
-    val act = conf.groupBy(col("lang").as("cls")).agg(sum(col("c")).as("n_actual"))
-    val prd = conf.groupBy(col("pred_lang").as("cls")).agg(sum(col("c")).as("n_pred"))
-    val tp = conf.filter(col("lang") === col("pred_lang"))
-      .select(col("lang").as("cls"), col("c").as("tp"))
-    act.join(prd, Seq("cls"), "left").join(tp, Seq("cls"), "left")
-      .na.fill(0L, Seq("n_pred", "tp"))
-      .withColumn("precision_ppm", expr("(1000000 * tp) div greatest(n_pred, 1)"))
-      .withColumn("recall_ppm", expr("(1000000 * tp) div greatest(n_actual, 1)"))
-      .select(col("cls"), col("n_actual"), col("n_pred"), col("tp"),
-        col("precision_ppm"), col("recall_ppm"),
-        expr("(2 * precision_ppm * recall_ppm) div greatest(precision_ppm + recall_ppm, 1)")
-          .as("f1_ppm"))
-      .orderBy("cls")
-  }
-
-  val llmLangidEvalOracle: String =
-    s"""WITH $predLangCteSql,
+  val llmLangidEval: Key = Key.sql("llm_langid_eval") { t =>
+    s"""WITH ${predLangCteSql(t)},
        |conf AS (SELECT lang, pred_lang, CAST(COUNT(*) AS BIGINT) AS c FROM pred GROUP BY 1, 2),
        |act AS (SELECT lang AS cls, CAST(SUM(c) AS BIGINT) AS n_actual FROM conf GROUP BY 1),
        |prd AS (SELECT pred_lang AS cls, CAST(SUM(c) AS BIGINT) AS n_pred FROM conf GROUP BY 1),
@@ -183,11 +130,12 @@ object LlmText {
        |    COALESCE(prd.n_pred, 0) AS n_pred, COALESCE(tp.tp, 0) AS tp
        |  FROM act LEFT JOIN prd ON act.cls = prd.cls LEFT JOIN tp ON act.cls = tp.cls),
        |m AS (SELECT cls, n_actual, n_pred, tp,
-       |    (1000000 * tp) // GREATEST(n_pred, 1) AS precision_ppm,
-       |    (1000000 * tp) // GREATEST(n_actual, 1) AS recall_ppm FROM j)
+       |    (1000000 * tp) ${t.idiv} GREATEST(n_pred, 1) AS precision_ppm,
+       |    (1000000 * tp) ${t.idiv} GREATEST(n_actual, 1) AS recall_ppm FROM j)
        |SELECT cls, n_actual, n_pred, tp, precision_ppm, recall_ppm,
-       |  (2 * precision_ppm * recall_ppm) // GREATEST(precision_ppm + recall_ppm, 1) AS f1_ppm
+       |  (2 * precision_ppm * recall_ppm) ${t.idiv} GREATEST(precision_ppm + recall_ppm, 1) AS f1_ppm
        |FROM m ORDER BY cls""".stripMargin
+  }
 
   /** Heuristic quality score from length, stopword ratio, and mean
     * token length (the usual pre-training corpus filters). */
@@ -207,15 +155,15 @@ object LlmText {
           least(expr("(300000 * (n_chars - (n_tokens - 1))) div (8 * n_tokens)"), lit(300000L)))
 
   /** SQL mirror of [[withQualityCols]] over the documents table. */
-  private[operators] val qualityScoredSql: String =
-    """SELECT doc_id, lang, n_chars, n_tokens, n_stop,
-      |  LEAST(n_tokens, 100) * 4000
-      |    + (300000 * (n_tokens - n_stop)) // n_tokens
-      |    + LEAST((300000 * (n_chars - (n_tokens - 1))) // (8 * n_tokens), 300000) AS quality_e6
-      |FROM (
-      |  SELECT doc_id, lang, n_chars, CAST(len(t) AS BIGINT) AS n_tokens,
-      |    CAST(len(list_filter(t, x -> x = 'the' OR x = 'a')) AS BIGINT) AS n_stop
-      |  FROM (SELECT doc_id, lang, n_chars, string_split(text, ' ') AS t FROM documents))""".stripMargin
+  private[operators] def qualityScoredSql(t: Key.Dialect): String =
+    s"""SELECT doc_id, lang, n_chars, n_tokens, n_stop,
+       |  LEAST(n_tokens, 100) * 4000
+       |    + (300000 * (n_tokens - n_stop)) ${t.idiv} n_tokens
+       |    + LEAST((300000 * (n_chars - (n_tokens - 1))) ${t.idiv} (8 * n_tokens), 300000) AS quality_e6
+       |FROM (
+       |  SELECT doc_id, lang, n_chars, CAST(len(t) AS BIGINT) AS n_tokens,
+       |    CAST(len(list_filter(t, x -> x = 'the' OR x = 'a')) AS BIGINT) AS n_stop
+       |  FROM (SELECT doc_id, lang, n_chars, ${t.split}(text, ' ') AS t FROM ${t("documents")}))""".stripMargin
 
   def llmQualityScore(spark: SparkSession, sfDir: String): DataFrame =
     withQualityCols(documents(spark, sfDir))
@@ -230,7 +178,7 @@ object LlmText {
        |  (1000000 * n_stop) // n_tokens AS stop_ratio_e6,
        |  (1000000 * (n_chars - (n_tokens - 1))) // n_tokens AS avg_tok_len_e6,
        |  quality_e6
-       |FROM ($qualityScoredSql)
+       |FROM (${qualityScoredSql(Key.duckdb)})
        |ORDER BY doc_id""".stripMargin
 
   /** REPETITION FILTER (the Gopher corpus-quality rules, Rae et al.
@@ -539,7 +487,7 @@ object LlmText {
        |  JOIN n na ON doc_a = na.doc_id JOIN n nb ON doc_b = nb.doc_id
        |  WHERE ROUND(CAST(inter AS DOUBLE) / (na.n_sh + nb.n_sh - inter), 6) >= 0.9),
        |keep AS (SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
-       |scored AS ($qualityScoredSql)
+       |scored AS (${qualityScoredSql(Key.duckdb)})
        |SELECT doc_id, lang, n_chars, quality_e6 FROM scored
        |WHERE doc_id IN (SELECT doc_id FROM keep)
        |  AND doc_id NOT IN (SELECT doc_id FROM near_drops)
@@ -605,21 +553,13 @@ object LlmText {
     * the doc id (hex-prefix < '4' ⇔ first 4 bits < 4/16). Hash-based
     * sampling shuffles nothing, scales embarrassingly, and re-runs
     * byte-identically — unlike rand()-based sampling. */
-  def llmSampleStratified(spark: SparkSession, sfDir: String): DataFrame =
-    documents(spark, sfDir)
-      .filter(substring(md5(concat(lit("mix1:"), col("doc_id").cast("string"))), 1, 1) < "4")
-      .groupBy("lang")
-      .agg(count(lit(1)).as("n_sampled"),
-        min(col("doc_id")).as("min_doc_id"),
-        max(col("doc_id")).as("max_doc_id"))
-      .orderBy("lang")
-
-  val llmSampleStratifiedOracle: String =
-    """SELECT lang, COUNT(*) AS n_sampled,
-      |  MIN(doc_id) AS min_doc_id, MAX(doc_id) AS max_doc_id
-      |FROM documents
-      |WHERE substr(md5('mix1:' || CAST(doc_id AS VARCHAR)), 1, 1) < '4'
-      |GROUP BY lang ORDER BY lang""".stripMargin
+  val llmSampleStratified: Key = Key.sql("llm_sample_stratified") { t =>
+    s"""SELECT lang, COUNT(*) AS n_sampled,
+       |  MIN(doc_id) AS min_doc_id, MAX(doc_id) AS max_doc_id
+       |FROM ${t("documents")}
+       |WHERE substr(md5('mix1:' || CAST(doc_id AS ${t.string})), 1, 1) < '4'
+       |GROUP BY lang ORDER BY lang""".stripMargin
+  }
 
   /** UNIGRAM LANGUAGE-MODEL quality score (the CCNet move, Wenzek et
     * al. 2020: rank web documents by LM perplexity and keep the
@@ -648,31 +588,16 @@ object LlmText {
     * r14 sf1 scale rehearsal (50k docs → 5 hits). Exact integers
     * cannot drift at any corpus size.
     */
-  def llmLmScore(spark: SparkSession, sfDir: String): DataFrame = {
-    val toks = documents(spark, sfDir)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-    val freqs = toks.groupBy("tok").agg(count(lit(1)).as("tf"))
-    val totals = toks.agg(count(lit(1)).as("total"))
-    toks.join(broadcast(freqs), Seq("tok"))
-      .crossJoin(broadcast(totals))
-      .withColumn("nll6",
-        round(-log(col("tf").cast("double") / col("total").cast("double")), 6)
-          .cast("decimal(18,6)"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_tokens"),
-        expr("cast(sum(nll6) * 1000000 as bigint) div count(1)").as("lm_score_unats"))
-      .orderBy("doc_id")
+  val llmLmScore: Key = Key.sql("llm_lm_score") { t =>
+    s"""WITH toks AS (SELECT doc_id, ${t.unnest}(${t.split}(text, ' ')) AS tok FROM ${t("documents")}),
+       |freqs AS (SELECT tok, COUNT(*) AS tf FROM toks GROUP BY tok),
+       |tot AS (SELECT COUNT(*) AS total FROM toks)
+       |SELECT doc_id, COUNT(*) AS n_tokens,
+       |  CAST(CAST(SUM(CAST(ROUND(-LN(CAST(tf AS DOUBLE) / total), 6) AS DECIMAL(18,6))) * 1000000 AS BIGINT)
+       |    ${t.idiv} COUNT(*) AS BIGINT) AS lm_score_unats
+       |FROM toks JOIN freqs USING (tok), tot
+       |GROUP BY doc_id ORDER BY doc_id""".stripMargin
   }
-
-  val llmLmScoreOracle: String =
-    """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-      |freqs AS (SELECT tok, COUNT(*) AS tf FROM toks GROUP BY tok),
-      |tot AS (SELECT COUNT(*) AS total FROM toks)
-      |SELECT doc_id, COUNT(*) AS n_tokens,
-      |  CAST(CAST(SUM(CAST(ROUND(-LN(CAST(tf AS DOUBLE) / total), 6) AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-      |    // COUNT(*) AS BIGINT) AS lm_score_unats
-      |FROM toks JOIN freqs USING (tok), tot
-      |GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
   /** REPEATED-SPAN detection (the Lee et al. 2021 "Deduplicating
     * Training Data Makes Language Models Better" move, arXiv:2107.06499:
@@ -774,25 +699,14 @@ object LlmText {
     * Returns every document containing BOTH probe terms with the
     * per-document term frequencies (the ranking signal a scorer
     * consumes). */
-  def llmInvertedIndex(spark: SparkSession, sfDir: String): DataFrame = {
-    val postings = documents(spark, sfDir)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      .groupBy("term", "doc_id")
-      .agg(count(lit(1)).as("tf"))
-    val a = postings.filter(col("term") === "vector")
-      .select(col("doc_id"), col("tf").as("tf_vector"))
-    val b = postings.filter(col("term") === "merge")
-      .select(col("doc_id"), col("tf").as("tf_merge"))
-    a.join(b, Seq("doc_id")).orderBy("doc_id")
+  val llmInvertedIndex: Key = Key.sql("llm_inverted_index") { t =>
+    s"""WITH t AS (SELECT doc_id, ${t.unnest}(${t.split}(text, ' ')) AS term FROM ${t("documents")}),
+       |p AS (SELECT term, doc_id, COUNT(*) AS tf FROM t GROUP BY term, doc_id)
+       |SELECT a.doc_id AS doc_id, a.tf AS tf_vector, b.tf AS tf_merge
+       |FROM p a JOIN p b ON a.doc_id = b.doc_id
+       |WHERE a.term = 'vector' AND b.term = 'merge'
+       |ORDER BY a.doc_id""".stripMargin
   }
-
-  val llmInvertedIndexOracle: String =
-    """WITH t AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-      |p AS (SELECT term, doc_id, COUNT(*) AS tf FROM t GROUP BY term, doc_id)
-      |SELECT a.doc_id AS doc_id, a.tf AS tf_vector, b.tf AS tf_merge
-      |FROM p a JOIN p b ON a.doc_id = b.doc_id
-      |WHERE a.term = 'vector' AND b.term = 'merge'
-      |ORDER BY a.doc_id""".stripMargin
 
   /** BM25 TOP-K — the ranking layer over llm_inverted_index's posting
     * lists (Lucene's default scorer, the retrieval baseline every dense
@@ -1452,43 +1366,23 @@ object LlmText {
     * ln() sums carry the `llm_entropy_filter` caveat (last-ulp
     * engine drift, r6-rounded away). One term-keyed shuffle + one
     * k-row window per language. */
-  def llmTextZipf(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val tok = documents(spark, sfDir)
-      .select(col("lang"), explode(split(col("text"), " ")).as("term"))
-    val tf = tok.groupBy("lang", "term").agg(count(lit(1)).as("tf"))
-    val w = Window.partitionBy("lang").orderBy(col("tf").desc, col("term").asc)
-    tf.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 200)
-      .select(col("lang"),
-        expr("LN(CAST(rank AS DOUBLE))").as("x"),
-        expr("LN(CAST(tf AS DOUBLE))").as("y"))
-      .groupBy("lang")
-      .agg(count(lit(1)).as("n_terms"),
-        sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(expr("x * y")).as("sxy"), sum(expr("x * x")).as("sxx"))
-      .select(col("lang"), col("n_terms"),
-        expr("ROUND((CAST(n_terms AS DOUBLE) * sxy - sx * sy) / (CAST(n_terms AS DOUBLE) * sxx - sx * sx), 6)")
-          .as("zipf_slope"))
-      .orderBy("lang")
+  val llmTextZipf: Key = Key.sql("llm_text_zipf") { t =>
+    s"""WITH tok AS (SELECT lang, ${t.unnest.toUpperCase}(${t.split}(text, ' ')) AS term FROM ${t("documents")}),
+       |tf AS (SELECT lang, term, CAST(COUNT(*) AS BIGINT) AS tf FROM tok GROUP BY 1, 2),
+       |rk AS (SELECT lang, term, tf, ROW_NUMBER() OVER (PARTITION BY lang
+       |    ORDER BY tf DESC, term ASC) AS rank FROM tf),
+       |xy AS (SELECT lang, LN(CAST(rank AS DOUBLE)) AS x, LN(CAST(tf AS DOUBLE)) AS y
+       |  FROM rk WHERE rank <= 200),
+       |m AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_terms,
+       |    SUM(x) AS sx, SUM(y) AS sy, SUM(x * y) AS sxy, SUM(x * x) AS sxx
+       |  FROM xy GROUP BY lang)
+       |SELECT lang, n_terms,
+       |  ROUND((CAST(n_terms AS DOUBLE) * sxy - sx * sy) / (CAST(n_terms AS DOUBLE) * sxx - sx * sx), 6) AS zipf_slope
+       |FROM m ORDER BY lang""".stripMargin
   }
 
-  val llmTextZipfOracle: String =
-    """WITH tok AS (SELECT lang, UNNEST(string_split(text, ' ')) AS term FROM documents),
-      |tf AS (SELECT lang, term, CAST(COUNT(*) AS BIGINT) AS tf FROM tok GROUP BY 1, 2),
-      |rk AS (SELECT lang, term, tf, ROW_NUMBER() OVER (PARTITION BY lang
-      |    ORDER BY tf DESC, term ASC) AS rank FROM tf),
-      |xy AS (SELECT lang, LN(CAST(rank AS DOUBLE)) AS x, LN(CAST(tf AS DOUBLE)) AS y
-      |  FROM rk WHERE rank <= 200),
-      |m AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_terms,
-      |    SUM(x) AS sx, SUM(y) AS sy, SUM(x * y) AS sxy, SUM(x * x) AS sxx
-      |  FROM xy GROUP BY lang)
-      |SELECT lang, n_terms,
-      |  ROUND((CAST(n_terms AS DOUBLE) * sxy - sx * sy) / (CAST(n_terms AS DOUBLE) * sxx - sx * sx), 6) AS zipf_slope
-      |FROM m ORDER BY lang""".stripMargin
-
   val keys: Seq[Key] = Seq(
-    Key("llm_text_zipf", llmTextZipf, llmTextZipfOracle),
+    llmTextZipf,
     Key("llm_feature_hash", llmFeatureHash, llmFeatureHashOracle),
     Key("llm_keywords", llmKeywords, llmKeywordsOracle),
     Key("llm_cms_heavy_hitters", llmCmsHeavyHitters, llmCmsHeavyHittersOracle),
@@ -1499,21 +1393,21 @@ object LlmText {
     Key("llm_ngram_novelty", llmNgramNovelty, llmNgramNoveltyOracle),
     Key("llm_shard_assign", llmShardAssign, llmShardAssignOracle),
     Key("llm_entropy_filter", llmEntropyFilter, llmEntropyFilterOracle),
-    Key("llm_inverted_index", llmInvertedIndex, llmInvertedIndexOracle),
+    llmInvertedIndex,
     Key("llm_bm25_topk", llmBm25Topk, llmBm25TopkOracle),
     Key("llm_decontaminate", llmDecontaminate, llmDecontaminateOracle),
     Key("llm_pii_scrub", llmPiiScrub, llmPiiScrubOracle),
     Key("llm_pack_chunks", llmPackChunks, llmPackChunksOracle),
-    Key("llm_sample_stratified", llmSampleStratified, llmSampleStratifiedOracle),
+    llmSampleStratified,
     Key("llm_dedup_spans", llmDedupSpans, llmDedupSpansOracle),
     Key("llm_dataset_mix", llmDatasetMix, llmDatasetMixOracle),
-    Key("llm_lm_score", llmLmScore, llmLmScoreOracle),
+    llmLmScore,
     Key("llm_curation", llmCuration, llmCurationOracle),
     Key("llm_text_stats", llmTextStats, llmTextStatsOracle),
-    Key("llm_tfidf_top", llmTfidfTop, llmTfidfTopOracle),
+    llmTfidfTop,
     Key("llm_ngrams", llmNgrams, llmNgramsOracle),
-    Key("llm_lang_id", llmLangId, llmLangIdOracle),
-    Key("llm_langid_eval", llmLangidEval, llmLangidEvalOracle),
+    llmLangId,
+    llmLangidEval,
     Key("llm_quality_score", llmQualityScore, llmQualityScoreOracle),
     Key("llm_repetition_filter", llmRepetitionFilter, llmRepetitionFilterOracle),
     Key("llm_vocab_prune", llmVocabPrune, llmVocabPruneOracle),

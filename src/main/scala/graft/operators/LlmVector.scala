@@ -141,12 +141,6 @@ object LlmVector {
       |  FROM dists)
       |WHERE rn = 1 ORDER BY vec_id""".stripMargin
 
-  /** IVF-style ANN: the label centroids act as the coarse quantizer —
-    * every vector is assigned to its nearest centroid (inverted cells),
-    * and a query searches only its own cell. At 100 TB the cell id is
-    * the partition/bucketing key, so a query touches one partition;
-    * more cells (a real k-means) shrink each list. Deterministic here
-    * because the quantizer is the (r6-stabilized) label-centroid set. */
   /** CENTROID DRIFT MONITOR — the ML-ops check between two corpus
     * vintages: per label, the L2 distance between the embedding
     * centroid of the FIRST half of the id range and the SECOND half
@@ -201,6 +195,12 @@ object LlmVector {
       |FROM c1 JOIN c2 USING (label, pos)
       |GROUP BY label ORDER BY label""".stripMargin
 
+  /** IVF-style ANN: the label centroids act as the coarse quantizer —
+    * every vector is assigned to its nearest centroid (inverted cells),
+    * and a query searches only its own cell. At 100 TB the cell id is
+    * the partition/bucketing key, so a query touches one partition;
+    * more cells (a real k-means) shrink each list. Deterministic here
+    * because the quantizer is the (r6-stabilized) label-centroid set. */
   def llmAnnIvf(spark: SparkSession, sfDir: String): DataFrame = {
     val ex = embeddings(spark, sfDir)
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "v")))

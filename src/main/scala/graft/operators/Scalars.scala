@@ -14,29 +14,17 @@ import graft.sources.Tables._
 object Scalars {
 
   /** concat / upper / lower / trim / lpad / substring / length / replace. */
-  def strFuncs(spark: SparkSession, sfDir: String): DataFrame =
-    customer(spark, sfDir)
-      .select(col("c_custkey"),
-        concat(col("c_name"), lit("-"), col("c_mktsegment")).as("tagged"),
-        upper(col("c_name")).as("up"),
-        lower(col("c_mktsegment")).as("lo"),
-        lpad(col("c_custkey").cast("string"), 8, "0").as("padded"),
-        substring(col("c_name"), 1, 8).as("prefix"),
-        length(col("c_name")).as("name_len"),
-        regexp_replace(col("c_name"), lit("Customer"), lit("Cust")).as("short_name"),
-        trim(concat(lit("  "), col("c_mktsegment"), lit("  "))).as("trimmed"))
-      .orderBy("c_custkey")
-
-  val strFuncsOracle: String =
-    """SELECT c_custkey,
-      |  c_name || '-' || c_mktsegment AS tagged,
-      |  UPPER(c_name) AS up, LOWER(c_mktsegment) AS lo,
-      |  LPAD(CAST(c_custkey AS VARCHAR), 8, '0') AS padded,
-      |  SUBSTRING(c_name, 1, 8) AS prefix,
-      |  LENGTH(c_name) AS name_len,
-      |  REPLACE(c_name, 'Customer', 'Cust') AS short_name,
-      |  TRIM('  ' || c_mktsegment || '  ') AS trimmed
-      |FROM customer ORDER BY c_custkey""".stripMargin
+  val strFuncs: Key = Key.sql("str_funcs") { t =>
+    s"""SELECT c_custkey,
+       |  c_name || '-' || c_mktsegment AS tagged,
+       |  UPPER(c_name) AS up, LOWER(c_mktsegment) AS lo,
+       |  LPAD(CAST(c_custkey AS ${t.string}), 8, '0') AS padded,
+       |  SUBSTRING(c_name, 1, 8) AS prefix,
+       |  LENGTH(c_name) AS name_len,
+       |  REPLACE(c_name, 'Customer', 'Cust') AS short_name,
+       |  TRIM('  ' || c_mktsegment || '  ') AS trimmed
+       |FROM ${t("customer")} ORDER BY c_custkey""".stripMargin
+  }
 
   /** regexp_extract / regexp_replace / rlike. DuckDB regexp_replace
     * needs the 'g' flag to match Spark's replace-all semantics. */
@@ -153,18 +141,11 @@ object Scalars {
       |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
 
   /** Generator/UDTF surface: tokenize + explode → top-100 token counts. */
-  def strSplitExplode(spark: SparkSession, sfDir: String): DataFrame =
-    documents(spark, sfDir)
-      .select(explode(split(col("text"), " ")).as("token"))
-      .groupBy("token")
-      .agg(count(lit(1)).as("cnt"))
-      .orderBy(col("cnt").desc, col("token").asc)
-      .limit(100)
-
-  val strSplitExplodeOracle: String =
-    """SELECT token, COUNT(*) AS cnt
-      |FROM (SELECT UNNEST(string_split(text, ' ')) AS token FROM documents)
-      |GROUP BY token ORDER BY cnt DESC, token ASC LIMIT 100""".stripMargin
+  val strSplitExplode: Key = Key.sql("str_split_explode") { t =>
+    s"""SELECT token, COUNT(*) AS cnt
+       |FROM (SELECT ${t.unnest.toUpperCase}(${t.split}(text, ' ')) AS token FROM ${t("documents")})
+       |GROUP BY token ORDER BY cnt DESC, token ASC LIMIT 100""".stripMargin
+  }
 
   /** MapType surface: build a map, probe it (element_at/size), and
     * explode it back to rows (row output keeps the oracle engine-
@@ -250,14 +231,14 @@ object Scalars {
     Key("scalar_bitwise_funcs", bitwiseFuncs, bitwiseFuncsOracle),
     mapFuncs,
     structFuncs,
-    Key("str_funcs", strFuncs, strFuncsOracle),
+    strFuncs,
     Key("str_regexp", strRegexp, strRegexpOracle),
     Key("date_funcs", dateFuncs, dateFuncsOracle),
     mathFuncs,
     condFuncs,
     Key("array_funcs", arrayFuncs, arrayFuncsOracle),
     Key("json_funcs", jsonFuncs, jsonFuncsOracle),
-    Key("str_split_explode", strSplitExplode, strSplitExplodeOracle))
+    strSplitExplode)
 
   val queries: Map[String, Key.Run] = Key.queries(keys)
 }

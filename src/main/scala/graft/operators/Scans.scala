@@ -35,13 +35,9 @@ object Scans {
   /** events read through the ns-loader (SURVEY.md §1.3): Spark 4 rejects
     * TIMESTAMP(NANOS) parquet, so we read nanos as long and truncate to
     * µs exactly as DuckDB's reader does. */
-  def scanEventsNs(spark: SparkSession, sfDir: String): DataFrame =
-    events(spark, sfDir)
-      .select("event_id", "ts", "event_type")
-      .orderBy("event_id")
-
-  val scanEventsNsOracle: String =
-    "SELECT event_id, ts, event_type FROM events ORDER BY event_id"
+  val scanEventsNs: Key = Key.sql("scan_events_ns") { t =>
+    s"SELECT event_id, ts, event_type FROM ${t("events")} ORDER BY event_id"
+  }
 
   /** HBase-cell emulation (SURVEY.md §2.A R2): unpivot supplier to
     * (rowkey, qualifier, value) long format via the stack() generator. */
@@ -280,49 +276,27 @@ object Scans {
     * throughout; exact distinct is the one shuffle, and
     * `agg_approx_hll` is the documented sketch fallback when even
     * that is too hot. */
-  def scanProfile(spark: SparkSession, sfDir: String): DataFrame = {
-    val li = lineitem(spark, sfDir)
-    val key = li.agg(
-      lit("l_orderkey").as("col"), count(lit(1)).as("n_rows"),
-      (count(lit(1)) - count(col("l_orderkey"))).as("n_null"),
-      countDistinct(col("l_orderkey")).as("n_distinct"),
-      min(col("l_orderkey")).cast("string").as("min_v"),
-      max(col("l_orderkey")).cast("string").as("max_v"))
-    val flag = li.agg(
-      lit("l_returnflag").as("col"), count(lit(1)).as("n_rows"),
-      (count(lit(1)) - count(col("l_returnflag"))).as("n_null"),
-      countDistinct(col("l_returnflag")).as("n_distinct"),
-      min(col("l_returnflag")).cast("string").as("min_v"),
-      max(col("l_returnflag")).cast("string").as("max_v"))
-    val ship = li.agg(
-      lit("l_shipdate").as("col"), count(lit(1)).as("n_rows"),
-      (count(lit(1)) - count(col("l_shipdate"))).as("n_null"),
-      countDistinct(col("l_shipdate")).as("n_distinct"),
-      min(col("l_shipdate")).cast("date").cast("string").as("min_v"),
-      max(col("l_shipdate")).cast("date").cast("string").as("max_v"))
-    key.unionByName(flag).unionByName(ship).orderBy("col")
+  val scanProfile: Key = Key.sql("scan_profile") { t =>
+    s"""SELECT * FROM (
+       |  SELECT 'l_orderkey' AS col, COUNT(*) AS n_rows,
+       |    CAST(COUNT(*) - COUNT(l_orderkey) AS BIGINT) AS n_null,
+       |    CAST(COUNT(DISTINCT l_orderkey) AS BIGINT) AS n_distinct,
+       |    CAST(MIN(l_orderkey) AS ${t.string}) AS min_v,
+       |    CAST(MAX(l_orderkey) AS ${t.string}) AS max_v
+       |  FROM ${t("lineitem")}
+       |  UNION ALL
+       |  SELECT 'l_returnflag', COUNT(*), CAST(COUNT(*) - COUNT(l_returnflag) AS BIGINT),
+       |    CAST(COUNT(DISTINCT l_returnflag) AS BIGINT),
+       |    CAST(MIN(l_returnflag) AS ${t.string}), CAST(MAX(l_returnflag) AS ${t.string})
+       |  FROM ${t("lineitem")}
+       |  UNION ALL
+       |  SELECT 'l_shipdate', COUNT(*), CAST(COUNT(*) - COUNT(l_shipdate) AS BIGINT),
+       |    CAST(COUNT(DISTINCT l_shipdate) AS BIGINT),
+       |    CAST(CAST(MIN(l_shipdate) AS DATE) AS ${t.string}),
+       |    CAST(CAST(MAX(l_shipdate) AS DATE) AS ${t.string})
+       |  FROM ${t("lineitem")}
+       |) ORDER BY col""".stripMargin
   }
-
-  val scanProfileOracle: String =
-    """SELECT * FROM (
-      |  SELECT 'l_orderkey' AS col, COUNT(*) AS n_rows,
-      |    CAST(COUNT(*) - COUNT(l_orderkey) AS BIGINT) AS n_null,
-      |    CAST(COUNT(DISTINCT l_orderkey) AS BIGINT) AS n_distinct,
-      |    CAST(MIN(l_orderkey) AS VARCHAR) AS min_v,
-      |    CAST(MAX(l_orderkey) AS VARCHAR) AS max_v
-      |  FROM lineitem
-      |  UNION ALL
-      |  SELECT 'l_returnflag', COUNT(*), CAST(COUNT(*) - COUNT(l_returnflag) AS BIGINT),
-      |    CAST(COUNT(DISTINCT l_returnflag) AS BIGINT),
-      |    CAST(MIN(l_returnflag) AS VARCHAR), CAST(MAX(l_returnflag) AS VARCHAR)
-      |  FROM lineitem
-      |  UNION ALL
-      |  SELECT 'l_shipdate', COUNT(*), CAST(COUNT(*) - COUNT(l_shipdate) AS BIGINT),
-      |    CAST(COUNT(DISTINCT l_shipdate) AS BIGINT),
-      |    CAST(CAST(MIN(l_shipdate) AS DATE) AS VARCHAR),
-      |    CAST(CAST(MAX(l_shipdate) AS DATE) AS VARCHAR)
-      |  FROM lineitem
-      |) ORDER BY col""".stripMargin
 
   /** SQL FRONT-END — the same engine through `spark.sql` instead of the
     * DataFrame API: the star-revenue rollup written as the multi-CTE
@@ -602,14 +576,14 @@ object Scans {
     * HUGEINT intermediates (1e6 × a month's revenue sum overflows
     * BIGINT at scale — the `agg_ks_test` headroom rule), so both
     * engines produce identical integers with zero float drift. */
-  val sqlQ14PromoShare: Key = ppmKey("sql_q14_promo_share") { (t, ppm, div) =>
+  val sqlQ14PromoShare: Key = Key.sql("sql_q14_promo_share") { t =>
     s"""SELECT year(l_shipdate) * 100 + month(l_shipdate) AS ym,
-       |  CAST(($ppm *
+       |  CAST((1000000::${t.int128} *
        |        SUM(CASE WHEN p_type = 'PROMO'
        |            THEN CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
        |                 * (100 - CAST(CAST(l_discount AS DECIMAL(4,2)) * 100 AS BIGINT))
        |            ELSE 0 END))
-       |    $div SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+       |    ${t.idiv} SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
        |           * (100 - CAST(CAST(l_discount AS DECIMAL(4,2)) * 100 AS BIGINT)))
        |    AS BIGINT) AS promo_ppm
        |FROM ${t("lineitem")} JOIN ${t("part")} ON l_partkey = p_partkey
@@ -618,14 +592,6 @@ object Scans {
        |GROUP BY year(l_shipdate) * 100 + month(l_shipdate)
        |ORDER BY ym""".stripMargin
   }
-
-  /** The ppm ratio of q8 and q14 is an exact integer division on a
-    * 38-digit numerator, and its two tokens are spelled per engine:
-    * Spark's `CAST(1000000 AS DECIMAL(38,0))` and `div`, DuckDB's
-    * `1000000::HUGEINT` and `//`. */
-  private def ppmKey(name: String)(text: (String => String, String, String) => String): Key =
-    Key(name, Key.bound(text(_, "CAST(1000000 AS DECIMAL(38,0))", "div")),
-      text(Key.table, "1000000::HUGEINT", "//"))
 
   /** TPC-H Q19 SHAPE — DISJUNCTIVE PREDICATE REVENUE (r12): three
     * OR'd conjunct groups, each mixing build-side (brand, size) and
@@ -704,12 +670,12 @@ object Scans {
     * broadcast, and the share is a per-group conditional sum over one
     * fact⋈fact pass — no second scan for the denominator. Exact
     * integer volumes; the ppm division rides DECIMAL(38,0)/HUGEINT
-    * (the q14 rule), spelled per engine by [[ppmKey]]. */
-  val sqlQ8MarketShare: Key = ppmKey("sql_q8_market_share") { (t, ppm, div) =>
+    * (the q14 rule). */
+  val sqlQ8MarketShare: Key = Key.sql("sql_q8_market_share") { t =>
     s"""SELECT o_year,
-       |  CAST(($ppm *
+       |  CAST((1000000::${t.int128} *
        |        SUM(CASE WHEN supp_nation = 'NATION_1' THEN vol ELSE 0 END))
-       |    $div SUM(vol) AS BIGINT) AS mkt_share_ppm,
+       |    ${t.idiv} SUM(vol) AS BIGINT) AS mkt_share_ppm,
        |  CAST(SUM(vol) AS BIGINT) AS total_vol
        |FROM (
        |  SELECT year(o_orderdate) AS o_year,
@@ -849,7 +815,7 @@ object Scans {
     sqlQ14PromoShare,
     sqlQ19DisjunctiveRev,
     sqlLateralTopn,
-    Key("scan_profile", scanProfile, scanProfileOracle),
+    scanProfile,
     Key("scan_dynamic_pruning", scanDynamicPruning, scanDynamicPruningOracle),
     Key("scan_partition_pruning", scanPartitionPruning, scanPartitionPruningOracle),
     Key("export_partition_overwrite", exportPartitionOverwrite, exportPartitionOverwriteOracle),
@@ -857,7 +823,7 @@ object Scans {
     Key("export_zorder", exportZorder, exportZorderOracle),
     scanProject,
     scanFilterPushdown,
-    Key("scan_events_ns", scanEventsNs, scanEventsNsOracle),
+    scanEventsNs,
     Key("scan_kv_model", scanKvModel, scanKvModelOracle),
     Key("export_manifest", exportManifest, exportManifestOracle))
 

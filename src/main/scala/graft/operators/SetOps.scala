@@ -17,9 +17,9 @@ object SetOps {
   }
 
   /** The two overlapping order slices the UNION keys combine. */
-  private def sliceASql(t: String => String) =
+  private def sliceASql(t: Key.Dialect) =
     s"SELECT o_orderkey, o_custkey FROM ${t("orders")} WHERE o_orderstatus = 'O'"
-  private def sliceBSql(t: String => String) =
+  private def sliceBSql(t: Key.Dialect) =
     s"SELECT o_orderkey, o_custkey FROM ${t("orders")} WHERE o_totalprice > 300000"
 
   /** UNION ALL keeps duplicate rows from the overlapping slices. */

@@ -1390,32 +1390,22 @@ object Sources {
     * that builds the wide input. The oracle rebuilds the long form
     * relationally: distinct priorities × the fixed status list, left
     * joined to the direct counts with COALESCE 0. */
-  def pivotUnpivot(spark: SparkSession, sfDir: String): DataFrame = {
-    val wide = orders(spark, sfDir)
-      .groupBy("o_orderpriority")
-      .pivot("o_orderstatus", Seq("F", "O", "P"))
-      .count()
-      .na.fill(0L)
-    wide.unpivot(Array(col("o_orderpriority")),
-        Array(col("F"), col("O"), col("P")), "o_orderstatus", "n")
-      .orderBy("o_orderpriority", "o_orderstatus")
+  val pivotUnpivot: Key = Key.sql("pivot_unpivot") { t =>
+    s"""WITH pr AS (SELECT DISTINCT o_orderpriority FROM ${t("orders")}),
+       |st AS (SELECT * FROM (VALUES ('F'), ('O'), ('P')) s(o_orderstatus)),
+       |c AS (SELECT o_orderpriority, o_orderstatus, COUNT(*) AS n
+       |  FROM ${t("orders")} WHERE o_orderstatus IN ('F', 'O', 'P') GROUP BY 1, 2)
+       |SELECT pr.o_orderpriority, st.o_orderstatus, COALESCE(c.n, 0) AS n
+       |FROM pr CROSS JOIN st
+       |LEFT JOIN c ON c.o_orderpriority = pr.o_orderpriority
+       |  AND c.o_orderstatus = st.o_orderstatus
+       |ORDER BY 1, 2""".stripMargin
   }
-
-  val pivotUnpivotOracle: String =
-    """WITH pr AS (SELECT DISTINCT o_orderpriority FROM orders),
-      |st AS (SELECT * FROM (VALUES ('F'), ('O'), ('P')) s(o_orderstatus)),
-      |c AS (SELECT o_orderpriority, o_orderstatus, COUNT(*) AS n
-      |  FROM orders WHERE o_orderstatus IN ('F', 'O', 'P') GROUP BY 1, 2)
-      |SELECT pr.o_orderpriority, st.o_orderstatus, COALESCE(c.n, 0) AS n
-      |FROM pr CROSS JOIN st
-      |LEFT JOIN c ON c.o_orderpriority = pr.o_orderpriority
-      |  AND c.o_orderstatus = st.o_orderstatus
-      |ORDER BY 1, 2""".stripMargin
 
   val keys: Seq[Key] = Seq(
     Key("source_csv_malformed", sourceCsvMalformed, sourceCsvMalformedOracle),
     Key("source_compressed_roundtrip", sourceCompressedRoundtrip, sourceCompressedRoundtripOracle),
-    Key("pivot_unpivot", pivotUnpivot, pivotUnpivotOracle),
+    pivotUnpivot,
     Key("kv_pitr_restore", kvPitrRestore, kvPitrRestoreOracle),
     Key("kv_wal_replay", kvWalReplay, kvWalReplayOracle),
     Key("kv_replication", kvReplication, kvReplicationOracle),

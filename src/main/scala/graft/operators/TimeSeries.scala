@@ -181,18 +181,11 @@ object TimeSeries {
     sentinelFeed(spark, sfDir, "whole")((ev, _) => Seq(ev))
 
   /** 1-hour tumbling window counts + exact value sums per event type. */
-  def tsTumbling(spark: SparkSession, sfDir: String): DataFrame =
-    events(spark, sfDir)
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(dec(col("value"))).cast("decimal(18,2)").cast("double").as("sum_value"))
-      .select(col("w.start").as("ws"), col("event_type"), col("n"), col("sum_value"))
-      .orderBy("ws", "event_type")
-
-  val tsTumblingOracle: String =
-    """SELECT DATE_TRUNC('hour', ts) AS ws, event_type, COUNT(*) AS n,
-      |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-      |FROM events GROUP BY 1, 2 ORDER BY ws, event_type""".stripMargin
+  val tsTumbling: Key = Key.sql("ts_tumbling") { t =>
+    s"""SELECT DATE_TRUNC('hour', ts) AS ws, event_type, COUNT(*) AS n,
+       |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+       |FROM ${t("events")} GROUP BY 1, 2 ORDER BY ws, event_type""".stripMargin
+  }
 
   /** 1-hour window sliding every 15 minutes: each event lands in exactly
     * four windows. The oracle reproduces Spark's epoch-aligned window
@@ -568,9 +561,6 @@ object TimeSeries {
       .orderBy("ws", "event_type")
   }
 
-  /** Append-mode stream must equal the batch tumbling aggregate. */
-  val tsStreamAppendWindowOracle: String = tsTumblingOracle
-
   /** APPEND-MODE SLIDING WINDOWS (r10) — the production eviction shape
     * for OVERLAPPING windows, the one state pattern `ts_sliding_stream`
     * (complete mode, inert watermark) deliberately does not grade: each
@@ -688,55 +678,33 @@ object TimeSeries {
     * follow-up joins — and no window-function sort over the full event
     * log. Stage timestamps are mins, so arrival order is irrelevant.
     */
-  def tsFunnel(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = events(spark, sfDir).select("user_id", "event_type", "ts")
-    val windowUs = 24L * 3600L * 1000000L
-    val t1 = ev.filter(col("event_type") === "view")
-      .groupBy("user_id").agg(min(col("ts")).as("t1"))
-    val t2 = ev.filter(col("event_type") === "click").join(t1, Seq("user_id"))
-      .filter(unix_micros(col("ts")) >= unix_micros(col("t1")) &&
-        unix_micros(col("ts")) <= unix_micros(col("t1")) + windowUs)
-      .groupBy("user_id").agg(min(col("ts")).as("t2"), min(col("t1")).as("t1"))
-    val t3 = ev.filter(col("event_type") === "purchase").join(t2, Seq("user_id"))
-      .filter(unix_micros(col("ts")) >= unix_micros(col("t2")) &&
-        unix_micros(col("ts")) <= unix_micros(col("t1")) + windowUs)
-      .groupBy("user_id").agg(min(col("ts")).as("t3"))
-    val users = ev.select("user_id").distinct()
-    val depth = users
-      .join(t1.select(col("user_id"), lit(1).as("d1")), Seq("user_id"), "left")
-      .join(t2.select(col("user_id"), lit(1).as("d2")), Seq("user_id"), "left")
-      .join(t3.select(col("user_id"), lit(1).as("d3")), Seq("user_id"), "left")
-      .withColumn("depth",
-        coalesce(col("d3") * 3, col("d2") * 2, col("d1"), lit(0)))
-    depth.groupBy("depth").agg(count(lit(1)).as("n_users")).orderBy("depth")
+  val tsFunnel: Key = Key.sql("ts_funnel") { t =>
+    s"""WITH ev AS (SELECT user_id, event_type, ts FROM ${t("events")}),
+       |t1 AS (SELECT user_id, MIN(ts) AS t1 FROM ev WHERE event_type = 'view' GROUP BY user_id),
+       |t2 AS (
+       |  SELECT ev.user_id, MIN(ev.ts) AS t2, MIN(t1.t1) AS t1
+       |  FROM ev JOIN t1 ON ev.user_id = t1.user_id
+       |  WHERE ev.event_type = 'click' AND ev.ts >= t1.t1
+       |    AND ev.ts <= t1.t1 + INTERVAL 24 HOURS
+       |  GROUP BY ev.user_id),
+       |t3 AS (
+       |  SELECT ev.user_id, MIN(ev.ts) AS t3
+       |  FROM ev JOIN t2 ON ev.user_id = t2.user_id
+       |  WHERE ev.event_type = 'purchase' AND ev.ts >= t2.t2
+       |    AND ev.ts <= t2.t1 + INTERVAL 24 HOURS
+       |  GROUP BY ev.user_id)
+       |SELECT depth, COUNT(*) AS n_users FROM (
+       |  SELECT u.user_id,
+       |    CASE WHEN t3.user_id IS NOT NULL THEN 3
+       |         WHEN t2.user_id IS NOT NULL THEN 2
+       |         WHEN t1.user_id IS NOT NULL THEN 1
+       |         ELSE 0 END AS depth
+       |  FROM (SELECT DISTINCT user_id FROM ev) u
+       |  LEFT JOIN t1 ON u.user_id = t1.user_id
+       |  LEFT JOIN t2 ON u.user_id = t2.user_id
+       |  LEFT JOIN t3 ON u.user_id = t3.user_id)
+       |GROUP BY depth ORDER BY depth""".stripMargin
   }
-
-  val tsFunnelOracle: String =
-    """WITH ev AS (SELECT user_id, event_type, ts FROM events),
-      |t1 AS (SELECT user_id, MIN(ts) AS t1 FROM ev WHERE event_type = 'view' GROUP BY user_id),
-      |t2 AS (
-      |  SELECT ev.user_id, MIN(ev.ts) AS t2, MIN(t1.t1) AS t1
-      |  FROM ev JOIN t1 ON ev.user_id = t1.user_id
-      |  WHERE ev.event_type = 'click' AND ev.ts >= t1.t1
-      |    AND ev.ts <= t1.t1 + INTERVAL 24 HOURS
-      |  GROUP BY ev.user_id),
-      |t3 AS (
-      |  SELECT ev.user_id, MIN(ev.ts) AS t3
-      |  FROM ev JOIN t2 ON ev.user_id = t2.user_id
-      |  WHERE ev.event_type = 'purchase' AND ev.ts >= t2.t2
-      |    AND ev.ts <= t2.t1 + INTERVAL 24 HOURS
-      |  GROUP BY ev.user_id)
-      |SELECT depth, COUNT(*) AS n_users FROM (
-      |  SELECT u.user_id,
-      |    CASE WHEN t3.user_id IS NOT NULL THEN 3
-      |         WHEN t2.user_id IS NOT NULL THEN 2
-      |         WHEN t1.user_id IS NOT NULL THEN 1
-      |         ELSE 0 END AS depth
-      |  FROM (SELECT DISTINCT user_id FROM ev) u
-      |  LEFT JOIN t1 ON u.user_id = t1.user_id
-      |  LEFT JOIN t2 ON u.user_id = t2.user_id
-      |  LEFT JOIN t3 ON u.user_id = t3.user_id)
-      |GROUP BY depth ORDER BY depth""".stripMargin
 
   /** COHORT RETENTION (the other product-analytics staple next to the
     * funnel): users are cohorted by their FIRST active day, and the
@@ -745,49 +713,29 @@ object TimeSeries {
     * distinct-day projection, one groupBy(user) for the cohort day,
     * one join back on user, one groupBy(cohort, offset) — two shuffles
     * on user + one on the (cohort, offset) pair, no windows. */
-  def tsRetention(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = events(spark, sfDir)
-      .select(col("user_id"), to_date(col("ts")).as("d")).distinct()
-    val cohorts = ev.groupBy("user_id").agg(min(col("d")).as("cohort"))
-    ev.join(cohorts, Seq("user_id"))
-      .withColumn("day_offset", datediff(col("d"), col("cohort")))
-      .groupBy("cohort", "day_offset")
-      .agg(countDistinct(col("user_id")).as("n_users"))
-      .orderBy("cohort", "day_offset")
+  val tsRetention: Key = Key.sql("ts_retention") { t =>
+    s"""WITH ev AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM ${t("events")}),
+       |f AS (SELECT user_id, MIN(d) AS cohort FROM ev GROUP BY user_id)
+       |SELECT cohort, CAST(date_diff(${t.unit("day")}, cohort, d) AS INT) AS day_offset,
+       |  COUNT(DISTINCT ev.user_id) AS n_users
+       |FROM ev JOIN f ON ev.user_id = f.user_id
+       |GROUP BY 1, 2 ORDER BY cohort, day_offset""".stripMargin
   }
-
-  val tsRetentionOracle: String =
-    """WITH ev AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events),
-      |f AS (SELECT user_id, MIN(d) AS cohort FROM ev GROUP BY user_id)
-      |SELECT cohort, CAST(date_diff('day', cohort, d) AS INT) AS day_offset,
-      |  COUNT(DISTINCT ev.user_id) AS n_users
-      |FROM ev JOIN f ON ev.user_id = f.user_id
-      |GROUP BY 1, 2 ORDER BY cohort, day_offset""".stripMargin
 
   /** EVENT-TYPE TRANSITIONS (the path-mining / Markov-chain building
     * block): each user's events in time order yield (from → to) type
     * pairs, counted corpus-wide — "what do users do after a click?".
     * One window pass partitioned by user (ties broken by event_id so
     * both engines sequence identically) + one groupBy on the pair. */
-  def tsTransitions(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    events(spark, sfDir)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .withColumn("next_type", lead(col("event_type"), 1).over(w))
-      .filter(col("next_type").isNotNull)
-      .groupBy(col("event_type").as("from_type"), col("next_type").as("to_type"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy("from_type", "to_type")
+  val tsTransitions: Key = Key.sql("ts_transitions") { t =>
+    s"""SELECT event_type AS from_type, next_type AS to_type, COUNT(*) AS n
+       |FROM (
+       |  SELECT event_type,
+       |    LEAD(event_type, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_type
+       |  FROM ${t("events")})
+       |WHERE next_type IS NOT NULL
+       |GROUP BY 1, 2 ORDER BY from_type, to_type""".stripMargin
   }
-
-  val tsTransitionsOracle: String =
-    """SELECT event_type AS from_type, next_type AS to_type, COUNT(*) AS n
-      |FROM (
-      |  SELECT event_type,
-      |    LEAD(event_type, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_type
-      |  FROM events)
-      |WHERE next_type IS NOT NULL
-      |GROUP BY 1, 2 ORDER BY from_type, to_type""".stripMargin
 
   /** Per-user session windows with a 30-minute inactivity gap —
     * gaps-and-islands: flag gap starts with lag(), running-sum the flags
@@ -832,44 +780,24 @@ object TimeSeries {
   /** Replay dedup (batch analog of dropDuplicatesWithinWatermark): the
     * input is doubled to simulate at-least-once replay, then exactly one
     * row per event_id survives, keeping the earliest timestamp. */
-  def tsDedupWatermark(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = events(spark, sfDir).select("event_id", "ts", "user_id", "event_type")
-    val w = Window.partitionBy("event_id").orderBy("ts", "user_id")
-    ev.unionAll(ev)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select("event_id", "ts", "user_id", "event_type")
-      .orderBy("event_id")
+  val tsDedupWatermark: Key = Key.sql("ts_dedup_watermark") { t =>
+    s"""SELECT event_id, ts, user_id, event_type FROM (
+       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY event_id ORDER BY ts, user_id) AS rn
+       |  FROM (SELECT event_id, ts, user_id, event_type FROM ${t("events")}
+       |        UNION ALL
+       |        SELECT event_id, ts, user_id, event_type FROM ${t("events")}))
+       |WHERE rn = 1 ORDER BY event_id""".stripMargin
   }
-
-  val tsDedupWatermarkOracle: String =
-    """SELECT event_id, ts, user_id, event_type FROM (
-      |  SELECT *, ROW_NUMBER() OVER (PARTITION BY event_id ORDER BY ts, user_id) AS rn
-      |  FROM (SELECT event_id, ts, user_id, event_type FROM events
-      |        UNION ALL
-      |        SELECT event_id, ts, user_id, event_type FROM events))
-      |WHERE rn = 1 ORDER BY event_id""".stripMargin
 
   /** Watermark-style late-data accounting: events more than 10 minutes
     * behind their user's max timestamp are classified late. */
-  def tsLateData(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Window.partitionBy("user_id")
-    events(spark, sfDir)
-      .withColumn("max_ts", max(col("ts")).over(w))
-      .withColumn("is_late",
-        (unix_micros(col("max_ts")) - unix_micros(col("ts")) > 600L * 1000000L).cast("int"))
-      .groupBy("event_type")
-      .agg(sum(col("is_late")).as("n_late"),
-        sum(lit(1) - col("is_late")).as("n_ontime"))
-      .orderBy("event_type")
+  val tsLateData: Key = Key.sql("ts_late_data") { t =>
+    s"""SELECT event_type,
+       |  CAST(SUM(CAST(DATE_DIFF(${t.unit("microsecond")}, ts, max_ts) > 600000000 AS INT)) AS BIGINT) AS n_late,
+       |  CAST(SUM(1 - CAST(DATE_DIFF(${t.unit("microsecond")}, ts, max_ts) > 600000000 AS INT)) AS BIGINT) AS n_ontime
+       |FROM (SELECT event_type, ts, MAX(ts) OVER (PARTITION BY user_id) AS max_ts FROM ${t("events")})
+       |GROUP BY event_type ORDER BY event_type""".stripMargin
   }
-
-  val tsLateDataOracle: String =
-    """SELECT event_type,
-      |  CAST(SUM(CAST(DATE_DIFF('microsecond', ts, max_ts) > 600000000 AS INT)) AS BIGINT) AS n_late,
-      |  CAST(SUM(1 - CAST(DATE_DIFF('microsecond', ts, max_ts) > 600000000 AS INT)) AS BIGINT) AS n_ontime
-      |FROM (SELECT event_type, ts, MAX(ts) OVER (PARTITION BY user_id) AS max_ts FROM events)
-      |GROUP BY event_type ORDER BY event_type""".stripMargin
 
   /** GAP FILL — the resampling move every time-series store (and every
     * SQL engine's GENERATE_SERIES idiom) needs: hourly counts per
@@ -922,40 +850,24 @@ object TimeSeries {
     * one float aggregate (sum) goes through the DECIMAL(18,2) cast like
     * every money sum in the suite. One window pass + one groupBy, both
     * keyed by (event_type, day): a single shuffle at any scale. */
-  def tsOhlc(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = events(spark, sfDir)
-      .withColumn("day", expr("unix_micros(ts) div 86400000000"))
-    val w = Window.partitionBy("event_type", "day")
-    val wOrd = w.orderBy(col("ts"), col("event_id"))
-    ev.withColumn("rn", row_number().over(wOrd))
-      .withColumn("cnt", count(lit(1)).over(w))
-      .groupBy("event_type", "day")
-      .agg(max(when(col("rn") === 1, col("value"))).as("open"),
-        max(col("value")).as("high"),
-        min(col("value")).as("low"),
-        max(when(col("rn") === col("cnt"), col("value"))).as("close"),
-        count(lit(1)).as("n_events"),
-        sum(dec(col("value"))).cast("decimal(18,2)").cast("double").as("sum_value"))
-      .orderBy("event_type", "day")
+  val tsOhlc: Key = Key.sql("ts_ohlc") { t =>
+    s"""WITH r AS (SELECT event_type,
+       |    DATE_DIFF(${t.unit("microsecond")}, TIMESTAMP '1970-01-01 00:00:00', ts) ${t.idiv} 86400000000 AS day,
+       |    value,
+       |    ROW_NUMBER() OVER (PARTITION BY event_type,
+       |      DATE_DIFF(${t.unit("microsecond")}, TIMESTAMP '1970-01-01 00:00:00', ts) ${t.idiv} 86400000000
+       |      ORDER BY ts, event_id) AS rn,
+       |    COUNT(*) OVER (PARTITION BY event_type,
+       |      DATE_DIFF(${t.unit("microsecond")}, TIMESTAMP '1970-01-01 00:00:00', ts) ${t.idiv} 86400000000) AS cnt
+       |  FROM ${t("events")})
+       |SELECT event_type, day,
+       |  MAX(CASE WHEN rn = 1 THEN value END) AS open,
+       |  MAX(value) AS high, MIN(value) AS low,
+       |  MAX(CASE WHEN rn = cnt THEN value END) AS close,
+       |  CAST(COUNT(*) AS BIGINT) AS n_events,
+       |  CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS sum_value
+       |FROM r GROUP BY event_type, day ORDER BY event_type, day""".stripMargin
   }
-
-  val tsOhlcOracle: String =
-    """WITH r AS (SELECT event_type,
-      |    DATE_DIFF('microsecond', TIMESTAMP '1970-01-01 00:00:00', ts) // 86400000000 AS day,
-      |    value,
-      |    ROW_NUMBER() OVER (PARTITION BY event_type,
-      |      DATE_DIFF('microsecond', TIMESTAMP '1970-01-01 00:00:00', ts) // 86400000000
-      |      ORDER BY ts, event_id) AS rn,
-      |    COUNT(*) OVER (PARTITION BY event_type,
-      |      DATE_DIFF('microsecond', TIMESTAMP '1970-01-01 00:00:00', ts) // 86400000000) AS cnt
-      |  FROM events)
-      |SELECT event_type, day,
-      |  MAX(CASE WHEN rn = 1 THEN value END) AS open,
-      |  MAX(value) AS high, MIN(value) AS low,
-      |  MAX(CASE WHEN rn = cnt THEN value END) AS close,
-      |  CAST(COUNT(*) AS BIGINT) AS n_events,
-      |  CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS sum_value
-      |FROM r GROUP BY event_type, day ORDER BY event_type, day""".stripMargin
 
   /** STREAMING UPSERT MATERIALIZED VIEW — the `foreachBatch` merge
     * pattern every lakehouse ingestion job runs where no transactional
@@ -1016,52 +928,20 @@ object TimeSeries {
     * c ≤ 6e4, per-type n ≤ 2e4 → n·m2 ≤ ~1.3e18 and dev² ≤ ~1.2e18,
     * inside int64; at larger per-group n the moments drop to
     * DECIMAL(38,0) unchanged in shape (noted, not needed here). */
-  def tsAnomaly(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = events(spark, sfDir)
-      .select(col("event_type"), (dec(col("value")) * 100).cast("long").as("c"))
-    val stats = ev.groupBy("event_type")
-      .agg(count(lit(1)).as("n"), sum(col("c")).as("s"),
-        sum(col("c") * col("c")).as("m2"))
-    // The outlier test squares n·c−s. In LONG that overflows once a
-    // type holds ~200k events (sf1: dev² ≈ 1.6e19 > 2⁶³) — the sf1
-    // scale rehearsal caught it live. All comparison intermediates ride
-    // DECIMAL(38,0) (exact; headroom through ~sf 10⁶); the oracle
-    // mirrors with HUGEINT. Outputs stay BIGINT counts on both engines.
-    val d38 = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
-    ev.join(broadcast(stats), "event_type")
-      .withColumn("dev", d38(col("n")) * d38(col("c")) - d38(col("s")))
-      // Fail LOUDLY past the documented headroom (ADVICE r14): non-ANSI
-      // Spark would NULL an overflowed dev² — is_out silently false —
-      // while the oracle's HUGEINT raises. |dev| < 10¹⁹ guarantees dev²
-      // fits DECIMAL(38,0); beyond (~sf 10⁶) Spark now raises like the
-      // oracle instead of silently under-counting outliers.
-      .withColumn("dev",
-        when(abs(col("dev")) < lit(BigDecimal("1" + "0" * 19)).cast("decimal(38,0)"), col("dev"))
-          .otherwise(raise_error(concat(
-            lit("ts_anomaly: |n*c - s| exceeds the DECIMAL(38,0) square headroom at "),
-            col("dev").cast("string")))))
-      .withColumn("is_out",
-        col("dev") * col("dev") >
-          lit(4) * (d38(col("n")) * d38(col("m2")) - d38(col("s")) * d38(col("s"))))
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n_events"),
-        sum(when(col("is_out"), 1L).otherwise(0L)).as("n_outliers"))
-      .orderBy("event_type")
+  val tsAnomaly: Key = Key.sql("ts_anomaly") { t =>
+    s"""WITH ev AS (SELECT event_type,
+       |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS c FROM ${t("events")}),
+       |st AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
+       |    CAST(SUM(c) AS BIGINT) AS s, CAST(SUM(c * c) AS BIGINT) AS m2
+       |  FROM ev GROUP BY 1)
+       |SELECT ev.event_type, CAST(COUNT(*) AS BIGINT) AS n_events,
+       |  CAST(SUM(CASE WHEN
+       |      (CAST(n AS ${t.int128}) * c - s) * (CAST(n AS ${t.int128}) * c - s)
+       |      > 4 * (CAST(n AS ${t.int128}) * m2 - CAST(s AS ${t.int128}) * s)
+       |    THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
+       |FROM ev JOIN st USING (event_type)
+       |GROUP BY ev.event_type ORDER BY event_type""".stripMargin
   }
-
-  val tsAnomalyOracle: String =
-    """WITH ev AS (SELECT event_type,
-      |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS c FROM events),
-      |st AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-      |    CAST(SUM(c) AS BIGINT) AS s, CAST(SUM(c * c) AS BIGINT) AS m2
-      |  FROM ev GROUP BY 1)
-      |SELECT ev.event_type, CAST(COUNT(*) AS BIGINT) AS n_events,
-      |  CAST(SUM(CASE WHEN
-      |      (CAST(n AS HUGEINT) * c - s) * (CAST(n AS HUGEINT) * c - s)
-      |      > 4 * (CAST(n AS HUGEINT) * m2 - CAST(s AS HUGEINT) * s)
-      |    THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
-      |FROM ev JOIN st USING (event_type)
-      |GROUP BY ev.event_type ORDER BY event_type""".stripMargin
 
   /** LAGGED CROSS-CORRELATION — "does click volume predict purchase
     * volume k hours later?": Pearson corr between the dense hourly
@@ -1144,58 +1024,34 @@ object TimeSeries {
     * and the score is emitted as integer ppm of that fraction
     * (`(1e6·|num|) div den` — the `llm_ann_recall` determinism move),
     * so the argmax and the tie-break (earliest hour) are cross-engine
-    * stable with no double rounding anywhere. Shape at 100 TB: the
-    * only data-sized pass is the first groupBy(event_type, hour);
-    * every window after runs on the hourly series (≤ hours-per-month
-    * rows per type), partitioned by event_type — no unpartitioned
-    * window, no second shuffle. */
-  def tsChangepoint(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val hourly = events(spark, sfDir)
-      .withColumn("h", expr("unix_micros(ts) div 3600000000"))
-      .groupBy("event_type", "h").agg(count(lit(1)).as("c"))
-    val w = Window.partitionBy("event_type").orderBy("h")
-    val wAll = Window.partitionBy("event_type")
-    val scored = hourly
-      .withColumn("idx", row_number().over(w))
-      .withColumn("cum", sum(col("c")).over(w))
-      .withColumn("tot", sum(col("c")).over(wAll))
-      .withColumn("n", count(lit(1)).over(wAll))
-      .filter(col("idx") < col("n")) // a split needs a non-empty after-segment
-      .withColumn("diff_ppm", expr(
-        "(1000000 * abs(cum * (n - idx) - (tot - cum) * idx)) div (idx * (n - idx))"))
-    val wPick = Window.partitionBy("event_type")
-      .orderBy(col("diff_ppm").desc, col("h").asc)
-    scored.withColumn("rn", row_number().over(wPick))
-      .filter(col("rn") === 1)
-      .select(col("event_type"), col("h").as("split_hour"), col("diff_ppm"),
-        col("cum").as("n_before"), (col("tot") - col("cum")).as("n_after"))
-      .orderBy("event_type")
+    * stable with no double rounding anywhere. Every windowed SUM is
+    * cast off DuckDB's HUGEINT before it reaches the output or the ppm
+    * math. Shape at 100 TB: the only data-sized pass is the first
+    * groupBy(event_type, hour); every window after runs on the hourly
+    * series (≤ hours-per-month rows per type), partitioned by
+    * event_type — no unpartitioned window, no second shuffle. */
+  val tsChangepoint: Key = Key.sql("ts_changepoint") { t =>
+    s"""WITH hourly AS (
+       |  SELECT event_type,
+       |    DATE_DIFF(${t.unit("microsecond")}, TIMESTAMP '1970-01-01 00:00:00', ts) ${t.idiv} 3600000000 AS h,
+       |    CAST(COUNT(*) AS BIGINT) AS c
+       |  FROM ${t("events")} GROUP BY 1, 2),
+       |s AS (SELECT event_type, h,
+       |    ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY h) AS idx,
+       |    CAST(SUM(c) OVER (PARTITION BY event_type ORDER BY h) AS BIGINT) AS cum,
+       |    CAST(SUM(c) OVER (PARTITION BY event_type) AS BIGINT) AS tot,
+       |    COUNT(*) OVER (PARTITION BY event_type) AS n
+       |  FROM hourly),
+       |d AS (SELECT event_type, h, cum AS n_before, tot - cum AS n_after,
+       |    CAST((1000000 * abs(cum * (n - idx) - (tot - cum) * idx))
+       |      ${t.idiv} (idx * (n - idx)) AS BIGINT) AS diff_ppm
+       |  FROM s WHERE idx < n)
+       |SELECT event_type, split_hour, diff_ppm, n_before, n_after
+       |FROM (SELECT event_type, h AS split_hour, diff_ppm, n_before, n_after,
+       |        ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY diff_ppm DESC, h ASC) AS rn
+       |      FROM d) WHERE rn = 1
+       |ORDER BY event_type""".stripMargin
   }
-
-  /** Same prefix-sum scoring in SQL; every windowed SUM is cast off
-    * DuckDB's HUGEINT before it reaches the output or the ppm math. */
-  val tsChangepointOracle: String =
-    """WITH hourly AS (
-      |  SELECT event_type,
-      |    DATE_DIFF('microsecond', TIMESTAMP '1970-01-01 00:00:00', ts) // 3600000000 AS h,
-      |    CAST(COUNT(*) AS BIGINT) AS c
-      |  FROM events GROUP BY 1, 2),
-      |s AS (SELECT event_type, h,
-      |    ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY h) AS idx,
-      |    CAST(SUM(c) OVER (PARTITION BY event_type ORDER BY h) AS BIGINT) AS cum,
-      |    CAST(SUM(c) OVER (PARTITION BY event_type) AS BIGINT) AS tot,
-      |    COUNT(*) OVER (PARTITION BY event_type) AS n
-      |  FROM hourly),
-      |d AS (SELECT event_type, h, cum AS n_before, tot - cum AS n_after,
-      |    CAST((1000000 * abs(cum * (n - idx) - (tot - cum) * idx))
-      |      // (idx * (n - idx)) AS BIGINT) AS diff_ppm
-      |  FROM s WHERE idx < n)
-      |SELECT event_type, split_hour, diff_ppm, n_before, n_after
-      |FROM (SELECT event_type, h AS split_hour, diff_ppm, n_before, n_after,
-      |        ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY diff_ppm DESC, h ASC) AS rn
-      |      FROM d) WHERE rn = 1
-      |ORDER BY event_type""".stripMargin
 
   /** PER-WINDOW EXACT DISTINCT — "unique users per hour", the metric
     * behind every DAU/HAU dashboard and the canonical expensive
@@ -1210,33 +1066,20 @@ object TimeSeries {
     * touched exactly once. Exact distinct per window stays feasible at
     * scale precisely because of that pre-collapse; `agg_approx_hll`
     * and `agg_sketch_merge` are the sketch path when it does not. */
-  def tsTumblingDistinct(spark: SparkSession, sfDir: String): DataFrame = {
-    val pairs = events(spark, sfDir)
-      .select(expr("unix_micros(ts) div 3600000000").as("h"), col("user_id"))
-      .distinct()
-    val prev = pairs.select((col("h") + 1).as("h"), col("user_id"))
-    val ret = pairs.join(prev, Seq("h", "user_id"), "left_semi")
-      .groupBy("h").agg(count(lit(1)).as("n_returning"))
-    pairs.groupBy("h").agg(count(lit(1)).as("n_distinct_users"))
-      .join(ret, Seq("h"), "left")
-      .na.fill(0L, Seq("n_returning"))
-      .select(col("h"), col("n_distinct_users"), col("n_returning"))
-      .orderBy("h")
+  val tsTumblingDistinct: Key = Key.sql("ts_tumbling_distinct") { t =>
+    s"""WITH pairs AS (SELECT DISTINCT
+       |    DATE_DIFF(${t.unit("microsecond")}, TIMESTAMP '1970-01-01 00:00:00', ts) ${t.idiv} 3600000000 AS h,
+       |    user_id FROM ${t("events")}),
+       |ret AS (SELECT p.h, COUNT(*) AS n_returning
+       |  FROM pairs p WHERE EXISTS (SELECT 1 FROM pairs q
+       |    WHERE q.h = p.h - 1 AND q.user_id = p.user_id)
+       |  GROUP BY 1)
+       |SELECT p.h,
+       |  COUNT(*) AS n_distinct_users,
+       |  COALESCE(MAX(r.n_returning), 0) AS n_returning
+       |FROM pairs p LEFT JOIN ret r ON p.h = r.h
+       |GROUP BY p.h ORDER BY p.h""".stripMargin
   }
-
-  val tsTumblingDistinctOracle: String =
-    """WITH pairs AS (SELECT DISTINCT
-      |    DATE_DIFF('microsecond', TIMESTAMP '1970-01-01 00:00:00', ts) // 3600000000 AS h,
-      |    user_id FROM events),
-      |ret AS (SELECT p.h, COUNT(*) AS n_returning
-      |  FROM pairs p WHERE EXISTS (SELECT 1 FROM pairs q
-      |    WHERE q.h = p.h - 1 AND q.user_id = p.user_id)
-      |  GROUP BY 1)
-      |SELECT p.h,
-      |  COUNT(*) AS n_distinct_users,
-      |  COALESCE(MAX(r.n_returning), 0) AS n_returning
-      |FROM pairs p LEFT JOIN ret r ON p.h = r.h
-      |GROUP BY p.h ORDER BY p.h""".stripMargin
 
   /** FORWARD FILL (LOCF) — the other resampling mode next to
     * `ts_gap_fill`'s zero-fill: each event type's hourly series carries
@@ -1297,27 +1140,16 @@ object TimeSeries {
     * can shift a bucket; integer division from the same UTC micros
     * cannot. Share is exact integer parts-per-million. One
     * partial+final aggregate to a 7×24-row result at any scale. */
-  def tsSeasonalProfile(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = events(spark, sfDir)
-      .withColumn("us", expr("unix_micros(ts)"))
-      .withColumn("dow", expr("((us div 86400000000) + 4) % 7"))
-      .withColumn("hod", expr("(us div 3600000000) % 24"))
-    val total = ev.count()
-    ev.groupBy("dow", "hod")
-      .agg(count(lit(1)).as("n"))
-      .withColumn("share_ppm", expr(s"(n * 1000000) div ${total}L"))
-      .orderBy("dow", "hod")
+  val tsSeasonalProfile: Key = Key.sql("ts_seasonal_profile") { t =>
+    s"""WITH ev AS (SELECT
+       |    DATE_DIFF(${t.unit("microsecond")}, TIMESTAMP '1970-01-01 00:00:00', ts) AS us
+       |  FROM ${t("events")})
+       |SELECT (us ${t.idiv} 86400000000 + 4) % 7 AS dow,
+       |  (us ${t.idiv} 3600000000) % 24 AS hod,
+       |  COUNT(*) AS n,
+       |  (COUNT(*) * 1000000) ${t.idiv} (SELECT COUNT(*) FROM ev) AS share_ppm
+       |FROM ev GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
   }
-
-  val tsSeasonalProfileOracle: String =
-    """WITH ev AS (SELECT
-      |    DATE_DIFF('microsecond', TIMESTAMP '1970-01-01 00:00:00', ts) AS us
-      |  FROM events)
-      |SELECT (us // 86400000000 + 4) % 7 AS dow,
-      |  (us // 3600000000) % 24 AS hod,
-      |  COUNT(*) AS n,
-      |  (COUNT(*) * 1000000) // (SELECT COUNT(*) FROM ev) AS share_ppm
-      |FROM ev GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
   /** M4 DOWNSAMPLING (Jugel et al., VLDB 2014) — the error-free
     * visualization reduction: per (series, pixel-bucket) keep exactly
@@ -1353,18 +1185,19 @@ object TimeSeries {
   /** Shared (event_type, hour, count) collapse — the pre-aggregation
     * every hourly-series operator starts from. ONE definition (Spark +
     * SQL mirror below) so a bucket-width or tie-break change cannot
-    * drift between the five operators and their oracles that share it
-    * (the `edgesSql`/`ivfOracleProlog` pattern). */
+    * drift between the hourly keys and their oracles that share it
+    * (the `edgesSql`/`ivfOracleProlog` pattern); the SQL keys run the
+    * mirror itself. */
   private[operators] def hourlyCounts(spark: SparkSession, sfDir: String): DataFrame =
     events(spark, sfDir)
       .groupBy(col("event_type"), expr("unix_micros(ts) div 3600000000").as("h"))
       .agg(count(lit(1)).as("n"))
 
   /** SQL mirror of [[hourlyCounts]]; splice as the `hourly` CTE. */
-  private[operators] val hourlyCteSql: String =
-    """hourly AS (SELECT event_type,
-      |    DATE_DIFF('microsecond', TIMESTAMP '1970-01-01 00:00:00', ts) // 3600000000 AS h,
-      |    CAST(COUNT(*) AS BIGINT) AS n FROM events GROUP BY 1, 2)""".stripMargin
+  private[operators] def hourlyCteSql(t: Key.Dialect): String =
+    s"""hourly AS (SELECT event_type,
+       |    DATE_DIFF(${t.unit("microsecond")}, TIMESTAMP '1970-01-01 00:00:00', ts) ${t.idiv} 3600000000 AS h,
+       |    CAST(COUNT(*) AS BIGINT) AS n FROM ${t("events")} GROUP BY 1, 2)""".stripMargin
 
   /** ALERT DEBOUNCE — the hysteresis every pager pipeline applies
     * between "a metric spiked" and "wake someone up": an hour is HOT
@@ -1379,35 +1212,20 @@ object TimeSeries {
     * series first; the totals join is type-sized (broadcast) and the
     * island window runs on the collapsed series partitioned by type —
     * the `ts_changepoint` shape with episode semantics on top. */
-  def tsAlertDebounce(spark: SparkSession, sfDir: String): DataFrame = {
-    val hourly = hourlyCounts(spark, sfDir)
-    val tot = hourly.groupBy("event_type")
-      .agg(count(lit(1)).as("nh"), sum(col("n")).as("tn"))
-    val hot = hourly.join(broadcast(tot), Seq("event_type"))
-      .filter(col("n") * col("nh") > col("tn"))
-    val w = Window.partitionBy("event_type").orderBy("h")
-    hot.withColumn("grp", col("h") - row_number().over(w))
-      .groupBy("event_type", "grp")
-      .agg(min(col("h")).as("start_h"), max(col("h")).as("end_h"),
-        count(lit(1)).as("n_hours"), max(col("n")).as("peak_n"))
-      .filter(col("n_hours") >= 2)
-      .select("event_type", "start_h", "end_h", "n_hours", "peak_n")
-      .orderBy("event_type", "start_h")
+  val tsAlertDebounce: Key = Key.sql("ts_alert_debounce") { t =>
+    s"""WITH ${hourlyCteSql(t)},
+       |tot AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS nh,
+       |               CAST(SUM(n) AS BIGINT) AS tn FROM hourly GROUP BY 1),
+       |fl AS (SELECT h.event_type, h.h, h.n FROM hourly h JOIN tot t USING (event_type)
+       |       WHERE h.n * t.nh > t.tn),
+       |g AS (SELECT event_type, h, n,
+       |    h - ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY h) AS grp FROM fl)
+       |SELECT event_type, MIN(h) AS start_h, MAX(h) AS end_h,
+       |  COUNT(*) AS n_hours, MAX(n) AS peak_n
+       |FROM g GROUP BY event_type, grp
+       |HAVING COUNT(*) >= 2
+       |ORDER BY event_type, start_h""".stripMargin
   }
-
-  val tsAlertDebounceOracle: String =
-    s"""WITH $hourlyCteSql,
-      |tot AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS nh,
-      |               CAST(SUM(n) AS BIGINT) AS tn FROM hourly GROUP BY 1),
-      |fl AS (SELECT h.event_type, h.h, h.n FROM hourly h JOIN tot t USING (event_type)
-      |       WHERE h.n * t.nh > t.tn),
-      |g AS (SELECT event_type, h, n,
-      |    h - ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY h) AS grp FROM fl)
-      |SELECT event_type, MIN(h) AS start_h, MAX(h) AS end_h,
-      |  COUNT(*) AS n_hours, MAX(n) AS peak_n
-      |FROM g GROUP BY event_type, grp
-      |HAVING COUNT(*) >= 2
-      |ORDER BY event_type, start_h""".stripMargin
 
   /** DAU / WAU / MAU + STICKINESS — the rolling-distinct-actives board
     * every product reports, computed EXACTLY without a range join: a
@@ -1488,7 +1306,7 @@ object TimeSeries {
   }
 
   val tsRobustZscoreOracle: String =
-    s"""WITH $hourlyCteSql,
+    s"""WITH ${hourlyCteSql(Key.duckdb)},
       |med AS (SELECT event_type, arr[CAST((len(arr)+1)//2 AS INT)] AS med
       |        FROM (SELECT event_type, list_sort(list(n)) AS arr FROM hourly GROUP BY 1)),
       |dev AS (SELECT h.event_type, h.h, h.n, m.med, abs(h.n - m.med) AS ad
@@ -1511,33 +1329,19 @@ object TimeSeries {
     * "when were the busiest moments" dashboards, complementary to
     * `ts_anomaly` (global threshold) and `ts_changepoint` (level
     * shift). One collapsed-series window pass, totals broadcast. */
-  def tsPeaks(spark: SparkSession, sfDir: String): DataFrame = {
-    val hourly = hourlyCounts(spark, sfDir)
-    val tot = hourly.groupBy("event_type")
-      .agg(count(lit(1)).as("nh"), sum(col("n")).as("tn"))
-    val w = Window.partitionBy("event_type").orderBy("h")
-    hourly.join(broadcast(tot), Seq("event_type"))
-      .withColumn("pn", lag(col("n"), 1).over(w))
-      .withColumn("nn", lead(col("n"), 1).over(w))
-      .filter(col("pn").isNotNull && col("nn").isNotNull &&
-        col("n") > col("pn") && col("n") > col("nn") &&
-        col("n") * col("nh") > col("tn"))
-      .select("event_type", "h", "n")
-      .orderBy("event_type", "h")
+  val tsPeaks: Key = Key.sql("ts_peaks") { t =>
+    s"""WITH ${hourlyCteSql(t)},
+       |tot AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS nh,
+       |        CAST(SUM(n) AS BIGINT) AS tn FROM hourly GROUP BY 1),
+       |x AS (SELECT h.event_type, h.h, h.n,
+       |    LAG(h.n) OVER (PARTITION BY h.event_type ORDER BY h.h) AS pn,
+       |    LEAD(h.n) OVER (PARTITION BY h.event_type ORDER BY h.h) AS nn,
+       |    t.nh, t.tn
+       |  FROM hourly h JOIN tot t USING (event_type))
+       |SELECT event_type, h, n FROM x
+       |WHERE pn IS NOT NULL AND nn IS NOT NULL AND n > pn AND n > nn AND n * nh > tn
+       |ORDER BY event_type, h""".stripMargin
   }
-
-  val tsPeaksOracle: String =
-    s"""WITH $hourlyCteSql,
-      |tot AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS nh,
-      |        CAST(SUM(n) AS BIGINT) AS tn FROM hourly GROUP BY 1),
-      |x AS (SELECT h.event_type, h.h, h.n,
-      |    LAG(h.n) OVER (PARTITION BY h.event_type ORDER BY h.h) AS pn,
-      |    LEAD(h.n) OVER (PARTITION BY h.event_type ORDER BY h.h) AS nn,
-      |    t.nh, t.tn
-      |  FROM hourly h JOIN tot t USING (event_type))
-      |SELECT event_type, h, n FROM x
-      |WHERE pn IS NOT NULL AND nn IS NOT NULL AND n > pn AND n > nn AND n * nh > tn
-      |ORDER BY event_type, h""".stripMargin
 
   /** FORECAST BACKTEST — evaluating the seasonal-naive baseline
     * (ŷ(h) = y(h − 168): "same hour last week", the forecast every
@@ -1550,31 +1354,18 @@ object TimeSeries {
     * planning wants. Shape at 100 TB: collapse first, then a
     * type+hour-keyed self-join on the collapsed series and one
     * partial+final aggregate to ≤ |types| rows. */
-  def tsForecastEval(spark: SparkSession, sfDir: String): DataFrame = {
-    val hourly = hourlyCounts(spark, sfDir)
-    val fc = hourly.select(col("event_type"), (col("h") + 168).as("h"),
-      col("n").as("forecast"))
-    hourly.join(fc, Seq("event_type", "h"))
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n_hours"),
-        sum(col("n")).as("sum_actual"),
-        sum(abs(col("n") - col("forecast"))).as("sum_abs_err"))
-      .select(col("event_type"), col("n_hours"), col("sum_actual"), col("sum_abs_err"),
-        expr("(sum_abs_err * 1000000) div sum_actual").as("wape_ppm"))
-      .orderBy("event_type")
+  val tsForecastEval: Key = Key.sql("ts_forecast_eval") { t =>
+    s"""WITH ${hourlyCteSql(t)},
+       |j AS (SELECT a.event_type, a.h, a.n AS actual, f.n AS forecast
+       |      FROM hourly a JOIN hourly f
+       |        ON a.event_type = f.event_type AND f.h = a.h - 168)
+       |SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_hours,
+       |  CAST(SUM(actual) AS BIGINT) AS sum_actual,
+       |  CAST(SUM(abs(actual - forecast)) AS BIGINT) AS sum_abs_err,
+       |  (CAST(SUM(abs(actual - forecast)) AS BIGINT) * 1000000)
+       |    ${t.idiv} CAST(SUM(actual) AS BIGINT) AS wape_ppm
+       |FROM j GROUP BY 1 ORDER BY 1""".stripMargin
   }
-
-  val tsForecastEvalOracle: String =
-    s"""WITH $hourlyCteSql,
-      |j AS (SELECT a.event_type, a.h, a.n AS actual, f.n AS forecast
-      |      FROM hourly a JOIN hourly f
-      |        ON a.event_type = f.event_type AND f.h = a.h - 168)
-      |SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_hours,
-      |  CAST(SUM(actual) AS BIGINT) AS sum_actual,
-      |  CAST(SUM(abs(actual - forecast)) AS BIGINT) AS sum_abs_err,
-      |  (CAST(SUM(abs(actual - forecast)) AS BIGINT) * 1000000)
-      |    // CAST(SUM(actual) AS BIGINT) AS wape_ppm
-      |FROM j GROUP BY 1 ORDER BY 1""".stripMargin
 
   /** INTER-ARRIVAL GAPS — the arrival-process profile behind capacity
     * planning and watermark tuning: per event type, the gap series
@@ -1625,37 +1416,23 @@ object TimeSeries {
     * div den`, so partial-sum order cannot perturb parity — the
     * float-recurrence trap (each engine rounding a running product
     * differently) never opens. Defined on the OBSERVED hourly series
-    * ([[hourlyCounts]] — ONE definition shared with the other five
+    * ([[hourlyCteSql]] — ONE definition shared with the other
     * hourly operators); `ts_gap_fill` is the densification when
     * missing hours should weigh in as zeros. Shape at 100 TB: the raw
     * events collapse first (keyed shuffle, map-side combinable), the
     * 8 lags are ONE window pass per type partition. */
-  def tsEwma(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Window.partitionBy("event_type").orderBy("h")
-    val base = hourlyCounts(spark, sfDir)
-    val withLags = (1 to 7).foldLeft(base)((df, i) =>
-      df.withColumn(s"l$i", lag(col("n"), i).over(w)))
-    val num = (Seq("n * 128") ++ (1 to 7).map(i => s"coalesce(l$i, 0L) * ${1L << (7 - i)}"))
-      .mkString(" + ")
-    val den = (Seq("128") ++ (1 to 7).map(i => s"CASE WHEN l$i IS NOT NULL THEN ${1L << (7 - i)} ELSE 0 END"))
-      .mkString(" + ")
-    withLags.select(col("event_type"), col("h"), col("n"),
-      expr(s"(1000 * ($num)) div ($den)").as("ewma_e3"))
-      .orderBy("event_type", "h")
-  }
-
-  val tsEwmaOracle: String = {
+  val tsEwma: Key = Key.sql("ts_ewma") { t =>
     val num = (Seq("n * 128") ++ (1 to 7).map(i => s"COALESCE(l$i, 0) * ${1L << (7 - i)}"))
       .mkString(" + ")
     val den = (Seq("128") ++ (1 to 7).map(i => s"CASE WHEN l$i IS NOT NULL THEN ${1L << (7 - i)} ELSE 0 END"))
       .mkString(" + ")
     val lags = (1 to 7).map(i =>
       s"LAG(n, $i) OVER (PARTITION BY event_type ORDER BY h) AS l$i").mkString(",\n|    ")
-    s"""WITH $hourlyCteSql,
+    s"""WITH ${hourlyCteSql(t)},
        |lagged AS (SELECT event_type, h, n,
        |    $lags
        |  FROM hourly)
-       |SELECT event_type, h, n, (1000 * ($num)) // ($den) AS ewma_e3
+       |SELECT event_type, h, n, (1000 * ($num)) ${t.idiv} ($den) AS ewma_e3
        |FROM lagged ORDER BY event_type, h""".stripMargin
   }
 
@@ -1671,76 +1448,62 @@ object TimeSeries {
     * user-keyed min-aggregate (map-side combinable), the triangle one
     * join + one aggregate keyed on the same user id — two shuffles
     * total, and the output is weeks²-bounded. */
-  def tsCohortValue(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = events(spark, sfDir)
-      .select(col("user_id"), expr("unix_micros(ts) div 604800000000").as("wk"),
-        col("event_type"),
-        expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").as("cents"))
-    val cohorts = ev.groupBy("user_id").agg(min(col("wk")).as("cohort_wk"))
-    ev.filter(col("event_type") === "purchase")
-      .join(cohorts, Seq("user_id"))
-      .groupBy(col("cohort_wk"), (col("wk") - col("cohort_wk")).as("week_age"))
-      .agg(count(lit(1)).as("n_purchases"),
-        countDistinct(col("user_id")).as("n_buyers"),
-        sum(col("cents")).as("value_cents"))
-      .orderBy("cohort_wk", "week_age")
+  val tsCohortValue: Key = Key.sql("ts_cohort_value") { t =>
+    s"""WITH ev AS (SELECT user_id,
+       |    DATE_DIFF(${t.unit("microsecond")}, TIMESTAMP '1970-01-01 00:00:00', ts) ${t.idiv} 604800000000 AS wk,
+       |    event_type, CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+       |  FROM ${t("events")}),
+       |f AS (SELECT user_id, MIN(wk) AS cohort_wk FROM ev GROUP BY 1)
+       |SELECT cohort_wk, wk - cohort_wk AS week_age,
+       |  CAST(COUNT(*) AS BIGINT) AS n_purchases,
+       |  CAST(COUNT(DISTINCT ev.user_id) AS BIGINT) AS n_buyers,
+       |  CAST(SUM(cents) AS BIGINT) AS value_cents
+       |FROM ev JOIN f ON ev.user_id = f.user_id
+       |WHERE event_type = 'purchase'
+       |GROUP BY 1, 2 ORDER BY cohort_wk, week_age""".stripMargin
   }
 
-  val tsCohortValueOracle: String =
-    """WITH ev AS (SELECT user_id,
-      |    DATE_DIFF('microsecond', TIMESTAMP '1970-01-01 00:00:00', ts) // 604800000000 AS wk,
-      |    event_type, CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-      |  FROM events),
-      |f AS (SELECT user_id, MIN(wk) AS cohort_wk FROM ev GROUP BY 1)
-      |SELECT cohort_wk, wk - cohort_wk AS week_age,
-      |  CAST(COUNT(*) AS BIGINT) AS n_purchases,
-      |  CAST(COUNT(DISTINCT ev.user_id) AS BIGINT) AS n_buyers,
-      |  CAST(SUM(cents) AS BIGINT) AS value_cents
-      |FROM ev JOIN f ON ev.user_id = f.user_id
-      |WHERE event_type = 'purchase'
-      |GROUP BY 1, 2 ORDER BY cohort_wk, week_age""".stripMargin
-
   val keys: Seq[Key] = Seq(
-    Key("ts_ewma", tsEwma, tsEwmaOracle),
-    Key("ts_cohort_value", tsCohortValue, tsCohortValueOracle),
+    tsEwma,
+    tsCohortValue,
     Key("ts_interarrival", tsInterarrival, tsInterarrivalOracle),
-    Key("ts_peaks", tsPeaks, tsPeaksOracle),
-    Key("ts_forecast_eval", tsForecastEval, tsForecastEvalOracle),
+    tsPeaks,
+    tsForecastEval,
     Key("ts_robust_zscore", tsRobustZscore, tsRobustZscoreOracle),
     Key("ts_dau_wau", tsDauWau, tsDauWauOracle),
-    Key("ts_alert_debounce", tsAlertDebounce, tsAlertDebounceOracle),
+    tsAlertDebounce,
     Key("ts_downsample_m4", tsDownsampleM4, tsDownsampleM4Oracle),
-    Key("ts_seasonal_profile", tsSeasonalProfile, tsSeasonalProfileOracle),
+    tsSeasonalProfile,
     Key("ts_fill_forward", tsFillForward, tsFillForwardOracle),
-    Key("ts_tumbling_distinct", tsTumblingDistinct, tsTumblingDistinctOracle),
+    tsTumblingDistinct,
     Key("ts_lag_corr", tsLagCorr, tsLagCorrOracle),
     Key("ts_gap_fill", tsGapFill, tsGapFillOracle),
-    Key("ts_ohlc", tsOhlc, tsOhlcOracle),
-    Key("ts_anomaly", tsAnomaly, tsAnomalyOracle),
-    Key("ts_changepoint", tsChangepoint, tsChangepointOracle),
+    tsOhlc,
+    tsAnomaly,
+    tsChangepoint,
     Key("ts_stream_upsert", tsStreamUpsert, tsStreamUpsertOracle),
-    Key("ts_tumbling", tsTumbling, tsTumblingOracle),
+    tsTumbling,
     // the streaming executions must produce exactly the batch results
-    Key("ts_tumbling_stream", tsTumblingStream, tsTumblingOracle),
+    Key("ts_tumbling_stream", tsTumblingStream, tsTumbling.oracle),
     Key("ts_sliding", tsSliding, tsSlidingOracle),
     Key("ts_sliding_stream", tsSlidingStream, tsSlidingOracle),
     Key("ts_sliding_stream_append", tsSlidingStreamAppend, tsSlidingStreamAppendOracle),
     Key("ts_sliding_stream_update", tsSlidingStreamUpdate, tsSlidingStreamUpdateOracle),
     Key("ts_session", tsSession, tsSessionOracle),
     Key("ts_session_stream", tsSessionStream, tsSessionOracle),
-    Key("ts_dedup_watermark", tsDedupWatermark, tsDedupWatermarkOracle),
-    Key("ts_dedup_stream", tsDedupStream, tsDedupWatermarkOracle),
+    tsDedupWatermark,
+    Key("ts_dedup_stream", tsDedupStream, tsDedupWatermark.oracle),
     Key("ts_stateful_stream", tsStatefulStream, tsStatefulStreamOracle),
     // batch-equivalent by construction (see scaladoc)
     Key("ts_timeout_sessions", tsTimeoutSessions, tsSessionOracle),
     Key("ts_stream_join", tsStreamJoin, tsStreamJoinOracle),
     Key("ts_stream_stream_join", tsStreamStreamJoin, tsStreamStreamJoinOracle),
     Key("ts_stream_outer_join", tsStreamOuterJoin, tsStreamOuterJoinOracle),
-    Key("ts_stream_append_window", tsStreamAppendWindow, tsStreamAppendWindowOracle),
-    Key("ts_funnel", tsFunnel, tsFunnelOracle),
-    Key("ts_retention", tsRetention, tsRetentionOracle),
-    Key("ts_transitions", tsTransitions, tsTransitionsOracle),
-    Key("ts_late_data", tsLateData, tsLateDataOracle))
+    Key("ts_stream_append_window", tsStreamAppendWindow, tsTumbling.oracle),
+    tsFunnel,
+    tsRetention,
+    tsTransitions,
+    tsLateData)
 
   val queries: Map[String, Key.Run] = Key.queries(keys)
 }

@@ -36,22 +36,14 @@ object Windows {
   }
 
   /** Per-user inter-event gap (lag) and next event type (lead). */
-  def winLagLead(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    events(spark, sfDir)
-      .select(col("event_id"),
-        (unix_micros(col("ts")) - unix_micros(lag(col("ts"), 1).over(w))).as("gap_us"),
-        lead(col("event_type"), 1).over(w).as("next_type"))
-      .orderBy("event_id")
+  val winLagLead: Key = Key.sql("win_lag_lead") { t =>
+    s"""SELECT event_id,
+       |  DATE_DIFF(${t.unit("microsecond")}, LAG(ts, 1) OVER w, ts) AS gap_us,
+       |  LEAD(event_type, 1) OVER w AS next_type
+       |FROM ${t("events")}
+       |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+       |ORDER BY event_id""".stripMargin
   }
-
-  val winLagLeadOracle: String =
-    """SELECT event_id,
-      |  DATE_DIFF('microsecond', LAG(ts, 1) OVER w, ts) AS gap_us,
-      |  LEAD(event_type, 1) OVER w AS next_type
-      |FROM events
-      |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-      |ORDER BY event_id""".stripMargin
 
   /** VALUE-BASED RANGE FRAME — the one window-frame family the rest of
     * the window keys don't touch: every other frame here is ROWS
@@ -66,27 +58,16 @@ object Windows {
     * comparison in both engines, and same-day orders are provably
     * peers with identical frames. One customer-keyed shuffle + sort —
     * cost identical to the ROWS keys; exact DECIMAL cents inside. */
-  def winRangeFrame(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Window.partitionBy("o_custkey").orderBy("d").rangeBetween(-30, 0)
-    orders(spark, sfDir)
-      // NTZ-safe epoch day: DATE subtraction is timezone-free (the
-      // o_orderdate column is TIMESTAMP_NTZ in the driver testdata)
-      .withColumn("d", expr("CAST(datediff(CAST(o_orderdate AS DATE), DATE '1970-01-01') AS BIGINT)"))
-      .withColumn("cents", expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"))
-      .select(col("o_orderkey"), col("o_custkey"), col("d"), col("cents"),
-        sum(col("cents")).over(w).as("trailing_30d_cents"))
-      .orderBy("o_orderkey")
+  val winRangeFrame: Key = Key.sql("win_range_frame") { t =>
+    s"""WITH o AS (SELECT o_orderkey, o_custkey,
+       |    CAST(DATE_DIFF(${t.unit("day")}, DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS BIGINT) AS d,
+       |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+       |  FROM ${t("orders")})
+       |SELECT o_orderkey, o_custkey, d, cents,
+       |  CAST(SUM(cents) OVER (PARTITION BY o_custkey ORDER BY d
+       |    RANGE BETWEEN 30 PRECEDING AND CURRENT ROW) AS BIGINT) AS trailing_30d_cents
+       |FROM o ORDER BY o_orderkey""".stripMargin
   }
-
-  val winRangeFrameOracle: String =
-    """WITH o AS (SELECT o_orderkey, o_custkey,
-      |    CAST(DATE_DIFF('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS BIGINT) AS d,
-      |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-      |  FROM orders)
-      |SELECT o_orderkey, o_custkey, d, cents,
-      |  CAST(SUM(cents) OVER (PARTITION BY o_custkey ORDER BY d
-      |    RANGE BETWEEN 30 PRECEDING AND CURRENT ROW) AS BIGINT) AS trailing_30d_cents
-      |FROM o ORDER BY o_orderkey""".stripMargin
 
   /** Running revenue per customer in order-date order. */
   val winRunningSum: Key = Key.sql("win_running_sum") { t =>
@@ -158,46 +139,25 @@ object Windows {
     * total-ordered and both engines see identical islands; all interval
     * math is exact DATE + INT arithmetic. On the fixture ~30% of
     * intervals merge, so both merged and singleton islands are graded. */
-  def winIntervalMerge(spark: SparkSession, sfDir: String): DataFrame = {
-    val ord = Window.partitionBy("k")
-      .orderBy(col("s").asc, col("e").asc, col("uid").asc)
-    val prev = ord.rowsBetween(Window.unboundedPreceding, -1)
-    val run = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    orders(spark, sfDir)
-      .select(col("o_custkey").as("k"),
-        to_date(col("o_orderdate")).as("s"),
-        date_add(to_date(col("o_orderdate")),
-          (col("o_orderkey") % 120 + 30).cast("int")).as("e"),
-        col("o_orderkey").as("uid"))
-      .withColumn("pmax", max(col("e")).over(prev))
-      .withColumn("new_island",
-        when(col("pmax").isNull || col("s") > col("pmax"), 1L).otherwise(0L))
-      .withColumn("island", sum(col("new_island")).over(run))
-      .groupBy(col("k").as("o_custkey"), col("island"))
-      .agg(min(col("s")).as("island_start"), max(col("e")).as("island_end"),
-        count(lit(1)).as("n_intervals"),
-        (datediff(max(col("e")), min(col("s"))) + 1).cast("long").as("span_days"))
-      .orderBy("o_custkey", "island")
+  val winIntervalMerge: Key = Key.sql("win_interval_merge") { t =>
+    s"""WITH iv AS (SELECT o_custkey AS k, CAST(o_orderdate AS DATE) AS s,
+       |    CAST(o_orderdate AS DATE) + CAST(o_orderkey % 120 + 30 AS INT) AS e,
+       |    o_orderkey AS uid FROM ${t("orders")}),
+       |f AS (SELECT k, s, e, uid,
+       |    MAX(e) OVER (PARTITION BY k ORDER BY s, e, uid
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax
+       |  FROM iv),
+       |g AS (SELECT k, s, e,
+       |    SUM(CASE WHEN pmax IS NULL OR s > pmax THEN 1 ELSE 0 END)
+       |      OVER (PARTITION BY k ORDER BY s, e, uid
+       |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
+       |  FROM f)
+       |SELECT k AS o_custkey, CAST(island AS BIGINT) AS island,
+       |  MIN(s) AS island_start, MAX(e) AS island_end,
+       |  COUNT(*) AS n_intervals,
+       |  CAST(DATE_DIFF(${t.unit("day")}, MIN(s), MAX(e)) + 1 AS BIGINT) AS span_days
+       |FROM g GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
   }
-
-  val winIntervalMergeOracle: String =
-    """WITH iv AS (SELECT o_custkey AS k, CAST(o_orderdate AS DATE) AS s,
-      |    CAST(o_orderdate AS DATE) + CAST(o_orderkey % 120 + 30 AS INT) AS e,
-      |    o_orderkey AS uid FROM orders),
-      |f AS (SELECT k, s, e, uid,
-      |    MAX(e) OVER (PARTITION BY k ORDER BY s, e, uid
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax
-      |  FROM iv),
-      |g AS (SELECT k, s, e,
-      |    SUM(CASE WHEN pmax IS NULL OR s > pmax THEN 1 ELSE 0 END)
-      |      OVER (PARTITION BY k ORDER BY s, e, uid
-      |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-      |  FROM f)
-      |SELECT k AS o_custkey, CAST(island AS BIGINT) AS island,
-      |  MIN(s) AS island_start, MAX(e) AS island_end,
-      |  COUNT(*) AS n_intervals,
-      |  CAST(DATE_DIFF('day', MIN(s), MAX(e)) + 1 AS BIGINT) AS span_days
-      |FROM g GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
   /** RATIO-TO-REPORT — each order's share of its customer's lifetime
     * spend (Oracle's RATIO_TO_REPORT, BigQuery's safe share-of-total):
@@ -224,33 +184,19 @@ object Windows {
     * the raw table collapses to distinct (user, day) FIRST (map-side),
     * so the window and both aggregates run on the collapsed set — at
     * 100 TB the only data-sized pass is that first distinct. */
-  def winStreaks(spark: SparkSession, sfDir: String): DataFrame = {
-    val days = events(spark, sfDir)
-      .select(col("user_id"), expr("unix_micros(ts) div 86400000000").as("day"))
-      .distinct()
-    val w = Window.partitionBy("user_id").orderBy("day")
-    days
-      .withColumn("grp", col("day") - row_number().over(w))
-      .groupBy("user_id", "grp").agg(count(lit(1)).as("len"))
-      .groupBy("user_id")
-      .agg(max(col("len")).as("longest_streak_days"),
-        sum(col("len")).as("n_active_days"),
-        count(lit(1)).as("n_streaks"))
-      .orderBy("user_id")
+  val winStreaks: Key = Key.sql("win_streaks") { t =>
+    s"""WITH days AS (SELECT DISTINCT user_id,
+       |    DATE_DIFF(${t.unit("microsecond")}, TIMESTAMP '1970-01-01 00:00:00', ts) ${t.idiv} 86400000000 AS day
+       |  FROM ${t("events")}),
+       |g AS (SELECT user_id,
+       |    day - ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY day) AS grp
+       |  FROM days),
+       |s AS (SELECT user_id, grp, COUNT(*) AS len FROM g GROUP BY 1, 2)
+       |SELECT user_id, MAX(len) AS longest_streak_days,
+       |  CAST(SUM(len) AS BIGINT) AS n_active_days,
+       |  COUNT(*) AS n_streaks
+       |FROM s GROUP BY user_id ORDER BY user_id""".stripMargin
   }
-
-  val winStreaksOracle: String =
-    """WITH days AS (SELECT DISTINCT user_id,
-      |    DATE_DIFF('microsecond', TIMESTAMP '1970-01-01 00:00:00', ts) // 86400000000 AS day
-      |  FROM events),
-      |g AS (SELECT user_id,
-      |    day - ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY day) AS grp
-      |  FROM days),
-      |s AS (SELECT user_id, grp, COUNT(*) AS len FROM g GROUP BY 1, 2)
-      |SELECT user_id, MAX(len) AS longest_streak_days,
-      |  CAST(SUM(len) AS BIGINT) AS n_active_days,
-      |  COUNT(*) AS n_streaks
-      |FROM s GROUP BY user_id ORDER BY user_id""".stripMargin
 
   /** SLIDING MEDIAN — the robust smoother every monitoring pipeline
     * runs before thresholding (median-of-7 kills point spikes a moving
@@ -274,7 +220,7 @@ object Windows {
   }
 
   val winSlidingMedianOracle: String =
-    s"""WITH ${TimeSeries.hourlyCteSql},
+    s"""WITH ${TimeSeries.hourlyCteSql(Key.duckdb)},
       |f AS (SELECT event_type, h, n,
       |    list_sort(list(n) OVER (PARTITION BY event_type ORDER BY h
       |      ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)) AS arr
@@ -352,15 +298,15 @@ object Windows {
     winSkyline,
     Key("win_rank_delta", winRankDelta, winRankDeltaOracle),
     Key("win_sliding_median", winSlidingMedian, winSlidingMedianOracle),
-    Key("win_streaks", winStreaks, winStreaksOracle),
+    winStreaks,
     winRatioToReport,
-    Key("win_interval_merge", winIntervalMerge, winIntervalMergeOracle),
+    winIntervalMerge,
     winCumeNth,
     winTopkPerGroup,
     winRankDenseNtile,
-    Key("win_lag_lead", winLagLead, winLagLeadOracle),
+    winLagLead,
     winRunningSum,
-    Key("win_range_frame", winRangeFrame, winRangeFrameOracle),
+    winRangeFrame,
     Key("win_moving_range", winMovingRange, winMovingRangeOracle),
     winFirstLast)
 

@@ -154,7 +154,7 @@ object KvSnapshots {
   }
 
   private def commitManifest(root: String, name: String, entries: Seq[SnapEntry],
-      createdAt: Option[Long] = None): Unit = {
+      createdAt: Option[Long]): Unit = {
     val filesJson =
       if (entries.isEmpty) "[]"
       else entries.map { e =>

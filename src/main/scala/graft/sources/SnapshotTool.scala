@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * with action flags; §3.1: parse flags → dispatch on action). A user
   * of the reference drives create/export/restore/delete/list from a
   * command line; this gives the Spark engine the same entry point. The
-  * actions and their flags are listed once, in [[usage]].
+  * actions and their flags are listed once, in [[actions]].
   *
   * `run` returns a process exit code and is the unit under test; `main`
   * only forwards. Every data-touching action (create's write, export's
@@ -25,10 +25,15 @@ object SnapshotTool {
         case _ => throw CliError("missing action")
       }
       if (rest.size % 2 != 0) throw CliError("flags must come in --key value pairs")
-      val flags = rest.grouped(2).map {
+      val pairs = rest.grouped(2).map {
         case Seq(k, v) if k.startsWith("--") => k.drop(2) -> v
         case other => throw CliError(s"malformed flag pair: ${other.mkString(" ")}")
-      }.toMap
+      }.toSeq
+      val allowed = accepted.getOrElse(action, throw CliError(s"unknown action: $action"))
+      val given = pairs.map(_._1)
+      given.diff(given.distinct).headOption.foreach(k => throw CliError(s"repeated flag --$k"))
+      given.find(k => !allowed(k)).foreach(k => throw CliError(s"$action does not take --$k"))
+      val flags = pairs.toMap
       def need(k: String): String =
         flags.getOrElse(k, throw CliError(s"$action requires --$k"))
       def longFlag(k: String): Option[Long] = flags.get(k).map { v =>
@@ -194,7 +199,6 @@ object SnapshotTool {
             println(s"$n$stamp")
           }
           0
-        case other => throw CliError(s"unknown action: $other")
       }
     } catch {
       case CliError(m) => usage(m)
@@ -208,25 +212,34 @@ object SnapshotTool {
 
   private def ok(msg: String): Int = { println(msg); 0 }
 
+  /** One usage line per action: its name, then every flag it takes. */
+  private val actions = Seq(
+    "create  --root R --name N --source <parquet cells dir> [--created-at EPOCH_SEC]",
+    "export  --root R --name N --dest <second root> [--mappers N] [--bandwidth MBps] [--overwrite true] [--force true]",
+    "import  --root R --name N --from <second root> [--mappers N] [--bandwidth MBps] [--overwrite true] [--force true]",
+    "restore --root R --name N [--out <parquet dir>]",
+    "verify  --root R --name N",
+    "info    --root R --name N",
+    "delete  --root R --name N",
+    "cleanup --root R --before EPOCH_SEC",
+    "clone   --root R --name N --to <new kv store dir>",
+    "compact --store <kv store dir> [--target N] [--retain-versions K] [--purge-tombstones true]",
+    "merge-regions --a <region store> --b <region store> --dest <merged store>",
+    "bulk-load --staging <staged dir> --store <kv store dir>",
+    "scrub   --store <kv store dir>",
+    "replicate --wal <edit-log parquet dir> --dest <replica queue root> --store <replica kv store dir> [--batches N]",
+    "list    --root R")
+
+  /** action → the flags its usage line names; any other flag, or one
+    * given twice, is a usage error before the action starts. */
+  private val accepted: Map[String, Set[String]] = actions.map { l =>
+    l.takeWhile(_ != ' ') -> "--([a-z-]+)".r.findAllMatchIn(l).map(_.group(1)).toSet
+  }.toMap
+
   private def usage(err: String): Int = {
-    System.err.println(
-      s"""error: $err
-         |usage: SnapshotTool <create|export|import|restore|verify|info|delete|cleanup|clone|compact|merge-regions|bulk-load|scrub|replicate|list> [--flag value ...]
-         |  create  --root R --name N --source <parquet cells dir> [--created-at EPOCH_SEC]
-         |  export  --root R --name N --dest <second root> [--mappers N] [--bandwidth MBps] [--overwrite true] [--force true]
-         |  import  --root R --name N --from <second root> [--mappers N] [--bandwidth MBps] [--overwrite true] [--force true]
-         |  restore --root R --name N [--out <parquet dir>]
-         |  verify  --root R --name N
-         |  info    --root R --name N
-         |  delete  --root R --name N
-         |  cleanup --root R --before EPOCH_SEC
-         |  clone   --root R --name N --to <new kv store dir>
-         |  compact --store <kv store dir> [--target N] [--retain-versions K] [--purge-tombstones true]
-         |  merge-regions --a <region store> --b <region store> --dest <merged store>
-         |  bulk-load --staging <staged dir> --store <kv store dir>
-         |  scrub   --store <kv store dir>
-         |  replicate --wal <edit-log parquet dir> --dest <replica queue root> --store <replica kv store dir> [--batches N]
-         |  list    --root R""".stripMargin)
+    val names = actions.map(_.takeWhile(_ != ' ')).mkString("|")
+    System.err.println((s"error: $err" +: s"usage: SnapshotTool <$names> [--flag value ...]" +:
+      actions.map("  " + _)).mkString("\n"))
     2
   }
 

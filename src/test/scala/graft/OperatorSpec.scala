@@ -809,7 +809,7 @@ class OperatorSpec extends SparkSpec {
     import spark.implicits._
     Seq(("en", words.mkString(" ")))
       .toDF("lang", "text").write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val got = graft.operators.LlmText.llmTextZipf(spark, dir).collect()
+    val got = SparkEntry.queries("llm_text_zipf")(spark, dir).collect()
     assert(got.length == 1 && got.head.getString(0) == "en")
     val slope = got.head.getDouble(2)
     assert(slope > -1.2 && slope < -0.85, s"constructed power law read slope $slope")
@@ -1908,7 +1908,7 @@ class LifecycleSpec extends SparkSpec {
   }
 
   test("changepoint split is the true argmax and conserves event counts") {
-    val df = graft.operators.TimeSeries.tsChangepoint(spark, sf).collect()
+    val df = SparkEntry.queries("ts_changepoint")(spark, sf).collect()
     assert(df.nonEmpty, "no event_type produced a changepoint")
     // independent recomputation for one type: every candidate split's
     // exact ppm score must be <= the reported one (argmax property),

@@ -37,6 +37,30 @@ class EntrySpec extends SparkSpec {
   // data AND pins its result checksum — a strictly stronger gate — so the
   // loop re-ran all 288 queries for ~10 min of pure redundancy, and the
   // 49-min suite exceeded the verify driver's wall-clock budget in r18)
+  test("a SQL key spells the six dialect tokens per engine and reads events through Tables.events") {
+    val key = operators.Key.sql("dialect_probe") { t =>
+      s"""SELECT event_id ${t.idiv} 2 AS half, CAST(event_id AS ${t.int128}) AS wide,
+         |  CAST(event_id AS ${t.string}) AS id_text,
+         |  DATE_DIFF(${t.unit("microsecond")}, ts, ts + INTERVAL 1 SECOND) AS us, ts, w
+         |FROM (SELECT event_id, ts, ${t.unnest}(${t.split}('b a', ' ')) AS w FROM ${t("events")})
+         |ORDER BY event_id, w LIMIT 1""".stripMargin
+    }
+    Seq("event_id // 2", "AS HUGEINT)", "AS VARCHAR)", "DATE_DIFF('microsecond', ts,",
+      "unnest(string_split('b a', ' '))", "FROM events)").foreach { s =>
+      assert(key.oracle.contains(s), s"oracle lacks `$s`:\n${key.oracle}")
+    }
+    val df = key.run(spark, sf)
+    assert(df.schema("ts").dataType == org.apache.spark.sql.types.TimestampType)
+    val first = graft.sources.Tables.events(spark, sf).orderBy("event_id").limit(1).collect()(0)
+    val id = first.getAs[Long]("event_id")
+    val Array(row) = df.collect()
+    assert(row.getAs[Long]("half") == id / 2)
+    assert(row.getAs[java.math.BigDecimal]("wide").longValueExact == id)
+    assert(row.getAs[String]("id_text") == id.toString)
+    assert(row.getAs[Long]("us") == 1000000L)
+    assert(row.getAs[java.sql.Timestamp]("ts") == first.getAs[java.sql.Timestamp]("ts"))
+    assert(row.getAs[String]("w") == "a")
+  }
   test("suite session is the GraftSession configuration") {
     assert(spark.sql("SELECT float_dot(array(CAST(1.0 AS FLOAT)), array(CAST(2.0 AS FLOAT)))")
       .collect()(0).getDouble(0) == 2.0)

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.math.RoundingMode
-
 /** The round-2 dedup claims, checked on corpora the synthetic testdata
   * cannot produce:
   *
@@ -67,7 +65,6 @@ class DedupLosslessSpec extends graft.SparkSpec {
   }
 
   test("minhash dup pre-collapse equals uncollapsed banding on a duplicate-heavy corpus") {
-    import org.apache.spark.sql.functions._
     val docs = corpus(99)
     val df = spark.createDataFrame(docs).toDF("doc_id", "text")
     val got = LlmDedup.minhashPairs(df)

@@ -243,6 +243,21 @@ class KvCompactionSpec extends SparkSpec {
     assert(KvMeta.read(store) == metaBefore, "a usage error changed the store's index")
   }
 
+  test("the compact CLI rejects an unknown or repeated flag before touching the store") {
+    import spark.implicits._
+    val store = freshStore()
+    Seq((1L, "name", "alice"), (2L, "name", "bob")).toDF("rowkey", "qualifier", "value")
+      .write.format("graft-kv").option("path", store).mode("append").save()
+    Seq((1L, "name", KvCompaction.Tombstone)).toDF("rowkey", "qualifier", "value")
+      .write.format("graft-kv").option("path", store).mode("append").save()
+    val metaBefore = KvMeta.read(store)
+    assert(SnapshotTool.run(spark,
+      Seq("compact", "--store", store, "--purge-tombstone", "true")) == 2)
+    assert(SnapshotTool.run(spark,
+      Seq("compact", "--store", store, "--target", "1", "--target", "2")) == 2)
+    assert(KvMeta.read(store) == metaBefore, "a usage error changed the store's index")
+  }
+
   test("a failed rewrite leaves the live store untouched (swap happens last)") {
     val store = freshStore()
     fragmented(store, 3)
