@@ -6,9 +6,15 @@ import org.apache.spark.sql.SparkSession
   * suite run the same engine: [[GraftExtensions]] installed (SQL functions
   * plus the band-join rule), shuffle partitions equal to the core count,
   * UTC session time zone, Parquet nanosecond timestamps read as longs
-  * (the `events` layout [[graft.sources.Tables.events]] normalizes), UI
-  * off, WARN logging. A session that needs other
-  * settings derives them from this one through [[child]].
+  * (the `events` layout [[graft.sources.Tables.events]] normalizes),
+  * artifact isolation off, UI off, WARN logging. A session that needs
+  * other settings derives them from this one through [[child]].
+  *
+  * Artifact isolation is off because graft adds no artifacts, and an
+  * isolated session runs its tasks under a class loader of its own.
+  * Spark caches generated classes per class loader, so every fresh
+  * child (each SQL key run, each stream) would compile every generated
+  * class of its plan again.
   */
 object GraftSession {
 
@@ -43,6 +49,7 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

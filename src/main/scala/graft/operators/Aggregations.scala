@@ -615,17 +615,35 @@ object Aggregations {
     * 100 TB: one broadcast dim join, one segment-keyed sort window,
     * one partial+final aggregate — segment cardinality bounds the
     * output. */
-  val aggGini: Key = Key.sql("agg_gini") { t =>
-    s"""WITH c AS (SELECT c_mktsegment AS seg,
-       |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-       |  FROM ${t("orders")} JOIN ${t("customer")} ON o_custkey = c_custkey),
-       |r AS (SELECT seg, cents, ROW_NUMBER() OVER (PARTITION BY seg ORDER BY cents) AS rk FROM c),
-       |g AS (SELECT seg, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(cents) AS BIGINT) AS s0,
-       |             CAST(SUM(rk * cents) AS ${t.int128}) AS s1 FROM r GROUP BY 1)
-       |SELECT seg, n, CAST((1000000 * (2 * s1 - (n + 1) * CAST(s0 AS ${t.int128})))
-       |  ${t.idiv} (CAST(n AS ${t.int128}) * s0) AS BIGINT) AS gini_ppm
-       |FROM g ORDER BY seg""".stripMargin
+  def aggGini(spark: SparkSession, sfDir: String): DataFrame = {
+    val c = orders(spark, sfDir)
+      .join(broadcast(customer(spark, sfDir)), col("o_custkey") === col("c_custkey"))
+      .select(col("c_mktsegment").as("seg"),
+        expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)").as("cents"))
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("seg").orderBy("cents")
+    c.withColumn("rk", row_number().over(w))
+      .groupBy("seg")
+      // rk·cents is summed as DECIMAL(38,0): a BIGINT accumulator passes
+      // Long.MAX around n≈1.2M rows/segment (review finding — the
+      // HUGEINT-backed oracle SUM would keep computing while Spark threw)
+      .agg(count(lit(1)).as("n"), sum(col("cents")).as("s0"),
+        sum(expr("CAST(rk AS DECIMAL(38,0)) * cents")).as("s1"))
+      .select(col("seg"), col("n"),
+        expr("""CAST((1000000 * (2 * CAST(s1 AS DECIMAL(38,0)) - (n + 1) * CAST(s0 AS DECIMAL(38,0))))
+               | div (CAST(n AS DECIMAL(38,0)) * s0) AS BIGINT)""".stripMargin).as("gini_ppm"))
+      .orderBy("seg")
   }
+
+  val aggGiniOracle: String =
+    """WITH c AS (SELECT c_mktsegment AS seg,
+      |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+      |  FROM orders JOIN customer ON o_custkey = c_custkey),
+      |r AS (SELECT seg, cents, ROW_NUMBER() OVER (PARTITION BY seg ORDER BY cents) AS rk FROM c),
+      |g AS (SELECT seg, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(cents) AS BIGINT) AS s0,
+      |             CAST(SUM(rk * cents) AS HUGEINT) AS s1 FROM r GROUP BY 1)
+      |SELECT seg, n, CAST((1000000 * (2 * s1 - (n + 1) * CAST(s0 AS HUGEINT)))
+      |  // (CAST(n AS HUGEINT) * s0) AS BIGINT) AS gini_ppm
+      |FROM g ORDER BY seg""".stripMargin
 
   /** BENFORD FIRST-DIGIT AUDIT — the forensic-accounting screen for
     * fabricated or constrained numeric columns: the observed leading-
@@ -757,33 +775,70 @@ object Aggregations {
     * (map-side combinable), and nation-PARTITIONED windows — no
     * global window, no unpartitioned cumsum (the PlanSpec whole-
     * surface rule), and the merged grid shuffles once by nation. */
-  val aggKsTest: Key = Key.sql("agg_ks_test") { t =>
-    s"""WITH r AS (SELECT c_nationkey AS nk,
-       |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
-       |    CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END AS is1
-       |  FROM ${t("orders")} JOIN ${t("customer")} ON o_custkey = c_custkey
-       |  WHERE c_mktsegment IN ('BUILDING', 'MACHINERY')),
-       |g AS (SELECT nk, cents, CAST(SUM(is1) AS BIGINT) AS c1,
-       |    CAST(SUM(1 - is1) AS BIGINT) AS c2
-       |  FROM r GROUP BY nk, cents),
-       |cum AS (SELECT nk, cents,
-       |    SUM(c1) OVER (PARTITION BY nk ORDER BY cents
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS i,
-       |    SUM(c2) OVER (PARTITION BY nk ORDER BY cents
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS j
-       |  FROM g),
-       |tot AS (SELECT nk, CAST(SUM(c1) AS BIGINT) AS n1, CAST(SUM(c2) AS BIGINT) AS n2
-       |  FROM g GROUP BY nk),
-       |sup AS (SELECT cum.nk,
-       |    CAST(MAX(ABS(cum.i * tot.n2 - cum.j * tot.n1)) AS BIGINT) AS d_num,
-       |    CAST(MAX(tot.n1) AS BIGINT) AS n1, CAST(MAX(tot.n2) AS BIGINT) AS n2
-       |  FROM cum JOIN tot ON cum.nk = tot.nk GROUP BY cum.nk)
-       |SELECT n_name, n1, n2, d_num,
-       |  CASE WHEN n1 * n2 > 0
-       |       THEN CAST((1000000::${t.int128} * d_num) ${t.idiv} (n1::${t.int128} * n2) AS BIGINT)
-       |       ELSE 0 END AS ks_ppm
-       |FROM sup JOIN ${t("nation")} ON nk = n_nationkey ORDER BY n_name""".stripMargin
+  def aggKsTest(spark: SparkSession, sfDir: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val rows = orders(spark, sfDir)
+      .join(broadcast(customer(spark, sfDir)), col("o_custkey") === col("c_custkey"))
+      .filter(col("c_mktsegment").isin("BUILDING", "MACHINERY"))
+      .select(col("c_nationkey").as("nk"),
+        expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)").as("cents"),
+        when(col("c_mktsegment") === "BUILDING", 1L).otherwise(0L).as("is1"))
+    val grid = rows.groupBy("nk", "cents")
+      .agg(sum(col("is1")).as("c1"), sum(lit(1L) - col("is1")).as("c2"))
+    val w = Window.partitionBy("nk").orderBy("cents")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val totals = grid.groupBy("nk")
+      .agg(sum(col("c1")).as("n1"), sum(col("c2")).as("n2"))
+    // The cross-multiply itself rides DECIMAL(38,0), not raw BIGINT:
+    // DuckDB's window SUM already promotes i/j to HUGEINT, so past
+    // n1·n2 ≈ 2⁶³ the raw-BIGINT form would silently wrap here while
+    // the oracle stays exact — same headroom treatment as the final
+    // ppm division. The |sup| itself is ≤ n1·n2, so casting the max
+    // back to BIGINT is exact wherever the oracle's output cast is.
+    val sup = grid
+      .withColumn("i", sum(col("c1")).over(w))
+      .withColumn("j", sum(col("c2")).over(w))
+      .join(totals, Seq("nk"))
+      .groupBy("nk")
+      .agg(max(abs(expr("CAST(i AS DECIMAL(38,0)) * n2 - CAST(j AS DECIMAL(38,0)) * n1")))
+        .cast("bigint").as("d_num"),
+        first(col("n1")).as("n1"), first(col("n2")).as("n2"))
+    sup
+      .join(broadcast(nation(spark, sfDir)), col("nk") === col("n_nationkey"))
+      .select(col("n_name"), col("n1"), col("n2"), col("d_num"),
+        expr("""CASE WHEN n1 * n2 > 0
+                THEN CAST((CAST(1000000 AS DECIMAL(38,0)) * d_num)
+                     div (CAST(n1 AS DECIMAL(38,0)) * n2) AS BIGINT)
+                ELSE 0 END""").as("ks_ppm"))
+      .orderBy("n_name")
   }
+
+  val aggKsTestOracle: String =
+    """WITH r AS (SELECT c_nationkey AS nk,
+      |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
+      |    CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END AS is1
+      |  FROM orders JOIN customer ON o_custkey = c_custkey
+      |  WHERE c_mktsegment IN ('BUILDING', 'MACHINERY')),
+      |g AS (SELECT nk, cents, CAST(SUM(is1) AS BIGINT) AS c1,
+      |    CAST(SUM(1 - is1) AS BIGINT) AS c2
+      |  FROM r GROUP BY nk, cents),
+      |cum AS (SELECT nk, cents,
+      |    SUM(c1) OVER (PARTITION BY nk ORDER BY cents
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS i,
+      |    SUM(c2) OVER (PARTITION BY nk ORDER BY cents
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS j
+      |  FROM g),
+      |tot AS (SELECT nk, CAST(SUM(c1) AS BIGINT) AS n1, CAST(SUM(c2) AS BIGINT) AS n2
+      |  FROM g GROUP BY nk),
+      |sup AS (SELECT cum.nk,
+      |    CAST(MAX(ABS(cum.i * tot.n2 - cum.j * tot.n1)) AS BIGINT) AS d_num,
+      |    CAST(MAX(tot.n1) AS BIGINT) AS n1, CAST(MAX(tot.n2) AS BIGINT) AS n2
+      |  FROM cum JOIN tot ON cum.nk = tot.nk GROUP BY cum.nk)
+      |SELECT n_name, n1, n2, d_num,
+      |  CASE WHEN n1 * n2 > 0
+      |       THEN CAST((1000000::HUGEINT * d_num) // (n1::HUGEINT * n2) AS BIGINT)
+      |       ELSE 0 END AS ks_ppm
+      |FROM sup JOIN nation ON nk = n_nationkey ORDER BY n_name""".stripMargin
 
   /** MANN–WHITNEY U (r11) — the RANK-based two-sample screen that
     * complements `agg_ks_test`'s sup-of-ECDFs: U is sensitive to a
@@ -1004,13 +1059,13 @@ object Aggregations {
     Key("agg_mad", aggMad, aggMadOracle),
     aggWelchTtest,
     aggCramersV,
-    aggKsTest,
+    Key("agg_ks_test", aggKsTest, aggKsTestOracle),
     aggMannWhitney,
     aggBitmapDistinct,
     aggHhi,
     aggPareto,
     Key("agg_benford", aggBenford, aggBenfordOracle),
-    aggGini,
+    Key("agg_gini", aggGini, aggGiniOracle),
     aggChiSquare,
     Key("agg_sketch_intersect", aggSketchIntersect, aggSketchIntersectOracle),
     aggBoolAggs,

@@ -41,21 +41,14 @@ object Key {
 
   /** The plan of SQL `text`: on a fresh child session
     * ([[GraftSession.child]]) each table the text names is bound as a
-    * temp view over [[Tables.table]] (`events` over [[Tables.events]],
-    * which normalizes its `ts`), so its schema comes from the process
-    * memo, and a key writes no catalog entry any other key on the
-    * caller's session could resolve. The child opts out of artifact
-    * isolation: an isolated session runs its tasks under a class
-    * loader of its own, which misses every generated class the JVM
-    * already compiled, so each run would compile its whole plan again. */
+    * temp view over [[Tables.table]], so its schema comes from the
+    * process memo, and a key writes no catalog entry any other key on
+    * the caller's session could resolve. */
   private def bound(text: Dialect => String): Run = (spark, sfDir) => {
     val names = mutable.LinkedHashSet.empty[String]
     val query = text(new Dialect({ n => names += n; n }, spark = true))
-    val child = GraftSession.child(spark, "spark.sql.artifact.isolation.enabled" -> "false")
-    names.foreach { n =>
-      val df = if (n == "events") Tables.events(child, sfDir) else Tables.table(child, sfDir, n)
-      df.createTempView(n)
-    }
+    val child = GraftSession.child(spark)
+    names.foreach(n => Tables.table(child, sfDir, n).createTempView(n))
     child.sql(query)
   }
 

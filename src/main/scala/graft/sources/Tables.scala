@@ -20,8 +20,12 @@ import graft.util.Built
   */
 object Tables {
 
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    read(spark, s"$sfDir/$name.parquet")
+  /** Table `name` of `sfDir`; `events` comes with its `ts` normalized
+    * ([[events]]). */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val df = read(spark, s"$sfDir/$name.parquet")
+    if (name == "events") normalizeEventsTs(df) else df
+  }
 
   /** The parquet file or directory at `path`, read with a memoized
     * schema. Spark's inference runs a job on every read, even of one
@@ -68,8 +72,7 @@ object Tables {
     * sessions), and [[normalizeEventsTs]] truncates them to microseconds
     * exactly. DuckDB's reader truncates ns→µs identically, so the oracle
     * sees byte-identical timestamps. */
-  def events(spark: SparkSession, sfDir: String): DataFrame =
-    normalizeEventsTs(read(spark, s"$sfDir/events.parquet"))
+  def events(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "events")
 
   /** Both observed `events.parquet` layouts normalize to one session
     * TimestampType (UTC) `ts` column:

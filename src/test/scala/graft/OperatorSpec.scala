@@ -2172,6 +2172,21 @@ class LifecycleSpec extends SparkSpec {
       s"gini_ppm ${rows.head.getLong(2)} != exact $want for $probe")
   }
 
+  test("gini: a rank sum past Long.MAX stays exact") {
+    // five orders of 5e17..9e17 cents: Σx = 3.5e18 fits a BIGINT, but
+    // Σ rk·x = 1.15e19 does not, so a BIGINT accumulator raises under ANSI
+    val dir = java.nio.file.Files.createTempDirectory("gini_wide").toString
+    import spark.implicits._
+    Seq((1L, "BUILDING")).toDF("c_custkey", "c_mktsegment")
+      .write.parquet(s"$dir/customer.parquet")
+    (5 to 9).map(d => (1L, d * 1e15)).toDF("o_custkey", "o_totalprice")
+      .write.parquet(s"$dir/orders.parquet")
+    val Array(row) = SparkEntry.queries("agg_gini")(spark, dir).collect()
+    // G = (2·115 − 6·35) / (5·35) on x in units of 1e17 cents
+    assert(row.getString(0) == "BUILDING" && row.getLong(1) == 5L)
+    assert(row.getLong(2) == 1000000L * 20 / 175, s"gini_ppm ${row.getLong(2)}")
+  }
+
   test("DAU/WAU/MAU: monotone containment and a direct trailing-window check") {
     val rows = run("ts_dau_wau").collect()
     assert(rows.nonEmpty)

@@ -32,12 +32,7 @@ class EntrySpec extends SparkSpec {
   test("entry returns rows on sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
-  // (the former "every queries key has runnable result" full-surface loop
-  // was dropped in r19: GoldenSpec executes every key on the same sf0.001
-  // data AND pins its result checksum — a strictly stronger gate — so the
-  // loop re-ran all 288 queries for ~10 min of pure redundancy, and the
-  // 49-min suite exceeded the verify driver's wall-clock budget in r18)
-  test("a SQL key spells the six dialect tokens per engine and reads events through Tables.events") {
+  test("a SQL key spells the six dialect tokens per engine and reads events with a normalized ts") {
     val key = operators.Key.sql("dialect_probe") { t =>
       s"""SELECT event_id ${t.idiv} 2 AS half, CAST(event_id AS ${t.int128}) AS wide,
          |  CAST(event_id AS ${t.string}) AS id_text,
@@ -61,6 +56,11 @@ class EntrySpec extends SparkSpec {
     assert(row.getAs[java.sql.Timestamp]("ts") == first.getAs[java.sql.Timestamp]("ts"))
     assert(row.getAs[String]("w") == "a")
   }
+  // (the former "every queries key has runnable result" full-surface loop
+  // was dropped in r19: GoldenSpec executes every key on the same sf0.001
+  // data AND pins its result checksum — a strictly stronger gate — so the
+  // loop re-ran all 288 queries for ~10 min of pure redundancy, and the
+  // 49-min suite exceeded the verify driver's wall-clock budget in r18)
   test("suite session is the GraftSession configuration") {
     assert(spark.sql("SELECT float_dot(array(CAST(1.0 AS FLOAT)), array(CAST(2.0 AS FLOAT)))")
       .collect()(0).getDouble(0) == 2.0)
@@ -228,7 +228,7 @@ class EntrySpec extends SparkSpec {
     } finally pool.shutdownNow()
   }
   test("SQL keys leave no temporary view on the caller's session") {
-    val declared = "(?:Key\\.sql|ppmKey)\\(\"(\\w+)\"\\)".r
+    val declared = "Key\\.sql\\(\"(\\w+)\"\\)".r
     val names = scalaSources("src/main").flatMap { case (_, t) => declared.findAllMatchIn(t).map(_.group(1)) }
     assert(names.nonEmpty && names.forall(SparkEntry.queries.contains), s"SQL keys: $names")
     names.foreach(n => run(n).queryExecution.toRdd.count())
