@@ -271,10 +271,11 @@ object LlmVector {
     *     identical on both engines),
     *   - every centroid component and distance ROUND(6)-stabilized, ties
     *     broken by c_id, so partial-agg order cannot flip an argmin.
-    * Each iteration is one broadcast join (centroids are k×64 — tiny) +
-    * one shuffle keyed by vec_id, the textbook distributed-k-means shape:
-    * at 100 TB the assignment pass streams the corpus once per iteration
-    * and only k×64 doubles ever sit on the driver. The final cell id then
+    * Each iteration is one pass of [[lloyd]] (the loop PQ trains with
+    * too): a map-only assignment against the k×64 model shipped as a
+    * literal, fused with a k×65-partial centroid update — at 100 TB the
+    * pass streams the corpus once and only k×64 doubles ever sit on the
+    * driver. The final cell id then
     * plays the partition/bucketing-key role exactly as in `llm_ann_ivf`.
     *
     * k SCALES WITH THE CORPUS (r14 verdict task 1): a constant k makes
@@ -322,9 +323,9 @@ object LlmVector {
   private[graft] def trainCap(n: Long): Long =
     math.min(n, MaxPointsPerCentroid.toLong * ivfK(n))
 
-  /** LITERAL-MODEL CAP (r15 verdict task 2b): [[rankStructs]] ships
-    * the k×64 model as one `typedLit` — map-only and ideal while the
-    * model is small, but a multi-MB literal eventually defeats codegen
+  /** LITERAL-MODEL CAP (r15 verdict task 2b): [[codewordDists]] ships
+    * the model as one `typedLit` — map-only and ideal while the model
+    * is small, but a multi-MB literal eventually defeats codegen
     * (Janino's 64 KB method limit / constant-pool pressure). Above
     * this k the assignment falls back to the broadcast-join shape
     * (corpus ⋈ broadcast(centroids) → window argmin): one extra
@@ -342,37 +343,36 @@ object LlmVector {
     embeddings(spark, sfDir).select(col("vec_id"),
       expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("varr"))
 
-  /** Driver-held centroid model: (c_id, 64 components) sorted by c_id —
-    * built from the (c_id, pos, c) long-format rows a Lloyd pass
-    * collects. */
-  private def toModel(rows: Array[org.apache.spark.sql.Row]): Seq[(Int, Seq[Double])] =
-    rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map { case (cid, rs) =>
-      cid -> rs.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq
-    }
+  /** One subspace of a trained quantizer: its (c_id, codeword) pairs
+    * sorted by c_id. A quantizer is one of these per subspace — the IVF
+    * coarse quantizer is the one-subspace case, a PQ codebook has PqM.
+    * A cell that a Lloyd pass empties drops out, so a codeword is found
+    * by its c_id, never by its position. */
+  private[graft] type Codewords = Seq[(Int, Seq[Double])]
 
-  /** Every centroid's r6 squared-L2 distance to this row's `varr`, as a
-    * SORTED array of (dist2, c_id) structs — a PURE PER-ROW expression
-    * (r15): the k×64 model rides in the task binary as ONE literal, so
-    * the assignment/ranking pass is map-only — no join, no shuffle, no
-    * n×64×k intermediate. This is the honest 100 TB serving shape (the
-    * quantizer is a broadcast model, the corpus streams once); the
-    * distance kernel is the native codegen'd `double_sql2`, and the
-    * struct sort reproduces the (dist2 ASC, c_id ASC) argmin/rank
-    * tie-break exactly. */
-  private def rankStructs(cents: Seq[(Int, Seq[Double])]): Column = {
-    val carr = typedLit(cents.map(_._2))
-    val cids = typedLit(cents.map(_._1))
-    array_sort(transform(sequence(lit(0), lit(cents.size - 1)), i =>
+  /** Every codeword of the row's subspace `sub` (0-based) scored against
+    * the row's `varr`, as an array of (dist2 = r6 squared L2, c_id)
+    * structs in c_id order — a PURE PER-ROW expression (r15): the model
+    * rides in the task binary as one nested literal, so assignment,
+    * ranking and the ADC tables are map-only — no join, no shuffle, no
+    * n×k intermediate. The distance kernel is the native codegen'd
+    * `double_sql2` (left-to-right Σ(a−b)²), and struct order is the
+    * (dist2 ASC, c_id ASC) tie-break: `array_min` is the argmin,
+    * `array_sort` the ranking, `inline` the lookup table. */
+  private[graft] def codewordDists(model: IndexedSeq[Codewords], sub: Column): Column = {
+    val cws = element_at(typedLit(model.map(_.map(_._2))), sub + 1)
+    val cids = element_at(typedLit(model.map(_.map(_._1))), sub + 1)
+    transform(sequence(lit(0), size(cws) - 1), j =>
       struct(
-        r6(call_function("double_sql2", col("varr"), element_at(carr, i + 1))).as("dist2"),
-        element_at(cids, i + 1).as("c_id"))))
+        r6(call_function("double_sql2", col("varr"), element_at(cws, j + 1))).as("dist2"),
+        element_at(cids, j + 1).as("c_id")))
   }
 
   /** Full (vec_id, c_id, dist2, rn) ranking via the map-only literal
     * model — the k ≤ [[LiteralModelMaxK]] path. */
-  private[graft] def rankAllLiteral(rows: DataFrame,
-      model: Seq[(Int, Seq[Double])]): DataFrame =
-    rows.select(col("vec_id"), posexplode(rankStructs(model)).as(Seq("i", "s")))
+  private[graft] def rankAllLiteral(rows: DataFrame, model: Codewords): DataFrame =
+    rows.select(col("vec_id"),
+        posexplode(array_sort(codewordDists(Vector(model), lit(0)))).as(Seq("i", "s")))
       .select(col("vec_id"), col("s.c_id").as("c_id"), col("s.dist2").as("dist2"),
         (col("i") + 1).cast("int").as("rn"))
 
@@ -384,7 +384,7 @@ object LlmVector {
     * bit-identical (spec-pinned), and flipping the cap can never
     * change a result. */
   private[graft] def rankAllJoin(spark: SparkSession, rows: DataFrame,
-      model: Seq[(Int, Seq[Double])]): DataFrame = {
+      model: Codewords): DataFrame = {
     val cents = spark.createDataFrame(model).toDF("c_id", "carr")
     // NULLS FIRST (ADVICE r17, reverting the inverted r16 "fix"):
     // array_sort's nulls-last rule applies to null ELEMENTS, but the
@@ -402,28 +402,63 @@ object LlmVector {
   }
 
   private[graft] def rankAll(spark: SparkSession, rows: DataFrame,
-      model: Seq[(Int, Seq[Double])]): DataFrame =
+      model: Codewords): DataFrame =
     if (model.size <= LiteralModelMaxK) rankAllLiteral(rows, model)
     else rankAllJoin(spark, rows, model)
 
-  /** Per-row nearest centroid only — the Lloyd-pass shape (stays
-    * map-only on the literal path: no posexplode, no n×k rows). */
-  private def assignArgmin(spark: SparkSession, rows: DataFrame,
-      model: Seq[(Int, Seq[Double])]): DataFrame =
-    if (model.size <= LiteralModelMaxK)
-      rows.select(col("vec_id"),
-        element_at(rankStructs(model), 1).getField("c_id").as("c_id"))
-    else rankAllJoin(spark, rows, model)
-      .filter(col("rn") === 1).select("vec_id", "c_id")
+  /** Rows (vec_id, sub, varr) with `c_id`, each row's nearest codeword
+    * of its subspace: map-only on the literal model; past
+    * [[LiteralModelMaxK]] (a one-subspace IVF model) the broadcast-join
+    * ranking's first row, joined back by vec_id. */
+  private def assign(spark: SparkSession, rows: DataFrame,
+      model: IndexedSeq[Codewords]): DataFrame =
+    if (model.forall(_.size <= LiteralModelMaxK))
+      rows.withColumn("c_id", array_min(codewordDists(model, col("sub"))).getField("c_id"))
+    else {
+      require(model.size == 1, "the broadcast-join assignment serves one subspace")
+      rows.join(rankAllJoin(spark, rows, model.head).filter(col("rn") === 1)
+        .select("vec_id", "c_id"), Seq("vec_id"))
+    }
 
-  /** The corpus in long format (vec_id, pos, v: double) — un-
-    * materialized (r19): every consumer (the k > LiteralModelMaxK
-    * training fallback, the residual join, the residual query slice)
-    * references it once, a map-only parquet scan with pushdown. */
-  private def exploded(spark: SparkSession, sfDir: String): DataFrame =
-    embeddings(spark, sfDir)
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .withColumn("v", col("v").cast("double"))
+  /** The ONE deterministic Lloyd loop every quantizer here trains with
+    * — the IVF coarse quantizer (one subspace, [[IvfIters]] passes over
+    * the [[trainCap]] sample) and both PQ codebooks ([[PqM]] subspaces,
+    * [[PqIters]] passes). Input rows are (vec_id, sub, varr), one per
+    * vector and subspace:
+    *   - init: per subspace, the rows with vec_id < k, r6-rounded, as
+    *     codewords c_id = vec_id;
+    *   - each pass assigns every row its nearest codeword of its
+    *     subspace ([[assign]] — map-only on the literal model) and FUSES
+    *     the centroid update into the same map pass (r19, guide
+    *     §2.3/§2.4): the assigned rows partial-agg component-wise
+    *     (count + one sum per dimension over the vector arrays), so the
+    *     one exchange per pass carries subs×k×(dim + 1) partials per
+    *     task, never a corpus-sized join or shuffle;
+    *   - a centroid is sum/cnt r6-rounded in-plan, exactly the oracle's
+    *     ROUND(AVG(v), 6) (the FP-merge order differs, which r6
+    *     absorbs — oracle-verified at sf0.001/0.01/0.1).
+    * The model rows round-trip through the driver between passes, so
+    * each pass's model is a literal (or a LocalRelation past the cap)
+    * with no scheduled broadcast job. */
+  private def lloyd(spark: SparkSession, rows: DataFrame, k: Int,
+      iters: Int): IndexedSeq[Codewords] = {
+    def collectModel(cws: DataFrame): IndexedSeq[Codewords] = {
+      val bySub = cws.collect().groupBy(_.getInt(0))
+      bySub.keys.toIndexedSeq.sorted.map(s =>
+        bySub(s).map(r => r.getInt(1) -> r.getSeq[Double](2)).toSeq.sortBy(_._1))
+    }
+    var model = collectModel(rows.filter(col("vec_id") < k)
+      .select(col("sub"), col("vec_id").cast("int"), transform(col("varr"), x => r6(x))))
+    val dim = model.head.head._2.size
+    for (_ <- 1 to iters) {
+      model = collectModel(assign(spark, rows, model)
+        .groupBy("sub", "c_id")
+        .agg(count(lit(1)).as("cnt"),
+          array((1 to dim).map(i => sum(element_at(col("varr"), i))): _*).as("s"))
+        .select(col("sub"), col("c_id"), expr("transform(s, x -> round(x / cnt, 6))")))
+    }
+    model
+  }
 
   /** The BUILT IVF index — the realistic serving pattern: a quantizer is
     * trained once and then serves every search, not retrained per query.
@@ -443,7 +478,7 @@ object LlmVector {
     * TESTDATA.md fixtures are generated once); a mutable-corpus
     * deployment would key the index by a data fingerprint instead. */
   private[graft] final case class IvfIndex(n: Long, k: Int,
-      centroids: Seq[(Int, Seq[Double])], rankingDir: String) {
+      centroids: Codewords, rankingDir: String) {
     private def ranking(spark: SparkSession): DataFrame = graft.sources.Tables.read(spark, rankingDir)
     /** (vec_id, cell): the inverted list each vector is stored in. */
     def cells(spark: SparkSession): DataFrame =
@@ -452,12 +487,13 @@ object LlmVector {
     def probes(spark: SparkSession, nprobe: Int): DataFrame =
       ranking(spark).filter(col("vec_id") < 30 && col("rn") <= nprobe)
         .select(col("vec_id").as("q_id"), col("c_id").as("cell"))
-    /** (cell, pos, c): the centroids in long format. */
-    def centroidCells(spark: SparkSession): DataFrame = {
-      import spark.implicits._
-      centroids.flatMap { case (cid, cs) => cs.zipWithIndex.map { case (c, pos) => (cid, pos, c) } }
-        .toDF("cell", "pos", "c")
-    }
+    /** Rows (…, cell, varr) with `varr` replaced by its residual
+      * against the cell's centroid, looked up by c_id through a
+      * broadcast LocalRelation (job-free). */
+    def residuals(spark: SparkSession, rows: DataFrame): DataFrame =
+      rows.join(broadcast(spark.createDataFrame(centroids).toDF("cell", "carr")), Seq("cell"))
+        .withColumn("varr", zip_with(col("varr"), col("carr"), _ - _))
+        .drop("carr")
   }
 
   private[graft] object IvfIndex {
@@ -467,7 +503,11 @@ object LlmVector {
 
     def build(spark: SparkSession, sfDir: String): IvfIndex = {
       val n = embeddings(spark, sfDir).count()
-      val model = trainKmeans(spark, sfDir, n)
+      // TRAINING reads only the vec_id < trainCap(n) sample (r16 —
+      // FAISS max_points_per_centroid); k ≤ cap, so the init rows are
+      // in it
+      val model = lloyd(spark, embArr(spark, sfDir).filter(col("vec_id") < trainCap(n))
+        .withColumn("sub", lit(0)), ivfK(n), IvfIters).head
       // map-only (r15): the per-row sorted distance array IS the
       // ranking — posexplode materializes (vec_id, c_id, dist2, rn)
       // without the former n×64×k join/agg/window chain. rankAll (r16)
@@ -478,56 +518,6 @@ object LlmVector {
       }
       IvfIndex(n, ivfK(n), model, dir)
     }
-  }
-
-  /** The deterministic k-means quantizer over an n-vector corpus. */
-  private def trainKmeans(spark: SparkSession, sfDir: String,
-      n: Long): Seq[(Int, Seq[Double])] = {
-    val ex = exploded(spark, sfDir)
-    val k = ivfK(n)
-    // Each Lloyd pass (r19, guide §2.3/§2.4): assignment is the
-    // map-only literal-model argmin ([[rankStructs]] — no join, no
-    // shuffle, no n×64×k intermediate), and the centroid update is
-    // FUSED into the same map pass — the assigned rows partial-agg
-    // component-wise (count + 64 sums over the vector arrays), so the
-    // one exchange per pass carries k×65 partials per task instead of
-    // the former corpus×64-row join+shuffle (the r18 verdict's
-    // "finish the array-form rewrite the PQ side got"). avg = sum/cnt
-    // is r6-rounded in-plan exactly like the former r6(avg(v));
-    // FP-merge order differs from the old join-shaped plan, which r6
-    // absorbs — oracle-verified at sf0.001/0.01/0.1 like the r18
-    // pqDistsArr change. TRAINING reads only the vec_id < trainCap(n)
-    // sample (r16 — FAISS max_points_per_centroid). Init needs no own
-    // filter: k ≤ cap always (cap ≥ min(n, mppc·k) and mppc ≥ 1).
-    val cap = trainCap(n)
-    val trainRows = embArr(spark, sfDir).filter(col("vec_id") < cap)
-    var model = toModel(ex.filter(col("vec_id") < k)
-      .select(col("vec_id").cast("int").as("c_id"), col("pos"), r6(col("v")).as("c"))
-      .collect())
-    // the k > LiteralModelMaxK fallback keeps the pre-r19 join-shaped
-    // update (assignArgmin already falls back to the broadcast join
-    // there); it re-reads ex each pass, so cut its lineage once
-    lazy val exCkpt = ex.localCheckpoint()
-    for (_ <- 1 to IvfIters) {
-      val cent =
-        if (model.size <= LiteralModelMaxK)
-          trainRows
-            .select(element_at(rankStructs(model), 1).getField("c_id").as("c_id"),
-              col("varr"))
-            .groupBy("c_id")
-            .agg(count(lit(1)).as("cnt"),
-              array((1 to 64).map(i => sum(element_at(col("varr"), i))): _*).as("s"))
-            .select(col("c_id"),
-              posexplode(expr("transform(s, x -> round(x / cnt, 6))")).as(Seq("pos", "c")))
-        else {
-          val assign = assignArgmin(spark, trainRows, model)
-          exCkpt.join(assign, Seq("vec_id"))
-            .groupBy("c_id", "pos")
-            .agg(r6(avg(col("v"))).as("c"))
-        }
-      model = toModel(cent.collect())
-    }
-    model
   }
 
   /** ONE IVF search with nprobe as the user knob (the graded keys are
@@ -588,7 +578,7 @@ object LlmVector {
     // 2^IvfIters copies of the unnested vector table (the beam oracle's
     // sf1 OOM; see beamCtes)
     // TRAINING iterations read exs — the vec_id < mppc·k sample, the
-    // EXACT predicate Spark's trainKmeans applies (r16) — while the
+    // EXACT predicate IvfIndex.build trains on (r16) — while the
     // final assignment (cells0) and the probe distances read the full
     // ex, so both engines train on the sample and serve the corpus.
     val iterCtes = (1 to IvfIters).map { i =>
@@ -703,235 +693,83 @@ object LlmVector {
     * query needs only a per-query 8×16 LOOKUP TABLE of sub-distances —
     * the asymmetric distance computation (ADC): ‖q − recon(x)‖² =
     * Σ_sub dist²(q_sub, codeword(x, sub)). The codebook trains with
-    * the IVF key's deterministic Lloyd recipe (smallest-vec_id init,
-    * fixed iterations, r6-stabilized sums, c_id tie-break) run for all
-    * subspaces in ONE DataFrame pass — the subspace is just a grouping
-    * column. At 100 TB: the codebook is m·k·(64/m) doubles on the
-    * driver, the query distance tables broadcast, and scoring the
-    * corpus is one scan of the CODES table (8 small codes per vector —
-    * a ~32× storage cut vs float32) + a (sub, code)-keyed broadcast
-    * join; no full vector moves at query time. `llm_ann_pq_recall`
-    * measures what the compression costs against the exact L2 top-3. */
+    * the IVF quantizer's Lloyd loop ([[lloyd]]) run for all subspaces
+    * in ONE DataFrame pass — the subspace is just a grouping column.
+    * At 100 TB: the codebook is m·k·(64/m) doubles on the driver, the
+    * query distance tables broadcast, and scoring the corpus is one
+    * scan of the CODES table (8 small codes per vector — a ~32×
+    * storage cut vs float32) + a (sub, code)-keyed broadcast join; no
+    * full vector moves at query time. `llm_ann_pq_recall` measures
+    * what the compression costs against the exact L2 top-3. */
   private val PqM = 8
   private val PqK = 16
   private val PqIters = 3
 
-  /** A trained PQ codebook: its (sub, c_id, pos, c) rows as driver
-    * data — m·k·(64/m) doubles, exactly what "broadcast the model"
-    * means. Built once per (process, sfDir, kind) through
-    * [[graft.util.Built]]: the RAW-vector codebook (`llm_ann_pq`, kind
-    * `raw`) and the RESIDUAL codebook (`llm_ann_ivfpq_res`, kind `res`,
-    * the FAISS IVFPQ recipe) are one procedure, [[PqCodebook.build]],
-    * trained on two inputs. */
-  private[graft] final case class PqCodebook(rows: Array[org.apache.spark.sql.Row],
-      schema: org.apache.spark.sql.types.StructType) {
-    def frame(spark: SparkSession): DataFrame =
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  /** Rows (…, varr) as (…, sub, varr): each 64-dim vector's PqM
+    * sub-vectors of 64/PqM dims, sub 0-based. */
+  private def subspaces(rows: DataFrame): DataFrame = {
+    val d = 64 / PqM
+    val keep = rows.columns.filter(_ != "varr").map(col).toSeq
+    rows.select(keep :+ posexplode(transform(sequence(lit(0), lit(PqM - 1)),
+      s => slice(col("varr"), s * d + 1, lit(d)))).as(Seq("sub", "varr")): _*)
   }
 
-  private[graft] object PqCodebook {
-    /** The raw-vector codebook, trained on the sfDir's corpus. */
-    def raw(spark: SparkSession, sfDir: String): PqCodebook =
-      graft.util.Built(s"llm_vector.pq#raw:$sfDir")(build(pqExploded(spark, sfDir)))
+  /** The BUILT PQ index, held like [[IvfIndex]]: the trained codebook
+    * as driver data (m·k·(64/m) doubles, exactly what "broadcast the
+    * model" means) and the storage CODES — the argmin codeword of every
+    * (vector, subspace), the oracle's pcodes CTE — as ONE parquet
+    * (vec_id, sub, c_id) directory. Built once per (process, sfDir,
+    * kind) through [[graft.util.Built]]: the RAW-vector index
+    * (`llm_ann_pq`, kind `raw`) and the RESIDUAL index
+    * (`llm_ann_ivfpq_res`, kind `res`, the FAISS IVFPQ recipe) are one
+    * procedure trained and encoded on two inputs. Searches and recall
+    * keys read the codes and compute only their queries' tables. */
+  private[graft] final case class PqIndex(codebook: IndexedSeq[Codewords], codesDir: String) {
+    def codes(spark: SparkSession): DataFrame = graft.sources.Tables.read(spark, codesDir)
+    /** The ADC lookup tables of query rows (…, sub, varr): one
+      * (…, sub, dist2, c_id) row per codeword of the row's subspace —
+      * the oracle's qdt/rqdt CTEs. */
+    def tables(rows: DataFrame): DataFrame =
+      rows.select(col("*"), inline(codewordDists(codebook, col("sub")))).drop("varr")
+    /** Total quantization SSE of rows (vec_id, sub, varr) encoded
+      * under this codebook. */
+    def sse(rows: DataFrame): Double =
+      rows.agg(sum(array_min(codewordDists(codebook, col("sub"))).getField("dist2")))
+        .collect()(0).getDouble(0)
+  }
 
-    /** The residual codebook, trained on `exR` = [[resExploded]]. */
-    def residual(sfDir: String, exR: DataFrame): PqCodebook =
-      graft.util.Built(s"llm_vector.pq#res:$sfDir")(build(exR))
+  private[graft] object PqIndex {
+    /** The raw-vector index, trained on the sfDir's corpus. */
+    def raw(spark: SparkSession, sfDir: String): PqIndex =
+      graft.util.Built(s"llm_vector.pq#raw:$sfDir")(build(spark, s"raw:$sfDir", rawRows(spark, sfDir)))
 
-    /** The per-subspace deterministic Lloyd training over an input frame
-      * (vec_id, pos, sub, v). The model ROWS round-trip through the
-      * driver between passes (the [[trainKmeans]] discipline), so each
-      * iteration's distance pass broadcasts a LocalRelation with NO
-      * scheduled broadcast-subquery job. */
-    def build(exSub: DataFrame): PqCodebook = {
-      val exArr = exArrOf(exSub).localCheckpoint() // reused by all iterations
-      val subDim = 64 / PqM
-      val init = exSub.filter(col("vec_id") < PqK)
-        .select(col("sub"), col("vec_id").cast("int").as("c_id"), col("pos"),
-          r6(col("v")).as("c"))
-      var cb = PqCodebook(init.collect(), init.schema)
-      for (_ <- 1 to PqIters) {
-        // r19 (guide §2.3/§2.4, finishing the r18 array-form rewrite):
-        // assignment is the map-only [[pqAssignExpr]] literal pass —
-        // dist2 and tie-break bit-identical to
-        // pqArgmin(pqDistsArr(exArr, centArrLocal(state))) — and the
-        // centroid update FUSES into it as a component-wise partial agg
-        // (count + 64/m sums per (sub, c_id)), so one Lloyd pass is one
-        // corpus-array scan with an m×k×(64/m + 1)-partial exchange.
-        // The former shape paid an n×m-group argmin exchange PLUS an
-        // n×64-row join+shuffle per pass. avg = sum/cnt is r6-rounded
-        // in-plan like the former r6(avg(v)); the FP-merge-order delta
-        // is absorbed by r6 and oracle-verified at 3 SFs (the r18
-        // pqDistsArr standard).
-        val cent = exArr
-          .select(col("sub"), pqAssignExpr(pqModelOf(cb.rows)).as("c_id"), col("varr"))
-          .groupBy("sub", "c_id")
-          .agg(count(lit(1)).as("cnt"),
-            array((1 to subDim).map(i => sum(element_at(col("varr"), i))): _*).as("s"))
-          .select(col("sub"), col("c_id"),
-            posexplode(expr("transform(s, x -> round(x / cnt, 6))")).as(Seq("i", "c")))
-          .select(col("sub"), col("c_id"),
-            (col("sub") * subDim + col("i")).cast("int").as("pos"), col("c"))
-        cb = PqCodebook(cent.collect(), cent.schema)
+    /** The residual index, trained on [[resRows]]. */
+    def residual(spark: SparkSession, sfDir: String): PqIndex =
+      graft.util.Built(s"llm_vector.pq#res:$sfDir")(build(spark, s"res:$sfDir", resRows(spark, sfDir)))
+
+    private def build(spark: SparkSession, name: String, rows: DataFrame): PqIndex = {
+      val codebook = lloyd(spark, rows, PqK, PqIters)
+      val dir = graft.util.Built.dir(s"llm_vector.pq_codes#$name") { d =>
+        assign(spark, rows, codebook).select("vec_id", "sub", "c_id").write.parquet(d)
       }
-      cb
+      PqIndex(codebook, dir)
     }
   }
 
-  /** The exploded corpus with its PQ subspace (vec_id, pos, v, sub) —
-    * un-materialized (r19): every consumer folds or filters it exactly
-    * once per call (training checkpoints its own array fold; pqIndex's
-    * exArrOf and the init's vec_id < PqK slice are single map-side
-    * passes with parquet pushdown). */
-  private def pqExploded(spark: SparkSession, sfDir: String): DataFrame =
-    exploded(spark, sfDir).withColumn("sub", expr(s"pos div ${64 / PqM}"))
+  /** The corpus as PQ input rows (vec_id, sub, varr). */
+  private def rawRows(spark: SparkSession, sfDir: String): DataFrame =
+    subspaces(embArr(spark, sfDir))
 
-  /** (vec_id, sub) → pos-ordered value array: a map-side-complete fold
-    * of the exploded long format (all 64 exploded rows of a vector come
-    * from one posexplode call, so every group closes inside its own
-    * partition before the exchange). */
-  private[graft] def exArrOf(ex: DataFrame): DataFrame =
-    ex.groupBy("vec_id", "sub")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("v")))),
-        x => x.getField("v")).as("varr"))
-
-  /** Driver-side pivot of (sub, c_id, pos, c) codebook rows into the
-    * (sub, c_id, carr) array form as a LocalRelation: broadcasting it
-    * is JOB-FREE. The first r18 cut pivoted with a distributed groupBy,
-    * which scheduled a broadcast-subquery job per Lloyd iteration —
-    * measurable pure overhead on a driver-sized model (guide §5: the
-    * model is driver data; move it as driver data). */
-  private[graft] def centArrLocal(spark: SparkSession,
-      rows: Array[org.apache.spark.sql.Row]): DataFrame = {
-    import org.apache.spark.sql.types._
-    import org.apache.spark.sql.Row
-    val pivoted = rows
-      .groupBy(r => (r.getAs[Number]("sub").longValue, r.getAs[Number]("c_id").intValue))
-      .toSeq
-      // (sub, c_id)-sorted (ADVICE r18): Scala Map iteration order is
-      // hash-dependent, and an order-unstable LocalRelation makes the
-      // captured plans and broadcast contents vary across JVM runs even
-      // though every consumer aggregates (results were unaffected)
-      .sortBy(_._1)
-      .map { case ((sub, cId), rs) =>
-        val carr = rs.sortBy(_.getAs[Number]("pos").intValue)
-          .map(_.getAs[Number]("c").doubleValue).toSeq
-        // driver-side, free (ADVICE r18): pqDistsArr's element_at chain
-        // silently yields NULL dist2 on a short array with ANSI off —
-        // NULL would sort LAST in the argmin struct and skew the code
-        // assignment silently instead of failing loudly
-        assert(carr.size == 64 / PqM,
-          s"codeword (sub=$sub, c_id=$cId) has ${carr.size} components, expected ${64 / PqM}")
-        Row(sub, cId, carr)
-      }
-    val schema = StructType(Seq(StructField("sub", LongType, nullable = false),
-      StructField("c_id", IntegerType, nullable = false),
-      StructField("carr", ArrayType(DoubleType, containsNull = false), nullable = false)))
-    spark.createDataFrame(
-      java.util.Arrays.asList(pivoted: _*), schema)
-  }
-
-  /** Driver-side pivot of (sub, c_id, pos, c) codebook rows into the
-    * per-sub nested model [[pqAssignExpr]] rides: subs 0..PqM-1, each a
-    * (c_id asc)-sorted list of (c_id, pos-ordered codeword array). */
-  private[graft] def pqModelOf(rows: Array[org.apache.spark.sql.Row]): IndexedSeq[Seq[(Int, Seq[Double])]] = {
-    val bySub = rows.groupBy(_.getAs[Number]("sub").longValue)
-    (0 until PqM).map { sub =>
-      val rs = bySub.getOrElse(sub.toLong,
-        sys.error(s"PQ codebook lost subspace $sub entirely"))
-      rs.groupBy(_.getAs[Number]("c_id").intValue).toSeq.sortBy(_._1).map { case (cid, cw) =>
-        val carr = cw.sortBy(_.getAs[Number]("pos").intValue)
-          .map(_.getAs[Number]("c").doubleValue).toSeq
-        assert(carr.size == 64 / PqM,
-          s"codeword (sub=$sub, c_id=$cid) has ${carr.size} components, expected ${64 / PqM}")
-        cid -> carr
-      }
-    }
-  }
-
-  /** MAP-ONLY PQ codeword assignment (r19, the [[rankStructs]] recipe
-    * applied per-subspace): the whole m×k×(64/m) codebook rides the task
-    * binary as nested literals indexed by the row's `sub`, each
-    * candidate distance is the native codegen'd `double_sql2` (the same
-    * left-to-right Σ(a−b)² the [[pqDistsArr]] expression chain sums, so
-    * r6(dist2) is bit-identical), and array_min over (dist2, c_id)
-    * structs IS [[pqArgmin]]'s min(struct(...)) tie-break. Training's
-    * assignment therefore needs NO broadcast join and NO n×m-group
-    * exchange — it fuses into the centroid update's partial agg. */
-  private[graft] def pqAssignExpr(model: IndexedSeq[Seq[(Int, Seq[Double])]]): Column = {
-    val carrs = typedLit(model.map(_.map(_._2)))
-    val cids = typedLit(model.map(_.map(_._1)))
-    val subIdx = col("sub").cast("int") + 1
-    val subCarr = element_at(carrs, subIdx)
-    val subCid = element_at(cids, subIdx)
-    val structs = transform(sequence(lit(0), size(subCarr) - 1), j =>
-      struct(
-        r6(call_function("double_sql2", col("varr"), element_at(subCarr, j + 1))).as("dist2"),
-        element_at(subCid, j + 1).as("c_id")))
-    array_min(structs).getField("c_id")
-  }
-
-  /** Every (vector, subspace, codeword) squared distance — the single
-    * frame both the storage CODES (argmin per (vec, sub)) and the query
-    * DISTANCE TABLES (rows with vec_id < 30) are read from, exactly as
-    * the oracle's pd_codes CTE feeds pcodes and qdt.
-    *
-    * r18 shape (guide §2.3/§2.4): the corpus side folds to per-(row,
-    * sub) ARRAYS ordered by pos ([[exArrOf]]), the codebook arrives as
-    * a driver-pivoted LocalRelation ([[centArrLocal]]), and the k
-    * sub-distances are a map-side sub-keyed broadcast join + an
-    * explicit codegen'd expression tree (element_at chains; reduceLeft
-    * = left-to-right FP order). This replaces the (sub, pos)-keyed
-    * join whose n×64×k expansion was re-aggregated through a full hash
-    * shuffle on EVERY Lloyd iteration — the ANN family's hottest
-    * stage. FP-sum order is UNCHANGED: the old stream-side hash agg
-    * accumulated each (vec, sub, c_id) group in posexplode emission
-    * order (pos ascending, all rows co-partitioned), exactly the
-    * left-to-right order the expression tree sums. A zip_with/
-    * aggregate lambda form measured ~20 µs/row interpreted — the §1.1
-    * "ideal plan slower at first" gotcha, fixed by expression choice
-    * (guide §4.1: codegen-able built-ins in hot paths). */
-  private[graft] def pqDistsArr(exArr: DataFrame, centArr: DataFrame): DataFrame = {
-    val dist2 = (1 to 64 / PqM).map { i =>
-      val d = element_at(col("varr"), i) - element_at(col("carr"), i)
-      d * d
-    }.reduceLeft(_ + _)
-    exArr.join(broadcast(centArr), Seq("sub"))
-      .select(col("vec_id"), col("sub"), col("c_id"), r6(dist2).as("dist2"))
-  }
-
-  /** The (dist2 asc, c_id asc) argmin per (vec, sub) as a partial-agg
-    * min over the orderable struct — replaces the three row_number
-    * windows (full sort + shuffle each) that picked the same row; the
-    * struct's lexicographic order IS the window's ORDER BY, and both
-    * fields are non-null by construction. */
-  private[graft] def pqArgmin(dists: DataFrame): DataFrame =
-    dists.groupBy("vec_id", "sub")
-      .agg(min(struct(col("dist2"), col("c_id"))).as("m"))
-      .select(col("vec_id"), col("sub"), col("m.c_id").as("c_id"))
-
-  /** The PQ serving tables, encoded per call with the trained
-    * codebook: the storage CODES (argmin codeword per (vec, sub) — the
-    * oracle's pcodes CTE) and the query DISTANCE TABLES (rows with
-    * vec_id < 30 — the oracle's qdt CTE). Shared by the full-corpus ADC
-    * scan (`llm_ann_pq`) and the cell-pruned IVFADC path
-    * (`llm_ann_ivfpq`). */
-  private def pqIndex(spark: SparkSession, sfDir: String,
-      cb: PqCodebook): (DataFrame, DataFrame) = {
-    val dists = pqDistsArr(exArrOf(pqExploded(spark, sfDir)), centArrLocal(spark, cb.rows))
-      .localCheckpoint()
-    val codes = pqArgmin(dists)
-    val qdt = dists.filter(col("vec_id") < 30)
-      .select(col("vec_id").as("q_id"), col("sub"), col("c_id"), col("dist2"))
-    (codes, qdt)
-  }
+  /** The 30 query vectors as (q_id, varr). */
+  private def queryArr(spark: SparkSession, sfDir: String): DataFrame =
+    embArr(spark, sfDir).filter(col("vec_id") < 30).withColumnRenamed("vec_id", "q_id")
 
   /** Every query×doc ADC distance — the frame the top-3 key, the
     * rerank shortlist, and the recall grades all read (the oracle's
     * adc CTE). */
   private[graft] def pqAdc(spark: SparkSession, sfDir: String): DataFrame = {
-    val (codes, qdt) = pqIndex(spark, sfDir, PqCodebook.raw(spark, sfDir))
-    codes.join(broadcast(qdt), Seq("sub", "c_id"))
+    val pq = PqIndex.raw(spark, sfDir)
+    pq.codes(spark).join(broadcast(pq.tables(subspaces(queryArr(spark, sfDir)))), Seq("sub", "c_id"))
       .filter(col("vec_id") =!= col("q_id"))
       .groupBy(col("q_id"), col("vec_id").as("neighbor_id"))
       .agg(r6(sum(col("dist2"))).as("adc_dist2"))
@@ -1139,7 +977,7 @@ object LlmVector {
     * codes table per query batch and touching nprobe/k of it; against
     * `llm_ann_ivf_probe2`, the candidate scoring never touches a full
     * float vector. Both models are the BUILT ones their solo keys
-    * trained ([[IvfIndex]], [[PqCodebook.raw]]) — composition, not
+    * trained ([[IvfIndex]], [[PqIndex.raw]]) — composition, not
     * retraining, exactly like a FAISS IVFPQ index built once. The
     * plan shape is PlanSpec-pinned: candidates come from a (cell)
     * EQUI-join of the broadcast probe list against the cell-tagged
@@ -1148,13 +986,13 @@ object LlmVector {
     * `llm_ann_ivfpq_recall` grades what the composed pruning costs. */
   private[graft] def ivfPqAdc(spark: SparkSession, sfDir: String): DataFrame = {
     val ivf = IvfIndex(spark, sfDir)
-    val (codes, qdt) = pqIndex(spark, sfDir, PqCodebook.raw(spark, sfDir))
+    val pq = PqIndex.raw(spark, sfDir)
     // candidate set: the probed cells' inverted lists, NOT the corpus
     val cand = broadcast(ivf.probes(spark, 2)).join(ivf.cells(spark), Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
       .select("q_id", "vec_id")
-    cand.join(codes, Seq("vec_id"))
-      .join(broadcast(qdt), Seq("q_id", "sub", "c_id"))
+    cand.join(pq.codes(spark), Seq("vec_id"))
+      .join(broadcast(pq.tables(subspaces(queryArr(spark, sfDir)))), Seq("q_id", "sub", "c_id"))
       .groupBy(col("q_id"), col("vec_id").as("neighbor_id"))
       .agg(r6(sum(col("dist2"))).as("adc_dist2"))
   }
@@ -1263,8 +1101,8 @@ object LlmVector {
     * scored ONLY against the table of the cell they are stored in —
     * exactly the inverted-list+ADC serving loop. Both parent models
     * are the built ones their solo keys trained ([[IvfIndex]]); the
-    * residual codebook is the SAME deterministic Lloyd procedure
-    * ([[PqCodebook.build]]) pointed at the residual frame.
+    * residual index is the SAME Lloyd loop and encoding ([[PqIndex]])
+    * pointed at the residual rows.
     *
     * Measured payoff, honestly stated: the residual codebook's total
     * reconstruction SSE — the quantity residual encoding improves —
@@ -1279,31 +1117,9 @@ object LlmVector {
     * variance is a small fraction of raw variance) the SSE gap — and
     * with it the recall gap — widens in residual's favor; that is the
     * published FAISS result this key's machinery reproduces. */
-  private def resExploded(spark: SparkSession, sfDir: String, ivf: IvfIndex): DataFrame =
-    exploded(spark, sfDir).join(ivf.cells(spark), Seq("vec_id"))
-      .join(broadcast(ivf.centroidCells(spark)), Seq("cell", "pos"))
-      .select(col("vec_id"), col("pos"), expr(s"pos div ${64 / PqM}").as("sub"),
-        (col("v") - col("c")).as("v"))
-      .localCheckpoint()
-
-  /** Residual codes + per-(query, probed cell) distance tables — the
-    * residual mirror of [[pqIndex]]. */
-  private def resPqIndex(spark: SparkSession, sfDir: String,
-      ivf: IvfIndex): (DataFrame, DataFrame) = {
-    val exR = resExploded(spark, sfDir, ivf)
-    val cb = PqCodebook.residual(sfDir, exR)
-    val dists = pqDistsArr(exArrOf(exR), centArrLocal(spark, cb.rows)).localCheckpoint()
-    val codes = pqArgmin(dists)
-    val qRes = exploded(spark, sfDir).filter(col("vec_id") < 30)
-      .withColumnRenamed("vec_id", "q_id")
-      .join(broadcast(ivf.probes(spark, 2)), Seq("q_id"))
-      .join(broadcast(ivf.centroidCells(spark)), Seq("cell", "pos"))
-      .select(col("q_id"), col("cell"), col("pos"),
-        expr(s"pos div ${64 / PqM}").as("sub"), (col("v") - col("c")).as("qv"))
-    val qdt = qRes.join(broadcast(cb.frame(spark)), Seq("sub", "pos"))
-      .groupBy("q_id", "cell", "sub", "c_id")
-      .agg(r6(sum((col("qv") - col("c")) * (col("qv") - col("c")))).as("dist2"))
-    (codes, qdt)
+  private def resRows(spark: SparkSession, sfDir: String): DataFrame = {
+    val ivf = IvfIndex(spark, sfDir)
+    subspaces(ivf.residuals(spark, embArr(spark, sfDir).join(ivf.cells(spark), Seq("vec_id"))))
   }
 
   /** Total quantization SSE of the stored codes under each codebook —
@@ -1311,27 +1127,25 @@ object LlmVector {
     * recall deltas on this 90-possible clusterless fixture are
     * noise-dominated and flip sign between SFs; the SSE gap does
     * not). PlanSpec pins residual < raw. */
-  private[graft] def pqCodeSse(spark: SparkSession, sfDir: String): (Double, Double) = {
-    def sse(exSub: DataFrame, cb: PqCodebook): Double =
-      pqDistsArr(exArrOf(exSub), centArrLocal(spark, cb.rows))
-        .groupBy("vec_id", "sub")
-        .agg(min(struct(col("dist2"), col("c_id"))).as("m"))
-        .agg(sum(col("m.dist2"))).collect()(0).getDouble(0)
-    val exR = resExploded(spark, sfDir, IvfIndex(spark, sfDir))
-    (sse(pqExploded(spark, sfDir), PqCodebook.raw(spark, sfDir)),
-      sse(exR, PqCodebook.residual(sfDir, exR)))
-  }
+  private[graft] def pqCodeSse(spark: SparkSession, sfDir: String): (Double, Double) =
+    (PqIndex.raw(spark, sfDir).sse(rawRows(spark, sfDir)),
+      PqIndex.residual(spark, sfDir).sse(resRows(spark, sfDir)))
 
   private[graft] def resIvfPqAdc(spark: SparkSession, sfDir: String): DataFrame = {
     val ivf = IvfIndex(spark, sfDir)
-    val (codes, qdt) = resPqIndex(spark, sfDir, ivf)
+    val pq = PqIndex.residual(spark, sfDir)
+    val probes = ivf.probes(spark, 2)
+    // per-(query, probed cell) tables: the query's residual against
+    // each probed cell's centroid
+    val qdt = pq.tables(subspaces(ivf.residuals(spark,
+      queryArr(spark, sfDir).join(broadcast(probes), Seq("q_id")))))
     // candidate set: the probed cells' inverted lists, carrying the
     // cell so each candidate is ADC-scored against the table of the
     // ONE cell it is stored in
-    val cand = broadcast(ivf.probes(spark, 2)).join(ivf.cells(spark), Seq("cell"))
+    val cand = broadcast(probes).join(ivf.cells(spark), Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
       .select("q_id", "cell", "vec_id")
-    cand.join(codes, Seq("vec_id"))
+    cand.join(pq.codes(spark), Seq("vec_id"))
       .join(broadcast(qdt), Seq("q_id", "cell", "sub", "c_id"))
       .groupBy(col("q_id"), col("vec_id").as("neighbor_id"))
       .agg(r6(sum(col("dist2"))).as("adc_dist2"))

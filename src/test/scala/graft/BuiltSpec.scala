@@ -84,12 +84,13 @@ class BuiltAnnSpec extends SparkSpec {
       }.toMap
 
   test("ANN indexes survive Bench's cleanup: searches match goldens, nothing rebuilt") {
-    // the IVF index, the kNN graph and (for llm_ann_ivfpq) the raw PQ
-    // codebook are all built before the cleanup
-    Seq("llm_ann_ivf_kmeans", "llm_knn_graph", "llm_ann_pq").foreach(k => run(k).collect())
+    // the IVF index, the kNN graph and the raw and residual PQ indexes
+    // (codebook and codes) are all built before the cleanup
+    Seq("llm_ann_ivf_kmeans", "llm_knn_graph", "llm_ann_pq", "llm_ann_ivfpq_res")
+      .foreach(k => run(k).collect())
     val built = Built.keys
     Bench.cleanup(spark)
-    Seq("llm_ann_ivfpq", "llm_ann_beam").foreach { k =>
+    Seq("llm_ann_ivfpq", "llm_ann_beam", "llm_ann_ivfpq_res_recall").foreach { k =>
       assert(GoldenDump.checksum(run(k)) == golden(k), s"$k does not match its golden checksum")
     }
     assert(Built.keys == built, "a search rebuilt an index after the cleanup")

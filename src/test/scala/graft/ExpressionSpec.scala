@@ -159,37 +159,39 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("map-only PQ assignment equals the join-form argmin bit-for-bit (r19)") {
-    // The fused Lloyd update assigns codewords with pqAssignExpr (nested
-    // codebook literals + double_sql2 + array_min) instead of
-    // pqArgmin(pqDistsArr(...)) (broadcast join + partial-agg min). The
-    // two paths must agree EXACTLY — any divergence would silently
-    // train a different codebook. Deterministic synthetic corpus: 24
-    // vectors × 64 dims, codebook = first 16 vectors' components.
+    // Every quantizer assigns codewords with codewordDists (the codebook
+    // as nested literals + double_sql2) and array_min over its
+    // (dist2, c_id) structs. It must agree EXACTLY with a plain-Scala
+    // argmin over (r6(Σ(a−b)²), c_id), summed left to right — any
+    // divergence would silently train a different codebook.
+    // Deterministic synthetic corpus: 24 vectors × 64 dims, codebook =
+    // first 16 vectors' components, 8 subspaces of 8 dims; one more
+    // input row per vector checks the one-subspace (IVF) case against
+    // the first 4 vectors whole.
     import org.apache.spark.sql.functions._
     import graft.operators.LlmVector
     import spark.implicits._
-    val ex = (0 until 24).flatMap { v =>
-      (0 until 64).map { p =>
-        // varied, sign-flipping values with ties broken by c_id order
-        (v.toLong, p, math.sin(v * 17 + p * 3) * (1 + (p % 5)), p / 8L)
-      }
-    }.toDF("vec_id", "pos", "v", "sub")
-    val init = ex.filter(col("vec_id") < 16)
-      .select(col("sub"), col("vec_id").cast("int").as("c_id"), col("pos"),
-        round(col("v"), 6).as("c"))
-    val rows = init.collect()
-    val exArr = LlmVector.exArrOf(ex)
-    val joinForm = LlmVector.pqArgmin(
-        LlmVector.pqDistsArr(exArr, LlmVector.centArrLocal(spark, rows)))
-      .orderBy("vec_id", "sub").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-    val mapForm = exArr
-      .select(col("vec_id"), col("sub"),
-        LlmVector.pqAssignExpr(LlmVector.pqModelOf(rows)).as("c_id"))
-      .orderBy("vec_id", "sub").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-    assert(joinForm.length == 24 * 8)
-    assert(joinForm.toSeq == mapForm.toSeq)
+    // varied, sign-flipping values with ties broken by c_id order
+    val vecs = (0 until 24).map(v => (0 until 64).map(p => math.sin(v * 17 + p * 3) * (1 + (p % 5))))
+    def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    def argmin(x: Seq[Double], cws: LlmVector.Codewords): Int =
+      cws.minBy { case (c, cw) =>
+        (r6(x.zip(cw).foldLeft(0.0) { case (s, (a, b)) => s + (a - b) * (a - b) }), c)
+      }(Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int))._1
+    def mapForm(model: IndexedSeq[LlmVector.Codewords], rows: Seq[(Long, Int, Seq[Double])]) =
+      rows.toDF("vec_id", "sub", "varr")
+        .select(col("vec_id"), col("sub"),
+          array_min(LlmVector.codewordDists(model, col("sub"))).getField("c_id"))
+        .orderBy("vec_id", "sub").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSeq
+    val pq = (0 until 8).map(s => (0 until 16).map(c => c -> vecs(c).slice(s * 8, s * 8 + 8).map(r6)))
+    val pqRows = for (v <- 0 until 24; s <- 0 until 8) yield (v.toLong, s, vecs(v).slice(s * 8, s * 8 + 8))
+    val reference = pqRows.map { case (v, s, x) => (v, s, argmin(x, pq(s))) }
+    assert(reference.length == 24 * 8)
+    assert(reference.toSeq == mapForm(pq, pqRows))
+    val ivf = Vector((0 until 4).map(c => c -> vecs(c).map(r6)))
+    val ivfRows = (0 until 24).map(v => (v.toLong, 0, vecs(v)))
+    assert(ivfRows.map { case (v, s, x) => (v, s, argmin(x, ivf.head)) } == mapForm(ivf, ivfRows))
   }
 
   test("GraftExtensions installs float_dot and rolling_hash through the real builder path") {

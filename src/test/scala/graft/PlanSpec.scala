@@ -437,12 +437,9 @@ class PlanSpec extends SparkSpec {
   /** A child of the suite session with the band rule excluded: the
     * nested-loop ground truth the rewrite is diffed against. `conf`
     * applies to this session only. */
-  private def withoutBandRule(conf: (String, String)*): org.apache.spark.sql.SparkSession = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.optimizer.excludedRules", graft.plans.BandJoinBucketing.ruleName)
-    conf.foreach { case (k, v) => s.conf.set(k, v) }
-    s
-  }
+  private def withoutBandRule(conf: (String, String)*): org.apache.spark.sql.SparkSession =
+    GraftSession.child(spark,
+      ("spark.sql.optimizer.excludedRules" -> graft.plans.BandJoinBucketing.ruleName) +: conf: _*)
 
   test("Q17-shape correlated AVG threshold decorrelates fully") {
     // the aggregate-vs-own-group stress: both correlated aggregates
@@ -775,7 +772,8 @@ class PlanSpec extends SparkSpec {
     assert(plain.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin") ||
       plain.queryExecution.executedPlan.toString.contains("CartesianProduct"),
       "interval fixture no longer nested-loops without the rule")
-    val rewritten = q(spark)
+    // the views are registered on a child: none is left on the suite session
+    val rewritten = q(GraftSession.child(spark))
     val extPlan = rewritten.queryExecution.executedPlan.toString
     assert(!extPlan.contains("BroadcastNestedLoopJoin") && !extPlan.contains("CartesianProduct"),
       "band rule did not fire on the timestamp-interval band:\n" + extPlan.take(1200))

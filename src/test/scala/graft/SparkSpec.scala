@@ -151,7 +151,8 @@ class EntrySpec extends SparkSpec {
     // every query; GraftSession.child derives every child session and
     // writes the only conf written at run time; the SQL key binder
     // registers the only temp views, on its own child session; only
-    // KvSnapshots knows the snapshot layout; and no SQL text reads a
+    // KvSnapshots knows the snapshot layout; one expression scores a
+    // row against a literal quantizer model; and no SQL text reads a
     // table by path, so every table read goes through the schema memo.
     // A home is a file, or one member of it: the text between the blank
     // lines around its def.
@@ -162,7 +163,8 @@ class EntrySpec extends SparkSpec {
       ("newSession(", "GraftSession.scala", Some("def child(")),
       ("conf.set(", "GraftSession.scala", Some("def child(")),
       ("createTempView", "Key.scala", Some("def bound(")),
-      ("MANIFEST.json", "KvSnapshots.scala", None))
+      ("MANIFEST.json", "KvSnapshots.scala", None),
+      ("typedLit(", "LlmVector.scala", Some("def codewordDists(")))
     val main = scalaSources("src/main")
     val pathSql = main.filter(_._2.contains("parquet.`")).map(_._1)
     assert(pathSql.isEmpty, s"SQL text reads parquet by path in ${pathSql.mkString(", ")}")
