@@ -105,20 +105,11 @@ case class DoubleSqL2(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (n != y.numElements()) null
-    else {
-      var s = 0.0
-      var i = 0
-      while (i < n) {
-        val d = x.getDouble(i) - y.getDouble(i)
-        s += d * d
-        i += 1
-      }
-      s
-    }
+    if (x.numElements() != y.numElements()) null
+    else VectorExprs.sqL2(x.toDoubleArray(), y.toDoubleArray())
   }
 
+  // the generated loop is VectorExprs.sqL2's, statement for statement
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
       val n = ctx.freshName("n")
@@ -151,6 +142,20 @@ object VectorExprs {
   private[graft] def build(exprs: Seq[Expression]): FloatDot = {
     require(exprs.length == 2, s"float_dot expects 2 arguments, got ${exprs.length}")
     FloatDot(exprs(0), exprs(1))
+  }
+
+  /** Σ(x−y)² over two equal-length vectors, summed left to right: the
+    * one distance loop of `double_sql2` and the ANN quantizer kernel
+    * (`LlmVector.Kernel`), so both give the same bits. */
+  private[graft] def sqL2(x: Array[Double], y: Array[Double]): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < x.length) {
+      val d = x(i) - y(i)
+      s += d * d
+      i += 1
+    }
+    s
   }
 
   private[graft] def buildSqL2(exprs: Seq[Expression]): DoubleSqL2 = {

@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
+import graft.functions.VectorExprs
 import graft.sources.Tables._
 
 /** Vector-similarity operators over the embeddings table (SURVEY.md
@@ -272,10 +276,10 @@ object LlmVector {
     *   - every centroid component and distance ROUND(6)-stabilized, ties
     *     broken by c_id, so partial-agg order cannot flip an argmin.
     * Each iteration is one pass of [[lloyd]] (the loop PQ trains with
-    * too): a map-only assignment against the k×64 model shipped as a
-    * literal, fused with a k×65-partial centroid update — at 100 TB the
-    * pass streams the corpus once and only k×64 doubles ever sit on the
-    * driver. The final cell id then
+    * too): one map-only job whose tasks assign every row against the
+    * k×64 model carried in the task closure and fold a k×65-partial
+    * centroid update — at 100 TB the pass streams the corpus once and
+    * only k×64 doubles ever sit on the driver. The final cell id then
     * plays the partition/bucketing-key role exactly as in `llm_ann_ivf`.
     *
     * k SCALES WITH THE CORPUS (r14 verdict task 1): a constant k makes
@@ -291,8 +295,8 @@ object LlmVector {
     * Spark and DuckDB can never disagree on the quantizer size.
     * Training itself is bounded-sample since r16 (the FAISS
     * max_points_per_centroid recipe — see [[trainCap]]); the final
-    * assignment still streams the full corpus once per the plan shape
-    * above (broadcast model, map-only argmin). */
+    * assignment still streams the full corpus once (model in the
+    * closure, map-only ranking). */
   private val IvfCellTarget = 500
   private val IvfKFloor = 4
   private[graft] def ivfK(n: Long): Int =
@@ -323,22 +327,8 @@ object LlmVector {
   private[graft] def trainCap(n: Long): Long =
     math.min(n, MaxPointsPerCentroid.toLong * ivfK(n))
 
-  /** LITERAL-MODEL CAP (r15 verdict task 2b): [[codewordDists]] ships
-    * the model as one `typedLit` — map-only and ideal while the model
-    * is small, but a multi-MB literal eventually defeats codegen
-    * (Janino's 64 KB method limit / constant-pool pressure). Above
-    * this k the assignment falls back to the broadcast-join shape
-    * (corpus ⋈ broadcast(centroids) → window argmin): one extra
-    * shuffle-free broadcast, same r6 distances, same (dist2, c_id)
-    * tie-break — [[rankAllLiteral]]/[[rankAllJoin]] equality is
-    * spec-pinned. Every measured SF sits far below the cap (sf3:
-    * k = 120), so graded plans are unchanged; the cap exists so a
-    * billion-vector corpus (k ≈ 2·10⁶ cells) cannot generate an
-    * unschedulable task binary. */
-  private[graft] val LiteralModelMaxK = 2048
-
-  /** The corpus as (vec_id, varr: ARRAY<DOUBLE>) — the map-side
-    * assignment input (one scan, no explode). */
+  /** The corpus as (vec_id, varr: ARRAY<DOUBLE>) — the quantizer input
+    * (one scan, no explode). */
   private def embArr(spark: SparkSession, sfDir: String): DataFrame =
     embeddings(spark, sfDir).select(col("vec_id"),
       expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("varr"))
@@ -352,12 +342,11 @@ object LlmVector {
 
   /** Every codeword of the row's subspace `sub` (0-based) scored against
     * the row's `varr`, as an array of (dist2 = r6 squared L2, c_id)
-    * structs in c_id order — a PURE PER-ROW expression (r15): the model
-    * rides in the task binary as one nested literal, so assignment,
-    * ranking and the ADC tables are map-only — no join, no shuffle, no
-    * n×k intermediate. The distance kernel is the native codegen'd
-    * `double_sql2` (left-to-right Σ(a−b)²), and struct order is the
-    * (dist2 ASC, c_id ASC) tie-break: `array_min` is the argmin,
+    * structs in c_id order — the Catalyst form of [[Kernel]] for the
+    * plans that score a handful of rows at query time (the ADC tables,
+    * the code SSE): the model rides in the task binary as one nested
+    * literal, the distance is the native `double_sql2`, and struct order
+    * is the (dist2 ASC, c_id ASC) tie-break — `array_min` is the argmin,
     * `array_sort` the ranking, `inline` the lookup table. */
   private[graft] def codewordDists(model: IndexedSeq[Codewords], sub: Column): Column = {
     val cws = element_at(typedLit(model.map(_.map(_._2))), sub + 1)
@@ -368,57 +357,97 @@ object LlmVector {
         element_at(cids, j + 1).as("c_id")))
   }
 
-  /** Full (vec_id, c_id, dist2, rn) ranking via the map-only literal
-    * model — the k ≤ [[LiteralModelMaxK]] path. */
-  private[graft] def rankAllLiteral(rows: DataFrame, model: Codewords): DataFrame =
-    rows.select(col("vec_id"),
-        posexplode(array_sort(codewordDists(Vector(model), lit(0)))).as(Seq("i", "s")))
-      .select(col("vec_id"), col("s.c_id").as("c_id"), col("s.dist2").as("dist2"),
-        (col("i") + 1).cast("int").as("rn"))
+  /** One quantizer input row: vector `vecId`'s (sub-)vector `varr` in
+    * subspace `sub`, null for a null embedding. */
+  private[graft] final case class QRow(vecId: Long, sub: Int, varr: Array[Double])
 
-  /** The same ranking via corpus ⋈ broadcast(centroids) → window —
-    * the k > [[LiteralModelMaxK]] fallback (and the pre-r15 shape).
-    * Distances are the identical r6(double_sql2) over the identical
-    * component order, and the window tie-break (dist2 ASC, c_id ASC)
-    * is `array_sort`'s struct order — so the two paths are
-    * bit-identical (spec-pinned), and flipping the cap can never
-    * change a result. */
-  private[graft] def rankAllJoin(spark: SparkSession, rows: DataFrame,
-      model: Codewords): DataFrame = {
-    val cents = spark.createDataFrame(model).toDF("c_id", "carr")
-    // NULLS FIRST (ADVICE r17, reverting the inverted r16 "fix"):
-    // array_sort's nulls-last rule applies to null ELEMENTS, but the
-    // sorted elements here are struct(dist2, c_id) values that are never
-    // null — a null dist2 FIELD sorts FIRST under Spark's ascending
-    // struct-field ordering. The default ASC window (nulls first)
-    // therefore matches rankAllLiteral's array_sort order
-    // unconditionally, including a hypothetical mixed-null partition.
-    val w = Window.partitionBy("vec_id")
-      .orderBy(col("dist2").asc, col("c_id").asc)
-    rows.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("c_id"),
-        r6(call_function("double_sql2", col("varr"), col("carr"))).as("dist2"))
-      .withColumn("rn", row_number().over(w))
+  /** A frame's (vec_id, sub, varr) rows as kernel input, copied out of
+    * the plan's internal rows (no deserializer to generate). */
+  private[graft] def qrows(rows: DataFrame): RDD[QRow] =
+    rows.select("vec_id", "sub", "varr").queryExecution.toRdd.map(r =>
+      QRow(r.getLong(0), r.getInt(1), if (r.isNullAt(2)) null else r.getArray(2).toDoubleArray()))
+
+  /** `round(d, 6)` as Spark computes it for a double. */
+  private[graft] def round6(d: Double): Double =
+    if (d.isNaN || d.isInfinite) d
+    else java.math.BigDecimal.valueOf(d).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+
+  /** THE QUANTIZER KERNEL every index build runs: a model as plain
+    * arrays, carried in the task closure, so a pass over the corpus
+    * plans no Catalyst query and compiles no class. Against each row it
+    * scores every codeword of the row's subspace — dist2 = r6 of
+    * `double_sql2`'s left-to-right Σ(a−b)² ([[VectorExprs.sqL2]]), or
+    * SQL NULL (kept as [[NoDist]]) for a null vector or a dimension
+    * mismatch — and orders them by (dist2, c_id) with a null dist2
+    * first: `array_sort`'s order over [[codewordDists]]'s structs, so
+    * argmin, ranking and codes are bit-identical to the Catalyst form
+    * (spec-pinned). Per-(sub, codeword) counts and component sums are
+    * the Lloyd partials; a null vector is assigned (to the smallest
+    * c_id) but adds to neither, as the oracle's AVG skips it. */
+  private[graft] final class Kernel(model: IndexedSeq[Codewords]) extends Serializable {
+    private val cids = model.map(_.map(_._1).toArray).toArray
+    private val cws = model.map(_.map(_._2.toArray).toArray).toArray
+
+    private def dists(r: QRow): Array[Double] = cws(r.sub).map(cw =>
+      if (r.varr == null || r.varr.length != cw.length) NoDist
+      else round6(VectorExprs.sqL2(r.varr, cw)))
+
+    private def before(ds: Array[Double], a: Int, b: Int): Boolean = {
+      val c = java.lang.Double.compare(ds(a), ds(b))
+      c < 0 || (c == 0 && a < b)
+    }
+
+    private def argmin(ds: Array[Double]): Int =
+      ds.indices.reduce((best, j) => if (before(ds, j, best)) j else best)
+
+    /** The c_id of the row's nearest codeword. */
+    def nearest(r: QRow): Int = cids(r.sub)(argmin(dists(r)))
+
+    /** The row's (vec_id, c_id, dist2, rn) ranking of every codeword. */
+    def ranked(r: QRow): Seq[Row] = {
+      val ds = dists(r)
+      ds.indices.sortWith(before(ds, _, _)).zipWithIndex.map { case (j, i) =>
+        Row(r.vecId, cids(r.sub)(j), if (ds(j) == NoDist) null else ds(j), i + 1)
+      }
+    }
+
+    /** Lloyd partials: per subspace, a count per codeword and its
+      * component sums, codeword-major. */
+    type Partials = (Array[Array[Long]], Array[Array[Double]])
+
+    def zero: Partials =
+      (cws.map(c => new Array[Long](c.length)), cws.map(c => new Array[Double](c.length * c.head.length)))
+
+    def add(acc: Partials, r: QRow): Partials = {
+      if (r.varr != null) {
+        val j = argmin(dists(r))
+        val d = cws(r.sub)(j).length
+        acc._1(r.sub)(j) += 1
+        for (p <- 0 until d) acc._2(r.sub)(j * d + p) += r.varr(p)
+      }
+      acc
+    }
+
+    def merge(a: Partials, b: Partials): Partials = {
+      for (s <- a._1.indices; j <- a._1(s).indices) a._1(s)(j) += b._1(s)(j)
+      for (s <- a._2.indices; i <- a._2(s).indices) a._2(s)(i) += b._2(s)(i)
+      a
+    }
+
+    /** The next model: each codeword's cell mean, r6-rounded, as the
+      * oracle's ROUND(AVG(v), 6); a cell no row reached drops out. */
+    def update(acc: Partials): IndexedSeq[Codewords] =
+      cids.indices.map { s =>
+        cids(s).indices.filter(acc._1(s)(_) > 0).map { j =>
+          val d = cws(s)(j).length
+          cids(s)(j) -> (0 until d).map(p => round6(acc._2(s)(j * d + p) / acc._1(s)(j)))
+        }
+      }
   }
 
-  private[graft] def rankAll(spark: SparkSession, rows: DataFrame,
-      model: Codewords): DataFrame =
-    if (model.size <= LiteralModelMaxK) rankAllLiteral(rows, model)
-    else rankAllJoin(spark, rows, model)
-
-  /** Rows (vec_id, sub, varr) with `c_id`, each row's nearest codeword
-    * of its subspace: map-only on the literal model; past
-    * [[LiteralModelMaxK]] (a one-subspace IVF model) the broadcast-join
-    * ranking's first row, joined back by vec_id. */
-  private def assign(spark: SparkSession, rows: DataFrame,
-      model: IndexedSeq[Codewords]): DataFrame =
-    if (model.forall(_.size <= LiteralModelMaxK))
-      rows.withColumn("c_id", array_min(codewordDists(model, col("sub"))).getField("c_id"))
-    else {
-      require(model.size == 1, "the broadcast-join assignment serves one subspace")
-      rows.join(rankAllJoin(spark, rows, model.head).filter(col("rn") === 1)
-        .select("vec_id", "c_id"), Seq("vec_id"))
-    }
+  /** A null dist2 inside [[Kernel]]: below every squared distance, so it
+    * sorts first, as a null struct field does in `array_sort`. */
+  private val NoDist = -1.0
 
   /** The ONE deterministic Lloyd loop every quantizer here trains with
     * — the IVF coarse quantizer (one subspace, [[IvfIters]] passes over
@@ -427,37 +456,39 @@ object LlmVector {
     * vector and subspace:
     *   - init: per subspace, the rows with vec_id < k, r6-rounded, as
     *     codewords c_id = vec_id;
-    *   - each pass assigns every row its nearest codeword of its
-    *     subspace ([[assign]] — map-only on the literal model) and FUSES
-    *     the centroid update into the same map pass (r19, guide
-    *     §2.3/§2.4): the assigned rows partial-agg component-wise
-    *     (count + one sum per dimension over the vector arrays), so the
-    *     one exchange per pass carries subs×k×(dim + 1) partials per
-    *     task, never a corpus-sized join or shuffle;
-    *   - a centroid is sum/cnt r6-rounded in-plan, exactly the oracle's
+    *   - each pass is ONE map-only job: every task assigns its rows with
+    *     the [[Kernel]] in its closure and folds the per-(sub, c_id)
+    *     counts and component sums, and `treeAggregate` merges the
+    *     subs×k×(dim + 1) partials on the driver — no per-pass plan,
+    *     no shuffle, no corpus-sized intermediate;
+    *   - a centroid is sum/cnt r6-rounded, exactly the oracle's
     *     ROUND(AVG(v), 6) (the FP-merge order differs, which r6
-    *     absorbs — oracle-verified at sf0.001/0.01/0.1).
-    * The model rows round-trip through the driver between passes, so
-    * each pass's model is a literal (or a LocalRelation past the cap)
-    * with no scheduled broadcast job. */
-  private def lloyd(spark: SparkSession, rows: DataFrame, k: Int,
-      iters: Int): IndexedSeq[Codewords] = {
-    def collectModel(cws: DataFrame): IndexedSeq[Codewords] = {
-      val bySub = cws.collect().groupBy(_.getInt(0))
-      bySub.keys.toIndexedSeq.sorted.map(s =>
-        bySub(s).map(r => r.getInt(1) -> r.getSeq[Double](2)).toSeq.sortBy(_._1))
-    }
-    var model = collectModel(rows.filter(col("vec_id") < k)
-      .select(col("sub"), col("vec_id").cast("int"), transform(col("varr"), x => r6(x))))
-    val dim = model.head.head._2.size
+    *     absorbs — oracle-verified at sf0.001/0.01/0.1). */
+  private[graft] def lloyd(rows: RDD[QRow], k: Int, iters: Int): IndexedSeq[Codewords] = {
+    val init = rows.filter(r => r.vecId < k && r.varr != null).collect().groupBy(_.sub)
+    var model: IndexedSeq[Codewords] = init.keys.toIndexedSeq.sorted.map(s =>
+      init(s).sortBy(_.vecId).map(r => r.vecId.toInt -> r.varr.toSeq.map(round6)).toSeq)
     for (_ <- 1 to iters) {
-      model = collectModel(assign(spark, rows, model)
-        .groupBy("sub", "c_id")
-        .agg(count(lit(1)).as("cnt"),
-          array((1 to dim).map(i => sum(element_at(col("varr"), i))): _*).as("s"))
-        .select(col("sub"), col("c_id"), expr("transform(s, x -> round(x / cnt, 6))")))
+      val kernel = new Kernel(model)
+      model = kernel.update(rows.treeAggregate(kernel.zero)(kernel.add, kernel.merge))
     }
     model
+  }
+
+  /** Every row's full (vec_id, c_id, dist2, rn) ranking under `model`. */
+  private[graft] def rankRows(spark: SparkSession, rows: RDD[QRow],
+      model: IndexedSeq[Codewords]): DataFrame = {
+    val kernel = new Kernel(model)
+    spark.createDataFrame(rows.flatMap(kernel.ranked),
+      StructType.fromDDL("vec_id BIGINT, c_id INT, dist2 DOUBLE, rn INT"))
+  }
+
+  /** Every row's (vec_id, sub, c_id) code: its nearest codeword. */
+  private[graft] def encodeRows(spark: SparkSession, rows: RDD[QRow],
+      model: IndexedSeq[Codewords]): DataFrame = {
+    val kernel = new Kernel(model)
+    spark.createDataFrame(rows.map(r => Row(r.vecId, r.sub, kernel.nearest(r))),
+      StructType.fromDDL("vec_id BIGINT, sub INT, c_id INT"))
   }
 
   /** The BUILT IVF index — the realistic serving pattern: a quantizer is
@@ -501,22 +532,23 @@ object LlmVector {
     def apply(spark: SparkSession, sfDir: String): IvfIndex =
       graft.util.Built(s"llm_vector.ivf:$sfDir")(build(spark, sfDir))
 
+    /** Reads the corpus once, into one RDD that counts, trains and
+      * ranks and is unpersisted before the index is returned. */
     def build(spark: SparkSession, sfDir: String): IvfIndex = {
-      val n = embeddings(spark, sfDir).count()
-      // TRAINING reads only the vec_id < trainCap(n) sample (r16 —
-      // FAISS max_points_per_centroid); k ≤ cap, so the init rows are
-      // in it
-      val model = lloyd(spark, embArr(spark, sfDir).filter(col("vec_id") < trainCap(n))
-        .withColumn("sub", lit(0)), ivfK(n), IvfIters).head
-      // map-only (r15): the per-row sorted distance array IS the
-      // ranking — posexplode materializes (vec_id, c_id, dist2, rn)
-      // without the former n×64×k join/agg/window chain. rankAll (r16)
-      // flips to the broadcast-join shape past LiteralModelMaxK — same
-      // rows either way, spec-pinned.
-      val dir = graft.util.Built.dir(s"llm_vector.ivf_ranking:$sfDir") { d =>
-        rankAll(spark, embArr(spark, sfDir), model).write.parquet(d)
-      }
-      IvfIndex(n, ivfK(n), model, dir)
+      val rows = qrows(embArr(spark, sfDir).withColumn("sub", lit(0)))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        val n = rows.count()
+        val cap = trainCap(n)
+        // TRAINING reads only the vec_id < trainCap(n) sample (r16 —
+        // FAISS max_points_per_centroid); k ≤ cap, so the init rows are
+        // in it
+        val model = lloyd(rows.filter(_.vecId < cap), ivfK(n), IvfIters)
+        val dir = graft.util.Built.dir(s"llm_vector.ivf_ranking:$sfDir") { d =>
+          rankRows(spark, rows, model).write.parquet(d)
+        }
+        IvfIndex(n, ivfK(n), model.head, dir)
+      } finally rows.unpersist(blocking = true)
     }
   }
 
@@ -694,7 +726,7 @@ object LlmVector {
     * the asymmetric distance computation (ADC): ‖q − recon(x)‖² =
     * Σ_sub dist²(q_sub, codeword(x, sub)). The codebook trains with
     * the IVF quantizer's Lloyd loop ([[lloyd]]) run for all subspaces
-    * in ONE DataFrame pass — the subspace is just a grouping column.
+    * in ONE job per pass — the subspace is just a key of the partials.
     * At 100 TB: the codebook is m·k·(64/m) doubles on the driver, the
     * query distance tables broadcast, and scoring the corpus is one
     * scan of the CODES table (8 small codes per vector — a ~32×
@@ -747,12 +779,17 @@ object LlmVector {
     def residual(spark: SparkSession, sfDir: String): PqIndex =
       graft.util.Built(s"llm_vector.pq#res:$sfDir")(build(spark, s"res:$sfDir", resRows(spark, sfDir)))
 
+    /** Reads `rows` once, like [[IvfIndex.build]]: one persisted RDD
+      * trains the codebook and is encoded. */
     private def build(spark: SparkSession, name: String, rows: DataFrame): PqIndex = {
-      val codebook = lloyd(spark, rows, PqK, PqIters)
-      val dir = graft.util.Built.dir(s"llm_vector.pq_codes#$name") { d =>
-        assign(spark, rows, codebook).select("vec_id", "sub", "c_id").write.parquet(d)
-      }
-      PqIndex(codebook, dir)
+      val input = qrows(rows).persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        val codebook = lloyd(input, PqK, PqIters)
+        val dir = graft.util.Built.dir(s"llm_vector.pq_codes#$name") { d =>
+          encodeRows(spark, input, codebook).write.parquet(d)
+        }
+        PqIndex(codebook, dir)
+      } finally input.unpersist(blocking = true)
     }
   }
 

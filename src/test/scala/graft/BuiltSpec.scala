@@ -96,13 +96,32 @@ class BuiltAnnSpec extends SparkSpec {
     assert(Built.keys == built, "a search rebuilt an index after the cleanup")
   }
 
-  test("retainOnly: a key that built an index rebuilds it, a rider stays warm") {
-    // a fresh sfDir holding the same embeddings is a cold index key
+  /** Runs `f` on a fresh sfDir holding the suite's embeddings: a cold
+    * key for every ANN index. */
+  private def withFreshSf(f: String => Unit): Unit = {
     val dir = java.nio.file.Files.createTempDirectory("builtspec_sf")
     try {
       java.nio.file.Files.copy(java.nio.file.Paths.get(sf, "embeddings.parquet"),
         dir.resolve("embeddings.parquet"))
-      val fresh = dir.toString
+      f(dir.toString)
+    } finally graft.util.Scratch.deleteTree(dir.toString)
+  }
+
+  test("index builds leave no RDD persisted") {
+    // a pinned block would make Bench.cleanup run System.gc() inside the
+    // next key's timing
+    withFreshSf { fresh =>
+      Bench.cleanup(spark)
+      operators.LlmVector.IvfIndex(spark, fresh)
+      operators.LlmVector.PqIndex.raw(spark, fresh)
+      operators.LlmVector.PqIndex.residual(spark, fresh)
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    }
+  }
+
+  test("retainOnly: a key that built an index rebuilds it, a rider stays warm") {
+    // a fresh sfDir holding the same embeddings is a cold index key
+    withFreshSf { fresh =>
       def index = operators.LlmVector.IvfIndex(spark, fresh)
       def checksum(key: String) = GoldenDump.checksum(SparkEntry.queries(key)(spark, fresh))
 
@@ -126,6 +145,6 @@ class BuiltAnnSpec extends SparkSpec {
       assert(Built.keys == beforeRider, "the rider built something")
       Built.retainOnly(beforeRider)
       assert(index eq index2, "the rider's index went cold")
-    } finally graft.util.Scratch.deleteTree(dir.toString)
+    }
   }
 }

@@ -159,11 +159,12 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("map-only PQ assignment equals the join-form argmin bit-for-bit (r19)") {
-    // Every quantizer assigns codewords with codewordDists (the codebook
-    // as nested literals + double_sql2) and array_min over its
-    // (dist2, c_id) structs. It must agree EXACTLY with a plain-Scala
-    // argmin over (r6(Σ(a−b)²), c_id), summed left to right — any
-    // divergence would silently train a different codebook.
+    // Index builds assign codewords with the quantizer kernel; query-time
+    // plans with codewordDists (the codebook as nested literals +
+    // double_sql2) and array_min over its (dist2, c_id) structs. Both
+    // must agree EXACTLY with a plain-Scala argmin over
+    // (r6(Σ(a−b)²), c_id), summed left to right — any divergence would
+    // silently train a different codebook.
     // Deterministic synthetic corpus: 24 vectors × 64 dims, codebook =
     // first 16 vectors' components, 8 subspaces of 8 dims; one more
     // input row per vector checks the one-subspace (IVF) case against
@@ -184,14 +185,52 @@ class ExpressionSpec extends SparkSpec {
           array_min(LlmVector.codewordDists(model, col("sub"))).getField("c_id"))
         .orderBy("vec_id", "sub").collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSeq
+    def kernelForm(model: IndexedSeq[LlmVector.Codewords], rows: Seq[(Long, Int, Seq[Double])]) =
+      LlmVector.encodeRows(spark, LlmVector.qrows(rows.toDF("vec_id", "sub", "varr")), model)
+        .orderBy("vec_id", "sub").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSeq
     val pq = (0 until 8).map(s => (0 until 16).map(c => c -> vecs(c).slice(s * 8, s * 8 + 8).map(r6)))
     val pqRows = for (v <- 0 until 24; s <- 0 until 8) yield (v.toLong, s, vecs(v).slice(s * 8, s * 8 + 8))
     val reference = pqRows.map { case (v, s, x) => (v, s, argmin(x, pq(s))) }
     assert(reference.length == 24 * 8)
     assert(reference.toSeq == mapForm(pq, pqRows))
+    assert(reference.toSeq == kernelForm(pq, pqRows))
     val ivf = Vector((0 until 4).map(c => c -> vecs(c).map(r6)))
     val ivfRows = (0 until 24).map(v => (v.toLong, 0, vecs(v)))
-    assert(ivfRows.map { case (v, s, x) => (v, s, argmin(x, ivf.head)) } == mapForm(ivf, ivfRows))
+    val ivfReference = ivfRows.map { case (v, s, x) => (v, s, argmin(x, ivf.head)) }
+    assert(ivfReference == mapForm(ivf, ivfRows))
+    assert(ivfReference == kernelForm(ivf, ivfRows))
+  }
+
+  test("Lloyd training skips a null vector like the oracle's AVG, and still encodes it") {
+    // A null embedding has no distance to any codeword: it is assigned
+    // (to the smallest c_id) but must not count toward that cell's mean,
+    // which the oracle takes as ROUND(AVG(v), 6) over non-null values.
+    // Components are multiples of 1/16, so every sum is exact and the
+    // plain-Scala means below are the kernel's to the bit.
+    import graft.operators.LlmVector
+    import spark.implicits._
+    val vecs = (0 until 24).map(v => (0 until 8).map(p => math.rint(math.sin(v * 17 + p * 3) * 16) / 16))
+    def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    def nearest(x: Seq[Double], cws: LlmVector.Codewords): Int =
+      cws.minBy { case (c, cw) =>
+        (r6(x.zip(cw).foldLeft(0.0) { case (s, (a, b)) => s + (a - b) * (a - b) }), c)
+      }(Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int))._1
+    // one Lloyd pass over the non-null rows only
+    def pass(cws: LlmVector.Codewords): LlmVector.Codewords =
+      vecs.groupBy(nearest(_, cws)).toSeq.sortBy(_._1).map { case (c, xs) =>
+        c -> xs.transpose.map(comp => r6(comp.sum / xs.size))
+      }
+    val init: LlmVector.Codewords = (0 until 4).map(c => c -> vecs(c).map(r6))
+    val reference = pass(pass(init))
+    val rows = (vecs.indices.map(v => (v.toLong, 0, vecs(v))) :+ ((99L, 0, null: Seq[Double])))
+      .toDF("vec_id", "sub", "varr")
+    val input = LlmVector.qrows(rows)
+    val trained = LlmVector.lloyd(input, 4, 2)
+    assert(trained == Vector(reference))
+    val nullCode = LlmVector.encodeRows(spark, input, trained)
+      .filter(col("vec_id") === 99).collect().map(_.getInt(2)).toSeq
+    assert(nullCode == Seq(reference.head._1))
   }
 
   test("GraftExtensions installs float_dot and rolling_hash through the real builder path") {

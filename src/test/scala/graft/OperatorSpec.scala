@@ -444,16 +444,15 @@ class OperatorSpec extends SparkSpec {
     assert(j.forall(r => r.getAs[Double]("c2") >= r.getAs[Double]("c1")))
   }
 
-  test("literal-model and broadcast-join centroid rankings are bit-identical") {
-    // The LiteralModelMaxK cap (r16) flips the assignment shape past
-    // k ≈ 2048; this is the pin that flipping it can never change a
-    // result: same r6(double_sql2) distances, same (dist2, c_id)
-    // tie-break, row-for-row.
+  test("kernel ranking equals the codewordDists ranking bit-for-bit") {
+    // Index builds rank with the plain-Scala quantizer kernel; the
+    // query-time plans score with the codewordDists expression. This is
+    // the pin that the two agree: same r6(Σ(a−b)²) distances, same
+    // (dist2, c_id) tie-break, row-for-row.
     import graft.operators.LlmVector
-    // One null-varr row (vec_id −1) rides along: double_sql2 yields a
-    // null dist2 against EVERY centroid for it, pinning that both paths
-    // rank null distances identically (nulls sort FIRST in both the
-    // array_sort struct-field order and the window's default ASC).
+    // One null-varr row (vec_id −1) rides along: both sides give it a
+    // null dist2 against EVERY centroid and rank it in c_id order (a
+    // null struct field sorts FIRST in array_sort's order).
     val rows = graft.sources.Tables.embeddings(spark, sf)
       .select(col("vec_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("varr"))
@@ -464,10 +463,14 @@ class OperatorSpec extends SparkSpec {
         r.getLong(0).toInt -> r.getSeq[Double](1)
       }.toSeq
     val cols = Seq("vec_id", "c_id", "dist2", "rn").map(col)
-    val litPath = LlmVector.rankAllLiteral(rows, model).select(cols: _*)
-    val join = LlmVector.rankAllJoin(spark, rows, model).select(cols: _*)
-    assert(litPath.count() == rows.count() * model.size)
-    assert(litPath.exceptAll(join).count() == 0 && join.exceptAll(litPath).count() == 0)
+    val kernel = LlmVector.rankRows(spark,
+      LlmVector.qrows(rows.withColumn("sub", lit(0))), Vector(model)).select(cols: _*)
+    val exprForm = rows.select(col("vec_id"),
+        posexplode(array_sort(LlmVector.codewordDists(Vector(model), lit(0)))).as(Seq("i", "s")))
+      .select(col("vec_id"), col("s.c_id").as("c_id"), col("s.dist2").as("dist2"),
+        (col("i") + 1).cast("int").as("rn"))
+    assert(kernel.count() == rows.count() * model.size)
+    assert(kernel.exceptAll(exprForm).count() == 0 && exprForm.exceptAll(kernel).count() == 0)
   }
 
   test("semdedup pairs live in one quantizer cell and subset the brute-force pairs") {
