@@ -682,17 +682,12 @@ object LlmDedup {
   /** Embedding-cosine near-duplicate pairs (brute force, cos ≥ 0.4) —
     * the exact baseline that `llm_ann_lsh` approximates at scale. */
   def llmDedupEmbed(spark: SparkSession, sfDir: String): DataFrame = {
-    // Norms once per vector (not per pair); dot product via the codegen'd
-    // native float_dot expression — same fold order as zip_with/aggregate,
-    // so values are bit-identical, ~20× faster on the O(n²) pair scan.
-    val e = embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding"),
-        sqrt(expr("float_dot(embedding, embedding)")).as("nrm"))
+    val e = LlmVector.normed(spark, sfDir)
     // The threshold goes INTO the join condition AFTER the cheap id
     // predicate: written as a post-join filter, Catalyst pushes it into
     // the BNLJ condition FIRST, evaluating the cosine for all n² ordered
     // pairs instead of short-circuiting half of them on vec_id.
-    val cos = r6(expr("float_dot(a.embedding, b.embedding)") / (col("a.nrm") * col("b.nrm")))
+    val cos = LlmVector.cosine("a.embedding", "a.nrm", "b.embedding", "b.nrm")
     // broadcast(full table) is BASELINE-ONLY: this key is the declared
     // exact brute-force oracle for the bucketed paths — at corpus scale
     // the table doesn't fit a broadcast, and the scale path is the ANN

@@ -1,19 +1,22 @@
 package graft.operators
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
+import scala.jdk.CollectionConverters._
 import graft.functions.VectorExprs
 import graft.sources.Tables._
 
 /** Vector-similarity operators over the embeddings table (SURVEY.md
   * §2.B "similarity" + builder mandate: ANN over an embedding column).
   *
-  * All vector math is pure Catalyst (`zip_with` + `aggregate` higher-
-  * order functions in explicit double precision) — codegen'd, no UDFs.
+  * Each vector formula has one home: [[normed]] and [[cosine]] for every
+  * cosine, [[int8Scale]] and [[int8Code]] for int8 quantization, and the
+  * quantizer [[Kernel]] for every codeword distance and centroid mean.
   *
   * Scale posture: `llm_sim_cosine_topk` is the exact brute-force
   * baseline (broadcast the small query side; candidates never shuffle).
@@ -24,33 +27,51 @@ import graft.sources.Tables._
   */
 object LlmVector {
 
-  /** Double-precision cosine between two FLOAT[] columns, as a SQL
-    * expression string (Spark side). Folds left-to-right. */
-  def cosineExpr(a: String, b: String): String =
-    s"""aggregate(zip_with($a, $b, (x, y) -> cast(x as double) * cast(y as double)), cast(0 as double), (acc, v) -> acc + v)
-       | / (sqrt(aggregate($a, cast(0 as double), (acc, x) -> acc + cast(x as double) * cast(x as double)))
-       |    * sqrt(aggregate($b, cast(0 as double), (acc, x) -> acc + cast(x as double) * cast(x as double))))""".stripMargin
+  /** The corpus as (vec_id, embedding, nrm): the one frame every cosine
+    * reads, each vector's norm computed once, not once per pair. */
+  private[graft] def normed(spark: SparkSession, sfDir: String): DataFrame =
+    embeddings(spark, sfDir).select(col("vec_id"), col("embedding"),
+      sqrt(expr("float_dot(embedding, embedding)")).as("nrm"))
 
-  /** The DuckDB mirror of [[cosineExpr]] (list_zip structs are unnamed →
-    * numeric field access). */
+  /** THE cosine of two FLOAT[] columns `a`, `b` given their [[normed]]
+    * norms `na`, `nb`: r6(float_dot(a, b) / (na·nb)). `float_dot` folds
+    * left to right in double, as [[cosineSql]]'s `list_sum` does. */
+  private[graft] def cosine(a: String, na: String, b: String, nb: String): Column =
+    r6(expr(s"float_dot($a, $b)") / (col(na) * col(nb)))
+
+  /** The DuckDB form of [[cosine]] before its ROUND (list_zip structs are
+    * unnamed → numeric field access). */
   def cosineSql(a: String, b: String): String =
     s"""list_sum(list_transform(list_zip($a, $b), p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
        | / (SQRT(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
        |    * SQRT(list_sum(list_transform($b, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))""".stripMargin
 
+  /** Symmetric int8 quantization of the `embedding` column, one scale per
+    * vector: scale = max|x|/127, for a frame to hold as `scale`. */
+  private val int8Scale: Column =
+    expr("aggregate(embedding, cast(0 as double), (m, x) -> greatest(m, abs(cast(x as double)))) / 127")
+
+  /** Component `x`'s int8 code under the row's `scale` ([[int8Scale]]):
+    * floor(x/scale + 0.5), and 0 for an all-zero vector. floor instead of
+    * round(): floor is exact on doubles in both engines, while round()'s
+    * half-way rule differs (Spark rounds the shortest decimal repr,
+    * DuckDB the binary value) and quantization lands on exact halves
+    * routinely. The int cast is of an integral double, so DuckDB's
+    * round-on-cast vs Spark's truncate-on-cast cannot bite. */
+  private def int8Code(x: Column): Column =
+    when(col("scale") === 0, 0).otherwise(floor(x.cast("double") / col("scale") + 0.5).cast("int"))
+
   /** Exact top-5 cosine neighbors for each query vector (vec_id < 10);
     * the brute-force ANN baseline. Ranking is on the ROUNDED cosine with
     * a vec_id tie-break so both engines cut the top-k identically. */
   def llmSimCosineTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding"),
-        sqrt(expr("float_dot(embedding, embedding)")).as("nrm"))
+    val e = normed(spark, sfDir)
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
     val w = Window.partitionBy("q_id").orderBy(col("cos_sim").desc, col("neighbor_id").asc)
     broadcast(q).join(e, col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        r6(expr("float_dot(q_emb, embedding)") / (col("q_nrm") * col("nrm"))).as("cos_sim"))
+        cosine("q_emb", "q_nrm", "embedding", "nrm").as("cos_sim"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 5)
       .orderBy("q_id", "rn")
@@ -74,9 +95,7 @@ object LlmVector {
   def llmAnnLsh(spark: SparkSession, sfDir: String): DataFrame = {
     val bucketExpr = concat((1 to 8).map(i =>
       when(element_at(col("embedding"), i) >= 0, "1").otherwise("0")): _*)
-    val e = embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding"), bucketExpr.as("bucket"),
-        sqrt(expr("float_dot(embedding, embedding)")).as("nrm"))
+    val e = normed(spark, sfDir).withColumn("bucket", bucketExpr)
     val q = e.filter(col("vec_id") < 50)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("bucket"), col("nrm").as("q_nrm"))
@@ -84,7 +103,7 @@ object LlmVector {
     broadcast(q).join(e, Seq("bucket"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"), col("bucket"),
-        r6(expr("float_dot(q_emb, embedding)") / (col("q_nrm") * col("nrm"))).as("cos_sim"))
+        cosine("q_emb", "q_nrm", "embedding", "nrm").as("cos_sim"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 3)
       .orderBy("q_id", "rn")
@@ -108,22 +127,14 @@ object LlmVector {
   /** Centroid classification: per-label mean vector from the training
     * slice (vec_id ≥ 20), held-out vectors (vec_id < 20) assigned to the
     * nearest centroid by squared L2. Centroids and distances are
-    * ROUND(6)-stabilized so avg order cannot flip the argmin. */
+    * ROUND(6)-stabilized so avg order cannot flip the argmin. The
+    * centroids are one [[labelMeans]] pass; the ranking is the kernel's
+    * (dist2, c_id) order with c_id = label. */
   def llmKnnCentroid(spark: SparkSession, sfDir: String): DataFrame = {
-    val ex = embeddings(spark, sfDir)
-      .select(col("vec_id"), col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .withColumn("v", col("v").cast("double"))
-    val cent = ex.filter(col("vec_id") >= 20)
-      .groupBy(col("label").as("c_label"), col("pos"))
-      .agg(r6(avg(col("v"))).as("c"))
-    val w = Window.partitionBy("vec_id").orderBy(col("dist2").asc, col("c_label").asc)
-    ex.filter(col("vec_id") < 20)
-      .join(broadcast(cent), Seq("pos"))
-      .groupBy("vec_id", "c_label")
-      .agg(r6(sum((col("v") - col("c")) * (col("v") - col("c")))).as("dist2"))
-      .withColumn("rn", row_number().over(w))
+    val (cent, _) = labelMeans(embeddings(spark, sfDir).filter(col("vec_id") >= 20), 1, lit(0))
+    rankRows(spark, qrows(embArr(spark, sfDir).filter(col("vec_id") < 20).withColumn("sub", lit(0))), cent)
       .filter(col("rn") === 1)
-      .select(col("vec_id"), col("c_label").as("pred_label"), col("dist2"))
+      .select(col("vec_id"), col("c_id").as("pred_label"), col("dist2"))
       .orderBy("vec_id")
   }
 
@@ -154,32 +165,23 @@ object LlmVector {
     * discipline is the IVF family's: per-(label, half, pos) component
     * means ROUND-6'd BEFORE differencing (the only unordered float
     * reduction is a ≤n-term mean of [-1,1] floats, ~1e-13 abs error
-    * against a 1e-6 grid), then the 64-term distance sum and sqrt are
-    * identical expression trees on both engines. Shape at 100 TB: one
-    * component-exploded groupBy (label × half × 64 rows out), the
-    * drift join runs on that metadata-sized centroid table. */
+    * against a 1e-6 grid), then the 64-term squared distance and its
+    * sqrt are ROUND-6'd as the oracle's are. Shape at 100 TB: one
+    * [[labelMeans]] pass over the corpus, the two halves as its two
+    * subspaces; the drift is computed on the driver from those
+    * metadata-sized (label × half) means. */
   def llmCentroidDrift(spark: SparkSession, sfDir: String): DataFrame = {
     val e = embeddings(spark, sfDir)
     val Array(b) = e.agg(min(col("vec_id")), max(col("vec_id"))).collect()
     val mid = (b.getLong(0) + b.getLong(1)) / 2
-    val cents = e
-      .select(col("vec_id"), col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .withColumn("half", when(col("vec_id") <= mid, 1).otherwise(2))
-      .groupBy("label", "pos", "half")
-      .agg(r6(avg(col("v").cast("double"))).as("c"), count(lit(1)).as("n"))
-    val c1 = cents.filter(col("half") === 1)
-      .select(col("label"), col("pos"), col("c").as("c1"), col("n").as("n1"))
-    val c2 = cents.filter(col("half") === 2)
-      .select(col("label"), col("pos"), col("c").as("c2"), col("n").as("n2"))
-    c1.join(c2, Seq("label", "pos"))
-      .groupBy("label")
-      // n is per-(label,pos,half) vector count — identical across pos,
-      // so min() is just "the" half size
-      .agg(min(col("n1")).as("n_first"), min(col("n2")).as("n_second"),
-        r6(sqrt(sum((col("c1") - col("c2")) * (col("c1") - col("c2"))))).as("drift_l2"))
-      .select(col("label").cast("int").as("label"), col("n_first"),
-        col("n_second"), col("drift_l2"))
-      .orderBy("label")
+    val (IndexedSeq(c1, c2), IndexedSeq(n1, n2)) =
+      labelMeans(e, 2, when(col("vec_id") <= mid, 0).otherwise(1))
+    val second = c2.toMap
+    val drift = c1.filter(c => second.contains(c._1)).map { case (label, a) =>
+      Row(label, n1(label), n2(label), round6(math.sqrt(VectorExprs.sqL2(a.toArray, second(label).toArray))))
+    }
+    spark.createDataFrame(drift.asJava,
+      StructType.fromDDL("label INT, n_first BIGINT, n_second BIGINT, drift_l2 DOUBLE"))
   }
 
   val llmCentroidDriftOracle: String =
@@ -204,26 +206,13 @@ object LlmVector {
     * and a query searches only its own cell. At 100 TB the cell id is
     * the partition/bucketing key, so a query touches one partition;
     * more cells (a real k-means) shrink each list. Deterministic here
-    * because the quantizer is the (r6-stabilized) label-centroid set. */
+    * because the quantizer is the (r6-stabilized) label-centroid set:
+    * one [[labelMeans]] pass, then the kernel's argmin per vector. */
   def llmAnnIvf(spark: SparkSession, sfDir: String): DataFrame = {
-    val ex = embeddings(spark, sfDir)
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .withColumn("v", col("v").cast("double"))
-    val cent = embeddings(spark, sfDir)
-      .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .groupBy(col("label").as("c_label"), col("pos"))
-      .agg(r6(avg(col("v").cast("double"))).as("c"))
-    val wCell = Window.partitionBy("vec_id").orderBy(col("dist2").asc, col("c_label").asc)
-    val cells = ex.join(broadcast(cent), Seq("pos"))
-      .groupBy("vec_id", "c_label")
-      .agg(r6(sum((col("v") - col("c")) * (col("v") - col("c")))).as("dist2"))
-      .withColumn("rn", row_number().over(wCell))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("c_label").as("cell"))
-    val e = embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding"),
-        sqrt(expr("float_dot(embedding, embedding)")).as("nrm"))
-      .join(cells, Seq("vec_id"))
+    val (cent, _) = labelMeans(embeddings(spark, sfDir), 1, lit(0))
+    val cells = encodeRows(spark, qrows(embArr(spark, sfDir).withColumn("sub", lit(0))), cent)
+      .select(col("vec_id"), col("c_id").as("cell"))
+    val e = normed(spark, sfDir).join(cells, Seq("vec_id"))
     val q = e.filter(col("vec_id") < 30)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("nrm").as("q_nrm"), col("cell"))
@@ -231,7 +220,7 @@ object LlmVector {
     broadcast(q).join(e, Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"), col("cell"),
-        r6(expr("float_dot(q_emb, embedding)") / (col("q_nrm") * col("nrm"))).as("cos_sim"))
+        cosine("q_emb", "q_nrm", "embedding", "nrm").as("cos_sim"))
       .withColumn("rn", row_number().over(wTop))
       .filter(col("rn") <= 3)
       .orderBy("q_id", "rn")
@@ -340,57 +329,43 @@ object LlmVector {
     * by its c_id, never by its position. */
   private[graft] type Codewords = Seq[(Int, Seq[Double])]
 
-  /** Every codeword of the row's subspace `sub` (0-based) scored against
-    * the row's `varr`, as an array of (dist2 = r6 squared L2, c_id)
-    * structs in c_id order — the Catalyst form of [[Kernel]] for the
-    * plans that score a handful of rows at query time (the ADC tables,
-    * the code SSE): the model rides in the task binary as one nested
-    * literal, the distance is the native `double_sql2`, and struct order
-    * is the (dist2 ASC, c_id ASC) tie-break — `array_min` is the argmin,
-    * `array_sort` the ranking, `inline` the lookup table. */
-  private[graft] def codewordDists(model: IndexedSeq[Codewords], sub: Column): Column = {
-    val cws = element_at(typedLit(model.map(_.map(_._2))), sub + 1)
-    val cids = element_at(typedLit(model.map(_.map(_._1))), sub + 1)
-    transform(sequence(lit(0), size(cws) - 1), j =>
-      struct(
-        r6(call_function("double_sql2", col("varr"), element_at(cws, j + 1))).as("dist2"),
-        element_at(cids, j + 1).as("c_id")))
-  }
-
   /** One quantizer input row: vector `vecId`'s (sub-)vector `varr` in
     * subspace `sub`, null for a null embedding. */
   private[graft] final case class QRow(vecId: Long, sub: Int, varr: Array[Double])
 
-  /** A frame's (vec_id, sub, varr) rows as kernel input, copied out of
-    * the plan's internal rows (no deserializer to generate). */
+  /** The QRow held by (vec_id, sub, varr) at fields i, i+1, i+2 of a
+    * plan's internal row (no deserializer to generate). */
+  private def qrow(r: InternalRow, i: Int): QRow =
+    QRow(r.getLong(i), r.getInt(i + 1), if (r.isNullAt(i + 2)) null else r.getArray(i + 2).toDoubleArray())
+
+  /** A frame's (vec_id, sub, varr) rows as kernel input. */
   private[graft] def qrows(rows: DataFrame): RDD[QRow] =
-    rows.select("vec_id", "sub", "varr").queryExecution.toRdd.map(r =>
-      QRow(r.getLong(0), r.getInt(1), if (r.isNullAt(2)) null else r.getArray(2).toDoubleArray()))
+    rows.select("vec_id", "sub", "varr").queryExecution.toRdd.map(qrow(_, 0))
 
   /** `round(d, 6)` as Spark computes it for a double. */
   private[graft] def round6(d: Double): Double =
     if (d.isNaN || d.isInfinite) d
     else java.math.BigDecimal.valueOf(d).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
 
-  /** THE QUANTIZER KERNEL every index build runs: a model as plain
-    * arrays, carried in the task closure, so a pass over the corpus
-    * plans no Catalyst query and compiles no class. Against each row it
-    * scores every codeword of the row's subspace — dist2 = r6 of
+  /** THE QUANTIZER KERNEL every codeword distance runs through — index
+    * builds, label centroids, ADC tables and code SSE: a model as plain
+    * arrays, carried in the task closure, so a pass over the rows plans
+    * no Catalyst query and compiles no class. Against each row it scores
+    * every codeword of the row's subspace — dist2 = r6 of
     * `double_sql2`'s left-to-right Σ(a−b)² ([[VectorExprs.sqL2]]), or
     * SQL NULL (kept as [[NoDist]]) for a null vector or a dimension
     * mismatch — and orders them by (dist2, c_id) with a null dist2
-    * first: `array_sort`'s order over [[codewordDists]]'s structs, so
-    * argmin, ranking and codes are bit-identical to the Catalyst form
-    * (spec-pinned). Per-(sub, codeword) counts and component sums are
-    * the Lloyd partials; a null vector is assigned (to the smallest
-    * c_id) but adds to neither, as the oracle's AVG skips it. */
+    * first, as `array_sort` orders (dist2, c_id) structs: the oracles'
+    * ORDER BY dist2, c_id. Per-(sub, codeword) counts and component
+    * sums are the Lloyd partials; a null vector is assigned (to the
+    * smallest c_id) but adds to neither, as the oracle's AVG skips it. */
   private[graft] final class Kernel(model: IndexedSeq[Codewords]) extends Serializable {
     private val cids = model.map(_.map(_._1).toArray).toArray
     private val cws = model.map(_.map(_._2.toArray).toArray).toArray
 
-    private def dists(r: QRow): Array[Double] = cws(r.sub).map(cw =>
-      if (r.varr == null || r.varr.length != cw.length) NoDist
-      else round6(VectorExprs.sqL2(r.varr, cw)))
+    private def dists(sub: Int, varr: Array[Double]): Array[Double] = cws(sub).map(cw =>
+      if (varr == null || varr.length != cw.length) NoDist
+      else round6(VectorExprs.sqL2(varr, cw)))
 
     private def before(ds: Array[Double], a: Int, b: Int): Boolean = {
       val c = java.lang.Double.compare(ds(a), ds(b))
@@ -400,31 +375,49 @@ object LlmVector {
     private def argmin(ds: Array[Double]): Int =
       ds.indices.reduce((best, j) => if (before(ds, j, best)) j else best)
 
-    /** The c_id of the row's nearest codeword. */
-    def nearest(r: QRow): Int = cids(r.sub)(argmin(dists(r)))
+    /** The row's nearest codeword: (c_id, dist2), dist2 [[NoDist]] when
+      * the row has none. */
+    def nearest(r: QRow): (Int, Double) = {
+      val ds = dists(r.sub, r.varr)
+      val j = argmin(ds)
+      (cids(r.sub)(j), ds(j))
+    }
 
     /** The row's (vec_id, c_id, dist2, rn) ranking of every codeword. */
     def ranked(r: QRow): Seq[Row] = {
-      val ds = dists(r)
+      val ds = dists(r.sub, r.varr)
       ds.indices.sortWith(before(ds, _, _)).zipWithIndex.map { case (j, i) =>
-        Row(r.vecId, cids(r.sub)(j), if (ds(j) == NoDist) null else ds(j), i + 1)
+        Row(r.vecId, cids(r.sub)(j), sqlDist(ds(j)), i + 1)
       }
     }
+
+    /** `varr` against every codeword of subspace `sub`, as (dist2, c_id)
+      * in c_id order: one ADC lookup-table row per codeword. */
+    def table(sub: Int, varr: Array[Double]): Seq[(Any, Int)] =
+      dists(sub, varr).toSeq.map(sqlDist).zip(cids(sub))
+
+    private def sqlDist(d: Double): Any = if (d == NoDist) null else d
 
     /** Lloyd partials: per subspace, a count per codeword and its
       * component sums, codeword-major. */
     type Partials = (Array[Array[Long]], Array[Array[Double]])
 
     def zero: Partials =
-      (cws.map(c => new Array[Long](c.length)), cws.map(c => new Array[Double](c.length * c.head.length)))
+      (cws.map(c => new Array[Long](c.length)), cws.map(c => new Array[Double](c.map(_.length).sum)))
 
-    def add(acc: Partials, r: QRow): Partials = {
-      if (r.varr != null) {
-        val j = argmin(dists(r))
-        val d = cws(r.sub)(j).length
-        acc._1(r.sub)(j) += 1
-        for (p <- 0 until d) acc._2(r.sub)(j * d + p) += r.varr(p)
-      }
+    /** Folds the row into its argmin codeword's partials. */
+    def add(acc: Partials, r: QRow): Partials =
+      if (r.varr == null) acc else fold(acc, r, argmin(dists(r.sub, r.varr)))
+
+    /** Folds the row into the partials of the codeword whose c_id is
+      * the row's label. */
+    def addLabelled(acc: Partials, lr: (Int, QRow)): Partials =
+      if (lr._2.varr == null) acc else fold(acc, lr._2, cids(lr._2.sub).indexOf(lr._1))
+
+    private def fold(acc: Partials, r: QRow, j: Int): Partials = {
+      val d = cws(r.sub)(j).length
+      acc._1(r.sub)(j) += 1
+      for (p <- 0 until d) acc._2(r.sub)(j * d + p) += r.varr(p)
       acc
     }
 
@@ -475,6 +468,28 @@ object LlmVector {
     model
   }
 
+  /** Per-label means of `e`'s embeddings in subspaces 0 until `subs`
+    * (`sub` names each row's): ONE `treeAggregate` pass of the
+    * [[Kernel]]'s partials with every row folded into its LABEL's slot,
+    * not its argmin's, and each mean r6(Σ/n) as [[Kernel.update]]
+    * computes it — the oracles' per-label ROUND(AVG(v), 6). A model with
+    * c_id = label, so the kernel's (dist2, c_id) order is the oracles'
+    * ORDER BY dist2, label; alongside, each subspace's row count per
+    * label. A row without a label trains nothing. */
+  private def labelMeans(e: DataFrame, subs: Int,
+      sub: Column): (IndexedSeq[Codewords], IndexedSeq[Map[Int, Long]]) = {
+    val labelled = e.filter(col("label").isNotNull)
+    val Array(m) = labelled.agg(sort_array(collect_set(col("label"))), max(size(col("embedding")))).collect()
+    val labels = m.getSeq[Int](0)
+    val kernel = new Kernel(IndexedSeq.fill(subs)(labels.map(_ -> Seq.fill(m.getInt(1))(0.0))))
+    val acc = labelled
+      .select(col("label"), col("vec_id"), sub.as("sub"),
+        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("varr"))
+      .queryExecution.toRdd.map(r => r.getInt(0) -> qrow(r, 1))
+      .treeAggregate(kernel.zero)(kernel.addLabelled, kernel.merge)
+    (kernel.update(acc), acc._1.toIndexedSeq.map(n => labels.zip(n).filter(_._2 > 0).toMap))
+  }
+
   /** Every row's full (vec_id, c_id, dist2, rn) ranking under `model`. */
   private[graft] def rankRows(spark: SparkSession, rows: RDD[QRow],
       model: IndexedSeq[Codewords]): DataFrame = {
@@ -487,7 +502,7 @@ object LlmVector {
   private[graft] def encodeRows(spark: SparkSession, rows: RDD[QRow],
       model: IndexedSeq[Codewords]): DataFrame = {
     val kernel = new Kernel(model)
-    spark.createDataFrame(rows.map(r => Row(r.vecId, r.sub, kernel.nearest(r))),
+    spark.createDataFrame(rows.map(r => Row(r.vecId, r.sub, kernel.nearest(r)._1)),
       StructType.fromDDL("vec_id BIGINT, sub INT, c_id INT"))
   }
 
@@ -564,20 +579,16 @@ object LlmVector {
     // without knowing the corpus size
     require(nprobe >= 1 && nprobe <= IvfKFloor,
       s"nprobe must be in [1, $IvfKFloor], got $nprobe")
-    val e = embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding"),
-        sqrt(expr("float_dot(embedding, embedding)")).as("nrm"))
-      .join(ivf.cells(spark), Seq("vec_id"))
-    val q = embeddings(spark, sfDir)
+    val e = normed(spark, sfDir).join(ivf.cells(spark), Seq("vec_id"))
+    val q = normed(spark, sfDir)
       .filter(col("vec_id") < 30)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        sqrt(expr("float_dot(embedding, embedding)")).as("q_nrm"))
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
       .join(ivf.probes(spark, nprobe), Seq("q_id"))
     val wTop = Window.partitionBy("q_id").orderBy(col("cos_sim").desc, col("neighbor_id").asc)
     broadcast(q).join(e, Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"), col("cell"),
-        r6(expr("float_dot(q_emb, embedding)") / (col("q_nrm") * col("nrm"))).as("cos_sim"))
+        cosine("q_emb", "q_nrm", "embedding", "nrm").as("cos_sim"))
       .withColumn("rn", row_number().over(wTop))
       .filter(col("rn") <= 3)
       .orderBy("q_id", "rn")
@@ -586,8 +597,6 @@ object LlmVector {
   def llmAnnIvfKmeans(spark: SparkSession, sfDir: String): DataFrame =
     ivfSearch(spark, sfDir, IvfIndex(spark, sfDir), nprobe = 1)
 
-  /** The 5 Lloyd iterations unrolled as a CTE chain — same init, same
-    * rounding, same tie-breaks as the Spark side. */
   /** The SHARED WITH-prologue of every IVF oracle: the exploded corpus
     * (ex), the unrolled deterministic k-means chain (cent0..cent5 +
     * final assignment cells0), the nprobe=2 probe list for the query
@@ -702,8 +711,6 @@ object LlmVector {
   def llmAnnIvfProbe2(spark: SparkSession, sfDir: String): DataFrame =
     ivfSearch(spark, sfDir, IvfIndex(spark, sfDir), nprobe = 2)
 
-  /** Same unrolled CTE chain; the probe CTE re-reads the FINAL
-    * assignment distances (d_cells0) keeping rn <= 2 for the queries. */
   /** Same shared prologue; the query side is qp (nprobe=2 fan-out). */
   val llmAnnIvfProbe2Oracle: String =
     s"""WITH $ivfOracleProlog
@@ -760,14 +767,26 @@ object LlmVector {
     def codes(spark: SparkSession): DataFrame = graft.sources.Tables.read(spark, codesDir)
     /** The ADC lookup tables of query rows (…, sub, varr): one
       * (…, sub, dist2, c_id) row per codeword of the row's subspace —
-      * the oracle's qdt/rqdt CTEs. */
-    def tables(rows: DataFrame): DataFrame =
-      rows.select(col("*"), inline(codewordDists(codebook, col("sub")))).drop("varr")
+      * the oracle's qdt/rqdt CTEs — scored by the [[Kernel]]. A mapped
+      * frame, not an RDD taken from `rows`: that would run the jobs of
+      * any broadcast join in `rows` while the frame is built. */
+    def tables(rows: DataFrame): DataFrame = {
+      val kernel = new Kernel(codebook)
+      val keys = rows.drop("varr")
+      val cols = keys.columns.toSeq
+      val (n, sub) = (cols.length, cols.indexOf("sub"))
+      rows.select((cols :+ "varr").map(col): _*).flatMap { r =>
+        val varr = if (r.isNullAt(n)) null else r.getSeq[Double](n).toArray
+        val key = (0 until n).map(r.get)
+        kernel.table(r.getInt(sub), varr).map { case (d, c) => Row.fromSeq(key :+ d :+ c) }
+      }(Encoders.row(keys.schema.add("dist2", "double").add("c_id", "int", nullable = false)))
+    }
     /** Total quantization SSE of rows (vec_id, sub, varr) encoded
-      * under this codebook. */
-    def sse(rows: DataFrame): Double =
-      rows.agg(sum(array_min(codewordDists(codebook, col("sub"))).getField("dist2")))
-        .collect()(0).getDouble(0)
+      * under this codebook: each row's nearest-codeword dist2, summed. */
+    def sse(rows: DataFrame): Double = {
+      val kernel = new Kernel(codebook)
+      qrows(rows).map(kernel.nearest(_)._2).filter(_ != NoDist).sum()
+    }
   }
 
   private[graft] object PqIndex {
@@ -822,9 +841,6 @@ object LlmVector {
       .orderBy("q_id", "rn")
   }
 
-  /** The per-subspace Lloyd chain + codes/distance-table/ADC CTEs —
-    * shared by the pq and pq_recall oracles (the [[ivfOracleProlog]]
-    * discipline: one definition, no drift). */
   /** One generated Lloyd-chain prolog (input CTE → trained codebook →
     * storage codes), shared verbatim by the RAW ("" prefix) and
     * RESIDUAL ("r" prefix) paths so the two codebooks differ ONLY in
@@ -1294,7 +1310,8 @@ object LlmVector {
     * recipe that key grades), queries stay full-precision, and search
     * ranks by ASYMMETRIC L2 against the dequantized corpus
     * (q·scale — the FAISS SQfp pattern: only the stored side pays the
-    * quantization error). Graded through the SAME recall harness as
+    * quantization error), `double_sql2` over whole arrays as the exact
+    * L2 of [[adcRecallReport]]. Graded through the SAME recall harness as
     * the PQ/IVFPQ keys so the three reports read as one curve: on this
     * fixture SQ8's per-component error is ≤ scale/2 ≈ 0.4% of the
     * range, so raw recall lands far above PQ's — the measured point
@@ -1303,24 +1320,13 @@ object LlmVector {
     * other, the dequantized distance is a codegen'd expression, no
     * index state at all. */
   private def sq8Dists(spark: SparkSession, sfDir: String): DataFrame = {
-    val ex = embeddings(spark, sfDir)
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "v0")))
-      .withColumn("v", col("v0").cast("double"))
-      .localCheckpoint()
-    val scales = ex.groupBy("vec_id")
-      .agg((max(abs(col("v"))) / 127).as("scale"))
-    // dequantized corpus value: round-trips the int8 code exactly as
+    // dequantized corpus: round-trips the int8 code exactly as
     // llm_embed_quantize stores it
-    val recon = ex.join(scales, Seq("vec_id"))
-      .select(col("vec_id").as("neighbor_id"), col("pos"),
-        when(col("scale") === 0, 0.0)
-          .otherwise(expr("floor(v / scale + 0.5d) * scale")).as("rv"))
-    val q = ex.filter(col("vec_id") < 30)
-      .select(col("vec_id").as("q_id"), col("pos"), col("v").as("qv"))
-    q.join(recon, Seq("pos"))
-      .filter(col("neighbor_id") =!= col("q_id"))
-      .groupBy("q_id", "neighbor_id")
-      .agg(r6(sum((col("qv") - col("rv")) * (col("qv") - col("rv")))).as("adc_dist2"))
+    val recon = embeddings(spark, sfDir).withColumn("scale", int8Scale)
+      .select(col("vec_id").as("neighbor_id"),
+        transform(col("embedding"), x => int8Code(x) * col("scale")).as("rv"))
+    broadcast(queryArr(spark, sfDir)).join(recon, col("neighbor_id") =!= col("q_id"))
+      .select(col("q_id"), col("neighbor_id"), r6(expr("double_sql2(varr, rv)")).as("adc_dist2"))
   }
 
   def llmAnnSq8Recall(spark: SparkSession, sfDir: String): DataFrame =
@@ -1380,25 +1386,14 @@ object LlmVector {
 
   /** Symmetric int8 quantization of the embedding column — the standard
     * 4× memory reduction for serving/storing a 100 TB embedding corpus
-    * (scale = max|x|/127 per vector, q = round-half-up(x/scale)).
-    * Output is the exploded (vec_id, pos, q, scale) long format.
-    *
-    * Determinism: `floor(x/scale + 0.5)` instead of round() — floor is
-    * exact on doubles in both engines, while round()'s half-way rule
-    * differs (Spark rounds the shortest decimal repr, DuckDB the binary
-    * value) and quantization lands on exact halves routinely. The final
-    * int cast is of an integral double, so DuckDB's round-on-cast vs
-    * Spark's truncate-on-cast difference cannot bite.
+    * ([[int8Scale]] per vector, [[int8Code]] per component). Output is
+    * the exploded (vec_id, pos, q, scale) long format.
     */
   def llmEmbedQuantize(spark: SparkSession, sfDir: String): DataFrame =
     embeddings(spark, sfDir)
-      .withColumn("scale", expr(
-        "aggregate(embedding, cast(0 as double), (m, x) -> greatest(m, abs(cast(x as double)))) / 127"))
+      .withColumn("scale", int8Scale)
       .select(col("vec_id"), col("scale"), posexplode(col("embedding")).as(Seq("pos0", "x")))
-      .select(col("vec_id"), (col("pos0") + 1).as("pos"),
-        when(col("scale") === 0, 0)
-          .otherwise(expr("cast(floor(cast(x as double) / scale + 0.5d) as int)")).as("q"),
-        col("scale"))
+      .select(col("vec_id"), (col("pos0") + 1).as("pos"), int8Code(col("x")).as("q"), col("scale"))
       .orderBy("vec_id", "pos")
 
   val llmEmbedQuantizeOracle: String =
@@ -1431,14 +1426,11 @@ object LlmVector {
     * when transitive closure is needed.
     */
   def llmSemdedup(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding"),
-        sqrt(expr("float_dot(embedding, embedding)")).as("nrm"))
-      .join(IvfIndex(spark, sfDir).cells(spark), Seq("vec_id"))
+    val e = normed(spark, sfDir).join(IvfIndex(spark, sfDir).cells(spark), Seq("vec_id"))
     // threshold INSIDE the join condition (the llm_dedup_embed lesson):
     // Catalyst evaluates it during the cell equi-join probe, so
     // non-duplicate pairs never materialize
-    val cos = r6(expr("float_dot(a.embedding, b.embedding)") / (col("a.nrm") * col("b.nrm")))
+    val cos = cosine("a.embedding", "a.nrm", "b.embedding", "b.nrm")
     e.as("a").join(e.as("b"),
         col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id") && cos >= 0.4)
       .select(col("a.cell").as("cell"), col("a.vec_id").as("vec_a"),
@@ -1489,11 +1481,8 @@ object LlmVector {
     * graph's parquet, which would make the scale-critical build plan
     * unauditable. */
   private[graft] def knnGraphBuild(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding"),
-        sqrt(expr("float_dot(embedding, embedding)")).as("nrm"))
-      .join(IvfIndex(spark, sfDir).cells(spark), Seq("vec_id"))
-    val cos = r6(expr("float_dot(a.embedding, b.embedding)") / (col("a.nrm") * col("b.nrm")))
+    val e = normed(spark, sfDir).join(IvfIndex(spark, sfDir).cells(spark), Seq("vec_id"))
+    val cos = cosine("a.embedding", "a.nrm", "b.embedding", "b.nrm")
     val w = Window.partitionBy("src").orderBy(col("cos_sim").desc, col("dst").asc)
     e.as("a").join(e.as("b"),
         col("a.cell") === col("b.cell") && col("a.vec_id") =!= col("b.vec_id"))
@@ -1560,16 +1549,12 @@ object LlmVector {
     // UnsafeRow materialization of every embedding array plus block reads.
     // At 100 TB the norm column belongs in the stored index, not in a
     // per-query checkpoint.
-    val e = embeddings(spark, sfDir)
-      .select(col("vec_id").as("node"), col("embedding"),
-        sqrt(expr("float_dot(embedding, embedding)")).as("nrm"))
-    val q = embeddings(spark, sfDir).filter(col("vec_id") < 30)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        sqrt(expr("float_dot(embedding, embedding)")).as("q_nrm"))
+    val e = normed(spark, sfDir).withColumnRenamed("vec_id", "node")
+    val q = normed(spark, sfDir).filter(col("vec_id") < 30)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
     def score(cand: DataFrame): DataFrame =
       cand.join(e, Seq("node")).join(broadcast(q), Seq("q_id"))
-        .select(col("q_id"), col("node"),
-          r6(expr("float_dot(q_emb, embedding)") / (col("q_nrm") * col("nrm"))).as("cos_sim"))
+        .select(col("q_id"), col("node"), cosine("q_emb", "q_nrm", "embedding", "nrm").as("cos_sim"))
     val wBeam = Window.partitionBy("q_id").orderBy(col("cos_sim").desc, col("node").asc)
     var seen = score(entry).localCheckpoint() // tiny (≤4 rows/query); cuts round fan-out
     for (_ <- 1 to BeamRounds) {
@@ -1713,13 +1698,9 @@ object LlmVector {
     * the rerank reuses the proven exact-cosine algebra.
     */
   def llmAnnRerank(spark: SparkSession, sfDir: String): DataFrame = {
-    val qz = embeddings(spark, sfDir)
-      .withColumn("scale", expr(
-        "aggregate(embedding, cast(0 as double), (m, x) -> greatest(m, abs(cast(x as double)))) / 127"))
-      .withColumn("qvec", expr(
-        "transform(embedding, x -> if(scale = cast(0 as double), 0, cast(floor(cast(x as double) / scale + 0.5d) as int)))"))
-      .select(col("vec_id"), col("embedding"), col("scale"), col("qvec"),
-        sqrt(expr("float_dot(embedding, embedding)")).as("nrm"))
+    val qz = normed(spark, sfDir)
+      .withColumn("scale", int8Scale)
+      .withColumn("qvec", transform(col("embedding"), int8Code(_)))
     val q = qz.filter(col("vec_id") < 20)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("scale").as("q_scale"), col("qvec").as("q_qvec"), col("nrm").as("q_nrm"))
@@ -1735,7 +1716,7 @@ object LlmVector {
       .withColumn("crn", row_number().over(wCoarse))
       .filter(col("crn") <= 20)
       .select(col("q_id"), col("neighbor_id"), col("coarse"),
-        r6(expr("float_dot(q_emb, embedding)") / (col("q_nrm") * col("nrm"))).as("cos_sim"))
+        cosine("q_emb", "q_nrm", "embedding", "nrm").as("cos_sim"))
       .withColumn("rn", row_number().over(wExact))
       .filter(col("rn") <= 5)
       .orderBy("q_id", "rn")
@@ -1792,15 +1773,13 @@ object LlmVector {
     * with `llm_ann_recall_hi` so the graded points measure against the
     * same truth by construction. */
   private def exactTop3(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding"),
-        sqrt(expr("float_dot(embedding, embedding)")).as("nrm"))
+    val e = normed(spark, sfDir)
     val q = e.filter(col("vec_id") < 30)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
     val wTop = Window.partitionBy("q_id").orderBy(col("cos_sim").desc, col("neighbor_id").asc)
     broadcast(q).join(e, col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        r6(expr("float_dot(q_emb, embedding)") / (col("q_nrm") * col("nrm"))).as("cos_sim"))
+        cosine("q_emb", "q_nrm", "embedding", "nrm").as("cos_sim"))
       .withColumn("rn", row_number().over(wTop))
       .filter(col("rn") <= 3)
       .select("q_id", "neighbor_id")
@@ -1814,8 +1793,6 @@ object LlmVector {
       "ivf_nprobe2" -> ivfSearch(spark, sfDir, ivf, nprobe = 2))
   }
 
-  /** The shared kmeans CTE chain + exact/nprobe1/nprobe2 top-3 lists,
-    * reduced to per-method hit counts. */
   /** Shared prologue + exact/nprobe1/nprobe2 top-3 lists, reduced to
     * per-method hit counts. */
   val llmAnnRecallOracle: String = {
@@ -1890,8 +1867,7 @@ object LlmVector {
     * q_id-keyed equi-join on pool-sized frames — the expensive part
     * stays the ANN retrieval that feeds it, as in production. */
   def llmMmrDiversify(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = embeddings(spark, sfDir).select(col("vec_id"), col("embedding"),
-      sqrt(expr("float_dot(embedding, embedding)")).as("nrm"))
+    val e = normed(spark, sfDir)
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("nrm").as("q_nrm"))
@@ -1899,7 +1875,7 @@ object LlmVector {
     val cand = broadcast(q).join(e, col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("c_id"), col("embedding").as("c_emb"),
         col("nrm").as("c_nrm"),
-        r6(expr("float_dot(q_emb, embedding)") / (col("q_nrm") * col("nrm"))).as("rel"))
+        cosine("q_emb", "q_nrm", "embedding", "nrm").as("rel"))
       .withColumn("rn", row_number().over(wRel))
       .filter(col("rn") <= 10)
       .drop("rn")
@@ -1908,8 +1884,7 @@ object LlmVector {
       .select(col("q_id"), col("c_id").as("p1_id"), col("c_emb").as("p1_emb"),
         col("c_nrm").as("p1_nrm"), col("rel").as("score1"))
     val rest1 = cand.join(p1, Seq("q_id")).filter(col("c_id") =!= col("p1_id"))
-      .withColumn("sim1",
-        r6(expr("float_dot(c_emb, p1_emb)") / (col("c_nrm") * col("p1_nrm"))))
+      .withColumn("sim1", cosine("c_emb", "c_nrm", "p1_emb", "p1_nrm"))
       .withColumn("score", r6(lit(0.7) * col("rel") - lit(0.3) * col("sim1")))
     val wScore = Window.partitionBy("q_id").orderBy(col("score").desc, col("c_id").asc)
     val p2 = rest1.withColumn("rn", row_number().over(wScore)).filter(col("rn") === 1)
@@ -1918,8 +1893,7 @@ object LlmVector {
     val p3 = rest1
       .join(p2.select("q_id", "p2_id", "p2_emb", "p2_nrm"), Seq("q_id"))
       .filter(col("c_id") =!= col("p2_id"))
-      .withColumn("sim2",
-        r6(expr("float_dot(c_emb, p2_emb)") / (col("c_nrm") * col("p2_nrm"))))
+      .withColumn("sim2", cosine("c_emb", "c_nrm", "p2_emb", "p2_nrm"))
       .withColumn("score",
         r6(lit(0.7) * col("rel") - lit(0.3) * greatest(col("sim1"), col("sim2"))))
       .withColumn("rn", row_number().over(wScore)).filter(col("rn") === 1)

@@ -115,6 +115,9 @@ class BuiltAnnSpec extends SparkSpec {
       operators.LlmVector.IvfIndex(spark, fresh)
       operators.LlmVector.PqIndex.raw(spark, fresh)
       operators.LlmVector.PqIndex.residual(spark, fresh)
+      // the keys whose label centroids are one kernel pass
+      Seq("llm_ann_ivf", "llm_knn_centroid", "llm_centroid_drift")
+        .foreach(k => assert(SparkEntry.queries(k)(spark, fresh).count() > 0, k))
       assert(spark.sparkContext.getPersistentRDDs.isEmpty)
     }
   }

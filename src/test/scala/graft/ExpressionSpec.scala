@@ -159,32 +159,25 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("map-only PQ assignment equals the join-form argmin bit-for-bit (r19)") {
-    // Index builds assign codewords with the quantizer kernel; query-time
-    // plans with codewordDists (the codebook as nested literals +
-    // double_sql2) and array_min over its (dist2, c_id) structs. Both
-    // must agree EXACTLY with a plain-Scala argmin over
-    // (r6(Σ(a−b)²), c_id), summed left to right — any divergence would
-    // silently train a different codebook.
+    // Index builds assign codewords with the quantizer kernel, and the
+    // ADC tables score query rows with it. Both must agree EXACTLY with
+    // plain-Scala r6(Σ(a−b)²) summed left to right, the argmin by
+    // (dist2, c_id) — any divergence would silently train a different
+    // codebook or rank a different neighbor.
     // Deterministic synthetic corpus: 24 vectors × 64 dims, codebook =
     // first 16 vectors' components, 8 subspaces of 8 dims; one more
     // input row per vector checks the one-subspace (IVF) case against
     // the first 4 vectors whole.
-    import org.apache.spark.sql.functions._
     import graft.operators.LlmVector
     import spark.implicits._
     // varied, sign-flipping values with ties broken by c_id order
     val vecs = (0 until 24).map(v => (0 until 64).map(p => math.sin(v * 17 + p * 3) * (1 + (p % 5))))
     def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    def dist2(x: Seq[Double], cw: Seq[Double]): Double =
+      r6(x.zip(cw).foldLeft(0.0) { case (s, (a, b)) => s + (a - b) * (a - b) })
     def argmin(x: Seq[Double], cws: LlmVector.Codewords): Int =
-      cws.minBy { case (c, cw) =>
-        (r6(x.zip(cw).foldLeft(0.0) { case (s, (a, b)) => s + (a - b) * (a - b) }), c)
-      }(Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int))._1
-    def mapForm(model: IndexedSeq[LlmVector.Codewords], rows: Seq[(Long, Int, Seq[Double])]) =
-      rows.toDF("vec_id", "sub", "varr")
-        .select(col("vec_id"), col("sub"),
-          array_min(LlmVector.codewordDists(model, col("sub"))).getField("c_id"))
-        .orderBy("vec_id", "sub").collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSeq
+      cws.minBy { case (c, cw) => (dist2(x, cw), c) }(
+        Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int))._1
     def kernelForm(model: IndexedSeq[LlmVector.Codewords], rows: Seq[(Long, Int, Seq[Double])]) =
       LlmVector.encodeRows(spark, LlmVector.qrows(rows.toDF("vec_id", "sub", "varr")), model)
         .orderBy("vec_id", "sub").collect()
@@ -193,13 +186,27 @@ class ExpressionSpec extends SparkSpec {
     val pqRows = for (v <- 0 until 24; s <- 0 until 8) yield (v.toLong, s, vecs(v).slice(s * 8, s * 8 + 8))
     val reference = pqRows.map { case (v, s, x) => (v, s, argmin(x, pq(s))) }
     assert(reference.length == 24 * 8)
-    assert(reference.toSeq == mapForm(pq, pqRows))
     assert(reference.toSeq == kernelForm(pq, pqRows))
     val ivf = Vector((0 until 4).map(c => c -> vecs(c).map(r6)))
     val ivfRows = (0 until 24).map(v => (v.toLong, 0, vecs(v)))
     val ivfReference = ivfRows.map { case (v, s, x) => (v, s, argmin(x, ivf.head)) }
-    assert(ivfReference == mapForm(ivf, ivfRows))
     assert(ivfReference == kernelForm(ivf, ivfRows))
+    // ADC tables: one (keys…, sub, dist2, c_id) row per (row, codeword),
+    // the key columns carried through — q_id for a raw index, (q_id,
+    // cell) for a residual one
+    val index = LlmVector.PqIndex(pq, codesDir = "")
+    val rawTables = index.tables(pqRows.toDF("q_id", "sub", "varr"))
+      .select("q_id", "sub", "dist2", "c_id").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2), r.getInt(3))).toSet
+    assert(rawTables == pqRows.flatMap { case (v, s, x) =>
+      pq(s).map { case (c, cw) => (v, s, dist2(x, cw), c) } }.toSet)
+    val resRows = pqRows.map { case (v, s, x) => (v, (v % 3).toInt, s, x) }
+    val resTables = index.tables(resRows.toDF("q_id", "cell", "sub", "varr"))
+      .select("q_id", "cell", "sub", "dist2", "c_id").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getDouble(3), r.getInt(4))).toSet
+    assert(resTables.size == 24 * 8 * 16)
+    assert(resTables == resRows.flatMap { case (v, cell, s, x) =>
+      pq(s).map { case (c, cw) => (v, cell, s, dist2(x, cw), c) } }.toSet)
   }
 
   test("Lloyd training skips a null vector like the oracle's AVG, and still encodes it") {

@@ -49,10 +49,10 @@ class OperatorSpec extends SparkSpec {
   }
 
   test("cosine(v, v) == 1 for every vector") {
-    val e = graft.sources.Tables.embeddings(spark, sf)
-    val selfCos = e.select(
-      round(expr(graft.operators.LlmVector.cosineExpr("embedding", "embedding")), 6).as("c"))
-    assert(selfCos.filter(col("c") =!= 1.0).count() == 0)
+    import graft.operators.LlmVector
+    val selfCos = LlmVector.normed(spark, sf)
+      .select(LlmVector.cosine("embedding", "nrm", "embedding", "nrm").as("c"))
+    assert(selfCos.count() > 0 && selfCos.filter(col("c") =!= 1.0).count() == 0)
   }
 
   test("running sum final row equals the group total") {
@@ -444,15 +444,14 @@ class OperatorSpec extends SparkSpec {
     assert(j.forall(r => r.getAs[Double]("c2") >= r.getAs[Double]("c1")))
   }
 
-  test("kernel ranking equals the codewordDists ranking bit-for-bit") {
-    // Index builds rank with the plain-Scala quantizer kernel; the
-    // query-time plans score with the codewordDists expression. This is
-    // the pin that the two agree: same r6(Σ(a−b)²) distances, same
-    // (dist2, c_id) tie-break, row-for-row.
+  test("kernel ranking equals a plain-Scala ranking bit-for-bit") {
+    // Every quantizer ranks with the plain-Scala kernel. This pins it to
+    // the oracle's definition written out directly: r6(Σ(a−b)²) summed
+    // left to right, ordered by (dist2, c_id), row-for-row.
     import graft.operators.LlmVector
-    // One null-varr row (vec_id −1) rides along: both sides give it a
-    // null dist2 against EVERY centroid and rank it in c_id order (a
-    // null struct field sorts FIRST in array_sort's order).
+    // One null-varr row (vec_id −1) rides along: it has a null dist2
+    // against EVERY centroid and ranks them in c_id order (a null sorts
+    // FIRST, as in array_sort's order).
     val rows = graft.sources.Tables.embeddings(spark, sf)
       .select(col("vec_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("varr"))
@@ -462,15 +461,24 @@ class OperatorSpec extends SparkSpec {
       .orderBy("vec_id").limit(3).collect().map { r =>
         r.getLong(0).toInt -> r.getSeq[Double](1)
       }.toSeq
-    val cols = Seq("vec_id", "c_id", "dist2", "rn").map(col)
+    def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val reference = rows.collect().toSeq.flatMap { r =>
+      val dists = model.map { case (c, cw) =>
+        val d = if (r.isNullAt(1)) None
+          else Some(r6(r.getSeq[Double](1).zip(cw).foldLeft(0.0) { case (s, (a, b)) => s + (a - b) * (a - b) }))
+        (d, c)
+      }
+      dists.sortBy { case (d, c) => (d.getOrElse(Double.MinValue), c) }(
+        Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int)).zipWithIndex.map { case ((d, c), i) =>
+        (r.getLong(0), c, d, i + 1)
+      }
+    }
     val kernel = LlmVector.rankRows(spark,
-      LlmVector.qrows(rows.withColumn("sub", lit(0))), Vector(model)).select(cols: _*)
-    val exprForm = rows.select(col("vec_id"),
-        posexplode(array_sort(LlmVector.codewordDists(Vector(model), lit(0)))).as(Seq("i", "s")))
-      .select(col("vec_id"), col("s.c_id").as("c_id"), col("s.dist2").as("dist2"),
-        (col("i") + 1).cast("int").as("rn"))
-    assert(kernel.count() == rows.count() * model.size)
-    assert(kernel.exceptAll(exprForm).count() == 0 && exprForm.exceptAll(kernel).count() == 0)
+      LlmVector.qrows(rows.withColumn("sub", lit(0))), Vector(model)).collect().toSeq
+      .map(r => (r.getLong(0), r.getInt(1), if (r.isNullAt(2)) None else Some(r.getDouble(2)), r.getInt(3)))
+    assert(kernel.size == rows.count() * model.size)
+    assert(kernel.sortBy(r => (r._1, r._4)) == reference.sortBy(r => (r._1, r._4)))
+    assert(kernel.filter(_._1 == -1L).sortBy(_._4).map(r => (r._2, r._3)) == model.map(m => (m._1, None)))
   }
 
   test("semdedup pairs live in one quantizer cell and subset the brute-force pairs") {

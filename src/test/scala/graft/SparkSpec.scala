@@ -151,9 +151,11 @@ class EntrySpec extends SparkSpec {
     // every query; GraftSession.child derives every child session and
     // writes the only conf written at run time; the SQL key binder
     // registers the only temp views, on its own child session; only
-    // KvSnapshots knows the snapshot layout; one expression scores a
-    // row against a literal quantizer model; and no SQL text reads a
-    // table by path, so every table read goes through the schema memo.
+    // KvSnapshots knows the snapshot layout; one frame computes the
+    // embedding norms, one key explodes the embedding column (its output
+    // format), and one expression holds the int8 scale; no model rides
+    // in a plan as a literal; and no SQL text reads a table by path, so
+    // every table read goes through the schema memo.
     // A home is a file, or one member of it: the text between the blank
     // lines around its def.
     val homes = Seq(
@@ -164,8 +166,12 @@ class EntrySpec extends SparkSpec {
       ("conf.set(", "GraftSession.scala", Some("def child(")),
       ("createTempView", "Key.scala", Some("def bound(")),
       ("MANIFEST.json", "KvSnapshots.scala", None),
-      ("typedLit(", "LlmVector.scala", Some("def codewordDists(")))
+      ("float_dot(embedding, embedding)", "LlmVector.scala", Some("def normed(")),
+      ("posexplode(col(\"embedding\"))", "LlmVector.scala", Some("def llmEmbedQuantize(")),
+      ("/ 127\")", "LlmVector.scala", Some("private val int8Scale")))
     val main = scalaSources("src/main")
+    val literals = main.filter(_._2.contains("typedLit(")).map(_._1)
+    assert(literals.isEmpty, s"typedLit( in ${literals.mkString(", ")}")
     val pathSql = main.filter(_._2.contains("parquet.`")).map(_._1)
     assert(pathSql.isEmpty, s"SQL text reads parquet by path in ${pathSql.mkString(", ")}")
     def at(text: String, pattern: String): Iterator[Int] =
